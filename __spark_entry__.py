@@ -28,6 +28,7 @@ from ocr_table_extractor_to_csv_spark.operators import (
     textstats,
 )
 from ocr_table_extractor_to_csv_spark.operators.evaluation import numeric_metrics
+from ocr_table_extractor_to_csv_spark.plans.partitioning import fan_out
 from ocr_table_extractor_to_csv_spark.sources.pages import pages_from_documents
 
 
@@ -75,22 +76,20 @@ def _table_bytes(sf_dir: str, table: str) -> int:
         return _FAN_MAX_BYTES + 1  # unknown (e.g. object store): assume big
 
 
-def _fan(df: DataFrame, spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    if _table_bytes(sf_dir, table) <= _FAN_MAX_BYTES:
-        return df.repartition(spark.sparkContext.defaultParallelism)
-    return df
+def _fan(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
+    return fan_out(df) if _table_bytes(sf_dir, table) <= _FAN_MAX_BYTES else df
 
 
 def _docs_f(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fan(_docs(spark, sf_dir), spark, sf_dir, "documents")
+    return _fan(_docs(spark, sf_dir), sf_dir, "documents")
 
 
 def _emb_f(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fan(_emb(spark, sf_dir), spark, sf_dir, "embeddings")
+    return _fan(_emb(spark, sf_dir), sf_dir, "embeddings")
 
 
 def _events_f(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fan(_events(spark, sf_dir), spark, sf_dir, "events")
+    return _fan(_events(spark, sf_dir), sf_dir, "events")
 
 
 # ---------------------------------------------------------------------------

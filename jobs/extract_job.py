@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
 from ocr_table_extractor_to_csv_spark.plans.lineage import build_manifests
-from ocr_table_extractor_to_csv_spark.plans.partitioning import isolate_giants
+from ocr_table_extractor_to_csv_spark.plans.partitioning import fan_out, isolate_giants
 from ocr_table_extractor_to_csv_spark.plans.resume import (
     commit_progress,
     pending_pages,
@@ -86,7 +86,7 @@ def run_extract(
     try:
         write_batch(
             extract_pages(
-                giants.repartition(spark.sparkContext.defaultParallelism),
+                fan_out(giants),
                 layout=layout,
                 per_row_dispatch=per_row_dispatch,
             ),

@@ -8,12 +8,11 @@ corpora stored as Iceberg/parquet tables of pages
 
 Layout:
   kernel/     pure per-document geometry engine (numpy; no Spark imports)
-  operators/  DataFrame-level operators (mapInPandas extraction, dedup,
+  operators/  DataFrame-level operators (mapInArrow extraction, dedup,
               similarity, text stats, evaluation)
-  sources/    table catalog + deterministic synthetic page corpus
-  functions/  column-level helper functions (pyspark.sql.functions based)
-  plans/      partitioning / resume / lineage planning helpers
-  streaming/  incremental (availableNow) ingest wiring
+  sources/    deterministic synthetic page corpus + WARC/WET readers
+  plans/      giants split / fan-out, resume, bucketing, lineage helpers
+  streaming/  incremental (availableNow) ingest + windowed aggregation
 
 Design rule: all per-document geometry runs inside Arrow-batched
 ``mapInPandas`` kernels (one Python call per batch, numpy inside); the job

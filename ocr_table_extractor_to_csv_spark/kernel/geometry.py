@@ -217,16 +217,6 @@ def merge_spans(
 # --------------------------------------------------------------------------
 
 
-def assign_to_interval_first_inside(
-    xc: float, intervals: Sequence[Tuple[int, int]]
-) -> Optional[int]:
-    """First interval with L <= xc <= R, else None (assign.py:18-21)."""
-    for i, (L, R) in enumerate(intervals):
-        if L <= xc <= R:
-            return i
-    return None
-
-
 def nearest_interval_by_edges(xc: float, intervals: Sequence[Tuple[int, int]]) -> int:
     """argmin of min(|xc-L|, |xc-R|); ties -> lowest index (assign.py:22-24)."""
     dists = [min(abs(xc - L), abs(xc - R)) for (L, R) in intervals]

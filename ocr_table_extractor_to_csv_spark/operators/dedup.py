@@ -33,15 +33,6 @@ SIMHASH_BITS = 64
 MAX_BUCKET = 64  # LSH band-bucket membership cap (hot-bucket guard)
 
 
-def _md5_hash(col, seed_col):
-    """conv(substr(md5(s || '#' || seed),1,15),16,10) :: bigint."""
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit("#"), seed_col.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-
-
 def exact_dedup(documents: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup over the normalized-text fingerprint."""
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))

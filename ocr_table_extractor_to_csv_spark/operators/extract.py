@@ -12,9 +12,8 @@ Scale design:
   * parquet/Iceberg scans split by BYTES (maxPartitionBytes), which is
     already size-aware partitioning for a bytes-proportional kernel — do NOT
     add a blanket repartition (a full shuffle of the html payload costs ~30%
-    end to end; measured).  Reach for plans.partitioning.repartition_by_size
-    only when upstream partitioning is genuinely skewed, and
-    plans.partitioning.isolate_giants for the pathological tail;
+    end to end; measured).  The pathological tail gets its own pass via
+    plans.partitioning.isolate_giants (see jobs/extract_job.run_extract);
   * per-row try/except: a malformed document yields an ``error`` row, never
     a task failure (at 10^12 docs, something is always malformed);
   * lineage columns (partition_id, task_attempt) are stamped in-kernel via
@@ -24,12 +23,13 @@ Scale design:
 from __future__ import annotations
 
 import json
-from typing import Iterable, Iterator, List, Optional
+from typing import Iterable, Iterator, Optional
 
 import pyarrow as pa
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -63,25 +63,18 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        ("url", pa.string()),
-        ("layout", pa.string()),
-        ("csv", pa.binary()),
-        ("csv_numeric", pa.binary()),
-        ("main_text", pa.string()),
-        ("n_rows", pa.int32()),
-        ("n_cols", pa.int32()),
-        ("header", pa.list_(pa.string())),
-        ("n_tokens", pa.int32()),
-        ("n_lines", pa.int32()),
-        ("is_hocr", pa.bool_()),
-        ("error", pa.string()),
-        ("html_bytes", pa.int32()),
-        ("partition_id", pa.int32()),
-        ("task_attempt", pa.int32()),
-    ]
-)
+_ARROW_SCHEMA = to_arrow_schema(EXTRACTED_SCHEMA)
+# the columns copied from ExtractResult; the wrapper stamps the other four
+_STAMPED = ("url", "html_bytes", "partition_id", "task_attempt")
+_RESULT_FIELDS = [f for f in _ARROW_SCHEMA.names if f not in _STAMPED]
+
+
+def _kernel_args(args: Optional[dict]) -> dict:
+    """The kernel keyword arguments, ``table_bbox`` as the tuple it expects."""
+    args = dict(args or {})
+    if args.get("table_bbox") is not None:
+        args["table_bbox"] = tuple(args["table_bbox"])
+    return args
 
 
 def _parse_args(raw: Optional[str]) -> dict:
@@ -91,19 +84,21 @@ def _parse_args(raw: Optional[str]) -> dict:
         args = json.loads(raw)
     except (ValueError, TypeError):
         return {}
-    if not isinstance(args, dict):
-        return {}
-    if args.get("table_bbox") is not None:
-        args["table_bbox"] = tuple(args["table_bbox"])
-    return args
+    return _kernel_args(args) if isinstance(args, dict) else {}
+
+
+def _extract_one(html: bytes, layout: Optional[str], args: dict) -> ExtractResult:
+    """One document; a kernel exception becomes the result's ``error``."""
+    try:
+        return extract_document(html, layout=layout or "auto", **args)
+    except Exception as exc:
+        return ExtractResult(layout=str(layout), error=f"{type(exc).__name__}: {exc}")
 
 
 def make_extract_fn(default_layout: str = "auto", default_args: Optional[dict] = None):
     """Build the mapInArrow kernel. Input batches need columns (url, html)
     and optionally (layout, args) for per-row dispatch."""
-    base_args = dict(default_args or {})
-    if base_args.get("table_bbox") is not None:
-        base_args["table_bbox"] = tuple(base_args["table_bbox"])
+    base_args = _kernel_args(default_args)
 
     def extract_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
@@ -111,38 +106,22 @@ def make_extract_fn(default_layout: str = "auto", default_args: Optional[dict] =
         attempt = ctx.attemptNumber() if ctx else -1
         for batch in batches:
             names = batch.schema.names
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            layouts = batch.column("layout").to_pylist() if "layout" in names else None
-            argss = batch.column("args").to_pylist() if "args" in names else None
-            n = len(urls)
-
-            cols: dict = {f: [None] * n for f in _ARROW_SCHEMA.names}
-            for i in range(n):
-                html = htmls[i] or b""
-                layout = layouts[i] if layouts is not None else default_layout
-                args = _parse_args(argss[i]) if argss is not None else base_args
-                try:
-                    res = extract_document(html, layout=layout or "auto", **args)
-                    err = res.error
-                except Exception as exc:
-                    res = ExtractResult(layout=str(layout))
-                    err = f"{type(exc).__name__}: {exc}"
-                cols["url"][i] = urls[i]
-                cols["layout"][i] = res.layout
-                cols["csv"][i] = res.csv
-                cols["csv_numeric"][i] = res.csv_numeric
-                cols["main_text"][i] = res.main_text
-                cols["n_rows"][i] = res.n_rows
-                cols["n_cols"][i] = res.n_cols
-                cols["header"][i] = list(res.header)
-                cols["n_tokens"][i] = res.n_tokens
-                cols["n_lines"][i] = res.n_lines
-                cols["is_hocr"][i] = res.is_hocr
-                cols["error"][i] = err
-                cols["html_bytes"][i] = len(html)
-                cols["partition_id"][i] = pid
-                cols["task_attempt"][i] = attempt
+            n = batch.num_rows
+            htmls = [h or b"" for h in batch.column("html").to_pylist()]
+            layouts = (
+                batch.column("layout").to_pylist() if "layout" in names else [default_layout] * n
+            )
+            argss = (
+                [_parse_args(a) for a in batch.column("args").to_pylist()]
+                if "args" in names
+                else [base_args] * n
+            )
+            results = [_extract_one(*row) for row in zip(htmls, layouts, argss)]
+            cols = {f: [getattr(r, f) for r in results] for f in _RESULT_FIELDS}
+            cols["url"] = batch.column("url").to_pylist()
+            cols["html_bytes"] = [len(h) for h in htmls]
+            cols["partition_id"] = [pid] * n
+            cols["task_attempt"] = [attempt] * n
             yield pa.RecordBatch.from_arrays(
                 [pa.array(cols[f.name], f.type) for f in _ARROW_SCHEMA],
                 schema=_ARROW_SCHEMA,

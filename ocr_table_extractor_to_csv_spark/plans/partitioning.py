@@ -1,60 +1,29 @@
-"""Skew-aware partitioning for the map-only extraction stage.
+"""Skew handling and fan-out for the map-only extraction stage.
 
 Why this exists (SURVEY.md §4.2): AQE's skew handling only rebalances
-shuffle JOINS — a ``mapInPandas`` stage inherits the scan's partitioning, so
+shuffle JOINS — a ``mapInArrow`` stage inherits the scan's partitioning, so
 a handful of 50 MB pages can stall single tasks while the other cores idle.
-Two explicit strategies, both deterministic (retry-safe):
 
-* ``mode="balanced"`` — hash-salt the small docs (uniform spread, no extra
-  stage) and round-robin ONLY the giant tail: giants are numbered within
-  their ``ceil(log2(bytes))`` size bucket (a window over the few giant rows)
-  and dealt ``rn % n`` across all partitions, so the worst-case task tail is
-  a single giant.  One effective data shuffle; the window touches only the
-  tail.
+* ``isolate_giants`` splits the pathological tail into its own pass, which
+  ``jobs/extract_job.run_extract`` runs with its own Arrow batch size while
+  the main pass keeps the scan's byte-proportional splits (no shuffle).
+* ``fan_out`` round-robins a frame that arrives in too few partitions (the
+  giant tail, a single-file table) over the default parallelism.
 
-* ``mode="hash"`` — single shuffle on ``pmod(xxhash64(url), n)``; giants are
-  spread only statistically.  Right when the tail is handled separately via
-  ``isolate_giants`` (recommended at the 100 TB scale: the giant pass runs
-  with its own batch/memory settings while the main pass stays one-shuffle).
-
-Anti-patterns measured here first-hand:
-  * ``repartitionByRange(size_bucket, salt)`` CO-LOCATES each size class
-    into few partitions — all giants land in one task;
-  * a global per-bucket window over ALL rows caps the numbering stage at
-    #buckets-way parallelism (uniform corpora have ~6 buckets) — an Amdahl
-    floor that shows up exactly when cores quadruple.
+Anti-pattern measured here first-hand: ``repartitionByRange(size_bucket,
+salt)`` CO-LOCATES each size class into few partitions — all giants land in
+one task.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-GIANT_SALT_THRESHOLD = 1024 * 1024  # 1 MiB: round-robin docs above this
 
 
-def repartition_by_size(
-    pages: DataFrame,
-    num_partitions: int,
-    size_col: str = "html",
-    key_col: str = "url",
-    mode: str = "balanced",
-    giant_threshold_bytes: int = GIANT_SALT_THRESHOLD,
-) -> DataFrame:
-    hash_salt = F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_partitions))
-    if mode == "hash":
-        salted = pages.withColumn("_salt", hash_salt)
-    else:
-        size = F.length(F.col(size_col))
-        small = pages.where(size < giant_threshold_bytes).withColumn("_salt", hash_salt)
-        bucket = F.ceil(F.log2(F.greatest(size, F.lit(2)))).cast("int")
-        w = Window.partitionBy(bucket).orderBy(key_col)
-        giants = pages.where(size >= giant_threshold_bytes).withColumn(
-            "_salt", F.pmod(F.row_number().over(w), F.lit(num_partitions))
-        )
-        salted = small.unionByName(giants)  # window touches only the tail
-    return salted.repartition(num_partitions, "_salt").drop("_salt")
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over the session's default parallelism."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def isolate_giants(

@@ -14,8 +14,8 @@ Batch protocol (exactly-once at the batch granularity, SURVEY.md §4.2):
 
 On Iceberg the same protocol maps to ``overwritePartitions()`` + a snapshot
 commit; here the warehouse is parquet directories (no Iceberg runtime jar in
-this sandbox) with identical semantics via
-``spark.sql.sources.partitionOverwriteMode=dynamic``.
+this sandbox) with identical semantics via the per-write
+``partitionOverwriteMode=dynamic`` option (the session conf is untouched).
 """
 
 from __future__ import annotations
@@ -59,13 +59,12 @@ def write_batch(
     fresh root (Spark fails loudly with "conflicting directory structures"
     otherwise).
     """
-    spark = extracted.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     stamped = extracted.withColumn("batch_id", F.lit(batch_id)).withColumn(
         "pass", F.lit(sub)
     )
     (
         stamped.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id", "pass")
         .parquet(extracted_path)
     )
@@ -86,13 +85,3 @@ def commit_progress(
         F.current_timestamp().alias("ts"),
     )
     progress.write.mode("append").parquet(progress_path)
-
-
-def commit_batch(
-    extracted: DataFrame,
-    batch_id: int,
-    extracted_path: str,
-    progress_path: str,
-) -> None:
-    write_batch(extracted, batch_id, extracted_path)
-    commit_progress(extracted.sparkSession, batch_id, extracted_path, progress_path)

@@ -20,7 +20,8 @@ DEFAULT_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # bounds per-worker memory (rows x avg doc size per batch); 256 measured
     # ~20% faster than 64 on ~3-100KB pages. Giant pages must NOT go through
-    # this default — isolate_giants runs them with maxRecordsPerBatch=4.
+    # this default — run_extract (jobs/extract_job.py) extracts the giants
+    # isolate_giants splits off with maxRecordsPerBatch=4.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
     "spark.sql.execution.arrow.pyspark.selfDestruct.enabled": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",

@@ -1,1 +1,1 @@
-"""Sources: deterministic synthetic corpora + table catalog helpers."""
+"""Sources: deterministic synthetic corpora + WARC/WET segment readers."""

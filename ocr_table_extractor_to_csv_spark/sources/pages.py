@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.partitioning import fan_out
+
 TOKEN_RE = re.compile(r"[^a-z0-9]+")
 ANCHORS = (100, 500, 900, 1300)
 CHAR_W = 8
@@ -468,8 +470,7 @@ def _synth_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def _spread(documents: DataFrame) -> DataFrame:
     """documents.parquet is a single file -> 1 scan partition; without a
     spread the whole synth+extract pipeline would run on one core."""
-    n = documents.sparkSession.sparkContext.defaultParallelism
-    return documents.select("doc_id", "text").repartition(n)
+    return fan_out(documents.select("doc_id", "text"))
 
 
 def pages_from_documents(documents: DataFrame) -> DataFrame:

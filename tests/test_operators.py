@@ -1,6 +1,5 @@
 """Operator tests: dedup/similarity math against hand-computed values,
-multimodal plumbing, streaming incremental semantics, and the functions
-module."""
+multimodal plumbing, and streaming incremental semantics."""
 
 import hashlib
 import math
@@ -785,43 +784,6 @@ def test_curate_neardup_equals_operator_composition(spark):
     assert len(got) <= curate(docs).count()
 
 
-def test_streaming_stateful_sessionize_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization: two availableNow passes over
-    an event-time-split file stream must converge to EXACTLY the batch
-    window+lag+cumsum result (the driver's `sessionize` oracle query)."""
-    from ocr_table_extractor_to_csv_spark.streaming.sessions import (
-        read_latest_sessions,
-        run_sessionize,
-    )
-    import __spark_entry__ as entry
-
-    sf = "/root/testdata/sf0.001"
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    n = ev.count()
-    # event-time median split (file-stream contract: later files carry later
-    # events)
-    cutoff = ev.orderBy("ts").limit(n // 2).agg(F.max("ts")).collect()[0][0]
-
-    events_dir = str(tmp_path / "events")
-    out_dir = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-
-    ev.where(F.col("ts") <= cutoff).write.mode("append").parquet(events_dir)
-    run_sessionize(spark, events_dir, out_dir, ckpt)
-    ev.where(F.col("ts") > cutoff).write.mode("append").parquet(events_dir)
-    run_sessionize(spark, events_dir, out_dir, ckpt)
-
-    got = {
-        r.user_id: (r.n_sessions, r.n_events)
-        for r in read_latest_sessions(spark, out_dir).collect()
-    }
-    want = {
-        r.user_id: (r.n_sessions, r.n_events)
-        for r in entry.queries()["sessionize"](spark, sf).collect()
-    }
-    assert got == want
-
-
 def test_streaming_windowed_agg_watermark_and_late_drop(spark, tmp_path):
     """Event-time tumbling windows with a watermark: append mode emits a
     window only once it is finalized, a watermark-advancing straggler
@@ -866,16 +828,6 @@ def test_streaming_windowed_agg_watermark_and_late_drop(spark, tmp_path):
     assert n_pass1 < len(want), "pass 1 must hold back the open window tail"
     assert not any(t == "late" for (_, t) in got), "late event must be dropped"
     assert not any(t == "straggler" for (_, t) in got), "straggler window stays open"
-
-
-def test_functions_to_number_analytics(spark):
-    from ocr_table_extractor_to_csv_spark.functions import to_number_col
-
-    df = spark.createDataFrame(
-        [("$ 1,234",), ("(500)",), ("-",), ("abc",)], "v string"
-    )
-    got = [r.n for r in df.select(to_number_col(F.col("v")).alias("n")).collect()]
-    assert got[0] == 1234.0 and got[1] == -500.0 and got[2] == 0.0 and got[3] is None
 
 
 def test_canonicalize_url_rules(spark):

@@ -11,12 +11,7 @@ from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
 from ocr_table_extractor_to_csv_spark.plans.lineage import build_manifests
-from ocr_table_extractor_to_csv_spark.plans.partitioning import repartition_by_size
-from ocr_table_extractor_to_csv_spark.plans.resume import (
-    commit_batch,
-    pending_pages,
-    read_progress,
-)
+from ocr_table_extractor_to_csv_spark.plans.resume import pending_pages, read_progress
 from ocr_table_extractor_to_csv_spark.sources.pages import fixture_pages
 
 GOLDEN = Path(__file__).parent / "goldens" / "fixture_manifest.json"
@@ -47,12 +42,12 @@ def test_spark_matches_kernel_goldens(spark, pages):
 
 
 def test_partitioning_is_content_neutral(spark, pages):
-    """Size-aware repartition (skew plan) must not change any output byte."""
+    """Repartitioning the input must not change any output byte."""
     base = {
         r.url: sha(bytes(r.csv))
         for r in extract_pages(pages, per_row_dispatch=True).collect()
     }
-    spread = repartition_by_size(pages.select("url", "html", "layout", "args"), 8)
+    spread = pages.select("url", "html", "layout", "args").repartition(8)
     got = {
         r.url: sha(bytes(r.csv))
         for r in extract_pages(spread, per_row_dispatch=True).collect()
@@ -95,14 +90,25 @@ def test_malformed_rows_become_error_rows(spark):
     assert by_url["u2"].error is None
 
 
-def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path):
+def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path, monkeypatch):
+    """Two batches through the job body: batch 1 skips batch 0's urls, and a
+    batch 1 that dies between its data write and its progress commit, then
+    re-runs, commits every url exactly once."""
+    import jobs.extract_job as ej
+
     ext_path = str(tmp_path / "extracted")
     prog_path = str(tmp_path / "progress")
     base = pages.select("url", "html", "layout", "args")
 
+    def run(df, batch_id):
+        ej.run_extract(
+            spark, df, out=ext_path, progress_path=prog_path, batch_id=batch_id,
+            per_row_dispatch=True,
+        )
+
     # batch 0: first half (split by hash for determinism)
     b0 = base.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
-    commit_batch(extract_pages(b0, per_row_dispatch=True), 0, ext_path, prog_path)
+    run(b0, 0)
 
     # resume: pending excludes batch-0 urls exactly
     progress = read_progress(spark, prog_path)
@@ -110,15 +116,30 @@ def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path):
     assert pend.count() == base.count() - b0.count()
     assert pend.join(b0.select("url"), "url", "inner").count() == 0
 
-    # batch 1: the rest; then a RE-RUN of batch 1 must not duplicate
-    commit_batch(extract_pages(pend, per_row_dispatch=True), 1, ext_path, prog_path)
-    commit_batch(extract_pages(pend, per_row_dispatch=True), 1, ext_path, prog_path)
+    # batch 1 over all pages: the first commit fails, the re-run must
+    # replace the written data instead of duplicating it
+    real_commit = ej.commit_progress
+    calls = []
+
+    def commit_fails_once(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("killed before the progress commit")
+        real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(ej, "commit_progress", commit_fails_once)
+    with pytest.raises(RuntimeError, match="killed"):
+        run(base, 1)
+    run(base, 1)
+    assert len(calls) == 2
+
     extracted = spark.read.parquet(ext_path)
     assert extracted.count() == base.count()
     assert extracted.select("url").distinct().count() == base.count()
 
-    # after full progress, nothing is pending
+    # after full progress, nothing is pending and no url is committed twice
     progress = read_progress(spark, prog_path)
+    assert progress.count() == progress.select("url").distinct().count() == base.count()
     assert pending_pages(base, progress).count() == 0
 
 
@@ -146,6 +167,9 @@ def test_giant_pass_conf_isolated(spark, tmp_path, monkeypatch):
         real(extracted, batch_id, path, sub=sub)
 
     monkeypatch.setattr(ej, "write_batch", spy)
+    overwrite_key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(overwrite_key)
+    overwrite_mode = spark.conf.get(overwrite_key)
     committed = ej.run_extract(
         spark,
         pages,
@@ -161,6 +185,9 @@ def test_giant_pass_conf_isolated(spark, tmp_path, monkeypatch):
     assert (
         spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "256"
     ), "conf must be restored"
+    assert (
+        spark.conf.get(overwrite_key) == overwrite_mode
+    ), "the dynamic overwrite is a write option, not a session setting"
     by_pass = {r["pass"]: r["n"] for r in committed.groupBy("pass").agg(F.count("*").alias("n")).collect()}
     assert by_pass.get("giant", 0) >= 1, "fixture giants must exercise the giant pass"
     assert committed.select("url").distinct().count() == pages.count()
