@@ -29,6 +29,7 @@ from ocr_table_extractor_to_csv_spark.operators import (
 )
 from ocr_table_extractor_to_csv_spark.operators.evaluation import numeric_metrics
 from ocr_table_extractor_to_csv_spark.plans.partitioning import fan_out
+from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
 from ocr_table_extractor_to_csv_spark.sources.pages import pages_from_documents
 
 
@@ -64,20 +65,34 @@ def _table_bytes(sf_dir: str, table: str) -> int:
     import os
 
     p = os.path.join(sf_dir, f"{table}.parquet")
+    if "://" in p:
+        return _FAN_MAX_BYTES + 1  # object store: size unknown, assume big
     if os.path.isdir(p):
         return sum(
             os.path.getsize(os.path.join(root, f))
             for root, _, files in os.walk(p)
             for f in files
         )
-    try:
-        return os.path.getsize(p)
-    except OSError:
-        return _FAN_MAX_BYTES + 1  # unknown (e.g. object store): assume big
+    return os.path.getsize(p)  # a missing local table raises here
 
 
 def _fan(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     return fan_out(df) if _table_bytes(sf_dir, table) <= _FAN_MAX_BYTES else df
+
+
+# A queries() caller collects the returned lazy frame after the query
+# function returns, so the caches and checkpoints behind it must outlive
+# the call.  Each query name owns one RunScope, closed when that query is
+# built again (callers build and collect one query at a time).
+_SCOPES: dict[str, RunScope] = {}
+
+
+def _scope(spark: SparkSession, name: str) -> RunScope:
+    old = _SCOPES.pop(name, None)
+    if old is not None:
+        old.close()
+    _SCOPES[name] = scope = RunScope(spark)
+    return scope
 
 
 def _docs_f(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1110,7 +1125,7 @@ def q_decontaminate(spark, sf_dir):
     doc_id % 97 == 0 stand-in eval set; eval side broadcasts."""
     from ocr_table_extractor_to_csv_spark.operators.curation import decontaminate
 
-    return decontaminate(_docs_f(spark, sf_dir))
+    return decontaminate(_docs_f(spark, sf_dir), scope=_scope(spark, "decontaminate"))
 
 
 def _oracle_decontaminate(eval_mod: int = 97, threshold: float = 0.5) -> str:
@@ -1229,7 +1244,7 @@ def q_curate_neardup(spark, sf_dir):
     to one survivor, not just byte-identical texts."""
     from ocr_table_extractor_to_csv_spark.operators.curation import curate_neardup
 
-    return curate_neardup(_docs_f(spark, sf_dir))
+    return curate_neardup(_docs_f(spark, sf_dir), scope=_scope(spark, "curate_neardup"))
 
 
 def _oracle_curate_neardup() -> str:
@@ -1264,7 +1279,7 @@ def q_pipeline_full(spark, sf_dir):
     operators over ONE cached corpus scan (plan-pinned; r3 verdict #8)."""
     from ocr_table_extractor_to_csv_spark.operators.curation import curate_pipeline
 
-    return curate_pipeline(_docs_f(spark, sf_dir))
+    return curate_pipeline(_docs_f(spark, sf_dir), scope=_scope(spark, "pipeline_full"))
 
 
 def _oracle_pipeline_full(budget: int = 2048, n_shards: int = 16) -> str:
@@ -1315,7 +1330,10 @@ def q_pipeline_full_v2(spark, sf_dir):
     from ocr_table_extractor_to_csv_spark.operators.curation import curate_pipeline
     from ocr_table_extractor_to_csv_spark.operators.weburl import with_synth_url
 
-    return curate_pipeline(with_synth_url(_docs_f(spark, sf_dir)), url_col="url")
+    return curate_pipeline(
+        with_synth_url(_docs_f(spark, sf_dir)), url_col="url",
+        scope=_scope(spark, "pipeline_full_v2"),
+    )
 
 
 def _oracle_pipeline_v2(budget: int = 2048, n_shards: int = 16) -> str:
@@ -1357,7 +1375,9 @@ def q_pipeline_full_v3(spark, sf_dir):
     (plan-pinned in tests)."""
     from ocr_table_extractor_to_csv_spark.operators.curation import curate_pipeline
 
-    return curate_pipeline(_docs_f(spark, sf_dir), clean_chunks=10)
+    return curate_pipeline(
+        _docs_f(spark, sf_dir), clean_chunks=10, scope=_scope(spark, "pipeline_full_v3")
+    )
 
 
 def _oracle_pipeline_v3(budget: int = 2048, n_shards: int = 16) -> str:
@@ -1555,7 +1575,7 @@ FROM per_bucket GROUP BY band
 def q_dedup_clusters(spark, sf_dir):
     """Connected components over the MinHash-LSH candidate pairs (iterative
     min-label propagation run to convergence in Spark)."""
-    return dedup.dedup_clusters(_docs_f(spark, sf_dir))
+    return dedup.dedup_clusters(_docs_f(spark, sf_dir), scope=_scope(spark, "dedup_clusters"))
 
 
 def _oracle_dedup_clusters(iters: int = 12) -> str:
@@ -3355,7 +3375,7 @@ def q_pagerank(spark, sf_dir):
     the 100 TB shape (hosts ~1e8 rows vs edges ~1e10; AQE broadcasts the
     rank side when it fits)."""
     edges = graph.host_link_graph(_docs(spark, sf_dir), n_hosts=_PR_HOSTS)
-    return graph.pagerank(edges, iterations=_PR_ITERS)
+    return graph.pagerank(edges, iterations=_PR_ITERS, scope=_scope(spark, "pagerank"))
 
 
 def _oracle_pagerank() -> str:
@@ -3402,7 +3422,8 @@ def q_pagerank_weights(spark, sf_dir):
     so Spark broadcasts it: the corpus never shuffles for this join."""
     docs = _docs(spark, sf_dir)
     ranks = graph.pagerank(
-        graph.host_link_graph(docs, n_hosts=_PR_HOSTS), iterations=_PR_ITERS
+        graph.host_link_graph(docs, n_hosts=_PR_HOSTS), iterations=_PR_ITERS,
+        scope=_scope(spark, "pagerank_weights"),
     )
     return (
         docs.select(

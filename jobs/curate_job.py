@@ -13,11 +13,17 @@ composed keep/drop decision, and writes:
   * ``<out>/bucket_stats`` — per-band LSH hot-bucket drop accounting
     (no-silent-caps rule: what the MAX_BUCKET cap skipped, next to the
     results it affected) when ``--neardup`` is set;
-  * a one-line JSON summary on stdout.
+  * a one-line JSON summary on stdout, with the run's recorded facts
+    (CC iterations and convergence, decontamination strategy, landed
+    tables) under ``"facts"``.
 
-Cluster use: pass ``--checkpoint-dir hdfs://...`` so the connected-
-components iterations use RELIABLE checkpoints (executor loss recovers
-instead of killing the job).
+Intermediate artifacts belong to one ``RunScope`` around the keepers
+write.  Cluster use: pass ``--work-dir hdfs://...``: the connected-
+components iterations are then durable parquet round-trips (executor loss
+recovers instead of killing the job) and ``--pipeline`` reuses its corpus
+projection through a pruned parquet landing table (the 100 TB choice)
+instead of an executor cache.  The run directory under it is deleted when
+the job ends.
 """
 
 from __future__ import annotations
@@ -37,24 +43,24 @@ def run_curate(
     neardup: bool = False,
     min_quality: float | None = None,
     langs: list[str] | None = None,
-    checkpoint_dir: str | None = None,
+    work_dir: str | None = None,
     url_dedup: bool = False,
-    materialize: str = "cache",
-    landing_dir: str | None = None,
     incremental_old=None,
     prev_keepers=None,
     clean_chunks: int | None = None,
 ):
-    from pyspark.sql import functions as F
-
+    """Write ``<out>/keepers`` (and bucket stats); return the keepers frame
+    read back from ``out`` and the run scope's facts."""
     from ocr_table_extractor_to_csv_spark.operators import dedup
     from ocr_table_extractor_to_csv_spark.operators.curation import (
         DEFAULT_LANGS,
         DEFAULT_MIN_QUALITY,
         curate,
+        curate_incremental,
         curate_neardup,
         curate_pipeline,
     )
+    from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
 
     if url_dedup:
         # URL-level dedup runs FIRST — O(n) string work + one groupBy is
@@ -70,8 +76,7 @@ def run_curate(
         documents = documents.join(url_keepers(documents), "doc_id")
 
     # mode exclusivity FIRST, so an invalid flag combo reports the mode
-    # the user actually asked for (r5 advice: an incremental invocation
-    # with --materialize used to get an error naming 'neardup'/'exact')
+    # the user actually asked for
     if incremental_old is not None and neardup:
         raise ValueError("--incremental-old is exclusive with "
                          "--neardup/--pipeline (full-corpus modes)")
@@ -81,62 +86,38 @@ def run_curate(
     if clean_chunks is not None and clean_chunks < 1:
         raise ValueError(f"--clean-chunks must be >= 1 (got {clean_chunks})")
     if prev_keepers is not None and incremental_old is None:
-        # same silent-no-op class as --materialize: prev_keepers only
-        # feeds the incremental verdict carry-over (r6 review)
+        # never a silent flag no-op: prev_keepers only feeds the
+        # incremental verdict carry-over (r6 review)
         raise ValueError("--prev-keepers applies only with "
                          "--incremental-old (verdict carry-over is an "
                          "incremental-mode input)")
-    if neardup != "pipeline" and (materialize != "cache" or landing_dir is not None):
-        # never a silent flag no-op: the materialization strategy only
-        # exists on the composed pipeline's shared corpus projection
-        mode = (
-            "incremental"
-            if incremental_old is not None
-            else ("neardup" if neardup else "exact")
-        )
-        raise ValueError(
-            "--materialize/--landing-dir apply only with --pipeline "
-            f"(got mode={mode})"
-        )
     mq = DEFAULT_MIN_QUALITY if min_quality is None else min_quality
     ls = tuple(langs) if langs else DEFAULT_LANGS
-    if incremental_old is not None:
-        # O(delta) refresh: `documents` is the NEW snapshot; unchanged docs
-        # carry their previous verdicts, the delta is bloom-prefiltered and
-        # curated (operators/curation.py::curate_incremental).  Exclusive
-        # with the content-cluster modes (those are full-corpus passes).
-        from ocr_table_extractor_to_csv_spark.operators.curation import (
-            curate_incremental,
-        )
-
-        kept = curate_incremental(
-            incremental_old, documents, prev_keepers=prev_keepers,
-            min_quality=mq, langs=ls,
-        )
+    with RunScope(spark, work_dir=work_dir) as scope:
+        if incremental_old is not None:
+            # O(delta) refresh: `documents` is the NEW snapshot; unchanged
+            # docs carry their previous verdicts, the delta is
+            # bloom-prefiltered and curated (curate_incremental).  Exclusive
+            # with the content-cluster modes (those are full-corpus passes).
+            kept = curate_incremental(
+                incremental_old, documents, prev_keepers=prev_keepers,
+                min_quality=mq, langs=ls,
+            )
+        elif neardup == "pipeline":
+            kept = curate_pipeline(
+                documents, min_quality=mq, langs=ls, clean_chunks=clean_chunks,
+                scope=scope,
+            )
+        elif neardup:
+            kept = curate_neardup(documents, min_quality=mq, langs=ls, scope=scope)
+        else:
+            kept = curate(documents, min_quality=mq, langs=ls)
         kept.write.mode("overwrite").parquet(f"{out}/keepers")
-        return spark.read.parquet(f"{out}/keepers")
-    if neardup == "pipeline":
-        kept = curate_pipeline(
-            documents,
-            min_quality=mq,
-            langs=ls,
-            checkpoint_dir=checkpoint_dir,
-            materialize=materialize,
-            landing_dir=landing_dir,
-            clean_chunks=clean_chunks,
-        )
-    elif neardup:
-        kept = curate_neardup(
-            documents, min_quality=mq, langs=ls, checkpoint_dir=checkpoint_dir
-        )
-    else:
-        kept = curate(documents, min_quality=mq, langs=ls)
-    kept.write.mode("overwrite").parquet(f"{out}/keepers")
     if neardup:
         dedup.lsh_bucket_stats(documents).write.mode("overwrite").parquet(
             f"{out}/bucket_stats"
         )
-    return spark.read.parquet(f"{out}/keepers")
+    return spark.read.parquet(f"{out}/keepers"), scope.facts
 
 
 def main() -> None:
@@ -153,19 +134,14 @@ def main() -> None:
                     "near-dup keepers + sequence packing (one cached corpus scan)")
     ap.add_argument("--min-quality", type=float, default=None)
     ap.add_argument("--lang", action="append", default=None)
-    ap.add_argument("--checkpoint-dir", default=None,
-                    help="reliable checkpoint dir for the CC iterations (set on clusters)")
+    ap.add_argument("--work-dir", default=None,
+                    help="HDFS/S3 dir for the run's intermediate tables: "
+                    "durable CC iterations and the --pipeline corpus "
+                    "landing table (set on clusters; default: executor "
+                    "cache and local checkpoints)")
     ap.add_argument("--url-dedup", action="store_true",
                     help="pre-pass: keep one doc per canonical URL before "
                     "any content pass (requires a 'url' column)")
-    ap.add_argument("--materialize", choices=("cache", "table", "none"),
-                    default="cache",
-                    help="--pipeline corpus-projection reuse strategy: "
-                    "executor cache (default, up to cluster cache size), "
-                    "pruned parquet landing table (the 100 TB answer; "
-                    "needs --landing-dir), or per-branch re-scan")
-    ap.add_argument("--landing-dir", default=None,
-                    help="HDFS/S3 path for --materialize table")
     ap.add_argument("--clean-chunks", type=int, default=None,
                     help="--pipeline only: insert the C4 line-dedup "
                     "cleaning transform as pass 1 with this chunk size "
@@ -196,17 +172,15 @@ def main() -> None:
         docs = wet_to_documents(read_wet(spark, args.wet))
     else:
         docs = spark.read.parquet(args.documents)
-    kept = run_curate(
+    kept, facts = run_curate(
         spark,
         docs,
         out=args.out,
         neardup="pipeline" if args.pipeline else args.neardup,
         min_quality=args.min_quality,
         langs=args.lang,
-        checkpoint_dir=args.checkpoint_dir,
+        work_dir=args.work_dir,
         url_dedup=args.url_dedup,
-        materialize=args.materialize,
-        landing_dir=args.landing_dir,
         incremental_old=(
             spark.read.parquet(args.incremental_old)
             if args.incremental_old else None
@@ -233,6 +207,7 @@ def main() -> None:
         ),
         "url_dedup": args.url_dedup,
         "out": args.out,
+        "facts": facts,
     }))
     spark.stop()
 

@@ -11,7 +11,8 @@ Layout:
   operators/  DataFrame-level operators (mapInArrow extraction, dedup,
               similarity, text stats, evaluation)
   sources/    deterministic synthetic page corpus + WARC/WET readers
-  plans/      giants split / fan-out, resume, bucketing, lineage helpers
+  plans/      giants split / fan-out, resume, bucketing, lineage helpers,
+              run scope (owner of caches, checkpoints, landing tables)
   streaming/  incremental (availableNow) ingest + windowed aggregation
 
 Design rule: all per-document geometry runs inside Arrow-batched

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.scope import RunScope
 from .textstats import lang_pred_col, norm_text_col, quality_columns
 
 DEFAULT_MIN_QUALITY = 0.5
@@ -63,7 +64,8 @@ def curate_neardup(
     documents: DataFrame,
     min_quality: float = DEFAULT_MIN_QUALITY,
     langs=DEFAULT_LANGS,
-    checkpoint_dir: str | None = None,
+    *,
+    scope: RunScope,
 ) -> DataFrame:
     """``curate`` with NEAR-duplicate keeper election — the decision a real
     corpus pipeline ships: a doc survives iff it passes the lang + quality
@@ -75,8 +77,8 @@ def curate_neardup(
     Plan shape: per-doc scoring is one pruned scan + project (JVM-only);
     the keeper side is the bounded LSH + O(log d) CC rounds; they meet in a
     single equi-join on doc_id.  The lang/quality filters run BEFORE the
-    join, so only gate-survivors shuffle.  Pass ``checkpoint_dir`` on a real
-    cluster (see connected_components durability note)."""
+    join, so only gate-survivors shuffle.  The CC iterations run in
+    ``scope`` (``plans.scope.RunScope``)."""
     from .dedup import dedup_clusters
 
     q = quality_columns(F.col("text"))
@@ -90,7 +92,7 @@ def curate_neardup(
         & F.col("lang_pred").isin(list(langs))
     )
     keepers = (
-        dedup_clusters(documents, checkpoint_dir=checkpoint_dir)
+        dedup_clusters(documents, scope=scope)
         .where(F.col("is_keeper"))
         .select("doc_id")
     )
@@ -112,6 +114,8 @@ def decontaminate(
     n: int = 3,
     threshold: float = DECONTAMINATE_THRESHOLD,
     max_broadcast_shingles: int = DECONTAMINATE_MAX_BROADCAST_SHINGLES,
+    *,
+    scope: RunScope,
 ) -> DataFrame:
     """Benchmark decontamination: per-document n-gram overlap against an
     evaluation set — (doc_id, n_shingles, n_overlap, overlap_ratio,
@@ -129,47 +133,25 @@ def decontaminate(
     first (one action on the small side); above ``max_broadcast_shingles``
     the broadcast hint would OOM the driver/executors — the join explicitly
     falls back to a shuffle hash join (still keyed on shingle; the corpus
-    pays one shuffle, correctness identical) and the chosen strategy is
-    logged and exposed as ``decontaminate.last_strategy`` instead of AQE
-    silently flipping plans.
-
-    Cache lifecycle (r4 advice): the persisted eval-shingle frame feeds the
-    RETURNED (lazy) plan, so it cannot be unpersisted here — instead it is
-    exposed as ``decontaminate.last_eval_cache``, and each new call
-    unpersists the PREVIOUS call's frame first, so repeated calls (bench
-    trials, pipeline runs with rotating eval sets) retain at most ONE
-    cached eval set per session.  Callers that materialize the result and
-    want the memory back immediately can ``decontaminate.last_eval_cache
-    .unpersist()`` themselves."""
+    pays one shuffle, correctness identical).  The chosen strategy and the
+    eval-side size are recorded in ``scope``, which also holds the
+    persisted eval-shingle frame (``plans.scope.RunScope``)."""
     from .dedup import shingles
 
     if eval_set is None:
         eval_set = documents.where(F.pmod(F.col("doc_id"), F.lit(eval_mod)) == 0)
     doc_sh = shingles(documents, n)
-    prev = getattr(decontaminate, "last_eval_cache", None)
-    if prev is not None:
-        # best-effort: the previous frame may belong to a stopped session
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
     # persist before the count: the guard's count() action would otherwise
     # run the full eval-side explode+distinct once for the count and AGAIN
     # uncached for the join below — and the persisted result is exactly
     # what the join consumes
-    eval_distinct = shingles(eval_set, n).select("shingle").distinct().persist()
-    decontaminate.last_eval_cache = eval_distinct
+    eval_distinct = scope.persist(shingles(eval_set, n).select("shingle").distinct())
     n_eval = eval_distinct.count()
     if n_eval <= max_broadcast_shingles:
-        decontaminate.last_strategy = "broadcast"
-        eval_sh = F.broadcast(eval_distinct)
+        strategy, eval_sh = "broadcast", F.broadcast(eval_distinct)
     else:
-        decontaminate.last_strategy = "shuffle"
-        print(
-            f"decontaminate: eval side has {n_eval} distinct shingles "
-            f"(> {max_broadcast_shingles}); using shuffle hash join, not broadcast"
-        )
-        eval_sh = eval_distinct.hint("shuffle_hash")
+        strategy, eval_sh = "shuffle", eval_distinct.hint("shuffle_hash")
+    scope.note("decontaminate", eval_shingles=n_eval, strategy=strategy)
     overlap = (
         doc_sh.join(eval_sh, "shingle")
         .groupBy("doc_id")
@@ -281,11 +263,10 @@ def curate_pipeline(
     threshold: float = DECONTAMINATE_THRESHOLD,
     budget: int = 2048,
     n_shards: int = 16,
-    checkpoint_dir: str | None = None,
-    materialize: str = "cache",
-    landing_dir: str | None = None,
     url_col: str | None = None,
     clean_chunks: int | None = None,
+    *,
+    scope: RunScope,
 ) -> DataFrame:
     """The END-TO-END curation decision, composed from the standalone
     operators with NO recomputation of the corpus scan: a document lands in
@@ -313,9 +294,9 @@ def curate_pipeline(
     text (duplicate chunks cut, first global occurrence kept), exactly as
     a staged corpus build would.  ``n_tokens`` in the output is therefore
     the post-clean count — the number you actually train on.  The cleaned
-    projection is materialized with the same ``materialize`` strategy as
-    the base projection (it is what every branch re-reads; recomputing
-    the global chunk election per branch would triple its shuffles).
+    projection is materialized like the base projection (it is what every
+    branch re-reads; recomputing the global chunk election per branch
+    would triple its shuffles).
 
     and the survivors are then ``pack_sequences``-packed into token bins
     (shard = doc_id % n_shards over SURVIVORS, contiguous fill in doc_id
@@ -330,88 +311,27 @@ def curate_pipeline(
     joins are all equi-joins on doc_id over already-reduced sides; filters
     run before every join (only gate-survivors shuffle).
 
-    ``materialize`` picks HOW that shared projection is reused (r4 verdict
-    #2 — the right answer depends on deployment size):
-
-      * ``"cache"`` (default; right up to what executor storage holds):
-        ``.persist()`` — the source is scanned once into cache and every
-        branch reads memory/local disk.  The cached frame is exposed as
-        ``curate_pipeline.last_base_cache`` and each new call unpersists
-        the previous call's entry (at most one corpus cache retained per
-        session; callers can release it sooner themselves).  At 100 TB
-        this is a SECOND full copy of the corpus text in executor storage,
-        with eviction-triggered recompute — use "table".
-      * ``"table"``: write the projection to ``landing_dir`` (required —
-        HDFS/S3/Iceberg path) as parquet and read it back — a pruned,
-        columnar, splittable landing table; branches re-scan IT, never the
-        raw source.  Each run writes a RUN-UNIQUE subpath (uuid-suffixed,
-        same collision rule as connected_components' per-run dirs), so two
-        runs sharing a landing_dir never clobber each other's still-live
-        table; the path is exposed as ``curate_pipeline.last_landing_path``
-        and the PREVIOUS run's table is deleted on the next call (at most
-        one retained per session — callers GC sooner via the exposed path).
-      * ``"none"``: no materialization — each branch re-scans the (pruned,
-        pushdown-filtered) source.  Right when the source is already a
-        cheap columnar table and storage is tighter than scan bandwidth.
-
-    All three modes are value-identical (tested); only the physical reuse
-    strategy differs.
-
-    Lifecycle contract (r5 advice): the previous call's cache/table is
-    released/deleted at the START of the next call, so a ``"table"``-mode
-    result must be FULLY materialized (collected or written out) before
-    any subsequent ``curate_pipeline`` call in the same session — a
-    still-lazy plan from run N reads parquet that run N+1 deletes.  The
-    function-attribute slots are process-global and not thread-safe;
-    concurrent pipelines belong in separate jobs (the production shape
-    anyway).  Callers wanting earlier GC use the exposed
-    ``last_landing_path`` / ``last_clean_landing_path`` themselves.
+    The shared projection is materialized once through ``scope.reuse``
+    (``plans.scope.RunScope``): a pruned parquet landing table under the
+    scope's work dir — the 100 TB choice — or an executor cache without
+    one; both are value-identical (tested).  The decontaminate and keeper
+    branches run in two driver threads; both are waited for, and the first
+    failure is re-raised with the name of its branch.
     """
-    from .dedup import dedup_clusters
+    from concurrent.futures import ThreadPoolExecutor, as_completed
 
-    import uuid
+    from .dedup import dedup_clusters
 
     if url_col is not None and not url_col:
         raise ValueError("url_col must be a column name or None, got ''")
-    spark = documents.sparkSession
-    for cache_attr in ("last_base_cache", "last_clean_cache"):
-        prev = getattr(curate_pipeline, cache_attr, None)
-        if prev is not None:
-            # best-effort release: the previous frame may belong to an
-            # already-stopped SparkSession (fresh-session module global)
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
-            setattr(curate_pipeline, cache_attr, None)
-    for path_attr in ("last_landing_path", "last_clean_landing_path"):
-        prev_path = getattr(curate_pipeline, path_attr, None)
-        if prev_path is not None:
-            try:
-                jp = spark._jvm.org.apache.hadoop.fs.Path(prev_path)
-                jp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jp, True)
-            except Exception:
-                pass
-            setattr(curate_pipeline, path_attr, None)
-    if materialize == "table" and landing_dir is None:
-        raise ValueError('materialize="table" requires landing_dir')
-    if materialize not in ("cache", "table", "none"):
-        raise ValueError(f"materialize must be cache|table|none, got {materialize!r}")
-
-    def _mat(df: DataFrame, cache_attr: str, path_attr: str, tag: str) -> DataFrame:
-        if materialize == "cache":
-            df = df.persist()
-            setattr(curate_pipeline, cache_attr, df)
-        elif materialize == "table":
-            path = f"{landing_dir.rstrip('/')}/{tag}-{uuid.uuid4().hex}.parquet"
-            df.write.mode("overwrite").parquet(path)
-            setattr(curate_pipeline, path_attr, path)
-            df = spark.read.parquet(path)
-        return df
-
+    if clean_chunks is not None and clean_chunks < 1:
+        # chunk_tokens=0 would NULL the floor-division chunk index
+        # (non-ANSI) or crash (ANSI), emptying every document and letting
+        # the quality gate drop the whole corpus with no error — fail
+        # loudly instead (r6 review)
+        raise ValueError(f"clean_chunks must be >= 1 (got {clean_chunks})")
     cols = ["doc_id", "text"] + ([url_col] if url_col else [])
-    base = _mat(documents.select(*cols), "last_base_cache", "last_landing_path",
-                "curate_base")
+    base = scope.reuse(documents.select(*cols), "curate_base")
 
     if url_col:
         from .weburl import url_keepers
@@ -422,14 +342,6 @@ def curate_pipeline(
         base = base.join(keep0, "doc_id").select("doc_id", "text")
 
     if clean_chunks is not None:
-        if clean_chunks < 1:
-            # chunk_tokens=0 would NULL the floor-division chunk index
-            # (non-ANSI) or crash (ANSI), emptying every document and
-            # letting the quality gate drop the whole corpus with no
-            # error — fail loudly instead (r6 review)
-            raise ValueError(
-                f"clean_chunks must be >= 1 (got {clean_chunks})"
-            )
         from .dedup import line_dedup_clean
 
         # pass 1: C4 chunk cleaning, sequential — downstream stages see
@@ -439,8 +351,7 @@ def curate_pipeline(
         cleaned = line_dedup_clean(
             base.select("doc_id", "text"), chunk_tokens=clean_chunks
         ).select("doc_id", F.col("text_clean").alias("text"))
-        base = _mat(cleaned, "last_clean_cache", "last_clean_landing_path",
-                    "curate_clean")
+        base = scope.reuse(cleaned, "curate_clean")
 
     q = quality_columns(F.col("text"))
     scored = base.select(
@@ -459,22 +370,25 @@ def curate_pipeline(
     # driver threads so the CC loop's per-iteration driver syncs back-fill
     # with the eval-side jobs instead of serializing after them (guide
     # §2.6: actions are only sequential because the driver calls them
-    # sequentially).  Both threads read the SAME persisted ``base``; cache
-    # partition computation is per-partition-locked in Spark, so the
-    # overlap is safe.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # sequentially).  Both threads read the SAME materialized ``base``;
+    # cache partition computation is per-partition-locked in Spark, and the
+    # scope is thread-safe, so the overlap is safe.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_clean = pool.submit(
-            decontaminate, base, eval_mod=eval_mod, n=n, threshold=threshold
-        )
-        f_keepers = pool.submit(
-            dedup_clusters, base, checkpoint_dir=checkpoint_dir
-        )
-        clean = f_clean.result().where(~F.col("contaminated")).select("doc_id")
-        keepers = (
-            f_keepers.result().where(F.col("is_keeper")).select("doc_id")
-        )
+        branches = {
+            pool.submit(
+                decontaminate, base, eval_mod=eval_mod, n=n, threshold=threshold,
+                scope=scope,
+            ): "decontaminate",
+            pool.submit(dedup_clusters, base, scope=scope): "dedup_clusters",
+        }
+        failed = [f for f in as_completed(branches) if f.exception() is not None]
+    if failed:
+        err = failed[0].exception()
+        err.add_note(f"curate_pipeline branch {branches[failed[0]]!r} failed")
+        raise err
+    f_clean, f_keepers = branches
+    clean = f_clean.result().where(~F.col("contaminated")).select("doc_id")
+    keepers = f_keepers.result().where(F.col("is_keeper")).select("doc_id")
     survivors = scored.join(clean, "doc_id").join(keepers, "doc_id")
 
     shard = F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard")

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.scope import RunScope
 from .textstats import tokens_col
 
 N_MINHASH = 16
@@ -248,7 +249,8 @@ def connected_components(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
+    *,
+    scope: RunScope,
 ) -> DataFrame:
     """(doc_id, cluster_id) — min-id connected components over candidate
     pairs; keeper = the row with doc_id == cluster_id.
@@ -263,131 +265,68 @@ def connected_components(
     (checked per iteration), capped at ``max_iter`` with a loud error
     rather than silently-wrong clusters.
 
-    Checkpointing: pass ``checkpoint_dir`` (HDFS/S3 path on a cluster) for
-    RELIABLE materialization — each iteration's labels are written to and
-    re-read from the fault-tolerant store, so losing an executor
-    mid-iteration recomputes from the last materialized table instead of
-    killing the job.  Materialization is an explicit parquet round-trip
-    into a per-run subdirectory, NOT ``df.checkpoint()``: the latter
-    requires mutating the SparkContext-GLOBAL ``setCheckpointDir``, which
-    would silently redirect any unrelated ``df.checkpoint()`` in the same
-    session into this run's GC-able directory (r4 advice).  The parquet
-    round-trip has identical durability and lineage-truncation semantics
-    with zero global state, and concurrent CC runs on one context are safe
-    (each has its own ``cc-<uuid>`` dir).  Without ``checkpoint_dir``,
-    falls back to ``localCheckpoint`` (executor-block storage): fine for
-    local runs, but lineage is truncated with no durable copy, so an
-    executor loss at cluster scale is fatal — always set checkpoint_dir
-    there.
-
-    Checkpoint hygiene: a naive loop would leak up to ``max_iter`` full
-    copies of the label table per run.  Each call therefore materializes
-    into its own ``cc-<uuid>`` subdirectory, writes the CONVERGED labels to
-    ``final.parquet`` there, deletes every iteration table (Hadoop FS API —
-    works on HDFS/S3/local alike), and returns a frame backed by the
-    parquet — the run leaves exactly one small durable artifact whose path
-    is printed and exposed as ``connected_components.last_final_path`` so
-    the caller/ops can GC it after consuming the frame; a non-convergence
-    raise deletes the run directory entirely.
+    Every iteration's labels are materialized to cut the iterative lineage
+    (``RunScope.truncate``: parquet under the scope's work dir on a
+    cluster, so losing an executor mid-iteration recomputes from the last
+    table instead of killing the job).  The iteration tables live in a
+    nested scope that is closed when the loop ends: after convergence only
+    the final labels remain in ``scope``; a non-convergence raise leaves
+    nothing.  ``scope`` records the iteration count and convergence.
     """
-    import itertools
-    import uuid
-
     spark = nodes.sparkSession
-    run_dir: str | None = None
-    _iter_seq = itertools.count()
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        if run_dir is None:
-            return df.localCheckpoint()
-        path = f"{run_dir}/iter-{next(_iter_seq)}.parquet"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    def _fs_and_path(path: str):
-        p = spark._jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-    def _finalize(result: DataFrame) -> DataFrame:
-        if run_dir is None:
-            return result
-        final = f"{run_dir}/final.parquet"
-        result.write.mode("overwrite").parquet(final)
-        fs, p = _fs_and_path(run_dir)
-        for st in fs.listStatus(p):
-            if st.getPath().getName() != "final.parquet":
-                fs.delete(st.getPath(), True)
-        # the one durable artifact per run — exposed so callers/ops can GC
-        # it after consuming the returned frame (the frame READS this path)
-        connected_components.last_final_path = final
-        print(f"connected_components: labels kept at {final}")
-        return spark.read.parquet(final)
-
-    def _cleanup_run_dir() -> None:
-        # failure path: nothing converged, so nothing is worth keeping —
-        # delete every iteration checkpoint instead of leaking max_iter
-        # copies of the label table into the fault-tolerant store
-        if run_dir is not None:
-            fs, p = _fs_and_path(run_dir)
-            fs.delete(p, True)
-
-    if checkpoint_dir is not None:
-        run_dir = f"{checkpoint_dir.rstrip('/')}/cc-{uuid.uuid4().hex}"
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    # materialize the (small) edge list once: every iteration joins against
-    # it, and leaving it lazy would re-run the upstream candidate pipeline
-    # (e.g. the whole MinHash-LSH) once per iteration
-    edges = _materialize(edges)
     labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
-    connected_components.last_iters = None  # debug aid (single caller); reset per call
-    connected_components.last_final_path = None
-    for it in range(max_iter):
-        neigh = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        # pointer doubling: label-of-label shortcut halves path lengths
-        parents = labels.select(
-            F.col("node").alias("p_node"), F.col("label").alias("p_label")
-        )
-        # carry the old label through so convergence detection is a column
-        # filter on the SAME frame, not an extra full join per iteration
-        stepped = (
-            labels.join(neigh, labels.node == neigh.src, "left")
-            .join(parents, labels.label == parents.p_node, "left")
-            .select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nlabel"), F.col("label")),
-                    F.coalesce(F.col("p_label"), F.col("label")),
-                ).alias("label"),
+    with RunScope(spark, scope.run_dir) as iters:
+        # materialize the (small) edge list once: every iteration joins
+        # against it, and leaving it lazy would re-run the upstream
+        # candidate pipeline (e.g. the whole MinHash-LSH) once per iteration
+        edges = iters.truncate(edges, "cc-edges")
+        for it in range(max_iter):
+            neigh = (
+                edges.join(labels, edges.dst == labels.node)
+                .groupBy("src")
+                .agg(F.min("label").alias("nlabel"))
             )
-        )
-        stepped = _materialize(stepped)  # truncate the iterative lineage
-        changed = stepped.where(F.col("old_label") != F.col("label")).limit(1).count()
-        labels = stepped.select("node", "label")
-        if changed == 0:
-            connected_components.last_iters = it + 1
-            return _finalize(
-                labels.select(F.col("node").alias(id_col), F.col("label").alias("cluster_id"))
+            # pointer doubling: label-of-label shortcut halves path lengths
+            parents = labels.select(
+                F.col("node").alias("p_node"), F.col("label").alias("p_label")
             )
-    _cleanup_run_dir()
+            # carry the old label through so convergence detection is a
+            # column filter on the SAME frame, not an extra full join
+            stepped = (
+                labels.join(neigh, labels.node == neigh.src, "left")
+                .join(parents, labels.label == parents.p_node, "left")
+                .select(
+                    "node",
+                    F.col("label").alias("old_label"),
+                    F.least(
+                        F.col("label"),
+                        F.coalesce(F.col("nlabel"), F.col("label")),
+                        F.coalesce(F.col("p_label"), F.col("label")),
+                    ).alias("label"),
+                )
+            )
+            stepped = iters.truncate(stepped, "cc-iter")
+            changed = stepped.where(F.col("old_label") != F.col("label")).limit(1).count()
+            labels = stepped.select("node", "label")
+            if changed == 0:
+                scope.note("connected_components", iterations=it + 1, converged=True)
+                return scope.truncate(
+                    labels.select(F.col("node").alias(id_col), F.col("label").alias("cluster_id")),
+                    "cc-final",
+                )
+    scope.note("connected_components", iterations=max_iter, converged=False)
     raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
 
 
-def dedup_clusters(documents: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+def dedup_clusters(documents: DataFrame, *, scope: RunScope) -> DataFrame:
     """Near-dup clusters over the MinHash-LSH candidate pairs: every doc
     labeled with its component's min doc_id; keeper = doc_id == cluster_id.
-    Set ``checkpoint_dir`` on a real cluster (see connected_components)."""
+    The CC iterations run in ``scope`` (see connected_components)."""
     pairs = minhash_lsh_pairs(documents)
-    cc = connected_components(
-        documents.select("doc_id"), pairs, checkpoint_dir=checkpoint_dir
-    )
+    cc = connected_components(documents.select("doc_id"), pairs, scope=scope)
     return cc.withColumn("is_keeper", (F.col("doc_id") == F.col("cluster_id")))
 
 
@@ -827,7 +766,6 @@ def bloom_dedup(
 def line_dedup(
     documents: DataFrame,
     chunk_tokens: int = 10,
-    persist_exploded: bool = False,
 ) -> DataFrame:
     """C4-style duplicated-line signal: per document, the fraction of its
     text chunks that also occur verbatim in ANOTHER document.
@@ -851,17 +789,10 @@ def line_dedup(
     the counts side arrives pre-partitioned by the groupBy, so only the
     exploded side shuffles for the join — then a per-doc groupBy.
 
-    Double-explode vs persist: the default (uncached) plan explodes the
-    corpus twice (once feeding the counts, once as the join probe — two
-    Generate nodes in the pinned plan); re-scanning columnar parquet is
-    usually cheaper at 100 TB than materializing an exploded corpus in
-    executor storage.  ``persist_exploded=True`` flips that trade: the
-    exploded (doc_id, chunk_key) frame — digests only, NOT chunk text — is
-    persisted and both consumers read the cache (one Generate, one scan);
-    right when the input is itself expensive to recompute (a filtered/
-    joined view rather than a parquet table).  The caller releases the
-    cache via ``line_dedup.last_exploded_cache`` after materializing the
-    result; each call unpersists the previous call's frame.
+    Double explode: the plan explodes the corpus twice (once feeding the
+    counts, once as the join probe — two Generate nodes in the pinned
+    plan); re-scanning columnar parquet is usually cheaper at 100 TB than
+    materializing an exploded corpus in executor storage.
     Skew: a boilerplate chunk shared by 10^8 docs lands its join-back rows
     in one partition — exactly the case AQE's skew-join splitting handles
     (spark.sql.adaptive.skewJoin.enabled, on by default); the aggregate
@@ -871,17 +802,6 @@ def line_dedup(
     ex = documents.select(
         "doc_id", F.explode(chunk_arr).alias("chunk")
     ).select("doc_id", F.md5(F.col("chunk")).alias("chunk_key"))
-    prev = getattr(line_dedup, "last_exploded_cache", None)
-    if prev is not None:
-        # best-effort: the previous frame may belong to a stopped session
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-        line_dedup.last_exploded_cache = None
-    if persist_exploded:
-        ex = ex.persist()
-        line_dedup.last_exploded_cache = ex
     counts = ex.groupBy("chunk_key").agg(
         F.countDistinct("doc_id").alias("docs_with")
     )

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.scope import RunScope
+
 PAGERANK_SCALE = 10**12
 
 
@@ -58,6 +60,7 @@ def host_link_graph(documents: DataFrame, n_hosts: int = 97) -> DataFrame:
 def pagerank(
     edges: DataFrame,
     *,
+    scope: RunScope,
     iterations: int = 3,
     damping_num: int = 85,
     damping_den: int = 100,
@@ -85,27 +88,14 @@ def pagerank(
     ``damping_num``/``damping_den``/``scale``/``iterations`` must be
     Python ints (asserted) — they are inlined into column expressions.
 
-    Cache lifecycle (r6 advice #1): the edge/node tables and the RETURNED
-    rank frame stay persisted (the loop's plan references them once per
-    iteration, so dropping the cache early would recompute the edge
-    aggregation per iteration inside the final job) — but they are now
-    TRACKED in ``pagerank.last_caches`` and each new call unpersists the
-    previous call's entries first (best-effort; a frame may belong to a
-    stopped session), so repeated graphs in one session retain at most
-    one graph's executor storage.  Callers wanting the memory back sooner
-    unpersist ``pagerank.last_caches`` themselves after materializing the
-    result; intermediate iterations are already unpersisted as the loop
-    advances.
+    The edge/node tables and every iteration's rank frame are persisted
+    through ``scope`` (see ``plans.scope.RunScope``); intermediate rank
+    frames are released as the loop advances, the rest when the scope
+    closes.
     """
     for v in (iterations, damping_num, damping_den, scale):
         if not isinstance(v, int) or isinstance(v, bool) or v <= 0:
             raise ValueError("pagerank parameters must be positive ints")
-    for cached in getattr(pagerank, "last_caches", []):
-        try:
-            cached.unpersist()
-        except Exception:
-            pass
-    pagerank.last_caches = []
     ew = edges.groupBy("src", "dst").agg(F.count("*").cast("long").alias("w"))
     outw = ew.groupBy("src").agg(F.sum("w").cast("long").alias("out_w"))
     nodes = (
@@ -113,9 +103,8 @@ def pagerank(
         .unionByName(ew.select(F.col("dst").alias("node")))
         .distinct()
     )
-    ew_out = ew.join(outw, "src").persist()
-    nodes = nodes.persist()
-    pagerank.last_caches = [ew_out, nodes]
+    ew_out = scope.persist(ew.join(outw, "src"))
+    nodes = scope.persist(nodes)
     n = nodes.count()  # the loop's only driver scalar
     if n == 0:
         raise ValueError("pagerank: empty edge list (no nodes)")
@@ -133,7 +122,7 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("carry").cast("long").alias("c"))
         )
-        ranks = (
+        ranks = scope.persist(
             nodes.join(carried.withColumnRenamed("dst", "node"), "node", "left")
             .select(
                 "node",
@@ -141,10 +130,9 @@ def pagerank(
                 .cast("long")
                 .alias("rank_fp"),
             )
-            .persist()
         )
         if prev is not None:
             prev.unpersist()
         prev = ranks
-    pagerank.last_caches.append(ranks)
+    scope.note("pagerank", nodes=n, iterations=iterations)
     return ranks

@@ -30,40 +30,47 @@ def test_run_doc_cli_matches_kernel(tmp_path):
 def test_curate_job_exact_and_neardup(tmp_path, spark):
     """The curate job writes keepers (+ bucket stats in neardup mode) and
     its outputs equal the operators it wraps."""
+    import os
+
     from jobs.curate_job import run_curate
-    from ocr_table_extractor_to_csv_spark.operators.curation import curate, curate_neardup
+    from ocr_table_extractor_to_csv_spark.operators.curation import (
+        curate,
+        curate_neardup,
+        curate_pipeline,
+    )
+    from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     out1 = str(tmp_path / "exact")
-    kept = run_curate(spark, docs, out=out1)
+    kept, _ = run_curate(spark, docs, out=out1)
     assert {tuple(r) for r in kept.collect()} == {tuple(r) for r in curate(docs).collect()}
 
     out2 = str(tmp_path / "near")
-    ckpt = str(tmp_path / "ckpt")
-    kept2 = run_curate(spark, docs, out=out2, neardup=True, checkpoint_dir=ckpt)
-    assert {tuple(r) for r in kept2.collect()} == {
-        tuple(r) for r in curate_neardup(docs).collect()
-    }
+    work = str(tmp_path / "work")
+    kept2, facts2 = run_curate(spark, docs, out=out2, neardup=True, work_dir=work)
+    with RunScope(spark) as scope:
+        want2 = {tuple(r) for r in curate_neardup(docs, scope=scope).collect()}
+    assert {tuple(r) for r in kept2.collect()} == want2
+    assert facts2["connected_components"][0]["converged"]
     stats = spark.read.parquet(f"{out2}/bucket_stats")
     assert stats.count() > 0 and "n_docs_in_hot" in stats.columns
 
     out3 = str(tmp_path / "pipe")
-    kept3 = run_curate(spark, docs, out=out3, neardup="pipeline", checkpoint_dir=ckpt)
-    from ocr_table_extractor_to_csv_spark.operators.curation import curate_pipeline
-
-    assert {tuple(r) for r in kept3.collect()} == {
-        tuple(r) for r in curate_pipeline(docs).collect()
-    }
+    kept3, facts3 = run_curate(spark, docs, out=out3, neardup="pipeline")
+    with RunScope(spark) as scope:
+        want3 = {tuple(r) for r in curate_pipeline(docs, scope=scope).collect()}
+    assert {tuple(r) for r in kept3.collect()} == want3
     assert "bin_id" in kept3.columns and "offset_in_bin" in kept3.columns
+    assert facts3["decontaminate"][0]["strategy"] == "broadcast"
 
-    # --materialize table (the 100 TB mode) must flow through the job and
-    # produce identical keepers from the pruned landing table
+    # --work-dir (the 100 TB mode) must flow through the job and produce
+    # identical keepers from the pruned landing table, which the job's
+    # scope deletes on exit
     out4 = str(tmp_path / "pipe_table")
-    kept4 = run_curate(
-        spark, docs, out=out4, neardup="pipeline", checkpoint_dir=ckpt,
-        materialize="table", landing_dir=str(tmp_path / "landing"),
-    )
-    assert {tuple(r) for r in kept4.collect()} == {tuple(r) for r in kept3.collect()}
+    kept4, facts4 = run_curate(spark, docs, out=out4, neardup="pipeline", work_dir=work)
+    assert {tuple(r) for r in kept4.collect()} == want3
+    assert [f["tag"] for f in facts4["landed"]] == ["curate_base", "cc-final"]
+    assert os.listdir(work) == []
 
 
 def test_curate_job_incremental_mode(tmp_path, spark):
@@ -83,7 +90,7 @@ def test_curate_job_incremental_mode(tmp_path, spark):
     old = docs.where(F.col("doc_id") % 10 != 0)
     new = docs.where(F.col("doc_id") % 10 != 1)
     prev = curate(old)
-    kept = run_curate(
+    kept, _ = run_curate(
         spark, new, out=str(tmp_path / "inc"),
         incremental_old=old, prev_keepers=prev,
     )
@@ -92,8 +99,8 @@ def test_curate_job_incremental_mode(tmp_path, spark):
     with _pytest.raises(ValueError, match="exclusive"):
         run_curate(spark, new, out=str(tmp_path / "bad"),
                    incremental_old=old, neardup=True)
-    # --prev-keepers outside incremental mode is the same silent-no-op
-    # class as --materialize: verdicts would NOT carry over (r6 review)
+    # --prev-keepers outside incremental mode would be a silent no-op:
+    # verdicts would NOT carry over (r6 review)
     with _pytest.raises(ValueError, match="prev-keepers"):
         run_curate(spark, new, out=str(tmp_path / "bad2"),
                    prev_keepers=prev)
@@ -228,7 +235,7 @@ def test_curate_job_url_dedup_prepass(tmp_path, spark):
         run_curate(spark, docs, out=str(tmp_path / "x"), url_dedup=True)
 
     wdocs = with_synth_url(docs)
-    kept = run_curate(spark, wdocs, out=str(tmp_path / "u"), url_dedup=True)
+    kept, _ = run_curate(spark, wdocs, out=str(tmp_path / "u"), url_dedup=True)
 
     from pyspark.sql import functions as F
 
@@ -251,7 +258,7 @@ def test_curate_job_url_dedup_prepass(tmp_path, spark):
         .when(F.col("doc_id") % 3 == 1, F.lit(""))
         .otherwise(F.col("url")),
     )
-    kept_n = run_curate(spark, ndocs, out=str(tmp_path / "n"), url_dedup=True)
+    kept_n, _ = run_curate(spark, ndocs, out=str(tmp_path / "n"), url_dedup=True)
     keyless_kept = curate(ndocs.where(F.col("url").isNull() | (F.col("url") == "")))
     assert kept_n.count() >= keyless_kept.count() > 1
 

@@ -132,6 +132,7 @@ def test_curate_job_main_exact_mode(tmp_path):
     assert res.returncode == 0, res.stderr[-2000:]
     summary = json.loads(res.stdout.strip().splitlines()[-1])
     assert summary["mode"] == "exact" and summary["n_kept"] > 0
+    assert summary["facts"] == {}  # exact mode materializes nothing
     assert (out / "keepers").exists()
 
 

@@ -6,6 +6,9 @@ here compares against either a hand-derived closed form or an exact
 pure-Python integer re-implementation — no tolerances anywhere.
 """
 
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators.graph import (
@@ -13,6 +16,7 @@ from ocr_table_extractor_to_csv_spark.operators.graph import (
     host_link_graph,
     pagerank,
 )
+from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
 
 
 def _pyrank(edges, iterations=3, dn=85, dd=100, scale=PAGERANK_SCALE):
@@ -39,7 +43,8 @@ def _pyrank(edges, iterations=3, dn=85, dd=100, scale=PAGERANK_SCALE):
 
 def _run(spark, edges, **kw):
     df = spark.createDataFrame(edges, "src long, dst long")
-    return {r["node"]: r["rank_fp"] for r in pagerank(df, **kw).collect()}
+    with RunScope(spark) as scope:
+        return {r["node"]: r["rank_fp"] for r in pagerank(df, scope=scope, **kw).collect()}
 
 
 def test_two_node_cycle_is_a_fixed_point(spark):
@@ -67,12 +72,28 @@ def test_partitioning_invariance_bit_exact(spark):
         (i % 11, (i * 17 + 3) % 11) for i in range(200)
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-    a = {r["node"]: r["rank_fp"] for r in pagerank(df.coalesce(1)).collect()}
-    b = {
-        r["node"]: r["rank_fp"]
-        for r in pagerank(df.repartition(7, "dst")).collect()
-    }
+    with RunScope(spark) as scope:
+        a = {r["node"]: r["rank_fp"] for r in pagerank(df.coalesce(1), scope=scope).collect()}
+        b = {
+            r["node"]: r["rank_fp"]
+            for r in pagerank(df.repartition(7, "dst"), scope=scope).collect()
+        }
     assert a == b == _pyrank(edges)
+
+
+def test_concurrent_calls_share_no_state(spark):
+    # two graphs ranked at once from two driver threads, each call owning
+    # its scope: both exact, and nothing stays persisted once both close
+    graphs = [
+        [(i % 11, (i * 31 + 7) % 11) for i in range(200)],
+        [(0, 1), (0, 2), (0, 3), (1, 0), (1, 0), (2, 3)],
+    ]
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())  # other tests share the session
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        got = list(pool.map(lambda edges: _run(spark, edges), graphs))
+    assert got == [_pyrank(edges) for edges in graphs]
+    assert set(persisted().keySet()) <= before
 
 
 def test_host_link_graph_shape(spark):
@@ -86,12 +107,8 @@ def test_host_link_graph_shape(spark):
 
 def test_pagerank_empty_graph_raises(spark):
     df = spark.createDataFrame([], "src long, dst long")
-    try:
-        pagerank(df)
-    except ValueError as e:
-        assert "empty" in str(e)
-    else:
-        raise AssertionError("expected ValueError on empty edge list")
+    with pytest.raises(ValueError, match="empty"), RunScope(spark) as scope:
+        pagerank(df, scope=scope)
 
 
 def test_pagerank_rejects_non_int_params(spark):
@@ -102,11 +119,8 @@ def test_pagerank_rejects_non_int_params(spark):
         {"scale": True},
         {"damping_den": -1},
     ):
-        try:
-            pagerank(df, **kw)
-        except ValueError:
-            continue
-        raise AssertionError(f"expected ValueError for {kw}")
+        with pytest.raises(ValueError), RunScope(spark) as scope:
+            pagerank(df, scope=scope, **kw)
 
 
 def test_pagerank_plan_no_python_no_cartesian(spark):
@@ -115,6 +129,7 @@ def test_pagerank_plan_no_python_no_cartesian(spark):
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    plan = pagerank(df)._jdf.queryExecution().explainString(mode)
+    with RunScope(spark) as scope:
+        plan = pagerank(df, scope=scope)._jdf.queryExecution().explainString(mode)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan

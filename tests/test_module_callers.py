@@ -60,3 +60,54 @@ def test_every_package_module_has_a_product_caller():
             todo.append(modules[m])
     assert sorted(set(modules) - reached - ALLOWED.keys()) == [], "modules without a product caller"
     assert sorted(ALLOWED.keys() & reached) == [], "allowlisted modules that now have a caller"
+
+
+def _module_of(path: Path, node: ast.ImportFrom) -> str:
+    package = _name(path).split(".")
+    if path.name != "__init__.py":
+        package = package[:-1]
+    if not node.level:
+        return node.module
+    parent = package[: len(package) - node.level + 1]
+    return ".".join(parent + ([node.module] if node.module else []))
+
+
+def test_no_state_on_module_functions():
+    """Run state belongs to a RunScope, not to attributes hung on module
+    functions: no ``fn.attr = ...`` and no ``setattr(fn, ...)`` where ``fn``
+    is a module-level function of the package (defined in the module or
+    imported from another package module)."""
+    modules = {_name(p): p for p in (ROOT / PKG).rglob("*.py")}
+    trees = {m: ast.parse(p.read_text()) for m, p in modules.items()}
+    defs = {
+        m: {n.name for n in t.body if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
+        for m, t in trees.items()
+    }
+    found = []
+    for m, tree in trees.items():
+        fns = set(defs[m])
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                src = defs.get(_module_of(modules[m], node), set())
+                fns.update(a.asname or a.name for a in node.names if a.name in src)
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    for a in ast.walk(t):
+                        if (
+                            isinstance(a, ast.Attribute)
+                            and isinstance(a.value, ast.Name)
+                            and a.value.id in fns
+                        ):
+                            found.append(f"{m}:{node.lineno} {a.value.id}.{a.attr} =")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "setattr"
+                and node.args
+                and isinstance(node.args[0], ast.Name)
+                and node.args[0].id in fns
+            ):
+                found.append(f"{m}:{node.lineno} setattr({node.args[0].id}, ...)")
+    assert found == [], "state stored on module functions"

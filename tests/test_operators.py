@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators import dedup, multimodal, similarity
 from ocr_table_extractor_to_csv_spark.operators.evaluation import numeric_metrics
+from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
 
 
 def test_bpe_token_count_known_strings(spark):
@@ -124,51 +125,58 @@ def test_connected_components_long_path_and_cycle(spark):
     path = [(i, i + 1) for i in range(1, 15)]
     cycle = [(20, 21), (21, 22), (20, 22)]
     pairs = spark.createDataFrame(path + cycle, "id_a long, id_b long")
-    cc = {r.doc_id: r.cluster_id for r in dedup.connected_components(nodes, pairs).collect()}
+    with RunScope(spark) as scope:
+        cc = {
+            r.doc_id: r.cluster_id
+            for r in dedup.connected_components(nodes, pairs, scope=scope).collect()
+        }
     assert all(cc[i] == 1 for i in range(1, 16))
     assert cc[20] == cc[21] == cc[22] == 20
     assert cc[30] == 30
     # pointer doubling: O(log diameter) rounds, not O(diameter) — the
     # 14-hop path must converge well under 14 iterations
-    assert dedup.connected_components.last_iters <= 7, dedup.connected_components.last_iters
+    [fact] = scope.facts["connected_components"]
+    assert fact["converged"] and fact["iterations"] <= 7, fact
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """With checkpoint_dir set, CC uses RELIABLE df.checkpoint(): identical
-    labels, and checkpoint files actually land in the fault-tolerant dir
-    (the 100 TB durability path — localCheckpoint dies with an executor)."""
+    """With a work dir, CC materializes every iteration as parquet in the
+    fault-tolerant store (the 100 TB durability path — localCheckpoint
+    dies with an executor): identical labels, only the final labels left
+    after convergence, nothing left after a non-convergence raise, and the
+    scope's run directory gone once it closes."""
     import os
+
+    import pytest as _pytest
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 7)], "id_a long, id_b long")
-    ckpt = str(tmp_path / "cc_ckpt")
-    cc = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components(nodes, pairs, checkpoint_dir=ckpt).collect()
-    }
-    assert all(cc[i] == 1 for i in range(1, 8))
-    written = [
-        os.path.join(dp, f) for dp, _dn, fn in os.walk(ckpt) for f in fn
-    ]
-    assert written, "no durable artifact was written"
-    # checkpoint hygiene (r3 advice): every per-iteration rdd checkpoint is
-    # deleted after convergence — only the final labels parquet survives
-    assert all("final.parquet" in p for p in written), written
-    leaked = [p for p in written if "/rdd-" in p]
-    assert not leaked, f"leaked iteration checkpoints: {leaked}"
-    # the kept artifact's path is exposed for ops GC
-    assert dedup.connected_components.last_final_path is not None
-    assert "final.parquet" in dedup.connected_components.last_final_path
+    work = str(tmp_path / "work")
+    with RunScope(spark, work) as scope:
+        cc = {
+            r.doc_id: r.cluster_id
+            for r in dedup.connected_components(nodes, pairs, scope=scope).collect()
+        }
+        assert all(cc[i] == 1 for i in range(1, 8))
+        written = [
+            os.path.relpath(os.path.join(dp, f), scope.run_dir)
+            for dp, _dn, fn in os.walk(scope.run_dir) for f in fn
+        ]
+        assert written, "no durable artifact was written"
+        # checkpoint hygiene (r3 advice): every per-iteration table is
+        # deleted after convergence — only the final labels parquet survives
+        assert all(p.startswith("cc-final-") for p in written), written
+        [landed] = scope.facts["landed"]
+        assert landed["path"].endswith(".parquet") and "cc-final" in landed["path"]
 
-    # non-convergence must CLEAN UP the run dir, not leak max_iter label
-    # copies into the fault-tolerant store
-    import pytest as _pytest
-
-    before = {d for d in os.listdir(ckpt)} if os.path.isdir(ckpt) else set()
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(nodes, pairs, checkpoint_dir=ckpt, max_iter=0)
-    after = {d for d in os.listdir(ckpt)} if os.path.isdir(ckpt) else set()
-    assert after == before, f"failed run leaked: {after - before}"
+        # non-convergence must CLEAN UP its iteration tables, not leak
+        # max_iter label copies into the fault-tolerant store
+        before = set(os.listdir(scope.run_dir))
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(nodes, pairs, max_iter=0, scope=scope)
+        assert set(os.listdir(scope.run_dir)) == before
+        assert scope.facts["connected_components"][-1]["converged"] is False
+    assert os.listdir(work) == [], "closed scope left its run directory"
 
 
 def test_dedup_clusters_keeper_semantics(spark):
@@ -178,7 +186,8 @@ def test_dedup_clusters_keeper_semantics(spark):
          (2, "entirely different words appear in this one")],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r for r in dedup.dedup_clusters(docs).collect()}
+    with RunScope(spark) as scope:
+        rows = {r.doc_id: r for r in dedup.dedup_clusters(docs, scope=scope).collect()}
     assert rows[5].cluster_id == 5 and rows[5].is_keeper
     assert rows[9].cluster_id == 5 and not rows[9].is_keeper
     assert rows[2].cluster_id == 2 and rows[2].is_keeper
@@ -681,7 +690,8 @@ def test_decontaminate_eval_overlap(spark):
         ],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r for r in decontaminate(docs).collect()}
+    with RunScope(spark) as scope:
+        rows = {r.doc_id: r for r in decontaminate(docs, scope=scope).collect()}
     assert rows[0].contaminated and rows[0].overlap_ratio == 1.0
     assert rows[1].n_shingles == 2 and rows[1].n_overlap == 1
     assert rows[1].overlap_ratio == 0.5 and rows[1].contaminated  # >= threshold
@@ -703,15 +713,14 @@ def test_decontaminate_oversized_eval_falls_back_to_shuffle(spark):
         ],
         "doc_id long, text string",
     )
-    want = {tuple(r) for r in decontaminate(docs).collect()}
-    assert decontaminate.last_strategy == "broadcast"
-
-    small = decontaminate(docs, max_broadcast_shingles=1)
-    assert decontaminate.last_strategy == "shuffle"
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = small._jdf.queryExecution().explainString(mode)
-    assert "BroadcastHashJoin" not in plan
-    assert {tuple(r) for r in small.collect()} == want
+    with RunScope(spark) as scope:
+        want = {tuple(r) for r in decontaminate(docs, scope=scope).collect()}
+        small = decontaminate(docs, max_broadcast_shingles=1, scope=scope)
+        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        plan = small._jdf.queryExecution().explainString(mode)
+        assert "BroadcastHashJoin" not in plan
+        assert {tuple(r) for r in small.collect()} == want
+    assert [f["strategy"] for f in scope.facts["decontaminate"]] == ["broadcast", "shuffle"]
 
 
 def test_sample_stratified_deterministic_and_bounded(spark):
@@ -764,22 +773,25 @@ def test_curate_neardup_equals_operator_composition(spark):
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got = {tuple(r) for r in curate_neardup(docs).collect()}
+    with RunScope(spark) as scope:
+        got = {tuple(r) for r in curate_neardup(docs, scope=scope).collect()}
 
-    quality = textstats.text_quality(docs).select("doc_id", "n_tokens", "quality_score")
-    lang = textstats.lang_id(docs).select("doc_id", "lang_pred")
-    keepers = dedup.dedup_clusters(docs).where(F.col("is_keeper")).select("doc_id")
-    want = {
-        tuple(r)
-        for r in quality.join(lang, "doc_id")
-        .join(keepers, "doc_id", "left_semi")
-        .where(
-            (F.col("quality_score") >= DEFAULT_MIN_QUALITY)
-            & F.col("lang_pred").isin(list(DEFAULT_LANGS))
+        quality = textstats.text_quality(docs).select("doc_id", "n_tokens", "quality_score")
+        lang = textstats.lang_id(docs).select("doc_id", "lang_pred")
+        keepers = (
+            dedup.dedup_clusters(docs, scope=scope).where(F.col("is_keeper")).select("doc_id")
         )
-        .select("doc_id", "n_tokens", "quality_score", "lang_pred")
-        .collect()
-    }
+        want = {
+            tuple(r)
+            for r in quality.join(lang, "doc_id")
+            .join(keepers, "doc_id", "left_semi")
+            .where(
+                (F.col("quality_score") >= DEFAULT_MIN_QUALITY)
+                & F.col("lang_pred").isin(list(DEFAULT_LANGS))
+            )
+            .select("doc_id", "n_tokens", "quality_score", "lang_pred")
+            .collect()
+        }
     assert got == want and len(got) > 0
     assert len(got) <= curate(docs).count()
 
@@ -924,18 +936,6 @@ def test_line_dedup_hand_case(spark):
     assert rows[1].n_chunks == 2 and rows[1].n_dup_chunks == 1 and rows[1].dup_ratio == 0.5
     assert rows[2].n_chunks == 2 and rows[2].n_dup_chunks == 2  # shared AND uniq_b
     assert rows[3].n_chunks == 1 and rows[3].dup_ratio == 1.0
-
-    # persist_exploded must be a pure execution-strategy knob: identical
-    # rows, the exploded digest frame cached, and the cache released on the
-    # next call (lifecycle contract — at most one retained per session)
-    rows_p = {r.doc_id: r for r in line_dedup(df, persist_exploded=True).collect()}
-    assert {k: tuple(v) for k, v in rows_p.items()} == {
-        k: tuple(v) for k, v in rows.items()
-    }
-    cache = line_dedup.last_exploded_cache
-    assert cache is not None and cache.is_cached
-    assert line_dedup(df).count() == 3  # default call releases the old cache
-    assert not cache.is_cached and line_dedup.last_exploded_cache is None
 
 
 def test_bloom_dedup_hand_case(spark):

@@ -115,6 +115,9 @@ def test_curate_single_scan_single_shuffle(spark):
     # exchanges on tiny inputs; those are not keyed shuffles and vanish at
     # scale, so the pin counts hashpartitioning exchanges only.
     assert len(re.findall(r"Arguments: hashpartitioning", plan)) == 1
+    # the fan-out adds exchanges, never scans: the projection is read twice
+    n = len(re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M))
+    assert n == 2, f"{n} parquet scan nodes"
     assert "Window" not in plan, "keeper election regressed to a window"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -205,31 +208,27 @@ def test_pipeline_full_v2_url_pass0_zero_extra_scans(spark):
 
 
 def test_pipeline_full_materialize_table_plan_and_parity(spark, tmp_path):
-    """materialize="table" (the 100 TB mode — r4 verdict #2): the plan must
-    read the corpus exclusively through the pruned parquet LANDING table —
-    zero scans of the original documents source, zero cache — and produce
-    rows identical to the cache mode."""
+    """With a work dir (the 100 TB mode — r4 verdict #2) the plan must read
+    the corpus exclusively through the pruned parquet LANDING table — zero
+    scans of the original documents source, zero cache — and produce rows
+    identical to the cache mode."""
     from ocr_table_extractor_to_csv_spark.operators.curation import curate_pipeline
+    from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    cached = curate_pipeline(docs).orderBy("doc_id").collect()
+    with RunScope(spark) as scope:
+        cached = curate_pipeline(docs, scope=scope).orderBy("doc_id").collect()
 
-    landed_df = curate_pipeline(
-        docs, materialize="table", landing_dir=str(tmp_path / "landing")
-    )
-    plan = _formatted(spark, landed_df)
-    # every parquet scan reads the landing table; the original documents
-    # source is never rescanned (decontaminate's small eval-shingle cache
-    # may still appear as an InMemoryTableScan — that one is intentional)
-    assert "curate_base" in plan
-    assert "documents.parquet" not in plan, "source rescanned in table mode"
-    assert curate_pipeline.last_landing_path is not None
-    assert landed_df.orderBy("doc_id").collect() == cached
-
-    none_df = curate_pipeline(docs, materialize="none")
-    plan_none = _formatted(spark, none_df)
-    assert "documents.parquet" in plan_none, "none mode re-scans the pruned source"
-    assert none_df.orderBy("doc_id").collect() == cached
+    with RunScope(spark, str(tmp_path / "work")) as scope:
+        landed_df = curate_pipeline(docs, scope=scope)
+        plan = _formatted(spark, landed_df)
+        # every parquet scan reads the landing table; the original documents
+        # source is never rescanned (decontaminate's small eval-shingle cache
+        # may still appear as an InMemoryTableScan — that one is intentional)
+        assert "curate_base" in plan
+        assert "documents.parquet" not in plan, "source rescanned in table mode"
+        assert scope.facts["landed"][0]["path"].startswith(scope.run_dir)
+        assert landed_df.orderBy("doc_id").collect() == cached
 
 
 def test_decontaminate_broadcasts_eval_side(spark):
