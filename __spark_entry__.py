@@ -3,7 +3,7 @@
 ``queries()`` exposes the engine's operator surface over the driver's test
 tables; ``oracle_sql()`` carries the DuckDB twin for every SQL-expressible
 query.  The flagship ``extract_grid4`` runs the REAL extraction pipeline
-(mapInPandas geometry kernel) over pages synthesized deterministically from
+(mapInArrow geometry kernel) over pages synthesized deterministically from
 ``documents.text`` whose generic-layout output is independently derivable in
 SQL — so the oracle checks the full Spark pipeline end to end at the value
 level (byte-level identity is separately pinned by the pytest goldens).
@@ -1081,7 +1081,7 @@ def q_mix_sample(spark, sf_dir):
     target per source.  The plan broadcasts; the doc side never
     shuffles."""
     return textstats.mix_sample(
-        _docs_f(spark, sf_dir), budget_tokens=MIX_BUDGET, weights=MIX_WEIGHTS
+        _docs(spark, sf_dir), budget_tokens=MIX_BUDGET, weights=MIX_WEIGHTS
     )
 
 

@@ -16,9 +16,11 @@ Layout:
   streaming/  incremental (availableNow) ingest + windowed aggregation
 
 Design rule: all per-document geometry runs inside Arrow-batched
-``mapInPandas`` kernels (one Python call per batch, numpy inside); the job
-graph around them is plain declarative DataFrame code that Catalyst can
-optimize (column pruning, filter pushdown, broadcast anti-joins).
+``mapInArrow`` kernels (one Python call per batch, numpy inside), and every
+map stage passes its function through the one wrapper
+``session.worker_batches``; the job graph around them is plain declarative
+DataFrame code that Catalyst can optimize (column pruning, filter pushdown,
+broadcast anti-joins).
 """
 
 __version__ = "0.1.0"

@@ -13,6 +13,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..kernel.dataset import build_layoutlm_example
+from ..session import worker_batches
 
 EXAMPLE_SCHEMA = (
     "url string, words array<string>, bboxes array<array<int>>, "
@@ -75,4 +76,4 @@ def build_examples(
                 schema=_ARROW,
             )
 
-    return pages.select("url", "html").mapInArrow(fn, EXAMPLE_SCHEMA)
+    return pages.select("url", "html").mapInArrow(worker_batches(fn), EXAMPLE_SCHEMA)

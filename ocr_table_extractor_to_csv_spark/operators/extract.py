@@ -17,7 +17,12 @@ Scale design:
   * per-row try/except: a malformed document yields an ``error`` row, never
     a task failure (at 10^12 docs, something is always malformed);
   * lineage columns (partition_id, task_attempt) are stamped in-kernel via
-    TaskContext so manifests aggregate with a plain groupBy afterwards.
+    TaskContext so manifests aggregate with a plain groupBy afterwards;
+  * per-task worker cost: the kernel runs under ``session.worker_batches``,
+    which drops the worker's cached zip finders when a task ends, so the
+    next task's ``importlib.invalidate_caches()`` does not re-read
+    pyspark.zip on CPython 3.10-3.12 (90-170 ms per task with 4 tasks in
+    flight on 4 vCPUs).
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ from pyspark.sql.types import (
 
 from ..kernel import extract_document
 from ..kernel.extract import ExtractResult
+from ..session import worker_batches
 
 EXTRACTED_SCHEMA = StructType(
     [
@@ -145,5 +151,6 @@ def extract_pages(
     cols = ["url", "html"] + (["layout", "args"] if per_row_dispatch else [])
     pruned = pages.select(*cols)
     return pruned.mapInArrow(
-        make_extract_fn(default_layout=layout, default_args=args), EXTRACTED_SCHEMA
+        worker_batches(make_extract_fn(default_layout=layout, default_args=args)),
+        EXTRACTED_SCHEMA,
     )

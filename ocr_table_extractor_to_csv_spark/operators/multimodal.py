@@ -25,6 +25,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from ..session import worker_batches
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, n_bytes int, features array<double>, error string"
 )
@@ -94,7 +96,9 @@ def media_features(media: DataFrame, kind_col: str = "kind") -> DataFrame:
                 names=["media_id", "kind", "n_bytes", "features", "error"],
             )
 
-    return media.select("media_id", kind_col, "payload").mapInArrow(fn, MEDIA_SCHEMA)
+    return media.select("media_id", kind_col, "payload").mapInArrow(
+        worker_batches(fn), MEDIA_SCHEMA
+    )
 
 
 RESIZE_SCHEMA = (
@@ -160,7 +164,7 @@ def resize_media(media: DataFrame, dst_w: int = 32, dst_h: int = 32) -> DataFram
                 names=["media_id", "src_w", "src_h", "dst_w", "dst_h", "pixels", "error"],
             )
 
-    return media.select("media_id", "payload").mapInArrow(fn, RESIZE_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(worker_batches(fn), RESIZE_SCHEMA)
 
 
 def frame_sample(media: DataFrame, k: int = 8) -> DataFrame:
@@ -194,4 +198,4 @@ def frame_sample(media: DataFrame, k: int = 8) -> DataFrame:
                 names=["media_id", "n_frames", "frame_offsets", "frame_sizes", "error"],
             )
 
-    return media.select("media_id", "payload").mapInArrow(fn, FRAME_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(worker_batches(fn), FRAME_SCHEMA)

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..plans.partitioning import fan_out
+from ..session import worker_batches
 
 TOKEN_RE = re.compile(r"[^a-z0-9]+")
 ANCHORS = (100, 500, 900, 1300)
@@ -288,15 +289,15 @@ def _synth_kind_batches(kind: str):
 
 
 def fin_pages_from_documents(documents: DataFrame) -> DataFrame:
-    return _spread(documents).mapInPandas(_synth_kind_batches("fin"), PAGES_SCHEMA)
+    return _spread(documents).mapInPandas(worker_batches(_synth_kind_batches("fin")), PAGES_SCHEMA)
 
 
 def dyn_pages_from_documents(documents: DataFrame) -> DataFrame:
-    return _spread(documents).mapInPandas(_synth_kind_batches("dyn"), PAGES_SCHEMA)
+    return _spread(documents).mapInPandas(worker_batches(_synth_kind_batches("dyn")), PAGES_SCHEMA)
 
 
 def pro_pages_from_documents(documents: DataFrame) -> DataFrame:
-    return _spread(documents).mapInPandas(_synth_kind_batches("pro"), PAGES_SCHEMA)
+    return _spread(documents).mapInPandas(worker_batches(_synth_kind_batches("pro")), PAGES_SCHEMA)
 
 
 MIXED_SCHEMA = StructType(
@@ -347,11 +348,13 @@ def mixed_pages_from_documents(documents: DataFrame) -> DataFrame:
                 }
             )
 
-    return _spread(documents).mapInPandas(gen, MIXED_SCHEMA)
+    return _spread(documents).mapInPandas(worker_batches(gen), MIXED_SCHEMA)
 
 
 def boiler_pages_from_documents(documents: DataFrame) -> DataFrame:
-    return _spread(documents).mapInPandas(_synth_kind_batches("boiler"), PAGES_SCHEMA)
+    return _spread(documents).mapInPandas(
+        worker_batches(_synth_kind_batches("boiler")), PAGES_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -450,7 +453,7 @@ def args_pages_from_documents(documents: DataFrame) -> DataFrame:
                 {"doc_id": ids, "url": urls, "html": htmls, "layout": layouts, "args": argss}
             )
 
-    return _spread(documents).mapInPandas(gen, MIXED_SCHEMA)
+    return _spread(documents).mapInPandas(worker_batches(gen), MIXED_SCHEMA)
 
 
 def _synth_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -475,7 +478,7 @@ def _spread(documents: DataFrame) -> DataFrame:
 
 def pages_from_documents(documents: DataFrame) -> DataFrame:
     """documents(doc_id, text, ...) -> pages(doc_id, url, html)."""
-    return _spread(documents).mapInPandas(_synth_batches, PAGES_SCHEMA)
+    return _spread(documents).mapInPandas(worker_batches(_synth_batches), PAGES_SCHEMA)
 
 
 def fixture_pages(spark, scale: float = 1.0, giant_tokens: int = 2000) -> DataFrame:

@@ -36,6 +36,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from ..session import worker_batches
+
 WARC_PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, error string"
 
 _CRLF2 = b"\r\n\r\n"
@@ -161,7 +163,7 @@ def read_warc(spark, path: str) -> DataFrame:
         .load(path)
         .select("path", "content")
     )
-    return files.mapInArrow(warc_batches_fn, WARC_PAGES_SCHEMA)
+    return files.mapInArrow(worker_batches(warc_batches_fn), WARC_PAGES_SCHEMA)
 
 
 WET_PAGES_SCHEMA = "url string, warc_ts timestamp, text string, error string"
@@ -217,7 +219,7 @@ def read_wet(spark, path: str) -> DataFrame:
         .load(path)
         .select("path", "content")
     )
-    return files.mapInArrow(wet_batches_fn, WET_PAGES_SCHEMA)
+    return files.mapInArrow(worker_batches(wet_batches_fn), WET_PAGES_SCHEMA)
 
 
 def write_warc_segments(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages
 from ..plans.lineage import build_manifests
+from ..session import worker_batches
 
 
 def _write_idempotent(df: DataFrame, path: str) -> None:
@@ -117,7 +118,7 @@ def incremental_extract_warc(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = batch_df.mapInArrow(warc_batches_fn, WARC_PAGES_SCHEMA).persist()
+        parsed = batch_df.mapInArrow(worker_batches(warc_batches_fn), WARC_PAGES_SCHEMA).persist()
         # no-silent-drop contract: with the exactly-once checkpoint a corrupt
         # segment is permanently consumed, so its error row must be durably
         # recorded (errors parquet next to out_dir) — not just filtered away.
@@ -177,7 +178,7 @@ def incremental_ingest_wet(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = batch_df.mapInArrow(wet_batches_fn, WET_PAGES_SCHEMA).persist()
+        parsed = batch_df.mapInArrow(worker_batches(wet_batches_fn), WET_PAGES_SCHEMA).persist()
         bad = parsed.where(F.col("error").isNotNull())
         n_bad = bad.count()
         if n_bad:

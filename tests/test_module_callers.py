@@ -111,3 +111,34 @@ def test_no_state_on_module_functions():
             ):
                 found.append(f"{m}:{node.lineno} setattr({node.args[0].id}, ...)")
     assert found == [], "state stored on module functions"
+
+
+def _passes_worker_batches(call: ast.Call) -> bool:
+    fn = call.args[0] if call.args else next((k.value for k in call.keywords if k.arg == "func"), None)
+    if not isinstance(fn, ast.Call):
+        return False
+    name = fn.func.attr if isinstance(fn.func, ast.Attribute) else getattr(fn.func, "id", None)
+    return name == "worker_batches"
+
+
+def test_every_map_stage_goes_through_worker_batches():
+    """Every ``.mapInArrow(``/``.mapInPandas(`` call in the package, ``jobs/``
+    and ``__spark_entry__.py`` passes its function through
+    ``session.worker_batches(...)``, so no stage brings back the per-task
+    zip-archive re-read that wrapper removes."""
+    paths = list((ROOT / PKG).rglob("*.py")) + list(ROOT.glob("jobs/*.py"))
+    paths.append(ROOT / "__spark_entry__.py")
+    stages, bare = [], []
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("mapInArrow", "mapInPandas")
+            ):
+                where = f"{path.relative_to(ROOT)}:{node.lineno}"
+                stages.append(where)
+                if not _passes_worker_batches(node):
+                    bare.append(where)
+    assert stages, "no map stages found: the scan is broken"
+    assert bare == [], "map stages without worker_batches"
