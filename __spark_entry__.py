@@ -683,9 +683,10 @@ def _giants_resume_dir(sf_dir: str) -> str:
 
 def q_giants_resume(spark, sf_dir):
     """The FULL batch-job body under the driver's oracle (r4 verdict #6):
-    resume anti-join against a pre-populated progress table + the two-pass
-    giants split + idempotent partitioned commit, end to end through
-    ``jobs.extract_job.run_extract`` with real parquet writes.
+    resume anti-join against a pre-populated progress table + the giants
+    split (fanned out in the same write) + idempotent partitioned commit,
+    end to end through ``jobs.extract_job.run_extract`` with real parquet
+    writes.
 
     Deterministic setup so every piece is SQL-derivable:
       * progress is seeded with doc_id % 5 == 0 marked done (batch 1) —
@@ -694,7 +695,7 @@ def q_giants_resume(spark, sf_dir):
       * giants are classified by a synthetic ``pad`` size column
         (9 chars iff doc_id % 11 == 0, threshold 5) — ``extract_pages``
         prunes it before the kernel, and the committed ``pass`` partition
-        column records which pass extracted each page, so the small/giant
+        column records which branch extracted each page, so the small/giant
         routing is value-checked, not just plan-checked;
       * extraction itself is the grid4 generic pipeline, so n_rows/csv_md5
         reuse the same oracle algebra as ``extract_grid4``.

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import csv
 import io
+import math
 import re
 from typing import List, Optional, Sequence
 
@@ -46,7 +47,9 @@ def empty_csv_bytes() -> bytes:
 
 
 def to_number(s: Optional[str]) -> str:
-    """exporters.py:16-34 verbatim semantics (incl. the ')' quirk)."""
+    """exporters.py:16-34 verbatim semantics (incl. the ')' quirk), except
+    that a value overflowing a float keeps its original text, as a
+    non-numeric one does, where the reference raises ``OverflowError``."""
     if s is None:
         return ""
     s = s.strip()
@@ -62,6 +65,8 @@ def to_number(s: Optional[str]) -> str:
         val = float(stripped)
     except Exception:
         return s  # e.g. "(57,519)" -> "57519)" -> ValueError -> original
+    if not math.isfinite(val):
+        return s  # e.g. 309+ digits -> inf; int(inf) would raise OverflowError
     if neg:
         val = -val
     if abs(val - int(val)) < 1e-9:

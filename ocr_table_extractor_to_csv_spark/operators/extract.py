@@ -12,8 +12,12 @@ Scale design:
   * parquet/Iceberg scans split by BYTES (maxPartitionBytes), which is
     already size-aware partitioning for a bytes-proportional kernel — do NOT
     add a blanket repartition (a full shuffle of the html payload costs ~30%
-    end to end; measured).  The pathological tail gets its own pass via
-    plans.partitioning.isolate_giants (see jobs/extract_job.run_extract);
+    end to end; measured).  The pathological tail is split off by
+    plans.partitioning.isolate_giants and fanned out over the cores in the
+    same write (see jobs/extract_job.run_extract);
+  * worker memory: the session bounds every Arrow batch by bytes as well as
+    rows (session.DEFAULT_CONF), so giant pages arrive a few per batch
+    without a separate batch-size setting;
   * per-row try/except: a malformed document yields an ``error`` row, never
     a task failure (at 10^12 docs, something is always malformed);
   * lineage columns (partition_id, task_attempt) are stamped in-kernel via

@@ -67,8 +67,9 @@ def _sample_frames(payload: bytes, k: int) -> tuple[List[int], List[int]]:
 def media_features(media: DataFrame, kind_col: str = "kind") -> DataFrame:
     """media(media_id, kind, payload BINARY) -> feature rows.
 
-    One mapInArrow stage; batches are bounded by Arrow maxRecordsPerBatch —
-    size media partitions with plans.partitioning just like html pages.
+    One mapInArrow stage; the session bounds its Arrow batches by rows and
+    by bytes (session.DEFAULT_CONF), so large payloads arrive a few per
+    batch just like giant html pages.
     """
 
     def fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

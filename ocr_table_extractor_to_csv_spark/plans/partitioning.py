@@ -4,9 +4,11 @@ Why this exists (SURVEY.md §4.2): AQE's skew handling only rebalances
 shuffle JOINS — a ``mapInArrow`` stage inherits the scan's partitioning, so
 a handful of 50 MB pages can stall single tasks while the other cores idle.
 
-* ``isolate_giants`` splits the pathological tail into its own pass, which
-  ``jobs/extract_job.run_extract`` runs with its own Arrow batch size while
-  the main pass keeps the scan's byte-proportional splits (no shuffle).
+* ``isolate_giants`` splits off the pathological tail, which
+  ``jobs/extract_job.run_extract`` fans out over the cores in the same
+  write that extracts the rest in the scan's byte-proportional splits (no
+  shuffle of the small pages).  Worker memory needs no per-tail setting:
+  the session bounds every Arrow batch by bytes as well as rows.
 * ``fan_out`` round-robins a frame that arrives in too few partitions (the
   giant tail, a single-file table) over the default parallelism.
 
@@ -29,7 +31,7 @@ def fan_out(df: DataFrame) -> DataFrame:
 def isolate_giants(
     pages: DataFrame, giant_threshold_bytes: int = 8 * 1024 * 1024, size_col: str = "html"
 ) -> tuple[DataFrame, DataFrame]:
-    """Split the pathological tail into its own pass."""
+    """Split ``pages`` into (small, giant) by the length of ``size_col``."""
     size = F.length(F.col(size_col))
     return (
         pages.where(size < giant_threshold_bytes),

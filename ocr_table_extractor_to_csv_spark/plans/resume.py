@@ -39,19 +39,13 @@ def pending_pages(pages: DataFrame, progress: DataFrame | None) -> DataFrame:
     return pages.join(done, "url", "left_anti")
 
 
-def write_batch(
-    extracted: DataFrame,
-    batch_id: int,
-    extracted_path: str,
-    sub: str = "all",
-) -> None:
-    """Idempotently (re)write ONE pass of a batch.
+def write_batch(extracted: DataFrame, batch_id: int, extracted_path: str) -> None:
+    """Idempotently (re)write a batch.
 
-    Dynamic partition overwrite on ``(batch_id, pass)`` replaces exactly this
-    pass's partition on a re-run, which lets the small-doc and giant-doc
-    passes commit as SEPARATE actions — each executing under its own Arrow
-    batch-size conf (the r01 giants-conf leak fix) — without a re-run ever
-    duplicating rows of either pass.
+    ``extracted`` carries a ``pass`` column (``small``/``giant``, see
+    ``jobs/extract_job.run_extract``).  Dynamic partition overwrite on
+    ``(batch_id, pass)`` replaces exactly the partitions this write fills,
+    so a re-run of the batch never duplicates rows of either pass.
 
     Layout note: ``extracted_path`` is partitioned (batch_id, pass); a
     directory written by a pre-``pass`` version of this engine has a
@@ -59,11 +53,9 @@ def write_batch(
     fresh root (Spark fails loudly with "conflicting directory structures"
     otherwise).
     """
-    stamped = extracted.withColumn("batch_id", F.lit(batch_id)).withColumn(
-        "pass", F.lit(sub)
-    )
     (
-        stamped.write.mode("overwrite")
+        extracted.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id", "pass")
         .parquet(extracted_path)

@@ -1,10 +1,10 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Tuned for a pages table whose ``html`` BINARY column is MB-scale: small
-Arrow batches bound Python-worker memory (the real spill control for a
-map-only kernel stage), AQE coalesces post-shuffle partitions, and shuffle
-partition count matches local cores (overridden on a real cluster via
-spark-submit conf).
+Tuned for a pages table whose ``html`` BINARY column is MB-scale: Arrow
+batches bounded in rows and in bytes bound Python-worker memory (the real
+spill control for a map-only kernel stage), AQE coalesces post-shuffle
+partitions, and shuffle partition count matches local cores (overridden on
+a real cluster via spark-submit conf).
 
 ``worker_batches`` wraps every Python batch function a ``mapInArrow`` /
 ``mapInPandas`` stage runs.
@@ -24,11 +24,12 @@ DEFAULT_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # bounds per-worker memory (rows x avg doc size per batch); 256 measured
-    # ~20% faster than 64 on ~3-100KB pages. Giant pages must NOT go through
-    # this default — run_extract (jobs/extract_job.py) extracts the giants
-    # isolate_giants splits off with maxRecordsPerBatch=4.
+    # an Arrow batch closes at whichever limit it reaches first, so it holds
+    # at most 256 rows and 32 MiB plus one document: per-worker memory stays
+    # bounded in the same write for ~3-100KB pages (256 rows, measured ~20%
+    # faster than 64) and for giant pages (8 MiB ones arrive ~4 per batch).
     "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(32 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.selfDestruct.enabled": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.parquet.compression.codec": "zstd",

@@ -52,6 +52,9 @@ def test_to_number_table():
         "-5": "-5",
         None: "",
         "  42  ": "42",
+        # float() overflows to +-inf: the original text survives
+        "9" * 309: "9" * 309,
+        "-" + "9" * 400: "-" + "9" * 400,
     }
     for raw, want in cases.items():
         assert to_number(raw) == want, (raw, to_number(raw), want)

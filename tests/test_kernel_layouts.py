@@ -330,6 +330,19 @@ def test_weird_numbers_numeric_csv_bytes():
     assert res.csv_numeric == b"\xef\xbb\xbf" + exp_num.encode()
 
 
+def test_dynamic_float_overflow_keeps_raw_digits():
+    """A cell of 309+ digits overflows float() to inf: the numeric variant
+    keeps the raw text and the document still extracts (no error row)."""
+    big = "9" * 309
+    words = []
+    for i, (lab, toks) in enumerate((("aa", ["12"]), ("bb", [big]), ("cc", ["34"]))):
+        words += _leader_words(lab, 100 + 56 * i, toks, 1210 - 8)
+    res = extract_document(_doc(words), layout="dynamic")
+    assert res.error is None
+    assert res.n_rows == 3
+    assert big.encode() in res.csv_numeric
+
+
 def test_multipage_rows_merge_across_pages_bytes():
     """Multipage end-to-end: the row profile is GLOBAL over y (rows.py:8-80
     has no page term), so records from different pages sharing a y-band

@@ -6,12 +6,14 @@ import hashlib
 import json
 from pathlib import Path
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
 from ocr_table_extractor_to_csv_spark.plans.lineage import build_manifests
 from ocr_table_extractor_to_csv_spark.plans.resume import pending_pages, read_progress
+from ocr_table_extractor_to_csv_spark.session import DEFAULT_CONF
 from ocr_table_extractor_to_csv_spark.sources.pages import fixture_pages
 
 GOLDEN = Path(__file__).parent / "goldens" / "fixture_manifest.json"
@@ -57,25 +59,52 @@ def test_partitioning_is_content_neutral(spark, pages):
 
 
 def test_arrow_batch_size_is_content_neutral(spark, pages):
-    """The kernel must be stateless across Arrow batch boundaries: running
-    the giants-pass batch size (4) over the whole corpus yields byte-
-    identical output to the default (256) — the invariant that makes the
-    two-pass small/giant split safe."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    """The kernel must be stateless across Arrow batch boundaries: batches
+    cut at 4 rows or at 64 KiB yield byte-identical output to the session
+    defaults — the invariant that lets the session bound batches by rows
+    and by bytes, with giants and small pages in one write."""
     base = {
         r.url: sha(bytes(r.csv))
         for r in extract_pages(pages, per_row_dispatch=True).collect()
     }
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try:
-        tiny = {
-            r.url: sha(bytes(r.csv))
-            for r in extract_pages(pages, per_row_dispatch=True).collect()
-        }
-    finally:
-        spark.conf.set(key, prev)
-    assert tiny == base
+    for key, value in (
+        ("spark.sql.execution.arrow.maxRecordsPerBatch", "4"),
+        ("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024)),
+    ):
+        prev = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            tiny = {
+                r.url: sha(bytes(r.csv))
+                for r in extract_pages(pages, per_row_dispatch=True).collect()
+            }
+        finally:
+            spark.conf.set(key, prev)
+        assert tiny == base, key
+
+
+def test_arrow_batches_are_bounded_by_bytes(spark):
+    """Under the session defaults a ``mapInArrow`` batch of large rows
+    closes at the byte cap plus one row, long before the 256-row limit."""
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    cap = int(DEFAULT_CONF[key])
+    assert int(spark.conf.get(key)) == cap
+    row_bytes, n = 3 * 1024 * 1024, 40
+
+    def sizes(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [b.num_rows], "bytes": [b.column(0).nbytes]}
+            )
+
+    big = spark.range(0, n, numPartitions=1).select(
+        F.repeat(F.lit("x"), row_bytes).alias("payload")
+    )
+    got = big.mapInArrow(sizes, "rows long, bytes long").collect()
+    assert sum(r.rows for r in got) == n
+    assert len(got) > 1
+    for r in got:
+        assert r.rows * row_bytes <= cap + row_bytes, (r.rows, r.bytes)
 
 
 def test_malformed_rows_become_error_rows(spark):
@@ -143,33 +172,36 @@ def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path, monkeypa
     assert pending_pages(base, progress).count() == 0
 
 
-def test_giant_pass_conf_isolated(spark, tmp_path, monkeypatch):
-    """r01 verdict #2: the giant pass's maxRecordsPerBatch=4 must NOT leak
-    into the small pass (the old lazy-union ran both passes at 4), and the
-    session conf must be restored afterwards."""
+def test_one_write_commits_both_passes(spark, tmp_path, monkeypatch):
+    """``run_extract`` commits small pages and fanned-out giants in ONE
+    write action, touches no session conf, and routes every giant to
+    ``pass=giant``."""
     import jobs.extract_job as ej
 
     pages = fixture_pages(spark, scale=0.2, giant_tokens=3000).select(
         "url", "html", "layout", "args"
     )
-    seen = []
+    threshold = 50_000
+    giants = {
+        r.url for r in pages.where(F.length("html") >= threshold).select("url").collect()
+    }
+    assert giants, "fixture giants must exercise the giant branch"
+    calls = []
     real = ej.write_batch
 
-    def spy(extracted, batch_id, path, sub="all"):
-        seen.append(
-            (
-                sub,
-                extracted.sparkSession.conf.get(
-                    "spark.sql.execution.arrow.maxRecordsPerBatch"
-                ),
-            )
-        )
-        real(extracted, batch_id, path, sub=sub)
+    def spy(*args, **kwargs):
+        calls.append(args)
+        real(*args, **kwargs)
 
     monkeypatch.setattr(ej, "write_batch", spy)
     overwrite_key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.unset(overwrite_key)
-    overwrite_mode = spark.conf.get(overwrite_key)
+    keys = [
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.execution.arrow.maxBytesPerBatch",
+        overwrite_key,
+    ]
+    before = {k: spark.conf.get(k) for k in keys}
     committed = ej.run_extract(
         spark,
         pages,
@@ -177,20 +209,13 @@ def test_giant_pass_conf_isolated(spark, tmp_path, monkeypatch):
         progress_path=str(tmp_path / "prog"),
         batch_id=0,
         per_row_dispatch=True,
-        giant_threshold=50_000,
+        giant_threshold=threshold,
     )
-    confs = dict(seen)
-    assert confs["small"] == "256", "small pass must run at the fast batch size"
-    assert confs["giant"] == "4", "giant pass must run memory-bounded"
-    assert (
-        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "256"
-    ), "conf must be restored"
-    assert (
-        spark.conf.get(overwrite_key) == overwrite_mode
-    ), "the dynamic overwrite is a write option, not a session setting"
-    by_pass = {r["pass"]: r["n"] for r in committed.groupBy("pass").agg(F.count("*").alias("n")).collect()}
-    assert by_pass.get("giant", 0) >= 1, "fixture giants must exercise the giant pass"
-    assert committed.select("url").distinct().count() == pages.count()
+    assert len(calls) == 1, "one write action per batch"
+    assert {k: spark.conf.get(k) for k in keys} == before
+    rows = committed.select("url", "pass").collect()
+    assert {r.url for r in rows if r["pass"] == "giant"} == giants
+    assert len(rows) == len({r.url for r in rows}) == pages.count()
 
 
 def test_lineage_manifest_accounts_for_all_rows(spark, pages):
