@@ -108,7 +108,10 @@ def _events_f(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Extraction queries
+# Extraction queries: pages synthesized from documents.text (one builder per
+# kind in sources/pages.py KINDS, each with the reason its extraction is
+# derivable) run through the real extraction pipeline; every oracle
+# recomputes the CSV text in SQL from the same tokens.
 # ---------------------------------------------------------------------------
 
 
@@ -117,23 +120,32 @@ def _strip_bom_text(col):
     return F.expr(f"substring(decode({col}, 'UTF-8'), 2)")
 
 
-def q_extract_grid4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = pages_from_documents(_docs(spark, sf_dir))
-    ext = extract_pages(pages.select(F.col("doc_id"), "url", "html"), layout="generic")
-    return (
-        ext.withColumn("doc_id", F.split(F.col("url"), "://")[1].cast("long"))
-        .select(
-            "doc_id",
-            F.col("n_rows"),
-            F.col("n_cols"),
-            F.md5(_strip_bom_text("csv")).alias("csv_md5"),
-            F.md5(F.col("main_text")).alias("text_md5"),
-        )
+def _extract_kinds(docs: DataFrame, kinds: list[str]) -> DataFrame:
+    """The synthesized pages of ``kinds`` through one per-row-dispatch
+    extraction, keyed by the url's (doc_id, variant), with md5s of the CSV,
+    the numeric CSV and the main text."""
+    url = F.split(F.col("url"), "://")
+    ext = extract_pages(pages_from_documents(docs, kinds), per_row_dispatch=True)
+    return ext.select(
+        url[1].cast("long").alias("doc_id"),
+        url[0].alias("variant"),
+        "layout",
+        "n_rows",
+        "n_cols",
+        F.md5(_strip_bom_text("csv")).alias("csv_md5"),
+        F.md5(_strip_bom_text("csv_numeric")).alias("num_md5"),
+        F.md5(F.col("main_text")).alias("text_md5"),
     )
 
 
-ORACLE_GRID4 = """
-WITH toks AS (
+_EXTRACT_COLS = ("doc_id", "n_rows", "n_cols", "csv_md5", "text_md5")
+
+
+def q_extract_grid4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _extract_kinds(_docs(spark, sf_dir), ["doc"]).select(*_EXTRACT_COLS)
+
+
+_TOKS_GRID_SQL = """
   SELECT doc_id,
          CASE WHEN trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) = ''
               THEN []::VARCHAR[]
@@ -142,7 +154,11 @@ WITH toks AS (
                      t -> t[1:12])
          END AS ts
   FROM documents
-), ok AS (
+"""
+
+
+ORACLE_GRID4 = f"""
+WITH toks AS ({_TOKS_GRID_SQL}), ok AS (
   SELECT doc_id, ts, CAST(len(ts) // 4 AS BIGINT) AS nrows
   FROM toks WHERE len(ts) >= 4
 ), lines AS (
@@ -165,32 +181,8 @@ FROM agg
 """
 
 
-_TOKS_GRID_SQL = """
-  SELECT doc_id,
-         CASE WHEN trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) = ''
-              THEN []::VARCHAR[]
-              ELSE list_transform(
-                     string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t[1:12])
-         END AS ts
-  FROM documents
-"""
-
-
 def q_extract_fin_grid(spark, sf_dir):
-    """Financial layout end-to-end with a full SQL oracle: pages synthesized
-    so every line carries (label, v1, v2) spans with deterministic values."""
-    from ocr_table_extractor_to_csv_spark.sources.pages import fin_pages_from_documents
-
-    pages = fin_pages_from_documents(_docs(spark, sf_dir))
-    ext = extract_pages(pages.select("url", "html"), layout="financial")
-    return ext.withColumn("doc_id", F.split(F.col("url"), "://")[1].cast("long")).select(
-        "doc_id",
-        "n_rows",
-        "n_cols",
-        F.md5(_strip_bom_text("csv")).alias("csv_md5"),
-        F.md5(F.col("main_text")).alias("text_md5"),
-    )
+    return _extract_kinds(_docs(spark, sf_dir), ["fin"]).select(*_EXTRACT_COLS)
 
 
 ORACLE_FIN_GRID = f"""
@@ -220,24 +212,10 @@ FROM agg
 
 
 def q_extract_dyn_grid(spark, sf_dir):
-    """Dynamic layout end-to-end with a full SQL oracle: dot-leader pages
-    whose column inference, year naming, and cell assignment are exactly
-    derivable (see sources/pages.py:dyn_hocr)."""
-    from ocr_table_extractor_to_csv_spark.sources.pages import dyn_pages_from_documents
-
-    pages = dyn_pages_from_documents(_docs(spark, sf_dir))
-    ext = extract_pages(pages.select("url", "html"), layout="dynamic")
-    return ext.withColumn("doc_id", F.split(F.col("url"), "://")[1].cast("long")).select(
-        "doc_id",
-        "n_rows",
-        "n_cols",
-        F.md5(_strip_bom_text("csv")).alias("csv_md5"),
-        F.md5(F.expr("substring(decode(csv_numeric, 'UTF-8'), 2)")).alias("num_md5"),
-        F.md5(F.col("main_text")).alias("text_md5"),
-    )
+    return _extract_kinds(_docs(spark, sf_dir), ["dyn"]).select(*_EXTRACT_COLS, "num_md5")
 
 
-# dots(label_len) = ((746 - 8*label_len) // 14) + 1 (pages.py:dyn_leader_count)
+# dots(label_len) = ((746 - 8*label_len) // 14) + 1 (sources/pages.py:_dyn_line)
 ORACLE_DYN_GRID = f"""
 WITH toks AS ({_TOKS_GRID_SQL}),
 ok AS (
@@ -275,7 +253,7 @@ def q_dataset_grid(spark, sf_dir):
     header are independently derivable in SQL from documents.text."""
     from ocr_table_extractor_to_csv_spark.operators.dataset import build_examples
 
-    pages = pages_from_documents(_docs(spark, sf_dir))
+    pages = pages_from_documents(_docs(spark, sf_dir), ["doc"])
     ex = build_examples(pages.select("doc_id", "url", "html"))
     return ex.where(F.col("error").isNull()).select(
         F.split(F.col("url"), "://")[1].cast("long").alias("doc_id"),
@@ -286,17 +264,8 @@ def q_dataset_grid(spark, sf_dir):
     )
 
 
-ORACLE_DATASET_GRID = """
-WITH toks AS (
-  SELECT doc_id,
-         CASE WHEN trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) = ''
-              THEN []::VARCHAR[]
-              ELSE list_transform(
-                     string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t[1:12])
-         END AS ts
-  FROM documents
-), ok AS (
+ORACLE_DATASET_GRID = f"""
+WITH toks AS ({_TOKS_GRID_SQL}), ok AS (
   SELECT doc_id, ts, CAST((len(ts) // 4) * 4 AS INT) AS n FROM toks WHERE len(ts) >= 4
 )
 SELECT doc_id,
@@ -313,23 +282,9 @@ FROM ok
 
 
 def q_extract_fixture_professional(spark, sf_dir):
-    """Professional layout end-to-end with a full SQL oracle: uniform-indent
-    (label, v1, v2) rows synthesized from documents.text so the chained
-    x-interval grid, (empty) hierarchy stack, and first-row header selection
-    are exactly derivable (see sources/pages.py:pro_hocr).  The fixture
-    corpus's professional family (indent hierarchy + header-last bug) stays
-    byte-pinned in pytest (tests/test_kernel_properties.py, golden `pro`)."""
-    from ocr_table_extractor_to_csv_spark.sources.pages import pro_pages_from_documents
-
-    pages = pro_pages_from_documents(_docs(spark, sf_dir))
-    ext = extract_pages(pages.select("url", "html"), layout="professional")
-    return ext.withColumn("doc_id", F.split(F.col("url"), "://")[1].cast("long")).select(
-        "doc_id",
-        "n_rows",
-        "n_cols",
-        F.md5(_strip_bom_text("csv")).alias("csv_md5"),
-        F.md5(F.col("main_text")).alias("text_md5"),
-    )
+    """The fixture corpus's professional family (indent hierarchy +
+    header-last bug) stays byte-pinned in pytest (golden `pro`)."""
+    return _extract_kinds(_docs(spark, sf_dir), ["pro"]).select(*_EXTRACT_COLS)
 
 
 ORACLE_PRO_GRID = f"""
@@ -359,21 +314,7 @@ FROM agg
 
 
 def q_extract_fixture_boiler(spark, sf_dir):
-    """Boilerplate-strip + <table> reconstruction end-to-end with a full SQL
-    oracle: regular HTML pages synthesized from documents.text (nav/footer
-    junk, 8-token <p> chunks kept iff >= 25 chars, a c0,c1 token table) —
-    see sources/pages.py:boiler_html."""
-    from ocr_table_extractor_to_csv_spark.sources.pages import boiler_pages_from_documents
-
-    pages = boiler_pages_from_documents(_docs(spark, sf_dir))
-    ext = extract_pages(pages.select("url", "html"), layout="auto")
-    return ext.withColumn("doc_id", F.split(F.col("url"), "://")[1].cast("long")).select(
-        "doc_id",
-        "n_rows",
-        "n_cols",
-        F.md5(_strip_bom_text("csv")).alias("csv_md5"),
-        F.md5(F.col("main_text")).alias("text_md5"),
-    )
+    return _extract_kinds(_docs(spark, sf_dir), ["boiler"]).select(*_EXTRACT_COLS)
 
 
 ORACLE_BOILER = f"""
@@ -407,22 +348,12 @@ FROM mt JOIN tbl ON tbl.doc_id = mt.doc_id
 
 
 def q_extract_mixed_dispatch(spark, sf_dir):
-    """Per-row layout dispatch end-to-end with a full SQL oracle: one
-    extract_pages(per_row_dispatch=True) call over a UNION of generic /
-    financial / dynamic / professional synthesized pages (sampled
-    doc_id % 7 == 0), each row carrying its own layout column — the Spark
-    analogue of the reference CLI's per-invocation --layout flag."""
-    from ocr_table_extractor_to_csv_spark.sources.pages import mixed_pages_from_documents
-
+    """Per-row layout dispatch: generic / financial / dynamic / professional
+    pages of the doc_id % 7 == 0 sample, from one documents scan, through
+    one extraction where each row carries its own layout."""
     docs = _docs(spark, sf_dir).where(F.pmod(F.col("doc_id"), F.lit(7)) == 0)
-    pages = mixed_pages_from_documents(docs)  # one documents scan, 4 families
-    ext = extract_pages(pages.select("url", "html", "layout", "args"), per_row_dispatch=True)
-    return ext.withColumn("doc_id", F.split(F.col("url"), "://")[1].cast("long")).select(
-        "doc_id",
-        "layout",
-        "n_rows",
-        "n_cols",
-        F.md5(_strip_bom_text("csv")).alias("csv_md5"),
+    return _extract_kinds(docs, ["doc", "fin", "dyn", "pro"]).select(
+        "doc_id", "layout", "n_rows", "n_cols", "csv_md5"
     )
 
 
@@ -446,48 +377,16 @@ def _oracle_mixed_dispatch() -> str:
 
 
 def q_extract_transformers(spark, sf_dir):
-    """The reference's 4th CLI layout (transformers) through its non-model
-    heuristic reconstruction (layout_transformers.py:516-537) end-to-end:
-    on the synthesized grid pages with expected_n_cols=4 the heuristic path
-    is exactly the generic derivation (the body cell strip is a no-op on
-    single alnum tokens), so ORACLE_GRID4 value-checks the whole layout
-    dispatch; the fallback cascade (spatial grid) stays pytest-pinned."""
-    pages = pages_from_documents(_docs(spark, sf_dir))
-    ext = extract_pages(
-        pages.select("url", "html"), layout="transformers", args={"expected_n_cols": 4}
-    )
-    return (
-        ext.withColumn("doc_id", F.split(F.col("url"), "://")[1].cast("long"))
-        .select(
-            "doc_id",
-            F.col("n_rows"),
-            F.col("n_cols"),
-            F.md5(_strip_bom_text("csv")).alias("csv_md5"),
-            F.md5(F.col("main_text")).alias("text_md5"),
-        )
-    )
+    """The transformers layout's heuristic path, value-checked by
+    ORACLE_GRID4; the fallback cascade (spatial grid) stays pytest-pinned."""
+    return _extract_kinds(_docs(spark, sf_dir), ["tf"]).select(*_EXTRACT_COLS)
 
 
 def q_extract_args_dispatch(spark, sf_dir):
-    """Per-row ARGS dispatch end-to-end with a full SQL oracle: one
-    extract_pages(per_row_dispatch=True) call where every row carries its
-    own extraction kwargs — table_bbox crop, header_regexes selection, and
-    expected_n_cols coercion — over pages engineered so each arg's effect
-    is exactly derivable from documents.text (sources/pages.py:crop_hocr/
-    hdr_hocr/cols_hocr).  Closes the r2 verdict's last no_oracle gap: the
-    dispatch args the retired extract_fixture_* rows-only queries exercised
-    are now value-checked (the fixture corpus itself stays byte-pinned in
-    pytest goldens)."""
-    from ocr_table_extractor_to_csv_spark.sources.pages import args_pages_from_documents
-
-    pages = args_pages_from_documents(_docs(spark, sf_dir))
-    ext = extract_pages(pages.select("url", "html", "layout", "args"), per_row_dispatch=True)
-    return ext.select(
-        F.split(F.col("url"), "://")[1].cast("long").alias("doc_id"),
-        F.split(F.col("url"), "://")[0].alias("variant"),
-        "n_rows",
-        "n_cols",
-        F.md5(_strip_bom_text("csv")).alias("csv_md5"),
+    """Per-row ARGS dispatch: table_bbox crop, header_regexes selection and
+    expected_n_cols coercion, one variant per row, from one documents scan."""
+    return _extract_kinds(_docs(spark, sf_dir), ["crop", "hdr", "cols"]).select(
+        "doc_id", "variant", "n_rows", "n_cols", "csv_md5"
     )
 
 
@@ -538,41 +437,38 @@ _TOKS_SQL = (
 )
 
 
-def _warc_fixture_dir(spark, sf_dir: str) -> str:
-    """Synthesize (once per sf, idempotent via the _COMPLETE marker) a
-    gzip-member-per-record WARC corpus from ``documents`` — 8 segments,
-    request records interleaved, bodies = utf-8 text behind an HTTP header
-    block.  Driver-side generation is bounded fixture scaffolding; the
-    operator under test (read_warc) is the scale path."""
+def _sf_scratch_dir(sf_dir: str, name: str) -> str:
+    """``/tmp/ocrx_<name>_<sf basename>_<digest>``, keyed on the FULL path
+    plus the documents parquet's identity (mtime/size): two corpora sharing
+    a basename, or a corpus regenerated at the same path, never reuse a
+    stale fixture or output (an oracle would then compare fresh md5s
+    against old bytes)."""
     import hashlib
     import os
 
-    # key the cache on the FULL path + the documents parquet's identity
-    # (mtime/size), not just the basename: two corpora sharing a basename,
-    # or a regenerated corpus at the same path, must not silently reuse a
-    # stale fixture (the oracle would then compare fresh md5s against old
-    # WARC bytes)
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    doc_path = os.path.join(sf_dir, "documents.parquet")
     try:
-        st = os.stat(doc_path)
+        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
         ident = f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}"
     except OSError:
         ident = os.path.abspath(sf_dir)
-    digest = hashlib.md5(ident.encode()).hexdigest()[:10]
-    d = f"/tmp/ocrx_warc_fixture_{tag}_{digest}"
-    if not os.path.exists(os.path.join(d, "_COMPLETE")):
-        from ocr_table_extractor_to_csv_spark.sources.warc import write_warc_segments
+    return f"/tmp/ocrx_{name}_{tag}_{hashlib.md5(ident.encode()).hexdigest()[:10]}"
 
+
+def _segments_fixture_dir(spark, sf_dir: str, name: str, write, body) -> str:
+    """Synthesize (once per corpus, idempotent via the _COMPLETE marker)
+    gzip-member segments from ``documents`` with ``write``: one record per
+    document in doc_id order, url ``https://docs.example/<doc_id>``,
+    payload ``body(text)``.  Writing the fixture from one process is
+    bounded scaffolding; the reader under test is the scale path."""
+    import os
+
+    d = _sf_scratch_dir(sf_dir, name)
+    if not os.path.exists(os.path.join(d, "_COMPLETE")):
         rows = _docs(spark, sf_dir).select("doc_id", "text").collect()
-        write_warc_segments(
+        write(
             (
-                (
-                    r.doc_id,
-                    f"https://docs.example/{r.doc_id}",
-                    "2025-01-01T00:00:00Z",
-                    r.text.encode("utf-8"),
-                )
+                (r.doc_id, f"https://docs.example/{r.doc_id}", "2025-01-01T00:00:00Z", body(r.text))
                 for r in sorted(rows, key=lambda r: r.doc_id)
             ),
             d,
@@ -586,9 +482,12 @@ def q_warc_roundtrip(spark, sf_dir):
     oracle-checked at the value level against the documents the segments
     were synthesized from (r3 verdict #4: the newest parser gets the same
     evidence class as every other surface)."""
-    from ocr_table_extractor_to_csv_spark.sources.warc import read_warc
+    from ocr_table_extractor_to_csv_spark.sources.warc import read_warc, write_warc_segments
 
-    pages = read_warc(spark, _warc_fixture_dir(spark, sf_dir))
+    d = _segments_fixture_dir(
+        spark, sf_dir, "warc_fixture", write_warc_segments, lambda text: text.encode("utf-8")
+    )
+    pages = read_warc(spark, d)
     return pages.where(F.col("error").isNull()).select(
         "url",
         F.md5(F.col("html")).alias("html_md5"),
@@ -604,50 +503,15 @@ FROM documents
 """
 
 
-def _wet_fixture_dir(spark, sf_dir: str) -> str:
-    """WET twin of _warc_fixture_dir: synthesize (idempotent, identity-
-    keyed cache) gzip-member WET segments from ``documents`` — 8 segments,
-    a warcinfo member heading each segment, conversion members carrying
-    the raw utf-8 text (no HTTP framing)."""
-    import hashlib
-    import os
-
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(doc_path)
-        ident = f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        ident = os.path.abspath(sf_dir)
-    digest = hashlib.md5(ident.encode()).hexdigest()[:10]
-    d = f"/tmp/ocrx_wet_fixture_{tag}_{digest}"
-    if not os.path.exists(os.path.join(d, "_COMPLETE")):
-        from ocr_table_extractor_to_csv_spark.sources.warc import write_wet_segments
-
-        rows = _docs(spark, sf_dir).select("doc_id", "text").collect()
-        write_wet_segments(
-            (
-                (
-                    r.doc_id,
-                    f"https://docs.example/{r.doc_id}",
-                    "2025-01-01T00:00:00Z",
-                    r.text,
-                )
-                for r in sorted(rows, key=lambda r: r.doc_id)
-            ),
-            d,
-        )
-    return d
-
-
 def q_wet_roundtrip(spark, sf_dir):
     """WET source end to end: gzip-member extracted-text segments ->
     record splitter (length framing, warcinfo skip, conversion decode) ->
     (url, text) — value-checked against the documents the segments were
     synthesized from (same evidence class as warc_roundtrip)."""
-    from ocr_table_extractor_to_csv_spark.sources.warc import read_wet
+    from ocr_table_extractor_to_csv_spark.sources.warc import read_wet, write_wet_segments
 
-    pages = read_wet(spark, _wet_fixture_dir(spark, sf_dir))
+    d = _segments_fixture_dir(spark, sf_dir, "wet_fixture", write_wet_segments, lambda text: text)
+    pages = read_wet(spark, d)
     return pages.where(F.col("error").isNull()).select(
         "url",
         F.md5(F.col("text")).alias("text_md5"),
@@ -661,24 +525,6 @@ SELECT 'https://docs.example/' || CAST(doc_id AS VARCHAR) AS url,
        CAST(length(text) AS BIGINT) AS n_chars
 FROM documents
 """
-
-
-def _giants_resume_dir(sf_dir: str) -> str:
-    """Stable per-sf scratch root for the giants_resume job run (same
-    identity keying as the WARC fixture dir: full path + documents parquet
-    mtime/size, so a regenerated corpus never reuses stale output)."""
-    import hashlib
-    import os
-
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(doc_path)
-        ident = f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        ident = os.path.abspath(sf_dir)
-    digest = hashlib.md5(ident.encode()).hexdigest()[:10]
-    return f"/tmp/ocrx_giants_resume_v1_{tag}_{digest}"
 
 
 def q_giants_resume(spark, sf_dir):
@@ -706,14 +552,10 @@ def q_giants_resume(spark, sf_dir):
     """
     from jobs.extract_job import run_extract
 
-    root = _giants_resume_dir(sf_dir)
+    root = _sf_scratch_dir(sf_dir, "giants_resume_v1")
     out, prog = f"{root}/extracted", f"{root}/progress"
 
-    docs = _docs(spark, sf_dir)
-    pages = pages_from_documents(docs).withColumn(
-        "doc_id", F.split(F.col("url"), "://")[1].cast("long")
-    )
-    pages = pages.withColumn(
+    pages = pages_from_documents(_docs(spark, sf_dir), ["doc"]).withColumn(
         "pad",
         F.when(F.col("doc_id") % 11 == 0, F.lit("x" * 9)).otherwise(F.lit("")),
     )

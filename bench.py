@@ -85,7 +85,7 @@ def materialize_corpus(spark, sf_dir: str, path: str, fixture_scale: float, repl
     if not os.path.exists(marker):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         grid = (
-            pages_from_documents(docs)
+            pages_from_documents(docs, ["doc"])
             .crossJoin(spark.range(replicas).select(F.col("id").alias("rep")))
             .select(F.concat("url", F.lit("#"), F.col("rep")).alias("url"), "html")
         )

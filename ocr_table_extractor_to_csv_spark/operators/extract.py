@@ -32,7 +32,7 @@ Scale design:
 from __future__ import annotations
 
 import json
-from typing import Iterable, Iterator, Optional
+from typing import Iterable, Iterator, Optional, Union
 
 import pyarrow as pa
 
@@ -87,18 +87,25 @@ def _kernel_args(args: Optional[dict]) -> dict:
     return args
 
 
-def _parse_args(raw: Optional[str]) -> dict:
+def _parse_args(raw: Optional[str]) -> Union[dict, str]:
+    """A row's args JSON as kernel keyword arguments, or, when it is not a
+    usable JSON object, the ``args: ...`` message its error row carries."""
     if not raw:
         return {}
     try:
         args = json.loads(raw)
-    except (ValueError, TypeError):
-        return {}
-    return _kernel_args(args) if isinstance(args, dict) else {}
+        if not isinstance(args, dict):
+            raise TypeError(f"expected a JSON object, got {type(args).__name__}")
+        return _kernel_args(args)
+    except (ValueError, TypeError) as exc:
+        return f"args: {type(exc).__name__}: {exc}"
 
 
-def _extract_one(html: bytes, layout: Optional[str], args: dict) -> ExtractResult:
-    """One document; a kernel exception becomes the result's ``error``."""
+def _extract_one(html: bytes, layout: Optional[str], args: Union[dict, str]) -> ExtractResult:
+    """One document; unparseable args or a kernel exception becomes the
+    result's ``error``."""
+    if isinstance(args, str):
+        return ExtractResult(layout=str(layout), error=args)
     try:
         return extract_document(html, layout=layout or "auto", **args)
     except Exception as exc:

@@ -1,32 +1,27 @@
 """Deterministic page synthesis from the ``documents`` test table.
 
-``pages_from_documents`` lays each document's normalized tokens onto a
-4-column hOCR grid with geometry chosen so the generic-layout extraction is
-EXACTLY predictable from the token list alone:
+``KINDS`` is the one table of synthesized page kinds:
+``prefix -> (builder, min_tokens, layout, args_json)``.  Each builder lays a
+document's normalized tokens (``grid_tokens``) out so that extraction with
+the kind's layout and args is EXACTLY derivable from the token list alone;
+the comment above each builder says why.  A document is eligible for a kind
+when it has at least ``min_tokens`` tokens.
 
-  * tokens: ``re.sub('[^a-z0-9]+',' ', text.lower()).strip().split(' ')``,
-    each truncated to 12 chars; docs with < 4 tokens are skipped;
-  * token i sits at row ``i // 4``, column ``i % 4``; column anchors
-    ``(100, 500, 900, 1300)``; y = 100 + 56*row; box = 8px/char x 30px;
-  * gutters (>= 204 px) and row gaps (26 px) are far beyond the reference
-    thresholds (>5 px column gap, >2 px row gap), and every token center
-    falls inside its own column interval.
-
-Therefore the engine's generic extraction of these pages yields
-``header = tokens[0:4]`` and body row r = ``tokens[4r:4r+4]`` — a fact a SQL
-oracle (DuckDB) can recompute from ``documents.text`` directly, giving the
-driver an end-to-end value-level check of the whole Spark pipeline
-(CORRECTNESS gate), complementing the byte-identity pytest goldens.
-
-The same grid in SQL (oracle_sql in __spark_entry__.py) reconstructs the
-exact CSV text: rows joined by CRLF with a trailing CRLF, no quoting needed
-(tokens are lowercase alnum).
+``pages_from_documents(documents, kinds)`` renders every eligible
+(document, kind) pair in one fanned-out scan and one generator, emitting
+``(doc_id, url, html, layout, args)`` with url ``<prefix>://<doc_id>``.  The
+DuckDB oracles in ``__spark_entry__.py`` recompute each kind's CSV text from
+``documents.text`` and compare md5s, an end-to-end value check of the whole
+Spark pipeline next to the byte-identity pytest goldens.  CSV rows are
+joined by CRLF with a trailing CRLF; tokens are lowercase alnum, so no
+quoting is ever needed.
 """
 
 from __future__ import annotations
 
+import json
 import re
-from typing import Iterable, Iterator, List
+from typing import Iterable, Iterator, List, Sequence
 
 import pandas as pd
 
@@ -55,47 +50,90 @@ PAGES_SCHEMA = StructType(
         StructField("doc_id", LongType()),
         StructField("url", StringType()),
         StructField("html", BinaryType()),
+        StructField("layout", StringType()),
+        StructField("args", StringType()),
     ]
 )
 
 
 def grid_tokens(text: str) -> List[str]:
-    """The shared normalization spec (must match the SQL oracle verbatim)."""
+    """The shared normalization spec (must match the SQL oracle verbatim):
+    lowercase, runs of non-alnum to one space, split, truncate to 12 chars."""
     norm = TOKEN_RE.sub(" ", (text or "").lower()).strip()
     if not norm:
         return []
     return [t[:MAX_TOKEN_LEN] for t in norm.split(" ")]
 
 
-def grid_hocr(tokens: List[str]) -> bytes:
-    n = (len(tokens) // 4) * 4
-    parts = [
+def _span(x1: int, y: int, x2: int, text: str) -> str:
+    return f'<span class="ocrx_word" title="bbox {x1} {y} {x2} {y + TOKEN_H}">{text}</span>'
+
+
+def _hocr_open() -> List[str]:
+    return [
         '<?xml version="1.0" encoding="UTF-8"?><html><body>'
         '<div class="ocr_page" title="image; bbox 0 0 1700 100000">'
     ]
-    for i in range(n):
-        r, c = divmod(i, 4)
-        x1 = ANCHORS[c]
-        y1 = Y0 + ROW_PITCH * r
-        t = tokens[i]
-        parts.append(
-            f'<span class="ocrx_word" title="bbox {x1} {y1} '
-            f"{x1 + CHAR_W * len(t)} {y1 + TOKEN_H}\">{t}</span>"
-        )
+
+
+def _hocr_close(parts: List[str]) -> bytes:
     parts.append("</div></body></html>")
     return "".join(parts).encode()
 
 
+def _grid_row(parts: List[str], toks, anchors, y: int) -> None:
+    for x1, t in zip(anchors, toks):
+        parts.append(_span(x1, y, x1 + CHAR_W * len(t), t))
+
+
+def _grid_rows(parts: List[str], tokens: List[str], first_row: int = 0) -> None:
+    for r in range(len(tokens) // 4):
+        _grid_row(parts, tokens[4 * r : 4 * r + 4], ANCHORS, Y0 + ROW_PITCH * (first_row + r))
+
+
 # ---------------------------------------------------------------------------
-# financial-grid synthesis: rows of (label, v1, v2) whose FINANCIAL-layout
-# extraction is exactly (header Cuenta,Valor_1,Valor_2; one row per token
-# triple).  Values are 1..999 (no thousands separators -> match the financial
-# numeric regex, no CSV quoting); labels are 'l'+token (never numeric).
-# All lines carry two numeric spans so merge_financial_rows never fuses rows
-# and postprocess is the identity.  v-formulas are mirrored in the SQL oracle.
+# generic grid (kinds doc, cols, tf): token i sits at row i // 4, column
+# i % 4 (a partial last row is dropped); column anchors (100, 500, 900,
+# 1300); y = 100 + 56*row; box = 8px/char x 30px.  Gutters (>= 204 px) and
+# row gaps (26 px) are far beyond the reference thresholds (>5 px column
+# gap, >2 px row gap), and every token center falls inside its own column
+# interval, so generic extraction yields header = tokens[0:4] and body row
+# r = tokens[4r:4r+4].
+#   cols: expected_n_cols=2.  Profile intervals split at ZERO-RUN MIDPOINTS,
+#     so adjacent intervals touch (every inter-interval gap is exactly 0) and
+#     coerce_interval_count's argmin-gap merge always picks the LEFTMOST pair
+#     (np.argmin first-tie, geometry.py): 4 columns fold to (0+1+2, 3)
+#     regardless of token widths, so each output row is 't0 t1 t2,t3'.
+#   tf: the transformers layout's non-model heuristic reconstruction with
+#     expected_n_cols=4 is exactly the generic derivation (the body cell
+#     strip is a no-op on single alnum tokens).
 # ---------------------------------------------------------------------------
 
-FIN_VX = (800, 1200)
+
+def grid_hocr(tokens: List[str]) -> bytes:
+    parts = _hocr_open()
+    _grid_rows(parts, tokens)
+    return _hocr_close(parts)
+
+
+# ---------------------------------------------------------------------------
+# label/value rows (kinds fin, pro): one line per token triple, a label from
+# the first token and two integer values from the other two tokens' lengths
+# (formulas mirrored in the SQL oracles), at x = 100, 800, 1200.
+#   fin: labels 'l'+token (never numeric); values 1..999 (no thousands
+#     separators -> match the financial numeric regex, no CSV quoting).
+#     Every line carries two numeric spans, so merge_financial_rows never
+#     fuses rows and postprocess is the identity: FINANCIAL extraction is
+#     header Cuenta,Valor_1,Valor_2 plus one row per triple.
+#   pro: labels 'lbl'+token (>= 4 chars = 32 px wide > the strict 25 px
+#     minimum); values always 4-digit, so each value column is 32 px wide.
+#     One y-group per row (pitch 56 >> tolerance 5), three chained
+#     x-projection intervals, no value-sparse rows (empty hierarchy stack),
+#     and the first row wins header selection: PROFESSIONAL csv = all k
+#     lines (row 0 doubling as header), body = rows 1..k-1.
+# ---------------------------------------------------------------------------
+
+VALUE_X = (800, 1200)
 
 
 def fin_value(tok_len: int, r: int, which: int) -> int:
@@ -104,136 +142,75 @@ def fin_value(tok_len: int, r: int, which: int) -> int:
     return (tok_len * 89 + r * 31) % 999 + 1
 
 
-def fin_hocr(tokens: List[str]) -> bytes:
-    k = len(tokens) // 3
-    parts = [
-        '<?xml version="1.0" encoding="UTF-8"?><html><body>'
-        '<div class="ocr_page" title="image; bbox 0 0 1700 100000">'
-    ]
-    for r in range(k):
-        y = Y0 + ROW_PITCH * r
-        lab = "l" + tokens[3 * r]
-        parts.append(
-            f'<span class="ocrx_word" title="bbox 100 {y} {100 + CHAR_W * len(lab)} {y + TOKEN_H}">{lab}</span>'
-        )
-        for which, vx in enumerate(FIN_VX):
-            v = fin_value(len(tokens[3 * r + 1 + which]), r, which)
-            s = str(v)
-            parts.append(
-                f'<span class="ocrx_word" title="bbox {vx} {y} {vx + CHAR_W * len(s)} {y + TOKEN_H}">{s}</span>'
-            )
-    parts.append("</div></body></html>")
-    return "".join(parts).encode()
-
-
-# ---------------------------------------------------------------------------
-# dynamic-grid synthesis: dot-leader lines with K=2 value columns whose
-# DYNAMIC-layout extraction is exactly derivable: >=39 leader dots per line
-# keep the per-line P95 gap at 10 (-> merge threshold 12), so the label+dots
-# form one span and each right-aligned value (center exactly on its anchor)
-# its own span; bucket medians land exactly on the anchors; a 'periodo'
-# year line (2021/2022) in the top band names the columns.
-# ---------------------------------------------------------------------------
-
-DYN_ANCHORS = (1210, 1540)
-DYN_LEADER_TO = DYN_ANCHORS[0] - 350  # 860
-DYN_DOT_W, DYN_DOT_STEP = 4, 14
-
-
-def dyn_leader_count(label_len: int) -> int:
-    """# of dots: x from 100+8*label_len+10 while x+4 <= 860 step 14
-    (mirrored in SQL)."""
-    start = 100 + CHAR_W * label_len + 10
-    if start + DYN_DOT_W > DYN_LEADER_TO:
-        return 0
-    return (DYN_LEADER_TO - DYN_DOT_W - start) // DYN_DOT_STEP + 1
-
-
-def _dyn_line(parts: List[str], label: str, values: List[str], y: int) -> None:
-    lx2 = 100 + CHAR_W * len(label)
-    parts.append(
-        f'<span class="ocrx_word" title="bbox 100 {y} {lx2} {y + TOKEN_H}">{label}</span>'
-    )
-    x = lx2 + 10
-    while x + DYN_DOT_W <= DYN_LEADER_TO:
-        parts.append(
-            f'<span class="ocrx_word" title="bbox {x} {y} {x + DYN_DOT_W} {y + TOKEN_H}">.</span>'
-        )
-        x += DYN_DOT_STEP
-    for anchor, s in zip(DYN_ANCHORS, values):
-        half = 4 * len(s)  # right/left symmetric: center exactly on anchor
-        parts.append(
-            f'<span class="ocrx_word" title="bbox {anchor - half} {y} {anchor + half} {y + TOKEN_H}">{s}</span>'
-        )
-
-
-DYN_MAX_ROWS = 12  # cap (mirrored in the SQL oracle): dot-leader docs are
-# ~55 tokens/line, so uncapped synthesis dominates the correctness query
-
-
-def dyn_hocr(tokens: List[str]) -> bytes:
-    k = min(len(tokens) // 3, DYN_MAX_ROWS)
-    parts = [
-        '<?xml version="1.0" encoding="UTF-8"?><html><body>'
-        '<div class="ocr_page" title="image; bbox 0 0 1700 100000">'
-    ]
-    _dyn_line(parts, "periodo", ["2021", "2022"], Y0)
-    for r in range(k):
-        y = Y0 + ROW_PITCH * (r + 1)
-        lab = "l" + tokens[3 * r]
-        vals = [str(fin_value(len(tokens[3 * r + 1 + w]), r, w)) for w in range(2)]
-        _dyn_line(parts, lab, vals, y)
-    parts.append("</div></body></html>")
-    return "".join(parts).encode()
-
-
-# ---------------------------------------------------------------------------
-# professional-grid synthesis: uniform-indent rows of (label, v1, v2) whose
-# PROFESSIONAL-layout extraction is exactly derivable: one y-group per row
-# (pitch 56 >> tolerance 5), three chained x-projection intervals (labels
-# 'lbl'+token are >=4 chars = 32 px wide > the strict 25 px minimum; values
-# are always 4-digit so each value column is 32 px wide), no value-sparse
-# rows -> empty hierarchy stack, and the first row wins header selection, so
-# csv = all k lines (row 0 doubling as header) and body = rows 1..k-1.
-# ---------------------------------------------------------------------------
-
-PRO_VX = (800, 1200)
-
-
 def pro_value(tok_len: int, r: int, which: int) -> int:
     if which == 0:
         return 1000 + (tok_len * 97 + r * 13) % 9000
     return 1000 + (tok_len * 89 + r * 31) % 9000
 
 
+def _label_value_hocr(tokens: List[str], label_prefix: str, value) -> bytes:
+    parts = _hocr_open()
+    for r in range(len(tokens) // 3):
+        label, *vals = tokens[3 * r : 3 * r + 3]
+        cells = [label_prefix + label] + [str(value(len(v), r, w)) for w, v in enumerate(vals)]
+        _grid_row(parts, cells, (100,) + VALUE_X, Y0 + ROW_PITCH * r)
+    return _hocr_close(parts)
+
+
+def fin_hocr(tokens: List[str]) -> bytes:
+    return _label_value_hocr(tokens, "l", fin_value)
+
+
 def pro_hocr(tokens: List[str]) -> bytes:
-    k = len(tokens) // 3
-    parts = [
-        '<?xml version="1.0" encoding="UTF-8"?><html><body>'
-        '<div class="ocr_page" title="image; bbox 0 0 1700 100000">'
-    ]
-    for r in range(k):
-        y = Y0 + ROW_PITCH * r
-        lab = "lbl" + tokens[3 * r]
-        parts.append(
-            f'<span class="ocrx_word" title="bbox 100 {y} {100 + CHAR_W * len(lab)} {y + TOKEN_H}">{lab}</span>'
-        )
-        for which, vx in enumerate(PRO_VX):
-            s = str(pro_value(len(tokens[3 * r + 1 + which]), r, which))
-            parts.append(
-                f'<span class="ocrx_word" title="bbox {vx} {y} {vx + CHAR_W * len(s)} {y + TOKEN_H}">{s}</span>'
-            )
-    parts.append("</div></body></html>")
-    return "".join(parts).encode()
+    return _label_value_hocr(tokens, "lbl", pro_value)
 
 
 # ---------------------------------------------------------------------------
-# boiler synthesis: a regular (non-hOCR) web page whose boilerplate-strip
-# output is exactly derivable: nav/footer junk is dropped by container rule,
-# <p> paragraphs are 8-token chunks kept iff len >= MIN_CHARS (25), table
-# cells are single tokens (< 25 chars, so they never leak into main_text),
-# and the first <table> (header c0,c1 + 4 token rows) round-trips through
-# the byte-exact CSV exporter.
+# dot-leader lines (kind dyn): K=2 value columns whose DYNAMIC extraction is
+# exactly derivable.  >= 39 leader dots per line keep the per-line P95 gap
+# at 10 (-> merge threshold 12), so the label+dots form one span and each
+# right-aligned value (center exactly on its anchor) its own span; bucket
+# medians land exactly on the anchors; a 'periodo' year line (2021/2022) in
+# the top band names the columns.  At most DYN_MAX_ROWS value lines (the
+# cap is mirrored in the SQL oracle): dot-leader docs are ~55 tokens/line,
+# so uncapped synthesis would dominate the correctness query.
+# ---------------------------------------------------------------------------
+
+DYN_ANCHORS = (1210, 1540)
+DYN_LEADER_TO = DYN_ANCHORS[0] - 350  # 860
+DYN_DOT_W, DYN_DOT_STEP = 4, 14
+DYN_MAX_ROWS = 12
+
+
+def _dyn_line(parts: List[str], label: str, values: List[str], y: int) -> None:
+    # dots from x = 100 + 8*len(label) + 10 while x + 4 <= 860, step 14
+    lx2 = 100 + CHAR_W * len(label)
+    parts.append(_span(100, y, lx2, label))
+    x = lx2 + 10
+    while x + DYN_DOT_W <= DYN_LEADER_TO:
+        parts.append(_span(x, y, x + DYN_DOT_W, "."))
+        x += DYN_DOT_STEP
+    for anchor, s in zip(DYN_ANCHORS, values):
+        half = 4 * len(s)  # right/left symmetric: center exactly on anchor
+        parts.append(_span(anchor - half, y, anchor + half, s))
+
+
+def dyn_hocr(tokens: List[str]) -> bytes:
+    parts = _hocr_open()
+    _dyn_line(parts, "periodo", ["2021", "2022"], Y0)
+    for r in range(min(len(tokens) // 3, DYN_MAX_ROWS)):
+        vals = [str(fin_value(len(tokens[3 * r + 1 + w]), r, w)) for w in range(2)]
+        _dyn_line(parts, "l" + tokens[3 * r], vals, Y0 + ROW_PITCH * (r + 1))
+    return _hocr_close(parts)
+
+
+# ---------------------------------------------------------------------------
+# boilerplate page (kind boiler): a regular (non-hOCR) web page whose
+# boilerplate-strip output is exactly derivable: nav/footer junk is dropped
+# by container rule, <p> paragraphs are 8-token chunks kept iff
+# len >= MIN_CHARS (25), table cells are single tokens (< 25 chars, so they
+# never leak into main_text), and the first <table> (header c0,c1 + 4 token
+# rows) round-trips through the byte-exact CSV exporter.
 # ---------------------------------------------------------------------------
 
 BOILER_PARA_TOKENS = 8
@@ -260,123 +237,16 @@ def boiler_html(tokens: List[str]) -> bytes:
     ).encode()
 
 
-_SYNTH_KINDS = {
-    # kind -> (builder, eligibility predicate over the token list)
-    "fin": (fin_hocr, lambda ts: len(ts) // 3 >= 1),
-    "dyn": (dyn_hocr, lambda ts: len(ts) // 3 >= 6),
-    "pro": (pro_hocr, lambda ts: len(ts) // 3 >= 2),
-    "boiler": (boiler_html, lambda ts: len(ts) >= 2 * BOILER_TABLE_ROWS),
-}
-
-
-def _synth_kind_batches(kind: str):
-    builder, ok = _SYNTH_KINDS[kind]
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, urls, htmls = [], [], []
-            for i in range(len(batch)):
-                toks = grid_tokens(batch["text"].iat[i])
-                if not ok(toks):
-                    continue
-                doc_id = int(batch["doc_id"].iat[i])
-                ids.append(doc_id)
-                urls.append(f"{kind}://{doc_id}")
-                htmls.append(builder(toks))
-            yield pd.DataFrame({"doc_id": ids, "url": urls, "html": htmls})
-
-    return gen
-
-
-def fin_pages_from_documents(documents: DataFrame) -> DataFrame:
-    return _spread(documents).mapInPandas(worker_batches(_synth_kind_batches("fin")), PAGES_SCHEMA)
-
-
-def dyn_pages_from_documents(documents: DataFrame) -> DataFrame:
-    return _spread(documents).mapInPandas(worker_batches(_synth_kind_batches("dyn")), PAGES_SCHEMA)
-
-
-def pro_pages_from_documents(documents: DataFrame) -> DataFrame:
-    return _spread(documents).mapInPandas(worker_batches(_synth_kind_batches("pro")), PAGES_SCHEMA)
-
-
-MIXED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("url", StringType()),
-        StructField("html", BinaryType()),
-        StructField("layout", StringType()),
-        StructField("args", StringType()),
-    ]
-)
-
-_MIXED_KINDS = (
-    # (url prefix, builder, eligibility, layout name)
-    ("doc", grid_hocr, lambda ts: len(ts) >= 4, "generic"),
-    ("fin", fin_hocr, lambda ts: len(ts) // 3 >= 1, "financial"),
-    ("dyn", dyn_hocr, lambda ts: len(ts) // 3 >= 6, "dynamic"),
-    ("pro", pro_hocr, lambda ts: len(ts) // 3 >= 2, "professional"),
-)
-
-
-def mixed_pages_from_documents(documents: DataFrame) -> DataFrame:
-    """All four synthesized families in ONE scan of documents (one page row
-    per eligible (doc, kind)), each row carrying its layout for per-row
-    dispatch — the single-pass twin of unioning the four family sources
-    (which would scan documents once per family)."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, urls, htmls, layouts = [], [], [], []
-            for i in range(len(batch)):
-                toks = grid_tokens(batch["text"].iat[i])
-                doc_id = int(batch["doc_id"].iat[i])
-                for prefix, builder, ok, layout in _MIXED_KINDS:
-                    if not ok(toks):
-                        continue
-                    ids.append(doc_id)
-                    urls.append(f"{prefix}://{doc_id}")
-                    htmls.append(builder(toks))
-                    layouts.append(layout)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "url": urls,
-                    "html": htmls,
-                    "layout": layouts,
-                    "args": [None] * len(ids),
-                }
-            )
-
-    return _spread(documents).mapInPandas(worker_batches(gen), MIXED_SCHEMA)
-
-
-def boiler_pages_from_documents(documents: DataFrame) -> DataFrame:
-    return _spread(documents).mapInPandas(
-        worker_batches(_synth_kind_batches("boiler")), PAGES_SCHEMA
-    )
-
-
 # ---------------------------------------------------------------------------
-# args-dispatch synthesis: three grid variants per document, each carrying a
-# DIFFERENT per-row extraction arg whose effect is exactly SQL-derivable —
-# the oracle-able twin of the fixture corpus's per-row-dispatch coverage:
-#
-#   crop: the generic grid plus a 4-token noise row at y=5 and
-#     table_bbox=(0,50,...): the crop drops the noise (tokens must be FULLY
-#     inside, parser.py:47-48), so output == the plain grid4 derivation; an
-#     ignored crop would turn the noise row into the header -> driver red.
-#   hdr:  a non-matching title row, then a fixed literal header row
+# per-row args variants of the generic grid (kinds crop, hdr; cols above):
+#   crop: the grid plus a 4-token noise row at y=5 and table_bbox=(0,50,...):
+#     the crop drops the noise (tokens must be FULLY inside), so output ==
+#     the plain grid derivation; an ignored crop would turn the noise row
+#     into the header.
+#   hdr: a non-matching title row, then a fixed literal header row
 #     ('cuenta v1 v2 v3'), then the token rows; header_regexes=['cuenta']
-#     selects row 1 (rows.py:137-162 searches the first three rows), so
-#     csv = header + title + token rows in that order.
-#   cols: the plain generic grid with expected_n_cols=2: profile intervals
-#     split at ZERO-RUN MIDPOINTS so adjacent intervals touch (every
-#     inter-interval gap is exactly 0), making coerce_interval_count's
-#     argmin-gap merge always pick the LEFTMOST pair (np.argmin first-tie,
-#     geometry.py:116-127) — 4 columns deterministically fold to
-#     (0+1+2, 3) regardless of token widths, so each output row is
-#     't0 t1 t2,t3'.
+#     selects row 1 (the first three rows are searched), so csv = header +
+#     title + token rows in that order.
 # ---------------------------------------------------------------------------
 
 ARGS_CROP_BBOX = (0, 50, 1700, 1000000000)
@@ -385,100 +255,55 @@ ARGS_HDR_TITLE = ("nota", "interna", "previa", "anexo")
 ARGS_HDR_HEADER = ("cuenta", "v1", "v2", "v3")
 
 
-def _grid_row(parts: List[str], toks, anchors, y: int) -> None:
-    for c, t in enumerate(toks):
-        x1 = anchors[c]
-        x2 = x1 + CHAR_W * len(t)
-        parts.append(
-            f'<span class="ocrx_word" title="bbox {x1} {y} {x2} {y + TOKEN_H}">{t}</span>'
-        )
-
-
-def _hocr_open() -> List[str]:
-    return [
-        '<?xml version="1.0" encoding="UTF-8"?><html><body>'
-        '<div class="ocr_page" title="image; bbox 0 0 1700 100000">'
-    ]
-
-
 def crop_hocr(tokens: List[str]) -> bytes:
     parts = _hocr_open()
     _grid_row(parts, ("ruido", "fuera", "del", "marco"), ANCHORS, ARGS_NOISE_Y)
-    n = (len(tokens) // 4) * 4
-    for i in range(n):
-        r, c = divmod(i, 4)
-        _grid_row(parts, (tokens[i],), ANCHORS[c:], Y0 + ROW_PITCH * r)
-    parts.append("</div></body></html>")
-    return "".join(parts).encode()
+    _grid_rows(parts, tokens)
+    return _hocr_close(parts)
 
 
 def hdr_hocr(tokens: List[str]) -> bytes:
     parts = _hocr_open()
     _grid_row(parts, ARGS_HDR_TITLE, ANCHORS, Y0)
     _grid_row(parts, ARGS_HDR_HEADER, ANCHORS, Y0 + ROW_PITCH)
-    n = (len(tokens) // 4) * 4
-    for i in range(n):
-        r, c = divmod(i, 4)
-        _grid_row(parts, (tokens[i],), ANCHORS[c:], Y0 + ROW_PITCH * (r + 2))
-    parts.append("</div></body></html>")
-    return "".join(parts).encode()
+    _grid_rows(parts, tokens, first_row=2)
+    return _hocr_close(parts)
 
 
-_ARGS_KINDS = (
-    ("crop", crop_hocr, '{"table_bbox": [0, 50, 1700, 1000000000]}'),
-    ("hdr", hdr_hocr, '{"header_regexes": ["cuenta"]}'),
-    ("cols", grid_hocr, '{"expected_n_cols": 2}'),
-)
+# prefix -> (builder, min_tokens, layout, args_json)
+KINDS = {
+    "doc": (grid_hocr, 4, "generic", None),
+    "fin": (fin_hocr, 3, "financial", None),
+    "dyn": (dyn_hocr, 18, "dynamic", None),
+    "pro": (pro_hocr, 6, "professional", None),
+    "boiler": (boiler_html, 2 * BOILER_TABLE_ROWS, "auto", None),
+    "crop": (crop_hocr, 4, "generic", json.dumps({"table_bbox": list(ARGS_CROP_BBOX)})),
+    "hdr": (hdr_hocr, 4, "generic", '{"header_regexes": ["cuenta"]}'),
+    "cols": (grid_hocr, 4, "generic", '{"expected_n_cols": 2}'),
+    "tf": (grid_hocr, 4, "transformers", '{"expected_n_cols": 4}'),
+}
 
 
-def args_pages_from_documents(documents: DataFrame) -> DataFrame:
-    """All three args-dispatch variants in ONE scan of documents; each row
-    carries its own args JSON for per-row dispatch (layout 'generic')."""
+def pages_from_documents(documents: DataFrame, kinds: Sequence[str]) -> DataFrame:
+    """documents(doc_id, text, ...) -> pages(doc_id, url, html, layout, args),
+    one row per eligible (document, kind) from ONE scan of documents."""
+    table = [(prefix, *KINDS[prefix]) for prefix in kinds]
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            ids, urls, htmls, layouts, argss = [], [], [], [], []
-            for i in range(len(batch)):
-                toks = grid_tokens(batch["text"].iat[i])
-                if len(toks) < 4:
-                    continue
-                doc_id = int(batch["doc_id"].iat[i])
-                for prefix, builder, args in _ARGS_KINDS:
-                    ids.append(doc_id)
-                    urls.append(f"{prefix}://{doc_id}")
-                    htmls.append(builder(toks))
-                    layouts.append("generic")
-                    argss.append(args)
-            yield pd.DataFrame(
-                {"doc_id": ids, "url": urls, "html": htmls, "layout": layouts, "args": argss}
-            )
+            rows = []
+            for doc_id, text in zip(batch["doc_id"].tolist(), batch["text"]):
+                toks = grid_tokens(text)
+                for prefix, build, min_tokens, layout, args in table:
+                    if len(toks) >= min_tokens:
+                        rows.append((doc_id, f"{prefix}://{doc_id}", build(toks), layout, args))
+            yield pd.DataFrame(rows, columns=PAGES_SCHEMA.names)
 
-    return _spread(documents).mapInPandas(worker_batches(gen), MIXED_SCHEMA)
-
-
-def _synth_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for batch in batches:
-        ids, urls, htmls = [], [], []
-        for i in range(len(batch)):
-            toks = grid_tokens(batch["text"].iat[i])
-            if len(toks) < 4:
-                continue
-            doc_id = int(batch["doc_id"].iat[i])
-            ids.append(doc_id)
-            urls.append(f"doc://{doc_id}")
-            htmls.append(grid_hocr(toks))
-        yield pd.DataFrame({"doc_id": ids, "url": urls, "html": htmls})
-
-
-def _spread(documents: DataFrame) -> DataFrame:
-    """documents.parquet is a single file -> 1 scan partition; without a
-    spread the whole synth+extract pipeline would run on one core."""
-    return fan_out(documents.select("doc_id", "text"))
-
-
-def pages_from_documents(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, text, ...) -> pages(doc_id, url, html)."""
-    return _spread(documents).mapInPandas(worker_batches(_synth_batches), PAGES_SCHEMA)
+    # documents.parquet is a single file -> 1 scan partition; without the
+    # fan-out the whole synth+extract pipeline would run on one core
+    return fan_out(documents.select("doc_id", "text")).mapInPandas(
+        worker_batches(gen), PAGES_SCHEMA
+    )
 
 
 def fixture_pages(spark, scale: float = 1.0, giant_tokens: int = 2000) -> DataFrame:

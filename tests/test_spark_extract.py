@@ -14,7 +14,7 @@ from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
 from ocr_table_extractor_to_csv_spark.plans.lineage import build_manifests
 from ocr_table_extractor_to_csv_spark.plans.resume import pending_pages, read_progress
 from ocr_table_extractor_to_csv_spark.session import DEFAULT_CONF
-from ocr_table_extractor_to_csv_spark.sources.pages import fixture_pages
+from ocr_table_extractor_to_csv_spark.sources.pages import fixture_pages, grid_hocr
 
 GOLDEN = Path(__file__).parent / "goldens" / "fixture_manifest.json"
 
@@ -108,15 +108,29 @@ def test_arrow_batches_are_bounded_by_bytes(spark):
 
 
 def test_malformed_rows_become_error_rows(spark):
+    grid = grid_hocr("a1 b2 c3 d4 e5 f6 g7 h8".split())
     bad = spark.createDataFrame(
-        [("u1", None), ("u2", b"<html><p>hi there this is content</p></html>")],
-        "url string, html binary",
+        [
+            ("u1", None, None, None),
+            ("u2", b"<html><p>hi there this is content</p></html>", None, None),
+            ("u3", grid, "generic", "{bad"),
+            ("u4", grid, "generic", "[1, 2]"),
+            ("u5", grid, "generic", '{"table_bbox": 5}'),
+            ("u6", grid, "generic", '{"expected_n_cols": 2}'),
+        ],
+        "url string, html binary, layout string, args string",
     )
-    out = extract_pages(bad).collect()
+    out = extract_pages(bad, per_row_dispatch=True).collect()
     by_url = {r.url: r for r in out}
-    assert len(out) == 2
+    assert len(out) == 6
     assert by_url["u1"].error is None  # empty html -> empty result, no error
     assert by_url["u2"].error is None
+    # unusable per-row args fail their own row, never the task or silently
+    for url in ("u3", "u4", "u5"):
+        assert by_url[url].error.startswith("args:"), by_url[url].error
+        assert by_url[url].n_rows == 0
+    assert by_url["u6"].error is None
+    assert (by_url["u6"].n_rows, by_url["u6"].n_cols) == (1, 2)
 
 
 def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path, monkeypatch):
