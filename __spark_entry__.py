@@ -1054,7 +1054,11 @@ def q_curate(spark, sf_dir):
     return curate(_docs_f(spark, sf_dir))
 
 
-def _oracle_curate() -> str:
+def _oracle_gated(keepers: str) -> str:
+    """The curation gates as CTEs: ``t``/``q``/``lang`` score every document,
+    the caller's ``keepers`` CTEs end in ``keepers(doc_id)``, and ``gated``
+    holds the keepers that pass the quality and lang gates.  The caller
+    appends more CTEs or its final SELECT."""
     from ocr_table_extractor_to_csv_spark.operators import curation
 
     min_q = curation.DEFAULT_MIN_QUALITY
@@ -1069,16 +1073,21 @@ q AS (
                  / greatest(1, length(text)), 5) AS quality_score
   FROM t
 ), lang AS ({_oracle_lang_id()}),
-keepers AS (
+{keepers},
+gated AS (
+  SELECT q.doc_id, q.n_tokens, q.quality_score, lang.lang_pred
+  FROM q
+  JOIN lang ON lang.doc_id = q.doc_id
+  JOIN keepers ON keepers.doc_id = q.doc_id
+  WHERE q.quality_score >= {min_q} AND lang.lang_pred IN ({langs})
+)"""
+
+
+def _oracle_curate() -> str:
+    return _oracle_gated(f"""keepers AS (
   SELECT min(doc_id) AS doc_id
   FROM (SELECT doc_id, md5({_NORM_SQL}) AS fp FROM documents) _f GROUP BY fp
-)
-SELECT q.doc_id, q.n_tokens, q.quality_score, lang.lang_pred
-FROM q
-JOIN lang ON lang.doc_id = q.doc_id
-JOIN keepers ON keepers.doc_id = q.doc_id
-WHERE q.quality_score >= {min_q} AND lang.lang_pred IN ({langs})
-"""
+)""") + "\nSELECT * FROM gated\n"
 
 
 def q_curate_neardup(spark, sf_dir):
@@ -1091,28 +1100,8 @@ def q_curate_neardup(spark, sf_dir):
 
 
 def _oracle_curate_neardup() -> str:
-    from ocr_table_extractor_to_csv_spark.operators import curation
-
-    min_q = curation.DEFAULT_MIN_QUALITY
-    langs = ", ".join(f"'{l}'" for l in curation.DEFAULT_LANGS)
-    return f"""
-WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS ts FROM documents),
-q AS (
-  SELECT doc_id,
-         CAST(len(ts) AS INT) AS n_tokens,
-         round(least(1.0, CAST(len(ts) AS DOUBLE) / 50.0)
-               - CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
-                 / greatest(1, length(text)), 5) AS quality_score
-  FROM t
-), lang AS ({_oracle_lang_id()}),
-cc AS MATERIALIZED ({{cc_oracle}}),
-keepers AS (SELECT doc_id FROM cc WHERE is_keeper)
-SELECT q.doc_id, q.n_tokens, q.quality_score, lang.lang_pred
-FROM q
-JOIN lang ON lang.doc_id = q.doc_id
-JOIN keepers ON keepers.doc_id = q.doc_id
-WHERE q.quality_score >= {min_q} AND lang.lang_pred IN ({langs})
-""".replace("{cc_oracle}", _oracle_dedup_clusters())
+    return _oracle_gated(f"""cc AS MATERIALIZED ({_oracle_dedup_clusters()}),
+keepers AS (SELECT doc_id FROM cc WHERE is_keeper)""") + "\nSELECT * FROM gated\n"
 
 
 def q_pipeline_full(spark, sf_dir):
@@ -1126,34 +1115,17 @@ def q_pipeline_full(spark, sf_dir):
 
 
 def _oracle_pipeline_full(budget: int = 2048, n_shards: int = 16) -> str:
-    from ocr_table_extractor_to_csv_spark.operators import curation
-
-    min_q = curation.DEFAULT_MIN_QUALITY
-    langs = ", ".join(f"'{l}'" for l in curation.DEFAULT_LANGS)
-    return f"""
-WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS ts FROM documents),
-q AS (
-  SELECT doc_id,
-         CAST(len(ts) AS INT) AS n_tokens,
-         round(least(1.0, CAST(len(ts) AS DOUBLE) / 50.0)
-               - CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE)
-                 / greatest(1, length(text)), 5) AS quality_score
-  FROM t
-), lang AS ({_oracle_lang_id()}),
-deco AS MATERIALIZED ({_oracle_decontaminate()}),
+    return _oracle_gated(f"""deco AS MATERIALIZED ({_oracle_decontaminate()}),
 cc AS MATERIALIZED ({_oracle_dedup_clusters()}),
-surv AS (
-  SELECT q.doc_id, q.n_tokens, q.quality_score, lang.lang_pred,
-         CAST(q.doc_id % {n_shards} AS INT) AS shard
-  FROM q
-  JOIN lang ON lang.doc_id = q.doc_id
-  JOIN deco ON deco.doc_id = q.doc_id AND NOT deco.contaminated
-  JOIN cc ON cc.doc_id = q.doc_id AND cc.is_keeper
-  WHERE q.quality_score >= {min_q} AND lang.lang_pred IN ({langs})
-), c AS (
-  SELECT *, sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                                ROWS UNBOUNDED PRECEDING) AS cum
-  FROM surv
+keepers AS (
+  SELECT cc.doc_id FROM cc
+  JOIN deco ON deco.doc_id = cc.doc_id AND NOT deco.contaminated
+  WHERE cc.is_keeper
+)""") + f""", c AS (
+  SELECT *, CAST(doc_id % {n_shards} AS INT) AS shard,
+         sum(n_tokens) OVER (PARTITION BY doc_id % {n_shards} ORDER BY doc_id
+                             ROWS UNBOUNDED PRECEDING) AS cum
+  FROM gated
 )
 SELECT doc_id, n_tokens, quality_score, lang_pred, shard,
        CAST((cum - n_tokens) // {budget} AS BIGINT) AS bin_id,
@@ -1179,19 +1151,26 @@ def q_pipeline_full_v2(spark, sf_dir):
     )
 
 
-def _oracle_pipeline_v2(budget: int = 2048, n_shards: int = 16) -> str:
-    """Pass-0 URL keepers (canon chain + min-doc_id election + keyless
-    passthrough) feeding the UNCHANGED pipeline algebra re-pointed at the
-    URL-deduped corpus: every ``FROM documents`` in the composed body is
-    rewritten to the ``docs_v2`` keeper join, so eval-set slices, LSH
-    signatures, and CC labels are all computed post-pass-0 — the same
-    sequential semantics as the Spark side."""
+def _oracle_pipeline_over(source: str, prefix: str, budget: int, n_shards: int) -> str:
+    """``pipeline_full``'s oracle re-pointed at the corpus ``source``: every
+    ``FROM documents`` in the composed body is rewritten to read ``source``,
+    which the ``prefix`` CTEs define ahead of the body.  Eval-set slices,
+    LSH signatures and CC labels are thereby all re-derived over that
+    corpus, the same sequential semantics as the Spark side."""
     body = _oracle_pipeline_full(budget, n_shards).replace(
-        "FROM documents", "FROM docs_v2"
+        "FROM documents", f"FROM {source}"
     ).strip()
     assert body.startswith("WITH ")
     return f"""
-WITH {_URL_CANON_CTES},
+WITH {prefix},
+{body[len("WITH "):]}
+"""
+
+
+def _oracle_pipeline_v2(budget: int = 2048, n_shards: int = 16) -> str:
+    """Pass-0 URL keepers (canon chain + min-doc_id election + keyless
+    passthrough) as ``docs_v2``, feeding the unchanged pipeline algebra."""
+    return _oracle_pipeline_over("docs_v2", f"""{_URL_CANON_CTES},
 ukeyed AS (
   SELECT min(doc_id) AS doc_id FROM canon
   WHERE canon_url IS NOT NULL AND canon_url <> ''
@@ -1202,9 +1181,7 @@ ukeyed AS (
   SELECT doc_id FROM ukeyed UNION ALL SELECT doc_id FROM ukeyless
 ), docs_v2 AS MATERIALIZED (
   SELECT d.* FROM documents d JOIN ukeep USING (doc_id)
-),
-{body[len("WITH "):]}
-"""
+)""", budget, n_shards)
 
 
 def q_pipeline_full_v3(spark, sf_dir):
@@ -1224,21 +1201,11 @@ def q_pipeline_full_v3(spark, sf_dir):
 
 
 def _oracle_pipeline_v3(budget: int = 2048, n_shards: int = 16) -> str:
-    """The line_dedup_clean oracle wrapped as a docs_v3(doc_id, text) CTE
-    feeding the UNCHANGED pipeline algebra — the same sequential-splice
-    trick as v2: every ``FROM documents`` in the composed body is
-    rewritten to the cleaned corpus, so the whole downstream pipeline is
-    re-derived over post-clean text in both engines."""
-    body = _oracle_pipeline_full(budget, n_shards).replace(
-        "FROM documents", "FROM docs_v3"
-    ).strip()
-    assert body.startswith("WITH ")
-    return f"""
-WITH docs_v3 AS MATERIALIZED (
+    """The line_dedup_clean oracle as ``docs_v3(doc_id, text)``, feeding the
+    unchanged pipeline algebra over post-clean text."""
+    return _oracle_pipeline_over("docs_v3", f"""docs_v3 AS MATERIALIZED (
   SELECT doc_id, text_clean AS text FROM ({ORACLE_LINE_DEDUP_CLEAN}) _clean
-),
-{body[len("WITH "):]}
-"""
+)""", budget, n_shards)
 
 
 def q_dedup_exact(spark, sf_dir):
@@ -2034,154 +2001,6 @@ FROM sims WHERE cos >= {threshold}
 
 
 # ---------------------------------------------------------------------------
-# Multimodal queries (media synthesized deterministically from documents)
-# ---------------------------------------------------------------------------
-
-
-def _media(spark, sf_dir):
-    """Opaque-binary media table synthesized from documents: payload =
-    utf-8 bytes of text, kind cycles image/audio/video.  The deterministic
-    stub decoders (operators/multimodal.py) are SQL-expressible, so the
-    whole mapInArrow plumbing gets a value-level driver check."""
-    return _docs(spark, sf_dir).where(
-        F.octet_length(F.encode(F.col("text"), "UTF-8")) > 0
-    ).select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.pmod(F.col("doc_id"), F.lit(3)) + 1).cast("int"),
-        ).alias("kind"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-    )
-
-
-N_MEDIA_BUCKETS = 16
-
-
-def q_media_features(spark, sf_dir):
-    from ocr_table_extractor_to_csv_spark.operators.multimodal import media_features
-
-    feat = media_features(_media(spark, sf_dir))
-    return feat.where(F.col("error").isNull()).select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        *[
-            F.element_at("features", i + 1).alias(f"f{i}")
-            for i in range(N_MEDIA_BUCKETS)
-        ],
-    )
-
-
-def _oracle_media_features() -> str:
-    """The stub featurizer (high-nibble byte histogram, L1-normalized) in
-    SQL: high nibbles are the odd-position chars of hex(payload); each
-    feature is an exact-int count divided once in DOUBLE — bit-identical to
-    numpy's bincount/total, no rounding needed."""
-    fcols = ", ".join(
-        "CAST(len(list_filter(generate_series(1, CAST(2 * nb - 1 AS INT), 2), "
-        f"i -> h[i] = '{d}')) AS DOUBLE) / nb AS f{k}"
-        for k, d in enumerate("0123456789abcdef")
-    )
-    return f"""
-WITH m AS (
-  SELECT doc_id AS media_id,
-         ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
-         lower(hex(encode(text))) AS h,
-         octet_length(encode(text)) AS nb
-  FROM documents
-  WHERE octet_length(encode(text)) > 0
-)
-SELECT media_id, kind, CAST(nb AS INT) AS n_bytes, {fcols}
-FROM m
-"""
-
-
-def q_media_frames(spark, sf_dir):
-    from ocr_table_extractor_to_csv_spark.operators.multimodal import frame_sample
-
-    fr = frame_sample(_media(spark, sf_dir), k=8)
-    return fr.where(F.col("error").isNull()).select(
-        "media_id",
-        "n_frames",
-        F.expr("array_join(transform(frame_offsets, x -> CAST(x AS STRING)), ',')").alias(
-            "offsets_csv"
-        ),
-        F.expr("array_join(transform(frame_sizes, x -> CAST(x AS STRING)), ',')").alias(
-            "sizes_csv"
-        ),
-    )
-
-
-def q_media_resize(spark, sf_dir):
-    """Resize stage plumbing end to end: mapInArrow batch shape, per-row
-    error capture, and the deterministic stub resampler (floor-sqrt square
-    grid, nearest-neighbor subsample).  Output pixel bytes are a pure
-    function of the payload, so the oracle rebuilds them byte-for-byte in
-    SQL (compared as md5 of the lowercase hex — DuckDB md5 is VARCHAR-only)."""
-    from ocr_table_extractor_to_csv_spark.operators.multimodal import resize_media
-
-    rs = resize_media(_media(spark, sf_dir))
-    return rs.where(F.col("error").isNull()).select(
-        "media_id",
-        "src_w",
-        "src_h",
-        "dst_w",
-        "dst_h",
-        F.md5(F.lower(F.hex(F.col("pixels")))).alias("pixels_md5"),
-        F.length(F.col("pixels")).cast("long").alias("n_pixels"),
-    )
-
-
-def _oracle_media_resize(dst_w: int = 32, dst_h: int = 32) -> str:
-    """The stub resampler in SQL: side = floor(sqrt(n_bytes)); output byte
-    (r, c) = payload[((r*side)//dst_h)*side + ((c*side)//dst_w)], built by
-    2-char substrings over the payload's hex."""
-    idx = f"(((r * side) // {dst_h}) * side + ((c * side) // {dst_w}))"
-    return f"""
-WITH m AS (
-  SELECT doc_id AS media_id, lower(hex(encode(text))) AS h,
-         octet_length(encode(text)) AS nb
-  FROM documents WHERE octet_length(encode(text)) > 0
-), s AS (
-  SELECT media_id, h, CAST(floor(sqrt(CAST(nb AS DOUBLE))) AS BIGINT) AS side FROM m
-), px AS (
-  SELECT media_id, side,
-         array_to_string(flatten(
-           list_transform(generate_series(0, {dst_h - 1}), r ->
-             list_transform(generate_series(0, {dst_w - 1}), c ->
-               substr(h, CAST(2 * {idx} + 1 AS BIGINT), 2)))), '') AS ohex
-  FROM s
-)
-SELECT media_id, CAST(side AS INT) AS src_w, CAST(side AS INT) AS src_h,
-       {dst_w} AS dst_w, {dst_h} AS dst_h,
-       md5(ohex) AS pixels_md5,
-       CAST({dst_w} * {dst_h} AS BIGINT) AS n_pixels
-FROM px
-"""
-
-
-ORACLE_MEDIA_FRAMES = """
-WITH m AS (
-  SELECT doc_id AS media_id, octet_length(encode(text)) AS nb
-  FROM documents WHERE octet_length(encode(text)) > 0
-), p AS (
-  SELECT media_id, nb, greatest(1, nb // 8) AS step FROM m
-), f AS (
-  SELECT media_id, nb, step,
-         least(8, (nb + step - 1) // step) AS nf
-  FROM p
-)
-SELECT media_id, CAST(nf AS INT) AS n_frames,
-       array_to_string(list_transform(generate_series(0, CAST(nf - 1 AS INT)),
-                                      i -> CAST(i * step AS VARCHAR)), ',') AS offsets_csv,
-       array_to_string(list_transform(generate_series(0, CAST(nf - 1 AS INT)),
-                                      i -> CAST(least(step, nb - i * step) AS VARCHAR)), ',') AS sizes_csv
-FROM f
-"""
-
-
-# ---------------------------------------------------------------------------
 # Evaluation / windowed analytics (events)
 # ---------------------------------------------------------------------------
 
@@ -2389,8 +2208,9 @@ def q_line_dedup(spark, sf_dir):
     return line_dedup(_docs_f(spark, sf_dir))
 
 
-ORACLE_LINE_DEDUP = f"""
-WITH t AS (
+# ``t``/``c``: each document's 10-token chunks and the sub-chunk tail after
+# them, the chunk spec of the line_dedup operators
+_CHUNK_CTES = f"""t AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ), c AS (
   SELECT doc_id,
@@ -2398,9 +2218,15 @@ WITH t AS (
               THEN list_transform(
                      generate_series(0, CAST(len(ts) // 10 AS INT) - 1),
                      i -> array_to_string(ts[i*10+1 : i*10+10], ' '))
-              ELSE []::VARCHAR[] END AS chunks
+              ELSE []::VARCHAR[] END AS chunks,
+         array_to_string(ts[CAST(len(ts) // 10 AS INT) * 10 + 1 : len(ts)], ' ')
+           AS tail
   FROM t
-), ex AS (
+)"""
+
+
+ORACLE_LINE_DEDUP = f"""
+WITH {_CHUNK_CTES}, ex AS (
   SELECT doc_id, md5(unnest(chunks)) AS chunk_key FROM c
 ), cnt AS (
   SELECT chunk_key, count(DISTINCT doc_id) AS docs_with FROM ex GROUP BY chunk_key
@@ -2428,19 +2254,7 @@ def q_line_dedup_clean(spark, sf_dir):
 
 
 ORACLE_LINE_DEDUP_CLEAN = f"""
-WITH t AS (
-  SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
-), c AS (
-  SELECT doc_id,
-         CASE WHEN len(ts) >= 10
-              THEN list_transform(
-                     generate_series(0, CAST(len(ts) // 10 AS INT) - 1),
-                     i -> array_to_string(ts[i*10+1 : i*10+10], ' '))
-              ELSE []::VARCHAR[] END AS chunks,
-         array_to_string(ts[CAST(len(ts) // 10 AS INT) * 10 + 1 : len(ts)], ' ')
-           AS tail
-  FROM t
-), ex AS (
+WITH {_CHUNK_CTES}, ex AS (
   SELECT doc_id,
          UNNEST(list_transform(generate_series(1, len(chunks)),
                 i -> {{'idx': i - 1, 'chunk': chunks[i]}}), recursive := true)
@@ -2481,19 +2295,7 @@ def q_line_dedup_within(spark, sf_dir):
 # filter (DuckDB list_distinct does not preserve order; Spark's
 # array_distinct does, pinned in pytest)
 ORACLE_LINE_DEDUP_WITHIN = f"""
-WITH t AS (
-  SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
-), c AS (
-  SELECT doc_id,
-         CASE WHEN len(ts) >= 10
-              THEN list_transform(
-                     generate_series(0, CAST(len(ts) // 10 AS INT) - 1),
-                     i -> array_to_string(ts[i*10+1 : i*10+10], ' '))
-              ELSE []::VARCHAR[] END AS chunks,
-         array_to_string(ts[CAST(len(ts) // 10 AS INT) * 10 + 1 : len(ts)], ' ')
-           AS tail
-  FROM t
-), d AS (
+WITH {_CHUNK_CTES}, d AS (
   SELECT doc_id, chunks, tail,
          list_filter(chunks, (x, i) -> list_position(chunks, x) = i) AS ded
   FROM c
@@ -3324,9 +3126,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- (2) externally last seen in r4 (capped out of the r5 sweep) --
         "similarity_lsh": q_similarity_lsh,
         "similarity_ivf": q_similarity_ivf,
-        "media_features": q_media_features,
-        "media_frames": q_media_frames,
-        "media_resize": q_media_resize,
         "eval_numeric": q_eval_numeric,
         "eval_text": q_eval_text,
         "sessionize": q_sessionize,
@@ -3453,9 +3252,6 @@ def oracle_sql() -> dict[str, str]:
         "similarity_lsh": ORACLE_SIMILARITY_LSH,
         "similarity_ivf": _oracle_similarity_ivf(),
         "similarity_ivf_q": _oracle_similarity_ivf(refine_q8=IVF_Q8_REFINE),
-        "media_features": _oracle_media_features(),
-        "media_frames": ORACLE_MEDIA_FRAMES,
-        "media_resize": _oracle_media_resize(),
         "eval_numeric": ORACLE_EVAL_NUMERIC,
         "eval_text": ORACLE_EVAL_TEXT,
         "sessionize": ORACLE_SESSIONIZE,

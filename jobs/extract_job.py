@@ -144,6 +144,9 @@ def main() -> None:
     ap.add_argument("--giant-threshold", type=int, default=8 * 1024 * 1024)
     ap.add_argument("--lang", default=None, help="optional lang pushdown filter")
     args = ap.parse_args()
+    if args.warc and args.lang:
+        # WARC pages carry no lang column; refuse before landing the segments
+        ap.error("--lang requires a source with a lang column, which --warc is not")
 
     spark = get_spark(app_name=f"extract-batch-{args.batch_id}")
     if args.warc:
@@ -152,7 +155,7 @@ def main() -> None:
         pages = spark.read.parquet(args.pages)
     if args.lang:
         if "lang" not in pages.columns:
-            raise SystemExit("--lang requires a source with a lang column (not --warc)")
+            raise SystemExit("--lang requires a source with a lang column")
         # pushdown filter reaches the parquet scan (check .explain PushedFilters)
         pages = pages.where(F.col("lang") == args.lang)
     cols = ["url", "html"] + (["layout", "args"] if args.per_row_dispatch else [])

@@ -11,9 +11,9 @@ Layout:
   operators/  DataFrame-level operators (mapInArrow extraction, dedup,
               similarity, text stats, evaluation)
   sources/    deterministic synthetic page corpus + WARC/WET readers
-  plans/      giants split / fan-out, resume, bucketing, lineage helpers,
+  plans/      giants split / fan-out, resume, lineage helpers,
               run scope (owner of caches, checkpoints, landing tables)
-  streaming/  incremental (availableNow) ingest + windowed aggregation
+  streaming/  event-time windowed aggregation with a watermark
 
 Design rule: all per-document geometry runs inside Arrow-batched
 ``mapInArrow`` kernels (one Python call per batch, numpy inside), and every

@@ -3,9 +3,7 @@
 Batch protocol (exactly-once at the batch granularity, SURVEY.md §4.2):
   1. ``pending = pages LEFT ANTI JOIN progress(status='done') ON url`` —
      Catalyst broadcasts the progress url set when small, sort-merge joins
-     otherwise; AQE picks at runtime.  For the steady-state loop where
-     progress holds billions of done-urls, bucket BOTH tables by url
-     (plans/bucketing.py) and the anti-join runs with zero shuffle.
+     otherwise; AQE picks at runtime.
   2. extract ``pending`` and write ``extracted`` partitioned by ``batch_id``
      with dynamic partition overwrite — a re-run of a failed batch REPLACES
      its partition instead of duplicating rows.

@@ -116,10 +116,8 @@ def parse_warc_records(
 def warc_batches_fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow kernel over (path, content) file batches -> page rows.
 
-    Shared by the batch reader (read_warc) and the streaming ingester
-    (streaming.incremental.incremental_extract_warc).  Parse failures
-    produce ONE error row per bad file (url = file path, html NULL)
-    instead of a task failure.
+    The kernel of ``read_warc``.  Parse failures produce ONE error row per
+    bad file (url = file path, html NULL) instead of a task failure.
     """
     for b in batches:
         paths = b.column("path").to_pylist()

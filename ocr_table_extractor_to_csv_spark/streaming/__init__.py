@@ -1,1 +1,1 @@
-"""Structured Streaming wiring for incremental ingest."""
+"""Structured Streaming: event-time windowed aggregation."""

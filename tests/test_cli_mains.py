@@ -53,6 +53,26 @@ def test_extract_job_main_warc_path(tmp_path):
     assert out.exists()
 
 
+def test_extract_job_main_rejects_warc_with_lang(tmp_path):
+    """WARC pages have no lang column, so ``--warc`` with ``--lang`` is a
+    usage error raised before any segment is parsed or landed."""
+    from ocr_table_extractor_to_csv_spark.sources.warc import write_warc_segments
+
+    d = tmp_path / "warcs"
+    write_warc_segments(
+        [(0, "https://cli.example/0", "2025-01-01T00:00:00Z", b"tok0a tok0b")], str(d)
+    )
+    out = tmp_path / "out"
+    res = _run([
+        "jobs/extract_job.py", "--warc", str(d), "--out", str(out),
+        "--progress", str(tmp_path / "progress"), "--batch-id", "1",
+        "--lang", "es",
+    ])
+    assert res.returncode == 2, res.stderr[-2000:]
+    assert "--lang" in res.stderr
+    assert not (tmp_path / "out_warc_landing").exists()
+
+
 def test_eval_job_main(tmp_path):
     """The eval CLI: reference vs predicted CSV -> JSON metrics on stdout
     and the reference-format CSV report on disk."""

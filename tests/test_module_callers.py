@@ -13,12 +13,6 @@ ROOT = Path(__file__).resolve().parent.parent
 PKG = "ocr_table_extractor_to_csv_spark"
 ENTRY_POINTS = ["__spark_entry__.py", "bench.py", "jobs/*.py", "tools/*.py"]
 
-# Kept without a product caller on purpose; their own imports still count.
-ALLOWED = {
-    f"{PKG}.streaming.incremental": "documented availableNow ingest capability with its own tests",
-    f"{PKG}.plans.bucketing": "zero-shuffle steady-state resume layout, pinned by a plan test",
-}
-
 
 def _name(path: Path) -> str:
     parts = path.relative_to(ROOT).with_suffix("").parts
@@ -52,14 +46,12 @@ def _imports(path: Path, modules: dict) -> set:
 def test_every_package_module_has_a_product_caller():
     modules = {_name(p): p for p in (ROOT / PKG).rglob("*.py")}
     todo = [p for pattern in ENTRY_POINTS for p in ROOT.glob(pattern)]
-    todo += [modules[m] for m in ALLOWED]
     reached = set()
     while todo:
         for m in _imports(todo.pop(), modules) - reached:
             reached.add(m)
             todo.append(modules[m])
-    assert sorted(set(modules) - reached - ALLOWED.keys()) == [], "modules without a product caller"
-    assert sorted(ALLOWED.keys() & reached) == [], "allowlisted modules that now have a caller"
+    assert sorted(set(modules) - reached) == [], "modules without a product caller"
 
 
 def _module_of(path: Path, node: ast.ImportFrom) -> str:

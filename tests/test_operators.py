@@ -1,5 +1,5 @@
 """Operator tests: dedup/similarity math against hand-computed values,
-multimodal plumbing, and streaming incremental semantics."""
+curation and graph plans, and windowed streaming aggregation."""
 
 import hashlib
 import math
@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_table_extractor_to_csv_spark.operators import dedup, multimodal, similarity
+from ocr_table_extractor_to_csv_spark.operators import dedup, similarity
 from ocr_table_extractor_to_csv_spark.operators.evaluation import numeric_metrics
 from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
 
@@ -478,77 +478,6 @@ def test_numeric_metrics_zero_variance_r2_null(spark):
     )
     m = numeric_metrics(pairs).collect()[0]
     assert m.r2 is None  # reference returns NaN (evaluation.py:67-70)
-
-
-def test_multimodal_features_deterministic(spark):
-    media = spark.createDataFrame(
-        [(1, "image", bytes(range(256))), (2, "audio", b"\x00" * 64), (3, "video", b"")],
-        "media_id long, kind string, payload binary",
-    )
-    rows = {r.media_id: r for r in multimodal.media_features(media).collect()}
-    assert rows[1].error is None and len(rows[1].features) == 16
-    assert all(abs(f - 1 / 16) < 1e-9 for f in rows[1].features)  # uniform histogram
-    assert rows[2].features[0] == 1.0  # all zero bytes -> bucket 0
-    assert rows[3].error is not None and rows[3].features is None  # empty payload -> error row
-
-
-def test_multimodal_resize_fixed_output(spark):
-    """Resize plumbing: output is dst_w x dst_h bytes per row regardless of
-    input size (the skew-renormalizing property); empty payload -> error
-    row; deterministic stub decode."""
-    media = spark.createDataFrame(
-        [(1, bytes(range(256))), (2, b"\x07" * 10_000), (3, b"")],
-        "media_id long, payload binary",
-    )
-    rows = {r.media_id: r for r in multimodal.resize_media(media, 8, 4).collect()}
-    assert rows[1].src_w == 16 and len(bytes(rows[1].pixels)) == 8 * 4
-    # 16x16 grid of 0..255: row-major value = 16*y + x; nearest-neighbor
-    # sample rows y=(0,4,8,12), cols x=(0,2,...,14)
-    exp = bytes((16 * y + x) for y in (0, 4, 8, 12) for x in range(0, 16, 2))
-    assert bytes(rows[1].pixels) == exp
-    assert rows[2].src_w == 100 and len(bytes(rows[2].pixels)) == 32
-    assert set(bytes(rows[2].pixels)) == {7}
-    assert rows[3].error is not None and rows[3].pixels is None
-
-
-def test_multimodal_frame_sampling(spark):
-    media = spark.createDataFrame(
-        [(1, b"x" * 100)], "media_id long, payload binary"
-    )
-    r = multimodal.frame_sample(media, k=4).collect()[0]
-    assert r.n_frames == 4
-    assert r.frame_offsets == [0, 25, 50, 75]
-    assert r.frame_sizes == [25, 25, 25, 25]
-
-
-def test_streaming_incremental_exactly_once(spark, tmp_path):
-    from ocr_table_extractor_to_csv_spark.sources.pages import fixture_pages
-    from ocr_table_extractor_to_csv_spark.streaming.incremental import (
-        incremental_extract,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    all_pages = fixture_pages(spark, scale=0.1).select(
-        "url", "warc_ts", "html", "text", "lang"
-    ).cache()
-    first = all_pages.limit(10)
-    first.write.mode("append").parquet(pages_dir)
-
-    incremental_extract(spark, pages_dir, out_dir, ckpt)
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 == 10
-
-    # arrival of new files: only the delta is processed on the next pass
-    all_pages.write.mode("append").parquet(pages_dir)
-    incremental_extract(spark, pages_dir, out_dir, ckpt)
-    out = spark.read.parquet(out_dir)
-    assert out.count() == 10 + all_pages.count()
-
-    # third pass with no new files: nothing new
-    incremental_extract(spark, pages_dir, out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == 10 + all_pages.count()
 
 
 def test_curate_equals_operator_composition(spark):
@@ -1222,32 +1151,6 @@ def test_bloom_dedup_statuses_partition_new_batch(spark):
     assert statuses <= {"new", "dup", "false_positive"}
 
 
-def test_streaming_idempotent_write_replay_replaces(spark, tmp_path):
-    """The foreachBatch sink write is exactly-once per batch id: replaying
-    a batch (same stream_batch_id) REPLACES its partition — identical
-    rows, no duplicates — while other batches' rows are untouched (r4
-    advice: a plain append left replays outside the guarantee)."""
-    from pyspark.sql import functions as F
-
-    from ocr_table_extractor_to_csv_spark.streaming.incremental import (
-        _write_idempotent,
-    )
-
-    out = str(tmp_path / "sink")
-    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string").withColumn(
-        "stream_batch_id", F.lit(0)
-    )
-    b1 = spark.createDataFrame([(3, "c")], "id long, v string").withColumn(
-        "stream_batch_id", F.lit(1)
-    )
-    _write_idempotent(b0, out)
-    _write_idempotent(b1, out)
-    # replay batch 0 (failure between write and checkpoint commit)
-    _write_idempotent(b0, out)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).select("id", "v").collect())
-    assert got == [(1, "a"), (2, "b"), (3, "c")], got
-
-
 def test_line_dedup_clean_hand_case(spark):
     """The C4 cleaning transform: global-first occurrence survives, later
     copies are cut; sub-chunk tails always pass through; short docs are
@@ -1302,52 +1205,6 @@ def test_line_dedup_clean_global_uniqueness_invariant(spark):
     assert sum(r.n_kept for r in rows) == len(orig)
     for c, n in kept.items():
         assert n == 1 and c in orig, c[:60]
-
-
-def test_streaming_url_dedup_seen_set_across_restarts(spark, tmp_path):
-    """The crawl seen-set: a canonical URL is emitted on FIRST sighting
-    only — within a pass and across availableNow restarts (state lives in
-    the checkpoint)."""
-    import datetime
-
-    from ocr_table_extractor_to_csv_spark.streaming.incremental import (
-        incremental_url_dedup,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    ts = datetime.datetime(2025, 1, 1)
-
-    def write(rows):
-        spark.createDataFrame(
-            [(u, ts, b"", "", "en") for u in rows],
-            "url string, warc_ts timestamp, html binary, text string, lang string",
-        ).coalesce(1).write.mode("append").parquet(pages_dir)
-
-    # pass 1: two spellings of /x plus /y -> 2 canonical firsts
-    write(["http://a.com/x", "HTTP://A.COM:80/x/index.html", "http://a.com/y"])
-    incremental_url_dedup(spark, pages_dir, out_dir, ckpt)
-    out1 = spark.read.parquet(out_dir)
-    assert sorted(r.canon_url for r in out1.collect()) == [
-        "http://a.com/x", "http://a.com/y",
-    ]
-
-    # pass 2 (restart, same checkpoint): /x AGAIN under a new spelling must
-    # NOT re-emit; /z is new; null/empty URLs bypass the seen-set — BOTH
-    # null rows must flow through, not fold into one state entry
-    spark.createDataFrame(
-        [("http://a.com/x?utm_source=s", ts, b"", "", "en"),
-         ("http://a.com/z", ts, b"", "", "en"),
-         (None, ts, b"", "", "en"),
-         (None, ts, b"", "", "en")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    ).coalesce(1).write.mode("append").parquet(pages_dir)
-    incremental_url_dedup(spark, pages_dir, out_dir, ckpt)
-    out2 = spark.read.parquet(out_dir)
-    keyed = sorted(r.canon_url for r in out2.collect() if r.canon_url is not None)
-    assert keyed == ["http://a.com/x", "http://a.com/y", "http://a.com/z"]
-    assert sum(1 for r in out2.collect() if r.canon_url is None) == 2
 
 
 def test_corpus_diff_hand_case(spark):

@@ -66,36 +66,6 @@ def test_similarity_topk_no_python_udf_in_plan(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_bucketed_resume_join_has_no_shuffle(spark, pages_path, tmp_path_factory):
-    """Same-bucketed pages/progress tables must anti-join with ZERO shuffle
-    (no hashpartitioning Exchange): each task zips co-located buckets —
-    the 10^12-url steady-state resume plan (plans/bucketing.py)."""
-    from ocr_table_extractor_to_csv_spark.plans.bucketing import (
-        bucketed_pending,
-        write_bucketed,
-    )
-
-    root = tmp_path_factory.mktemp("bucketed")
-    pages = spark.read.parquet(pages_path).select("url", "html")
-    progress = pages.select(
-        "url", F.lit("done").alias("status")
-    ).where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
-    write_bucketed(pages, "t_pages_b", str(root / "pages"), n_buckets=8)
-    write_bucketed(progress, "t_progress_b", str(root / "progress"), n_buckets=8)
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        pend = bucketed_pending(spark, "t_pages_b", "t_progress_b")
-        plan = _formatted(spark, pend)
-        assert "Exchange hashpartitioning" not in plan, plan[:3000]
-        assert pend.count() == pages.count() - progress.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_pages_b")
-        spark.sql("DROP TABLE IF EXISTS t_progress_b")
-
-
 def test_curate_single_scan_single_shuffle(spark):
     """The composed curation decision, pinned at the r6 skew-safe shape
     (r5 verdict #2): the keeper election is groupBy(fp) + join-back on
@@ -120,23 +90,6 @@ def test_curate_single_scan_single_shuffle(spark):
     assert n == 2, f"{n} parquet scan nodes"
     assert "Window" not in plan, "keeper election regressed to a window"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_media_features_single_scan_no_shuffle(spark):
-    """The multimodal feature pipeline must be one pruned documents scan ->
-    one mapInArrow stage: no shuffle, no extra scans (embarrassingly
-    parallel at 100 TB)."""
-    import re
-
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["media_features"](spark, "/root/testdata/sf0.001")
-    plan = _formatted(spark, df)
-    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M)) == 1
-    assert "Exchange" not in plan
-    # pruned to the two columns the synthesis needs
-    m = re.search(r"ReadSchema: (.*)", plan)
-    assert m and set(re.findall(r"(\w+):", m.group(1))) <= {"doc_id", "text"}
 
 
 def test_curate_neardup_filters_before_join(spark):

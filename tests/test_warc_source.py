@@ -95,42 +95,6 @@ def test_parse_warc_records_length_framed_not_delimiter_scanned():
     assert [(u, h) for u, _t, h in recs] == [(u, h) for u, _t, h in docs]
 
 
-def test_warc_streaming_incremental_exactly_once(spark, tmp_path):
-    """Crawl-follower shape: availableNow over arriving segments — the
-    first pass extracts segment 1; dropping segment 2 and re-triggering
-    processes ONLY the delta; a third trigger with nothing new is a no-op."""
-    from ocr_table_extractor_to_csv_spark.streaming.incremental import (
-        incremental_extract_warc,
-    )
-
-    docs = _docs()
-    d = tmp_path / "warcs"
-    d.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    (d / "seg1.warc").write_bytes(warc_record(*docs[0]))
-    incremental_extract_warc(spark, str(d), out, ckpt, layout="generic")
-    assert spark.read.parquet(out).count() == 1
-
-    (d / "seg2.warc.gz").write_bytes(gzip.compress(warc_record(*docs[1])))
-    incremental_extract_warc(spark, str(d), out, ckpt, layout="generic")
-    got = spark.read.parquet(out)
-    assert got.count() == 2
-    assert {r.url for r in got.collect()} == {u for u, _t, _h in docs}
-
-    incremental_extract_warc(spark, str(d), out, ckpt, layout="generic")
-    assert spark.read.parquet(out).count() == 2
-
-    # a corrupt segment is consumed exactly-once by the checkpoint, so it
-    # must leave a durable error row — never a silent drop
-    (d / "seg3.warc").write_bytes(b"NOT A WARC FILE")
-    incremental_extract_warc(spark, str(d), out, ckpt, layout="generic")
-    assert spark.read.parquet(out).count() == 2
-    errs = spark.read.parquet(out + "_warc_errors").collect()
-    assert len(errs) == 1 and errs[0].url.endswith("seg3.warc")
-    assert errs[0].error and errs[0].stream_batch_id is not None
-
-
 def test_warc_through_extract_job_resume_path(spark, tmp_path):
     """Raw segments through the FULL batch job (resume anti-join, giants
     split, progress commit) — the --warc entry's job body."""
@@ -223,47 +187,6 @@ def test_wet_invalid_utf8_replaced_not_fatal():
     )
     [(url, _ts, payload)] = list(parse_warc_records(rec, want="conversion"))
     assert payload.decode("utf-8", "replace") == "ok �� bytes"
-
-
-def test_wet_streaming_incremental_exactly_once(spark, tmp_path):
-    """WET crawl-follower: availableNow over arriving .warc.wet(.gz)
-    segments — delta-only per trigger, no-op on nothing-new, corrupt
-    segment leaves a durable error row (never a silent drop)."""
-    from ocr_table_extractor_to_csv_spark.sources.warc import warc_record
-    from ocr_table_extractor_to_csv_spark.streaming.incremental import (
-        incremental_ingest_wet,
-    )
-
-    def wet(url, ts, text):
-        return warc_record(url, ts, text.encode("utf-8"),
-                           warc_type="conversion", http=False)
-
-    d = tmp_path / "wets"
-    d.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    (d / "seg1.warc.wet").write_bytes(wet("https://w/0", TS.format(i=0), "first text"))
-    incremental_ingest_wet(spark, str(d), out, ckpt)
-    assert spark.read.parquet(out).count() == 1
-
-    (d / "seg2.warc.wet.gz").write_bytes(
-        gzip.compress(wet("https://w/1", TS.format(i=1), "second text"))
-    )
-    incremental_ingest_wet(spark, str(d), out, ckpt)
-    got = spark.read.parquet(out)
-    assert {(r.url, r.text) for r in got.collect()} == {
-        ("https://w/0", "first text"),
-        ("https://w/1", "second text"),
-    }
-
-    incremental_ingest_wet(spark, str(d), out, ckpt)
-    assert spark.read.parquet(out).count() == 2
-
-    (d / "seg3.warc.wet").write_bytes(b"NOT A WET FILE")
-    incremental_ingest_wet(spark, str(d), out, ckpt)
-    assert spark.read.parquet(out).count() == 2
-    errs = spark.read.parquet(out + "_wet_errors").collect()
-    assert len(errs) == 1 and errs[0].url.endswith("seg3.warc.wet")
 
 
 def test_wet_to_documents_feeds_curation_surface(spark, tmp_path):
