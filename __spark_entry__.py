@@ -157,58 +157,61 @@ _TOKS_GRID_SQL = """
 """
 
 
-ORACLE_GRID4 = f"""
+_CRLF = "chr(13)||chr(10)"
+
+
+def _rows_oracle(where, k, line, n_rows, csv, n_cols, head="", num=False) -> str:
+    """One grid-page oracle over ``toks``: the documents whose tokens pass
+    ``where`` get ``k`` lines ``line`` (SQL over the row index r and the
+    token list ts), after the constant line ``head`` when given.  The CSV
+    is ``csv`` (SQL over the CRLF-joined lines ``body``), ``n_rows`` is SQL
+    over the line count ``total``, and ``num`` adds the numeric CSV (the
+    same bytes for these pages).  Main text is the lines with commas as
+    spaces, one per text line."""
+    first = f"SELECT doc_id, 0 AS r, {head} AS line FROM ok\n  UNION ALL\n  " if head else ""
+    num_md5 = f"md5({csv}) AS num_md5,\n       " if num else ""
+    return f"""
 WITH toks AS ({_TOKS_GRID_SQL}), ok AS (
-  SELECT doc_id, ts, CAST(len(ts) // 4 AS BIGINT) AS nrows
-  FROM toks WHERE len(ts) >= 4
+  SELECT doc_id, ts, CAST({k} AS INT) AS k FROM toks WHERE {where}
 ), lines AS (
-  SELECT doc_id, r,
-         ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4] AS line
-  FROM ok, UNNEST(generate_series(0, CAST(nrows - 1 AS INT))) AS u(r)
+  {first}SELECT doc_id, r + {1 if head else 0} AS r, {line} AS line
+  FROM ok, UNNEST(generate_series(0, k - 1)) AS u(r)
 ), agg AS (
   SELECT doc_id,
-         string_agg(line, chr(13)||chr(10) ORDER BY r) || chr(13)||chr(10) AS csv_text,
+         string_agg(line, {_CRLF} ORDER BY r) AS body,
          string_agg(replace(line, ',', ' '), chr(10) ORDER BY r) AS main_text,
          count(*) AS total
   FROM lines GROUP BY doc_id
 )
 SELECT doc_id,
-       CAST(total - 1 AS INT) AS n_rows,
-       CAST(4 AS INT) AS n_cols,
-       md5(csv_text) AS csv_md5,
-       md5(main_text) AS text_md5
+       CAST({n_rows} AS INT) AS n_rows,
+       CAST({n_cols} AS INT) AS n_cols,
+       md5({csv}) AS csv_md5,
+       {num_md5}md5(main_text) AS text_md5
 FROM agg
 """
+
+
+# the grid oracles: ts[i] is the i-th token, r the row index; the value
+# cells are the pages.py builders' (length * a + r * b) % m formulas
+ORACLE_GRID4 = _rows_oracle(
+    "len(ts) >= 4", "len(ts) // 4",
+    "ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4]",
+    "total - 1", f"body || {_CRLF}", 4,
+)
 
 
 def q_extract_fin_grid(spark, sf_dir):
     return _extract_kinds(_docs(spark, sf_dir), ["fin"]).select(*_EXTRACT_COLS)
 
 
-ORACLE_FIN_GRID = f"""
-WITH toks AS ({_TOKS_GRID_SQL}),
-ok AS (
-  SELECT doc_id, ts, CAST(len(ts) // 3 AS INT) AS k FROM toks WHERE len(ts) >= 3
-), lines AS (
-  SELECT doc_id, r,
-         'l' || ts[3*r+1] || ',' ||
-         CAST((length(ts[3*r+2]) * 97 + r * 13) % 999 + 1 AS VARCHAR) || ',' ||
-         CAST((length(ts[3*r+3]) * 89 + r * 31) % 999 + 1 AS VARCHAR) AS line
-  FROM ok, UNNEST(generate_series(0, k - 1)) AS u(r)
-), agg AS (
-  SELECT doc_id,
-         string_agg(line, chr(13)||chr(10) ORDER BY r) AS body,
-         string_agg(replace(line, ',', ' '), chr(10) ORDER BY r) AS main_text,
-         count(*) AS k
-  FROM lines GROUP BY doc_id
+ORACLE_FIN_GRID = _rows_oracle(
+    "len(ts) >= 3", "len(ts) // 3",
+    "'l' || ts[3*r+1] || ','"
+    " || CAST((length(ts[3*r+2]) * 97 + r * 13) % 999 + 1 AS VARCHAR) || ','"
+    " || CAST((length(ts[3*r+3]) * 89 + r * 31) % 999 + 1 AS VARCHAR)",
+    "total", f"'Cuenta,Valor_1,Valor_2' || {_CRLF} || body || {_CRLF}", 3,
 )
-SELECT doc_id,
-       CAST(k AS INT) AS n_rows,
-       CAST(3 AS INT) AS n_cols,
-       md5('Cuenta,Valor_1,Valor_2' || chr(13)||chr(10) || body || chr(13)||chr(10)) AS csv_md5,
-       md5(main_text) AS text_md5
-FROM agg
-"""
 
 
 def q_extract_dyn_grid(spark, sf_dir):
@@ -216,36 +219,14 @@ def q_extract_dyn_grid(spark, sf_dir):
 
 
 # dots(label_len) = ((746 - 8*label_len) // 14) + 1 (sources/pages.py:_dyn_line)
-ORACLE_DYN_GRID = f"""
-WITH toks AS ({_TOKS_GRID_SQL}),
-ok AS (
-  SELECT doc_id, ts, CAST(least(len(ts) // 3, 12) AS INT) AS k
-  FROM toks WHERE len(ts) // 3 >= 6
-), lines AS (
-  SELECT doc_id, 0 AS r,
-         'periodo' || repeat(' .', ((746 - 8 * 7) // 14) + 1) || ',2021,2022' AS line
-  FROM ok
-  UNION ALL
-  SELECT doc_id, r + 1 AS r,
-         'l' || ts[3*r+1] || repeat(' .', ((746 - 8 * (1 + length(ts[3*r+1]))) // 14) + 1)
-         || ',' || CAST((length(ts[3*r+2]) * 97 + r * 13) % 999 + 1 AS VARCHAR)
-         || ',' || CAST((length(ts[3*r+3]) * 89 + r * 31) % 999 + 1 AS VARCHAR) AS line
-  FROM ok, UNNEST(generate_series(0, k - 1)) AS u(r)
-), agg AS (
-  SELECT doc_id,
-         string_agg(line, chr(13)||chr(10) ORDER BY r) AS body,
-         string_agg(replace(line, ',', ' '), chr(10) ORDER BY r) AS main_text,
-         count(*) AS total
-  FROM lines GROUP BY doc_id
+ORACLE_DYN_GRID = _rows_oracle(
+    "len(ts) // 3 >= 6", "least(len(ts) // 3, 12)",
+    "'l' || ts[3*r+1] || repeat(' .', ((746 - 8 * (1 + length(ts[3*r+1]))) // 14) + 1)"
+    " || ',' || CAST((length(ts[3*r+2]) * 97 + r * 13) % 999 + 1 AS VARCHAR)"
+    " || ',' || CAST((length(ts[3*r+3]) * 89 + r * 31) % 999 + 1 AS VARCHAR)",
+    "total", f"'Cuenta,2021,2022' || {_CRLF} || body || {_CRLF}", 3,
+    head="'periodo' || repeat(' .', ((746 - 8 * 7) // 14) + 1) || ',2021,2022'", num=True,
 )
-SELECT doc_id,
-       CAST(total AS INT) AS n_rows,
-       CAST(3 AS INT) AS n_cols,
-       md5('Cuenta,2021,2022' || chr(13)||chr(10) || body || chr(13)||chr(10)) AS csv_md5,
-       md5('Cuenta,2021,2022' || chr(13)||chr(10) || body || chr(13)||chr(10)) AS num_md5,
-       md5(main_text) AS text_md5
-FROM agg
-"""
 
 
 def q_dataset_grid(spark, sf_dir):
@@ -287,30 +268,13 @@ def q_extract_fixture_professional(spark, sf_dir):
     return _extract_kinds(_docs(spark, sf_dir), ["pro"]).select(*_EXTRACT_COLS)
 
 
-ORACLE_PRO_GRID = f"""
-WITH toks AS ({_TOKS_GRID_SQL}),
-ok AS (
-  SELECT doc_id, ts, CAST(len(ts) // 3 AS INT) AS k FROM toks WHERE len(ts) // 3 >= 2
-), lines AS (
-  SELECT doc_id, r,
-         'lbl' || ts[3*r+1] || ',' ||
-         CAST(1000 + (length(ts[3*r+2]) * 97 + r * 13) % 9000 AS VARCHAR) || ',' ||
-         CAST(1000 + (length(ts[3*r+3]) * 89 + r * 31) % 9000 AS VARCHAR) AS line
-  FROM ok, UNNEST(generate_series(0, k - 1)) AS u(r)
-), agg AS (
-  SELECT doc_id,
-         string_agg(line, chr(13)||chr(10) ORDER BY r) AS body,
-         string_agg(replace(line, ',', ' '), chr(10) ORDER BY r) AS main_text,
-         count(*) AS k
-  FROM lines GROUP BY doc_id
+ORACLE_PRO_GRID = _rows_oracle(
+    "len(ts) // 3 >= 2", "len(ts) // 3",
+    "'lbl' || ts[3*r+1] || ','"
+    " || CAST(1000 + (length(ts[3*r+2]) * 97 + r * 13) % 9000 AS VARCHAR) || ','"
+    " || CAST(1000 + (length(ts[3*r+3]) * 89 + r * 31) % 9000 AS VARCHAR)",
+    "total - 1", f"body || {_CRLF}", 3,
 )
-SELECT doc_id,
-       CAST(k - 1 AS INT) AS n_rows,
-       CAST(3 AS INT) AS n_cols,
-       md5(body || chr(13)||chr(10)) AS csv_md5,
-       md5(main_text) AS text_md5
-FROM agg
-"""
 
 
 def q_extract_fixture_boiler(spark, sf_dir):
@@ -1320,6 +1284,14 @@ def q_minhash_lsh(spark, sf_dir):
     return dedup.minhash_lsh_pairs(_docs_f(spark, sf_dir))
 
 
+def _capped_sql(cols: str, keys: str, src: str, max_bucket: int) -> str:
+    """The dedup.cap_hot_buckets twin: ``cols`` of the ``src`` rows whose
+    ``keys`` bucket holds at most ``max_bucket`` rows."""
+    return f"""SELECT {cols} FROM (
+    SELECT *, count(*) OVER (PARTITION BY {keys}) AS bsz FROM {src}
+  ) _c WHERE bsz <= {max_bucket}"""
+
+
 def _minhash_bands0_ctes() -> str:
     """Shared DuckDB CTEs (sh, sig, bands0) twinning dedup.lsh_bands — the
     uncapped (doc_id, band, bkey) list reused by the pair oracle AND the
@@ -1349,9 +1321,7 @@ def _oracle_minhash_lsh() -> str:
     return f"""
 WITH {_minhash_bands0_ctes()},
 bands AS (
-  SELECT doc_id, band, bkey FROM (
-    SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bsz FROM bands0
-  ) _c WHERE bsz <= {dedup.MAX_BUCKET}
+  {_capped_sql("doc_id, band, bkey", "band, bkey", "bands0", dedup.MAX_BUCKET)}
 )
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
 FROM bands a JOIN bands b
@@ -1368,18 +1338,23 @@ def q_lsh_bucket_stats(spark, sf_dir):
     return dedup.lsh_bucket_stats(_docs_f(spark, sf_dir))
 
 
-ORACLE_LSH_BUCKET_STATS = f"""
-WITH {_minhash_bands0_ctes()},
+def _bucket_stats_sql(bands_ctes: str, max_bucket: int) -> str:
+    """The dedup.bucket_stats twin over the ``bands0`` CTE of ``bands_ctes``."""
+    return f"""
+WITH {bands_ctes},
 per_bucket AS (
   SELECT band, bkey, count(*) AS bsz FROM bands0 GROUP BY 1, 2
 )
 SELECT band,
        CAST(count(*) AS BIGINT) AS n_buckets,
        CAST(sum(bsz) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN bsz > {dedup.MAX_BUCKET} THEN 1 ELSE 0 END) AS BIGINT) AS n_hot_buckets,
-       CAST(sum(CASE WHEN bsz > {dedup.MAX_BUCKET} THEN bsz ELSE 0 END) AS BIGINT) AS n_docs_in_hot
+       CAST(sum(CASE WHEN bsz > {max_bucket} THEN 1 ELSE 0 END) AS BIGINT) AS n_hot_buckets,
+       CAST(sum(CASE WHEN bsz > {max_bucket} THEN bsz ELSE 0 END) AS BIGINT) AS n_docs_in_hot
 FROM per_bucket GROUP BY band
 """
+
+
+ORACLE_LSH_BUCKET_STATS = _bucket_stats_sql(_minhash_bands0_ctes(), dedup.MAX_BUCKET)
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -1876,9 +1851,7 @@ def _oracle_simhash_pairs(
     return f"""
 WITH {_simhash_bands_ctes(bits, max_hamming)},
 bands AS (
-  SELECT doc_id, simhash, band, bkey FROM (
-    SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bsz FROM bands0
-  ) _c WHERE bsz <= {max_bucket}
+  {_capped_sql("doc_id, simhash, band, bkey", "band, bkey", "bands0", max_bucket)}
 ), cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
                   a.simhash AS h_a, b.simhash AS h_b
@@ -1901,18 +1874,7 @@ def _oracle_simhash_bucket_stats(
     bits: int = SIMHASH_PAIRS_BITS,
     max_bucket: int = dedup.SIMHASH_MAX_BUCKET,
 ) -> str:
-    return f"""
-WITH {_simhash_bands_ctes(bits, max_hamming)},
-per_bucket AS (
-  SELECT band, bkey, count(*) AS bsz FROM bands0 GROUP BY 1, 2
-)
-SELECT band,
-       CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(sum(bsz) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN bsz > {max_bucket} THEN 1 ELSE 0 END) AS BIGINT) AS n_hot_buckets,
-       CAST(sum(CASE WHEN bsz > {max_bucket} THEN bsz ELSE 0 END) AS BIGINT) AS n_docs_in_hot
-FROM per_bucket GROUP BY band
-"""
+    return _bucket_stats_sql(_simhash_bands_ctes(bits, max_hamming), max_bucket)
 
 
 def q_embedding_quantize(spark, sf_dir):
@@ -1978,9 +1940,7 @@ def _oracle_dedup_embedding(
     return f"""
 WITH {_sketch_ctes(n_planes, n_tables, dim)},
 capped AS (
-  SELECT vec_id, tbl, bucket FROM (
-    SELECT *, count(*) OVER (PARTITION BY tbl, bucket) AS bsz FROM bands
-  ) _c WHERE bsz <= {max_bucket}
+  {_capped_sql("vec_id, tbl, bucket", "tbl, bucket", "bands", max_bucket)}
 ), pairs AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM capped a JOIN capped b
@@ -2649,9 +2609,7 @@ anch0 AS (
         % {dedup.SUBSTR_ANCHOR_MOD} = 0
 ),
 anch AS MATERIALIZED (
-  SELECT doc_id, anchor FROM (
-    SELECT *, count(*) OVER (PARTITION BY anchor) AS bsz FROM anch0
-  ) _c WHERE bsz <= {dedup.SUBSTR_MAX_BUCKET}
+  {_capped_sql("doc_id, anchor", "anchor", "anch0", dedup.SUBSTR_MAX_BUCKET)}
 )
 SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS INT) AS n_shared
 FROM anch a JOIN anch b ON a.anchor = b.anchor AND a.doc_id < b.doc_id

@@ -47,39 +47,51 @@ def _tag(node: _Node) -> str:
 
 
 def _link_chars(node: _Node) -> int:
+    """Chars of text under the outermost <a> elements at or below ``node``
+    (explicit stack: nesting depth is unbounded in lenient HTML)."""
     total = 0
-    if _tag(node) == "a":
-        return len(_norm("".join(node.itertext())))
-    for c in node.content:
-        if isinstance(c, _Node):
-            total += _link_chars(c)
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if _tag(n) == "a":
+            total += len(_norm("".join(n.itertext())))
+        else:
+            stack.extend(c for c in n.content if isinstance(c, _Node))
     return total
 
 
-def _collect_blocks(node: _Node, in_boiler: bool, out: List[Tuple[str, float]]) -> bool:
-    """Post-order walk; returns True if any descendant block was emitted,
-    so ancestors don't double-count nested blocks."""
-    tag = _tag(node)
-    boiler = in_boiler or tag in BOILER_CONTAINERS
-    child_emitted = False
-    for c in node.content:
-        if isinstance(c, _Node):
-            child_emitted |= _collect_blocks(c, boiler, out)
-    if child_emitted:
-        return True
-    if tag in BLOCK_TAGS and not boiler:
+def _emit_block(node: _Node, boiler: bool, out: List[Tuple[str, float]]) -> bool:
+    if _tag(node) in BLOCK_TAGS and not boiler:
         text = _norm("".join(node.itertext()))
         if text:
-            n = len(text)
-            density = _link_chars(node) / max(1, n)
-            out.append((text, density))
+            out.append((text, _link_chars(node) / max(1, len(text))))
             return True
     return False
 
 
+def _collect_blocks(root: _Node, out: List[Tuple[str, float]]) -> None:
+    """Post-order walk: a node is emitted as a block unless a descendant
+    block was, so ancestors don't double-count nested blocks.  An explicit
+    stack, not recursion: the lenient parser never auto-closes <p>/<li>/
+    <div>, so a page of unclosed tags nests as deep as it has tags."""
+    # frame: [node, under a boilerplate container, child iterator, child emitted]
+    stack = [[root, _tag(root) in BOILER_CONTAINERS, iter(root.content), False]]
+    while stack:
+        frame = stack[-1]
+        for c in frame[2]:
+            if isinstance(c, _Node):
+                stack.append([c, frame[1] or _tag(c) in BOILER_CONTAINERS, iter(c.content), False])
+                break
+        else:
+            stack.pop()
+            emitted = frame[3] or _emit_block(frame[0], frame[1], out)
+            if emitted and stack:
+                stack[-1][3] = True
+
+
 def extract_main_text(root: _Node) -> str:
     blocks: List[Tuple[str, float]] = []
-    _collect_blocks(root, False, blocks)
+    _collect_blocks(root, blocks)
     keep = [t for (t, d) in blocks if len(t) >= MIN_CHARS and d < MAX_LINK_DENSITY]
     return "\n\n".join(keep)
 

@@ -62,6 +62,19 @@ def _hocr_main_text(tok: TokenArrays, lines: List[Line]) -> str:
     return "\n".join(" ".join(tok.text[ln.idx].tolist()) for ln in lines)
 
 
+def _table(body, header, numeric: bool = False, **base) -> ExtractResult:
+    """The result of an hOCR layout's (body rows, header) grid; ``numeric``
+    adds the typed-number CSV variant (dynamic layout)."""
+    return ExtractResult(
+        csv=csv_bytes(body, header),
+        csv_numeric=csv_bytes_numeric(body, header) if numeric else None,
+        n_rows=len(body),
+        n_cols=len(header),
+        header=list(header),
+        **base,
+    )
+
+
 def extract_document(
     html: bytes,
     layout: str = "auto",
@@ -115,14 +128,7 @@ def extract_document(
         recs = assign_financial_three_columns(tok, lines)
         rows = merge_financial_rows(recs)
         rows = postprocess_financial(rows)
-        header = ["Cuenta", "Valor_1", "Valor_2"]
-        return ExtractResult(
-            csv=csv_bytes(rows, header),
-            n_rows=len(rows),
-            n_cols=len(header),
-            header=header,
-            **base,
-        )
+        return _table(rows, ["Cuenta", "Valor_1", "Valor_2"], **base)
 
     if layout == "dynamic":
         from .layouts import compute_line_spans
@@ -135,14 +141,7 @@ def extract_document(
             return ExtractResult(csv=empty_csv_bytes(), **base)
         num_cols = max(len(r) for r in rows) - 1
         header = resolve_dynamic_header(max(num_cols, 0), names)
-        return ExtractResult(
-            csv=csv_bytes(rows, header),
-            csv_numeric=csv_bytes_numeric(rows, header),
-            n_rows=len(rows),
-            n_cols=len(header),
-            header=header,
-            **base,
-        )
+        return _table(rows, header, numeric=True, **base)
 
     if layout == "generic":
         intervals = estimate_columns(tok, lines, expected_n_cols=expected_n_cols)
@@ -151,14 +150,7 @@ def extract_document(
         header_row, body = detect_header_row(
             grid, list(header_regexes) if header_regexes else None
         )
-        header = header_row or []
-        return ExtractResult(
-            csv=csv_bytes(body, header),
-            n_rows=len(body),
-            n_cols=len(header),
-            header=list(header),
-            **base,
-        )
+        return _table(body, header_row or [], **base)
 
     if layout == "transformers":
         # The reference's 4th CLI layout (layout_transformers.py:446-565).
@@ -187,20 +179,7 @@ def extract_document(
             body = [[c.strip() for c in r] for r in body]
         else:
             body, header = build_professional_grid(tok)
-        return ExtractResult(
-            csv=csv_bytes(body, header),
-            n_rows=len(body),
-            n_cols=len(header),
-            header=list(header),
-            **base,
-        )
+        return _table(body, header, **base)
 
     # professional
-    body, header = build_professional_grid(tok)
-    return ExtractResult(
-        csv=csv_bytes(body, header),
-        n_rows=len(body),
-        n_cols=len(header),
-        header=list(header),
-        **base,
-    )
+    return _table(*build_professional_grid(tok), **base)

@@ -21,6 +21,25 @@ from .textstats import lang_pred_col, norm_text_col, quality_columns
 
 DEFAULT_MIN_QUALITY = 0.5
 DEFAULT_LANGS = ("en",)
+_SCORED = ("doc_id", "n_tokens", "quality_score", "lang_pred")
+
+
+def _scored(documents: DataFrame, *extra) -> DataFrame:
+    """(doc_id, n_tokens, quality_score, lang_pred, *extra): the ONE
+    per-document scoring projection of every curation decision."""
+    q = quality_columns(F.col("text"))
+    return documents.select(
+        "doc_id",
+        q["n_tokens"].alias("n_tokens"),
+        q["quality_score"].alias("quality_score"),
+        lang_pred_col(F.col("text")).alias("lang_pred"),
+        *extra,
+    )
+
+
+def _gate(min_quality: float, langs):
+    """The lang + quality gate over ``_scored`` columns."""
+    return (F.col("quality_score") >= F.lit(min_quality)) & F.col("lang_pred").isin(list(langs))
 
 
 def curate(
@@ -39,24 +58,14 @@ def curate(
     aggregation and the join-back lands on doc_id (unique, skew-free) —
     identical semantics, incl. NULL fps grouping together (r5 verdict
     #2; the same shape ``line_dedup_clean`` pioneered)."""
-    q = quality_columns(F.col("text"))
-    scored = documents.select(
-        "doc_id",
-        q["n_tokens"].alias("n_tokens"),
-        q["quality_score"].alias("quality_score"),
-        lang_pred_col(F.col("text")).alias("lang_pred"),
-        F.md5(norm_text_col(F.col("text"))).alias("fp"),
-    )
+    scored = _scored(documents, F.md5(norm_text_col(F.col("text"))).alias("fp"))
     keeper_ids = scored.groupBy("fp").agg(F.min("doc_id").alias("doc_id")).select(
         "doc_id"
     )
     return (
         scored.join(keeper_ids, "doc_id")
-        .where(
-            (F.col("quality_score") >= F.lit(min_quality))
-            & F.col("lang_pred").isin(list(langs))
-        )
-        .select("doc_id", "n_tokens", "quality_score", "lang_pred")
+        .where(_gate(min_quality, langs))
+        .select(*_SCORED)
     )
 
 
@@ -81,24 +90,13 @@ def curate_neardup(
     ``scope`` (``plans.scope.RunScope``)."""
     from .dedup import dedup_clusters
 
-    q = quality_columns(F.col("text"))
-    scored = documents.select(
-        "doc_id",
-        q["n_tokens"].alias("n_tokens"),
-        q["quality_score"].alias("quality_score"),
-        lang_pred_col(F.col("text")).alias("lang_pred"),
-    ).where(
-        (F.col("quality_score") >= F.lit(min_quality))
-        & F.col("lang_pred").isin(list(langs))
-    )
+    scored = _scored(documents).where(_gate(min_quality, langs))
     keepers = (
         dedup_clusters(documents, scope=scope)
         .where(F.col("is_keeper"))
         .select("doc_id")
     )
-    return scored.join(keepers, "doc_id").select(
-        "doc_id", "n_tokens", "quality_score", "lang_pred"
-    )
+    return scored.join(keepers, "doc_id").select(*_SCORED)
 
 
 DECONTAMINATE_THRESHOLD = 0.5
@@ -353,16 +351,7 @@ def curate_pipeline(
         ).select("doc_id", F.col("text_clean").alias("text"))
         base = scope.reuse(cleaned, "curate_clean")
 
-    q = quality_columns(F.col("text"))
-    scored = base.select(
-        "doc_id",
-        q["n_tokens"].alias("n_tokens"),
-        q["quality_score"].alias("quality_score"),
-        lang_pred_col(F.col("text")).alias("lang_pred"),
-    ).where(
-        (F.col("quality_score") >= F.lit(min_quality))
-        & F.col("lang_pred").isin(list(langs))
-    )
+    scored = _scored(base).where(_gate(min_quality, langs))
 
     # The decontaminate branch (its eval-shingle count) and the keeper
     # branch (the CC label iterations) each run BLOCKING driver actions at
@@ -392,17 +381,7 @@ def curate_pipeline(
     survivors = scored.join(clean, "doc_id").join(keepers, "doc_id")
 
     shard = F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard")
-    return (
-        survivors.select("doc_id", "n_tokens", "quality_score", "lang_pred", shard)
-        .select(
-            "doc_id",
-            "n_tokens",
-            "quality_score",
-            "lang_pred",
-            "shard",
-            *_pack_columns(budget),
-        )
-    )
+    return survivors.select(*_SCORED, shard).select(*_SCORED, "shard", *_pack_columns(budget))
 
 
 def curate_incremental(
@@ -460,9 +439,7 @@ def curate_incremental(
         .where(F.col("_fp_o").eqNullSafe(F.col("_fp_n")))
         .select("doc_id")
     )
-    retained = prev_keepers.join(unchanged, "doc_id").select(
-        "doc_id", "n_tokens", "quality_score", "lang_pred"
-    )
+    retained = prev_keepers.join(unchanged, "doc_id").select(*_SCORED)
 
     delta = new.join(unchanged, "doc_id", "left_anti")
     unchanged_docs = old.join(unchanged, "doc_id").select("doc_id", "text")

@@ -8,7 +8,12 @@ Scale notes (the 100 TB story):
     pairs are candidate-joined — never an all-pairs product;
   * n-gram Jaccard all-pairs is intentionally restricted to a deterministic
     sample (it is the verification oracle for LSH, not the scale path);
-  * SimHash packs a doc into one 32-bit int; near-dups differ in few bits.
+  * SimHash packs a doc into one 64-bit int (32-bit opt-in); near-dups
+    differ in few bits.
+
+Every banded candidate path (MinHash, SimHash, and the embedding sketch in
+``similarity``) is ``band_rows`` -> ``bucket_join``: one band explode, one
+hot-bucket cap, one self-join per shared bucket.
 
 Hashing is md5-based (not xxhash64) so every operator has a bit-identical
 DuckDB twin for the correctness gate.
@@ -132,27 +137,47 @@ def minhash_signatures(documents: DataFrame, n: int = 3, k: int = N_MINHASH) -> 
     )
 
 
+def band_rows(
+    frame: DataFrame, keys: list, id_col: str = "doc_id", carry: tuple = ()
+) -> DataFrame:
+    """(id_col, *carry, band, bkey) — one row per (row, band), band ``b``
+    keyed by the column ``keys[b]``: the ONE band explode behind
+    ``lsh_bands``, ``simhash_bands`` and ``similarity.lsh_bands_multi``."""
+    bk = F.explode(
+        F.array(*[F.struct(F.lit(b).alias("band"), key.alias("bkey")) for b, key in enumerate(keys)])
+    ).alias("bk")
+    return frame.select(id_col, *carry, bk).select(
+        id_col, *carry, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
+    )
+
+
 def lsh_bands(
     documents: DataFrame, n: int = 3, k: int = N_MINHASH, band_size: int = BAND_SIZE
 ) -> DataFrame:
-    """(doc_id, band, bkey) — one row per (doc, band)."""
-    return _bands_of_sigs(minhash_signatures(documents, n, k), k, band_size)
+    """(doc_id, band, bkey) — one row per (doc, band); bkey is the md5 of
+    the band's ``band_size`` comma-joined signature values."""
+    m = [F.col(f"m{i}").cast("string") for i in range(k)]
+    keys = [
+        F.md5(F.concat_ws(",", *m[b * band_size : (b + 1) * band_size]))
+        for b in range(k // band_size)
+    ]
+    return band_rows(minhash_signatures(documents, n, k), keys)
 
 
-def _bands_of_sigs(sig: DataFrame, k: int, band_size: int) -> DataFrame:
-    """Band projection over an existing (doc_id, m0..m{k-1}) signature
-    frame — split out of ``lsh_bands`` so ``minhash_lsh_pairs`` can pin
-    the signatures once and derive every band reference from the pin."""
-    n_bands = k // band_size
-    band_cols = []
-    for b in range(n_bands):
-        key = F.md5(
-            F.concat_ws(",", *[F.col(f"m{b * band_size + j}").cast("string") for j in range(band_size)])
-        )
-        band_cols.append(F.struct(F.lit(b).alias("band"), key.alias("bkey")))
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+def bucket_stats(bands: DataFrame, max_bucket: int) -> DataFrame:
+    """Per-band bucket accounting of a (band, bkey) list — (band,
+    n_buckets, n_docs, n_hot_buckets, n_docs_in_hot): what the hot-bucket
+    cap of ``bucket_join`` drops, reported so capped coverage is never
+    silent.  The one body of ``lsh_bucket_stats`` and
+    ``simhash_bucket_stats``."""
+    per_bucket = bands.groupBy("band", "bkey").agg(F.count("*").alias("bsz"))
+    hot = F.col("bsz") > max_bucket
+    return per_bucket.groupBy("band").agg(
+        F.count("*").alias("n_buckets"),
+        F.sum("bsz").alias("n_docs"),
+        F.sum(F.when(hot, 1).otherwise(0)).alias("n_hot_buckets"),
+        F.sum(F.when(hot, F.col("bsz")).otherwise(0)).alias("n_docs_in_hot"),
+    )
 
 
 def lsh_bucket_stats(
@@ -162,27 +187,15 @@ def lsh_bucket_stats(
     band_size: int = BAND_SIZE,
     max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
-    """Per-band bucket accounting (how much the hot-bucket cap drops):
-    (band, n_buckets, n_docs, n_hot_buckets, n_docs_in_hot) — report this
-    next to dedup output so capped coverage is never silent."""
-    bands = lsh_bands(documents, n, k, band_size)
-    per_bucket = bands.groupBy("band", "bkey").agg(F.count("*").alias("bsz"))
-    return per_bucket.groupBy("band").agg(
-        F.count("*").alias("n_buckets"),
-        F.sum("bsz").alias("n_docs"),
-        F.sum(F.when(F.col("bsz") > max_bucket, 1).otherwise(0)).alias("n_hot_buckets"),
-        F.sum(F.when(F.col("bsz") > max_bucket, F.col("bsz")).otherwise(0)).alias(
-            "n_docs_in_hot"
-        ),
-    )
+    """``bucket_stats`` of the MinHash bands — report this next to dedup
+    output so what ``minhash_lsh_pairs``' cap drops is visible."""
+    return bucket_stats(lsh_bands(documents, n, k, band_size), max_bucket)
 
 
 def cap_hot_buckets(bands: DataFrame, keys: list, max_bucket: int) -> DataFrame:
     """Drop every row whose bucket (the ``keys`` tuple) holds more than
-    ``max_bucket`` members — the ONE hot-bucket cap shared by
-    ``minhash_lsh_pairs``, ``simhash_pairs``, and
-    ``similarity.cosine_dup_pairs`` (r6 review: keep the three call sites
-    in lockstep).
+    ``max_bucket`` members — the ONE hot-bucket cap, applied by
+    ``bucket_join`` for every banded candidate path.
 
     Shape: groupBy(keys) + inner join-back against the small-bucket set —
     NOT ``count(*) OVER (PARTITION BY keys)``: the 10^8-member bucket the
@@ -199,6 +212,27 @@ def cap_hot_buckets(bands: DataFrame, keys: list, max_bucket: int) -> DataFrame:
         .drop("_bsz")
     )
     return bands.join(small, keys)
+
+
+def bucket_join(
+    bands: DataFrame,
+    keys: list,
+    max_bucket: int,
+    id_col: str = "doc_id",
+    carry: tuple = (),
+) -> DataFrame:
+    """(id_a, id_b, *<c>_a, *<c>_b for c in carry) — one row per bucket two
+    rows share, id_a < id_b, after ``cap_hot_buckets`` on ``keys``.  The
+    equi-keys come first and the id order last, so every caller's plan
+    keeps the same exchanges; callers ``distinct()`` or count the rows."""
+    capped = cap_hot_buckets(bands, keys, max_bucket)
+    a, b = capped.alias("a"), capped.alias("b")
+    on = [F.col(f"a.{key}") == F.col(f"b.{key}") for key in keys]
+    return a.join(b, on + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in ("a", "b") for c in carry],
+    )
 
 
 def minhash_lsh_pairs(
@@ -227,21 +261,8 @@ def minhash_lsh_pairs(
     only added a materialization job + cache traffic.  The recompute-free
     shape is the Exchange reuse, not a cache.
     """
-    bands = cap_hot_buckets(_bands_of_sigs(minhash_signatures(documents, n, k),
-                                           k, band_size),
-                            ["band", "bkey"], max_bucket)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
+    bands = lsh_bands(documents, n, k, band_size)
+    return bucket_join(bands, ["band", "bkey"], max_bucket).distinct()
 
 
 def connected_components(
@@ -387,28 +408,14 @@ def simhash_bands(
     the key identical under arithmetic or logical shift semantics, so the
     sign bit of a 64-bit hash needs no special-casing in either engine.
     """
-    return _bands_of_simhash(simhash(documents, bits), max_hamming, bits)
-
-
-def _bands_of_simhash(
-    sh: DataFrame, max_hamming: int, bits: int
-) -> DataFrame:
-    """Pigeonhole band projection over an existing (doc_id, simhash)
-    frame — split out of ``simhash_bands`` so ``simhash_pairs`` can pin
-    the hashes once and derive every band reference from the pin."""
     n_bands = max_hamming + 1
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), band_bits * b).bitwiseAND(F.lit(mask)).alias("bkey"),
-        )
+    keys = [
+        F.shiftright(F.col("simhash"), band_bits * b).bitwiseAND(F.lit(mask))
         for b in range(n_bands)
     ]
-    return sh.select(
-        "doc_id", "simhash", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+    return band_rows(simhash(documents, bits), keys, carry=("simhash",))
 
 
 def simhash_bucket_stats(
@@ -417,20 +424,10 @@ def simhash_bucket_stats(
     bits: int = SIMHASH_BITS,
     max_bucket: int = SIMHASH_MAX_BUCKET,
 ) -> DataFrame:
-    """Per-band bucket accounting for the simhash pigeonhole bands — the
-    ``lsh_bucket_stats`` twin (r3 verdict #3): what ``simhash_pairs``'
-    hot-bucket cap drops must be driver-visible, never silent.
-    (band, n_buckets, n_docs, n_hot_buckets, n_docs_in_hot)."""
-    bands = simhash_bands(documents, max_hamming, bits)
-    per_bucket = bands.groupBy("band", "bkey").agg(F.count("*").alias("bsz"))
-    return per_bucket.groupBy("band").agg(
-        F.count("*").alias("n_buckets"),
-        F.sum("bsz").alias("n_docs"),
-        F.sum(F.when(F.col("bsz") > max_bucket, 1).otherwise(0)).alias("n_hot_buckets"),
-        F.sum(F.when(F.col("bsz") > max_bucket, F.col("bsz")).otherwise(0)).alias(
-            "n_docs_in_hot"
-        ),
-    )
+    """``bucket_stats`` of the simhash pigeonhole bands (r3 verdict #3):
+    what ``simhash_pairs``' hot-bucket cap drops must be driver-visible,
+    never silent."""
+    return bucket_stats(simhash_bands(documents, max_hamming, bits), max_bucket)
 
 
 def simhash_pairs(
@@ -463,27 +460,9 @@ def simhash_pairs(
     (doc_id, simhash) frame measured ~1.8x slower than letting
     ReuseExchange dedupe the band subtrees.
     """
-    bands = cap_hot_buckets(_bands_of_simhash(simhash(documents, bits),
-                                              max_hamming, bits),
-                            ["band", "bkey"], max_bucket)
-    a = bands.alias("a")
-    b2 = bands.alias("b")
-    cand = (
-        a.join(
-            b2,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.simhash").alias("h_a"),
-            F.col("b.simhash").alias("h_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+    bands = simhash_bands(documents, max_hamming, bits)
+    cand = bucket_join(bands, ["band", "bkey"], max_bucket, carry=("simhash",)).distinct()
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cand.where(ham <= max_hamming)
         .select("id_a", "id_b", ham.cast("int").alias("hamming"))
@@ -902,20 +881,10 @@ def substring_dedup_pairs(
     output is bounded by max_bucket^2 per anchor; requiring
     ``min_anchors`` >= 2 suppresses single-gram coincidences.
     """
-    anch = cap_hot_buckets(
-        substring_anchors(documents, k, anchor_mod), ["anchor"], max_bucket
-    )
-    a = anch.alias("a")
-    b = anch.alias("b")
+    anchors = substring_anchors(documents, k, anchor_mod)
     return (
-        a.join(
-            b,
-            (F.col("a.anchor") == F.col("b.anchor"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
+        bucket_join(anchors, ["anchor"], max_bucket)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("int").alias("n_shared"))
         .where(F.col("n_shared") >= min_anchors)
     )

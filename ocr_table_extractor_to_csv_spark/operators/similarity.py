@@ -19,6 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from .dedup import band_rows, bucket_join
 
 SIM_ROUND = 4
 
@@ -41,6 +44,18 @@ def _norm(a):
     )
 
 
+def _top_k(sim: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id, cos_sim) — the ``k`` highest-cosine
+    rows per query of a (query_id, neighbor_id, cos) frame, ties broken by
+    neighbor id: the one re-rank tail of every top-k path."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        sim.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", F.round("cos", SIM_ROUND).alias("cos_sim"))
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame, k: int = 5, query_mod: int = 50
 ) -> DataFrame:
@@ -48,8 +63,6 @@ def brute_force_topk(
 
     Self-match excluded; rank ties broken by neighbor id (deterministic).
     """
-    from pyspark.sql.window import Window
-
     base = embeddings.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
@@ -64,12 +77,7 @@ def brute_force_topk(
         F.col("vec_id").alias("neighbor_id"),
         (_dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", SIM_ROUND).alias("cos_sim"))
-    )
+    return _top_k(sim, k)
 
 
 DEFAULT_DIM = 64  # test embeddings dimension; callers pass theirs
@@ -557,8 +565,6 @@ def ivf_topk(
     guarantees coverage (e.g. codes were materialized from this exact
     table in the same job).
     """
-    from pyspark.sql.window import Window
-
     cents = train_ivf_centroids(embeddings, n_centroids, n_iter, sample_mod, max_train)
     assign = assign_centroids(embeddings, cents)
 
@@ -662,12 +668,7 @@ def ivf_topk(
             (_dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", SIM_ROUND).alias("cos_sim"))
-    )
+    return _top_k(sim, k)
 
 
 def lsh_bands_multi(
@@ -676,28 +677,10 @@ def lsh_bands_multi(
     n_tables: int = 8,
     dim: int = DEFAULT_DIM,
 ) -> DataFrame:
-    """(vec_id, table, bucket) band list from the single-pass sketch."""
-    return _bands_of_sketch(
-        multi_table_sketch(embeddings, n_planes, n_tables, dim), n_tables
-    )
-
-
-def _bands_of_sketch(sk: DataFrame, n_tables: int) -> DataFrame:
-    """Band explode over an existing (vec_id, b0..b{n_tables-1}) sketch
-    frame — split out so callers that reference the band list from several
-    plan branches can pin the sketch once (the 48 literal-weight
-    projections under it are the expensive part)."""
-    return sk.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("table"), F.col(f"b{t}").alias("bucket"))
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
+    """(vec_id, band, bkey) band list from the single-pass sketch: band =
+    hash table, bkey = the vector's bucket in it."""
+    sketch = multi_table_sketch(embeddings, n_planes, n_tables, dim)
+    return band_rows(sketch, [F.col(f"b{t}") for t in range(n_tables)], id_col="vec_id")
 
 
 def cosine_dup_pairs(
@@ -709,12 +692,13 @@ def cosine_dup_pairs(
     max_bucket: int = 256,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup-by-embedding path):
-    candidate pairs share any LSH (table, bucket); exact cosine >= threshold
+    candidate pairs share any LSH (band, bkey) = (table, bucket); exact
+    cosine >= threshold
     confirms.  Never all-pairs — the same banded candidate join as
     ``lsh_topk`` — and buckets with > ``max_bucket`` members are skipped per
     band (hot-bucket guard, same rationale as dedup.minhash_lsh_pairs; the
-    cap is the shared skew-safe ``dedup.cap_hot_buckets`` — groupBy +
-    join-back, never a window over the hot bucket key).  Missed duplicates
+    candidates are the shared ``dedup.bucket_join``, whose cap is a groupBy
+    + join-back, never a window over the hot bucket key).  Missed duplicates
     are the LSH recall tradeoff; raise n_tables to trade compute for
     recall.
 
@@ -723,24 +707,8 @@ def cosine_dup_pairs(
     ReuseExchange dedupes the identical band subtrees behind one shuffle,
     so the hyperplane projections run once per distinct exchange, not
     once per reference."""
-    from .dedup import cap_hot_buckets
-
-    bands = cap_hot_buckets(
-        lsh_bands_multi(embeddings, n_planes, n_tables, dim),
-        ["table", "bucket"], max_bucket,
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .distinct()
-    )
+    bands = lsh_bands_multi(embeddings, n_planes, n_tables, dim)
+    pairs = bucket_join(bands, ["band", "bkey"], max_bucket, id_col="vec_id").distinct()
     base = embeddings.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     ).where(F.col("nrm") > 0)
@@ -784,21 +752,20 @@ def lsh_topk(
 
     Scale shape (single-pass rewrite of the r01 8-scan union):
       1. one scan sketches all tables' buckets (``multi_table_sketch``);
-      2. the (vec_id, table, bucket) band list — a few longs per vector —
-         self-joins on (table, bucket) for candidate ids;
+      2. the (vec_id, band, bkey) band list (band = table, bkey = bucket)
+         — a few longs per vector — self-joins on (band, bkey) for
+         candidate ids;
       3. vectors are fetched once for the distinct candidates (co-located
          join on vec_id); the tiny query-sample side broadcasts.
     Everything stays JVM-side column expressions (plan-asserted in tests).
     """
-    from pyspark.sql.window import Window
-
     bands = lsh_bands_multi(embeddings, n_planes, n_tables, dim)
 
     qb = bands.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
-        F.col("vec_id").alias("query_id"), "table", "bucket"
+        F.col("vec_id").alias("query_id"), "band", "bkey"
     )
     cand_ids = (
-        qb.join(bands, ["table", "bucket"])
+        qb.join(bands, ["band", "bkey"])
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
         .distinct()
@@ -820,9 +787,4 @@ def lsh_topk(
         F.col("vec_id").alias("neighbor_id"),
         (_dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", SIM_ROUND).alias("cos_sim"))
-    )
+    return _top_k(sim, k)

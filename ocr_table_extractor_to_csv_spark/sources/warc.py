@@ -113,111 +113,100 @@ def parse_warc_records(
         pos = body_end
 
 
-def warc_batches_fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel over (path, content) file batches -> page rows.
+def _segment_batches(want: str, payload: pa.Field, decode):
+    """mapInArrow kernel over (path, content) file batches -> one row
+    (url, warc_ts, <payload>, error) per ``want`` record, the record body
+    passed through ``decode``.  ``.gz`` segments are decompressed first
+    (multi-member aware: Common Crawl gzips one member per record).  A
+    parse failure adds ONE error row for the bad file (url = file path,
+    payload NULL) after the rows it did parse, instead of a task failure."""
 
-    The kernel of ``read_warc``.  Parse failures produce ONE error row per
-    bad file (url = file path, html NULL) instead of a task failure.
-    """
-    for b in batches:
-        paths = b.column("path").to_pylist()
-        contents = b.column("content").to_pylist()
-        urls: List[Optional[str]] = []
-        tss: List[object] = []
-        htmls: List[Optional[bytes]] = []
-        errs: List[Optional[str]] = []
-        for p, raw in zip(paths, contents):
-            try:
-                data = bytes(raw or b"")
-                if data[:2] == b"\x1f\x8b":
-                    # multi-member aware: CC gzips one member per record
-                    data = gzip.decompress(data)
-                for url, ts, html in parse_warc_records(data):
-                    urls.append(url)
-                    tss.append(ts)
-                    htmls.append(html)
-                    errs.append(None)
-            except Exception as exc:
-                urls.append(p)
-                tss.append(None)
-                htmls.append(None)
-                errs.append(f"{type(exc).__name__}: {exc}")
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(urls, pa.string()),
-                pa.array(tss, pa.timestamp("us", tz="UTC")),
-                pa.array(htmls, pa.binary()),
-                pa.array(errs, pa.string()),
-            ],
-            names=["url", "warc_ts", "html", "error"],
-        )
+    def batches_fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            rows: List[tuple] = []
+            for p, raw in zip(b.column("path").to_pylist(), b.column("content").to_pylist()):
+                try:
+                    data = bytes(raw or b"")
+                    if data[:2] == b"\x1f\x8b":
+                        data = gzip.decompress(data)
+                    for url, ts, body in parse_warc_records(data, want):
+                        rows.append((url, ts, decode(body), None))
+                except Exception as exc:
+                    rows.append((p, None, None, f"{type(exc).__name__}: {exc}"))
+            urls, tss, payloads, errs = zip(*rows) if rows else ((),) * 4
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(urls, pa.string()),
+                    pa.array(tss, pa.timestamp("us", tz="UTC")),
+                    pa.array(payloads, payload.type),
+                    pa.array(errs, pa.string()),
+                ],
+                names=["url", "warc_ts", payload.name, "error"],
+            )
+
+    return batches_fn
 
 
-def read_warc(spark, path: str) -> DataFrame:
-    """Directory/glob of .warc/.warc.gz files -> (url, warc_ts, html, error)."""
+def _read_segments(spark, path: str, glob: str, want: str, payload: pa.Field, decode, schema: str) -> DataFrame:
     files = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc*")
+        .option("pathGlobFilter", glob)
         .load(path)
         .select("path", "content")
     )
-    return files.mapInArrow(worker_batches(warc_batches_fn), WARC_PAGES_SCHEMA)
+    return files.mapInArrow(worker_batches(_segment_batches(want, payload, decode)), schema)
+
+
+def read_warc(spark, path: str) -> DataFrame:
+    """Directory/glob of .warc/.warc.gz files -> (url, warc_ts, html, error):
+    ``response`` records, HTTP header block stripped."""
+    return _read_segments(
+        spark, path, "*.warc*", "response", pa.field("html", pa.binary()), bytes, WARC_PAGES_SCHEMA
+    )
 
 
 WET_PAGES_SCHEMA = "url string, warc_ts timestamp, text string, error string"
-
-
-def wet_batches_fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel over (path, content) file batches -> WET text
-    rows: ``WARC-Type: conversion`` records decoded utf-8 (replace —
-    Common Crawl WET payloads are declaredly utf-8 but not guaranteed
-    valid).  Same error contract as ``warc_batches_fn``: one error row
-    per bad file, never a task failure."""
-    for b in batches:
-        paths = b.column("path").to_pylist()
-        contents = b.column("content").to_pylist()
-        urls: List[Optional[str]] = []
-        tss: List[object] = []
-        texts: List[Optional[str]] = []
-        errs: List[Optional[str]] = []
-        for p, raw in zip(paths, contents):
-            try:
-                data = bytes(raw or b"")
-                if data[:2] == b"\x1f\x8b":
-                    data = gzip.decompress(data)
-                for url, ts, payload in parse_warc_records(data, want="conversion"):
-                    urls.append(url)
-                    tss.append(ts)
-                    texts.append(payload.decode("utf-8", "replace"))
-                    errs.append(None)
-            except Exception as exc:
-                urls.append(p)
-                tss.append(None)
-                texts.append(None)
-                errs.append(f"{type(exc).__name__}: {exc}")
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(urls, pa.string()),
-                pa.array(tss, pa.timestamp("us", tz="UTC")),
-                pa.array(texts, pa.string()),
-                pa.array(errs, pa.string()),
-            ],
-            names=["url", "warc_ts", "text", "error"],
-        )
 
 
 def read_wet(spark, path: str) -> DataFrame:
     """Directory/glob of .warc.wet(.gz) extracted-text segments ->
     (url, warc_ts, text, error) — the Common Crawl WET shortcut when the
     corpus build wants TEXT and can accept CC's own extraction instead of
-    running this engine's (the curation/dedup surface consumes either)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wet*")
-        .load(path)
-        .select("path", "content")
+    running this engine's (the curation/dedup surface consumes either).
+    ``conversion`` records are decoded utf-8 with replacement: Common Crawl
+    WET payloads are declaredly utf-8 but not guaranteed valid."""
+    return _read_segments(
+        spark, path, "*.wet*", "conversion", pa.field("text", pa.string()),
+        lambda body: body.decode("utf-8", "replace"), WET_PAGES_SCHEMA,
     )
-    return files.mapInArrow(worker_batches(wet_batches_fn), WET_PAGES_SCHEMA)
+
+
+def _write_segments(
+    records, out_dir: str, n_segments: int, gzip_members: bool, ext: str, head: bytes = b""
+) -> int:
+    """Write (seg_key, record bytes) pairs into ``seg_key % n_segments``
+    files ``seg-K.<ext>(.gz)``, each file starting with ``head``, each
+    record (and ``head``) its own gzip member when ``gzip_members``; then a
+    ``_COMPLETE`` marker.  Returns the record count."""
+    import os
+
+    segs: dict = {}
+    n = 0
+    for seg_key, rec in records:
+        segs.setdefault(int(seg_key) % n_segments, []).append(
+            gzip.compress(rec) if gzip_members else rec
+        )
+        n += 1
+    if gzip_members:
+        head = gzip.compress(head) if head else head
+        ext += ".gz"
+    os.makedirs(out_dir, exist_ok=True)
+    for k, recs in segs.items():
+        with open(os.path.join(out_dir, f"seg-{k:05d}.{ext}"), "wb") as f:
+            f.write(head + b"".join(recs))
+    with open(os.path.join(out_dir, "_COMPLETE"), "w") as f:
+        f.write(str(n))
+    return n
 
 
 def write_warc_segments(
@@ -239,27 +228,16 @@ def write_warc_segments(
     This is driver-side fixture generation (bounded, test-scale) — a real
     100 TB corpus arrives as WARC already; the scale path is read_warc.
     """
-    import os
-
-    segs: dict = {}
-    n = 0
-    for seg_key, url, ts, body in records:
-        rec = b""
-        if interleave_requests:
-            rec += warc_record(f"{url}#req", ts, b"GET / HTTP/1.1", warc_type="request")
-        rec += warc_record(url, ts, body)
-        if gzip_members:
-            rec = gzip.compress(rec)
-        segs.setdefault(int(seg_key) % n_segments, []).append(rec)
-        n += 1
-    os.makedirs(out_dir, exist_ok=True)
-    ext = "warc.gz" if gzip_members else "warc"
-    for k, recs in segs.items():
-        with open(os.path.join(out_dir, f"seg-{k:05d}.{ext}"), "wb") as f:
-            f.write(b"".join(recs))
-    with open(os.path.join(out_dir, "_COMPLETE"), "w") as f:
-        f.write(str(n))
-    return n
+    recs = (
+        (
+            seg_key,
+            (warc_record(f"{url}#req", ts, b"GET / HTTP/1.1", warc_type="request")
+             if interleave_requests else b"")
+            + warc_record(url, ts, body),
+        )
+        for seg_key, url, ts, body in records
+    )
+    return _write_segments(recs, out_dir, n_segments, gzip_members, "warc")
 
 
 def warc_record(
@@ -327,28 +305,12 @@ def write_wet_segments(
     readers must length-skip it), then one ``conversion`` member per
     record, each its own gzip member when ``gzip_members``.  Writes
     ``seg-K.warc.wet(.gz)`` + ``_COMPLETE``; returns the record count."""
-    import os
-
-    segs: dict = {}
-    n = 0
-    for seg_key, url, ts, text in records:
-        rec = warc_record(url, ts, text.encode("utf-8"),
-                          warc_type="conversion", http=False)
-        if gzip_members:
-            rec = gzip.compress(rec)
-        segs.setdefault(int(seg_key) % n_segments, []).append(rec)
-        n += 1
+    recs = (
+        (seg_key, warc_record(url, ts, text.encode("utf-8"), warc_type="conversion", http=False))
+        for seg_key, url, ts, text in records
+    )
     info = warc_record(
         "urn:wet-synthesizer", "2025-01-01T00:00:00Z",
         b"software: write_wet_segments", warc_type="warcinfo", http=False,
     )
-    if gzip_members:
-        info = gzip.compress(info)
-    os.makedirs(out_dir, exist_ok=True)
-    ext = "warc.wet.gz" if gzip_members else "warc.wet"
-    for k, recs in segs.items():
-        with open(os.path.join(out_dir, f"seg-{k:05d}.{ext}"), "wb") as f:
-            f.write(info + b"".join(recs))
-    with open(os.path.join(out_dir, "_COMPLETE"), "w") as f:
-        f.write(str(n))
-    return n
+    return _write_segments(recs, out_dir, n_segments, gzip_members, "warc.wet", head=info)

@@ -5,6 +5,8 @@ definitions (file:line cited inline), giving byte-level pins that are
 independent of the kernel implementation.
 """
 
+import pytest
+
 from ocr_table_extractor_to_csv_spark.kernel import extract_document
 from ocr_table_extractor_to_csv_spark.kernel.hocr import scan_tokens
 from ocr_table_extractor_to_csv_spark.kernel.lines import build_lines
@@ -438,6 +440,24 @@ def test_html_entities_and_malformed_markup():
         "unclosed paragraph with plenty of text to keep"
     )
 
+
+
+@pytest.mark.parametrize("depth", [1000, 20000])
+@pytest.mark.parametrize("tag", ["p", "div"])
+def test_deeply_nested_html_is_not_an_error_row(tag, depth):
+    """The lenient parser never auto-closes <p>/<div>, so a page of
+    ``depth`` unclosed tags nests ``depth`` levels deep.  The main-text walk
+    must not recurse per level (1,000 levels overflowed the interpreter
+    stack and made the page an error row).  Only the innermost paragraph is
+    a leaf block, so it alone is the main text."""
+    from ocr_table_extractor_to_csv_spark.operators.extract import _extract_one
+
+    html = "<html><body>" + "".join(
+        f"<{tag}>paragraph number {i} of a long page " for i in range(depth)
+    )
+    res = _extract_one(html.encode(), "html", {})
+    assert res.error is None
+    assert res.main_text == f"paragraph number {depth - 1} of a long page"
 
 def test_header_regex_window_and_reorder():
     """F7 (rows.py:137-162): header regexes search rows 0..2 as a lowered

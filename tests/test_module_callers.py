@@ -7,6 +7,8 @@ import is dead code with a test attached: delete it, or give it a caller.
 """
 
 import ast
+import difflib
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -134,3 +136,41 @@ def test_every_map_stage_goes_through_worker_batches():
                     bare.append(where)
     assert stages, "no map stages found: the scan is broken"
     assert bare == [], "map stages without worker_batches"
+
+
+def _body_tokens(fn: ast.FunctionDef) -> list:
+    """The tokens of ``fn``'s body without its docstring, as ``ast.unparse``
+    prints it (so formatting and comments do not count)."""
+    body = fn.body
+    if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+        body = body[1:]
+    return re.findall(r"\w+|[^\w\s]", "\n".join(ast.unparse(s) for s in body))
+
+
+def test_no_twin_functions():
+    """No two package functions of >= 60 body tokens are near-copies
+    (difflib ratio >= 0.9 over their tokens): fold a twin into one helper
+    with a parameter instead.  Pairs whose lengths differ by more than 10%
+    cannot reach the bound and are skipped, as is a function nested in the
+    other."""
+    fns = []
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                toks = _body_tokens(node)
+                if len(toks) >= 60:
+                    fns.append((path, node, toks))
+    twins = []
+    for i, (pa, a, ta) in enumerate(fns):
+        for pb, b, tb in fns[i + 1 :]:
+            if max(len(ta), len(tb)) > 1.1 * min(len(ta), len(tb)):
+                continue
+            if pa == pb and (a.lineno <= b.lineno <= a.end_lineno or b.lineno <= a.lineno <= b.end_lineno):
+                continue
+            sm = difflib.SequenceMatcher(None, ta, tb, autojunk=False)
+            if sm.real_quick_ratio() >= 0.9 and sm.quick_ratio() >= 0.9 and sm.ratio() >= 0.9:
+                twins.append(
+                    f"{pa.relative_to(ROOT)}::{a.name} ~ {pb.relative_to(ROOT)}::{b.name} "
+                    f"({sm.ratio():.2f})"
+                )
+    assert twins == [], "near-duplicate functions"
