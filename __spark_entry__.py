@@ -103,10 +103,6 @@ def _emb_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fan(_emb(spark, sf_dir), sf_dir, "embeddings")
 
 
-def _events_f(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fan(_events(spark, sf_dir), sf_dir, "events")
-
-
 # ---------------------------------------------------------------------------
 # Extraction queries: pages synthesized from documents.text (one builder per
 # kind in sources/pages.py KINDS, each with the reason its extraction is
@@ -440,53 +436,42 @@ def _segments_fixture_dir(spark, sf_dir: str, name: str, write, body) -> str:
     return d
 
 
-def q_warc_roundtrip(spark, sf_dir):
-    """WARC source end to end: raw gzip-member segments -> record splitter
-    (length framing, header strip, non-response skip) -> (url, body) —
-    oracle-checked at the value level against the documents the segments
-    were synthesized from (r3 verdict #4: the newest parser gets the same
-    evidence class as every other surface)."""
-    from ocr_table_extractor_to_csv_spark.sources.warc import read_warc, write_warc_segments
-
-    d = _segments_fixture_dir(
-        spark, sf_dir, "warc_fixture", write_warc_segments, lambda text: text.encode("utf-8")
-    )
-    pages = read_warc(spark, d)
-    return pages.where(F.col("error").isNull()).select(
-        "url",
-        F.md5(F.col("html")).alias("html_md5"),
-        F.length(F.col("html")).cast("long").alias("n_bytes"),
-    )
+# per segment kind: (payload column, its length alias, a document's text as
+# the record payload, the oracle's length of ``text``)
+_ROUNDTRIPS = {
+    "warc": ("html", "n_bytes", lambda t: t.encode(), "octet_length(encode(text))"),
+    "wet": ("text", "n_chars", lambda t: t, "length(text)"),
+}
 
 
-ORACLE_WARC_ROUNDTRIP = """
+def _roundtrip(kind: str):
+    """The WARC or WET source end to end: gzip-member segments -> record
+    splitter (length framing, header strip, request/warcinfo skip, payload
+    decode) -> (url, payload), value-checked against the documents the
+    segments were synthesized from."""
+    col, len_alias, body, _ = _ROUNDTRIPS[kind]
+
+    def q(spark, sf_dir):
+        from ocr_table_extractor_to_csv_spark.sources import warc
+
+        write = getattr(warc, f"write_{kind}_segments")
+        d = _segments_fixture_dir(spark, sf_dir, f"{kind}_fixture", write, body)
+        pages = getattr(warc, f"read_{kind}")(spark, d)
+        return pages.where(F.col("error").isNull()).select(
+            "url",
+            F.md5(F.col(col)).alias(f"{col}_md5"),
+            F.length(F.col(col)).cast("long").alias(len_alias),
+        )
+
+    return q
+
+
+def _oracle_roundtrip(kind: str) -> str:
+    col, len_alias, _, n_sql = _ROUNDTRIPS[kind]
+    return f"""
 SELECT 'https://docs.example/' || CAST(doc_id AS VARCHAR) AS url,
-       md5(text) AS html_md5,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-FROM documents
-"""
-
-
-def q_wet_roundtrip(spark, sf_dir):
-    """WET source end to end: gzip-member extracted-text segments ->
-    record splitter (length framing, warcinfo skip, conversion decode) ->
-    (url, text) — value-checked against the documents the segments were
-    synthesized from (same evidence class as warc_roundtrip)."""
-    from ocr_table_extractor_to_csv_spark.sources.warc import read_wet, write_wet_segments
-
-    d = _segments_fixture_dir(spark, sf_dir, "wet_fixture", write_wet_segments, lambda text: text)
-    pages = read_wet(spark, d)
-    return pages.where(F.col("error").isNull()).select(
-        "url",
-        F.md5(F.col("text")).alias("text_md5"),
-        F.length(F.col("text")).cast("long").alias("n_chars"),
-    )
-
-
-ORACLE_WET_ROUNDTRIP = """
-SELECT 'https://docs.example/' || CAST(doc_id AS VARCHAR) AS url,
-       md5(text) AS text_md5,
-       CAST(length(text) AS BIGINT) AS n_chars
+       md5(text) AS {col}_md5,
+       CAST({n_sql} AS BIGINT) AS {len_alias}
 FROM documents
 """
 
@@ -2026,54 +2011,6 @@ FROM c
 """
 
 
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (the reference span-merge A4 as a real
-    DataFrame window op): 1800s idle gap starts a new session."""
-    from pyspark.sql.window import Window
-
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gapped = ev.withColumn(
-        "new_sess",
-        (
-            F.coalesce(
-                F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w)),
-                F.lit(10**9),
-            )
-            > 1800
-        ).cast("int"),
-    )
-    sess = gapped.withColumn(
-        "sess_id", F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    return (
-        sess.groupBy("user_id")
-        .agg(
-            F.countDistinct("sess_id").alias("n_sessions"),
-            F.count("*").alias("n_events"),
-        )
-    )
-
-
-ORACLE_SESSIONIZE = """
-WITH g AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), s AS (
-  SELECT user_id,
-         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS sess_id
-  FROM g
-)
-SELECT user_id, CAST(count(DISTINCT sess_id) AS BIGINT) AS n_sessions,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM s GROUP BY 1
-"""
-
-
 def q_windowed_counts(spark, sf_dir):
     """Tumbling event-time windows through the SAME shared builder the
     streaming job uses (streaming/windows.windowed_event_counts — the
@@ -2100,58 +2037,6 @@ SELECT CAST(epoch(time_bucket(INTERVAL 1 HOUR, ts)) AS BIGINT) AS ws_epoch,
        round(sum(value), 2) AS sum_value
 FROM events WHERE ts IS NOT NULL
 GROUP BY 1, 2, 3
-"""
-
-
-def q_json_props_stats(spark, sf_dir):
-    """Semi-structured extraction: events.props is a JSON column (the
-    universal web-pipeline shape); get_json_object pulls $.k JVM-side and
-    integer-only aggregates keep the rollup order-independent-exact."""
-    ev = _events(spark, sf_dir)
-    k = F.get_json_object(F.col("props"), "$.k").cast("int")
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.count(k).alias("n_with_k"),
-        F.sum(k).alias("sum_k"),
-        F.min(k).alias("min_k"),
-        F.max(k).alias("max_k"),
-    )
-
-
-ORACLE_JSON_PROPS = """
-WITH t AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS INT) AS k
-  FROM events
-)
-SELECT event_type,
-       count(*) AS n,
-       count(k) AS n_with_k,
-       CAST(sum(k) AS BIGINT) AS sum_k,
-       min(k) AS min_k,
-       max(k) AS max_k
-FROM t GROUP BY 1
-"""
-
-
-def q_event_histogram(spark, sf_dir):
-    """Value-axis histogram — the relational analogue of the reference's
-    projection-profile aggregation (SURVEY A1)."""
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy(F.floor(F.col("value") / 10).cast("long").alias("bucket"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-
-
-ORACLE_EVENT_HISTOGRAM = """
-SELECT CAST(floor(value / 10) AS BIGINT) AS bucket,
-       count(*) AS n,
-       round(sum(value), 2) AS sum_value
-FROM events GROUP BY 1
 """
 
 
@@ -3048,171 +2933,90 @@ ORDER BY doc_id
 """
 
 
+# The driver registry: one (name, query, oracle) row per query, every query
+# with a full value-level DuckDB oracle.  Row ORDER is the driver's rotation
+# policy: the external driver records only the first ~50 rows of a round,
+# so a query that is new, or whose oracle was red last round, goes first,
+# then the rest oldest external evidence first; each query must keep an
+# external green row in the last two rounds.  tests/test_oracle_parity.py
+# runs every row locally whatever the order.
+_REGISTRY: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str], ...] = (
+    ("pagerank", q_pagerank, _oracle_pagerank()),
+    ("kmv_distinct", q_kmv_distinct, _oracle_kmv_distinct()),
+    ("cluster_stats", q_cluster_stats, _oracle_cluster_stats()),
+    ("wet_roundtrip", _roundtrip("wet"), _oracle_roundtrip("wet")),
+    ("pagerank_weights", q_pagerank_weights, _oracle_pagerank_weights()),
+    ("line_dedup_within", q_line_dedup_within, ORACLE_LINE_DEDUP_WITHIN),
+    ("normalize_text", q_normalize_text, ORACLE_NORMALIZE_TEXT),
+    ("gopher_rules", q_gopher_rules, ORACLE_GOPHER_RULES),
+    ("url_filter", q_url_filter, ORACLE_URL_FILTER),
+    ("domain_cap", q_domain_cap, ORACLE_DOMAIN_CAP),
+    ("substring_dedup", q_substring_dedup, ORACLE_SUBSTRING_DEDUP),
+    ("quality_classifier", q_quality_classifier, ORACLE_QUALITY_CLASSIFIER),
+    ("semdedup", q_semdedup, _oracle_semdedup()),
+    ("mix_sample", q_mix_sample, _oracle_mix_sample()),
+    ("pipeline_full_v3", q_pipeline_full_v3, _oracle_pipeline_v3()),
+    ("similarity_ivf_q", q_similarity_ivf_q, _oracle_similarity_ivf(refine_q8=IVF_Q8_REFINE)),
+    ("embedding_quantize", q_embedding_quantize, ORACLE_EMBEDDING_QUANTIZE),
+    ("bpe_train", q_bpe_train, _oracle_bpe_train()),
+    ("token_count_trained", q_token_count_trained, _oracle_token_count_trained()),
+    ("mix_plan", q_mix_plan, _oracle_mix_plan()),
+    ("similarity_lsh", q_similarity_lsh, ORACLE_SIMILARITY_LSH),
+    ("similarity_ivf", q_similarity_ivf, _oracle_similarity_ivf()),
+    ("eval_numeric", q_eval_numeric, ORACLE_EVAL_NUMERIC),
+    ("eval_text", q_eval_text, ORACLE_EVAL_TEXT),
+    ("windowed_counts", q_windowed_counts, ORACLE_WINDOWED_COUNTS),
+    ("extract_grid4", q_extract_grid4, ORACLE_GRID4),
+    ("extract_fin_grid", q_extract_fin_grid, ORACLE_FIN_GRID),
+    ("extract_dyn_grid", q_extract_dyn_grid, ORACLE_DYN_GRID),
+    ("dataset_grid", q_dataset_grid, ORACLE_DATASET_GRID),
+    ("extract_fixture_professional", q_extract_fixture_professional, ORACLE_PRO_GRID),
+    ("extract_fixture_boiler", q_extract_fixture_boiler, ORACLE_BOILER),
+    ("extract_mixed_dispatch", q_extract_mixed_dispatch, _oracle_mixed_dispatch()),
+    ("extract_args_dispatch", q_extract_args_dispatch, ORACLE_ARGS_DISPATCH),
+    ("extract_transformers", q_extract_transformers, ORACLE_GRID4),
+    ("warc_roundtrip", _roundtrip("warc"), _oracle_roundtrip("warc")),
+    ("giants_resume", q_giants_resume, ORACLE_GIANTS_RESUME),
+    ("bloom_dedup", q_bloom_dedup, _oracle_bloom_dedup()),
+    ("curate_incremental", q_curate_incremental, _oracle_curate_incremental()),
+    ("token_count", q_token_count, ORACLE_TOKEN_COUNT),
+    ("token_count_bpe", q_token_count_bpe, ORACLE_TOKEN_COUNT_BPE),
+    ("text_quality", q_text_quality, ORACLE_TEXT_QUALITY),
+    ("lang_id", q_lang_id, _oracle_lang_id()),
+    ("fingerprint", q_fingerprint, ORACLE_FINGERPRINT),
+    ("pii_scrub", q_pii_scrub, _oracle_pii_scrub()),
+    ("vocab_topk", q_vocab_topk, ORACLE_VOCAB_TOPK),
+    ("search_topk", q_search_topk, _oracle_search_topk()),
+    ("repetition_stats", q_repetition_stats, _oracle_repetition()),
+    ("source_stats", q_source_stats, ORACLE_SOURCE_STATS),
+    ("decontaminate", q_decontaminate, _oracle_decontaminate()),
+    ("sample_stratified", q_sample_stratified, ORACLE_SAMPLE_STRATIFIED),
+    ("url_dedup", q_url_dedup, ORACLE_URL_DEDUP),
+    ("line_dedup", q_line_dedup, ORACLE_LINE_DEDUP),
+    ("line_dedup_clean", q_line_dedup_clean, ORACLE_LINE_DEDUP_CLEAN),
+    ("corpus_diff", q_corpus_diff, ORACLE_CORPUS_DIFF),
+    ("pack_sequences", q_pack_sequences, ORACLE_PACK_SEQUENCES),
+    ("curate", q_curate, _oracle_curate()),
+    ("curate_neardup", q_curate_neardup, _oracle_curate_neardup()),
+    ("pipeline_full", q_pipeline_full, _oracle_pipeline_full()),
+    ("pipeline_full_v2", q_pipeline_full_v2, _oracle_pipeline_v2()),
+    ("dedup_exact", q_dedup_exact, ORACLE_DEDUP_EXACT),
+    ("ngram_jaccard", q_ngram_jaccard, ORACLE_NGRAM_JACCARD),
+    ("minhash_lsh", q_minhash_lsh, ORACLE_MINHASH_LSH),
+    ("lsh_bucket_stats", q_lsh_bucket_stats, ORACLE_LSH_BUCKET_STATS),
+    ("dedup_clusters", q_dedup_clusters, _oracle_dedup_clusters()),
+    ("simhash", q_simhash, ORACLE_SIMHASH),
+    ("simhash64", q_simhash64, _oracle_simhash_hash(64, "simhash64")),
+    ("simhash_pairs", q_simhash_pairs, _oracle_simhash_pairs()),
+    ("simhash_bucket_stats", q_simhash_bucket_stats, _oracle_simhash_bucket_stats()),
+    ("dedup_embedding", q_dedup_embedding, _oracle_dedup_embedding()),
+    ("similarity_topk", q_similarity_topk, ORACLE_SIMILARITY_TOPK),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry ORDER is the ROTATION POLICY (r5 verdict #3): the external
-    # driver records at most ~50 rows per round, so ordering decides which
-    # entries get an external row.  Policy: (1) rows that are NEW this
-    # round or were RED last round go first; (2) then every entry whose
-    # last external row is one round old (the r5 cap skipped the final 10);
-    # (3) then last-round-green veterans, oldest-evidence first — the cap
-    # only ever costs queries that were externally green LAST round.
-    # Invariant: every registered query has an external green row in the
-    # last two rounds.  tests/test_oracle_parity.py runs the FULL surface
-    # locally regardless (plus tools/self_correctness.py at two SFs).
-    return {
-        # -- (1) new in r6 / red in r5 --
-        "pagerank": q_pagerank,
-        "kmv_distinct": q_kmv_distinct,
-        "cluster_stats": q_cluster_stats,
-        "wet_roundtrip": q_wet_roundtrip,
-        "pagerank_weights": q_pagerank_weights,
-        "line_dedup_within": q_line_dedup_within,
-        "normalize_text": q_normalize_text,
-        "gopher_rules": q_gopher_rules,
-        "url_filter": q_url_filter,
-        "domain_cap": q_domain_cap,
-        "substring_dedup": q_substring_dedup,
-        "quality_classifier": q_quality_classifier,
-        "semdedup": q_semdedup,
-        "mix_sample": q_mix_sample,
-        "pipeline_full_v3": q_pipeline_full_v3,
-        "similarity_ivf_q": q_similarity_ivf_q,
-        "embedding_quantize": q_embedding_quantize,
-        "bpe_train": q_bpe_train,  # merge semantics changed in r6 (fixpoint)
-        "token_count_trained": q_token_count_trained,  # same
-        "mix_plan": q_mix_plan,  # absent-source outer join added in r6
-        # -- (2) externally last seen in r4 (capped out of the r5 sweep) --
-        "similarity_lsh": q_similarity_lsh,
-        "similarity_ivf": q_similarity_ivf,
-        "eval_numeric": q_eval_numeric,
-        "eval_text": q_eval_text,
-        "sessionize": q_sessionize,
-        "windowed_counts": q_windowed_counts,
-        "json_props_stats": q_json_props_stats,
-        # -- (3) green in the r5 external sweep, oldest-first --
-        "extract_grid4": q_extract_grid4,
-        "event_histogram": q_event_histogram,
-        "extract_fin_grid": q_extract_fin_grid,
-        "extract_dyn_grid": q_extract_dyn_grid,
-        "dataset_grid": q_dataset_grid,
-        "extract_fixture_professional": q_extract_fixture_professional,
-        "extract_fixture_boiler": q_extract_fixture_boiler,
-        "extract_mixed_dispatch": q_extract_mixed_dispatch,
-        "extract_args_dispatch": q_extract_args_dispatch,
-        "extract_transformers": q_extract_transformers,
-        "warc_roundtrip": q_warc_roundtrip,
-        "giants_resume": q_giants_resume,
-        "bloom_dedup": q_bloom_dedup,
-        "curate_incremental": q_curate_incremental,
-        "token_count": q_token_count,
-        "token_count_bpe": q_token_count_bpe,
-        "text_quality": q_text_quality,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "pii_scrub": q_pii_scrub,
-        "vocab_topk": q_vocab_topk,
-        "search_topk": q_search_topk,
-        "repetition_stats": q_repetition_stats,
-        "source_stats": q_source_stats,
-        "decontaminate": q_decontaminate,
-        "sample_stratified": q_sample_stratified,
-        "url_dedup": q_url_dedup,
-        "line_dedup": q_line_dedup,
-        "line_dedup_clean": q_line_dedup_clean,
-        "corpus_diff": q_corpus_diff,
-        "pack_sequences": q_pack_sequences,
-        "curate": q_curate,
-        "curate_neardup": q_curate_neardup,
-        "pipeline_full": q_pipeline_full,
-        "pipeline_full_v2": q_pipeline_full_v2,
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
-        "minhash_lsh": q_minhash_lsh,
-        "lsh_bucket_stats": q_lsh_bucket_stats,
-        "dedup_clusters": q_dedup_clusters,
-        "simhash": q_simhash,
-        "simhash64": q_simhash64,
-        "simhash_pairs": q_simhash_pairs,
-        "simhash_bucket_stats": q_simhash_bucket_stats,
-        "dedup_embedding": q_dedup_embedding,
-        "similarity_topk": q_similarity_topk,
-    }
+    return {name: q for name, q, _ in _REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    # every queries() entry has a full value-level oracle
-    return {
-        "extract_grid4": ORACLE_GRID4,
-        "event_histogram": ORACLE_EVENT_HISTOGRAM,
-        "extract_fin_grid": ORACLE_FIN_GRID,
-        "extract_dyn_grid": ORACLE_DYN_GRID,
-        "dataset_grid": ORACLE_DATASET_GRID,
-        "extract_fixture_professional": ORACLE_PRO_GRID,
-        "extract_fixture_boiler": ORACLE_BOILER,
-        "extract_mixed_dispatch": _oracle_mixed_dispatch(),
-        "extract_args_dispatch": ORACLE_ARGS_DISPATCH,
-        "extract_transformers": ORACLE_GRID4,
-        "warc_roundtrip": ORACLE_WARC_ROUNDTRIP,
-        "giants_resume": ORACLE_GIANTS_RESUME,
-        "bloom_dedup": _oracle_bloom_dedup(),
-        "curate_incremental": _oracle_curate_incremental(),
-        "bpe_train": _oracle_bpe_train(),
-        "token_count_trained": _oracle_token_count_trained(),
-        "token_count": ORACLE_TOKEN_COUNT,
-        "token_count_bpe": ORACLE_TOKEN_COUNT_BPE,
-        "text_quality": ORACLE_TEXT_QUALITY,
-        "lang_id": _oracle_lang_id(),
-        "fingerprint": ORACLE_FINGERPRINT,
-        "pii_scrub": _oracle_pii_scrub(),
-        "vocab_topk": ORACLE_VOCAB_TOPK,
-        "search_topk": _oracle_search_topk(),
-        "repetition_stats": _oracle_repetition(),
-        "source_stats": ORACLE_SOURCE_STATS,
-        "mix_plan": _oracle_mix_plan(),
-        "decontaminate": _oracle_decontaminate(),
-        "sample_stratified": ORACLE_SAMPLE_STRATIFIED,
-        "url_dedup": ORACLE_URL_DEDUP,
-        "line_dedup": ORACLE_LINE_DEDUP,
-        "line_dedup_clean": ORACLE_LINE_DEDUP_CLEAN,
-        "corpus_diff": ORACLE_CORPUS_DIFF,
-        "pack_sequences": ORACLE_PACK_SEQUENCES,
-        "curate": _oracle_curate(),
-        "curate_neardup": _oracle_curate_neardup(),
-        "pipeline_full": _oracle_pipeline_full(),
-        "pipeline_full_v2": _oracle_pipeline_v2(),
-        "pipeline_full_v3": _oracle_pipeline_v3(),
-        "substring_dedup": ORACLE_SUBSTRING_DEDUP,
-        "normalize_text": ORACLE_NORMALIZE_TEXT,
-        "pagerank": _oracle_pagerank(),
-        "kmv_distinct": _oracle_kmv_distinct(),
-        "cluster_stats": _oracle_cluster_stats(),
-        "wet_roundtrip": ORACLE_WET_ROUNDTRIP,
-        "pagerank_weights": _oracle_pagerank_weights(),
-        "line_dedup_within": ORACLE_LINE_DEDUP_WITHIN,
-        "gopher_rules": ORACLE_GOPHER_RULES,
-        "url_filter": ORACLE_URL_FILTER,
-        "domain_cap": ORACLE_DOMAIN_CAP,
-        "quality_classifier": ORACLE_QUALITY_CLASSIFIER,
-        "semdedup": _oracle_semdedup(),
-        "mix_sample": _oracle_mix_sample(),
-        "dedup_exact": ORACLE_DEDUP_EXACT,
-        "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-        "minhash_lsh": ORACLE_MINHASH_LSH,
-        "lsh_bucket_stats": ORACLE_LSH_BUCKET_STATS,
-        "dedup_clusters": _oracle_dedup_clusters(),
-        "simhash": ORACLE_SIMHASH,
-        "simhash64": _oracle_simhash_hash(64, "simhash64"),
-        "simhash_pairs": _oracle_simhash_pairs(),
-        "simhash_bucket_stats": _oracle_simhash_bucket_stats(),
-        "dedup_embedding": _oracle_dedup_embedding(),
-        "embedding_quantize": ORACLE_EMBEDDING_QUANTIZE,
-        "similarity_topk": ORACLE_SIMILARITY_TOPK,
-        "similarity_lsh": ORACLE_SIMILARITY_LSH,
-        "similarity_ivf": _oracle_similarity_ivf(),
-        "similarity_ivf_q": _oracle_similarity_ivf(refine_q8=IVF_Q8_REFINE),
-        "eval_numeric": ORACLE_EVAL_NUMERIC,
-        "eval_text": ORACLE_EVAL_TEXT,
-        "sessionize": ORACLE_SESSIONIZE,
-        "windowed_counts": ORACLE_WINDOWED_COUNTS,
-        "json_props_stats": ORACLE_JSON_PROPS,
-    }
+    return {name: sql for name, _, sql in _REGISTRY}

@@ -186,15 +186,21 @@ def _parse_dom(raw: str) -> Tuple[object, bool]:
         # parsed fine but no hOCR marker -> HTML reparse (parser.py:12-14)
     except ET.ParseError:
         pass
+    root = parse_html(raw)
+    is_hocr = any(_has_class(n, "ocr_page") for n in root.iter())
+    return root, is_hocr
+
+
+def parse_html(raw: str) -> _Node:
+    """The lenient HTML tree of ``raw``, whatever its markup: the _Node tree
+    the ``html`` layout walks even when ``raw`` is well-formed hOCR."""
     parser = _LenientHTML()
     try:
         parser.feed(raw)
         parser.close()
     except Exception:
         pass
-    root = parser.root
-    is_hocr = any(_has_class(n, "ocr_page") for n in root.iter())
-    return root, is_hocr
+    return parser.root
 
 
 def parse_dom(html: bytes) -> Tuple[_Node, bool]:

@@ -470,12 +470,15 @@ def simhash_pairs(
 
 
 def _chunk_cols(chunk_tokens: int):
-    """(chunks array, tail) column pair — the ONE chunking spec shared by
-    ``line_dedup`` and ``line_dedup_clean`` (and mirrored by both SQL
-    oracles): disjoint ``chunk_tokens``-token windows over the normalized
-    token array, leftover tokens as the tail.  The ``when`` guard is
+    """(chunks array, tail) columns, aliased ``chunks``/``tail`` — the ONE
+    chunking spec of the three line-dedup operators (and the SQL oracles):
+    disjoint ``chunk_tokens``-token windows over the normalized token
+    array, leftover tokens as the tail.  The ``when`` guard is
     load-bearing: Spark's sequence(0, n-1) with n <= 0 generates a
-    DESCENDING range ([0, -1]), not an empty array."""
+    DESCENDING range ([0, -1]), not an empty array.  ``line_dedup``
+    explodes the chunks expression itself: exploding a projected
+    ``chunks`` column makes Spark infer a ``size(chunks) > 0`` filter below
+    the projection, which computes the chunking twice per document."""
     toks = tokens_col(F.col("text"))
     n_chunks = F.floor(F.size(toks) / chunk_tokens).cast("int")
     chunks = F.when(
@@ -490,7 +493,7 @@ def _chunk_cols(chunk_tokens: int):
     tail = F.array_join(
         F.slice(toks, n_chunks * chunk_tokens + 1, F.size(toks)), " "
     )
-    return chunks, tail
+    return chunks.alias("chunks"), tail.alias("tail")
 
 
 def line_dedup_within_page(
@@ -511,17 +514,13 @@ def line_dedup_within_page(
     because DuckDB's list_distinct does NOT preserve order).  Runs
     strictly before the corpus-wide election at 100 TB: it shrinks the
     exploded chunk volume that election must shuffle."""
-    chunks, tail = _chunk_cols(chunk_tokens)
-    base = documents.select(
-        "doc_id", chunks.alias("_chunks"), tail.alias("_tail")
-    )
-    ded = F.array_distinct(F.col("_chunks"))
-    return base.select(
+    ded = F.array_distinct(F.col("chunks"))
+    return documents.select("doc_id", *_chunk_cols(chunk_tokens)).select(
         "doc_id",
-        F.size("_chunks").cast("int").alias("n_chunks"),
+        F.size("chunks").cast("int").alias("n_chunks"),
         F.size(ded).cast("int").alias("n_kept"),
         F.trim(
-            F.concat_ws(" ", F.array_join(ded, " "), F.col("_tail"))
+            F.concat_ws(" ", F.array_join(ded, " "), F.col("tail"))
         ).alias("text_clean"),
     )
 
@@ -551,11 +550,7 @@ def line_dedup_clean(documents: DataFrame, chunk_tokens: int = 10) -> DataFrame:
     creates no hotspot.  The winner rule is deterministic on any
     partitioning.
     """
-    chunks, tail = _chunk_cols(chunk_tokens)
-    base = documents.select(
-        "doc_id", chunks.alias("chunks"), tail.alias("tail")
-    )
-    ex = base.select(
+    ex = documents.select("doc_id", *_chunk_cols(chunk_tokens)).select(
         "doc_id", "tail", F.posexplode_outer("chunks").alias("idx", "chunk")
     )
     chunked = ex.where(F.col("chunk").isNotNull()).withColumn(
@@ -777,9 +772,8 @@ def line_dedup(
     (spark.sql.adaptive.skewJoin.enabled, on by default); the aggregate
     side is immune (partial combine on (chunk_key, doc_id)).
     """
-    chunk_arr, _tail = _chunk_cols(chunk_tokens)
     ex = documents.select(
-        "doc_id", F.explode(chunk_arr).alias("chunk")
+        "doc_id", F.explode(_chunk_cols(chunk_tokens)[0]).alias("chunk")
     ).select("doc_id", F.md5(F.col("chunk")).alias("chunk_key"))
     counts = ex.groupBy("chunk_key").agg(
         F.countDistinct("doc_id").alias("docs_with")

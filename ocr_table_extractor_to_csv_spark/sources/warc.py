@@ -194,11 +194,11 @@ def _write_segments(
     n = 0
     for seg_key, rec in records:
         segs.setdefault(int(seg_key) % n_segments, []).append(
-            gzip.compress(rec) if gzip_members else rec
+            gzip.compress(rec, mtime=0) if gzip_members else rec
         )
         n += 1
     if gzip_members:
-        head = gzip.compress(head) if head else head
+        head = gzip.compress(head, mtime=0) if head else head
         ext += ".gz"
     os.makedirs(out_dir, exist_ok=True)
     for k, recs in segs.items():

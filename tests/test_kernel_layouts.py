@@ -459,6 +459,21 @@ def test_deeply_nested_html_is_not_an_error_row(tag, depth):
     assert res.error is None
     assert res.main_text == f"paragraph number {depth - 1} of a long page"
 
+
+def test_html_layout_on_well_formed_hocr():
+    """A forced ``html`` layout on hOCR that parses as XML walks the lenient
+    HTML tree: the boilerplate strip needs it, not the ElementTree root."""
+    html = (
+        b'<?xml version="1.0"?><html><body>'
+        b'<div class="ocr_page" title="bbox 0 0 1700 2200">'
+        b'<p class="ocr_par">The quarterly report covers every branch office.</p>'
+        b"</div></body></html>"
+    )
+    res = extract_document(html, layout="html")
+    assert res.error is None and res.layout == "html"
+    assert res.main_text == "The quarterly report covers every branch office."
+
+
 def test_header_regex_window_and_reorder():
     """F7 (rows.py:137-162): header regexes search rows 0..2 as a lowered
     ' | '-joined string; a row-2 hit promotes that row to header and the

@@ -148,13 +148,15 @@ def _body_tokens(fn: ast.FunctionDef) -> list:
 
 
 def test_no_twin_functions():
-    """No two package functions of >= 60 body tokens are near-copies
-    (difflib ratio >= 0.9 over their tokens): fold a twin into one helper
-    with a parameter instead.  Pairs whose lengths differ by more than 10%
-    cannot reach the bound and are skipped, as is a function nested in the
-    other."""
+    """No two functions of >= 60 body tokens in the package, ``jobs/`` and
+    ``__spark_entry__.py`` are near-copies (difflib ratio >= 0.9 over their
+    tokens): fold a twin into one helper with a parameter instead.  Pairs
+    whose lengths differ by more than 10% cannot reach the bound and are
+    skipped, as is a function nested in the other."""
+    paths = sorted((ROOT / PKG).rglob("*.py")) + sorted(ROOT.glob("jobs/*.py"))
+    paths.append(ROOT / "__spark_entry__.py")
     fns = []
-    for path in sorted((ROOT / PKG).rglob("*.py")):
+    for path in paths:
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 toks = _body_tokens(node)
@@ -174,3 +176,35 @@ def test_no_twin_functions():
                     f"({sm.ratio():.2f})"
                 )
     assert twins == [], "near-duplicate functions"
+
+
+def _names_used(tree: ast.AST) -> list:
+    """Every name ``tree`` loads, reads as an attribute or imports."""
+    used = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            used.append(node.id)
+        elif isinstance(node, ast.Attribute):
+            used.append(node.attr)
+        elif isinstance(node, ast.ImportFrom):
+            used.extend(a.name for a in node.names)
+    return used
+
+
+def test_every_entry_name_is_used():
+    """Every top-level function and constant of ``__spark_entry__.py`` is
+    named somewhere: in the entry itself or in ``bench*.py``, ``jobs/``,
+    ``tools/`` or ``tests/``.  A helper nothing names is dead code."""
+    entry = ast.parse((ROOT / "__spark_entry__.py").read_text())
+    defined = []
+    for node in entry.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            defined.append(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            defined.extend(t.id for t in targets if isinstance(t, ast.Name))
+    used = set(_names_used(entry))
+    for pattern in ["bench*.py", "jobs/*.py", "tools/*.py", "tests/*.py"]:
+        for path in ROOT.glob(pattern):
+            used.update(_names_used(ast.parse(path.read_text())))
+    assert sorted(set(defined) - used) == [], "entry names nothing uses"

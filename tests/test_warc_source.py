@@ -5,6 +5,7 @@ the Common Crawl layout)."""
 import gzip
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
@@ -187,6 +188,26 @@ def test_wet_invalid_utf8_replaced_not_fatal():
     )
     [(url, _ts, payload)] = list(parse_warc_records(rec, want="conversion"))
     assert payload.decode("utf-8", "replace") == "ok �� bytes"
+
+
+@pytest.mark.parametrize("kind", ["warc", "wet"])
+def test_segment_writes_do_not_depend_on_the_clock(kind, tmp_path, monkeypatch):
+    """The same records written twice, 10 s apart, give byte-identical
+    gzip-member segments: no member header carries the write time."""
+    import time
+
+    from ocr_table_extractor_to_csv_spark.sources import warc
+
+    write = getattr(warc, f"write_{kind}_segments")
+    body = (lambda t: t.encode()) if kind == "warc" else (lambda t: t)
+    recs = [(i, f"https://w.example/{i}", TS.format(i=i), body(f"text {i}")) for i in range(3)]
+    for run, now in enumerate((1_700_000_000.0, 1_700_000_010.0)):
+        monkeypatch.setattr(time, "time", lambda now=now: now)
+        write(recs, str(tmp_path / str(run)), n_segments=2, gzip_members=True)
+    first = sorted((tmp_path / "0").glob("seg-*"))
+    assert len(first) == 2
+    for seg in first:
+        assert seg.read_bytes() == (tmp_path / "1" / seg.name).read_bytes(), seg.name
 
 
 def test_wet_to_documents_feeds_curation_surface(spark, tmp_path):

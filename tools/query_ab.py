@@ -1,16 +1,12 @@
 #!/usr/bin/env python
-"""Interleaved re-measurement of driver-bench queries suspected of
-weather drift (BENCH.md protocol, r5 verdict #4).
+"""Interleaved timing of driver-bench queries (BENCH.md protocol).
 
-The three r5 "regressions" (extract_corpus −17%, event_histogram 2.0x,
-decontaminate 1.5x) are all on code untouched since r4, so there is no
-code A/B to run — the question is whether the r5 driver numbers were
-host weather.  Protocol: ONE clean solo session (never concurrent with
-pytest/bench — measured 8.5k vs 15k pages/s under contention), 2 warm
-passes per query, then N round-robin-interleaved trials so slow minutes
-hit every query equally; report per-query trial arrays + medians.
+Run in one solo session, never next to pytest or another bench.  Each
+query gets 2 warm passes, then N round-robin trials, so a slow minute on
+a drifting host hits every query alike.  Prints per-query trial arrays
+and medians as JSON.
 
-    python tools/query_ab.py [--sf-dir /root/testdata/sf0.1] [--trials 5]
+    python tools/query_ab.py [--sf-dir DIR] [--trials 5] [--queries NAME ...]
 """
 
 import argparse
@@ -22,7 +18,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-QUERIES = ["extract_corpus", "event_histogram", "decontaminate"]
+QUERIES = ["extract_corpus", "dedup_clusters", "decontaminate"]
 
 
 def main() -> None:
