@@ -518,7 +518,7 @@ def q_giants_resume(spark, sf_dir):
     )
     seed.write.mode("overwrite").parquet(prog)
 
-    committed = run_extract(
+    committed, _ = run_extract(
         spark,
         pages.select("url", "html", "pad"),
         out=out,

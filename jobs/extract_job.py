@@ -13,19 +13,26 @@ Plan (all declarative; Catalyst prunes the page columns not selected):
   pages LEFT ANTI JOIN progress(done) ON url     -- resume
     -> isolate_giants, fan_out(giants)            -- skew tail spread
     -> mapInArrow extraction kernel               -- the only Python stage
-    -> ONE write partitioned by (batch_id, pass)  -- idempotent overwrite
-    -> append progress rows derived from the committed output
-    -> append per-partition lineage manifests
+    -> ONE write partitioned by (batch_id, pass)  -- idempotent overwrite,
+                                                     observed: rows, failed,
+                                                     html_bytes
+    -> ONE read of the committed batch, feeding two concurrent writes:
+         append progress rows derived from it
+         overwrite the batch's per-partition lineage manifests
+Every read-back is given its schema (plans/resume.py): no Spark job is
+spent inferring the schema of a table this job wrote.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
@@ -34,9 +41,11 @@ from ocr_table_extractor_to_csv_spark.plans.partitioning import fan_out, isolate
 from ocr_table_extractor_to_csv_spark.plans.resume import (
     commit_progress,
     pending_pages,
+    read_committed,
     read_progress,
     write_batch,
 )
+from ocr_table_extractor_to_csv_spark.plans.scope import run_branches
 from ocr_table_extractor_to_csv_spark.session import get_spark
 
 
@@ -65,8 +74,15 @@ def run_extract(
     than duplicates (see plans/resume.py).  ``size_col`` is the column
     whose byte/char length classifies giants (default the html payload
     itself); extraction prunes it away, so a caller may attach a
-    precomputed size column without touching the kernel input.  Returns
-    the committed DataFrame for this batch.
+    precomputed size column without touching the kernel input.
+
+    After the data write commits, the batch is read back once
+    (``read_committed``); that frame feeds the progress commit and, with
+    ``manifests``, the batch's lineage manifests, written concurrently
+    (``plans.scope.run_branches``; a failure names its branch).  Returns
+    ``(committed, facts)``: the committed DataFrame for this batch and the
+    write's observed ``rows``, ``failed`` and ``html_bytes`` with its
+    ``batch_id``, taken from the write itself without another scan.
     """
     progress = read_progress(spark, progress_path)
     pending = pending_pages(pages, progress)
@@ -78,20 +94,30 @@ def run_extract(
             "pass", F.lit(pass_name)
         )
 
+    observed = Observation()
     write_batch(
-        extract(small, "small").unionByName(extract(fan_out(giants), "giant")),
+        extract(small, "small")
+        .unionByName(extract(fan_out(giants), "giant"))
+        .observe(
+            observed,
+            F.count("*").alias("rows"),
+            F.count("error").alias("failed"),
+            F.coalesce(F.sum("html_bytes"), F.lit(0)).alias("html_bytes"),
+        ),
         batch_id,
         out,
     )
 
-    commit_progress(spark, batch_id, out, progress_path)
-
-    committed = spark.read.parquet(out).where(F.col("batch_id") == batch_id)
+    committed = read_committed(spark, out, batch_id)
+    # the branches look commit_progress and write_batch up in this module's
+    # globals when they run, so tests and the perfbench tracer can wrap them
+    branches = {"progress": lambda: commit_progress(committed, progress_path)}
     if manifests:
-        build_manifests(committed).withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(manifests)
-    return committed
+        branches["manifests"] = lambda: write_batch(
+            build_manifests(committed), batch_id, manifests, partition_cols=("batch_id",)
+        )
+    run_branches("run_extract", branches)
+    return committed, dict(observed.get, batch_id=batch_id)
 
 
 def land_warc(spark, warc_dir: str, out: str):
@@ -108,8 +134,9 @@ def land_warc(spark, warc_dir: str, out: str):
     from ocr_table_extractor_to_csv_spark.sources.warc import read_warc
 
     staging = f"{out.rstrip('/')}_warc_landing"
-    read_warc(spark, warc_dir).write.mode("overwrite").parquet(staging)
-    raw = spark.read.parquet(staging)
+    parsed = read_warc(spark, warc_dir)
+    parsed.write.mode("overwrite").parquet(staging)
+    raw = spark.read.schema(parsed.schema).parquet(staging)
     bad = raw.where(F.col("error").isNotNull())
     n_bad = bad.count()
     if n_bad:
@@ -161,7 +188,7 @@ def main() -> None:
     cols = ["url", "html"] + (["layout", "args"] if args.per_row_dispatch else [])
     pages = pages.select(*cols)
 
-    committed = run_extract(
+    _, facts = run_extract(
         spark,
         pages,
         out=args.out,
@@ -172,13 +199,7 @@ def main() -> None:
         giant_threshold=args.giant_threshold,
         manifests=args.manifests,
     )
-    stats = committed.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)), F.lit(0)
-        ).alias("failed"),
-    ).collect()[0]
-    print(f"batch {args.batch_id}: {stats.n} pages extracted, {stats.failed} failed")
+    print(json.dumps(facts))
     spark.stop()
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..plans.scope import RunScope
+from ..plans.scope import RunScope, run_branches
 from .textstats import lang_pred_col, norm_text_col, quality_columns
 
 DEFAULT_MIN_QUALITY = 0.5
@@ -313,11 +313,10 @@ def curate_pipeline(
     (``plans.scope.RunScope``): a pruned parquet landing table under the
     scope's work dir — the 100 TB choice — or an executor cache without
     one; both are value-identical (tested).  The decontaminate and keeper
-    branches run in two driver threads; both are waited for, and the first
-    failure is re-raised with the name of its branch.
+    branches run in two driver threads (``plans.scope.run_branches``): both
+    are waited for, and the first failure is re-raised with the name of its
+    branch.
     """
-    from concurrent.futures import ThreadPoolExecutor, as_completed
-
     from .dedup import dedup_clusters
 
     if url_col is not None and not url_col:
@@ -362,22 +361,17 @@ def curate_pipeline(
     # sequentially).  Both threads read the SAME materialized ``base``;
     # cache partition computation is per-partition-locked in Spark, and the
     # scope is thread-safe, so the overlap is safe.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        branches = {
-            pool.submit(
-                decontaminate, base, eval_mod=eval_mod, n=n, threshold=threshold,
-                scope=scope,
-            ): "decontaminate",
-            pool.submit(dedup_clusters, base, scope=scope): "dedup_clusters",
-        }
-        failed = [f for f in as_completed(branches) if f.exception() is not None]
-    if failed:
-        err = failed[0].exception()
-        err.add_note(f"curate_pipeline branch {branches[failed[0]]!r} failed")
-        raise err
-    f_clean, f_keepers = branches
-    clean = f_clean.result().where(~F.col("contaminated")).select("doc_id")
-    keepers = f_keepers.result().where(F.col("is_keeper")).select("doc_id")
+    done = run_branches(
+        "curate_pipeline",
+        {
+            "decontaminate": lambda: decontaminate(
+                base, eval_mod=eval_mod, n=n, threshold=threshold, scope=scope
+            ),
+            "dedup_clusters": lambda: dedup_clusters(base, scope=scope),
+        },
+    )
+    clean = done["decontaminate"].where(~F.col("contaminated")).select("doc_id")
+    keepers = done["dedup_clusters"].where(F.col("is_keeper")).select("doc_id")
     survivors = scored.join(clean, "doc_id").join(keepers, "doc_id")
 
     shard = F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard")

@@ -487,7 +487,12 @@ def _qc_token_rows(
     select keeps sibling expressions in the Project ABOVE the Generate, so
     the (higher-order-function-heavy) quality expression would be
     re-evaluated once per TOKEN row instead of once per document — measured
-    16x slower at sf0.1 (guide §1.2 "per-task work"; values identical)."""
+    16x slower at sf0.1 (guide §1.2 "per-task work"; values identical).
+
+    The explode is ``explode_outer`` + ``tok IS NOT NULL`` (the same rows:
+    a token split yields no null elements): a plain ``explode`` makes
+    Catalyst infer a ``size(_toks) > 0`` filter below the label projection,
+    which computes the token split twice more per document."""
     q = quality_columns(F.col("text"))
     labeled = documents.select(
         "doc_id",
@@ -495,8 +500,8 @@ def _qc_token_rows(
         tokens_col(F.col("text")).alias("_toks"),
     )
     return labeled.select(
-        "doc_id", "label", F.explode("_toks").alias("tok")
-    ).withColumn(
+        "doc_id", "label", F.explode_outer("_toks").alias("tok")
+    ).where(F.col("tok").isNotNull()).withColumn(
         "bucket",
         F.pmod(
             F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long"),

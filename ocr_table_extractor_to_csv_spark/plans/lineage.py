@@ -6,9 +6,18 @@ extracted table — no driver-side loops, no side channels, and it holds at
 any scale because it is just a groupBy:
 
   manifests(partition_id, n_urls, n_ok, n_failed, total_html_bytes,
-            total_csv_bytes, failed_urls[<=20 sample])
+            total_csv_bytes, failed_urls[<=20 sample], max_task_attempt)
 
-Invariant checked by tests: sum(n_urls) over manifests == count(pages in).
+The extract job builds them from its one read of the committed batch and
+writes them with ``plans.resume.write_batch`` partitioned by ``batch_id``
+(``<manifests>/batch_id=<B>/``, dynamic partition overwrite), concurrently
+with the progress commit: a re-run of a batch replaces its manifests, so a
+batch is never counted twice, whichever of the two writes a failed run
+completed.  A flat (unpartitioned) manifests directory from an older
+version of the job cannot be mixed with this layout.
+
+Invariant checked by tests: sum(n_urls) over a batch's manifests ==
+count(pages the batch committed).
 """
 
 from __future__ import annotations

@@ -7,8 +7,17 @@ Batch protocol (exactly-once at the batch granularity, SURVEY.md §4.2):
   2. extract ``pending`` and write ``extracted`` partitioned by ``batch_id``
      with dynamic partition overwrite — a re-run of a failed batch REPLACES
      its partition instead of duplicating rows.
-  3. append ``(url, batch_id, status, n_rows, error)`` to ``progress`` only
-     after the data write commits.
+  3. only after the data write commits, read the batch back ONCE
+     (``read_committed``) and, from that one frame and concurrently,
+     append ``(url, batch_id, status, n_rows, error, ts)`` to ``progress``
+     and overwrite the batch's lineage manifests (plans/lineage.py).  The
+     manifests go through ``write_batch`` too, so whichever of the two
+     writes a failed run completed, its re-run replaces the batch's
+     manifests instead of counting the batch twice.
+
+Every read-back of a table this protocol wrote carries its schema
+(``PROGRESS_SCHEMA``, ``COMMITTED_SCHEMA``): the job knows what it wrote,
+and inferring it would cost one footer-reading Spark job per read.
 
 On Iceberg the same protocol maps to ``overwritePartitions()`` + a snapshot
 commit; here the warehouse is parquet directories (no Iceberg runtime jar in
@@ -20,12 +29,39 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 from pyspark.sql.utils import AnalysisException
+
+from ..operators.extract import EXTRACTED_SCHEMA
+
+PROGRESS_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("batch_id", IntegerType()),
+        StructField("status", StringType()),
+        StructField("n_rows", IntegerType()),
+        StructField("error", StringType()),
+        StructField("ts", TimestampType()),
+    ]
+)
+
+# the extraction output as committed: partition columns last, as a
+# partitioned parquet read returns them
+COMMITTED_SCHEMA = StructType(
+    EXTRACTED_SCHEMA.fields
+    + [StructField("batch_id", IntegerType()), StructField("pass", StringType())]
+)
 
 
 def read_progress(spark: SparkSession, progress_path: str) -> DataFrame | None:
     try:
-        return spark.read.parquet(progress_path)
+        return spark.read.schema(PROGRESS_SCHEMA).parquet(progress_path)
     except AnalysisException:
         return None  # first run: no progress table yet
 
@@ -37,35 +73,56 @@ def pending_pages(pages: DataFrame, progress: DataFrame | None) -> DataFrame:
     return pages.join(done, "url", "left_anti")
 
 
-def write_batch(extracted: DataFrame, batch_id: int, extracted_path: str) -> None:
-    """Idempotently (re)write a batch.
+def write_batch(
+    frame: DataFrame,
+    batch_id: int,
+    path: str,
+    partition_cols: tuple[str, ...] = ("batch_id", "pass"),
+) -> None:
+    """Idempotently (re)write a batch's rows of one table.
 
-    ``extracted`` carries a ``pass`` column (``small``/``giant``, see
-    ``jobs/extract_job.run_extract``).  Dynamic partition overwrite on
-    ``(batch_id, pass)`` replaces exactly the partitions this write fills,
-    so a re-run of the batch never duplicates rows of either pass.
+    Dynamic partition overwrite on ``partition_cols`` (``batch_id`` first)
+    replaces exactly the partitions this write fills, so a re-run of the
+    batch never duplicates its rows.  The extraction output carries a
+    ``pass`` column (``small``/``giant``, see
+    ``jobs/extract_job.run_extract``) and is partitioned
+    ``(batch_id, pass)``; the manifests are partitioned ``(batch_id,)``.
 
-    Layout note: ``extracted_path`` is partitioned (batch_id, pass); a
-    directory written by a pre-``pass`` version of this engine has a
-    different partition depth and cannot be mixed — write new batches to a
-    fresh root (Spark fails loudly with "conflicting directory structures"
-    otherwise).
+    Layout note: a directory written with a different partition depth (a
+    pre-``pass`` extraction root, a flat manifests table) cannot be mixed
+    with this layout — write new batches to a fresh root (Spark fails
+    loudly with "conflicting directory structures" otherwise).
     """
     (
-        extracted.withColumn("batch_id", F.lit(batch_id))
+        frame.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "pass")
-        .parquet(extracted_path)
+        .partitionBy(*partition_cols)
+        .parquet(path)
     )
 
 
-def commit_progress(
-    spark: SparkSession, batch_id: int, extracted_path: str, progress_path: str
-) -> None:
-    # progress rows are derived from the COMMITTED output, not the input:
-    # re-reading guarantees the anti-join key set reflects durable data only
-    committed = spark.read.parquet(extracted_path).where(F.col("batch_id") == batch_id)
+def read_committed(spark: SparkSession, path: str, batch_id: int) -> DataFrame:
+    """The committed rows of batch ``batch_id`` under the extraction root
+    ``path``.  Only the batch's own partition directory is listed, so the
+    cost does not grow with the number of batches already committed; a
+    batch that committed no rows has no directory and reads empty."""
+    try:
+        return (
+            spark.read.schema(COMMITTED_SCHEMA)
+            .option("basePath", path)
+            .parquet(f"{path.rstrip('/')}/batch_id={batch_id}")
+        )
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame([], COMMITTED_SCHEMA)
+
+
+def commit_progress(committed: DataFrame, progress_path: str) -> None:
+    """Append one progress row per committed url.  The rows come from the
+    COMMITTED output (``read_committed``), not the input, so the anti-join
+    key set reflects durable data only."""
     progress = committed.select(
         "url",
         "batch_id",

@@ -18,6 +18,11 @@ never share state.
 Results must be consumed (collected or written out) before the scope
 closes: a lazy frame over a released cache recomputes, one over a released
 local checkpoint or a deleted run directory fails.
+
+``run_branches`` is the run's one way to overlap independent driver-side
+work: branches that each submit blocking Spark actions run in their own
+driver threads, so their jobs share the cores instead of queueing behind
+each other's driver round-trips.
 """
 
 from __future__ import annotations
@@ -25,9 +30,26 @@ from __future__ import annotations
 import itertools
 import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
+from typing import Any, Callable
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+
+
+def run_branches(owner: str, branches: dict[str, Callable[[], Any]]) -> dict[str, Any]:
+    """Run each named branch in its own driver thread, wait for all of
+    them, and return their results by name.  A failure is re-raised only
+    after every branch has ended, with a note naming ``owner`` and the
+    branch; with several failures, the first to end is the one raised."""
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = {pool.submit(fn): name for name, fn in branches.items()}
+        failed = [f for f in as_completed(futures) if f.exception() is not None]
+    if failed:
+        err = failed[0].exception()
+        err.add_note(f"{owner} branch {futures[failed[0]]!r} failed")
+        raise err
+    return {name: f.result() for f, name in futures.items()}
 
 
 class RunScope:
@@ -84,7 +106,7 @@ class RunScope:
         path = f"{self.run_dir}/{tag}-{next(self._seq)}.parquet"
         df.write.mode("overwrite").parquet(path)
         self.note("landed", tag=tag, path=path)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def close(self) -> None:
         with self._lock:

@@ -49,7 +49,9 @@ def test_extract_job_main_warc_path(tmp_path):
         "--layout", "generic",
     ])
     assert res.returncode == 0, res.stderr[-2000:]
-    assert "pages extracted" in res.stdout, res.stdout[-500:]
+    facts = json.loads(res.stdout.strip().splitlines()[-1])
+    assert (facts["rows"], facts["failed"], facts["batch_id"]) == (6, 0, 1), res.stdout[-500:]
+    assert facts["html_bytes"] > 0
     assert out.exists()
 
 

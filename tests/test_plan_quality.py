@@ -444,6 +444,20 @@ def test_quality_classifier_broadcasts_model(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_quality_classifier_splits_tokens_once_per_use(spark):
+    """The classifier's token rows compute the token split once for the
+    label and once for the exploded tokens: no filter inferred from the
+    explode recomputes it below the label projection."""
+    from ocr_table_extractor_to_csv_spark.operators.textstats import _qc_token_rows
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{j % 11}" for j in range(30))) for i in range(20)],
+        "doc_id long, text string",
+    )
+    plan = _qc_token_rows(docs, 64, 0.5)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("split(") == 2, plan
+
+
 def test_mix_sample_plan_broadcasts_to_corpus(spark):
     """mix_sample's per-source plan (bounded rows) must reach the corpus
     scan as a BROADCAST join — the doc side never shuffles for the join

@@ -4,6 +4,7 @@ lineage manifests must account for every input row."""
 
 import hashlib
 import json
+import uuid
 from pathlib import Path
 
 import pyarrow as pa
@@ -12,7 +13,12 @@ from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
 from ocr_table_extractor_to_csv_spark.plans.lineage import build_manifests
-from ocr_table_extractor_to_csv_spark.plans.resume import pending_pages, read_progress
+from ocr_table_extractor_to_csv_spark.plans.resume import (
+    COMMITTED_SCHEMA,
+    PROGRESS_SCHEMA,
+    pending_pages,
+    read_progress,
+)
 from ocr_table_extractor_to_csv_spark.session import DEFAULT_CONF
 from ocr_table_extractor_to_csv_spark.sources.pages import fixture_pages, grid_hocr
 
@@ -26,6 +32,20 @@ def sha(b):
 @pytest.fixture(scope="module")
 def pages(spark):
     return fixture_pages(spark, scale=0.3).cache()
+
+
+GIANT_THRESHOLD = 50_000
+
+
+@pytest.fixture(scope="module")
+def pages_dir(spark, tmp_path_factory):
+    """Fixture pages with giants over ``GIANT_THRESHOLD``, landed as
+    parquet like a crawl drop."""
+    path = str(tmp_path_factory.mktemp("pages") / "pages")
+    fixture_pages(spark, scale=0.2, giant_tokens=3000).select(
+        "url", "html", "layout", "args"
+    ).write.parquet(path)
+    return path
 
 
 def test_spark_matches_kernel_goldens(spark, pages):
@@ -186,18 +206,16 @@ def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path, monkeypa
     assert pending_pages(base, progress).count() == 0
 
 
-def test_one_write_commits_both_passes(spark, tmp_path, monkeypatch):
+def test_one_write_commits_both_passes(spark, pages_dir, tmp_path, monkeypatch):
     """``run_extract`` commits small pages and fanned-out giants in ONE
     write action, touches no session conf, and routes every giant to
     ``pass=giant``."""
     import jobs.extract_job as ej
 
-    pages = fixture_pages(spark, scale=0.2, giant_tokens=3000).select(
-        "url", "html", "layout", "args"
-    )
-    threshold = 50_000
+    pages = spark.read.parquet(pages_dir)
     giants = {
-        r.url for r in pages.where(F.length("html") >= threshold).select("url").collect()
+        r.url
+        for r in pages.where(F.length("html") >= GIANT_THRESHOLD).select("url").collect()
     }
     assert giants, "fixture giants must exercise the giant branch"
     calls = []
@@ -216,20 +234,21 @@ def test_one_write_commits_both_passes(spark, tmp_path, monkeypatch):
         overwrite_key,
     ]
     before = {k: spark.conf.get(k) for k in keys}
-    committed = ej.run_extract(
+    committed, facts = ej.run_extract(
         spark,
         pages,
         out=str(tmp_path / "out"),
         progress_path=str(tmp_path / "prog"),
         batch_id=0,
         per_row_dispatch=True,
-        giant_threshold=threshold,
+        giant_threshold=GIANT_THRESHOLD,
     )
     assert len(calls) == 1, "one write action per batch"
     assert {k: spark.conf.get(k) for k in keys} == before
     rows = committed.select("url", "pass").collect()
     assert {r.url for r in rows if r["pass"] == "giant"} == giants
     assert len(rows) == len({r.url for r in rows}) == pages.count()
+    assert (facts["rows"], facts["batch_id"]) == (len(rows), 0)
 
 
 def test_lineage_manifest_accounts_for_all_rows(spark, pages):
@@ -245,3 +264,132 @@ def test_lineage_manifest_accounts_for_all_rows(spark, pages):
     assert totals.ok + totals.failed == n
     assert totals.failed == 0
     extracted.unpersist()
+
+
+def _run_batch(spark, pages, root, batch_id):
+    """One ``run_extract`` call with giants and manifests under ``root``,
+    looked up at call time so a monkeypatched package call is seen."""
+    import jobs.extract_job as ej
+
+    return ej.run_extract(
+        spark,
+        pages,
+        out=str(root / "out"),
+        progress_path=str(root / "progress"),
+        batch_id=batch_id,
+        per_row_dispatch=True,
+        giant_threshold=GIANT_THRESHOLD,
+        manifests=str(root / "manifests"),
+    )
+
+
+def _manifest_urls(spark, root, batch_id):
+    return (
+        spark.read.parquet(str(root / "manifests"))
+        .where(F.col("batch_id") == batch_id)
+        .agg(F.sum("n_urls"))
+        .collect()[0][0]
+    )
+
+
+def _content(committed):
+    cols = ["url", "csv", "csv_numeric", "main_text", "n_rows", "n_cols", "error", "pass"]
+    return sorted(committed.select(*cols).collect(), key=lambda r: r.url)
+
+
+def test_rerun_after_failed_progress_commit_counts_batch_once(
+    spark, pages_dir, tmp_path, monkeypatch
+):
+    """The progress commit fails while the concurrent manifest write
+    succeeds.  The error names its branch, and the re-run replaces the
+    batch's manifests instead of adding to them, commits each url's
+    progress once, and commits the bytes of a clean run."""
+    import jobs.extract_job as ej
+
+    pages = spark.read.parquet(pages_dir)
+    n = pages.count()
+    clean, _ = _run_batch(spark, pages, tmp_path / "clean", 0)
+
+    real_commit = ej.commit_progress
+    calls = []
+
+    def commit_fails_once(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("progress commit lost")
+        real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(ej, "commit_progress", commit_fails_once)
+    root = tmp_path / "rerun"
+    with pytest.raises(RuntimeError, match="progress commit lost") as err:
+        _run_batch(spark, pages, root, 0)
+    assert any("'progress'" in note for note in err.value.__notes__)
+    assert _manifest_urls(spark, root, 0) == n, "the manifest branch committed"
+
+    committed, facts = _run_batch(spark, pages, root, 0)
+    assert len(calls) == 2
+    assert _manifest_urls(spark, root, 0) == n
+    progress = spark.read.parquet(str(root / "progress"))
+    assert progress.count() == progress.select("url").distinct().count() == n
+    assert facts["rows"] == n
+    assert _content(committed) == _content(clean)
+
+
+def test_fully_resumed_batch_commits_nothing(spark, pages_dir, tmp_path):
+    """A batch whose every page is already done writes no partition: it
+    reads back empty, observes zero rows and adds no manifest rows."""
+    pages = spark.read.parquet(pages_dir)
+    _run_batch(spark, pages, tmp_path, 0)
+    committed, facts = _run_batch(spark, pages, tmp_path, 1)
+    assert committed.count() == 0
+    assert facts == {"rows": 0, "failed": 0, "html_bytes": 0, "batch_id": 1}
+    assert _manifest_urls(spark, tmp_path, 1) is None
+    assert read_progress(spark, str(tmp_path / "progress")).count() == pages.count()
+
+
+def test_declared_schemas_match_the_written_tables(spark, pages_dir, tmp_path):
+    """The schemas the job reads its own tables back with are the ones
+    Spark infers from what it wrote."""
+    pages = spark.read.parquet(pages_dir).limit(3)
+    _run_batch(spark, pages, tmp_path, 0)
+    for table, declared in (("out", COMMITTED_SCHEMA), ("progress", PROGRESS_SCHEMA)):
+        inferred = spark.read.parquet(str(tmp_path / table)).schema
+        assert [(f.name, f.dataType) for f in inferred] == [
+            (f.name, f.dataType) for f in declared
+        ], table
+
+
+def _job_count(spark, call) -> int:
+    """The Spark jobs ``call()`` submits: the job-id gap between two marker
+    jobs.  A job group set around the call would miss the jobs of the
+    driver threads it starts, which do not inherit the group."""
+    sc = spark.sparkContext
+
+    def marker() -> int:
+        group = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count marker")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        return job
+
+    first = marker()
+    call()
+    return marker() - first - 1
+
+
+def test_job_count_per_batch(spark, pages_dir, tmp_path):
+    """Spark jobs per ``run_extract`` call with giants and manifests.  No
+    read-back of a table the job wrote infers its schema, and the batch is
+    read back once: a fresh batch takes 5 jobs, and a resumed one 6 (the
+    progress anti-join's broadcast adds one).  Each inferred read-back
+    would add a one-task footer-reading job."""
+    pages = spark.read.parquet(pages_dir)
+    first_half = pages.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
+    fresh = _job_count(spark, lambda: _run_batch(spark, first_half, tmp_path, 0))
+    resumed = _job_count(spark, lambda: _run_batch(spark, pages, tmp_path, 1))
+    print(f"jobs per call: fresh {fresh}, resumed {resumed}")
+    assert fresh <= 5
+    assert resumed <= 6

@@ -105,7 +105,7 @@ def test_warc_through_extract_job_resume_path(spark, tmp_path):
     d.mkdir()
     (d / "seg.warc").write_bytes(_segment(_docs()))
     pages = read_warc(spark, str(d)).where(F.col("error").isNull())
-    committed = run_extract(
+    committed, facts = run_extract(
         spark,
         pages.select("url", "html"),
         out=str(tmp_path / "out"),
@@ -115,6 +115,12 @@ def test_warc_through_extract_job_resume_path(spark, tmp_path):
     )
     rows = committed.collect()
     assert len(rows) == 2 and all(r.error is None for r in rows)
+    assert facts == {
+        "rows": 2,
+        "failed": 0,
+        "html_bytes": sum(r.html_bytes for r in rows),
+        "batch_id": 1,
+    }
 
 
 def test_extract_job_warc_landing(spark, tmp_path):
