@@ -30,6 +30,7 @@ from ocr_table_extractor_to_csv_spark.operators import (
 from ocr_table_extractor_to_csv_spark.operators.evaluation import numeric_metrics
 from ocr_table_extractor_to_csv_spark.plans.partitioning import fan_out
 from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
+from ocr_table_extractor_to_csv_spark.sources import warc
 from ocr_table_extractor_to_csv_spark.sources.pages import pages_from_documents
 
 
@@ -436,11 +437,17 @@ def _segments_fixture_dir(spark, sf_dir: str, name: str, write, body) -> str:
     return d
 
 
-# per segment kind: (payload column, its length alias, a document's text as
-# the record payload, the oracle's length of ``text``)
+# per segment kind: (segment writer, reader, payload column, its length
+# alias, a document's text as the record payload, the oracle's length of
+# ``text``)
 _ROUNDTRIPS = {
-    "warc": ("html", "n_bytes", lambda t: t.encode(), "octet_length(encode(text))"),
-    "wet": ("text", "n_chars", lambda t: t, "length(text)"),
+    "warc": (
+        warc.write_warc_segments, warc.read_warc,
+        "html", "n_bytes", lambda t: t.encode(), "octet_length(encode(text))",
+    ),
+    "wet": (
+        warc.write_wet_segments, warc.read_wet, "text", "n_chars", lambda t: t, "length(text)",
+    ),
 }
 
 
@@ -449,14 +456,11 @@ def _roundtrip(kind: str):
     splitter (length framing, header strip, request/warcinfo skip, payload
     decode) -> (url, payload), value-checked against the documents the
     segments were synthesized from."""
-    col, len_alias, body, _ = _ROUNDTRIPS[kind]
+    write, read, col, len_alias, body, _ = _ROUNDTRIPS[kind]
 
     def q(spark, sf_dir):
-        from ocr_table_extractor_to_csv_spark.sources import warc
-
-        write = getattr(warc, f"write_{kind}_segments")
         d = _segments_fixture_dir(spark, sf_dir, f"{kind}_fixture", write, body)
-        pages = getattr(warc, f"read_{kind}")(spark, d)
+        pages = read(spark, d)
         return pages.where(F.col("error").isNull()).select(
             "url",
             F.md5(F.col(col)).alias(f"{col}_md5"),
@@ -467,7 +471,7 @@ def _roundtrip(kind: str):
 
 
 def _oracle_roundtrip(kind: str) -> str:
-    col, len_alias, _, n_sql = _ROUNDTRIPS[kind]
+    _, _, col, len_alias, _, n_sql = _ROUNDTRIPS[kind]
     return f"""
 SELECT 'https://docs.example/' || CAST(doc_id AS VARCHAR) AS url,
        md5(text) AS {col}_md5,
@@ -2012,14 +2016,14 @@ FROM c
 
 
 def q_windowed_counts(spark, sf_dir):
-    """Tumbling event-time windows through the SAME shared builder the
-    streaming job uses (streaming/windows.windowed_event_counts — the
+    """Tumbling event-time windows through the SAME shared builder a
+    streaming query uses (streaming/windows.windowed_event_counts — the
     watermark is a batch no-op), so the streaming aggregation logic gets a
     value-level driver check; epochs, not timestamps, cross the hash."""
     from ocr_table_extractor_to_csv_spark.streaming.windows import windowed_event_counts
 
     ev = _events(spark, sf_dir).where(F.col("ts").isNotNull())
-    w = windowed_event_counts(ev, window_duration="1 hour")
+    w = windowed_event_counts(ev)
     return w.select(
         F.unix_timestamp("window_start").alias("ws_epoch"),
         F.unix_timestamp("window_end").alias("we_epoch"),
@@ -2670,7 +2674,6 @@ def q_url_filter(spark, sf_dir):
         with_synth_url(_docs_f(spark, sf_dir)),
         blocklist_hosts=_URLF_BLOCKLIST,
         max_params=1,
-        max_path_depth=8,
         max_host_digit_ratio=0.1,
     )
     keep = [c for c in out.columns if c not in _URLF_FLAGS]

@@ -10,6 +10,7 @@ Usage (sandbox; on a real cluster ship via
       [--layout auto] [--giant-threshold 8388608]
 
 Plan (all declarative; Catalyst prunes the page columns not selected):
+  batch's progress landed -> manifests only      -- batch ids are immutable
   pages LEFT ANTI JOIN progress(done) ON url     -- resume
     -> isolate_giants, fan_out(giants)            -- skew tail spread
     -> mapInArrow extraction kernel               -- the only Python stage
@@ -39,6 +40,7 @@ from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
 from ocr_table_extractor_to_csv_spark.plans.lineage import build_manifests
 from ocr_table_extractor_to_csv_spark.plans.partitioning import fan_out, isolate_giants
 from ocr_table_extractor_to_csv_spark.plans.resume import (
+    batch_committed,
     commit_progress,
     pending_pages,
     read_committed,
@@ -83,8 +85,18 @@ def run_extract(
     ``(committed, facts)``: the committed DataFrame for this batch and the
     write's observed ``rows``, ``failed`` and ``html_bytes`` with its
     ``batch_id``, taken from the write itself without another scan.
+
+    A batch id is immutable once its progress has landed
+    (``batch_committed``): re-running such a batch extracts and appends
+    nothing, rewrites its manifests from the committed rows, and reports
+    zero rows.  Failed urls are retried under a new batch id.
     """
     progress = read_progress(spark, progress_path)
+    if batch_committed(spark, out, progress, batch_id):
+        committed = read_committed(spark, out, batch_id)
+        if manifests:
+            write_batch(build_manifests(committed), batch_id, manifests, partition_cols=("batch_id",))
+        return committed, {"rows": 0, "failed": 0, "html_bytes": 0, "batch_id": batch_id}
     pending = pending_pages(pages, progress)
 
     small, giants = isolate_giants(pending, giant_threshold, size_col=size_col)

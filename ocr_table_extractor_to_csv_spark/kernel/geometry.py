@@ -157,7 +157,7 @@ def percentile_linear(sorted_vals: np.ndarray, q: float) -> float:
     return a + frac * (float(sorted_vals[hi]) - a)
 
 
-def line_gap_quantile(x1: np.ndarray, x2: np.ndarray, q: float = 95.0) -> int:
+def line_gap_quantile(x1: np.ndarray, x2: np.ndarray) -> int:
     """P95 of positive inter-token gaps; max(12, int(p)); 18 when no gaps.
 
     column_model.py:18-27 — gaps measured on the x1-sorted token sequence
@@ -169,7 +169,7 @@ def line_gap_quantile(x1: np.ndarray, x2: np.ndarray, q: float = 95.0) -> int:
     gaps = gaps[gaps > 0]
     if gaps.size == 0:
         return 18
-    return max(12, int(percentile_linear(np.sort(gaps.astype(np.float64)), q)))
+    return max(12, int(percentile_linear(np.sort(gaps.astype(np.float64)), 95.0)))
 
 
 def merge_spans(

@@ -208,20 +208,10 @@ def parse_dom(html: bytes) -> Tuple[_Node, bool]:
     return _parse_dom(raw)
 
 
-def scan_tokens(
-    html: bytes,
-    table_bbox: Optional[Tuple[int, int, int, int]] = None,
-) -> TokenArrays:
-    """Full token scan of one document (parser.py:16-62)."""
-    root, is_hocr = parse_dom(html)
-    if not is_hocr:
-        return TokenArrays.empty()
-    return scan_tokens_from_dom(root, table_bbox)
-
-
 def scan_tokens_from_dom(
     root: _Node, table_bbox: Optional[Tuple[int, int, int, int]] = None
 ) -> TokenArrays:
+    """Full token scan of one parsed hOCR document (parser.py:16-62)."""
     texts: List[str] = []
     pages: List[int] = []
     boxes: List[Tuple[int, int, int, int]] = []

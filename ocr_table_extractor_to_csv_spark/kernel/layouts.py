@@ -107,18 +107,18 @@ def _line_spans(tok: TokenArrays, line: Line, max_gap_px: Optional[int] = None):
 # ===========================================================================
 
 
+MIN_COL_WIDTH = 25  # columns.py: narrower projection runs are not columns
+
+
 def estimate_columns(
-    tok: TokenArrays,
-    lines: List[Line],
-    min_col_width: int = 25,
-    expected_n_cols: Optional[int] = None,
+    tok: TokenArrays, lines: List[Line], expected_n_cols: Optional[int] = None
 ) -> List[Tuple[int, int]]:
     """Vertical projection profile -> column intervals (columns.py:6-70)."""
     idx = np.concatenate([ln.idx for ln in lines]) if lines else np.empty(0, np.int64)
     if idx.size == 0:
         return []
     intervals = profile_intervals(
-        tok.x1[idx], tok.x2[idx], min_run=5, min_width=min_col_width, strict_width=False
+        tok.x1[idx], tok.x2[idx], min_run=5, min_width=MIN_COL_WIDTH, strict_width=False
     )
     return coerce_interval_count(intervals, expected_n_cols)
 
@@ -288,15 +288,18 @@ def assign_financial_three_columns(tok: TokenArrays, lines: List[Line]) -> List[
     return recs
 
 
-def merge_financial_rows(recs: List[Rec], row_merge_factor: float = 1.30) -> List[List[str]]:
+ROW_MERGE_FACTOR = 1.30  # rows.py: max fusable y-gap, in median line heights
+
+
+def merge_financial_rows(recs: List[Rec]) -> List[List[str]]:
     """Adjacent-line fusion (rows.py:83-134): merge when the y-gap is within
-    1.30 x median line height AND the pair is label-wrap (next has no
+    ``ROW_MERGE_FACTOR`` x median line height AND the pair is label-wrap (next has no
     numbers) or label-then-values (current has none, next has some); never
     merge two value-bearing lines.  Numeric cells fill first-wins."""
     if not recs:
         return []
     h_med = median([r.y_bot - r.y_top for r in recs])
-    max_gap = int(row_merge_factor * h_med)
+    max_gap = int(ROW_MERGE_FACTOR * h_med)
 
     rows: List[List[str]] = []
     cur = list(recs[0].cells)
@@ -324,11 +327,7 @@ def merge_financial_rows(recs: List[Rec], row_merge_factor: float = 1.30) -> Lis
     return rows
 
 
-def postprocess_financial(
-    rows: List[List[str]],
-    label_for_subtotals: bool = True,
-    normalize_dash_zero: bool = True,
-) -> List[List[str]]:
+def postprocess_financial(rows: List[List[str]]) -> List[List[str]]:
     """postprocess.py:18-61: footer drop, section carry, subtotal labeling,
     dash->0, and silent truncation to exactly 3 columns."""
     out: List[List[str]] = []
@@ -342,13 +341,12 @@ def postprocess_financial(
             section = label.rstrip(":").strip()
             out.append([label, "", ""])
             continue
-        if label_for_subtotals and not label and is_number_like(v1) and is_number_like(v2):
+        if not label and is_number_like(v1) and is_number_like(v2):
             a = f"Total {section}" if section else "Subtotal"
-        if normalize_dash_zero:
-            if v1 and v1.strip() == "-":
-                v1 = "0"
-            if v2 and v2.strip() == "-":
-                v2 = "0"
+        if v1 and v1.strip() == "-":
+            v1 = "0"
+        if v2 and v2.strip() == "-":
+            v2 = "0"
         out.append([a, v1, v2])
     return out
 
@@ -365,13 +363,15 @@ def compute_line_spans(tok: TokenArrays, lines: List[Line]):
     return [_line_spans(tok, ln) for ln in lines]
 
 
+# column_model.py: global-gap fallback cut (at least MIN_SEP_PX, else the
+# CUT_QUANTILE percentile of center gaps) and the +/- PAD_PX interval pad
+MIN_SEP_PX = 35
+CUT_QUANTILE = 90.0
+PAD_PX = 24
+
+
 def infer_numeric_columns(
-    tok: TokenArrays,
-    lines: List[Line],
-    min_sep_px: int = 35,
-    cut_quantile: float = 90.0,
-    pad_px: int = 24,
-    spans_per_line=None,
+    tok: TokenArrays, lines: List[Line], spans_per_line=None
 ) -> Tuple[List[Tuple[int, int]], Optional[List[str]]]:
     """Hybrid column model (column_model.py:84-201): modal numeric-span
     count over the bottom 70% picks K<=4 columns; per-position (rightmost,
@@ -412,11 +412,11 @@ def infer_numeric_columns(
         if not any(len(b) < max(5, 0.05 * len(per_line)) for b in buckets):
             ordered = sorted(int(np.median(b)) for b in buckets)
             edges = [(a + b) // 2 for a, b in zip(ordered, ordered[1:])]
-            L = ordered[0] - pad_px
+            L = ordered[0] - PAD_PX
             for mid in edges:
-                intervals.append((int(L), int(mid + pad_px)))
-                L = int(mid - pad_px)
-            intervals.append((int(L), int(ordered[-1] + pad_px)))
+                intervals.append((int(L), int(mid + PAD_PX)))
+                L = int(mid - PAD_PX)
+            intervals.append((int(L), int(ordered[-1] + PAD_PX)))
 
     if not intervals:
         allc = sorted(c for centers in per_line for c in centers)
@@ -424,11 +424,11 @@ def infer_numeric_columns(
             return [], None
         gaps = [b - a for a, b in zip(allc, allc[1:])]
         p = (
-            percentile_linear(np.sort(np.asarray(gaps, dtype=np.float64)), cut_quantile)
+            percentile_linear(np.sort(np.asarray(gaps, dtype=np.float64)), CUT_QUANTILE)
             if gaps
             else 0.0
         )
-        thr = max(min_sep_px, int(p))
+        thr = max(MIN_SEP_PX, int(p))
         cuts = [allc[0]]
         cuts += [(a + b) // 2 for a, b in zip(allc, allc[1:]) if (b - a) >= thr]
         cuts.append(allc[-1])
@@ -439,7 +439,7 @@ def infer_numeric_columns(
                 merged.append(iv)
             else:
                 merged[-1] = (merged[-1][0], max(merged[-1][1], iv[1]))
-        intervals = [(int(L - pad_px), int(R + pad_px)) for (L, R) in merged][:4]
+        intervals = [(int(L - PAD_PX), int(R + PAD_PX)) for (L, R) in merged][:4]
 
     names = (
         _year_names_from_top(tok, lines, intervals, spans_per_line)

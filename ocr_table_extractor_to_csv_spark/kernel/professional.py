@@ -17,12 +17,16 @@ import numpy as np
 from .geometry import profile_intervals
 from .hocr import TokenArrays
 
+# grid_builder.py thresholds
+Y_TOLERANCE = 5  # px: words within this y1 distance share a visual line
+MIN_COL_WIDTH = 25
+MIN_GAP_WIDTH = 5
+HEADER_TEXT_THRESHOLD = 0.7
 
-def group_words_by_y_tolerance(
-    tok: TokenArrays, tolerance: int = 5
-) -> List[np.ndarray]:
+
+def group_words_by_y_tolerance(tok: TokenArrays) -> List[np.ndarray]:
     """grid_builder.py:15-29: stable sort by (y1, x1); a new visual line
-    starts when |y1 - last appended word's y1| > tolerance (compares to the
+    starts when |y1 - last appended word's y1| > Y_TOLERANCE (compares to the
     LAST word, not a band); members re-sorted by x1."""
     n = len(tok)
     if n == 0:
@@ -31,7 +35,7 @@ def group_words_by_y_tolerance(
     groups: List[List[int]] = [[int(order[0])]]
     for i in order[1:]:
         i = int(i)
-        if abs(int(tok.y1[i]) - int(tok.y1[groups[-1][-1]])) <= tolerance:
+        if abs(int(tok.y1[i]) - int(tok.y1[groups[-1][-1]])) <= Y_TOLERANCE:
             groups[-1].append(i)
         else:
             groups.append([i])
@@ -42,15 +46,13 @@ def group_words_by_y_tolerance(
     return out
 
 
-def estimate_column_positions(
-    tok: TokenArrays, min_col_width: int = 25, min_gap_width: int = 5
-) -> List[Tuple[int, int]]:
+def estimate_column_positions(tok: TokenArrays) -> List[Tuple[int, int]]:
     """grid_builder.py:31-63 — chained interval construction: the left edge
     advances only when an interval is emitted (strict > width)."""
     if len(tok) == 0:
         return []
     return profile_intervals(
-        tok.x1, tok.x2, min_run=min_gap_width, min_width=min_col_width,
+        tok.x1, tok.x2, min_run=MIN_GAP_WIDTH, min_width=MIN_COL_WIDTH,
         strict_width=True, chained=True,
     )
 
@@ -99,7 +101,7 @@ def _hierarchy(
     return out, depth
 
 
-def _header_index(rows: List[List[str]], text_threshold: float = 0.7) -> int:
+def _header_index(rows: List[List[str]]) -> int:
     """grid_builder.py:65-81 verbatim semantics: all cells are str, so the
     ratio degenerates to 1.0 -> first row with a non-empty first cell and at
     least one more column wins; -1 when none."""
@@ -112,7 +114,7 @@ def _header_index(rows: List[List[str]], text_threshold: float = 0.7) -> int:
         if not rest:
             continue
         ratio = sum(1 for c in rest if isinstance(c, str)) / len(rest)
-        if ratio >= text_threshold and ratio > best_ratio:
+        if ratio >= HEADER_TEXT_THRESHOLD and ratio > best_ratio:
             best_ratio = ratio
             best = i
     return best

@@ -5,12 +5,12 @@ algorithm, expressed as the classic map-reduce it is).
 Shape (what makes this scale):
   * the CORPUS is touched exactly once — one groupBy builds the word
     frequency table, and everything after runs on the VOCABULARY, whose
-    size is bounded by ``top_words`` (a deterministic freq-desc/word-asc
+    size is bounded by ``BPE_TOP_WORDS`` (a deterministic freq-desc/word-asc
     cap, which is also how reference BPE trainers bound their alphabet) —
     at 100 TB the vocab table is a few MB regardless of corpus bytes;
   * the bounded vocab is collected ONCE and the k merge iterations run on
     the driver (pair counting weighted by word frequency + the argmax +
-    the merge rewrite over <= top_words strings — the same bounded-collect
+    the merge rewrite over <= BPE_TOP_WORDS strings — the same bounded-collect
     class as the IVF trainer); the corpus is never touched again;
   * the merge rewrite is a literal ``replace`` over a DOUBLE-space
     delimited symbol string: symbols are framed as ``'  s1  s2  ...  '``
@@ -59,9 +59,9 @@ def _spaced_col(word) -> F.Column:
     return F.concat(F.lit("  "), F.array_join(syms, "  "), F.lit("  "))
 
 
-def word_freqs(documents: DataFrame, top_words: int = BPE_TOP_WORDS) -> DataFrame:
+def word_freqs(documents: DataFrame) -> DataFrame:
     """(word, freq) — the bounded training vocabulary: ONE corpus pass,
-    deterministically capped to the ``top_words`` most frequent words
+    deterministically capped to the ``BPE_TOP_WORDS`` most frequent words
     (freq DESC, word ASC)."""
     return (
         documents.select(F.explode(tokens_col(F.col("text"))).alias("word"))
@@ -69,16 +69,12 @@ def word_freqs(documents: DataFrame, top_words: int = BPE_TOP_WORDS) -> DataFram
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("word"))
-        .limit(top_words)
+        .limit(BPE_TOP_WORDS)
     )
 
 
-def bpe_train(
-    documents: DataFrame,
-    n_merges: int = BPE_MERGES,
-    top_words: int = BPE_TOP_WORDS,
-) -> DataFrame:
-    """Train ``n_merges`` BPE merges over the corpus vocabulary —
+def bpe_train(documents: DataFrame) -> DataFrame:
+    """Train ``BPE_MERGES`` BPE merges over the corpus vocabulary —
     (rank, left_sym, right_sym, pair_count) ordered by rank.
 
     ``pair_count`` is the frequency-weighted number of adjacent
@@ -86,7 +82,7 @@ def bpe_train(
     every occurrence within a word, as reference BPE does).
 
     r7: the merge loop runs ON THE DRIVER over the collected vocabulary.
-    The vocab is bounded by ``top_words`` REGARDLESS of corpus size (the
+    The vocab is bounded by ``BPE_TOP_WORDS`` REGARDLESS of corpus size (the
     same bounded-collect class as the IVF trainer's 1,024-row sample), so
     the corpus still gets exactly one distributed pass (``word_freqs``)
     while the k merge iterations cost zero Spark jobs instead of
@@ -104,11 +100,11 @@ def bpe_train(
     # substring iterates code points, as Python iteration does)
     vocab = [
         ("  " + "  ".join(r.word) + "  ", int(r.freq))
-        for r in word_freqs(documents, top_words).collect()
+        for r in word_freqs(documents).collect()
     ]
 
     merges = []
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, BPE_MERGES + 1):
         counts: dict = {}
         for spaced, freq in vocab:
             syms = spaced.strip(" ").split("  ")
@@ -130,19 +126,13 @@ def bpe_train(
     ).orderBy("rank")
 
 
-def token_count_trained(
-    documents: DataFrame,
-    merges: list | None = None,
-    n_merges: int = BPE_MERGES,
-    top_words: int = BPE_TOP_WORDS,
-) -> DataFrame:
+def token_count_trained(documents: DataFrame) -> DataFrame:
     """Per-document token count under the TRAINED tokenizer — the number
     a pretraining budget actually pays, vs the whitespace/regex proxies
     in textstats — (doc_id, n_words, n_bpe_tokens, tokens_per_word).
 
-    ``merges`` is a list of (left, right) pairs in rank order (e.g. from
-    :func:`bpe_train`'s output rows); when None it is trained here first.
-    Encoding applies the merges IN RANK ORDER to every word — exactly the
+    The merges are :func:`bpe_train`'s, trained here first.  Encoding
+    applies the merges IN RANK ORDER to every word — exactly the
     reference BPE apply rule — as a chain of k map-only literal replaces
     over the sentinel-spaced symbol string (same engine-identical rewrite
     as training; k is the merge count, so the whole encode is ONE
@@ -154,11 +144,7 @@ def token_count_trained(
     artifact, like the IVF centroids); the corpus pass is map-only.
     ``tokens_per_word`` = n_bpe_tokens / n_words compression accounting.
     """
-    if merges is None:
-        merges = [
-            (r.left_sym, r.right_sym)
-            for r in bpe_train(documents, n_merges, top_words).collect()
-        ]
+    merges = [(r.left_sym, r.right_sym) for r in bpe_train(documents).collect()]
     toks = tokens_col(F.col("text"))
     word = F.explode_outer(toks).alias("word")
     ex = documents.select("doc_id", word).where(

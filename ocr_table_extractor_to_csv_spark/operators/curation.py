@@ -100,35 +100,29 @@ def curate_neardup(
 
 
 DECONTAMINATE_THRESHOLD = 0.5
-
-
+DECONTAMINATE_EVAL_MOD = 97  # the eval set is the doc_id % mod == 0 slice
 DECONTAMINATE_MAX_BROADCAST_SHINGLES = 5_000_000  # ~a few hundred MB of keys
+PACK_BUDGET = 2048  # tokens per packed sequence bin
+PACK_SHARDS = 16  # packing shards (doc_id % shards)
 
 
-def decontaminate(
-    documents: DataFrame,
-    eval_set: DataFrame | None = None,
-    eval_mod: int = 97,
-    n: int = 3,
-    threshold: float = DECONTAMINATE_THRESHOLD,
-    max_broadcast_shingles: int = DECONTAMINATE_MAX_BROADCAST_SHINGLES,
-    *,
-    scope: RunScope,
-) -> DataFrame:
+def decontaminate(documents: DataFrame, *, scope: RunScope) -> DataFrame:
     """Benchmark decontamination: per-document n-gram overlap against an
     evaluation set — (doc_id, n_shingles, n_overlap, overlap_ratio,
     contaminated).
 
-    ``eval_set`` defaults to the deterministic ``doc_id % eval_mod == 0``
-    slice of the corpus (a stand-in benchmark; pass the real eval table in
-    production).  Scale shape: the corpus side is the linear shingle
+    The eval set is the deterministic ``doc_id % DECONTAMINATE_EVAL_MOD ==
+    0`` slice of the corpus (a stand-in benchmark).  A document is
+    contaminated at ``overlap_ratio >= DECONTAMINATE_THRESHOLD``.  Scale
+    shape: the corpus side is the linear shingle
     explode; the eval side collapses to DISTINCT shingles and (normally)
     BROADCASTS — benchmark suites are KBs-to-MBs against a 100 TB corpus,
     so the overlap join never shuffles the corpus, and per-doc counts
     partial-aggregate map-side.
 
     Broadcast guard (r3 verdict #7): the distinct eval shingles are COUNTED
-    first (one action on the small side); above ``max_broadcast_shingles``
+    first (one action on the small side); above
+    ``DECONTAMINATE_MAX_BROADCAST_SHINGLES``
     the broadcast hint would OOM the driver/executors — the join explicitly
     falls back to a shuffle hash join (still keyed on shingle; the corpus
     pays one shuffle, correctness identical).  The chosen strategy and the
@@ -136,16 +130,15 @@ def decontaminate(
     persisted eval-shingle frame (``plans.scope.RunScope``)."""
     from .dedup import shingles
 
-    if eval_set is None:
-        eval_set = documents.where(F.pmod(F.col("doc_id"), F.lit(eval_mod)) == 0)
-    doc_sh = shingles(documents, n)
+    eval_set = documents.where(F.pmod(F.col("doc_id"), F.lit(DECONTAMINATE_EVAL_MOD)) == 0)
+    doc_sh = shingles(documents)
     # persist before the count: the guard's count() action would otherwise
     # run the full eval-side explode+distinct once for the count and AGAIN
     # uncached for the join below — and the persisted result is exactly
     # what the join consumes
-    eval_distinct = scope.persist(shingles(eval_set, n).select("shingle").distinct())
+    eval_distinct = scope.persist(shingles(eval_set).select("shingle").distinct())
     n_eval = eval_distinct.count()
-    if n_eval <= max_broadcast_shingles:
+    if n_eval <= DECONTAMINATE_MAX_BROADCAST_SHINGLES:
         strategy, eval_sh = "broadcast", F.broadcast(eval_distinct)
     else:
         strategy, eval_sh = "shuffle", eval_distinct.hint("shuffle_hash")
@@ -164,22 +157,18 @@ def decontaminate(
             "n_shingles",
             F.coalesce(F.col("n_overlap"), F.lit(0)).alias("n_overlap"),
             F.round(ratio, 5).alias("overlap_ratio"),
-            (ratio >= F.lit(threshold)).alias("contaminated"),
+            (ratio >= F.lit(DECONTAMINATE_THRESHOLD)).alias("contaminated"),
         )
     )
 
 
-def pack_sequences(
-    documents: DataFrame,
-    budget: int = 2048,
-    n_shards: int = 16,
-) -> DataFrame:
+def pack_sequences(documents: DataFrame) -> DataFrame:
     """Pretraining sequence packing: assign each document a (shard, bin)
-    slot under a fixed token ``budget`` per bin — (doc_id, shard, n_tokens,
-    bin_id, offset_in_bin).
+    slot under a fixed token budget ``PACK_BUDGET`` per bin — (doc_id,
+    shard, n_tokens, bin_id, offset_in_bin).
 
     Spec (deterministic, shared with the SQL oracle): docs are sharded by
-    doc_id % n_shards; within a shard, docs are taken in doc_id order and
+    doc_id % PACK_SHARDS; within a shard, docs are taken in doc_id order and
     packed CONTIGUOUS-FILL — a running token cumsum, bin_id =
     (cumsum - n) // budget, offset = (cumsum - n) % budget — i.e. documents
     stream into bins back-to-back and one doc may STRADDLE a bin boundary
@@ -187,7 +176,7 @@ def pack_sequences(
     docs longer than the budget simply span multiple bins).
 
     Scale shape: ONE window cumsum partitioned by shard — each shard's
-    packing is independent, so parallelism = n_shards (set it to a multiple
+    packing is independent, so parallelism = PACK_SHARDS (set it to a multiple
     of the cluster's cores; a global single-window pack would serialize).
     """
     from .textstats import tokens_col
@@ -195,13 +184,13 @@ def pack_sequences(
     n = F.size(tokens_col(F.col("text")))
     base = documents.select(
         "doc_id",
-        F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
+        F.pmod(F.col("doc_id"), F.lit(PACK_SHARDS)).cast("int").alias("shard"),
         n.alias("n_tokens"),
     )
-    return base.select("doc_id", "shard", "n_tokens", *_pack_columns(budget))
+    return base.select("doc_id", "shard", "n_tokens", *_pack_columns())
 
 
-def _pack_columns(budget: int) -> list:
+def _pack_columns() -> list:
     """The contiguous-fill packing spec — (bin_id, offset_in_bin) from a
     per-shard running token cumsum — as the ONE definition shared by
     ``pack_sequences`` and ``curate_pipeline`` (and mirrored by both SQL
@@ -211,41 +200,39 @@ def _pack_columns(budget: int) -> list:
     w = Window.partitionBy("shard").orderBy("doc_id")
     cum = F.sum("n_tokens").over(w)
     return [
-        F.floor((cum - F.col("n_tokens")) / budget).cast("long").alias("bin_id"),
-        F.pmod(cum - F.col("n_tokens"), F.lit(budget)).cast("int").alias("offset_in_bin"),
+        F.floor((cum - F.col("n_tokens")) / PACK_BUDGET).cast("long").alias("bin_id"),
+        F.pmod(cum - F.col("n_tokens"), F.lit(PACK_BUDGET)).cast("int").alias("offset_in_bin"),
     ]
 
 
-def sample_stratified(
-    documents: DataFrame,
-    rates: dict | None = None,
-    default_rate: float = 0.1,
-    strata_col: str = "lang",
-    salt: str = "sample",
-) -> DataFrame:
+SAMPLE_RATES = {"en": 0.5, "es": 0.25}  # per-lang keep rate
+SAMPLE_DEFAULT_RATE = 0.1  # keep rate of every other lang
+
+
+def sample_stratified(documents: DataFrame) -> DataFrame:
     """Deterministic stratified sampling for mix planning: keep a document
-    iff u(doc_id) < rate(stratum), where u = first-32-bits of
-    md5('{salt}:' || doc_id) / 2^32 — a pure column expression, so the
+    iff u(doc_id) < rate(lang) (``SAMPLE_RATES``, else
+    ``SAMPLE_DEFAULT_RATE``), where u = first-32-bits of
+    md5('sample:' || doc_id) / 2^32 — a pure column expression, so the
     sample is reproducible on any cluster, any partitioning, any retry
     (rand() is none of those).  The division is by a power of two: u is
     bit-exact in every engine.  Returns (doc_id, stratum, u)."""
-    rates = rates if rates is not None else {"en": 0.5, "es": 0.25}
     u = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string"))), 1, 8
+                F.md5(F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))), 1, 8
             ),
             16,
             10,
         ).cast("long")
         / F.lit(float(2**32))
     )
-    rate = F.lit(float(default_rate))
-    for stratum, r in sorted(rates.items()):
-        rate = F.when(F.col(strata_col) == stratum, F.lit(float(r))).otherwise(rate)
+    rate = F.lit(float(SAMPLE_DEFAULT_RATE))
+    for stratum, r in sorted(SAMPLE_RATES.items()):
+        rate = F.when(F.col("lang") == stratum, F.lit(float(r))).otherwise(rate)
     return (
         documents.select(
-            "doc_id", F.col(strata_col).alias("stratum"), u.alias("u"), rate.alias("_r")
+            "doc_id", F.col("lang").alias("stratum"), u.alias("u"), rate.alias("_r")
         )
         .where(F.col("u") < F.col("_r"))
         .select("doc_id", "stratum", F.round("u", 6).alias("u"))
@@ -256,11 +243,6 @@ def curate_pipeline(
     documents: DataFrame,
     min_quality: float = DEFAULT_MIN_QUALITY,
     langs=DEFAULT_LANGS,
-    eval_mod: int = 97,
-    n: int = 3,
-    threshold: float = DECONTAMINATE_THRESHOLD,
-    budget: int = 2048,
-    n_shards: int = 16,
     url_col: str | None = None,
     clean_chunks: int | None = None,
     *,
@@ -297,7 +279,7 @@ def curate_pipeline(
     would triple its shuffles).
 
     and the survivors are then ``pack_sequences``-packed into token bins
-    (shard = doc_id % n_shards over SURVIVORS, contiguous fill in doc_id
+    (shard = doc_id % PACK_SHARDS over SURVIVORS, contiguous fill in doc_id
     order, reusing the already-computed n_tokens — no re-tokenization).
 
     Returns (doc_id, n_tokens, quality_score, lang_pred, shard, bin_id,
@@ -364,9 +346,7 @@ def curate_pipeline(
     done = run_branches(
         "curate_pipeline",
         {
-            "decontaminate": lambda: decontaminate(
-                base, eval_mod=eval_mod, n=n, threshold=threshold, scope=scope
-            ),
+            "decontaminate": lambda: decontaminate(base, scope=scope),
             "dedup_clusters": lambda: dedup_clusters(base, scope=scope),
         },
     )
@@ -374,8 +354,8 @@ def curate_pipeline(
     keepers = done["dedup_clusters"].where(F.col("is_keeper")).select("doc_id")
     survivors = scored.join(clean, "doc_id").join(keepers, "doc_id")
 
-    shard = F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard")
-    return survivors.select(*_SCORED, shard).select(*_SCORED, "shard", *_pack_columns(budget))
+    shard = F.pmod(F.col("doc_id"), F.lit(PACK_SHARDS)).cast("int").alias("shard")
+    return survivors.select(*_SCORED, shard).select(*_SCORED, "shard", *_pack_columns())
 
 
 def curate_incremental(
@@ -450,7 +430,7 @@ def curate_incremental(
     )
 
 
-def corpus_diff(old, new, id_col: str = "doc_id", text_col: str = "text"):
+def corpus_diff(old, new):
     """Snapshot reconciliation: which documents were added, removed, or
     changed between two corpus snapshots (e.g. two crawl drops, or an
     Iceberg table at two snapshot ids).
@@ -471,11 +451,9 @@ def corpus_diff(old, new, id_col: str = "doc_id", text_col: str = "text"):
     # NULL, so presence is tracked by its own flag and the digest compare
     # is null-safe — (5, NULL) -> (5, 'x') is 'changed', (5, NULL) ->
     # (5, NULL) is unchanged (absent from the output)
-    of = old.select(F.col(id_col).alias("doc_id"),
-                    F.md5(F.col(text_col)).alias("_fp_old"),
+    of = old.select("doc_id", F.md5(F.col("text")).alias("_fp_old"),
                     F.lit(True).alias("_in_old"))
-    nf = new.select(F.col(id_col).alias("doc_id"),
-                    F.md5(F.col(text_col)).alias("_fp_new"),
+    nf = new.select("doc_id", F.md5(F.col("text")).alias("_fp_new"),
                     F.lit(True).alias("_in_new"))
     status = (
         F.when(F.col("_in_old").isNull(), F.lit("added"))

@@ -37,6 +37,10 @@ BAND_SIZE = 2  # 8 bands of 2 rows
 # compact twin (bits=32) — its 8-bit band keys crowd at corpus scale.
 SIMHASH_BITS = 64
 MAX_BUCKET = 64  # LSH band-bucket membership cap (hot-bucket guard)
+SHINGLE_N = 3  # word n-gram length of every shingle-based operator
+JACCARD_SAMPLE_MOD = 17  # ngram_jaccard_pairs keeps doc_id % mod == 0
+CC_MAX_ITER = 25  # connected_components raises after this many rounds
+CHUNK_TOKENS = 10  # tokens per line-dedup chunk
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -69,9 +73,9 @@ def _gram_chain(toks, n: int):
     return grams
 
 
-def shingles(documents: DataFrame, n: int = 3, carry: tuple = ()) -> DataFrame:
-    """(doc_id, *carry, shingle) — distinct word n-grams, '_'-joined (the
-    shared ``_gram_chain`` builder).  ``carry`` names extra document
+def shingles(documents: DataFrame, carry: tuple = ()) -> DataFrame:
+    """(doc_id, *carry, shingle) — distinct word ``SHINGLE_N``-grams,
+    '_'-joined (the shared ``_gram_chain`` builder).  ``carry`` names extra document
     columns to keep alongside (e.g. ``("source",)`` for per-source
     sketches) — carried through the explode, NOT re-joined later, so no
     extra shuffle.
@@ -79,6 +83,7 @@ def shingles(documents: DataFrame, n: int = 3, carry: tuple = ()) -> DataFrame:
     Docs with < n tokens emit their full token join as the single shingle
     (so short docs still participate).
     """
+    n = SHINGLE_N
     toks = tokens_col(F.col("text"))
     grams = F.when(
         F.size(toks) >= n, _gram_chain(toks, n)
@@ -91,9 +96,9 @@ def shingles(documents: DataFrame, n: int = 3, carry: tuple = ()) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(documents: DataFrame, n: int = 3, sample_mod: int = 17) -> DataFrame:
+def ngram_jaccard_pairs(documents: DataFrame) -> DataFrame:
     """All-pairs Jaccard over a deterministic doc_id sample (oracle path)."""
-    sh = shingles(documents.where(F.pmod(F.col("doc_id"), F.lit(sample_mod)) == 0), n)
+    sh = shingles(documents.where(F.pmod(F.col("doc_id"), F.lit(JACCARD_SAMPLE_MOD)) == 0))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -124,14 +129,15 @@ def _xor_constants(k: int) -> list:
     return [int(hashlib.md5(f"seed:{i}".encode()).hexdigest()[:15], 16) for i in range(k)]
 
 
-def minhash_signatures(documents: DataFrame, n: int = 3, k: int = N_MINHASH) -> DataFrame:
-    """(doc_id, m0..m{k-1}) — min over shingles of (h0(shingle) XOR X_i),
-    computed as k aggregates in ONE pass (no row-multiplying seed explode;
-    map-side partial min makes this shuffle a few long-ints per doc)."""
-    sh = shingles(documents, n)
+def minhash_signatures(documents: DataFrame) -> DataFrame:
+    """(doc_id, m0..m{k-1}) — min over shingles of (h0(shingle) XOR X_i)
+    for k = ``N_MINHASH``, computed as k aggregates in ONE pass (no
+    row-multiplying seed explode; map-side partial min makes this shuffle
+    a few long-ints per doc)."""
+    sh = shingles(documents)
     h0 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
     hashed = sh.select("doc_id", h0.alias("h0"))
-    xs = _xor_constants(k)
+    xs = _xor_constants(N_MINHASH)
     return hashed.groupBy("doc_id").agg(
         *[F.min(F.expr(f"h0 ^ {x}L")).alias(f"m{i}") for i, x in enumerate(xs)]
     )
@@ -151,17 +157,15 @@ def band_rows(
     )
 
 
-def lsh_bands(
-    documents: DataFrame, n: int = 3, k: int = N_MINHASH, band_size: int = BAND_SIZE
-) -> DataFrame:
+def lsh_bands(documents: DataFrame) -> DataFrame:
     """(doc_id, band, bkey) — one row per (doc, band); bkey is the md5 of
-    the band's ``band_size`` comma-joined signature values."""
-    m = [F.col(f"m{i}").cast("string") for i in range(k)]
+    the band's ``BAND_SIZE`` comma-joined signature values."""
+    m = [F.col(f"m{i}").cast("string") for i in range(N_MINHASH)]
     keys = [
-        F.md5(F.concat_ws(",", *m[b * band_size : (b + 1) * band_size]))
-        for b in range(k // band_size)
+        F.md5(F.concat_ws(",", *m[b * BAND_SIZE : (b + 1) * BAND_SIZE]))
+        for b in range(N_MINHASH // BAND_SIZE)
     ]
-    return band_rows(minhash_signatures(documents, n, k), keys)
+    return band_rows(minhash_signatures(documents), keys)
 
 
 def bucket_stats(bands: DataFrame, max_bucket: int) -> DataFrame:
@@ -180,16 +184,10 @@ def bucket_stats(bands: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def lsh_bucket_stats(
-    documents: DataFrame,
-    n: int = 3,
-    k: int = N_MINHASH,
-    band_size: int = BAND_SIZE,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
+def lsh_bucket_stats(documents: DataFrame) -> DataFrame:
     """``bucket_stats`` of the MinHash bands — report this next to dedup
     output so what ``minhash_lsh_pairs``' cap drops is visible."""
-    return bucket_stats(lsh_bands(documents, n, k, band_size), max_bucket)
+    return bucket_stats(lsh_bands(documents), MAX_BUCKET)
 
 
 def cap_hot_buckets(bands: DataFrame, keys: list, max_bucket: int) -> DataFrame:
@@ -235,18 +233,12 @@ def bucket_join(
     )
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame,
-    n: int = 3,
-    k: int = N_MINHASH,
-    band_size: int = BAND_SIZE,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
+def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any LSH band bucket.
 
     Hot-bucket guard (the 100 TB failure mode): a band bucket with M members
     emits M(M-1)/2 pairs, and boilerplate-heavy corpora create giant buckets
-    exactly where dedup matters.  Buckets with > ``max_bucket`` docs are
+    exactly where dedup matters.  Buckets with > ``MAX_BUCKET`` docs are
     SKIPPED in that band; truly identical texts still collapse via
     ``exact_dedup``, and near-dup clusters bigger than the cap still link
     through their less-crowded bands.  Use ``lsh_bucket_stats`` to report
@@ -261,18 +253,10 @@ def minhash_lsh_pairs(
     only added a materialization job + cache traffic.  The recompute-free
     shape is the Exchange reuse, not a cache.
     """
-    bands = lsh_bands(documents, n, k, band_size)
-    return bucket_join(bands, ["band", "bkey"], max_bucket).distinct()
+    return bucket_join(lsh_bands(documents), ["band", "bkey"], MAX_BUCKET).distinct()
 
 
-def connected_components(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 25,
-    *,
-    scope: RunScope,
-) -> DataFrame:
+def connected_components(nodes: DataFrame, pairs: DataFrame, *, scope: RunScope) -> DataFrame:
     """(doc_id, cluster_id) — min-id connected components over candidate
     pairs; keeper = the row with doc_id == cluster_id.
 
@@ -283,7 +267,7 @@ def connected_components(
     near-dup chain is long (clique-ish components still converge in 2-3).
     Each iteration is two shuffle joins + one groupBy — the standard
     DataFrame CC shape at 10^9 nodes.  Iterates UNTIL NO LABEL CHANGES
-    (checked per iteration), capped at ``max_iter`` with a loud error
+    (checked per iteration), capped at ``CC_MAX_ITER`` with a loud error
     rather than silently-wrong clusters.
 
     Every iteration's labels are materialized to cut the iterative lineage
@@ -295,10 +279,11 @@ def connected_components(
     nothing.  ``scope`` records the iteration count and convergence.
     """
     spark = nodes.sparkSession
+    max_iter = CC_MAX_ITER
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
+    labels = nodes.select(F.col("doc_id").alias("node"), F.col("doc_id").alias("label"))
     with RunScope(spark, scope.run_dir) as iters:
         # materialize the (small) edge list once: every iteration joins
         # against it, and leaving it lazy would re-run the upstream
@@ -335,7 +320,7 @@ def connected_components(
             if changed == 0:
                 scope.note("connected_components", iterations=it + 1, converged=True)
                 return scope.truncate(
-                    labels.select(F.col("node").alias(id_col), F.col("label").alias("cluster_id")),
+                    labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")),
                     "cc-final",
                 )
     scope.note("connected_components", iterations=max_iter, converged=False)
@@ -396,19 +381,15 @@ SIMHASH_MAX_HAMMING = 3
 SIMHASH_MAX_BUCKET = 1024
 
 
-def simhash_bands(
-    documents: DataFrame,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
+def simhash_bands(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """(doc_id, simhash, band, bkey) — pigeonhole bands of the simhash.
 
-    ``max_hamming + 1`` bands of ``bits // (max_hamming + 1)`` bits each;
+    ``SIMHASH_MAX_HAMMING + 1`` bands of ``bits // (SIMHASH_MAX_HAMMING + 1)`` bits each;
     bkey = (simhash >> band_bits*b) & mask.  The mask after the shift makes
     the key identical under arithmetic or logical shift semantics, so the
     sign bit of a 64-bit hash needs no special-casing in either engine.
     """
-    n_bands = max_hamming + 1
+    n_bands = SIMHASH_MAX_HAMMING + 1
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
     keys = [
@@ -418,36 +399,26 @@ def simhash_bands(
     return band_rows(simhash(documents, bits), keys, carry=("simhash",))
 
 
-def simhash_bucket_stats(
-    documents: DataFrame,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    bits: int = SIMHASH_BITS,
-    max_bucket: int = SIMHASH_MAX_BUCKET,
-) -> DataFrame:
+def simhash_bucket_stats(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """``bucket_stats`` of the simhash pigeonhole bands (r3 verdict #3):
     what ``simhash_pairs``' hot-bucket cap drops must be driver-visible,
     never silent."""
-    return bucket_stats(simhash_bands(documents, max_hamming, bits), max_bucket)
+    return bucket_stats(simhash_bands(documents, bits), SIMHASH_MAX_BUCKET)
 
 
-def simhash_pairs(
-    documents: DataFrame,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    bits: int = SIMHASH_BITS,
-    max_bucket: int = SIMHASH_MAX_BUCKET,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: (id_a, id_b, hamming <= max_hamming).
+def simhash_pairs(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+    """Near-dup pairs by SimHash: (id_a, id_b, hamming <= SIMHASH_MAX_HAMMING).
 
-    Pigeonhole banding: split the hash into ``max_hamming + 1`` bands — two
-    hashes within ``max_hamming`` bits MUST agree exactly on at least one
+    Pigeonhole banding: split the hash into ``SIMHASH_MAX_HAMMING + 1`` bands — two
+    hashes within ``SIMHASH_MAX_HAMMING`` bits MUST agree exactly on at least one
     band, so candidates = same (band, key) pairs, confirmed by
     ``bit_count(xor)``.  Recall is exact UP TO the hot-bucket cap (the only
     probabilistic-free claim this operator makes): buckets above
-    ``max_bucket`` are skipped per band under the same no-silent-caps
+    ``SIMHASH_MAX_BUCKET`` are skipped per band under the same no-silent-caps
     contract as ``minhash_lsh_pairs`` — report ``simhash_bucket_stats``
     alongside so the drop is visible.
 
-    Scale note: band keys carry ``bits / (max_hamming + 1)`` bits.  The
+    Scale note: band keys carry ``bits / (SIMHASH_MAX_HAMMING + 1)`` bits.  The
     production configuration is ``bits=64`` => 16-bit band keys (65,536
     buckets per band); the 32-bit variant's 8-bit keys crowd at corpus
     scale and survive only as the compact twin.  Both widths are bit-exact
@@ -460,18 +431,18 @@ def simhash_pairs(
     (doc_id, simhash) frame measured ~1.8x slower than letting
     ReuseExchange dedupe the band subtrees.
     """
-    bands = simhash_bands(documents, max_hamming, bits)
-    cand = bucket_join(bands, ["band", "bkey"], max_bucket, carry=("simhash",)).distinct()
+    bands = simhash_bands(documents, bits)
+    cand = bucket_join(bands, ["band", "bkey"], SIMHASH_MAX_BUCKET, carry=("simhash",)).distinct()
     ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        cand.where(ham <= max_hamming)
+        cand.where(ham <= SIMHASH_MAX_HAMMING)
         .select("id_a", "id_b", ham.cast("int").alias("hamming"))
     )
 
 
 def _chunk_cols(chunk_tokens: int):
     """(chunks array, tail) columns, aliased ``chunks``/``tail`` — the ONE
-    chunking spec of the three line-dedup operators (and the SQL oracles):
+    chunking spec of the line-dedup operators (and the SQL oracles):
     disjoint ``chunk_tokens``-token windows over the normalized token
     array, leftover tokens as the tail.  The ``when`` guard is
     load-bearing: Spark's sequence(0, n-1) with n <= 0 generates a
@@ -496,9 +467,7 @@ def _chunk_cols(chunk_tokens: int):
     return chunks.alias("chunks"), tail.alias("tail")
 
 
-def line_dedup_within_page(
-    documents: DataFrame, chunk_tokens: int = 10
-) -> DataFrame:
+def line_dedup_within_page(documents: DataFrame) -> DataFrame:
     """Within-PAGE repeated-chunk removal (the other half of the C4 line
     rules: cross-document boilerplate is ``line_dedup_clean``, repeated
     menus/footers INSIDE one page is this): keep the first occurrence of
@@ -515,7 +484,7 @@ def line_dedup_within_page(
     strictly before the corpus-wide election at 100 TB: it shrinks the
     exploded chunk volume that election must shuffle."""
     ded = F.array_distinct(F.col("chunks"))
-    return documents.select("doc_id", *_chunk_cols(chunk_tokens)).select(
+    return documents.select("doc_id", *_chunk_cols(CHUNK_TOKENS)).select(
         "doc_id",
         F.size("chunks").cast("int").alias("n_chunks"),
         F.size(ded).cast("int").alias("n_kept"),
@@ -525,7 +494,7 @@ def line_dedup_within_page(
     )
 
 
-def line_dedup_clean(documents: DataFrame, chunk_tokens: int = 10) -> DataFrame:
+def line_dedup_clean(documents: DataFrame, chunk_tokens: int = CHUNK_TOKENS) -> DataFrame:
     """The C4 cleaning TRANSFORM (line_dedup reports the signal; this
     removes the duplication): per document, drop every text chunk that
     already occurred earlier in the corpus — the globally FIRST occurrence
@@ -614,25 +583,20 @@ BLOOM_M_BITS = 1 << 16  # filter width (bits); false-positive knob
 BLOOM_K = 4             # hash functions
 
 
-def _bloom_pos_sql(i: int, m: int = BLOOM_M_BITS, fp: str = "fp") -> str:
+def _bloom_pos_sql(i: int) -> str:
     """The i-th bit position of a fingerprint, as a SQL expression string:
-    pos_i = int(md5(fp || ':' || i)[:5], 16) % m — 20 hex-derived bits per
+    pos_i = int(md5(fp || ':' || i)[:5], 16) % BLOOM_M_BITS — 20 hex-derived bits per
     hash, md5-based so the DuckDB oracle computes identical positions.
     (Strings, not Column objects: the shift functions' bit-count argument
     is expression-valued, which the Python shiftleft/shiftright API does
     not accept.)"""
     return (
-        f"pmod(cast(conv(substring(md5(concat({fp}, ':{i}')), 1, 5), 16, 10) "
-        f"as bigint), {m})"
+        f"pmod(cast(conv(substring(md5(concat(fp, ':{i}')), 1, 5), 16, 10) "
+        f"as bigint), {BLOOM_M_BITS})"
     )
 
 
-def bloom_dedup(
-    seen: DataFrame,
-    new: DataFrame,
-    m: int = BLOOM_M_BITS,
-    k: int = BLOOM_K,
-) -> DataFrame:
+def bloom_dedup(seen: DataFrame, new: DataFrame) -> DataFrame:
     """Incremental exact-dedup of a NEW batch against a SEEN corpus via a
     Bloom prefilter — (doc_id, status) with status in {'new', 'dup',
     'false_positive'}.
@@ -643,10 +607,10 @@ def bloom_dedup(
     filter over the seen fingerprints turns those into a map-only reject.
 
       1. SEEN pass: fingerprint (md5 of normalized text, the exact_dedup
-         spec) -> k bit positions -> bitmap words via ONE groupBy(word)
-         with map-side bit_or partials; at most m/64 rows cross the
-         shuffle and reach the driver (m is a CONFIG CONSTANT — 8 KiB at
-         the default 2^16 bits — independent of corpus size, the same
+         spec) -> k = ``BLOOM_K`` bit positions -> bitmap words via ONE
+         groupBy(word) with map-side bit_or partials; at most m/64 rows
+         cross the shuffle and reach the driver (m = ``BLOOM_M_BITS``,
+         8 KiB at 2^16 bits, independent of corpus size, the same
          bounded-collect contract as the IVF trainer).
       2. NEW pass: map-only membership test against the broadcast-literal
          bitmap — rows with ANY unset bit are definitely 'new' and never
@@ -660,11 +624,11 @@ def bloom_dedup(
          (the Bloom trade made VISIBLE, not silently misclassified —
          no-silent-caps rule).
 
-    Sizing: false-positive rate ~ (1 - e^(-k*n/m))^k; the default
-    (m=65536, k=4) is sized for the sf test corpora — production uses
-    m ~ 10 bits/seen-doc (e.g. 2^43 bits ~ 1 TiB distributed as an
-    Iceberg-stored bitmap, or per-partition filters); ``m`` must be a
-    multiple of 64 (bitmap words).  The point the operator pins is the
+    Sizing: false-positive rate ~ (1 - e^(-k*n/m))^k; (m=65536, k=4) is
+    sized for the sf test corpora — production uses m ~ 10 bits/seen-doc
+    (e.g. 2^43 bits ~ 1 TiB distributed as an Iceberg-stored bitmap, or
+    per-partition filters); m must be a multiple of 64 (bitmap words).
+    The point the operator pins is the
     SHAPE: constant-size broadcast, map-only reject path, exact confirm
     only for the tiny maybe set.  Fully SQL-expressible: the oracle
     computes identical md5 positions and uses set-membership (EXISTS)
@@ -677,15 +641,12 @@ def bloom_dedup(
     """
     from .textstats import norm_text_col
 
-    if m % 64:
-        raise ValueError(f"m must be a multiple of 64 (bitmap words), got {m}")
     norm = norm_text_col(F.coalesce(F.col("text"), F.lit("")))
     seen_fp = seen.select(F.md5(norm).alias("fp"))
     new_fp = new.select("doc_id", F.md5(norm).alias("fp"))
 
-    n_words = m // 64
     pos_arr = F.expr(
-        "array(" + ",".join(_bloom_pos_sql(i, m) for i in range(k)) + ")"
+        "array(" + ",".join(_bloom_pos_sql(i) for i in range(BLOOM_K)) + ")"
     )
     seen_bits = (
         seen_fp.select(F.explode(pos_arr).alias("pos"))
@@ -696,15 +657,15 @@ def bloom_dedup(
         .groupBy("w")
         .agg(F.bit_or("bit").alias("bits"))
     )
-    words = [0] * n_words
+    words = [0] * (BLOOM_M_BITS // 64)
     for r in seen_bits.collect():  # <= m/64 rows, corpus-size-independent
         words[r.w] = r.bits
     bitmap = "array(" + ",".join(f"{w}L" for w in words) + ")"
 
     maybe = " AND ".join(
-        f"((shiftright(element_at(_bm, cast(({_bloom_pos_sql(i, m)}) / 64 as int) + 1), "
-        f"cast(pmod({_bloom_pos_sql(i, m)}, 64) as int)) & 1L) = 1L)"
-        for i in range(k)
+        f"((shiftright(element_at(_bm, cast(({_bloom_pos_sql(i)}) / 64 as int) + 1), "
+        f"cast(pmod({_bloom_pos_sql(i)}, 64) as int)) & 1L) = 1L)"
+        for i in range(BLOOM_K)
     )
     probed = (
         new_fp.withColumn("_bm", F.expr(bitmap))
@@ -737,24 +698,21 @@ def bloom_dedup(
     )
 
 
-def line_dedup(
-    documents: DataFrame,
-    chunk_tokens: int = 10,
-) -> DataFrame:
+def line_dedup(documents: DataFrame) -> DataFrame:
     """C4-style duplicated-line signal: per document, the fraction of its
     text chunks that also occur verbatim in ANOTHER document.
 
     C4/CCNet dedup at line granularity — a line seen elsewhere in the
     corpus is boilerplate (headers, navigation, license blurbs) and is
     removed before training.  The documents table carries no newlines, so
-    disjoint ``chunk_tokens``-token windows stand in for lines; the
+    disjoint ``CHUNK_TOKENS``-token windows stand in for lines; the
     mechanics (explode -> global count -> join back -> per-doc ratio) are
     exactly the two-pass line-dedup shape.
 
     Returns (doc_id, n_chunks, n_dup_chunks, dup_ratio) — docs shorter
     than one chunk are absent (no chunks, no signal).
 
-    Scale shape: one explode (rows x ~n_tokens/chunk_tokens), ONE groupBy
+    Scale shape: one explode (rows x ~n_tokens/CHUNK_TOKENS), ONE groupBy
     on a 128-bit MD5 DIGEST of the chunk (r4 verdict #4: the shuffle key
     is 16 bytes regardless of chunk length — raw boilerplate chunks are
     100s of bytes and dominate shuffle volume; md5 collisions are
@@ -773,7 +731,7 @@ def line_dedup(
     side is immune (partial combine on (chunk_key, doc_id)).
     """
     ex = documents.select(
-        "doc_id", F.explode(_chunk_cols(chunk_tokens)[0]).alias("chunk")
+        "doc_id", F.explode(_chunk_cols(CHUNK_TOKENS)[0]).alias("chunk")
     ).select("doc_id", F.md5(F.col("chunk")).alias("chunk_key"))
     counts = ex.groupBy("chunk_key").agg(
         F.countDistinct("doc_id").alias("docs_with")
@@ -820,12 +778,9 @@ SUBSTR_MIN_ANCHORS = 2   # pair must share this many distinct anchors
 SUBSTR_MAX_BUCKET = 64   # hot-anchor cap (boilerplate spans)
 
 
-def substring_anchors(
-    documents: DataFrame,
-    k: int = SUBSTR_GRAM,
-    anchor_mod: int = SUBSTR_ANCHOR_MOD,
-) -> DataFrame:
-    """(doc_id, anchor) — distinct content-defined anchor k-grams.
+def substring_anchors(documents: DataFrame) -> DataFrame:
+    """(doc_id, anchor) — distinct content-defined anchor k-grams
+    (k = ``SUBSTR_GRAM``, anchor_mod = ``SUBSTR_ANCHOR_MOD``).
 
     Grams are built with the shifted-slice zip_with chain (one pass,
     O(tokens) — see ``shingles``); an anchor is the md5 of the
@@ -842,6 +797,7 @@ def substring_anchors(
     ``anchor_mod`` (bytes shuffled scale as 1/mod, detection floor as
     ~k * mod tokens).
     """
+    k = SUBSTR_GRAM
     toks = tokens_col(F.col("text"))
     grams = F.when(
         F.size(toks) >= k, _gram_chain(toks, k)
@@ -851,19 +807,13 @@ def substring_anchors(
         documents.select(
             "doc_id", F.explode(F.array_distinct(grams)).alias("gram")
         )
-        .where(F.pmod(h32, F.lit(anchor_mod)) == 0)
+        .where(F.pmod(h32, F.lit(SUBSTR_ANCHOR_MOD)) == 0)
         .select("doc_id", F.md5(F.col("gram")).alias("anchor"))
     )
 
 
-def substring_dedup_pairs(
-    documents: DataFrame,
-    k: int = SUBSTR_GRAM,
-    anchor_mod: int = SUBSTR_ANCHOR_MOD,
-    min_anchors: int = SUBSTR_MIN_ANCHORS,
-    max_bucket: int = SUBSTR_MAX_BUCKET,
-) -> DataFrame:
-    """(id_a, id_b, n_shared) — document pairs sharing >= ``min_anchors``
+def substring_dedup_pairs(documents: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_shared) — document pairs sharing >= ``SUBSTR_MIN_ANCHORS``
     distinct content-defined anchors: exact-substring dup candidates.
 
     Shape mirrors ``minhash_lsh_pairs``: anchors -> shared skew-safe
@@ -872,13 +822,12 @@ def substring_dedup_pairs(
     still links through its rarer neighboring anchors) -> self-equi-join
     on anchor -> groupBy pair counting shared anchors (per-doc anchors
     are distinct, so count(*) IS the distinct-anchor count).  Pair
-    output is bounded by max_bucket^2 per anchor; requiring
-    ``min_anchors`` >= 2 suppresses single-gram coincidences.
+    output is bounded by ``SUBSTR_MAX_BUCKET``^2 per anchor; requiring
+    ``SUBSTR_MIN_ANCHORS`` >= 2 suppresses single-gram coincidences.
     """
-    anchors = substring_anchors(documents, k, anchor_mod)
     return (
-        bucket_join(anchors, ["anchor"], max_bucket)
+        bucket_join(substring_anchors(documents), ["anchor"], SUBSTR_MAX_BUCKET)
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("int").alias("n_shared"))
-        .where(F.col("n_shared") >= min_anchors)
+        .where(F.col("n_shared") >= SUBSTR_MIN_ANCHORS)
     )

@@ -21,27 +21,25 @@ def _coerce(col):
     )
 
 
-def text_accuracy(cells: DataFrame, ref_col: str = "ref", pred_col: str = "pred") -> DataFrame:
-    """cells: one row per aligned cell."""
+def text_accuracy(cells: DataFrame) -> DataFrame:
+    """cells: one (ref, pred) row per aligned cell."""
+    matched = (F.col("ref") == F.col("pred")).cast("int")
     return cells.agg(
         F.count("*").alias("total_cells"),
-        F.sum((F.col(ref_col) == F.col(pred_col)).cast("int")).alias("matched_cells"),
-        F.round(
-            F.sum((F.col(ref_col) == F.col(pred_col)).cast("int")) / F.count("*"), 6
-        ).alias("text_accuracy"),
+        F.sum(matched).alias("matched_cells"),
+        F.round(F.sum(matched) / F.count("*"), 6).alias("text_accuracy"),
     )
 
 
-def numeric_metrics(
-    pairs: DataFrame, true_col: str = "y_true", pred_col: str = "y_pred", by: list[str] | None = None
-) -> DataFrame:
+def numeric_metrics(pairs: DataFrame, by: list[str] | None = None) -> DataFrame:
     """Masked pairwise MSE/RMSE/R^2 (evaluation.py:53-73).
 
-    ``pairs`` carries raw string or numeric columns; masking keeps rows where
-    both sides coerce.  Group keys via ``by`` give per-column metrics.
+    ``pairs`` carries raw string or numeric ``y_true``/``y_pred`` columns;
+    masking keeps rows where both sides coerce.  Group keys via ``by`` give
+    per-column metrics.
     """
-    t = _coerce(F.col(true_col).cast("string"))
-    p = _coerce(F.col(pred_col).cast("string"))
+    t = _coerce(F.col("y_true").cast("string"))
+    p = _coerce(F.col("y_pred").cast("string"))
     masked = pairs.select(*(by or []), t.alias("t"), p.alias("p")).where(
         F.col("t").isNotNull() & F.col("p").isNotNull()
     )

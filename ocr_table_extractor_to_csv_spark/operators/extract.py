@@ -148,20 +148,18 @@ def make_extract_fn(default_layout: str = "auto", default_args: Optional[dict] =
 
 
 def extract_pages(
-    pages: DataFrame,
-    layout: str = "auto",
-    args: Optional[dict] = None,
-    per_row_dispatch: bool = False,
+    pages: DataFrame, layout: str = "auto", per_row_dispatch: bool = False
 ) -> DataFrame:
     """Declarative entry: prune columns, then one map stage.
 
     ``per_row_dispatch=True`` expects ``layout``/``args`` columns on the
-    input (e.g. the fixtures table) instead of one global config — the
-    Spark analogue of the reference CLI's per-invocation arguments.
+    input (e.g. the fixtures table) instead of one global ``layout`` with
+    default kernel arguments — the Spark analogue of the reference CLI's
+    per-invocation arguments.
     """
     cols = ["url", "html"] + (["layout", "args"] if per_row_dispatch else [])
     pruned = pages.select(*cols)
     return pruned.mapInArrow(
-        worker_batches(make_extract_fn(default_layout=layout, default_args=args)),
+        worker_batches(make_extract_fn(layout)),
         EXTRACTED_SCHEMA,
     )

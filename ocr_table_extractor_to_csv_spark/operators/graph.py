@@ -9,7 +9,7 @@ Why FIXED-POINT integer arithmetic instead of doubles: a distributed
 float sum is non-associative — at 1,000 executors the per-partition
 addition ORDER changes run to run, so float PageRank is not even
 self-reproducible, let alone cross-engine comparable.  All rank math here
-is BIGINT in units of ``1/scale`` (default 1e-12): integer sums are exact
+is BIGINT in units of ``1/PAGERANK_SCALE`` (1e-12): integer sums are exact
 and order-free, and integer floor-division is identical in Spark (``div``)
 and DuckDB (``//``) for non-negative operands, so the operator is
 bit-exact on any partitioning, any retry, and against the SQL oracle.
@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from ..plans.scope import RunScope
 
 PAGERANK_SCALE = 10**12
+PAGERANK_DAMPING_NUM = 85  # damping = 85 / 100
+PAGERANK_DAMPING_DEN = 100
 
 
 def host_link_graph(documents: DataFrame, n_hosts: int = 97) -> DataFrame:
@@ -62,15 +64,14 @@ def pagerank(
     *,
     scope: RunScope,
     iterations: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = PAGERANK_SCALE,
 ) -> DataFrame:
     """Fixed-point damped PageRank over a (src, dst) edge list; returns
-    (node, rank_fp) with ``rank_fp`` in units of ``1/scale``.
+    (node, rank_fp) with ``rank_fp`` in units of ``1/scale``
+    (``PAGERANK_SCALE``).
 
     Per iteration: ``share(src) = (rank * damping_num) div
-    (damping_den * out_weight)``, each edge carries ``share * weight`` to
+    (damping_den * out_weight)`` (``PAGERANK_DAMPING_NUM`` /
+    ``PAGERANK_DAMPING_DEN``), each edge carries ``share * weight`` to
     its dst, and ``rank' = base + sum(carried)`` with
     ``base = (scale * (damping_den - damping_num)) div (damping_den * n)``.
     All BIGINT (see module docstring for why).
@@ -85,17 +86,15 @@ def pagerank(
     collects to the driver except the one up-front node count (a single
     scalar, same class as the Bloom bitmap collect).
 
-    ``damping_num``/``damping_den``/``scale``/``iterations`` must be
-    Python ints (asserted) — they are inlined into column expressions.
+    ``iterations`` must be a positive Python int (checked).
 
     The edge/node tables and every iteration's rank frame are persisted
     through ``scope`` (see ``plans.scope.RunScope``); intermediate rank
     frames are released as the loop advances, the rest when the scope
     closes.
     """
-    for v in (iterations, damping_num, damping_den, scale):
-        if not isinstance(v, int) or isinstance(v, bool) or v <= 0:
-            raise ValueError("pagerank parameters must be positive ints")
+    if not isinstance(iterations, int) or isinstance(iterations, bool) or iterations <= 0:
+        raise ValueError("pagerank iterations must be a positive int")
     ew = edges.groupBy("src", "dst").agg(F.count("*").cast("long").alias("w"))
     outw = ew.groupBy("src").agg(F.sum("w").cast("long").alias("out_w"))
     nodes = (
@@ -108,12 +107,11 @@ def pagerank(
     n = nodes.count()  # the loop's only driver scalar
     if n == 0:
         raise ValueError("pagerank: empty edge list (no nodes)")
-    base = (scale * (damping_den - damping_num)) // (damping_den * n)
-    share_expr = F.expr(
-        f"(rank_fp * {damping_num}) div ({damping_den} * out_w)"
-    )
+    num, den = PAGERANK_DAMPING_NUM, PAGERANK_DAMPING_DEN
+    base = (PAGERANK_SCALE * (den - num)) // (den * n)
+    share_expr = F.expr(f"(rank_fp * {num}) div ({den} * out_w)")
 
-    ranks = nodes.withColumn("rank_fp", F.lit(scale // n).cast("long"))
+    ranks = nodes.withColumn("rank_fp", F.lit(PAGERANK_SCALE // n).cast("long"))
     prev = None
     for _ in range(iterations):
         carried = (

@@ -24,6 +24,11 @@ from pyspark.sql.window import Window
 from .dedup import band_rows, bucket_join
 
 SIM_ROUND = 4
+QUERY_MOD = 50  # top-k paths query the vec_id % QUERY_MOD == 0 sample
+LSH_PLANES = 6  # hyperplanes per hash table (bucket = 6 sign bits)
+LSH_TABLES = 8  # hash tables of the embedding sketch
+COS_DUP_THRESHOLD = 0.35  # cosine at which two embeddings are duplicates
+COS_MAX_BUCKET = 256  # cosine_dup_pairs' hot-bucket cap
 
 
 def _dot(a, b):
@@ -56,17 +61,15 @@ def _top_k(sim: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk(
-    embeddings: DataFrame, k: int = 5, query_mod: int = 50
-) -> DataFrame:
-    """Top-k cosine neighbors for vec_id % query_mod == 0 queries.
+def brute_force_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
+    """Top-k cosine neighbors for vec_id % QUERY_MOD == 0 queries.
 
     Self-match excluded; rank ties broken by neighbor id (deterministic).
     """
     base = embeddings.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    q = base.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
+    q = base.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
@@ -78,9 +81,6 @@ def brute_force_topk(
         (_dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
     )
     return _top_k(sim, k)
-
-
-DEFAULT_DIM = 64  # test embeddings dimension; callers pass theirs
 
 
 def plane_weights(plane_id: int, dim: int) -> list:
@@ -112,33 +112,31 @@ def _proj_sql(weights: list) -> str:
     )
 
 
-def multi_table_sketch(
-    embeddings: DataFrame,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
+def multi_table_sketch(embeddings: DataFrame, n_tables: int = LSH_TABLES) -> DataFrame:
     """(vec_id, b0..b{n_tables-1}) — ALL hash-table buckets in ONE scan.
 
     bucket_t = sum_p [ <emb, w_{t*1000+p}> > 0 ] << p.  All n_tables x
-    n_planes projections are plain JVM column expressions over literal
-    weight arrays; no shuffle, no Python, one pass over the table."""
+    ``LSH_PLANES`` projections are plain JVM column expressions over literal
+    weight arrays; no shuffle, no Python, one pass over the table.  The
+    weights' dimension is the first vector's length (one 1-row job)."""
+    first = embeddings.select(F.size("embedding")).first()
+    dim = first[0] if first else 0
     cols = []
     guard = (
         f"CASE WHEN size(embedding) <> {dim} THEN "
         f"CAST(raise_error('embedding dim ' || size(embedding) || "
-        f"' does not match sketch dim {dim}: pass the real dim') AS BIGINT) ELSE "
+        f"' does not match sketch dim {dim} of the first vector') AS BIGINT) ELSE "
     )
     for t in range(n_tables):
         terms = " + ".join(
             f"(CASE WHEN {_proj_sql(plane_weights(t * 1000 + p, dim))} > CAST(0.0 AS DOUBLE) "
             f"THEN {1 << p}L ELSE 0L END)"
-            for p in range(n_planes)
+            for p in range(LSH_PLANES)
         )
-        # guard: a vector LONGER than dim would zip with NULL weights and
-        # silently collapse every vector into bucket 0; a SHORTER one would
-        # project against truncated weights while the SQL oracle (iterating
-        # 1..dim) NULLs out — fail loudly on any mismatch instead
+        # guard: a vector LONGER than the first would zip with NULL weights
+        # and silently collapse into bucket 0; a SHORTER one would project
+        # against truncated weights while the SQL oracle (iterating 1..dim)
+        # NULLs out — fail loudly on any mismatch instead
         cols.append(F.expr(f"{guard}({terms}) END").alias(f"b{t}"))
     return embeddings.select("vec_id", *cols)
 
@@ -180,16 +178,18 @@ def _collect_train_sample(
     return sorted((int(r.vec_id), _quantize(r.embedding)) for r in rows)
 
 
-def _quantized_codes_frame(embeddings: DataFrame, bits: int = 8) -> DataFrame:
+QUANT_BITS = 8  # embedding storage codes are int8
+
+
+def _quantized_codes_frame(embeddings: DataFrame) -> DataFrame:
     """(vec_id, embedding, scale, q) — the ONE symmetric int-quantization
-    spec (``scale = max|x| / (2^(bits-1)-1)`` at FULL precision,
+    spec (``scale = max|x| / (2^(QUANT_BITS-1)-1)`` at FULL precision,
     ``q_i = floor(x_i / scale + 0.5)``, all-zero vectors -> scale 0 and
     all-zero codes).  ``quantize_embeddings`` (storage table) and
     ``_q8_norm_frame`` (inline ANN candidate codes) both build on this
     frame so the two paths cannot drift (r6 review): the q8 refine path's
-    oracle exactness and its table/inline value-identity both depend on a
-    single code spec."""
-    qmax = float((1 << (bits - 1)) - 1)
+    oracle exactness depends on a single code spec."""
+    qmax = float((1 << (QUANT_BITS - 1)) - 1)
     ab = F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
     scale = F.array_max(ab) / F.lit(qmax)
     q = F.when(
@@ -206,13 +206,13 @@ def _quantized_codes_frame(embeddings: DataFrame, bits: int = 8) -> DataFrame:
     ).withColumn("q", q)
 
 
-def quantize_embeddings(embeddings: DataFrame, bits: int = 8) -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Symmetric per-vector int quantization for embedding STORAGE — the
     4x (int8) table-size lever at 100 TB, where the embedding column
     dominates bytes and ANN candidate generation tolerates quantization
     noise (exact re-rank fetches the few float vectors that matter).
 
-    Per vector: ``scale = max(|x|) / (2^(bits-1) - 1)``;
+    Per vector: ``scale = max(|x|) / (2^(QUANT_BITS-1) - 1)``;
     ``q_i = floor(x_i / scale + 0.5)`` (floor, not round-half-even: floor
     is IEEE-identical in Spark and DuckDB, so the oracle is bit-exact —
     the same trick as the IVF quantizer spec above).  All-zero vectors
@@ -220,12 +220,12 @@ def quantize_embeddings(embeddings: DataFrame, bits: int = 8) -> DataFrame:
     (vec_id, scale, q, mean_abs_err) — ``mean_abs_err`` is the
     reconstruction error |x - q*scale| averaged with a left-to-right
     fold (defined order, cross-engine exact), the per-vector quality
-    number to monitor when picking ``bits``.
+    number to monitor when picking ``QUANT_BITS``.
 
     Map-only: one projection, no shuffle, no Python — pure column
     expressions over the array.
     """
-    base = _quantized_codes_frame(embeddings, bits)
+    base = _quantized_codes_frame(embeddings)
     err_sum = F.aggregate(
         F.zip_with(
             F.col("embedding"),
@@ -252,9 +252,7 @@ def quantize_embeddings(embeddings: DataFrame, bits: int = 8) -> DataFrame:
     )
 
 
-def _q8_norm_frame(
-    embeddings: DataFrame, q8_codes: DataFrame | None = None
-) -> DataFrame:
+def _q8_norm_frame(embeddings: DataFrame) -> DataFrame:
     """(vec_id, q8: array<long>, n8: double) — the int8 symmetric codes of
     ``quantize_embeddings`` (same spec: scale = max|x|/127 FULL precision,
     code = floor(x/scale + 0.5)) plus the code-vector norm, for cosine
@@ -262,38 +260,16 @@ def _q8_norm_frame(
     codes; they can't be cosine neighbors anyway), so n8 > 0 always holds:
     a nonzero vector has at least one code at +/-127.  Map-only; every
     arithmetic step (max, one division, floor, BIGINT squares) is
-    cross-engine exact, so a DuckDB oracle lands on identical codes.
-
-    ``q8_codes`` — a MATERIALIZED ``quantize_embeddings`` output table
-    (vec_id, q) — is the production path: the codes are READ (1 B/dim vs
-    4 B/dim floats — the actual IO win) instead of recomputed from the
-    float column.  Without it the codes are derived inline from
-    ``embeddings``, which is value-identical but reads the float column —
-    a simulation of the layout, not a storage saving (r6 review)."""
-    if q8_codes is not None:
-        q8 = F.transform(F.col("q"), lambda x: x.cast("long"))
-        return (
-            q8_codes.select("vec_id", q8.alias("q8"))
-            .withColumn(
-                "n8",
-                F.sqrt(
-                    F.aggregate(
-                        F.col("q8"),
-                        F.lit(0).cast("long"),
-                        lambda acc, v: acc + v * v,
-                    ).cast("double")
-                ),
-            )
-            .where(F.col("n8") > 0)
-            .select("vec_id", "q8", "n8")
-        )
+    cross-engine exact, so a DuckDB oracle lands on identical codes.  The
+    codes are derived inline from ``embeddings``: value-identical to a
+    materialized code table, but read from the float column."""
     n8 = F.sqrt(
         F.aggregate(
             F.col("q8"), F.lit(0).cast("long"), lambda acc, v: acc + v * v
         ).cast("double")
     )
     return (
-        _quantized_codes_frame(embeddings, bits=8)
+        _quantized_codes_frame(embeddings)
         .where(F.col("scale") > 0)
         .withColumn("q8", F.transform(F.col("q"), lambda x: x.cast("long")))
         .withColumn("n8", n8)
@@ -301,20 +277,15 @@ def _q8_norm_frame(
     )
 
 
-IVF_MAX_TRAIN = 1024  # 64x the default n_centroids; absolute, not proportional
+IVF_MAX_TRAIN = 1024  # 64x IVF_CENTROIDS; absolute, not proportional
+IVF_CENTROIDS = 16
 
 
-def train_ivf_centroids(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_iter: int = IVF_TRAIN_ITERS,
-    sample_mod: int = IVF_SAMPLE_MOD,
-    max_train: int = IVF_MAX_TRAIN,
-) -> list:
+def train_ivf_centroids(embeddings: DataFrame, n_centroids: int = IVF_CENTROIDS) -> list:
     """Lloyd-trained coarse quantizer in EXACT INTEGER arithmetic.
 
-    A deterministic BOUNDED sample (vec_id % sample_mod == 0, nonzero
-    quantized vector, hash-ordered ``LIMIT max_train`` — see
+    A deterministic BOUNDED sample (vec_id % IVF_SAMPLE_MOD == 0, nonzero
+    quantized vector, hash-ordered ``LIMIT IVF_MAX_TRAIN`` — see
     ``_collect_train_sample``) is collected once; init centroids are the K
     smallest vec_ids of the sample; each Lloyd round assigns samples to
     argmax <q, S_c>/|S_c| (ties -> lowest cid) and replaces S_c with the
@@ -325,14 +296,15 @@ def train_ivf_centroids(
     score: the DuckDB oracle re-runs the identical iterations in SQL and
     lands on bit-identical centroids, scores, and rankings.
 
-    Returns [(cid, sum_vec: list[int], norm: float)].  The driver memory
-    bound is max_train rows whatever the corpus size; raise max_train
-    (still absolute) for a finer quantizer, never a proportional fraction.
+    ``IVF_TRAIN_ITERS`` Lloyd rounds.  Returns [(cid, sum_vec: list[int],
+    norm: float)].  The driver memory bound is ``IVF_MAX_TRAIN`` rows
+    whatever the corpus size; raise it (still absolute) for a finer
+    quantizer, never a proportional fraction.
     """
-    samp = _collect_train_sample(embeddings, sample_mod, max_train)
+    samp = _collect_train_sample(embeddings, IVF_SAMPLE_MOD, IVF_MAX_TRAIN)
     if not samp:
         raise ValueError(
-            f"no trainable sample: no rows with vec_id % {sample_mod} == 0 "
+            f"no trainable sample: no rows with vec_id % {IVF_SAMPLE_MOD} == 0 "
             "and a nonzero quantized vector"
         )
     import numpy as np
@@ -343,7 +315,7 @@ def train_ivf_centroids(
     # score — are IEEE round-to-nearest in numpy, DuckDB, and Spark alike
     Q = np.array([q for _vid, q in samp], dtype=np.int64)
     cents = Q[:n_centroids].copy()
-    for _ in range(n_iter):
+    for _ in range(IVF_TRAIN_ITERS):
         nrm = np.sqrt((cents * cents).sum(axis=1).astype(np.float64))
         scores = (Q @ cents.T).astype(np.float64) / nrm[None, :]
         assign = scores.argmax(axis=1)  # first-max = lowest cid (tie rule)
@@ -390,13 +362,7 @@ def assign_centroids(embeddings: DataFrame, cents: list) -> DataFrame:
     ).select("vec_id", F.expr(centroid_cid_expr(cents)).alias("cid"))
 
 
-def cluster_stats(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_iter: int = IVF_TRAIN_ITERS,
-    sample_mod: int = IVF_SAMPLE_MOD,
-    max_train: int = IVF_MAX_TRAIN,
-) -> DataFrame:
+def cluster_stats(embeddings: DataFrame) -> DataFrame:
     """(cid, n_vecs, share_ppm) — semantic-cluster balance over the
     TRAINED coarse quantizer: how the corpus distributes across embedding
     clusters, the observability twin of ``semdedup``/``ivf_topk`` and the
@@ -410,10 +376,7 @@ def cluster_stats(
     map-side partial agg + a single-row total broadcast-joined back
     (mix_plan convention) — no window, no driver collect beyond the
     bounded trainer sample."""
-    cents = train_ivf_centroids(
-        embeddings, n_centroids, n_iter, sample_mod, max_train
-    )
-    a = assign_centroids(embeddings, cents)
+    a = assign_centroids(embeddings, train_ivf_centroids(embeddings))
     tot = a.agg(F.count("*").cast("long").alias("tot"))
     return (
         a.groupBy("cid")
@@ -427,24 +390,17 @@ def cluster_stats(
     )
 
 
-def semdedup(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    threshold: float = 0.35,
-    n_iter: int = IVF_TRAIN_ITERS,
-    sample_mod: int = IVF_SAMPLE_MOD,
-    max_train: int = IVF_MAX_TRAIN,
-) -> DataFrame:
+def semdedup(embeddings: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering embeddings with the TRAINED coarse
     quantizer, then keeping, within each cluster, only vectors with no
-    LOWER-id neighbor at cosine >= ``threshold`` — the third embedding
+    LOWER-id neighbor at cosine >= ``COS_DUP_THRESHOLD`` — the third embedding
     dedup path next to LSH-bucketed pairs (``cosine_dup_pairs``, recall
     traded for candidate bound) and exact brute force (oracle only).
 
     Deterministic spec: cluster assignment is ``assign_centroids`` (exact
     integer argmax, lowest-cid ties); the keeper rule is per-vector NOT
-    EXISTS (same-cluster lower-id neighbor with cos >= threshold), so no
+    EXISTS (same-cluster lower-id neighbor with cos >= COS_DUP_THRESHOLD), so no
     iterative component resolution is needed and the oracle replays the
     verdict row for row.  Zero vectors are excluded (no cosine).
 
@@ -462,7 +418,7 @@ def semdedup(
     100 TB write it to a landing table first and semdedup the result.
     Returns (vec_id, cid, is_keeper) ordered by vec_id.
     """
-    cents = train_ivf_centroids(embeddings, n_centroids, n_iter, sample_mod, max_train)
+    cents = train_ivf_centroids(embeddings)
     assign = (
         embeddings.select(
             "vec_id",
@@ -489,7 +445,7 @@ def semdedup(
         .where(
             _dot(F.col("a.embedding"), F.col("b.embedding"))
             / (F.col("a.nrm") * F.col("b.nrm"))
-            >= threshold
+            >= COS_DUP_THRESHOLD
         )
         .select(F.col("b.vec_id").alias("vec_id"))
         .distinct()
@@ -507,15 +463,9 @@ def semdedup(
 def ivf_topk(
     embeddings: DataFrame,
     k: int = 5,
-    query_mod: int = 50,
-    n_centroids: int = 16,
+    n_centroids: int = IVF_CENTROIDS,
     n_probe: int = 4,
-    n_iter: int = IVF_TRAIN_ITERS,
-    sample_mod: int = IVF_SAMPLE_MOD,
-    max_train: int = IVF_MAX_TRAIN,
     refine_q8: int | None = None,
-    q8_codes: DataFrame | None = None,
-    check_codes: bool = True,
 ) -> DataFrame:
     """IVF-flat ANN: TRAINED coarse quantizer -> inverted lists -> probe +
     exact re-rank.
@@ -545,27 +495,10 @@ def ivf_topk(
     and only the top ``k * refine_q8`` per query are re-ranked with the
     float vectors.  The int dot is exact BIGINT (cross-engine bit-exact,
     so the oracle replays the same shortlist) and measured recall loss vs
-    float candidates is 0 at every swept config (BENCH.md §3c).
-
-    The storage-tier IO win (candidate pass reads 1 B/dim codes instead
-    of 4 B/dim floats) exists ONLY when ``q8_codes`` is passed — a
-    materialized ``quantize_embeddings`` output table (vec_id, q) that
-    the candidate scoring reads directly.  Without it the codes are
-    recomputed inline from the float column: value-identical, exercises
-    the exact production plan shape, but reads floats — a layout
-    simulation, not a saving (r6 review; the sandbox has no materialized
-    code table to read).
-
-    A STALE ``q8_codes`` table (embeddings appended after the codes were
-    materialized) would silently drop the uncovered vectors from the
-    candidate set via the inner joins — recall degrades with no error —
-    so by default (``check_codes=True``) the call runs one cheap id-only
-    anti-join count up front and raises if any embedding lacks a code
-    row.  Pass ``check_codes=False`` only when the caller already
-    guarantees coverage (e.g. codes were materialized from this exact
-    table in the same job).
+    float candidates is 0 at every swept config (BENCH.md §3c).  The codes
+    are recomputed inline from the float column (``_q8_norm_frame``).
     """
-    cents = train_ivf_centroids(embeddings, n_centroids, n_iter, sample_mod, max_train)
+    cents = train_ivf_centroids(embeddings, n_centroids)
     assign = assign_centroids(embeddings, cents)
 
     # query side: rank centroids relationally over the tiny broadcast table
@@ -578,7 +511,7 @@ def ivf_topk(
     base = embeddings.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     ).where(F.col("nrm") > 0)
-    q = base.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
+    q = base.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
@@ -607,28 +540,14 @@ def ivf_topk(
         .distinct()
     )
     if refine_q8 is not None:
-        # int8 shortlist: score candidates on the code column (read from
-        # q8_codes when materialized — the 4x IO win — else derived), keep
+        # int8 shortlist: score candidates on the code column, keep
         # k*refine_q8 per query for the float re-rank.  Scales cancel in
         # the cosine; the dot is exact BIGINT so the cutoff is
         # deterministic and oracle-replayable.  The per-query window is
         # bounded by the probed-list size (not a data-skewed corpus key).
-        if q8_codes is not None and check_codes:
-            n_uncovered = (
-                embeddings.select("vec_id")
-                .join(q8_codes.select("vec_id"), "vec_id", "left_anti")
-                .count()
-            )
-            if n_uncovered:
-                raise ValueError(
-                    f"q8_codes is stale: {n_uncovered} embedding vec_ids "
-                    "have no code row; re-materialize quantize_embeddings "
-                    "(or pass check_codes=False to accept silent recall "
-                    "loss on the uncovered vectors)"
-                )
-        q8n = _q8_norm_frame(embeddings, q8_codes)
+        q8n = _q8_norm_frame(embeddings)
         qq8 = F.broadcast(
-            q8n.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
+            q8n.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
                 F.col("vec_id").alias("query_id"),
                 F.col("q8").alias("q8_q"),
                 F.col("n8").alias("n8_q"),
@@ -671,35 +590,23 @@ def ivf_topk(
     return _top_k(sim, k)
 
 
-def lsh_bands_multi(
-    embeddings: DataFrame,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
+def lsh_bands_multi(embeddings: DataFrame, n_tables: int = LSH_TABLES) -> DataFrame:
     """(vec_id, band, bkey) band list from the single-pass sketch: band =
     hash table, bkey = the vector's bucket in it."""
-    sketch = multi_table_sketch(embeddings, n_planes, n_tables, dim)
+    sketch = multi_table_sketch(embeddings, n_tables)
     return band_rows(sketch, [F.col(f"b{t}") for t in range(n_tables)], id_col="vec_id")
 
 
-def cosine_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.35,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    dim: int = DEFAULT_DIM,
-    max_bucket: int = 256,
-) -> DataFrame:
+def cosine_dup_pairs(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup-by-embedding path):
     candidate pairs share any LSH (band, bkey) = (table, bucket); exact
-    cosine >= threshold
-    confirms.  Never all-pairs — the same banded candidate join as
-    ``lsh_topk`` — and buckets with > ``max_bucket`` members are skipped per
+    cosine >= ``COS_DUP_THRESHOLD`` confirms.  Never all-pairs — the same
+    banded candidate join as ``lsh_topk`` — and buckets with more than
+    ``COS_MAX_BUCKET`` members are skipped per
     band (hot-bucket guard, same rationale as dedup.minhash_lsh_pairs; the
     candidates are the shared ``dedup.bucket_join``, whose cap is a groupBy
     + join-back, never a window over the hot bucket key).  Missed duplicates
-    are the LSH recall tradeoff; raise n_tables to trade compute for
+    are the LSH recall tradeoff; raise ``LSH_TABLES`` to trade compute for
     recall.
 
     Persist note (r7, interleaved A/B): pinning the sketch frame to avoid
@@ -707,8 +614,8 @@ def cosine_dup_pairs(
     ReuseExchange dedupes the identical band subtrees behind one shuffle,
     so the hyperplane projections run once per distinct exchange, not
     once per reference."""
-    bands = lsh_bands_multi(embeddings, n_planes, n_tables, dim)
-    pairs = bucket_join(bands, ["band", "bkey"], max_bucket, id_col="vec_id").distinct()
+    bands = lsh_bands_multi(embeddings)
+    pairs = bucket_join(bands, ["band", "bkey"], COS_MAX_BUCKET, id_col="vec_id").distinct()
     base = embeddings.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     ).where(F.col("nrm") > 0)
@@ -727,19 +634,12 @@ def cosine_dup_pairs(
             (_dot(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b"))).alias("cos"),
         )
     )
-    return sim.where(F.col("cos") >= threshold).select(
+    return sim.where(F.col("cos") >= COS_DUP_THRESHOLD).select(
         "id_a", "id_b", F.round("cos", SIM_ROUND).alias("cos_sim")
     )
 
 
-def lsh_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    query_mod: int = 50,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
+def lsh_topk(embeddings: DataFrame, k: int = 5, n_tables: int = LSH_TABLES) -> DataFrame:
     """ANN: exact cosine re-rank within multi-table hyperplane buckets.
 
     L independent hash tables (decorrelated plane sets) union their
@@ -759,9 +659,9 @@ def lsh_topk(
          join on vec_id); the tiny query-sample side broadcasts.
     Everything stays JVM-side column expressions (plan-asserted in tests).
     """
-    bands = lsh_bands_multi(embeddings, n_planes, n_tables, dim)
+    bands = lsh_bands_multi(embeddings, n_tables)
 
-    qb = bands.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
+    qb = bands.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
         F.col("vec_id").alias("query_id"), "band", "bkey"
     )
     cand_ids = (
@@ -775,7 +675,7 @@ def lsh_topk(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     ).where(F.col("nrm") > 0)
     qvec = F.broadcast(
-        base.where(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0).select(
+        base.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),

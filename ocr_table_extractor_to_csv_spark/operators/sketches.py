@@ -7,7 +7,7 @@ the cardinality as ``(k-1) / (m / 2^60)``.  This is the 100 TB answer to
 "how much unique text does each source contribute" — the exact count needs
 a full distinct over ~1e12 shingle rows, the sketch needs k longs per
 source and is MERGEABLE (min-k of a union = min-k of the per-part min-k
-unions), so partial sketches from incremental crawls combine for free.
+unions).
 
 Unlike Spark's ``approx_count_distinct`` (HLL, whose binary registers and
 rounding are engine-private), every step here is deterministic and
@@ -22,10 +22,11 @@ Scale shape: shingle explode is map-only; the ONE real shuffle is the
 (source, h) distinct, a groupBy that gets map-side partial dedup (viral
 duplicate shingles collapse before the wire).  Min-k then uses the
 domain_cap two-phase salted rank: phase 1 ranks within (source, h mod
-salt_mod) so no task sorts a whole source's distinct set; phase 2 re-ranks
-the <= salt_mod*k survivors per source.  Union of per-salt min-k provably
-contains the global min-k, so the oracle is the plain ROW_NUMBER()<=k
-formulation.  Pick salt_mod ~ distinct_per_source / 1e6 in production.
+KMV_SALT_MOD) so no task sorts a whole source's distinct set; phase 2
+re-ranks the <= KMV_SALT_MOD*k survivors per source.  Union of per-salt
+min-k provably contains the global min-k, so the oracle is the plain
+ROW_NUMBER()<=k formulation.  Pick the salt ~ distinct_per_source / 1e6
+in production.
 
 No reference analogue (the reference has no sketch surface); sibling of
 the Bloom filter in ``operators/dedup.py`` — same "constant-size summary
@@ -40,20 +41,17 @@ from pyspark.sql import functions as F
 from .dedup import shingles
 
 KMV_K = 64
+KMV_SALT_MOD = 8
 HASH_SPACE = 1 << 60  # repo-standard conv(substr(md5,1,15),16,10) range
 
 
-def _check_k(k: int) -> None:
-    if not isinstance(k, int) or isinstance(k, bool) or k < 2:
-        raise ValueError("k must be an int >= 2")
-
-
-def _min_k(d: DataFrame, k: int, salt_mod: int) -> DataFrame:
-    """k smallest ``h`` per source over a frame of DISTINCT (source, h)
-    rows — the domain_cap two-phase salted rank (rows are distinct, so
+def _min_k(d: DataFrame) -> DataFrame:
+    """``KMV_K`` smallest ``h`` per source over a frame of DISTINCT (source,
+    h) rows — the domain_cap two-phase salted rank (rows are distinct, so
     plain row_number ranks distinct VALUES)."""
+    k = KMV_K
     p1 = (
-        d.withColumn("_salt", F.pmod(F.col("h"), F.lit(salt_mod)).cast("int"))
+        d.withColumn("_salt", F.pmod(F.col("h"), F.lit(KMV_SALT_MOD)).cast("int"))
         .withColumn(
             "rk",
             F.row_number().over(
@@ -62,7 +60,7 @@ def _min_k(d: DataFrame, k: int, salt_mod: int) -> DataFrame:
         )
         .where(F.col("rk") <= k)
     )
-    # bounded window: <= salt_mod * k rows per source by construction
+    # bounded window: <= KMV_SALT_MOD * k rows per source by construction
     return (
         p1.withColumn(
             "rk2", F.row_number().over(Window.partitionBy("source").orderBy("h"))
@@ -72,47 +70,18 @@ def _min_k(d: DataFrame, k: int, salt_mod: int) -> DataFrame:
     )
 
 
-def kmv_state(
-    documents: DataFrame,
-    *,
-    k: int = KMV_K,
-    n: int = 3,
-    salt_mod: int = 8,
-) -> DataFrame:
+def kmv_state(documents: DataFrame) -> DataFrame:
     """(source, h) — the sketch STATE: the k smallest distinct 60-bit
-    shingle hashes per source (<= k rows/source).  Write this table per
-    crawl; ``kmv_merge`` folds the next crawl's delta into it without
-    rescanning history, and ``kmv_stats`` turns any state into the
-    summary row."""
-    _check_k(k)
-    sh = shingles(documents, n, carry=("source",))
+    shingle hashes per source (<= k rows/source); ``kmv_stats`` turns it
+    into the summary row."""
+    sh = shingles(documents, carry=("source",))
     h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
     # the one real shuffle: distinct (source, h) — compiles to a
     # HashAggregate pair, so viral duplicates collapse map-side
-    d = sh.select("source", h.alias("h")).distinct()
-    return _min_k(d, k, salt_mod)
+    return _min_k(sh.select("source", h.alias("h")).distinct())
 
 
-def kmv_merge(
-    state: DataFrame,
-    documents: DataFrame,
-    *,
-    k: int = KMV_K,
-    n: int = 3,
-    salt_mod: int = 8,
-) -> DataFrame:
-    """Fold a NEW batch of documents into an existing sketch state:
-    min-k(state ∪ sketch(delta)) — by the KMV merge law this equals the
-    state of the concatenated corpus EXACTLY (pytest-pinned), while the
-    cost is O(delta) + O(sources × k): the corpus history never rescans
-    and never reshuffles.  ``k``/``n`` must match the state's."""
-    _check_k(k)
-    delta = kmv_state(documents, k=k, n=n, salt_mod=salt_mod)
-    merged = state.select("source", "h").unionByName(delta).distinct()
-    return _min_k(merged, k, salt_mod)
-
-
-def kmv_stats(state: DataFrame, *, k: int = KMV_K) -> DataFrame:
+def kmv_stats(state: DataFrame) -> DataFrame:
     """(source, n_sketch, kth_min, distinct_est) from a sketch state.
 
     * ``n_sketch``: sketch fill (= min(k, true distinct count));
@@ -121,7 +90,7 @@ def kmv_stats(state: DataFrame, *, k: int = KMV_K) -> DataFrame:
     * ``distinct_est``: EXACT count while n_sketch < k (the sketch saw
       every value), else ``(k-1) * (2^60 div kth_min)``.
     """
-    _check_k(k)
+    k = KMV_K
     agg = state.groupBy("source").agg(
         F.count("*").cast("int").alias("n_sketch"),
         F.max("h").alias("mx"),
@@ -138,12 +107,6 @@ def kmv_stats(state: DataFrame, *, k: int = KMV_K) -> DataFrame:
     )
 
 
-def kmv_distinct(
-    documents: DataFrame,
-    *,
-    k: int = KMV_K,
-    n: int = 3,
-    salt_mod: int = 8,
-) -> DataFrame:
+def kmv_distinct(documents: DataFrame) -> DataFrame:
     """One-shot sketch summary: ``kmv_stats(kmv_state(documents))``."""
-    return kmv_stats(kmv_state(documents, k=k, n=n, salt_mod=salt_mod), k=k)
+    return kmv_stats(kmv_state(documents))

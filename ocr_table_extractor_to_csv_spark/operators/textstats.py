@@ -141,11 +141,11 @@ PII_IP_RE = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 PII_PHONE_RE = r"\+[0-9][0-9 ()-]{6,}[0-9]"
 
 
-def pii_scrub(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(documents: DataFrame) -> DataFrame:
     """(doc_id, n_emails, n_ips, n_phones, scrubbed_md5) — count and redact
     emails / IPv4s / +international phones.  Pure JVM regex (codegen'd, one
     scan, no shuffle): at 10^9 docs this is a map-only pass."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_emails = F.regexp_count(t, F.lit(PII_EMAIL_RE))
     scrubbed = F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>")
     n_ips = F.regexp_count(scrubbed, F.lit(PII_IP_RE))
@@ -233,8 +233,12 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def vocab_topk(documents: DataFrame, k: int = 100) -> DataFrame:
-    """Corpus vocabulary statistics: the top-``k`` tokens by term frequency
+VOCAB_TOPK = 100  # vocab_topk's k
+SEARCH_TOPK = 20  # search_topk's k
+
+
+def vocab_topk(documents: DataFrame) -> DataFrame:
+    """Corpus vocabulary statistics: the top-``VOCAB_TOPK`` tokens by term frequency
     — (token, tf, df) ordered (tf DESC, token ASC; the tie rule makes the
     k-boundary deterministic).
 
@@ -251,14 +255,12 @@ def vocab_topk(documents: DataFrame, k: int = 100) -> DataFrame:
             F.countDistinct("doc_id").alias("df"),
         )
         .orderBy(F.desc("tf"), F.asc("token"))
-        .limit(k)
+        .limit(VOCAB_TOPK)
     )
 
 
-def search_topk(
-    documents: DataFrame, query_terms, k: int = 20
-) -> DataFrame:
-    """Keyword search scoring: top-``k`` documents for a bag of query terms
+def search_topk(documents: DataFrame, query_terms) -> DataFrame:
+    """Keyword search scoring: top-``SEARCH_TOPK`` documents for a bag of query terms
     — (doc_id, n_hits, score), score = sum over matched terms of
     tf(term, doc) * (N + 1) / (df(term) + 1).
 
@@ -302,7 +304,7 @@ def search_topk(
         )
         .select("doc_id", "n_hits", F.round("raw_score", 5).alias("score"))
     )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(SEARCH_TOPK)
 
 
 def source_stats(documents: DataFrame) -> DataFrame:
@@ -418,12 +420,7 @@ QC_THRESHOLD = 0.9     # heuristic quality_score cut that defines the label
                        # (0.5 is degenerate on this corpus: median quality 1.0)
 
 
-def quality_classifier(
-    documents: DataFrame,
-    n_buckets: int = QC_BUCKETS,
-    train_mod: int = QC_TRAIN_MOD,
-    threshold: float = QC_THRESHOLD,
-) -> DataFrame:
+def quality_classifier(documents: DataFrame) -> DataFrame:
     """Train a hashed-token quality classifier ON THE CLUSTER and score the
     corpus with it — the distill-the-heuristic-gate step of a real corpus
     build (a cheap model learned from a rule-labeled split, then applied
@@ -433,9 +430,9 @@ def quality_classifier(
     DuckDB oracle replays training AND scoring bit-for-bit):
 
       label(doc)  = 1 iff the shared heuristic ``quality_score`` (rounded
-                    spec, identical to ``text_quality``) >= ``threshold``;
-      train split = doc_id % train_mod == 0;
-      bucket(tok) = first-32-bits-of-md5(tok) % n_buckets;
+                    spec, identical to ``text_quality``) >= ``QC_THRESHOLD``;
+      train split = doc_id % QC_TRAIN_MOD == 0;
+      bucket(tok) = first-32-bits-of-md5(tok) % QC_BUCKETS;
       bucket stats over train token OCCURRENCES: (pos_b, cnt_b); global
                     (gpos, gcnt) over the same stream;
       token vote  = +1 if pos_b * gcnt > gpos * cnt_b (the bucket's
@@ -456,8 +453,8 @@ def quality_classifier(
     below any stream-level base rate — measured: a score-vs-base rule
     predicted 2% positive on a 60%-positive corpus).
 
-    Scale shape: training is one groupBy over <= n_buckets keys with
-    map-side partials; the stats table (<= n_buckets rows) and the 1-row
+    Scale shape: training is one groupBy over <= QC_BUCKETS keys with
+    map-side partials; the stats table (<= QC_BUCKETS rows) and the 1-row
     global BROADCAST to the scoring pass, so the corpus side is
     explode -> broadcast hash join -> one groupBy(doc_id) — no
     corpus-vs-corpus shuffle.  Empty-token docs emit no rows.
@@ -469,17 +466,10 @@ def quality_classifier(
     accuracy pays on real corpora.  tests/test_operators.py proves the
     machinery learns a vocabulary-separable label exactly.
     """
-    return score_quality(
-        documents,
-        train_quality_model(documents, n_buckets, train_mod, threshold),
-        n_buckets=n_buckets,
-        threshold=threshold,
-    )
+    return score_quality(documents, train_quality_model(documents))
 
 
-def _qc_token_rows(
-    documents: DataFrame, n_buckets: int, threshold: float
-) -> DataFrame:
+def _qc_token_rows(documents: DataFrame) -> DataFrame:
     """(doc_id, label, tok, bucket) — the shared labeled token stream of
     the quality classifier (one spec for training and scoring).
 
@@ -496,7 +486,7 @@ def _qc_token_rows(
     q = quality_columns(F.col("text"))
     labeled = documents.select(
         "doc_id",
-        (q["quality_score"] >= F.lit(threshold)).cast("int").alias("label"),
+        (q["quality_score"] >= F.lit(QC_THRESHOLD)).cast("int").alias("label"),
         tokens_col(F.col("text")).alias("_toks"),
     )
     return labeled.select(
@@ -505,25 +495,20 @@ def _qc_token_rows(
         "bucket",
         F.pmod(
             F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long"),
-            F.lit(n_buckets),
+            F.lit(QC_BUCKETS),
         ).cast("int"),
     )
 
 
-def train_quality_model(
-    documents: DataFrame,
-    n_buckets: int = QC_BUCKETS,
-    train_mod: int = QC_TRAIN_MOD,
-    threshold: float = QC_THRESHOLD,
-) -> DataFrame:
-    """(bucket, pos, cnt) — the classifier's ENTIRE model, a <= n_buckets
+def train_quality_model(documents: DataFrame) -> DataFrame:
+    """(bucket, pos, cnt) — the classifier's ENTIRE model, a <= QC_BUCKETS
     row table.  The production shape is train ONCE, write this table,
     then ``score_quality`` every corpus/delta against it — per-run cost
     drops to the scoring scan alone (the composed ``quality_classifier``
     re-trains inline per call, fine for one-shots, ~2x the scans for
     repeated use — measured 8.8 s vs a one-scan gate's ~4 s at sf0.1)."""
-    train = _qc_token_rows(documents, n_buckets, threshold).where(
-        F.pmod(F.col("doc_id"), F.lit(train_mod)) == 0
+    train = _qc_token_rows(documents).where(
+        F.pmod(F.col("doc_id"), F.lit(QC_TRAIN_MOD)) == 0
     )
     return train.groupBy("bucket").agg(
         F.sum("label").cast("long").alias("pos"),
@@ -531,20 +516,13 @@ def train_quality_model(
     )
 
 
-def score_quality(
-    documents: DataFrame,
-    stats: DataFrame,
-    n_buckets: int = QC_BUCKETS,
-    threshold: float = QC_THRESHOLD,
-) -> DataFrame:
+def score_quality(documents: DataFrame, stats: DataFrame) -> DataFrame:
     """Score ``documents`` against a trained (bucket, pos, cnt) model —
-    same output contract as ``quality_classifier``.  ``n_buckets`` and
-    ``threshold`` must match the values the model was trained with
-    (bucket ids and the reported ``label`` column depend on them)."""
-    tok_rows = _qc_token_rows(documents, n_buckets, threshold)
+    same output contract as ``quality_classifier``."""
+    tok_rows = _qc_token_rows(documents)
     # the global rate is the column sum of the bounded stats table — NOT a
     # second aggregate over the corpus token stream (r6 review: that was a
-    # third full corpus scan for two numbers derivable from <= n_buckets
+    # third full corpus scan for two numbers derivable from <= QC_BUCKETS
     # rows)
     glob = stats.agg(
         F.sum("pos").alias("gpos"),
@@ -582,13 +560,12 @@ def mix_sample(
     documents: DataFrame,
     budget_tokens: int = 1_000_000,
     weights: dict | None = None,
-    salt: str = "mix",
 ) -> DataFrame:
     """Materialize a ``mix_plan``: the actual training-mix sample as
     (doc_id, source, n_tokens, copy) rows, with DETERMINISTIC upsampling —
     closing the plan -> corpus loop (the step a trainer actually reads).
 
-    Per document: u = first-32-bits of md5('{salt}:' || doc_id) / 2^32
+    Per document: u = first-32-bits of md5('mix:' || doc_id) / 2^32
     (bit-exact uniform in every engine — power-of-two division, the
     ``sample_stratified`` rule); with e = the plan's rounded ``epochs``
     for its source, the doc is emitted ``floor(e) + (u < e - floor(e))``
@@ -609,7 +586,7 @@ def mix_sample(
     u = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string"))),
+                F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))),
                 1,
                 8,
             ),
@@ -657,26 +634,24 @@ GOPHER_SYMBOL_RE = r"#|\.\.\."
 # an ellipsis line ends (after right-trim) with '...' or the … glyph
 GOPHER_BULLET_RE = r"^[-*•]"
 GOPHER_ELLIPSIS_RE = r"(\.\.\.|…)$"
+# the paper's published thresholds
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN = 3.0
+GOPHER_MAX_MEAN_WORD_LEN = 10.0
+GOPHER_MAX_SYMBOL_RATIO = 0.1
+GOPHER_MAX_BULLET_LINE_RATIO = 0.9
+GOPHER_MAX_ELLIPSIS_LINE_RATIO = 0.3
+GOPHER_MIN_ALPHA_WORD_RATIO = 0.8
+GOPHER_MIN_STOP_HITS = 2
 
 
-def gopher_rules(
-    documents: DataFrame,
-    *,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_line_ratio: float = 0.9,
-    max_ellipsis_line_ratio: float = 0.3,
-    min_alpha_word_ratio: float = 0.8,
-    min_stop_hits: int = 2,
-) -> DataFrame:
+def gopher_rules(documents: DataFrame) -> DataFrame:
     """Gopher rule-based document quality gates (Rae et al. 2021, A1.1)
     as one map-only pass: per-document signals, one boolean per rule, and
     the conjunction verdict ``keep``.
 
-    The defaults are the paper's published thresholds.  Signals are the
+    The thresholds are the paper's published ones (``GOPHER_*``).  Signals are the
     paper's: word count bounds, mean-word-length bounds, symbol-to-word
     ratio ('#' / '...'), bullet-start and ellipsis-end line ratios,
     fraction of words with an alphabetic character, and a minimum hit
@@ -722,13 +697,13 @@ def gopher_rules(
     stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
     stop_hits = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
 
-    word_count_ok = (n_words >= min_words) & (n_words <= max_words)
-    mean_len_ok = (mean_len >= min_mean_word_len) & (mean_len <= max_mean_word_len)
-    symbol_ok = symbol_ratio <= max_symbol_ratio
-    bullet_ok = bullet_ratio <= max_bullet_line_ratio
-    ellipsis_ok = ellipsis_ratio <= max_ellipsis_line_ratio
-    alpha_ok = alpha_ratio >= min_alpha_word_ratio
-    stop_ok = stop_hits >= min_stop_hits
+    word_count_ok = (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS)
+    mean_len_ok = (mean_len >= GOPHER_MIN_MEAN_WORD_LEN) & (mean_len <= GOPHER_MAX_MEAN_WORD_LEN)
+    symbol_ok = symbol_ratio <= GOPHER_MAX_SYMBOL_RATIO
+    bullet_ok = bullet_ratio <= GOPHER_MAX_BULLET_LINE_RATIO
+    ellipsis_ok = ellipsis_ratio <= GOPHER_MAX_ELLIPSIS_LINE_RATIO
+    alpha_ok = alpha_ratio >= GOPHER_MIN_ALPHA_WORD_RATIO
+    stop_ok = stop_hits >= GOPHER_MIN_STOP_HITS
 
     return documents.select(
         "doc_id",

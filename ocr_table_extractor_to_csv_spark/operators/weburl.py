@@ -84,10 +84,10 @@ def canonicalize_url(url: Column) -> Column:
     return F.when(scheme == "", u).otherwise(canon)
 
 
-def with_synth_url(documents: DataFrame, slot_mod: int = 13) -> DataFrame:
+def with_synth_url(documents: DataFrame) -> DataFrame:
     """Attach a deterministic synthetic ``url`` column to the documents
     table (which carries no URL), for tests/benchmarks: the canonical
-    identity of a page is ``(source, doc_id % slot_mod)`` and the raw URL
+    identity of a page is ``(source, doc_id % 13)`` and the raw URL
     wraps it in md5-chosen cosmetic noise — scheme/host case, ``:80``,
     ``/index.html``, ``utm_*`` params, a fragment — exactly the variants
     ``canonicalize_url`` must fold.  Pure column expressions (md5 bits),
@@ -102,7 +102,7 @@ def with_synth_url(documents: DataFrame, slot_mod: int = 13) -> DataFrame:
         ).cast("int")
     )
     host = F.concat(F.col("source"), F.lit(".example.com"))
-    slot = (F.col("doc_id") % slot_mod).cast("string")
+    slot = (F.col("doc_id") % 13).cast("string")
     raw = F.concat(
         F.when(b.bitwiseAND(F.lit(1)) == 1, F.lit("HTTP://")).otherwise(
             F.lit("http://")
@@ -124,7 +124,7 @@ def with_synth_url(documents: DataFrame, slot_mod: int = 13) -> DataFrame:
     return documents.withColumn("url", raw)
 
 
-def url_dedup(documents_with_url: DataFrame, url_col: str = "url") -> DataFrame:
+def url_dedup(documents_with_url: DataFrame) -> DataFrame:
     """URL-level dedup: one row per canonical URL with the group size,
     the number of distinct raw spellings folded, and the keeper (min
     doc_id — deterministic on any partitioning).
@@ -134,8 +134,8 @@ def url_dedup(documents_with_url: DataFrame, url_col: str = "url") -> DataFrame:
     return (
         documents_with_url.select(
             "doc_id",
-            F.col(url_col).alias("_raw"),
-            canonicalize_url(F.col(url_col)).alias("canon_url"),
+            F.col("url").alias("_raw"),
+            canonicalize_url(F.col("url")).alias("canon_url"),
         )
         .groupBy("canon_url")
         .agg(
@@ -177,10 +177,13 @@ def url_keepers(documents_with_url: DataFrame, url_col: str = "url") -> DataFram
 BANNED_URL_WORDS = ["casino", "viagra", "porn", "xxx"]
 
 
-def _canon_parts(url_col: str):
-    """(host, path) column expressions over the canonical URL — the
+URL_MAX_PATH_DEPTH = 8  # url_filter: deeper paths are crawler traps
+
+
+def _canon_parts():
+    """(host, path) column expressions over the canonical ``url`` — the
     split the filter rules score on."""
-    c = canonicalize_url(F.col(url_col))
+    c = canonicalize_url(F.col("url"))
     host = F.regexp_extract(c, r"^[^:/?#]+://([^/?#]*)", 1)
     path = F.regexp_extract(c, r"^[^:/?#]+://[^/?#]*([^?#]*)", 1)
     return host, path
@@ -190,9 +193,7 @@ def url_filter(
     documents_with_url: DataFrame,
     blocklist_hosts: list[str] | None = None,
     *,
-    url_col: str = "url",
     max_params: int = 4,
-    max_path_depth: int = 8,
     max_host_digit_ratio: float = 0.25,
 ) -> DataFrame:
     """URL-level document filtering — the RefinedWeb-style gate that runs
@@ -211,7 +212,7 @@ def url_filter(
     * ``too_many_params`` — more than ``max_params`` RAW query params
       (tracking-parameter overload is itself a spam signal, so the raw
       count is scored even though canonicalization drops ``utm_*``)
-    * ``path_too_deep`` — more than ``max_path_depth`` non-empty path
+    * ``path_too_deep`` — more than ``URL_MAX_PATH_DEPTH`` non-empty path
       segments (calendar/faceted-navigation crawler traps)
     * ``digit_host`` — digit fraction of the host above
       ``max_host_digit_ratio`` (throwaway spam domains)
@@ -223,8 +224,8 @@ def url_filter(
     pipelines (RefinedWeb, FineWeb).
     """
     spark = documents_with_url.sparkSession
-    host, path = _canon_parts(url_col)
-    raw = F.col(url_col)
+    host, path = _canon_parts()
+    raw = F.col("url")
     raw_query = F.regexp_extract(raw, r"\?([^#]*)", 1)
     n_params = F.when(raw_query == "", F.lit(0)).otherwise(
         F.size(F.split(raw_query, "&"))
@@ -243,7 +244,7 @@ def url_filter(
         F.round(digit_ratio, 5).alias("host_digit_ratio"),
         banned_hit.alias("banned_hit"),
         (n_params > max_params).alias("too_many_params"),
-        (path_depth > max_path_depth).alias("path_too_deep"),
+        (path_depth > URL_MAX_PATH_DEPTH).alias("path_too_deep"),
         (digit_ratio > max_host_digit_ratio).alias("digit_host"),
     )
     block = spark.createDataFrame(
@@ -277,7 +278,6 @@ def domain_cap(
     documents_with_url: DataFrame,
     cap: int = 20,
     *,
-    url_col: str = "url",
     salt_mod: int = 8,
 ) -> DataFrame:
     """Per-domain document cap: keep the ``cap`` smallest ``doc_id``s of
@@ -310,7 +310,7 @@ def domain_cap(
     """
     from pyspark.sql import Window
 
-    host, _ = _canon_parts(url_col)
+    host, _ = _canon_parts()
     ids = documents_with_url.select("doc_id", host.alias("host"))
     w1 = Window.partitionBy("host", "_salt").orderBy("doc_id")
     local = (

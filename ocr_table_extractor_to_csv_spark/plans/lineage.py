@@ -6,7 +6,8 @@ extracted table — no driver-side loops, no side channels, and it holds at
 any scale because it is just a groupBy:
 
   manifests(partition_id, n_urls, n_ok, n_failed, total_html_bytes,
-            total_csv_bytes, failed_urls[<=20 sample], max_task_attempt)
+            total_csv_bytes, failed_urls[<=FAILED_SAMPLE sample],
+            max_task_attempt)
 
 The extract job builds them from its one read of the committed batch and
 writes them with ``plans.resume.write_batch`` partitioned by ``batch_id``
@@ -26,7 +27,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def build_manifests(extracted: DataFrame, failed_sample: int = 20) -> DataFrame:
+FAILED_SAMPLE = 20
+
+
+def build_manifests(extracted: DataFrame) -> DataFrame:
     return extracted.groupBy("partition_id").agg(
         F.count("*").alias("n_urls"),
         F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("n_ok"),
@@ -36,7 +40,7 @@ def build_manifests(extracted: DataFrame, failed_sample: int = 20) -> DataFrame:
         F.slice(
             F.collect_list(F.when(F.col("error").isNotNull(), F.col("url"))),
             1,
-            failed_sample,
+            FAILED_SAMPLE,
         ).alias("failed_urls"),
         F.max("task_attempt").alias("max_task_attempt"),
     )

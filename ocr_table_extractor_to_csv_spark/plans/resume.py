@@ -1,6 +1,8 @@
 """Checkpoint-based resume over a progress table (north_rule requirement).
 
 Batch protocol (exactly-once at the batch granularity, SURVEY.md §4.2):
+  0. a batch id is immutable once its progress rows have landed
+     (``batch_committed``): re-running it changes no data or progress row.
   1. ``pending = pages LEFT ANTI JOIN progress(status='done') ON url`` —
      Catalyst broadcasts the progress url set when small, sort-merge joins
      otherwise; AQE picks at runtime.
@@ -36,9 +38,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.extract import EXTRACTED_SCHEMA
+from .scope import hadoop_path
 
 PROGRESS_SCHEMA = StructType(
     [
@@ -59,11 +61,35 @@ COMMITTED_SCHEMA = StructType(
 )
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, p = hadoop_path(spark, path)
+    return fs.exists(p)
+
+
+def _batch_dir(path: str, batch_id: int) -> str:
+    return f"{path.rstrip('/')}/batch_id={batch_id}"
+
+
 def read_progress(spark: SparkSession, progress_path: str) -> DataFrame | None:
-    try:
-        return spark.read.schema(PROGRESS_SCHEMA).parquet(progress_path)
-    except AnalysisException:
-        return None  # first run: no progress table yet
+    """The progress table, or None on a first run (no table yet).  The
+    path is probed, not read and caught: once an ``Observation`` has run
+    in the session, every failed read logs a listener stack trace."""
+    if not _exists(spark, progress_path):
+        return None
+    return spark.read.schema(PROGRESS_SCHEMA).parquet(progress_path)
+
+
+def batch_committed(
+    spark: SparkSession, out: str, progress: DataFrame | None, batch_id: int
+) -> bool:
+    """Whether batch ``batch_id`` has committed: its partition exists under
+    the extraction root ``out`` and its progress rows have landed.  The
+    partition probe asks the filesystem, so a batch that has not written
+    yet costs no Spark job; only a re-run of a written batch reads its
+    progress rows."""
+    if progress is None or not _exists(spark, _batch_dir(out, batch_id)):
+        return False
+    return progress.where(F.col("batch_id") == batch_id).limit(1).count() > 0
 
 
 def pending_pages(pages: DataFrame, progress: DataFrame | None) -> DataFrame:
@@ -107,16 +133,10 @@ def read_committed(spark: SparkSession, path: str, batch_id: int) -> DataFrame:
     ``path``.  Only the batch's own partition directory is listed, so the
     cost does not grow with the number of batches already committed; a
     batch that committed no rows has no directory and reads empty."""
-    try:
-        return (
-            spark.read.schema(COMMITTED_SCHEMA)
-            .option("basePath", path)
-            .parquet(f"{path.rstrip('/')}/batch_id={batch_id}")
-        )
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    batch_dir = _batch_dir(path, batch_id)
+    if not _exists(spark, batch_dir):
         return spark.createDataFrame([], COMMITTED_SCHEMA)
+    return spark.read.schema(COMMITTED_SCHEMA).option("basePath", path).parquet(batch_dir)
 
 
 def commit_progress(committed: DataFrame, progress_path: str) -> None:

@@ -52,6 +52,14 @@ def run_branches(owner: str, branches: dict[str, Callable[[], Any]]) -> dict[str
     return {name: f.result() for f, name in futures.items()}
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` under the session's Hadoop conf.
+    Metadata calls on them (exists, delete) run on the driver and start no
+    Spark job."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 class RunScope:
     """Owner of one run's caches, local checkpoints and landing tables."""
 
@@ -117,6 +125,5 @@ class RunScope:
             except Py4JError:
                 pass  # the session was stopped: its caches are gone already
         if self.run_dir is not None:
-            jvm = self.spark._jvm
-            path = jvm.org.apache.hadoop.fs.Path(self.run_dir)
-            path.getFileSystem(self.spark._jsc.hadoopConfiguration()).delete(path, True)
+            fs, path = hadoop_path(self.spark, self.run_dir)
+            fs.delete(path, True)

@@ -35,6 +35,8 @@ EN_VOCAB = (
 CHAR_W = 9  # px per character
 TOKEN_H = 30
 ROW_PITCH = 56
+WORD_GAP = 8  # px between the words of a phrase
+LEADER_PITCH = 14  # px between dot-leader tokens
 Y0 = 120
 PAGE_W, PAGE_H = 1700, 2200
 
@@ -91,12 +93,12 @@ def _place(text: str, x: int, y: int) -> Word:
     return Word(text, x, y, x + CHAR_W * max(1, len(text)), y + TOKEN_H)
 
 
-def _place_phrase(words: Sequence[str], x: int, y: int, gap: int = 8) -> List[Word]:
+def _place_phrase(words: Sequence[str], x: int, y: int) -> List[Word]:
     out = []
     for w in words:
         ww = _place(w, x, y)
         out.append(ww)
-        x = ww.x2 + gap
+        x = ww.x2 + WORD_GAP
     return out
 
 
@@ -229,7 +231,7 @@ def _gen_fin3(rng: random.Random) -> Tuple[str, dict]:
     return render_hocr([words]), {"layout": "financial"}
 
 
-def _leaders(x_from: int, x_to: int, y: int, pitch: int = 14) -> List[Word]:
+def _leaders(x_from: int, x_to: int, y: int) -> List[Word]:
     """Dot-leader tokens (as real financial-statement OCR emits): many small
     gaps so the reference's per-line P95 gap threshold stays small and the
     value spans separate (column_model.py:18-27)."""
@@ -237,7 +239,7 @@ def _leaders(x_from: int, x_to: int, y: int, pitch: int = 14) -> List[Word]:
     x = x_from
     while x + 4 <= x_to:
         out.append(Word(".", x, y, x + 4, y + TOKEN_H))
-        x += pitch
+        x += LEADER_PITCH
     return out
 
 
@@ -496,15 +498,8 @@ def generate_fixture(family: str, i: int, seed: int = 42, giant_tokens: int = 30
     }
 
 
-def generate_corpus(
-    seed: int = 42,
-    scale: float = 1.0,
-    families: Optional[Sequence[str]] = None,
-    giant_tokens: int = 30000,
-) -> Iterator[Dict[str, object]]:
+def generate_corpus(scale: float = 1.0, giant_tokens: int = 30000) -> Iterator[Dict[str, object]]:
     for family, count in FAMILY_SPECS:
-        if families and family not in families:
-            continue
         n = max(1, int(count * scale))
         for i in range(n):
-            yield generate_fixture(family, i, seed=seed, giant_tokens=giant_tokens)
+            yield generate_fixture(family, i, giant_tokens=giant_tokens)

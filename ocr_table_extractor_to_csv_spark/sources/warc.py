@@ -181,49 +181,40 @@ def read_wet(spark, path: str) -> DataFrame:
     )
 
 
-def _write_segments(
-    records, out_dir: str, n_segments: int, gzip_members: bool, ext: str, head: bytes = b""
-) -> int:
-    """Write (seg_key, record bytes) pairs into ``seg_key % n_segments``
-    files ``seg-K.<ext>(.gz)``, each file starting with ``head``, each
-    record (and ``head``) its own gzip member when ``gzip_members``; then a
-    ``_COMPLETE`` marker.  Returns the record count."""
+N_SEGMENTS = 8  # segment files per synthesized corpus
+
+
+def _write_segments(records, out_dir: str, ext: str, head: bytes = b"") -> int:
+    """Write (seg_key, record bytes) pairs into ``seg_key % N_SEGMENTS``
+    files ``seg-K.<ext>.gz``, each file starting with ``head``, each
+    record (and ``head``) its own gzip member (the Common Crawl layout);
+    then a ``_COMPLETE`` marker.  Returns the record count."""
     import os
 
     segs: dict = {}
     n = 0
     for seg_key, rec in records:
-        segs.setdefault(int(seg_key) % n_segments, []).append(
-            gzip.compress(rec, mtime=0) if gzip_members else rec
-        )
+        segs.setdefault(int(seg_key) % N_SEGMENTS, []).append(gzip.compress(rec, mtime=0))
         n += 1
-    if gzip_members:
-        head = gzip.compress(head, mtime=0) if head else head
-        ext += ".gz"
+    head = gzip.compress(head, mtime=0) if head else head
     os.makedirs(out_dir, exist_ok=True)
     for k, recs in segs.items():
-        with open(os.path.join(out_dir, f"seg-{k:05d}.{ext}"), "wb") as f:
+        with open(os.path.join(out_dir, f"seg-{k:05d}.{ext}.gz"), "wb") as f:
             f.write(head + b"".join(recs))
     with open(os.path.join(out_dir, "_COMPLETE"), "w") as f:
         f.write(str(n))
     return n
 
 
-def write_warc_segments(
-    records,
-    out_dir: str,
-    n_segments: int = 8,
-    gzip_members: bool = True,
-    interleave_requests: bool = True,
-) -> int:
+def write_warc_segments(records, out_dir: str) -> int:
     """Deterministic WARC corpus synthesizer (fixture/sink helper).
 
     ``records``: iterable of (seg_key: int, url, ts, body: bytes).  Records
-    are grouped into ``seg_key % n_segments`` segment files, each record its
-    own gzip member when ``gzip_members`` (the Common Crawl layout);
-    ``interleave_requests`` adds a WARC request record before each response
-    so readers must skip non-response types.  Writes ``seg-K.warc(.gz)``
-    files plus a ``_COMPLETE`` marker; returns the record count.
+    are grouped into ``seg_key % N_SEGMENTS`` segment files, each record its
+    own gzip member (the Common Crawl layout); a WARC request record precedes
+    each response so readers must skip non-response types.  Writes
+    ``seg-K.warc.gz`` files plus a ``_COMPLETE`` marker; returns the record
+    count.
 
     This is driver-side fixture generation (bounded, test-scale) — a real
     100 TB corpus arrives as WARC already; the scale path is read_warc.
@@ -231,13 +222,12 @@ def write_warc_segments(
     recs = (
         (
             seg_key,
-            (warc_record(f"{url}#req", ts, b"GET / HTTP/1.1", warc_type="request")
-             if interleave_requests else b"")
+            warc_record(f"{url}#req", ts, b"GET / HTTP/1.1", warc_type="request")
             + warc_record(url, ts, body),
         )
         for seg_key, url, ts, body in records
     )
-    return _write_segments(recs, out_dir, n_segments, gzip_members, "warc")
+    return _write_segments(recs, out_dir, "warc")
 
 
 def warc_record(
@@ -292,19 +282,14 @@ def wet_to_documents(pages: DataFrame) -> DataFrame:
     )
 
 
-def write_wet_segments(
-    records,
-    out_dir: str,
-    n_segments: int = 8,
-    gzip_members: bool = True,
-) -> int:
+def write_wet_segments(records, out_dir: str) -> int:
     """Deterministic WET corpus synthesizer (fixture helper, WET twin of
     ``write_warc_segments``).  ``records``: iterable of (seg_key, url, ts,
-    text: str) grouped into ``seg_key % n_segments`` segment files; each
+    text: str) grouped into ``seg_key % N_SEGMENTS`` segment files; each
     segment STARTS with a ``warcinfo`` member (the real WET layout —
-    readers must length-skip it), then one ``conversion`` member per
-    record, each its own gzip member when ``gzip_members``.  Writes
-    ``seg-K.warc.wet(.gz)`` + ``_COMPLETE``; returns the record count."""
+    readers must length-skip it), then one ``conversion`` gzip member per
+    record.  Writes ``seg-K.warc.wet.gz`` + ``_COMPLETE``; returns the
+    record count."""
     recs = (
         (seg_key, warc_record(url, ts, text.encode("utf-8"), warc_type="conversion", http=False))
         for seg_key, url, ts, text in records
@@ -313,4 +298,4 @@ def write_wet_segments(
         "urn:wet-synthesizer", "2025-01-01T00:00:00Z",
         b"software: write_wet_segments", warc_type="warcinfo", http=False,
     )
-    return _write_segments(recs, out_dir, n_segments, gzip_members, "warc.wet", head=info)
+    return _write_segments(recs, out_dir, "warc.wet", head=info)

@@ -20,18 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+WINDOW = "1 hour"
+WATERMARK = "30 minutes"
 
-def windowed_event_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+
+def windowed_event_counts(events: DataFrame) -> DataFrame:
     # watermarks require TIMESTAMP (tz-aware); parquet event tables often
     # carry TIMESTAMP_NTZ — cast via the session timezone
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -44,26 +43,3 @@ def windowed_event_counts(
             "sum_value",
         )
     )
-
-
-def run_windowed_counts(
-    spark,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window_duration: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> None:
-    """One availableNow pass: append newly-FINALIZED windows to out_dir."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    agg = windowed_event_counts(stream, window_duration, watermark)
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -173,7 +173,6 @@ def test_curate_job_main_wet_input(tmp_path):
             for i in range(6)
         ),
         str(wet),
-        n_segments=2,
     )
     out = tmp_path / "cur"
     res = _run(["jobs/curate_job.py", "--wet", str(wet), "--out", str(out)])

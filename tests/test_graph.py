@@ -115,9 +115,9 @@ def test_pagerank_rejects_non_int_params(spark):
     df = spark.createDataFrame([(0, 1)], "src long, dst long")
     for kw in (
         {"iterations": 0},
-        {"damping_num": 0.85},
-        {"scale": True},
-        {"damping_den": -1},
+        {"iterations": 2.0},
+        {"iterations": True},
+        {"iterations": -1},
     ):
         with pytest.raises(ValueError), RunScope(spark) as scope:
             pagerank(df, scope=scope, **kw)

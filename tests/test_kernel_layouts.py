@@ -8,8 +8,13 @@ independent of the kernel implementation.
 import pytest
 
 from ocr_table_extractor_to_csv_spark.kernel import extract_document
-from ocr_table_extractor_to_csv_spark.kernel.hocr import scan_tokens
+from ocr_table_extractor_to_csv_spark.kernel.hocr import parse_dom, scan_tokens_from_dom
 from ocr_table_extractor_to_csv_spark.kernel.lines import build_lines
+
+
+def _scan_tokens(html: bytes, table_bbox=None):
+    """The kernel's token scan of one hOCR document."""
+    return scan_tokens_from_dom(parse_dom(html)[0], table_bbox)
 
 
 def _doc(words, page_attr='title="bbox 0 0 1700 2200"'):
@@ -117,7 +122,7 @@ def test_bbox_crop_filters_tokens():
         ("noise", 100, 10, 150, 40),  # above the crop box
     ]
     html = _doc(words)
-    tok = scan_tokens(html, table_bbox=(50, 250, 1650, 2000))
+    tok = _scan_tokens(html, table_bbox=(50, 250, 1650, 2000))
     assert list(tok.text) == ["inside"]
 
 
@@ -150,7 +155,7 @@ def test_line_id_fallback_name_consumes_index():
         '<span class="ocrx_word" title="bbox 10 50 30 90">y</span></span>'
         "</div></body></html>"
     ).encode()
-    tok = scan_tokens(html)
+    tok = _scan_tokens(html)
     # word 'x' gets no line_id (its line had no bbox); 'y' maps to the
     # second line whose fallback id is page_1_line_2
     assert tok.line_id[0] is None
@@ -166,7 +171,7 @@ def test_multipage_line_ordering():
         '<span class="ocrx_word" title="bbox 10 10 50 40">p2</span></div>'
         "</body></html>"
     ).encode()
-    tok = scan_tokens(html)
+    tok = _scan_tokens(html)
     lines = build_lines(tok)
     # page-major order even though page 2's token has a smaller y
     assert [(ln.page, tok.text[ln.idx[0]]) for ln in lines] == [(1, "p1"), (2, "p2")]
@@ -182,7 +187,7 @@ def test_overlap_band_expansion():
             ("C", 60, 130, 80, 160),  # overlap 15 / min-height 30 = 0.5
         ]
     )
-    tok = scan_tokens(html)
+    tok = _scan_tokens(html)
     lines = build_lines(tok)
     assert len(lines) == 1
     assert [tok.text[i] for i in lines[0].idx] == ["A", "B", "C"]

@@ -72,8 +72,9 @@ def test_scan_bbox_language_equals_parse_title_bbox():
     the copies cannot silently drift (adversarial titles: fast-path hits,
     fast-path misses that the regex accepts, and rejects)."""
     from ocr_table_extractor_to_csv_spark.kernel.hocr import (
+        parse_dom,
         parse_title_bbox,
-        scan_tokens,
+        scan_tokens_from_dom,
     )
 
     titles = [
@@ -97,7 +98,7 @@ def test_scan_bbox_language_equals_parse_title_bbox():
         f'<div class="ocr_page" title="bbox 0 0 100 100">{words}</div>'
         "</body></html>"
     ).encode()
-    tok = scan_tokens(html)
+    tok = scan_tokens_from_dom(parse_dom(html)[0])
     got = sorted(
         (int(x1), int(y1), int(x2), int(y2))
         for x1, y1, x2, y2 in zip(tok.x1, tok.y1, tok.x2, tok.y2)

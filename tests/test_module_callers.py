@@ -1,9 +1,11 @@
-"""Every package module has a product caller.
+"""Every package module, public function and option has a product caller.
 
 A module counts as called when the import graph reaches it from a product
 entry point: ``jobs/``, ``__spark_entry__.py``, ``bench.py`` or ``tools/``
 (imports inside functions count, tests do not).  A module that only tests
 import is dead code with a test attached: delete it, or give it a caller.
+The same holds for a public package function no product code names, and
+for a defaulted parameter no product call site sets (a constant).
 """
 
 import ast
@@ -208,3 +210,108 @@ def test_every_entry_name_is_used():
         for path in ROOT.glob(pattern):
             used.update(_names_used(ast.parse(path.read_text())))
     assert sorted(set(defined) - used) == [], "entry names nothing uses"
+
+
+PRODUCT = ["__spark_entry__.py", "bench.py", "jobs/*.py", "tools/*.py", f"{PKG}/**/*.py"]
+
+# Defaulted parameters no product call site sets, each kept on purpose.
+OPTION_EXCEPTIONS = {
+    # perfbench's tracer substitutes this factory and calls it positionally
+    # with both arguments, so its signature is the benchmark's interface
+    ("make_extract_fn", "default_args"),
+    # perfbench's corpus builds its giant pages per benchmark seed
+    ("generate_fixture", "seed"),
+}
+
+
+def _product_trees() -> list:
+    paths = sorted({p for pattern in PRODUCT for p in ROOT.glob(pattern)})
+    return [(p, ast.parse(p.read_text())) for p in paths]
+
+
+def _package_functions() -> dict:
+    """name -> [(FunctionDef, is_method)] for every function the package
+    defines; a class's ``__init__`` is also listed under the class name."""
+    found: dict = {}
+    for path in (ROOT / PKG).rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for cls in ast.walk(tree):
+            if isinstance(cls, ast.ClassDef):
+                for fn in cls.body:
+                    if isinstance(fn, ast.FunctionDef):
+                        found.setdefault(fn.name, []).append((fn, True))
+                        if fn.name == "__init__":
+                            found.setdefault(cls.name, []).append((fn, True))
+        methods = {id(fn) for fns in found.values() for fn, _ in fns}
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and id(fn) not in methods:
+                found.setdefault(fn.name, []).append((fn, False))
+    return found
+
+
+def _defaults(fn: ast.FunctionDef) -> dict:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = {p.arg: d for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)}
+    out.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    return out
+
+
+def _is_default(value: ast.expr, default: ast.expr) -> bool:
+    return ast.dump(value) == ast.dump(default)
+
+
+def test_every_option_is_set_by_a_product_caller():
+    """A defaulted parameter of a package function that product code calls
+    must be passed a non-default value at some product call site (the
+    package, ``jobs/``, ``tools/``, ``__spark_entry__.py``, ``bench.py``):
+    a value only the default ever takes is a module constant, not an
+    option.  Calls resolve by name, so a same-named call anywhere counts;
+    ``*args``/``**kwargs`` count as setting everything they could reach."""
+    functions = _package_functions()
+    called, passed = set(), set()
+    for _path, tree in _product_trees():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            for fn, is_method in functions.get(name, []):
+                called.add(fn)
+                dfl = _defaults(fn)
+                pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+                if is_method and pos and pos[0] in ("self", "cls"):
+                    pos = pos[1:]
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        passed.update((fn, p) for p in pos[i:])
+                        break
+                    if i < len(pos) and pos[i] in dfl and not _is_default(arg, dfl[pos[i]]):
+                        passed.add((fn, pos[i]))
+                for kw in call.keywords:
+                    if kw.arg is None:
+                        passed.update((fn, p) for p in dfl)
+                    elif kw.arg in dfl and not _is_default(kw.value, dfl[kw.arg]):
+                        passed.add((fn, kw.arg))
+    unset = sorted(
+        f"{fn.name}({p}=...) line {fn.lineno}"
+        for fn in called
+        for p in _defaults(fn)
+        if (fn, p) not in passed and (fn.name, p) not in OPTION_EXCEPTIONS
+    )
+    assert unset == [], "options no product caller sets"
+
+
+def test_every_public_package_function_is_named_by_product_code():
+    """A public top-level function of the package that no product code
+    names (calls, passes or imports) has no caller: delete it."""
+    used = set()
+    for _path, tree in _product_trees():
+        used.update(_names_used(tree))
+    unnamed = [
+        f"{path.relative_to(ROOT)}::{fn.name}"
+        for path in sorted((ROOT / PKG).rglob("*.py"))
+        for fn in ast.parse(path.read_text()).body
+        if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_") and fn.name not in used
+    ]
+    assert unnamed == [], "package functions no product code names"

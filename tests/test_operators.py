@@ -50,7 +50,7 @@ def test_exact_dedup_groups(spark):
     assert rows[fp].n_docs == 2 and rows[fp].keeper_id == 1
 
 
-def test_shingles_zipwith_chain_matches_python_reference(spark):
+def test_shingles_zipwith_chain_matches_python_reference(spark, monkeypatch):
     """The zip_with-chain shingle builder must equal the definitional
     Python n-gram construction for n=2..4, including short docs (< n
     tokens emit the full join), duplicate grams (distinct), and empties."""
@@ -63,9 +63,8 @@ def test_shingles_zipwith_chain_matches_python_reference(spark):
     ]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
     for n in (2, 3, 4):
-        got = {
-            (r.doc_id, r.shingle) for r in dedup.shingles(docs, n=n).collect()
-        }
+        monkeypatch.setattr(dedup, "SHINGLE_N", n)
+        got = {(r.doc_id, r.shingle) for r in dedup.shingles(docs).collect()}
         want = set()
         for doc_id, text in texts:
             toks = text.split() if text else []
@@ -139,7 +138,7 @@ def test_connected_components_long_path_and_cycle(spark):
     assert fact["converged"] and fact["iterations"] <= 7, fact
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """With a work dir, CC materializes every iteration as parquet in the
     fault-tolerant store (the 100 TB durability path — localCheckpoint
     dies with an executor): identical labels, only the final labels left
@@ -173,7 +172,8 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
         # max_iter label copies into the fault-tolerant store
         before = set(os.listdir(scope.run_dir))
         with _pytest.raises(RuntimeError, match="did not converge"):
-            dedup.connected_components(nodes, pairs, max_iter=0, scope=scope)
+            monkeypatch.setattr(dedup, "CC_MAX_ITER", 0)
+            dedup.connected_components(nodes, pairs, scope=scope)
         assert set(os.listdir(scope.run_dir)) == before
         assert scope.facts["connected_components"][-1]["converged"] is False
     assert os.listdir(work) == [], "closed scope left its run directory"
@@ -256,12 +256,13 @@ def test_simhash64_exact_recall_vs_brute_force(spark):
     assert any(v < 0 or v >= 2**32 for v in sh.values())
 
 
-def test_simhash_bucket_stats_accounts_for_all_docs(spark):
+def test_simhash_bucket_stats_accounts_for_all_docs(spark, monkeypatch):
     """Stats twin invariant: per band, n_docs == corpus size (every doc is
     in exactly one bucket per band) and hot-doc count is consistent."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     n = docs.count()
-    rows = dedup.simhash_bucket_stats(docs, bits=64, max_bucket=4).collect()
+    monkeypatch.setattr(dedup, "SIMHASH_MAX_BUCKET", 4)
+    rows = dedup.simhash_bucket_stats(docs, bits=64).collect()
     assert len(rows) == 4
     for r in rows:
         assert r.n_docs == n
@@ -279,7 +280,7 @@ def test_brute_force_topk_math(spark):
         ],
         "vec_id long, embedding array<float>",
     )
-    rows = similarity.brute_force_topk(emb, k=3, query_mod=50).collect()
+    rows = similarity.brute_force_topk(emb, k=3).collect()
     got = [(r.rank, r.neighbor_id, r.cos_sim) for r in sorted(rows, key=lambda r: r.rank)]
     assert got[0] == (1, 1, 1.0)
     assert got[1][1] == 2 and abs(got[1][2] - 0.7071) < 1e-3
@@ -291,7 +292,7 @@ def test_lsh_topk_buckets_contain_identical_vectors(spark):
         [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0]), (50, [1.0, 2.0, 3.0])],
         "vec_id long, embedding array<float>",
     )
-    rows = similarity.lsh_topk(emb, k=2, query_mod=50, dim=3).collect()
+    rows = similarity.lsh_topk(emb, k=2).collect()
     # identical vectors share every hyperplane bucket -> both found, cos 1.0
     found = {(r.query_id, r.neighbor_id): r.cos_sim for r in rows}
     assert found[(0, 1)] == 1.0 and found[(0, 50)] == 1.0
@@ -310,7 +311,7 @@ def test_cosine_dup_pairs_identical_and_threshold(spark):
         ],
         "vec_id long, embedding array<float>",
     )
-    rows = {(r.id_a, r.id_b): r.cos_sim for r in similarity.cosine_dup_pairs(emb, dim=3).collect()}
+    rows = {(r.id_a, r.id_b): r.cos_sim for r in similarity.cosine_dup_pairs(emb).collect()}
     assert rows[(1, 2)] == 1.0 and rows[(1, 3)] == 1.0 and rows[(2, 3)] == 1.0
     assert not any(4 in p for p in rows)
 
@@ -322,7 +323,7 @@ def test_cosine_dup_pairs_hot_bucket_capped(spark):
     hot = [(i, [1.0, 2.0, 3.0]) for i in range(500)]
     pair = [(9001, [5.0, -1.0, 2.0]), (9002, [5.0, -1.0, 2.0])]
     emb = spark.createDataFrame(hot + pair, "vec_id long, embedding array<float>")
-    rows = {(r.id_a, r.id_b) for r in similarity.cosine_dup_pairs(emb, dim=3).collect()}
+    rows = {(r.id_a, r.id_b) for r in similarity.cosine_dup_pairs(emb).collect()}
     assert (9001, 9002) in rows
     assert len(rows) == 1, f"hot bucket leaked {len(rows) - 1} pairs"
 
@@ -338,47 +339,6 @@ def test_ivf_recall_floor_vs_brute_force(spark):
     iv = {(r.query_id, r.neighbor_id) for r in similarity.ivf_topk(emb, k=5).collect()}
     recall = len(bf & iv) / len(bf)
     assert recall >= 0.6, recall  # measured 0.70 (r2 seed quantizer: 0.46)
-
-
-def test_ivf_q8_codes_table_path_value_identical(spark):
-    """ivf_topk(refine_q8=...) with a MATERIALIZED quantize_embeddings
-    code table (the production IO path — candidate scoring reads 1 B/dim
-    codes, never floats) must return exactly the inline-recompute result:
-    the codes are the same spec, so both paths build the same shortlist
-    and the same final ranking (r6 review: the IO win must not change a
-    single row)."""
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    codes = similarity.quantize_embeddings(emb).select("vec_id", "q")
-    inline = similarity.ivf_topk(emb, k=5, refine_q8=2).collect()
-    from_table = similarity.ivf_topk(
-        emb, k=5, refine_q8=2, q8_codes=codes
-    ).collect()
-    assert inline == from_table
-    # and the shortlist genuinely bites: refine_q8=2 caps candidates at
-    # k*2 per query before the float re-rank, so results exist
-    assert len(inline) > 0
-
-
-def test_ivf_q8_stale_codes_table_raises(spark):
-    """A stale q8_codes table (embeddings appended after the codes were
-    materialized) would silently drop uncovered vectors from the inner
-    joins — recall loss with no error — so ivf_topk's default
-    check_codes=True must refuse it loudly; check_codes=False is the
-    documented caller-guaranteed opt-out (r6 review)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    stale = similarity.quantize_embeddings(
-        emb.where(F.col("vec_id") % 7 != 0)
-    ).select("vec_id", "q")
-    with _pytest.raises(ValueError, match="stale"):
-        similarity.ivf_topk(emb, k=5, refine_q8=2, q8_codes=stale)
-    # the opt-out still computes (degraded recall accepted explicitly)
-    rows = similarity.ivf_topk(
-        emb, k=5, refine_q8=2, q8_codes=stale, check_codes=False
-    ).limit(1).collect()
-    assert len(rows) == 1
 
 
 def test_ivf_train_sample_bounded_by_absolute_count(spark):
@@ -414,7 +374,7 @@ def test_ivf_sparse_offset_id_space(spark):
         + [(50, [4.0, 4.0, 0.0]), (51, [4.0, 4.0, 0.0])],
         "vec_id long, embedding array<float>",
     )
-    rows = similarity.ivf_topk(emb, k=2, query_mod=50, n_centroids=4, n_probe=2).collect()
+    rows = similarity.ivf_topk(emb, k=2, n_centroids=4, n_probe=2).collect()
     found = {(r.query_id, r.neighbor_id): r.cos_sim for r in rows}
     assert found[(50, 51)] == 1.0
 
@@ -422,19 +382,17 @@ def test_ivf_sparse_offset_id_space(spark):
 def test_sketch_dim_mismatch_raises(spark):
     """Any dim mismatch must fail loudly: longer would NULL-pad via zip_with
     and collapse every vector into bucket 0; shorter would project against
-    truncated weights while the SQL oracle NULLs out (silent divergence)."""
+    truncated weights while the SQL oracle NULLs out (silent divergence).
+    The sketch's dim is the first vector's, so a ragged table raises
+    whichever of its lengths comes first."""
     import pytest as _pytest
 
-    long_emb = spark.createDataFrame(
-        [(0, [1.0] * 8)], "vec_id long, embedding array<float>"
-    )
-    with _pytest.raises(Exception, match="does not match sketch dim"):
-        similarity.multi_table_sketch(long_emb, dim=4).collect()
-    short_emb = spark.createDataFrame(
-        [(0, [1.0] * 3)], "vec_id long, embedding array<float>"
-    )
-    with _pytest.raises(Exception, match="does not match sketch dim"):
-        similarity.multi_table_sketch(short_emb, dim=4).collect()
+    for other in (8, 3):
+        ragged = spark.createDataFrame(
+            [(0, [1.0] * 4), (1, [1.0] * other)], "vec_id long, embedding array<float>"
+        )
+        with _pytest.raises(Exception, match="does not match sketch dim"):
+            similarity.multi_table_sketch(ragged).collect()
 
 
 def test_ivf_identical_vectors_found(spark):
@@ -444,7 +402,7 @@ def test_ivf_identical_vectors_found(spark):
         + [(50, [9.0, 9.0, 9.0]), (51, [9.0, 9.0, 9.0])],
         "vec_id long, embedding array<float>",
     )
-    rows = similarity.ivf_topk(emb, k=3, query_mod=50, n_centroids=4, n_probe=2).collect()
+    rows = similarity.ivf_topk(emb, k=3, n_centroids=4, n_probe=2).collect()
     found = {(r.query_id, r.neighbor_id): r.cos_sim for r in rows}
     assert found[(50, 51)] == 1.0
 
@@ -570,13 +528,15 @@ def test_repetition_stats_matches_definitional_python(spark):
         assert tuple(got[i])[1:] == exp, (i, t, tuple(got[i]), exp)
 
 
-def test_vocab_topk_counts_and_tie_cut(spark):
+def test_vocab_topk_counts_and_tie_cut(spark, monkeypatch):
     from ocr_table_extractor_to_csv_spark.operators import textstats
+
+    monkeypatch.setattr(textstats, "VOCAB_TOPK", 3)
 
     docs = spark.createDataFrame(
         [(1, "a a b z"), (2, "a c z")], "doc_id long, text string"
     )
-    rows = [(r.token, r.tf, r.df) for r in textstats.vocab_topk(docs, k=3).collect()]
+    rows = [(r.token, r.tf, r.df) for r in textstats.vocab_topk(docs).collect()]
     # tf ties (b,c,z all candidates at tf<=2) break token-ASC at the k cut
     assert rows == [("a", 3, 2), ("z", 2, 2), ("b", 1, 1)]
 
@@ -627,11 +587,12 @@ def test_decontaminate_eval_overlap(spark):
     assert rows[2].n_overlap == 0 and not rows[2].contaminated
 
 
-def test_decontaminate_oversized_eval_falls_back_to_shuffle(spark):
+def test_decontaminate_oversized_eval_falls_back_to_shuffle(spark, monkeypatch):
     """r3 verdict #7: above max_broadcast_shingles the eval side must NOT
     be broadcast-hinted (driver/executor OOM at real eval-suite overflow) —
     the operator explicitly picks a shuffle hash join, says so, and the
     results are identical to the broadcast path."""
+    from ocr_table_extractor_to_csv_spark.operators import curation
     from ocr_table_extractor_to_csv_spark.operators.curation import decontaminate
 
     docs = spark.createDataFrame(
@@ -644,7 +605,8 @@ def test_decontaminate_oversized_eval_falls_back_to_shuffle(spark):
     )
     with RunScope(spark) as scope:
         want = {tuple(r) for r in decontaminate(docs, scope=scope).collect()}
-        small = decontaminate(docs, max_broadcast_shingles=1, scope=scope)
+        monkeypatch.setattr(curation, "DECONTAMINATE_MAX_BROADCAST_SHINGLES", 1)
+        small = decontaminate(docs, scope=scope)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         plan = small._jdf.queryExecution().explainString(mode)
         assert "BroadcastHashJoin" not in plan
@@ -663,27 +625,29 @@ def test_sample_stratified_deterministic_and_bounded(spark):
     for doc_id, stratum, u in a:
         rate = {"en": 0.5, "es": 0.25}.get(stratum, 0.1)
         assert u < rate + 1e-6
-    # salt changes the sample
-    c = {tuple(r) for r in sample_stratified(docs, salt="other").collect()}
-    assert c != a
 
 
-def test_pack_sequences_contiguous_fill(spark):
+def test_pack_sequences_contiguous_fill(spark, monkeypatch):
     """Contiguous-fill packing: running cumsum within a shard, docs may
     straddle bin boundaries, long docs span multiple bins."""
+    from ocr_table_extractor_to_csv_spark.operators import curation
     from ocr_table_extractor_to_csv_spark.operators.curation import pack_sequences
+
+    monkeypatch.setattr(curation, "PACK_BUDGET", 5)
+    monkeypatch.setattr(curation, "PACK_SHARDS", 1)
 
     # one shard (n_shards=1): token counts 3, 4, 6 with budget 5
     docs = spark.createDataFrame(
         [(0, "a b c"), (1, "d e f g"), (2, "h i j k l m")],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r for r in pack_sequences(docs, budget=5, n_shards=1).collect()}
+    rows = {r.doc_id: r for r in pack_sequences(docs).collect()}
     assert (rows[0].bin_id, rows[0].offset_in_bin) == (0, 0)   # cum 3
     assert (rows[1].bin_id, rows[1].offset_in_bin) == (0, 3)   # straddles 5
     assert (rows[2].bin_id, rows[2].offset_in_bin) == (1, 2)   # cum 7 -> bin 1
     # sharding: docs land in doc_id % n_shards, packed independently
-    sharded = pack_sequences(docs, budget=5, n_shards=2).collect()
+    monkeypatch.setattr(curation, "PACK_SHARDS", 2)
+    sharded = pack_sequences(docs).collect()
     assert {r.shard for r in sharded} == {0, 1}
     assert all(r.offset_in_bin < 5 for r in sharded)
 
@@ -731,7 +695,17 @@ def test_streaming_windowed_agg_watermark_and_late_drop(spark, tmp_path):
     flushes the open tail, and an event older than the watermark is DROPPED
     (no duplicate/updated window rows).  The final log must equal the batch
     groupBy(window) over exactly the non-late events."""
-    from ocr_table_extractor_to_csv_spark.streaming.windows import run_windowed_counts
+    from ocr_table_extractor_to_csv_spark.streaming.windows import windowed_event_counts
+
+    def run_windowed_counts(spark, events_dir, out_dir, checkpoint_dir):
+        """One availableNow pass: append newly-FINALIZED windows to out_dir."""
+        schema = spark.read.parquet(events_dir).schema
+        stream = spark.readStream.schema(schema).parquet(events_dir)
+        windowed_event_counts(stream).writeStream.format("parquet").option(
+            "path", out_dir
+        ).option("checkpointLocation", checkpoint_dir).outputMode("append").trigger(
+            availableNow=True
+        ).start().awaitTermination()
 
     sf = "/root/testdata/sf0.001"
     ev = spark.read.parquet(f"{sf}/events.parquet")
@@ -972,20 +946,22 @@ def test_mix_plan_hand_case(spark):
     assert g.target_tokens == 2.0 and g.sample_rate == 0.0 and g.epochs is None
 
 
-def test_bpe_train_hand_case(spark):
+def test_bpe_train_hand_case(spark, monkeypatch):
     """Hand-derived BPE merges: pair counts weight by corpus word
     frequency; ties break (count DESC, left ASC, right ASC); later merges
     see earlier merges' symbols; and the double-space delimiter framing
     reproduces reference BPE's greedy merge scan exactly (r6: the r5
     same-symbol-run divergence is closed, not just documented)."""
+    from ocr_table_extractor_to_csv_spark.operators import bpe
     from ocr_table_extractor_to_csv_spark.operators.bpe import bpe_train
 
+    monkeypatch.setattr(bpe, "BPE_MERGES", 2)
     # low x3, lowest x1: iter 1 pairs (l,o)=4 ties (o,w)=4 -> 'l' < 'o'
     # elects (l,o); iter 2: vocab is 'lo w' x3 + 'lo w e s t' -> (lo,w)=4
     docs = spark.createDataFrame(
         [(1, "low low"), (2, "low lowest")], "doc_id long, text string"
     )
-    rows = [tuple(r) for r in bpe_train(docs, n_merges=2).collect()]
+    rows = [tuple(r) for r in bpe_train(docs).collect()]
     assert rows[0] == (1, "l", "o", 4)
     assert rows[1] == (2, "lo", "w", 4)
 
@@ -993,7 +969,7 @@ def test_bpe_train_hand_case(spark):
     # (3 x 2 = 6); ONE merge pass now folds the whole run left-to-right
     # ('aaaa' -> 'aa aa', reference BPE) so merge 2 is (aa,aa) at count 2
     docs2 = spark.createDataFrame([(1, "aaaa aaaa")], "doc_id long, text string")
-    m = [tuple(r) for r in bpe_train(docs2, n_merges=2).collect()]
+    m = [tuple(r) for r in bpe_train(docs2).collect()]
     assert m[0] == (1, "a", "a", 6)
     assert m[1] == (2, "aa", "aa", 2)
 
@@ -1001,25 +977,28 @@ def test_bpe_train_hand_case(spark):
     # ('aaaaa' -> 'aa aa a'), so merge 2 sees pairs (aa,aa) and (aa,a):
     # counts tie at 1 and (aa,a) < (aa,aa) lexicographically
     docs3 = spark.createDataFrame([(1, "aaaaa")], "doc_id long, text string")
-    m3 = [tuple(r) for r in bpe_train(docs3, n_merges=2).collect()]
+    m3 = [tuple(r) for r in bpe_train(docs3).collect()]
     assert m3[0] == (1, "a", "a", 4)
     assert m3[1] == (2, "aa", "a", 1)
 
     # immediately-repeated DISTINCT pair (the r5 ADVICE case): 'abab' with
     # winner (a,b) merges BOTH occurrences in one pass -> 'ab ab'
     docs4 = spark.createDataFrame([(1, "abab abab")], "doc_id long, text string")
-    m4 = [tuple(r) for r in bpe_train(docs4, n_merges=2).collect()]
+    m4 = [tuple(r) for r in bpe_train(docs4).collect()]
     assert m4[0] == (1, "a", "b", 4)
     assert m4[1] == (2, "ab", "ab", 2)
 
 
-def test_token_count_trained_hand_case(spark):
-    """Encoding applies merges in rank order: with merges [(l,o),(lo,w)],
+def test_token_count_trained_hand_case(spark, monkeypatch):
+    """Encoding applies merges in rank order: with merges [(l,o),(lo,w)]
+    (the two this corpus trains: (l,o) and (o,w) tie at 2, 'l' < 'o'),
     'low' collapses to ONE symbol and 'lowest' to [low,e,s,t]."""
+    from ocr_table_extractor_to_csv_spark.operators import bpe
     from ocr_table_extractor_to_csv_spark.operators.bpe import token_count_trained
 
+    monkeypatch.setattr(bpe, "BPE_MERGES", 2)
     docs = spark.createDataFrame([(1, "low lowest")], "doc_id long, text string")
-    rows = [tuple(r) for r in token_count_trained(docs, merges=[("l", "o"), ("lo", "w")]).collect()]
+    rows = [tuple(r) for r in token_count_trained(docs).collect()]
     assert rows == [(1, 2, 5, 2.5)]  # n_words=2, tokens 1 + 4
 
 
@@ -1084,9 +1063,8 @@ def test_curate_incremental_no_delta_identity(spark):
 def test_bloom_dedup_null_text_and_m_validation(spark):
     """NULL text fingerprints as empty string — the seen side must not
     crash the bitmap build and a NULL-text new doc must get a status
-    (r5 review: it used to vanish).  m not divisible by 64 raises."""
-    import pytest as _pytest
-
+    (r5 review: it used to vanish).  The filter width is the constant
+    ``BLOOM_M_BITS``, so there is no ``m`` left to validate."""
     from ocr_table_extractor_to_csv_spark.operators.dedup import bloom_dedup
 
     seen = spark.createDataFrame(
@@ -1100,8 +1078,6 @@ def test_bloom_dedup_null_text_and_m_validation(spark):
     assert set(rows) == {10, 11, 12}  # nobody vanishes
     assert rows[10] == "dup" and rows[11] == "dup"  # NULL == '' by spec
     assert rows[12] == "dup"
-    with _pytest.raises(ValueError, match="multiple of 64"):
-        bloom_dedup(seen, new, m=100000)
 
 
 def test_mix_plan_zero_available_source(spark):
@@ -1276,7 +1252,7 @@ def test_substring_dedup_planted_span(spark):
     ).count() == 0
 
 
-def test_substring_dedup_hot_anchor_cap(spark):
+def test_substring_dedup_hot_anchor_cap(spark, monkeypatch):
     """A span present in > max_bucket docs is a hot anchor: its buckets are
     skipped entirely (no quadratic pair blowup), so with max_bucket=3 a
     4-doc boilerplate family yields zero pairs while a 2-doc family still
@@ -1286,8 +1262,9 @@ def test_substring_dedup_hot_anchor_cap(spark):
     rows = [(i, f"doc {i} header " + boiler) for i in range(1, 5)]
     rows += [(10, "x " + rare), (11, "y y y " + rare)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(dedup, "SUBSTR_MAX_BUCKET", 3)
     pairs = {(r.id_a, r.id_b)
-             for r in dedup.substring_dedup_pairs(docs, max_bucket=3).collect()}
+             for r in dedup.substring_dedup_pairs(docs).collect()}
     assert pairs == {(10, 11)}
 
 
@@ -1369,7 +1346,7 @@ def test_semdedup_exact_duplicate_dropped_keeper_kept(spark):
     assert out[first.vec_id][1] == base_out[first.vec_id][1]
 
 
-def test_line_dedup_within_page_first_occurrence_order_and_tail(spark):
+def test_line_dedup_within_page_first_occurrence_order_and_tail(spark, monkeypatch):
     """The load-bearing claim: kept chunks preserve FIRST-occurrence order
     (Spark array_distinct semantics the oracle mirrors explicitly), the
     sub-chunk tail re-attaches, chunkless docs pass through tail-only."""
@@ -1384,7 +1361,8 @@ def test_line_dedup_within_page_first_occurrence_order_and_tail(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in line_dedup_within_page(docs, 2).collect()}
+    monkeypatch.setattr(dedup, "CHUNK_TOKENS", 2)
+    out = {r.doc_id: r for r in line_dedup_within_page(docs).collect()}
     assert (out[0].n_chunks, out[0].n_kept) == (5, 3)
     assert out[0].text_clean == "a b c d e f x"  # order kept, dups cut
     assert (out[1].n_chunks, out[1].n_kept) == (0, 0)
@@ -1498,10 +1476,13 @@ def test_gopher_rules_hand_cases(spark):
     assert out[6]["stop_hits"] == 0 and not out[6]["stop_ok"] and not out[6]["keep"]
 
 
-def test_url_filter_hand_cases(spark):
+def test_url_filter_hand_cases(spark, monkeypatch):
     """One crafted URL per rule; thresholds tightened so each flag flips
     exactly where intended."""
+    from ocr_table_extractor_to_csv_spark.operators import weburl
     from ocr_table_extractor_to_csv_spark.operators.weburl import url_filter
+
+    monkeypatch.setattr(weburl, "URL_MAX_PATH_DEPTH", 3)
 
     docs = spark.createDataFrame(
         [
@@ -1520,7 +1501,6 @@ def test_url_filter_hand_cases(spark):
             docs,
             ["bad.example.com"],
             max_params=2,
-            max_path_depth=3,
             max_host_digit_ratio=0.25,
         ).collect()
     }

@@ -454,7 +454,7 @@ def test_quality_classifier_splits_tokens_once_per_use(spark):
         [(i, " ".join(f"w{j % 11}" for j in range(30))) for i in range(20)],
         "doc_id long, text string",
     )
-    plan = _qc_token_rows(docs, 64, 0.5)._jdf.queryExecution().executedPlan().toString()
+    plan = _qc_token_rows(docs)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("split(") == 2, plan
 
 
@@ -475,7 +475,7 @@ def test_mix_sample_plan_broadcasts_to_corpus(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_semdedup_exactly_two_joins_no_window(spark):
+def test_semdedup_exactly_two_joins_no_window(spark, monkeypatch):
     """semdedup's cid must be computed INLINE in the scan projection
     (centroid_cid_expr), never glued onto the vectors via a vec_id
     self-join: the plan has exactly TWO joins — the within-cluster pair
@@ -491,7 +491,8 @@ def test_semdedup_exactly_two_joins_no_window(spark):
         [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(8)]) for i in range(60)],
         "vec_id long, embedding array<float>",
     )
-    plan = _formatted(spark, sim.semdedup(emb, n_centroids=4))
+    monkeypatch.setattr(sim, "IVF_CENTROIDS", 4)
+    plan = _formatted(spark, sim.semdedup(emb))
     joins = re.findall(r"\(\d+\) \w*Join", plan)
     assert len(joins) == 2, joins
     assert "Window" not in plan
@@ -557,19 +558,21 @@ def test_domain_cap_first_window_is_salted(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_kmv_distinct_plan_salted_and_partial_dedup(spark):
+def test_kmv_distinct_plan_salted_and_partial_dedup(spark, monkeypatch):
     """kmv_distinct at 100 TB: the (source, h) distinct must compile to a
     partial/final HashAggregate pair (viral duplicate shingles collapse
     map-side, before the wire), and the phase-1 min-k window must carry
     the salt (no task sorts a whole source's distinct set).  No Python
     eval nodes anywhere."""
+    from ocr_table_extractor_to_csv_spark.operators import sketches
     from ocr_table_extractor_to_csv_spark.operators.sketches import kmv_distinct
 
     docs = spark.createDataFrame(
         [(i, "src%d" % (i % 3), f"a b c d{i}") for i in range(30)],
         "doc_id long, source string, text string",
     )
-    plan = _formatted(spark, kmv_distinct(docs, salt_mod=4))
+    monkeypatch.setattr(sketches, "KMV_SALT_MOD", 4)
+    plan = _formatted(spark, kmv_distinct(docs))
     assert "partial_" in plan or "HashAggregate" in plan
     assert plan.count("Window") >= 2
     assert "_salt" in plan, "phase-1 window lost its salt"

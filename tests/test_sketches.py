@@ -99,43 +99,3 @@ def test_mergeability_union_equals_merged_sketch(spark):
     merged = sorted(set(half_hashes[0]) | set(half_hashes[1]))[:KMV_K]
     assert whole["n_sketch"] == KMV_K
     assert whole["kth_min"] == merged[KMV_K - 1]
-
-
-def test_kmv_merge_law_state_api(spark, tmp_path):
-    """The O(delta) incremental path: kmv_merge(state(half1), half2) must
-    equal kmv_state(whole) ROW-FOR-ROW (the KMV merge law, == level),
-    including after a parquet round-trip of the state (plain table, no
-    session state); stats over either are identical."""
-    from ocr_table_extractor_to_csv_spark.operators.sketches import (
-        kmv_merge,
-        kmv_state,
-        kmv_stats,
-    )
-
-    rows = [
-        (i, f"s{i % 3}", " ".join(f"g{(i * 19 + j) % 401}" for j in range(25)))
-        for i in range(100)
-    ]
-    whole = _docs(spark, rows)
-    path = str(tmp_path / "kmv_state.parquet")
-    kmv_state(_docs(spark, rows[:50])).write.parquet(path)
-    state1 = spark.read.parquet(path)
-    merged = kmv_merge(state1, _docs(spark, rows[50:]))
-    key = lambda r: (r["source"], r["h"])  # noqa: E731
-    assert sorted(map(key, merged.collect())) == sorted(
-        map(key, kmv_state(whole).collect())
-    )
-    skey = lambda r: (r["source"], r["n_sketch"], r["kth_min"], r["distinct_est"])  # noqa: E731
-    assert sorted(map(skey, kmv_stats(merged).collect())) == sorted(
-        map(skey, kmv_distinct(whole).collect())
-    )
-
-
-def test_k_validation(spark):
-    df = _docs(spark, [(0, "s", "a b c")])
-    for bad in (1, 0, True, 2.0):
-        try:
-            kmv_distinct(df, k=bad)
-        except ValueError:
-            continue
-        raise AssertionError(f"expected ValueError for k={bad}")

@@ -347,6 +347,48 @@ def test_fully_resumed_batch_commits_nothing(spark, pages_dir, tmp_path):
     assert read_progress(spark, str(tmp_path / "progress")).count() == pages.count()
 
 
+def test_rerun_of_a_committed_batch_keeps_its_rows(spark, pages, tmp_path):
+    """A batch id is immutable once its progress has landed: re-running
+    batch 0 over the same pages, one of which failed, extracts nothing,
+    appends no progress and leaves the committed rows and manifests as the
+    first run wrote them (the failed url is retried under a new id)."""
+    import jobs.extract_job as ej
+
+    cols = ["url", "html", "layout", "args"]
+    good = sorted(pages.select(*cols).collect(), key=lambda r: r.url)[:10]
+    bad = (good[0].url + "#bad", good[0].html, "generic", "{bad")
+    df = spark.createDataFrame([tuple(r) for r in good] + [bad], pages.select(*cols).schema)
+    out = str(tmp_path / "out")
+
+    def run():
+        return ej.run_extract(
+            spark, df, out=out, progress_path=str(tmp_path / "progress"), batch_id=0,
+            per_row_dispatch=True, manifests=str(tmp_path / "manifests"),
+        )
+
+    first, facts = run()
+    want = _content(first)
+    assert len(want) == 11 and facts["failed"] == 1
+    _, facts = run()
+    assert facts == {"rows": 0, "failed": 0, "html_bytes": 0, "batch_id": 0}
+    assert _content(spark.read.parquet(out)) == want
+    progress = spark.read.parquet(str(tmp_path / "progress"))
+    assert progress.count() == progress.select("url").distinct().count() == 11
+    assert _manifest_urls(spark, tmp_path, 0) == 11
+
+
+def test_read_progress_probes_a_missing_path(spark, tmp_path, monkeypatch):
+    """A missing progress table is found by a filesystem probe, with no
+    read attempted: once an ``Observation`` has run in the session, each
+    failed read logs a listener stack trace."""
+
+    def no_read(self):
+        raise AssertionError("spark.read used for a missing path")
+
+    monkeypatch.setattr(type(spark), "read", property(no_read))
+    assert read_progress(spark, str(tmp_path / "missing")) is None
+
+
 def test_declared_schemas_match_the_written_tables(spark, pages_dir, tmp_path):
     """The schemas the job reads its own tables back with are the ones
     Spark infers from what it wrote."""

@@ -168,7 +168,6 @@ def test_wet_roundtrip_warcinfo_skipped_and_unicode(spark, tmp_path):
             for i, t in enumerate(texts)
         ),
         str(d),
-        n_segments=2,
     )
     assert n == len(texts)
     # a raw (non-gzip) malformed segment must become an error row
@@ -207,9 +206,10 @@ def test_segment_writes_do_not_depend_on_the_clock(kind, tmp_path, monkeypatch):
     write = getattr(warc, f"write_{kind}_segments")
     body = (lambda t: t.encode()) if kind == "warc" else (lambda t: t)
     recs = [(i, f"https://w.example/{i}", TS.format(i=i), body(f"text {i}")) for i in range(3)]
+    monkeypatch.setattr(warc, "N_SEGMENTS", 2)
     for run, now in enumerate((1_700_000_000.0, 1_700_000_010.0)):
         monkeypatch.setattr(time, "time", lambda now=now: now)
-        write(recs, str(tmp_path / str(run)), n_segments=2, gzip_members=True)
+        write(recs, str(tmp_path / str(run)))
     first = sorted((tmp_path / "0").glob("seg-*"))
     assert len(first) == 2
     for seg in first:
@@ -235,7 +235,7 @@ def test_wet_to_documents_feeds_curation_surface(spark, tmp_path):
         for i in range(4)
     ]
     d = tmp_path / "wet"
-    write_wet_segments(iter(rows), str(d), n_segments=1)
+    write_wet_segments(iter(rows), str(d))
     docs = wet_to_documents(read_wet(spark, str(d)))
     got = {r.url: r for r in docs.collect()}
     assert len(got) == 4
