@@ -19,17 +19,22 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_table_extractor_to_csv_spark.kernel import boilerplate
 from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
 from ocr_table_extractor_to_csv_spark.operators import (
+    bpe,
+    curation,
     dedup,
     graph,
     similarity,
     sketches,
     textstats,
+    weburl,
 )
 from ocr_table_extractor_to_csv_spark.operators.evaluation import numeric_metrics
 from ocr_table_extractor_to_csv_spark.plans.partitioning import fan_out
 from ocr_table_extractor_to_csv_spark.plans.scope import RunScope
+from ocr_table_extractor_to_csv_spark.sources import pages as P
 from ocr_table_extractor_to_csv_spark.sources import warc
 from ocr_table_extractor_to_csv_spark.sources.pages import pages_from_documents
 
@@ -142,13 +147,13 @@ def q_extract_grid4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _extract_kinds(_docs(spark, sf_dir), ["doc"]).select(*_EXTRACT_COLS)
 
 
-_TOKS_GRID_SQL = """
+_TOKS_GRID_SQL = f"""
   SELECT doc_id,
          CASE WHEN trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) = ''
               THEN []::VARCHAR[]
               ELSE list_transform(
                      string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t[1:12])
+                     t -> t[1:{P.MAX_TOKEN_LEN}])
          END AS ts
   FROM documents
 """
@@ -189,8 +194,25 @@ FROM agg
 """
 
 
-# the grid oracles: ts[i] is the i-th token, r the row index; the value
-# cells are the pages.py builders' (length * a + r * b) % m formulas
+def _values_sql(pro: bool) -> str:
+    """The value cells of label/value row r (pages.value_cell over the
+    tokens ts[3*r+2], ts[3*r+3]), each after a comma."""
+    cells = ""
+    for w, (a, b, m) in enumerate(P.VALUE_COEFFS):
+        s = f"length(ts[3*r+{w + 2}]) * {a} + r * {b}"
+        v = f"{P.PRO_VALUE_OFFSET} + ({s}) % {P.PRO_VALUE_MOD}" if pro else f"({s}) % {m} + 1"
+        cells += f" || ',' || CAST({v} AS VARCHAR)"
+    return cells
+
+
+def _dots_sql(label_len: str) -> str:
+    """The leader dots after a dyn label of ``label_len`` chars, one ' .'
+    per dot pages._dyn_line places."""
+    x0 = P.DYN_LEADER_TO - P.DYN_DOT_W - P.LABEL_X - P.DYN_LEADER_GAP
+    return f"repeat(' .', (({x0} - {P.CHAR_W} * {label_len}) // {P.DYN_DOT_STEP}) + 1)"
+
+
+# the grid oracles: ts[i] is the i-th token, r the row index
 ORACLE_GRID4 = _rows_oracle(
     "len(ts) >= 4", "len(ts) // 4",
     "ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4]",
@@ -203,10 +225,7 @@ def q_extract_fin_grid(spark, sf_dir):
 
 
 ORACLE_FIN_GRID = _rows_oracle(
-    "len(ts) >= 3", "len(ts) // 3",
-    "'l' || ts[3*r+1] || ','"
-    " || CAST((length(ts[3*r+2]) * 97 + r * 13) % 999 + 1 AS VARCHAR) || ','"
-    " || CAST((length(ts[3*r+3]) * 89 + r * 31) % 999 + 1 AS VARCHAR)",
+    "len(ts) >= 3", "len(ts) // 3", "'l' || ts[3*r+1]" + _values_sql(False),
     "total", f"'Cuenta,Valor_1,Valor_2' || {_CRLF} || body || {_CRLF}", 3,
 )
 
@@ -215,14 +234,11 @@ def q_extract_dyn_grid(spark, sf_dir):
     return _extract_kinds(_docs(spark, sf_dir), ["dyn"]).select(*_EXTRACT_COLS, "num_md5")
 
 
-# dots(label_len) = ((746 - 8*label_len) // 14) + 1 (sources/pages.py:_dyn_line)
 ORACLE_DYN_GRID = _rows_oracle(
-    "len(ts) // 3 >= 6", "least(len(ts) // 3, 12)",
-    "'l' || ts[3*r+1] || repeat(' .', ((746 - 8 * (1 + length(ts[3*r+1]))) // 14) + 1)"
-    " || ',' || CAST((length(ts[3*r+2]) * 97 + r * 13) % 999 + 1 AS VARCHAR)"
-    " || ',' || CAST((length(ts[3*r+3]) * 89 + r * 31) % 999 + 1 AS VARCHAR)",
+    "len(ts) // 3 >= 6", f"least(len(ts) // 3, {P.DYN_MAX_ROWS})",
+    "'l' || ts[3*r+1] || " + _dots_sql("(1 + length(ts[3*r+1]))") + _values_sql(False),
     "total", f"'Cuenta,2021,2022' || {_CRLF} || body || {_CRLF}", 3,
-    head="'periodo' || repeat(' .', ((746 - 8 * 7) // 14) + 1) || ',2021,2022'", num=True,
+    head=f"'periodo' || {_dots_sql('7')} || ',2021,2022'", num=True,
 )
 
 
@@ -266,10 +282,7 @@ def q_extract_fixture_professional(spark, sf_dir):
 
 
 ORACLE_PRO_GRID = _rows_oracle(
-    "len(ts) // 3 >= 2", "len(ts) // 3",
-    "'lbl' || ts[3*r+1] || ','"
-    " || CAST(1000 + (length(ts[3*r+2]) * 97 + r * 13) % 9000 AS VARCHAR) || ','"
-    " || CAST(1000 + (length(ts[3*r+3]) * 89 + r * 31) % 9000 AS VARCHAR)",
+    "len(ts) // 3 >= 2", "len(ts) // 3", "'lbl' || ts[3*r+1]" + _values_sql(True),
     "total - 1", f"body || {_CRLF}", 3,
 )
 
@@ -278,21 +291,22 @@ def q_extract_fixture_boiler(spark, sf_dir):
     return _extract_kinds(_docs(spark, sf_dir), ["boiler"]).select(*_EXTRACT_COLS)
 
 
+_PARA = P.BOILER_PARA_TOKENS
 ORACLE_BOILER = f"""
 WITH toks AS ({_TOKS_GRID_SQL}),
 ok AS (
-  SELECT doc_id, ts FROM toks WHERE len(ts) >= 8
+  SELECT doc_id, ts FROM toks WHERE len(ts) >= {2 * P.BOILER_TABLE_ROWS}
 ), paras AS (
-  SELECT doc_id, i, array_to_string(ts[8*i+1 : 8*i+8], ' ') AS para
-  FROM ok, UNNEST(generate_series(0, CAST(len(ts) // 8 - 1 AS INT))) AS u(i)
+  SELECT doc_id, i, array_to_string(ts[{_PARA}*i+1 : {_PARA}*i+{_PARA}], ' ') AS para
+  FROM ok, UNNEST(generate_series(0, CAST(len(ts) // {_PARA} - 1 AS INT))) AS u(i)
 ), mt AS (
   SELECT doc_id,
          coalesce(string_agg(para, chr(10)||chr(10) ORDER BY i)
-                    FILTER (WHERE length(para) >= 25), '') AS main_text
+                    FILTER (WHERE length(para) >= {boilerplate.MIN_CHARS}), '') AS main_text
   FROM paras GROUP BY doc_id
 ), cells AS (
   SELECT doc_id, j, ts[2*j+1] || ',' || ts[2*j+2] AS line
-  FROM ok, UNNEST(generate_series(0, 3)) AS u(j)
+  FROM ok, UNNEST(generate_series(0, {P.BOILER_TABLE_ROWS - 1})) AS u(j)
 ), tbl AS (
   SELECT doc_id,
          'c0,c1' || chr(13)||chr(10)
@@ -300,7 +314,7 @@ ok AS (
   FROM cells GROUP BY doc_id
 )
 SELECT mt.doc_id,
-       CAST(4 AS INT) AS n_rows,
+       CAST({P.BOILER_TABLE_ROWS} AS INT) AS n_rows,
        CAST(2 AS INT) AS n_cols,
        md5(tbl.csv_text) AS csv_md5,
        md5(mt.main_text) AS text_md5
@@ -659,8 +673,8 @@ _PII_SUFFIX_SPARK = lambda: F.concat(  # noqa: E731
 
 
 def q_vocab_topk(spark, sf_dir):
-    """Corpus vocabulary statistics: top-100 tokens by term frequency with
-    document frequency alongside (tie rule tf DESC, token ASC makes the
+    """Corpus vocabulary statistics: top-``VOCAB_TOPK`` tokens by term
+    frequency with document frequency alongside (tie rule tf DESC, token ASC makes the
     k-boundary deterministic)."""
     return textstats.vocab_topk(_docs(spark, sf_dir))
 
@@ -672,7 +686,7 @@ WITH tok AS (
 )
 SELECT token, count(*) AS tf, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
 FROM tok GROUP BY 1
-ORDER BY tf DESC, token ASC LIMIT 100
+ORDER BY tf DESC, token ASC LIMIT {textstats.VOCAB_TOPK}
 """
 
 
@@ -685,7 +699,7 @@ def q_search_topk(spark, sf_dir):
     return textstats.search_topk(_docs(spark, sf_dir), SEARCH_TERMS)
 
 
-def _oracle_search_topk(k: int = 20) -> str:
+def _oracle_search_topk() -> str:
     terms = ", ".join(f"'{t}'" for t in sorted(set(SEARCH_TERMS)))
     return f"""
 WITH tok AS (
@@ -707,7 +721,7 @@ WITH tok AS (
   FROM j GROUP BY 1
 )
 SELECT doc_id, n_hits, score FROM s
-ORDER BY score DESC, doc_id ASC LIMIT {k}
+ORDER BY score DESC, doc_id ASC LIMIT {textstats.SEARCH_TOPK}
 """
 
 
@@ -918,18 +932,18 @@ ORDER BY doc_id, copy
 
 def q_decontaminate(spark, sf_dir):
     """Benchmark decontamination: shingle overlap vs the deterministic
-    doc_id % 97 == 0 stand-in eval set; eval side broadcasts."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import decontaminate
+    doc_id % DECONTAMINATE_EVAL_MOD == 0 stand-in eval set; eval side
+    broadcasts."""
+    return curation.decontaminate(_docs_f(spark, sf_dir), scope=_scope(spark, "decontaminate"))
 
-    return decontaminate(_docs_f(spark, sf_dir), scope=_scope(spark, "decontaminate"))
 
-
-def _oracle_decontaminate(eval_mod: int = 97, threshold: float = 0.5) -> str:
+def _oracle_decontaminate() -> str:
+    threshold = curation.DECONTAMINATE_THRESHOLD
     return f"""
 WITH sh AS MATERIALIZED (
   SELECT * FROM ({_SHINGLES_SQL}) s WHERE shingle <> ''
 ), ev AS (
-  SELECT DISTINCT shingle FROM sh WHERE doc_id % {eval_mod} = 0
+  SELECT DISTINCT shingle FROM sh WHERE doc_id % {curation.DECONTAMINATE_EVAL_MOD} = 0
 ), sizes AS (
   SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY 1
 ), ov AS (
@@ -948,15 +962,14 @@ FROM sizes LEFT JOIN ov ON ov.doc_id = sizes.doc_id
 def q_pack_sequences(spark, sf_dir):
     """Pretraining sequence packing: contiguous-fill token bins per shard
     (one window cumsum; shards pack independently)."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import pack_sequences
-
-    return pack_sequences(_docs(spark, sf_dir))
+    return curation.pack_sequences(_docs(spark, sf_dir))
 
 
+_BUDGET, _SHARDS = curation.PACK_BUDGET, curation.PACK_SHARDS
 ORACLE_PACK_SEQUENCES = f"""
 WITH t AS (
   SELECT doc_id,
-         CAST(doc_id % 16 AS INT) AS shard,
+         CAST(doc_id % {_SHARDS} AS INT) AS shard,
          CAST(len({_TOKS_SQL}) AS INT) AS n_tokens
   FROM documents
 ), c AS (
@@ -966,27 +979,27 @@ WITH t AS (
   FROM t
 )
 SELECT doc_id, shard, n_tokens,
-       CAST((cum - n_tokens) // 2048 AS BIGINT) AS bin_id,
-       CAST((cum - n_tokens) % 2048 AS INT) AS offset_in_bin
+       CAST((cum - n_tokens) // {_BUDGET} AS BIGINT) AS bin_id,
+       CAST((cum - n_tokens) % {_BUDGET} AS INT) AS offset_in_bin
 FROM c
 """
 
 
 def q_sample_stratified(spark, sf_dir):
-    """Deterministic md5-hash stratified sampling (en 0.5, es 0.25, else
-    0.1) — reproducible on any cluster/partitioning/retry, unlike rand()."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import sample_stratified
+    """Deterministic md5-hash stratified sampling (``SAMPLE_RATES`` per lang,
+    else ``SAMPLE_DEFAULT_RATE``) — reproducible on any
+    cluster/partitioning/retry, unlike rand()."""
+    return curation.sample_stratified(_docs(spark, sf_dir))
 
-    return sample_stratified(_docs(spark, sf_dir))
 
-
-ORACLE_SAMPLE_STRATIFIED = """
+_RATES = " ".join(f"WHEN lang = '{s}' THEN {r}" for s, r in sorted(curation.SAMPLE_RATES.items()))
+ORACLE_SAMPLE_STRATIFIED = f"""
 WITH t AS (
   SELECT doc_id, lang AS stratum,
          CAST('0x' || substr(md5('sample:' || doc_id), 1, 8) AS BIGINT)
            / 4294967296.0 AS u,
-         CASE WHEN lang = 'en' THEN 0.5 WHEN lang = 'es' THEN 0.25
-              ELSE 0.1 END AS r
+         CASE {_RATES}
+              ELSE {curation.SAMPLE_DEFAULT_RATE} END AS r
   FROM documents
 )
 SELECT doc_id, stratum, round(u, 6) AS u FROM t WHERE u < r
@@ -1002,9 +1015,7 @@ def q_curate(spark, sf_dir):
     """Composed keep/drop curation decision: lang filter + quality threshold
     + exact-dup keeper election + token accounting — one documents scan, one
     shuffle (the keeper-election window)."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import curate
-
-    return curate(_docs_f(spark, sf_dir))
+    return curation.curate(_docs_f(spark, sf_dir))
 
 
 def _oracle_gated(keepers: str) -> str:
@@ -1012,8 +1023,6 @@ def _oracle_gated(keepers: str) -> str:
     the caller's ``keepers`` CTEs end in ``keepers(doc_id)``, and ``gated``
     holds the keepers that pass the quality and lang gates.  The caller
     appends more CTEs or its final SELECT."""
-    from ocr_table_extractor_to_csv_spark.operators import curation
-
     min_q = curation.DEFAULT_MIN_QUALITY
     langs = ", ".join(f"'{l}'" for l in curation.DEFAULT_LANGS)
     return f"""
@@ -1047,9 +1056,7 @@ def q_curate_neardup(spark, sf_dir):
     """Near-dup-aware curation: lang + quality gates with keeper election by
     MinHash-LSH CLUSTER (dedup_clusters composition) — near-copies collapse
     to one survivor, not just byte-identical texts."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import curate_neardup
-
-    return curate_neardup(_docs_f(spark, sf_dir), scope=_scope(spark, "curate_neardup"))
+    return curation.curate_neardup(_docs_f(spark, sf_dir), scope=_scope(spark, "curate_neardup"))
 
 
 def _oracle_curate_neardup() -> str:
@@ -1062,12 +1069,10 @@ def q_pipeline_full(spark, sf_dir):
     AND near-dup-cluster keeper, survivors packed into token bins — the
     full pipeline a pretraining corpus run ships, built from the standalone
     operators over ONE cached corpus scan (plan-pinned; r3 verdict #8)."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import curate_pipeline
-
-    return curate_pipeline(_docs_f(spark, sf_dir), scope=_scope(spark, "pipeline_full"))
+    return curation.curate_pipeline(_docs_f(spark, sf_dir), scope=_scope(spark, "pipeline_full"))
 
 
-def _oracle_pipeline_full(budget: int = 2048, n_shards: int = 16) -> str:
+def _oracle_pipeline_full() -> str:
     return _oracle_gated(f"""deco AS MATERIALIZED ({_oracle_decontaminate()}),
 cc AS MATERIALIZED ({_oracle_dedup_clusters()}),
 keepers AS (
@@ -1075,14 +1080,14 @@ keepers AS (
   JOIN deco ON deco.doc_id = cc.doc_id AND NOT deco.contaminated
   WHERE cc.is_keeper
 )""") + f""", c AS (
-  SELECT *, CAST(doc_id % {n_shards} AS INT) AS shard,
-         sum(n_tokens) OVER (PARTITION BY doc_id % {n_shards} ORDER BY doc_id
+  SELECT *, CAST(doc_id % {_SHARDS} AS INT) AS shard,
+         sum(n_tokens) OVER (PARTITION BY doc_id % {_SHARDS} ORDER BY doc_id
                              ROWS UNBOUNDED PRECEDING) AS cum
   FROM gated
 )
 SELECT doc_id, n_tokens, quality_score, lang_pred, shard,
-       CAST((cum - n_tokens) // {budget} AS BIGINT) AS bin_id,
-       CAST((cum - n_tokens) % {budget} AS INT) AS offset_in_bin
+       CAST((cum - n_tokens) // {_BUDGET} AS BIGINT) AS bin_id,
+       CAST((cum - n_tokens) % {_BUDGET} AS INT) AS offset_in_bin
 FROM c
 """
 
@@ -1095,22 +1100,19 @@ def q_pipeline_full_v2(spark, sf_dir):
     semantics, exactly as a staged production pipeline.  Still zero extra
     corpus scans: pass 0 derives from the same shared projection
     (plan-pinned in tests)."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import curate_pipeline
-    from ocr_table_extractor_to_csv_spark.operators.weburl import with_synth_url
-
-    return curate_pipeline(
-        with_synth_url(_docs_f(spark, sf_dir)), url_col="url",
+    return curation.curate_pipeline(
+        weburl.with_synth_url(_docs_f(spark, sf_dir)), url_col="url",
         scope=_scope(spark, "pipeline_full_v2"),
     )
 
 
-def _oracle_pipeline_over(source: str, prefix: str, budget: int, n_shards: int) -> str:
+def _oracle_pipeline_over(source: str, prefix: str) -> str:
     """``pipeline_full``'s oracle re-pointed at the corpus ``source``: every
     ``FROM documents`` in the composed body is rewritten to read ``source``,
     which the ``prefix`` CTEs define ahead of the body.  Eval-set slices,
     LSH signatures and CC labels are thereby all re-derived over that
     corpus, the same sequential semantics as the Spark side."""
-    body = _oracle_pipeline_full(budget, n_shards).replace(
+    body = _oracle_pipeline_full().replace(
         "FROM documents", f"FROM {source}"
     ).strip()
     assert body.startswith("WITH ")
@@ -1120,7 +1122,7 @@ WITH {prefix},
 """
 
 
-def _oracle_pipeline_v2(budget: int = 2048, n_shards: int = 16) -> str:
+def _oracle_pipeline_v2() -> str:
     """Pass-0 URL keepers (canon chain + min-doc_id election + keyless
     passthrough) as ``docs_v2``, feeding the unchanged pipeline algebra."""
     return _oracle_pipeline_over("docs_v2", f"""{_URL_CANON_CTES},
@@ -1134,31 +1136,30 @@ ukeyed AS (
   SELECT doc_id FROM ukeyed UNION ALL SELECT doc_id FROM ukeyless
 ), docs_v2 AS MATERIALIZED (
   SELECT d.* FROM documents d JOIN ukeep USING (doc_id)
-)""", budget, n_shards)
+)""")
 
 
 def q_pipeline_full_v3(spark, sf_dir):
     """``pipeline_full`` with the C4 line-dedup CLEANING transform wired
-    in as sequential pass 1 (r5 verdict #6): duplicate 10-token chunks are
-    CUT from every document (global-first occurrence wins) before any
+    in as sequential pass 1 (r5 verdict #6): duplicate ``CHUNK_TOKENS``-token
+    chunks are CUT from every document (global-first occurrence wins) before any
     downstream stage, so the lang/quality gates, eval-set slice, near-dup
     signatures, CC keepers, token counts, and packing all see the cleaned
     text — what a real corpus build ships.  Still one corpus scan: the
     cleaned projection is materialized and every branch reads IT
     (plan-pinned in tests)."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import curate_pipeline
-
-    return curate_pipeline(
-        _docs_f(spark, sf_dir), clean_chunks=10, scope=_scope(spark, "pipeline_full_v3")
+    return curation.curate_pipeline(
+        _docs_f(spark, sf_dir), clean_chunks=dedup.CHUNK_TOKENS,
+        scope=_scope(spark, "pipeline_full_v3"),
     )
 
 
-def _oracle_pipeline_v3(budget: int = 2048, n_shards: int = 16) -> str:
+def _oracle_pipeline_v3() -> str:
     """The line_dedup_clean oracle as ``docs_v3(doc_id, text)``, feeding the
     unchanged pipeline algebra over post-clean text."""
     return _oracle_pipeline_over("docs_v3", f"""docs_v3 AS MATERIALIZED (
   SELECT doc_id, text_clean AS text FROM ({ORACLE_LINE_DEDUP_CLEAN}) _clean
-)""", budget, n_shards)
+)""")
 
 
 def q_dedup_exact(spark, sf_dir):
@@ -1170,11 +1171,12 @@ ORACLE_DEDUP_EXACT = (
     "FROM documents GROUP BY 1"
 )
 
+_SHINGLE = " || '_' || ".join(f"ts[i+{j}]" if j else "ts[i]" for j in range(dedup.SHINGLE_N))
 _SHINGLES_SQL = f"""
   SELECT doc_id, unnest(list_distinct(
-    CASE WHEN len(ts) >= 3
-         THEN list_transform(generate_series(1, len(ts) - 2),
-              i -> ts[i] || '_' || ts[i+1] || '_' || ts[i+2])
+    CASE WHEN len(ts) >= {dedup.SHINGLE_N}
+         THEN list_transform(generate_series(1, len(ts) - {dedup.SHINGLE_N - 1}),
+              i -> {_SHINGLE})
          ELSE [list_aggregate(ts, 'string_agg', '_')] END)) AS shingle
   FROM (SELECT doc_id, {_TOKS_SQL} AS ts FROM documents) _t
 """
@@ -1187,7 +1189,7 @@ def q_ngram_jaccard(spark, sf_dir):
 ORACLE_NGRAM_JACCARD = f"""
 WITH sh AS (
   SELECT * FROM ({_SHINGLES_SQL}) s
-  WHERE doc_id % 17 = 0 AND shingle <> ''
+  WHERE doc_id % {dedup.JACCARD_SAMPLE_MOD} = 0 AND shingle <> ''
 ), sizes AS (
   SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1
 ), inter AS (
@@ -1209,8 +1211,6 @@ def q_bloom_dedup(spark, sf_dir):
     Statuses {'new','dup','false_positive'} are all derivable — the
     oracle computes the identical md5 bit positions, and set-membership
     in SQL equals the bitmap test, false positives included."""
-    from ocr_table_extractor_to_csv_spark.operators.dedup import bloom_dedup
-
     docs = _docs(spark, sf_dir)
     donor = docs.select(
         (F.col("doc_id") - 1).alias("doc_id"), F.col("text").alias("_donor")
@@ -1229,14 +1229,14 @@ def q_bloom_dedup(spark, sf_dir):
             .alias("text"),
         )
     )
-    return bloom_dedup(seen, new)
+    return dedup.bloom_dedup(seen, new)
 
 
 def _oracle_bloom_dedup() -> str:
     m, k = dedup.BLOOM_M_BITS, dedup.BLOOM_K
 
-    def pos(i: int, src: str = "fp") -> str:
-        return f"CAST('0x' || substr(md5({src} || ':{i}'), 1, 5) AS BIGINT) % {m}"
+    def pos(i: int) -> str:
+        return f"CAST('0x' || substr(md5(fp || ':{i}'), 1, 5) AS BIGINT) % {m}"
 
     pcols = ", ".join(f"{pos(i)} AS p{i}" for i in range(k))
     seen_pos_union = " UNION ALL ".join(
@@ -1352,11 +1352,19 @@ def q_dedup_clusters(spark, sf_dir):
     return dedup.dedup_clusters(_docs_f(spark, sf_dir), scope=_scope(spark, "dedup_clusters"))
 
 
-def _oracle_dedup_clusters(iters: int = 12) -> str:
-    """Min-label propagation unrolled ``iters`` times in SQL — exact as long
-    as every component's diameter is <= iters (near-dup components are
-    clique-ish; sf graphs converge in 2-3; Spark-side convergence is checked,
-    not assumed, so a mismatch would surface as a driver red, not silence)."""
+# Unroll depth of the connected-components oracle: SQL has no loop, so the
+# oracle runs a fixed number of min-label rounds where the Spark side
+# iterates to convergence (capped by dedup.CC_MAX_ITER).  Exact while every
+# component's diameter is <= the depth (sf graphs converge in 2-3), and the
+# oracle checks that itself.
+_CC_UNROLL = 12
+
+
+def _oracle_dedup_clusters() -> str:
+    """Min-label propagation unrolled ``_CC_UNROLL`` times in SQL (Spark-side
+    convergence is checked, not assumed, so a mismatch would surface as a
+    driver red, not silence)."""
+    iters = _CC_UNROLL
     # AS MATERIALIZED everywhere: DuckDB inlines plain CTEs, which would
     # re-evaluate the whole LSH pipeline once per reference — exponential
     # across the unrolled iterations
@@ -1403,7 +1411,7 @@ def q_simhash64(spark, sf_dir):
     """64-bit SimHash — the production width (16-bit pigeonhole band keys).
     Bit 63 lands on the BIGINT sign bit; signed two's complement agrees
     between Spark LONG and DuckDB BIGINT, so the oracle is still bit-exact."""
-    return dedup.simhash(_docs_f(spark, sf_dir), bits=64).withColumnRenamed(
+    return dedup.simhash(_docs_f(spark, sf_dir)).withColumnRenamed(
         "simhash", "simhash64"
     )
 
@@ -1455,7 +1463,14 @@ def q_similarity_topk(spark, sf_dir):
     return similarity.brute_force_topk(_emb_f(spark, sf_dir))
 
 
-ORACLE_SIMILARITY_TOPK = """
+_K, _QMOD, _ROUND = similarity.TOPK, similarity.QUERY_MOD, similarity.SIM_ROUND
+# the sf embeddings' width: the Spark sketch reads it from the first vector,
+# the oracle bakes that many plane weights into its SQL
+_SF_EMBED_DIM = 64
+# the int8 code range, derived from QUANT_BITS as in similarity._quantized_codes_frame
+_QMAX = float((1 << (similarity.QUANT_BITS - 1)) - 1)
+
+ORACLE_SIMILARITY_TOPK = f"""
 WITH base AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
@@ -1466,15 +1481,15 @@ WITH base AS (
          list_sum(list_transform(generate_series(1, len(q.e)), i -> q.e[i] * c.e[i]))
            / (q.nrm * c.nrm) AS cos
   FROM n q JOIN n c ON c.vec_id <> q.vec_id AND c.nrm > 0
-  WHERE q.vec_id % 50 = 0
+  WHERE q.vec_id % {_QMOD} = 0
 ), ranked AS (
   SELECT query_id, neighbor_id, cos,
          row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
   FROM sims
 )
 SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       round(cos, 4) AS cos_sim
-FROM ranked WHERE rank <= 5
+       round(cos, {_ROUND}) AS cos_sim
+FROM ranked WHERE rank <= {_K}
 """
 
 
@@ -1482,15 +1497,16 @@ def q_similarity_lsh(spark, sf_dir):
     return similarity.lsh_topk(_emb_f(spark, sf_dir))
 
 
-def _sketch_ctes(n_planes: int = 6, n_tables: int = 8, dim: int = 64) -> str:
+def _sketch_ctes() -> str:
     """Shared DuckDB CTEs (base, sk, bands) twinning multi_table_sketch:
     the hyperplane weights are the SAME driver-precomputed literals
     (similarity.plane_weights), folded left-to-right via list_reduce so the
     sign bits match Spark's sequential double fold exactly."""
+    n_tables, dim = similarity.LSH_TABLES, _SF_EMBED_DIM
     bucket_cols = []
     for t in range(n_tables):
         terms = []
-        for p in range(n_planes):
+        for p in range(similarity.LSH_PLANES):
             w = similarity.plane_weights(t * 1000 + p, dim)
             wlist = "[" + ",".join(repr(x) for x in w) + "]"
             terms.append(
@@ -1511,18 +1527,15 @@ base AS (
 ), bands AS ({band_union})"""
 
 
-def _oracle_similarity_lsh(
-    k: int = 5, query_mod: int = 50, n_planes: int = 6, n_tables: int = 8, dim: int = 64
-) -> str:
-    """DuckDB twin of lsh_topk: shared sketch CTEs + candidates, cosine
-    re-rank, and top-k in plain SQL."""
-    return f"""
-WITH {_sketch_ctes(n_planes, n_tables, dim)},
+# DuckDB twin of lsh_topk: shared sketch CTEs + candidates, cosine re-rank,
+# and top-k in plain SQL
+ORACLE_SIMILARITY_LSH = f"""
+WITH {_sketch_ctes()},
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM bands q JOIN bands c
     ON c.tbl = q.tbl AND c.bucket = q.bucket AND c.vec_id <> q.vec_id
-  WHERE q.vec_id % {query_mod} = 0
+  WHERE q.vec_id % {_QMOD} = 0
 ), n AS (
   SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM base
 ), sims AS (
@@ -1538,18 +1551,15 @@ cand AS (
   FROM sims
 )
 SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       round(cos, 4) AS cos_sim
-FROM ranked WHERE rank <= {k}
+       round(cos, {_ROUND}) AS cos_sim
+FROM ranked WHERE rank <= {_K}
 """
-
-
-ORACLE_SIMILARITY_LSH = _oracle_similarity_lsh()
 
 
 def q_similarity_ivf(spark, sf_dir):
     """IVF-flat ANN: integer-Lloyd TRAINED coarse quantizer (driver-side
     over a deterministic sample), literal-array list assignment in one
-    scan, n_probe=4 inverted lists, exact re-rank."""
+    scan, ``IVF_PROBES`` inverted lists probed, exact re-rank."""
     return similarity.ivf_topk(_emb_f(spark, sf_dir))
 
 
@@ -1561,13 +1571,13 @@ def q_similarity_ivf_q(spark, sf_dir):
     the ``embedding_quantize`` payoff): probed candidates are scored with
     the int8 symmetric codes (per-vector scales cancel in the cosine; the
     int dot is exact BIGINT, so the shortlist is cross-engine exact), and
-    only the top k*4 per query are re-ranked with float vectors.  At 10^9
-    vectors the candidate pass reads the 4x-smaller code column and the
+    only the top k*IVF_Q8_REFINE per query are re-ranked with float
+    vectors.  At 10^9 vectors the candidate pass reads the 4x-smaller code column and the
     float column is fetched for ~20 rows per query."""
     return similarity.ivf_topk(_emb_f(spark, sf_dir), refine_q8=IVF_Q8_REFINE)
 
 
-def _q8_shortlist_ctes(k: int, refine_q8: int | None) -> str:
+def _q8_shortlist_ctes(refine_q8: int | None) -> str:
     """cand CTE for the IVF oracle: identity passthrough, or the int8-code
     shortlist (top k*refine per query by quantized cosine, ties ->
     vec_id ASC) mirroring similarity._q8_norm_frame + the refine window."""
@@ -1581,7 +1591,7 @@ def _q8_shortlist_ctes(k: int, refine_q8: int | None) -> str:
   SELECT vec_id,
          list_transform(e, x -> CAST(floor(x / sc + 0.5) AS BIGINT)) AS q8
   FROM (SELECT vec_id, e,
-               list_max(list_transform(e, y -> abs(y))) / 127.0 AS sc
+               list_max(list_transform(e, y -> abs(y))) / {_QMAX} AS sc
         FROM base) _q
   WHERE sc > 0
 ), q8n AS (
@@ -1597,20 +1607,15 @@ def _q8_shortlist_ctes(k: int, refine_q8: int | None) -> str:
     FROM cand0
     JOIN q8n qc ON qc.vec_id = cand0.query_id
     JOIN q8n cc ON cc.vec_id = cand0.vec_id
-  ) _sh WHERE r <= {k * refine_q8}
+  ) _sh WHERE r <= {_K * refine_q8}
 )"""
 
 
-def _ivf_cent_assign_ctes(
-    n_centroids: int,
-    n_iter: int,
-    sample_mod: int,
-    max_train: int,
-) -> str:
+def _ivf_cent_assign_ctes() -> str:
     """Shared CTE prefix for every trained-quantizer oracle
     (``similarity_ivf``, ``similarity_ivf_q``, ``semdedup``): re-runs the
-    SAME integer Lloyd training unrolled ``n_iter`` times in SQL and ends
-    with ``assign`` = (vec_id, cid) for EVERY vector.  Because
+    SAME integer Lloyd training unrolled ``IVF_TRAIN_ITERS`` times in SQL and
+    ends with ``assign`` = (vec_id, cid) for EVERY vector.  Because
     quantization (floor), the per-cluster sum vectors (order-independent
     BIGINT sums), and the argmax scores (exact-int dot /
     sqrt-of-exact-int) are all bit-exact in both engines, centroids and
@@ -1624,6 +1629,7 @@ def _ivf_cent_assign_ctes(
         "sqrt(CAST(list_reduce(list_transform({c}.s, x -> x * x), "
         "(a, b) -> a + b) AS DOUBLE))"
     )
+    n_iter = similarity.IVF_TRAIN_ITERS
     train = ""
     for i in range(1, n_iter + 1):
         score = int_dot.format(q="s.q", c="c") + " / " + c_nrm.format(c="c")
@@ -1656,17 +1662,17 @@ c{i} AS MATERIALIZED (
   FROM embeddings
 ), qv AS (
   SELECT vec_id,
-         list_transform(e, x -> CAST(floor(x * 1024.0 + 0.5) AS BIGINT)) AS q
+         list_transform(e, x -> CAST(floor(x * {float(similarity.IVF_QUANT_SCALE)} + 0.5) AS BIGINT)) AS q
   FROM base
 ), samp AS MATERIALIZED (
   -- bounded sample: hash-ordered LIMIT keeps the driver collect O(max_train)
   -- whatever the corpus size (mirrors similarity._collect_train_sample)
   SELECT vec_id, q FROM qv
-  WHERE vec_id % {sample_mod} = 0 AND len(list_filter(q, x -> x <> 0)) > 0
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {max_train}
+  WHERE vec_id % {similarity.IVF_SAMPLE_MOD} = 0 AND len(list_filter(q, x -> x <> 0)) > 0
+  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {similarity.IVF_MAX_TRAIN}
 ), c0 AS MATERIALIZED (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, q AS s
-  FROM (SELECT * FROM samp ORDER BY vec_id LIMIT {n_centroids}) _i
+  FROM (SELECT * FROM samp ORDER BY vec_id LIMIT {similarity.IVF_CENTROIDS}) _i
 ){train},
 cent AS MATERIALIZED (
   SELECT cid, s,
@@ -1682,19 +1688,10 @@ cent AS MATERIALIZED (
 )"""
 
 
-def _oracle_similarity_ivf(
-    k: int = 5,
-    query_mod: int = 50,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    n_iter: int = similarity.IVF_TRAIN_ITERS,
-    sample_mod: int = similarity.IVF_SAMPLE_MOD,
-    max_train: int = similarity.IVF_MAX_TRAIN,
-    refine_q8: int | None = None,
-) -> str:
+def _oracle_similarity_ivf(refine_q8: int | None = None) -> str:
     """DuckDB twin of ivf_topk over the shared trained-quantizer prefix
     (``_ivf_cent_assign_ctes``).  With ``refine_q8`` set, the int8-code
-    shortlist (codes = floor(x / (max|x|/127) + 0.5) — every arithmetic
+    shortlist (codes = floor(x / (max|x|/_QMAX) + 0.5) — every arithmetic
     step cross-engine exact, so the shortlist cutoff replays identically)
     is inserted between candidates and the float re-rank."""
     int_dot = (
@@ -1703,24 +1700,24 @@ def _oracle_similarity_ivf(
     )
     probe_score = int_dot.format(q="qq.qq", c="c") + " / c.s_nrm"
     return f"""
-WITH {_ivf_cent_assign_ctes(n_centroids, n_iter, sample_mod, max_train)}, n AS (
+WITH {_ivf_cent_assign_ctes()}, n AS (
   SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM base
 ), qq AS (
   SELECT n.vec_id AS query_id, n.e AS qe, n.nrm AS q_nrm, qv.q AS qq
   FROM n JOIN qv ON qv.vec_id = n.vec_id
-  WHERE n.vec_id % {query_mod} = 0 AND n.nrm > 0
+  WHERE n.vec_id % {_QMOD} = 0 AND n.nrm > 0
 ), probes AS (
   SELECT query_id, cid FROM (
     SELECT qq.query_id, c.cid,
            row_number() OVER (PARTITION BY qq.query_id
                               ORDER BY {probe_score} DESC, c.cid ASC) AS r
     FROM qq CROSS JOIN cent c
-  ) _p WHERE r <= {n_probe}
+  ) _p WHERE r <= {similarity.IVF_PROBES}
 ), cand0 AS (
   SELECT DISTINCT p.query_id, a.vec_id
   FROM probes p JOIN assign a ON a.cid = p.cid
   WHERE a.vec_id <> p.query_id
-), {_q8_shortlist_ctes(k, refine_q8)}, sims AS (
+), {_q8_shortlist_ctes(refine_q8)}, sims AS (
   SELECT cand.query_id, cand.vec_id AS neighbor_id,
          list_sum(list_transform(generate_series(1, len(q.qe)), i -> q.qe[i] * c.e[i]))
            / (q.q_nrm * c.nrm) AS cos
@@ -1733,15 +1730,15 @@ WITH {_ivf_cent_assign_ctes(n_centroids, n_iter, sample_mod, max_train)}, n AS (
   FROM sims
 )
 SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       round(cos, 4) AS cos_sim
-FROM ranked WHERE rank <= {k}
+       round(cos, {_ROUND}) AS cos_sim
+FROM ranked WHERE rank <= {_K}
 """
 
 
 def q_semdedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): cluster embeddings with the trained
     integer-Lloyd coarse quantizer, keep within each cluster only vectors
-    with no lower-id neighbor at cosine >= 0.35
+    with no lower-id neighbor at cosine >= ``COS_DUP_THRESHOLD``
     (``similarity.semdedup``).  The third embedding-dedup path next to
     LSH-bucketed pairs and brute force; training, assignment, and the
     keeper verdict all replay exactly in the oracle."""
@@ -1757,17 +1754,11 @@ def q_cluster_stats(spark, sf_dir):
     return similarity.cluster_stats(_emb(spark, sf_dir))
 
 
-def _oracle_cluster_stats(
-    n_centroids: int = 16,
-    n_iter: int = similarity.IVF_TRAIN_ITERS,
-    sample_mod: int = similarity.IVF_SAMPLE_MOD,
-    max_train: int = similarity.IVF_MAX_TRAIN,
-) -> str:
-    """DuckDB twin over the shared trained-quantizer prefix: identical
-    centroids and assignments, then the same integer share arithmetic
-    (`//` == Spark `div` on non-negative operands)."""
-    return f"""
-WITH {_ivf_cent_assign_ctes(n_centroids, n_iter, sample_mod, max_train)},
+# DuckDB twin of cluster_stats over the shared trained-quantizer prefix:
+# identical centroids and assignments, then the same integer share
+# arithmetic (`//` == Spark `div` on non-negative operands)
+ORACLE_CLUSTER_STATS = f"""
+WITH {_ivf_cent_assign_ctes()},
 t AS (SELECT CAST(count(*) AS BIGINT) AS tot FROM assign),
 g AS (
   SELECT cid, CAST(count(*) AS BIGINT) AS n_vecs FROM assign GROUP BY cid
@@ -1778,19 +1769,11 @@ FROM g ORDER BY cid
 """
 
 
-def _oracle_semdedup(
-    n_centroids: int = 16,
-    threshold: float = 0.35,
-    n_iter: int = similarity.IVF_TRAIN_ITERS,
-    sample_mod: int = similarity.IVF_SAMPLE_MOD,
-    max_train: int = similarity.IVF_MAX_TRAIN,
-) -> str:
-    """DuckDB twin of semdedup over the shared trained-quantizer prefix:
-    same centroids, same assignment, then the NOT-EXISTS keeper rule on
-    exact float cosine (list_sum dot == Spark's left fold, the
-    dedup_embedding-proven parity)."""
-    return f"""
-WITH {_ivf_cent_assign_ctes(n_centroids, n_iter, sample_mod, max_train)}, n AS (
+# DuckDB twin of semdedup over the shared trained-quantizer prefix: same
+# centroids, same assignment, then the NOT-EXISTS keeper rule on exact float
+# cosine (list_sum dot == Spark's left fold, the dedup_embedding-proven parity)
+ORACLE_SEMDEDUP = f"""
+WITH {_ivf_cent_assign_ctes()}, n AS (
   SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM base
 ), m AS MATERIALIZED (
   SELECT a.vec_id, a.cid, n.e, n.nrm
@@ -1799,7 +1782,7 @@ WITH {_ivf_cent_assign_ctes(n_centroids, n_iter, sample_mod, max_train)}, n AS (
   SELECT DISTINCT b.vec_id
   FROM m a JOIN m b ON b.cid = a.cid AND a.vec_id < b.vec_id
   WHERE list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * b.e[i]))
-          / (a.nrm * b.nrm) >= {threshold}
+          / (a.nrm * b.nrm) >= {similarity.COS_DUP_THRESHOLD}
 )
 SELECT m.vec_id, CAST(m.cid AS INT) AS cid,
        (d.vec_id IS NULL) AS is_keeper
@@ -1808,25 +1791,22 @@ ORDER BY m.vec_id
 """
 
 
-SIMHASH_PAIRS_BITS = 64  # production width: 16-bit band keys
-
-
 def q_simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs at the production 64-bit width: pigeonhole
     banding (exact recall at the hamming radius, up to the hot-bucket cap)
     + bit_count confirm."""
-    return dedup.simhash_pairs(_docs_f(spark, sf_dir), bits=SIMHASH_PAIRS_BITS)
+    return dedup.simhash_pairs(_docs_f(spark, sf_dir))
 
 
-def _simhash_bands_ctes(bits: int, max_hamming: int) -> str:
+def _simhash_bands_ctes() -> str:
     """CTEs sh + bands0: the simhash and its pigeonhole bands.  bkey =
     (simhash >> band_bits*b) & mask — the post-shift mask makes the key
     independent of arithmetic-vs-logical shift semantics (matters for the
     64-bit sign bit; both engines are arithmetic anyway)."""
-    n_bands = max_hamming + 1
-    band_bits = bits // n_bands
+    n_bands = dedup.SIMHASH_MAX_HAMMING + 1
+    band_bits = dedup.SIMHASH_BITS // n_bands
     mask = (1 << band_bits) - 1
-    return f"""sh AS MATERIALIZED ({_oracle_simhash_hash(bits)}),
+    return f"""sh AS MATERIALIZED ({_oracle_simhash_hash(dedup.SIMHASH_BITS)}),
 bands0 AS (
   SELECT doc_id, simhash, b AS band,
          (simhash >> ({band_bits} * b)) & {mask} AS bkey
@@ -1834,13 +1814,11 @@ bands0 AS (
 )"""
 
 
-def _oracle_simhash_pairs(
-    max_hamming: int = 3, bits: int = SIMHASH_PAIRS_BITS, max_bucket: int = 1024
-) -> str:
+def _oracle_simhash_pairs() -> str:
     return f"""
-WITH {_simhash_bands_ctes(bits, max_hamming)},
+WITH {_simhash_bands_ctes()},
 bands AS (
-  {_capped_sql("doc_id, simhash, band, bkey", "band, bkey", "bands0", max_bucket)}
+  {_capped_sql("doc_id, simhash, band, bkey", "band, bkey", "bands0", dedup.SIMHASH_MAX_BUCKET)}
 ), cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
                   a.simhash AS h_a, b.simhash AS h_b
@@ -1848,22 +1826,17 @@ bands AS (
     ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
 )
 SELECT id_a, id_b, CAST(bit_count(xor(h_a, h_b)) AS INT) AS hamming
-FROM cand WHERE bit_count(xor(h_a, h_b)) <= {max_hamming}
+FROM cand WHERE bit_count(xor(h_a, h_b)) <= {dedup.SIMHASH_MAX_HAMMING}
 """
 
 
 def q_simhash_bucket_stats(spark, sf_dir):
     """Band-bucket accounting for simhash_pairs' hot-bucket cap (the
     lsh_bucket_stats twin) — capped coverage is driver-visible, not silent."""
-    return dedup.simhash_bucket_stats(_docs_f(spark, sf_dir), bits=SIMHASH_PAIRS_BITS)
+    return dedup.simhash_bucket_stats(_docs_f(spark, sf_dir))
 
 
-def _oracle_simhash_bucket_stats(
-    max_hamming: int = 3,
-    bits: int = SIMHASH_PAIRS_BITS,
-    max_bucket: int = dedup.SIMHASH_MAX_BUCKET,
-) -> str:
-    return _bucket_stats_sql(_simhash_bands_ctes(bits, max_hamming), max_bucket)
+ORACLE_SIMHASH_BUCKET_STATS = _bucket_stats_sql(_simhash_bands_ctes(), dedup.SIMHASH_MAX_BUCKET)
 
 
 def q_embedding_quantize(spark, sf_dir):
@@ -1889,11 +1862,11 @@ def q_embedding_quantize(spark, sf_dir):
     )
 
 
-ORACLE_EMBEDDING_QUANTIZE = """
+ORACLE_EMBEDDING_QUANTIZE = f"""
 WITH s AS (
   SELECT vec_id, embedding,
          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-           / 127.0 AS scale
+           / {_QMAX} AS scale
   FROM embeddings
 ), qd AS (
   SELECT vec_id, embedding, scale,
@@ -1918,18 +1891,15 @@ ORDER BY vec_id
 
 def q_dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-dup pairs: LSH-bucket candidates (never
-    all-pairs), exact cosine >= 0.35 confirms; hot buckets capped."""
+    all-pairs), exact cosine >= ``COS_DUP_THRESHOLD`` confirms; hot buckets
+    capped."""
     return similarity.cosine_dup_pairs(_emb_f(spark, sf_dir))
 
 
-def _oracle_dedup_embedding(
-    threshold: float = 0.35, n_planes: int = 6, n_tables: int = 8, dim: int = 64,
-    max_bucket: int = 256,
-) -> str:
-    return f"""
-WITH {_sketch_ctes(n_planes, n_tables, dim)},
+ORACLE_DEDUP_EMBEDDING = f"""
+WITH {_sketch_ctes()},
 capped AS (
-  {_capped_sql("vec_id, tbl, bucket", "tbl, bucket", "bands", max_bucket)}
+  {_capped_sql("vec_id, tbl, bucket", "tbl, bucket", "bands", similarity.COS_MAX_BUCKET)}
 ), pairs AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM capped a JOIN capped b
@@ -1944,8 +1914,8 @@ capped AS (
   JOIN n a ON a.vec_id = pairs.id_a AND a.nrm > 0
   JOIN n b ON b.vec_id = pairs.id_b AND b.nrm > 0
 )
-SELECT id_a, id_b, round(cos, 4) AS cos_sim
-FROM sims WHERE cos >= {threshold}
+SELECT id_a, id_b, round(cos, {_ROUND}) AS cos_sim
+FROM sims WHERE cos >= {similarity.COS_DUP_THRESHOLD}
 """
 
 
@@ -2046,29 +2016,28 @@ GROUP BY 1, 2, 3
 
 def q_line_dedup(spark, sf_dir):
     """C4-style line-level dedup signal: per document, the fraction of its
-    10-token chunks that occur verbatim in another document (chunks stand
-    in for lines — the documents table carries no newlines).  The two-pass
+    ``CHUNK_TOKENS``-token chunks that occur verbatim in another document
+    (chunks stand in for lines — the documents table carries no newlines).  The two-pass
     explode -> global count -> join-back shape is exactly how C4/CCNet
     remove cross-document boilerplate lines before training.  The shuffle
     key is md5(chunk) — 16 bytes per row instead of the raw chunk text —
     and the oracle computes the identical digest (r4 verdict #4)."""
-    from ocr_table_extractor_to_csv_spark.operators.dedup import line_dedup
-
-    return line_dedup(_docs_f(spark, sf_dir))
+    return dedup.line_dedup(_docs_f(spark, sf_dir))
 
 
-# ``t``/``c``: each document's 10-token chunks and the sub-chunk tail after
-# them, the chunk spec of the line_dedup operators
+# ``t``/``c``: each document's CHUNK_TOKENS-token chunks and the sub-chunk
+# tail after them, the chunk spec of the line_dedup operators
+_CHUNK = dedup.CHUNK_TOKENS
 _CHUNK_CTES = f"""t AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ), c AS (
   SELECT doc_id,
-         CASE WHEN len(ts) >= 10
+         CASE WHEN len(ts) >= {_CHUNK}
               THEN list_transform(
-                     generate_series(0, CAST(len(ts) // 10 AS INT) - 1),
-                     i -> array_to_string(ts[i*10+1 : i*10+10], ' '))
+                     generate_series(0, CAST(len(ts) // {_CHUNK} AS INT) - 1),
+                     i -> array_to_string(ts[i*{_CHUNK}+1 : i*{_CHUNK}+{_CHUNK}], ' '))
               ELSE []::VARCHAR[] END AS chunks,
-         array_to_string(ts[CAST(len(ts) // 10 AS INT) * 10 + 1 : len(ts)], ' ')
+         array_to_string(ts[CAST(len(ts) // {_CHUNK} AS INT) * {_CHUNK} + 1 : len(ts)], ' ')
            AS tail
   FROM t
 )"""
@@ -2097,9 +2066,7 @@ def q_line_dedup_clean(spark, sf_dir):
     that occurred earlier in the corpus removed (global-first occurrence
     wins, ordered by (doc_id, chunk idx)); sub-chunk tails pass through.
     The value check covers the full rebuilt text, not just counts."""
-    from ocr_table_extractor_to_csv_spark.operators.dedup import line_dedup_clean
-
-    return line_dedup_clean(_docs_f(spark, sf_dir))
+    return dedup.line_dedup_clean(_docs_f(spark, sf_dir))
 
 
 ORACLE_LINE_DEDUP_CLEAN = f"""
@@ -2133,11 +2100,7 @@ def q_line_dedup_within(spark, sf_dir):
     corpus-wide election): keep each chunk's first in-document occurrence,
     map-only / zero shuffle.  Same output contract and chunk spec as
     line_dedup_clean, so they compose."""
-    from ocr_table_extractor_to_csv_spark.operators.dedup import (
-        line_dedup_within_page,
-    )
-
-    return line_dedup_within_page(_docs_f(spark, sf_dir))
+    return dedup.line_dedup_within_page(_docs_f(spark, sf_dir))
 
 
 # the oracle keeps first occurrences with an order-EXPLICIT first-index
@@ -2162,10 +2125,7 @@ def q_corpus_diff(spark, sf_dir):
     documents table: OLD drops doc_id%10==0, NEW drops doc_id%10==1 and
     revises the text of doc_id%7==0 — so added/removed/changed are all
     exercised and independently derivable in SQL."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import corpus_diff
-
-    old, new = _diff_snapshots(spark, sf_dir, fan=False)
-    return corpus_diff(old, new)
+    return curation.corpus_diff(*_diff_snapshots(spark, sf_dir))
 
 
 ORACLE_CORPUS_DIFF = """
@@ -2216,12 +2176,7 @@ def q_curate_incremental(spark, sf_dir):
     docs are Bloom-prefiltered against the unchanged corpus and curated
     as a delta ('fresh') — O(delta) refresh, the composition of
     corpus_diff + bloom_dedup + curate."""
-    from ocr_table_extractor_to_csv_spark.operators.curation import (
-        curate_incremental,
-    )
-
-    old, new = _diff_snapshots(spark, sf_dir, fan=True)
-    return curate_incremental(old, new)
+    return curation.curate_incremental(*_diff_snapshots(spark, sf_dir, fan=True))
 
 
 def _oracle_curate_incremental() -> str:
@@ -2267,22 +2222,21 @@ ORDER BY doc_id
 
 def q_bpe_train(spark, sf_dir):
     """Distributed BPE merge training: one corpus pass builds the bounded
-    word-frequency vocabulary; each of the 6 merges is a pair-count
-    aggregation over the vocab + a one-row argmax collect + a map-only
+    word-frequency vocabulary; each of the ``BPE_MERGES`` merges is a
+    pair-count aggregation over the vocab + a one-row argmax collect + a map-only
     replace — the tokenizer-training artifact of a pretraining pipeline,
     never touching the corpus again after pass 1."""
-    from ocr_table_extractor_to_csv_spark.operators.bpe import bpe_train
-
-    return bpe_train(_docs_f(spark, sf_dir))
+    return bpe.bpe_train(_docs_f(spark, sf_dir))
 
 
-def _oracle_bpe_train(n_merges: int = 6, top_words: int = 5000) -> str:
+def _oracle_bpe_train() -> str:
     """The same greedy algorithm unrolled: v{i} = vocab after i merges,
     p{i} = the i-th winning pair (count DESC, left ASC, right ASC).
     replace() is non-overlapping left-to-right in BOTH engines, and the
     DOUBLE-space delimiter framing (see operators/bpe.py) makes that one
     pass exactly reference BPE's greedy merge scan — rewrites identical.
     """
+    n_merges = bpe.BPE_MERGES
     body = ""
     for i in range(1, n_merges + 1):
         body += f""",
@@ -2306,7 +2260,7 @@ WITH wf AS MATERIALIZED (
   SELECT word, CAST(count(*) AS BIGINT) AS freq
   FROM (SELECT unnest({_TOKS_SQL.strip()}) AS word FROM documents) _w
   WHERE word <> ''
-  GROUP BY word ORDER BY freq DESC, word ASC LIMIT {top_words}
+  GROUP BY word ORDER BY freq DESC, word ASC LIMIT {bpe.BPE_TOP_WORDS}
 ),
 v0 AS MATERIALIZED (
   SELECT '  ' || array_to_string(
@@ -2326,21 +2280,19 @@ def q_token_count_trained(spark, sf_dir):
     learned on the same corpus, applied in rank order as a chain of
     map-only replaces) — the number a pretraining budget actually pays,
     closing the train -> encode -> budget loop."""
-    from ocr_table_extractor_to_csv_spark.operators.bpe import token_count_trained
-
-    return token_count_trained(_docs_f(spark, sf_dir))
+    return bpe.token_count_trained(_docs_f(spark, sf_dir))
 
 
-def _oracle_token_count_trained(n_merges: int = 6, top_words: int = 5000) -> str:
+def _oracle_token_count_trained() -> str:
     """The bpe_train oracle's CTE chain re-used for its p{i} merge rows,
     then the encode: the same replace chain applied per word via scalar
     subqueries on the single-row p{i} CTEs."""
-    train = _oracle_bpe_train(n_merges, top_words)
+    train = _oracle_bpe_train()
     # keep everything up to the final SELECT (the WITH chain defines
     # wf/v0/p1..pk/v1..vk); splice our encode CTEs after the last v{k}
     head, _, _tail = train.partition("\nSELECT CAST(rank AS INT)")
     enc = "spaced"
-    for i in range(1, n_merges + 1):
+    for i in range(1, bpe.BPE_MERGES + 1):
         # coalesce to a chr(0) needle: if the vocab fully merged before
         # rank i, p{i} is EMPTY and the scalar subqueries are NULL — a
         # bare replace would NULL-poison the whole chain; replacing a NUL
@@ -2384,23 +2336,18 @@ def q_url_dedup(spark, sf_dir):
     the cheapest dedup in a web pipeline, run before any content pass.
     The documents table carries no URL, so a deterministic synthetic one
     is attached from md5(doc_id) bits (the oracle reproduces the bytes)."""
-    from ocr_table_extractor_to_csv_spark.operators.weburl import (
-        url_dedup,
-        with_synth_url,
-    )
-
-    return url_dedup(with_synth_url(_docs(spark, sf_dir)))
+    return weburl.url_dedup(weburl.with_synth_url(_docs(spark, sf_dir)))
 
 
 # the synth-URL + canonicalization chain (DuckDB twin of weburl.with_synth_url
 # + weburl.canonicalize_url), reused by ORACLE_URL_DEDUP and the pipeline-v2
 # oracle's pass-0 keeper CTEs
-_URL_CANON_CTES = """raw AS (
+_URL_CANON_CTES = f"""raw AS (
   SELECT doc_id,
          CAST('0x' || substr(md5('url:' || doc_id), 1, 2) AS INT) AS b,
          source || '.example.com' AS host,
-         CAST(doc_id % 13 AS VARCHAR) AS slot,
-         CAST(doc_id % 7 AS VARCHAR) AS frag
+         CAST(doc_id % {weburl.SYNTH_URL_SLOTS} AS VARCHAR) AS slot,
+         CAST(doc_id % {weburl.SYNTH_URL_FRAGS} AS VARCHAR) AS frag
   FROM documents
 ), u AS (
   SELECT doc_id,
@@ -2602,6 +2549,10 @@ def q_gopher_rules(spark, sf_dir):
     )
 
 
+# the textstats.GOPHER_<NAME> values by <NAME>
+_G = {k[len("GOPHER_"):]: v for k, v in vars(textstats).items() if k.startswith("GOPHER_")}
+_WORDS_OK = f"n_words >= {_G['MIN_WORDS']} AND n_words <= {_G['MAX_WORDS']}"
+_MEAN_OK = f"mean_len >= {_G['MIN_MEAN_WORD_LEN']} AND mean_len <= {_G['MAX_MEAN_WORD_LEN']}"
 ORACLE_GOPHER_RULES = f"""
 WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS ts FROM documents),
 s AS (
@@ -2635,17 +2586,17 @@ SELECT doc_id, n_words,
   round(ell, 5) AS ellipsis_line_ratio,
   round(alpha, 5) AS alpha_word_ratio,
   stop_hits,
-  CAST(n_words >= 50 AND n_words <= 100000 AS INT) AS word_count_ok,
-  CAST(mean_len >= 3.0 AND mean_len <= 10.0 AS INT) AS mean_len_ok,
-  CAST(sym <= 0.1 AS INT) AS symbol_ok,
-  CAST(bul <= 0.9 AS INT) AS bullet_ok,
-  CAST(ell <= 0.3 AS INT) AS ellipsis_ok,
-  CAST(alpha >= 0.8 AS INT) AS alpha_ok,
-  CAST(stop_hits >= 2 AS INT) AS stop_ok,
-  CAST(n_words >= 50 AND n_words <= 100000
-       AND mean_len >= 3.0 AND mean_len <= 10.0
-       AND sym <= 0.1 AND bul <= 0.9 AND ell <= 0.3
-       AND alpha >= 0.8 AND stop_hits >= 2 AS INT) AS keep
+  CAST({_WORDS_OK} AS INT) AS word_count_ok,
+  CAST({_MEAN_OK} AS INT) AS mean_len_ok,
+  CAST(sym <= {_G['MAX_SYMBOL_RATIO']} AS INT) AS symbol_ok,
+  CAST(bul <= {_G['MAX_BULLET_LINE_RATIO']} AS INT) AS bullet_ok,
+  CAST(ell <= {_G['MAX_ELLIPSIS_LINE_RATIO']} AS INT) AS ellipsis_ok,
+  CAST(alpha >= {_G['MIN_ALPHA_WORD_RATIO']} AS INT) AS alpha_ok,
+  CAST(stop_hits >= {_G['MIN_STOP_HITS']} AS INT) AS stop_ok,
+  CAST({_WORDS_OK}
+       AND {_MEAN_OK}
+       AND sym <= {_G['MAX_SYMBOL_RATIO']} AND bul <= {_G['MAX_BULLET_LINE_RATIO']} AND ell <= {_G['MAX_ELLIPSIS_LINE_RATIO']}
+       AND alpha >= {_G['MIN_ALPHA_WORD_RATIO']} AND stop_hits >= {_G['MIN_STOP_HITS']} AS INT) AS keep
 FROM s2
 """
 
@@ -2654,6 +2605,7 @@ FROM s2
 # on the synthetic URL bytes: the utm bit trips max_params=1, the two-digit
 # srcNN hosts trip the 0.1 digit ratio, and two hosts are blocklisted
 _URLF_BLOCKLIST = ["src3.example.com", "src7.example.com"]
+_URLF_MAX_PARAMS, _URLF_MAX_DIGIT_RATIO = 1, 0.1
 _URLF_FLAGS = [
     "host_blocked", "banned_hit", "too_many_params",
     "path_too_deep", "digit_host", "keep",
@@ -2665,16 +2617,11 @@ def q_url_filter(spark, sf_dir):
     substrings, raw-param overload, path-trap depth, digit-heavy hosts —
     the only curation gate costing zero content bytes, so it runs first.
     Synthetic URL column as in url_dedup (oracle reproduces the bytes)."""
-    from ocr_table_extractor_to_csv_spark.operators.weburl import (
-        url_filter,
-        with_synth_url,
-    )
-
-    out = url_filter(
-        with_synth_url(_docs_f(spark, sf_dir)),
+    out = weburl.url_filter(
+        weburl.with_synth_url(_docs_f(spark, sf_dir)),
         blocklist_hosts=_URLF_BLOCKLIST,
-        max_params=1,
-        max_host_digit_ratio=0.1,
+        max_params=_URLF_MAX_PARAMS,
+        max_host_digit_ratio=_URLF_MAX_DIGIT_RATIO,
     )
     keep = [c for c in out.columns if c not in _URLF_FLAGS]
     return out.select(
@@ -2683,6 +2630,7 @@ def q_url_filter(spark, sf_dir):
 
 
 _URLF_BLOCK_SQL = ",".join(f"'{h}'" for h in _URLF_BLOCKLIST)
+_DEPTH = weburl.URL_MAX_PATH_DEPTH
 
 ORACLE_URL_FILTER = f"""
 WITH {_URL_CANON_CTES},
@@ -2700,7 +2648,7 @@ parts2 AS (
       AS path_depth,
     CAST(length(regexp_replace(host, '[^0-9]', '', 'g')) AS DOUBLE)
       / greatest(1, length(host)) AS dr,
-    regexp_matches(lower(url), 'casino|viagra|porn|xxx') AS banned,
+    regexp_matches(lower(url), '{"|".join(weburl.BANNED_URL_WORDS)}') AS banned,
     host IN ({_URLF_BLOCK_SQL}) AS blocked
   FROM parts2
 )
@@ -2708,29 +2656,25 @@ SELECT doc_id, host, n_params, path_depth,
   round(dr, 5) AS host_digit_ratio,
   CAST(blocked AS INT) AS host_blocked,
   CAST(banned AS INT) AS banned_hit,
-  CAST(n_params > 1 AS INT) AS too_many_params,
-  CAST(path_depth > 8 AS INT) AS path_too_deep,
-  CAST(dr > 0.1 AS INT) AS digit_host,
-  CAST(NOT (blocked OR banned OR n_params > 1 OR path_depth > 8
-            OR dr > 0.1) AS INT) AS keep
+  CAST(n_params > {_URLF_MAX_PARAMS} AS INT) AS too_many_params,
+  CAST(path_depth > {_DEPTH} AS INT) AS path_too_deep,
+  CAST(dr > {_URLF_MAX_DIGIT_RATIO} AS INT) AS digit_host,
+  CAST(NOT (blocked OR banned OR n_params > {_URLF_MAX_PARAMS} OR path_depth > {_DEPTH}
+            OR dr > {_URLF_MAX_DIGIT_RATIO}) AS INT) AS keep
 FROM f
 """
 
 
-def q_domain_cap(spark, sf_dir):
-    """Per-domain document cap (anti-SEO-farm): exact min-10-doc_ids per
-    canonical host via the salted two-phase rank — phase 1 windows on
-    (host, salt) so no task sorts a whole viral domain, phase 2 re-ranks
-    the <= salt_mod x cap survivors.  Oracle is the plain ROW_NUMBER
-    formulation the two-phase shape provably equals."""
-    from ocr_table_extractor_to_csv_spark.operators.weburl import (
-        domain_cap,
-        with_synth_url,
-    )
+_DOMAIN_CAP = 10
 
-    return domain_cap(
-        with_synth_url(_docs(spark, sf_dir)), cap=10, salt_mod=4
-    )
+
+def q_domain_cap(spark, sf_dir):
+    """Per-domain document cap (anti-SEO-farm): exact min-``_DOMAIN_CAP``
+    doc_ids per canonical host via the salted two-phase rank — phase 1
+    windows on (host, salt) so no task sorts a whole viral domain, phase 2
+    re-ranks the <= salt_mod x cap survivors.  Oracle is the plain
+    ROW_NUMBER formulation the two-phase shape provably equals."""
+    return weburl.domain_cap(weburl.with_synth_url(_docs(spark, sf_dir)), cap=_DOMAIN_CAP, salt_mod=4)
 
 
 ORACLE_DOMAIN_CAP = f"""
@@ -2746,7 +2690,7 @@ h AS (
   FROM h
 )
 SELECT host, doc_id, domain_rank
-FROM r WHERE domain_rank <= 10
+FROM r WHERE domain_rank <= {_DOMAIN_CAP}
 ORDER BY host, domain_rank
 """
 
@@ -2854,29 +2798,28 @@ FROM t
 # GENERATED by unrolling the same iteration the Spark operator runs — one
 # spec, two engines (normalize_text convention).
 
-_PR_HOSTS = 97
-_PR_ITERS = 3
-
 
 def q_pagerank(spark, sf_dir):
     """Host-graph centrality for domain-level quality weighting (CC host
-    ranks): 3 iterations of damped (0.85) fixed-point PageRank over the
-    synthetic host graph.  Each iteration is one equi-join of the tiny
+    ranks): ``PAGERANK_ITERS`` iterations of damped fixed-point PageRank
+    over the synthetic host graph.  Each iteration is one equi-join of the tiny
     rank table against the edge table + one map-side-partial groupBy —
     the 100 TB shape (hosts ~1e8 rows vs edges ~1e10; AQE broadcasts the
     rank side when it fits)."""
-    edges = graph.host_link_graph(_docs(spark, sf_dir), n_hosts=_PR_HOSTS)
-    return graph.pagerank(edges, iterations=_PR_ITERS, scope=_scope(spark, "pagerank"))
+    edges = graph.host_link_graph(_docs(spark, sf_dir))
+    return graph.pagerank(edges, scope=_scope(spark, "pagerank"))
 
 
 def _oracle_pagerank() -> str:
-    scale = graph.PAGERANK_SCALE
-    n, dn, dd = _PR_HOSTS, 85, 100
+    scale, n, iters = graph.PAGERANK_SCALE, graph.LINK_HOSTS, graph.PAGERANK_ITERS
+    dn, dd = graph.PAGERANK_DAMPING_NUM, graph.PAGERANK_DAMPING_DEN
+    links = "\n  UNION ALL\n  ".join(
+        f"SELECT doc_id % {n} AS src, (doc_id * {mul} + {add}) % {n} AS dst FROM documents"
+        for mul, add in graph.HOST_LINKS
+    )
     sql = f"""
 WITH e0 AS (
-  SELECT doc_id % {n} AS src, (doc_id * 31 + 7) % {n} AS dst FROM documents
-  UNION ALL
-  SELECT doc_id % {n} AS src, (doc_id * 17 + 3) % {n} AS dst FROM documents
+  {links}
 ), ew AS (
   SELECT src, dst, CAST(count(*) AS BIGINT) AS w FROM e0 GROUP BY src, dst
 ), outw AS (
@@ -2889,7 +2832,7 @@ r0 AS (
   SELECT node, CAST({scale} // (SELECT n FROM nn) AS BIGINT) AS rank_fp
   FROM nodes
 )"""
-    for i in range(1, _PR_ITERS + 1):
+    for i in range(1, iters + 1):
         sql += f""", c{i} AS (
   SELECT ew.dst AS node,
     CAST(sum(((r.rank_fp * {dn}) // ({dd} * outw.out_w)) * ew.w)
@@ -2902,7 +2845,7 @@ r0 AS (
       + COALESCE(c{i}.c, 0) AS BIGINT) AS rank_fp
   FROM nodes LEFT JOIN c{i} ON c{i}.node = nodes.node
 )"""
-    return sql + f"\nSELECT node, rank_fp FROM r{_PR_ITERS} ORDER BY node"
+    return sql + f"\nSELECT node, rank_fp FROM r{iters} ORDER BY node"
 
 
 def q_pagerank_weights(spark, sf_dir):
@@ -2912,13 +2855,10 @@ def q_pagerank_weights(spark, sf_dir):
     host key.  The rank table is host-cardinality (tiny vs the corpus),
     so Spark broadcasts it: the corpus never shuffles for this join."""
     docs = _docs(spark, sf_dir)
-    ranks = graph.pagerank(
-        graph.host_link_graph(docs, n_hosts=_PR_HOSTS), iterations=_PR_ITERS,
-        scope=_scope(spark, "pagerank_weights"),
-    )
+    ranks = graph.pagerank(graph.host_link_graph(docs), scope=_scope(spark, "pagerank_weights"))
     return (
         docs.select(
-            "doc_id", (F.col("doc_id") % _PR_HOSTS).alias("host")
+            "doc_id", (F.col("doc_id") % graph.LINK_HOSTS).alias("host")
         )
         .join(
             F.broadcast(ranks.withColumnRenamed("node", "host")), "host"
@@ -2930,8 +2870,8 @@ def q_pagerank_weights(spark, sf_dir):
 def _oracle_pagerank_weights() -> str:
     return f"""
 WITH pr AS MATERIALIZED ({_oracle_pagerank()})
-SELECT doc_id, doc_id % {_PR_HOSTS} AS host, pr.rank_fp
-FROM documents JOIN pr ON pr.node = doc_id % {_PR_HOSTS}
+SELECT doc_id, doc_id % {graph.LINK_HOSTS} AS host, pr.rank_fp
+FROM documents JOIN pr ON pr.node = doc_id % {graph.LINK_HOSTS}
 ORDER BY doc_id
 """
 
@@ -2946,7 +2886,7 @@ ORDER BY doc_id
 _REGISTRY: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str], ...] = (
     ("pagerank", q_pagerank, _oracle_pagerank()),
     ("kmv_distinct", q_kmv_distinct, _oracle_kmv_distinct()),
-    ("cluster_stats", q_cluster_stats, _oracle_cluster_stats()),
+    ("cluster_stats", q_cluster_stats, ORACLE_CLUSTER_STATS),
     ("wet_roundtrip", _roundtrip("wet"), _oracle_roundtrip("wet")),
     ("pagerank_weights", q_pagerank_weights, _oracle_pagerank_weights()),
     ("line_dedup_within", q_line_dedup_within, ORACLE_LINE_DEDUP_WITHIN),
@@ -2956,7 +2896,7 @@ _REGISTRY: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str], ...]
     ("domain_cap", q_domain_cap, ORACLE_DOMAIN_CAP),
     ("substring_dedup", q_substring_dedup, ORACLE_SUBSTRING_DEDUP),
     ("quality_classifier", q_quality_classifier, ORACLE_QUALITY_CLASSIFIER),
-    ("semdedup", q_semdedup, _oracle_semdedup()),
+    ("semdedup", q_semdedup, ORACLE_SEMDEDUP),
     ("mix_sample", q_mix_sample, _oracle_mix_sample()),
     ("pipeline_full_v3", q_pipeline_full_v3, _oracle_pipeline_v3()),
     ("similarity_ivf_q", q_similarity_ivf_q, _oracle_similarity_ivf(refine_q8=IVF_Q8_REFINE)),
@@ -3009,10 +2949,10 @@ _REGISTRY: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str], ...]
     ("lsh_bucket_stats", q_lsh_bucket_stats, ORACLE_LSH_BUCKET_STATS),
     ("dedup_clusters", q_dedup_clusters, _oracle_dedup_clusters()),
     ("simhash", q_simhash, ORACLE_SIMHASH),
-    ("simhash64", q_simhash64, _oracle_simhash_hash(64, "simhash64")),
+    ("simhash64", q_simhash64, _oracle_simhash_hash(dedup.SIMHASH_BITS, "simhash64")),
     ("simhash_pairs", q_simhash_pairs, _oracle_simhash_pairs()),
-    ("simhash_bucket_stats", q_simhash_bucket_stats, _oracle_simhash_bucket_stats()),
-    ("dedup_embedding", q_dedup_embedding, _oracle_dedup_embedding()),
+    ("simhash_bucket_stats", q_simhash_bucket_stats, ORACLE_SIMHASH_BUCKET_STATS),
+    ("dedup_embedding", q_dedup_embedding, ORACLE_DEDUP_EMBEDDING),
     ("similarity_topk", q_similarity_topk, ORACLE_SIMILARITY_TOPK),
 )
 

@@ -132,7 +132,7 @@ def run_extract(
     return committed, dict(observed.get, batch_id=batch_id)
 
 
-def land_warc(spark, warc_dir: str, out: str):
+def land_warc(spark, warc_dir: str, out: str, batch_id: int):
     """Ingest raw WARC segments: land the parsed frame as parquet ONCE
     (the WARC parse pass), then read everything downstream from the
     landing table — the error count scans only the pruned (url, error)
@@ -142,7 +142,8 @@ def land_warc(spark, warc_dir: str, out: str):
     partitions; the landing table is also what you WANT at Common-Crawl
     scale (no downstream job should ever re-parse raw WARC bytes).
     Returns the good-pages frame; error segments are durably recorded in
-    ``<out>_warc_errors``."""
+    ``<out>_warc_errors``, partitioned by ``batch_id`` and overwritten per
+    batch (``write_batch``), so a re-run of the batch records them once."""
     from ocr_table_extractor_to_csv_spark.sources.warc import read_warc
 
     staging = f"{out.rstrip('/')}_warc_landing"
@@ -154,8 +155,9 @@ def land_warc(spark, warc_dir: str, out: str):
     if n_bad:
         print(f"warc: {n_bad} unreadable segment(s) skipped")
         # never a silent drop: the skipped segments are durably recorded
-        bad.select("url", "error").write.mode("append").parquet(
-            f"{out.rstrip('/')}_warc_errors"
+        write_batch(
+            bad.select("url", "error"), batch_id, f"{out.rstrip('/')}_warc_errors",
+            partition_cols=("batch_id",),
         )
     return raw.where(F.col("error").isNull())
 
@@ -189,7 +191,7 @@ def main() -> None:
 
     spark = get_spark(app_name=f"extract-batch-{args.batch_id}")
     if args.warc:
-        pages = land_warc(spark, args.warc, args.out)
+        pages = land_warc(spark, args.warc, args.out, args.batch_id)
     else:
         pages = spark.read.parquet(args.pages)
     if args.lang:

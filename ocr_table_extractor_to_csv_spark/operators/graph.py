@@ -31,6 +31,8 @@ iterations chain in one lineage, which Spark handles fine).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,38 +41,34 @@ from ..plans.scope import RunScope
 PAGERANK_SCALE = 10**12
 PAGERANK_DAMPING_NUM = 85  # damping = 85 / 100
 PAGERANK_DAMPING_DEN = 100
+PAGERANK_ITERS = 3  # damped iterations per pagerank call
+LINK_HOSTS = 97  # hosts of the synthetic link graph
+HOST_LINKS = ((31, 7), (17, 3))  # (mul, add): out-link to (doc_id*mul+add) % hosts
 
 
-def host_link_graph(documents: DataFrame, n_hosts: int = 97) -> DataFrame:
+def host_link_graph(documents: DataFrame) -> DataFrame:
     """Deterministic synthetic host link graph for tests/benchmarks (the
     documents table carries no link data): every doc lives on host
-    ``doc_id % n_hosts`` and emits two out-links, to hosts
-    ``(doc_id*31+7) % n_hosts`` and ``(doc_id*17+3) % n_hosts`` — pure
-    column expressions the SQL oracle reproduces byte-for-byte (the
+    ``doc_id % LINK_HOSTS`` and emits one out-link per ``HOST_LINKS``
+    pair, to host ``(doc_id*mul+add) % LINK_HOSTS`` — pure column
+    expressions the SQL oracle reproduces byte-for-byte (the
     ``with_synth_url`` convention).  Multi-edges are intentional: the
     aggregated edge weight exercises weighted PageRank."""
-    src = (F.col("doc_id") % n_hosts).alias("src")
-    return documents.select(
-        src, ((F.col("doc_id") * 31 + 7) % n_hosts).alias("dst")
-    ).unionByName(
-        documents.select(
-            src, ((F.col("doc_id") * 17 + 3) % n_hosts).alias("dst")
-        )
-    )
+    src = (F.col("doc_id") % LINK_HOSTS).alias("src")
+    links = [
+        documents.select(src, ((F.col("doc_id") * mul + add) % LINK_HOSTS).alias("dst"))
+        for mul, add in HOST_LINKS
+    ]
+    return reduce(DataFrame.unionByName, links)
 
 
-def pagerank(
-    edges: DataFrame,
-    *,
-    scope: RunScope,
-    iterations: int = 3,
-) -> DataFrame:
+def pagerank(edges: DataFrame, *, scope: RunScope) -> DataFrame:
     """Fixed-point damped PageRank over a (src, dst) edge list; returns
     (node, rank_fp) with ``rank_fp`` in units of ``1/scale``
     (``PAGERANK_SCALE``).
 
-    Per iteration: ``share(src) = (rank * damping_num) div
-    (damping_den * out_weight)`` (``PAGERANK_DAMPING_NUM`` /
+    ``PAGERANK_ITERS`` iterations, each: ``share(src) = (rank *
+    damping_num) div (damping_den * out_weight)`` (``PAGERANK_DAMPING_NUM`` /
     ``PAGERANK_DAMPING_DEN``), each edge carries ``share * weight`` to
     its dst, and ``rank' = base + sum(carried)`` with
     ``base = (scale * (damping_den - damping_num)) div (damping_den * n)``.
@@ -86,13 +84,14 @@ def pagerank(
     collects to the driver except the one up-front node count (a single
     scalar, same class as the Bloom bitmap collect).
 
-    ``iterations`` must be a positive Python int (checked).
+    ``PAGERANK_ITERS`` must be a positive Python int (checked).
 
     The edge/node tables and every iteration's rank frame are persisted
     through ``scope`` (see ``plans.scope.RunScope``); intermediate rank
     frames are released as the loop advances, the rest when the scope
     closes.
     """
+    iterations = PAGERANK_ITERS
     if not isinstance(iterations, int) or isinstance(iterations, bool) or iterations <= 0:
         raise ValueError("pagerank iterations must be a positive int")
     ew = edges.groupBy("src", "dst").agg(F.count("*").cast("long").alias("w"))

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 from .dedup import band_rows, bucket_join
 
 SIM_ROUND = 4
+TOPK = 5  # neighbours per query of the top-k paths
 QUERY_MOD = 50  # top-k paths query the vec_id % QUERY_MOD == 0 sample
 LSH_PLANES = 6  # hyperplanes per hash table (bucket = 6 sign bits)
 LSH_TABLES = 8  # hash tables of the embedding sketch
@@ -61,7 +62,7 @@ def _top_k(sim: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
+def brute_force_topk(embeddings: DataFrame, k: int = TOPK) -> DataFrame:
     """Top-k cosine neighbors for vec_id % QUERY_MOD == 0 queries.
 
     Self-match excluded; rank ties broken by neighbor id (deterministic).
@@ -144,17 +145,19 @@ def multi_table_sketch(embeddings: DataFrame, n_tables: int = LSH_TABLES) -> Dat
 IVF_QUANT_SCALE = 1024
 IVF_SAMPLE_MOD = 5
 IVF_TRAIN_ITERS = 2
+IVF_PROBES = 4  # inverted lists an ivf_topk query probes
 
 # the quantizer spec shared by training, assignment, and the DuckDB oracle:
-# qe[i] = floor(e[i] * 1024 + 0.5) — floor (not round) because both engines
-# define floor identically on IEEE doubles, so quantization is bit-exact
-_QUANT_SQL = "transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1024.0D + 0.5D))"
+# qe[i] = floor(e[i] * IVF_QUANT_SCALE + 0.5) — floor (not round) because
+# both engines define floor identically on IEEE doubles, so quantization is
+# bit-exact
+_QUANT_SQL = f"transform(embedding, x -> floor(CAST(x AS DOUBLE) * {float(IVF_QUANT_SCALE)}D + 0.5D))"
 
 
 def _quantize(vec) -> list:
     import math
 
-    return [int(math.floor(float(x) * 1024.0 + 0.5)) for x in vec]
+    return [int(math.floor(float(x) * IVF_QUANT_SCALE + 0.5)) for x in vec]
 
 
 def _collect_train_sample(
@@ -462,9 +465,9 @@ def semdedup(embeddings: DataFrame) -> DataFrame:
 
 def ivf_topk(
     embeddings: DataFrame,
-    k: int = 5,
+    k: int = TOPK,
     n_centroids: int = IVF_CENTROIDS,
-    n_probe: int = 4,
+    n_probe: int = IVF_PROBES,
     refine_q8: int | None = None,
 ) -> DataFrame:
     """IVF-flat ANN: TRAINED coarse quantizer -> inverted lists -> probe +
@@ -639,7 +642,7 @@ def cosine_dup_pairs(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def lsh_topk(embeddings: DataFrame, k: int = 5, n_tables: int = LSH_TABLES) -> DataFrame:
+def lsh_topk(embeddings: DataFrame, k: int = TOPK, n_tables: int = LSH_TABLES) -> DataFrame:
     """ANN: exact cosine re-rank within multi-table hyperplane buckets.
 
     L independent hash tables (decorrelated plane sets) union their

@@ -84,10 +84,14 @@ def canonicalize_url(url: Column) -> Column:
     return F.when(scheme == "", u).otherwise(canon)
 
 
+SYNTH_URL_SLOTS = 13  # with_synth_url: distinct page paths per source host
+SYNTH_URL_FRAGS = 7  # with_synth_url: distinct '#s<n>' fragments
+
+
 def with_synth_url(documents: DataFrame) -> DataFrame:
     """Attach a deterministic synthetic ``url`` column to the documents
     table (which carries no URL), for tests/benchmarks: the canonical
-    identity of a page is ``(source, doc_id % 13)`` and the raw URL
+    identity of a page is ``(source, doc_id % SYNTH_URL_SLOTS)`` and the raw URL
     wraps it in md5-chosen cosmetic noise — scheme/host case, ``:80``,
     ``/index.html``, ``utm_*`` params, a fragment — exactly the variants
     ``canonicalize_url`` must fold.  Pure column expressions (md5 bits),
@@ -102,7 +106,7 @@ def with_synth_url(documents: DataFrame) -> DataFrame:
         ).cast("int")
     )
     host = F.concat(F.col("source"), F.lit(".example.com"))
-    slot = (F.col("doc_id") % 13).cast("string")
+    slot = (F.col("doc_id") % SYNTH_URL_SLOTS).cast("string")
     raw = F.concat(
         F.when(b.bitwiseAND(F.lit(1)) == 1, F.lit("HTTP://")).otherwise(
             F.lit("http://")
@@ -117,7 +121,7 @@ def with_synth_url(documents: DataFrame) -> DataFrame:
         F.when(b.bitwiseAND(F.lit(16)) == 16,
                F.lit("?utm_source=feed&utm_medium=rss")).otherwise(F.lit("")),
         F.when(b.bitwiseAND(F.lit(32)) == 32,
-               F.concat(F.lit("#s"), (F.col("doc_id") % 7).cast("string"))).otherwise(
+               F.concat(F.lit("#s"), (F.col("doc_id") % SYNTH_URL_FRAGS).cast("string"))).otherwise(
             F.lit("")
         ),
     )

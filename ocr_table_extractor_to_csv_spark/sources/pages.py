@@ -119,7 +119,7 @@ def grid_hocr(tokens: List[str]) -> bytes:
 # ---------------------------------------------------------------------------
 # label/value rows (kinds fin, pro): one line per token triple, a label from
 # the first token and two integer values from the other two tokens' lengths
-# (formulas mirrored in the SQL oracles), at x = 100, 800, 1200.
+# (``value_cell``, mirrored in the SQL oracles), at x = 100, 800, 1200.
 #   fin: labels 'l'+token (never numeric); values 1..999 (no thousands
 #     separators -> match the financial numeric regex, no CSV quoting).
 #     Every line carries two numeric spans, so merge_financial_rows never
@@ -133,36 +133,36 @@ def grid_hocr(tokens: List[str]) -> bytes:
 #     lines (row 0 doubling as header), body = rows 1..k-1.
 # ---------------------------------------------------------------------------
 
+LABEL_X = 100
 VALUE_X = (800, 1200)
+# value column w of row r from its token's length n: s = n*a + r*b with
+# (a, b, m) = VALUE_COEFFS[w]; fin and dyn cells are s % m + 1, pro cells
+# PRO_VALUE_OFFSET + s % PRO_VALUE_MOD
+VALUE_COEFFS = ((97, 13, 999), (89, 31, 999))
+PRO_VALUE_OFFSET, PRO_VALUE_MOD = 1000, 9000
 
 
-def fin_value(tok_len: int, r: int, which: int) -> int:
-    if which == 0:
-        return (tok_len * 97 + r * 13) % 999 + 1
-    return (tok_len * 89 + r * 31) % 999 + 1
+def value_cell(tok_len: int, r: int, which: int, pro: bool) -> int:
+    a, b, m = VALUE_COEFFS[which]
+    s = tok_len * a + r * b
+    return PRO_VALUE_OFFSET + s % PRO_VALUE_MOD if pro else s % m + 1
 
 
-def pro_value(tok_len: int, r: int, which: int) -> int:
-    if which == 0:
-        return 1000 + (tok_len * 97 + r * 13) % 9000
-    return 1000 + (tok_len * 89 + r * 31) % 9000
-
-
-def _label_value_hocr(tokens: List[str], label_prefix: str, value) -> bytes:
+def _label_value_hocr(tokens: List[str], label_prefix: str, pro: bool) -> bytes:
     parts = _hocr_open()
     for r in range(len(tokens) // 3):
         label, *vals = tokens[3 * r : 3 * r + 3]
-        cells = [label_prefix + label] + [str(value(len(v), r, w)) for w, v in enumerate(vals)]
-        _grid_row(parts, cells, (100,) + VALUE_X, Y0 + ROW_PITCH * r)
+        values = [str(value_cell(len(v), r, w, pro)) for w, v in enumerate(vals)]
+        _grid_row(parts, [label_prefix + label] + values, (LABEL_X,) + VALUE_X, Y0 + ROW_PITCH * r)
     return _hocr_close(parts)
 
 
 def fin_hocr(tokens: List[str]) -> bytes:
-    return _label_value_hocr(tokens, "l", fin_value)
+    return _label_value_hocr(tokens, "l", False)
 
 
 def pro_hocr(tokens: List[str]) -> bytes:
-    return _label_value_hocr(tokens, "lbl", pro_value)
+    return _label_value_hocr(tokens, "lbl", True)
 
 
 # ---------------------------------------------------------------------------
@@ -179,14 +179,16 @@ def pro_hocr(tokens: List[str]) -> bytes:
 DYN_ANCHORS = (1210, 1540)
 DYN_LEADER_TO = DYN_ANCHORS[0] - 350  # 860
 DYN_DOT_W, DYN_DOT_STEP = 4, 14
+DYN_LEADER_GAP = 10  # px between a label and its first leader dot
 DYN_MAX_ROWS = 12
 
 
 def _dyn_line(parts: List[str], label: str, values: List[str], y: int) -> None:
-    # dots from x = 100 + 8*len(label) + 10 while x + 4 <= 860, step 14
-    lx2 = 100 + CHAR_W * len(label)
-    parts.append(_span(100, y, lx2, label))
-    x = lx2 + 10
+    # dots from x = LABEL_X + CHAR_W*len(label) + DYN_LEADER_GAP while
+    # x + DYN_DOT_W <= DYN_LEADER_TO, step DYN_DOT_STEP
+    lx2 = LABEL_X + CHAR_W * len(label)
+    parts.append(_span(LABEL_X, y, lx2, label))
+    x = lx2 + DYN_LEADER_GAP
     while x + DYN_DOT_W <= DYN_LEADER_TO:
         parts.append(_span(x, y, x + DYN_DOT_W, "."))
         x += DYN_DOT_STEP
@@ -199,7 +201,7 @@ def dyn_hocr(tokens: List[str]) -> bytes:
     parts = _hocr_open()
     _dyn_line(parts, "periodo", ["2021", "2022"], Y0)
     for r in range(min(len(tokens) // 3, DYN_MAX_ROWS)):
-        vals = [str(fin_value(len(tokens[3 * r + 1 + w]), r, w)) for w in range(2)]
+        vals = [str(value_cell(len(tokens[3 * r + 1 + w]), r, w, False)) for w in range(2)]
         _dyn_line(parts, "l" + tokens[3 * r], vals, Y0 + ROW_PITCH * (r + 1))
     return _hocr_close(parts)
 

@@ -11,6 +11,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_table_extractor_to_csv_spark.operators import graph
 from ocr_table_extractor_to_csv_spark.operators.graph import (
     PAGERANK_SCALE,
     host_link_graph,
@@ -41,17 +42,18 @@ def _pyrank(edges, iterations=3, dn=85, dd=100, scale=PAGERANK_SCALE):
     return rank
 
 
-def _run(spark, edges, **kw):
+def _run(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
     with RunScope(spark) as scope:
-        return {r["node"]: r["rank_fp"] for r in pagerank(df, scope=scope, **kw).collect()}
+        return {r["node"]: r["rank_fp"] for r in pagerank(df, scope=scope).collect()}
 
 
-def test_two_node_cycle_is_a_fixed_point(spark):
+def test_two_node_cycle_is_a_fixed_point(spark, monkeypatch):
     # 0->1, 1->0: symmetric, so rank stays exactly scale/2 every iteration
     # (base 75e9 + carried (scale/2*85)//100 = 425e9 = 500e9).
     for iters in (1, 3):
-        got = _run(spark, [(0, 1), (1, 0)], iterations=iters)
+        monkeypatch.setattr(graph, "PAGERANK_ITERS", iters)
+        got = _run(spark, [(0, 1), (1, 0)])
         assert got == {0: PAGERANK_SCALE // 2, 1: PAGERANK_SCALE // 2}
 
 
@@ -59,7 +61,7 @@ def test_star_and_multiedge_match_python_reference_exactly(spark):
     # hub 0 -> {1,2,3}, a doubled edge 1->0 (weight 2 via multi-edge),
     # 2->3; node 3 dangling (its mass drops — spec'd divergence).
     edges = [(0, 1), (0, 2), (0, 3), (1, 0), (1, 0), (2, 3)]
-    got = _run(spark, edges, iterations=3)
+    got = _run(spark, edges)
     assert got == _pyrank(edges, iterations=3)
     # dangling drop: total mass strictly below scale but positive
     assert 0 < sum(got.values()) < PAGERANK_SCALE
@@ -96,9 +98,10 @@ def test_concurrent_calls_share_no_state(spark):
     assert set(persisted().keySet()) <= before
 
 
-def test_host_link_graph_shape(spark):
+def test_host_link_graph_shape(spark, monkeypatch):
+    monkeypatch.setattr(graph, "LINK_HOSTS", 13)
     docs = spark.range(0, 300).select(F.col("id").alias("doc_id"))
-    e = host_link_graph(docs, n_hosts=13)
+    e = host_link_graph(docs)
     assert e.columns == ["src", "dst"]
     assert e.count() == 600  # two out-links per doc, multi-edges kept
     mx = e.agg(F.max("src"), F.max("dst")).first()
@@ -111,16 +114,12 @@ def test_pagerank_empty_graph_raises(spark):
         pagerank(df, scope=scope)
 
 
-def test_pagerank_rejects_non_int_params(spark):
+def test_pagerank_rejects_non_int_params(spark, monkeypatch):
     df = spark.createDataFrame([(0, 1)], "src long, dst long")
-    for kw in (
-        {"iterations": 0},
-        {"iterations": 2.0},
-        {"iterations": True},
-        {"iterations": -1},
-    ):
+    for iters in (0, 2.0, True, -1):
+        monkeypatch.setattr(graph, "PAGERANK_ITERS", iters)
         with pytest.raises(ValueError), RunScope(spark) as scope:
-            pagerank(df, scope=scope, **kw)
+            pagerank(df, scope=scope)
 
 
 def test_pagerank_plan_no_python_no_cartesian(spark):

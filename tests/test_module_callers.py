@@ -10,6 +10,7 @@ for a defaulted parameter no product call site sets (a constant).
 
 import ast
 import difflib
+import importlib
 import re
 from pathlib import Path
 
@@ -229,23 +230,24 @@ def _product_trees() -> list:
     return [(p, ast.parse(p.read_text())) for p in paths]
 
 
-def _package_functions() -> dict:
-    """name -> [(FunctionDef, is_method)] for every function the package
-    defines; a class's ``__init__`` is also listed under the class name."""
+def _option_functions() -> dict:
+    """name -> [(FunctionDef, is_method, path)] for every function the
+    package or ``__spark_entry__.py`` defines, nested ones included; a
+    class's ``__init__`` is also listed under the class name."""
     found: dict = {}
-    for path in (ROOT / PKG).rglob("*.py"):
+    for path in [*(ROOT / PKG).rglob("*.py"), ROOT / "__spark_entry__.py"]:
         tree = ast.parse(path.read_text())
         for cls in ast.walk(tree):
             if isinstance(cls, ast.ClassDef):
                 for fn in cls.body:
                     if isinstance(fn, ast.FunctionDef):
-                        found.setdefault(fn.name, []).append((fn, True))
+                        found.setdefault(fn.name, []).append((fn, True, path))
                         if fn.name == "__init__":
-                            found.setdefault(cls.name, []).append((fn, True))
-        methods = {id(fn) for fns in found.values() for fn, _ in fns}
+                            found.setdefault(cls.name, []).append((fn, True, path))
+        methods = {id(fn) for fns in found.values() for fn, _, _ in fns}
         for fn in ast.walk(tree):
             if isinstance(fn, ast.FunctionDef) and id(fn) not in methods:
-                found.setdefault(fn.name, []).append((fn, False))
+                found.setdefault(fn.name, []).append((fn, False, path))
     return found
 
 
@@ -257,28 +259,66 @@ def _defaults(fn: ast.FunctionDef) -> dict:
     return out
 
 
-def _is_default(value: ast.expr, default: ast.expr) -> bool:
+_CONST_NODES = (
+    ast.Constant, ast.Name, ast.Attribute, ast.UnaryOp, ast.BinOp, ast.Tuple,
+    ast.Load, ast.operator, ast.unaryop,
+)
+
+
+def _globals_of(path: Path) -> dict:
+    """The module-level names of the product file ``path``, as imported."""
+    return vars(importlib.import_module(_name(path)))
+
+
+def _value(node: ast.expr, env: dict):
+    """``node``'s value when it is built only from literals, operators and
+    names or attributes that ``env`` (a module's globals) binds; else
+    ``None`` paired with False."""
+    if all(isinstance(n, _CONST_NODES) for n in ast.walk(node)):
+        try:
+            return eval(compile(ast.Expression(node), "<option>", "eval"), dict(env)), True
+        except (NameError, AttributeError):  # a local name, not a module constant
+            pass
+    return None, False
+
+
+def _is_default(value: ast.expr, value_env: dict, default: ast.expr, default_env: dict) -> bool:
+    """Whether a call passes the default's VALUE: names and attributes are
+    resolved to the module constants they denote, so passing a constant
+    equal to the default does not count as setting the option."""
+    v, v_known = _value(value, value_env)
+    d, d_known = _value(default, default_env)
+    if v_known and d_known:
+        return type(v) is type(d) and v == d
     return ast.dump(value) == ast.dump(default)
 
 
 def test_every_option_is_set_by_a_product_caller():
-    """A defaulted parameter of a package function that product code calls
-    must be passed a non-default value at some product call site (the
-    package, ``jobs/``, ``tools/``, ``__spark_entry__.py``, ``bench.py``):
-    a value only the default ever takes is a module constant, not an
-    option.  Calls resolve by name, so a same-named call anywhere counts;
+    """A defaulted parameter of a package or ``__spark_entry__.py`` function
+    that product code calls must be passed a non-default value at some
+    product call site (the package, ``jobs/``, ``tools/``,
+    ``__spark_entry__.py``, ``bench.py``): a value only the default ever
+    takes is a module constant, not an option.  Values are compared, not
+    spellings: a module constant passed where it equals the default sets
+    nothing.  Calls resolve by name, so a same-named call anywhere counts;
     ``*args``/``**kwargs`` count as setting everything they could reach."""
-    functions = _package_functions()
+    functions = _option_functions()
     called, passed = set(), set()
-    for _path, tree in _product_trees():
+    for path, tree in _product_trees():
+        env = _globals_of(path)
         for call in ast.walk(tree):
             if not isinstance(call, ast.Call):
                 continue
             f = call.func
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            for fn, is_method in functions.get(name, []):
+            for fn, is_method, fn_path in functions.get(name, []):
                 called.add(fn)
                 dfl = _defaults(fn)
+                fn_env = _globals_of(fn_path)
+
+                def is_default(arg, param):
+                    return _is_default(arg, env, dfl[param], fn_env)
+
                 pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
                 if is_method and pos and pos[0] in ("self", "cls"):
                     pos = pos[1:]
@@ -286,12 +326,12 @@ def test_every_option_is_set_by_a_product_caller():
                     if isinstance(arg, ast.Starred):
                         passed.update((fn, p) for p in pos[i:])
                         break
-                    if i < len(pos) and pos[i] in dfl and not _is_default(arg, dfl[pos[i]]):
+                    if i < len(pos) and pos[i] in dfl and not is_default(arg, pos[i]):
                         passed.add((fn, pos[i]))
                 for kw in call.keywords:
                     if kw.arg is None:
                         passed.update((fn, p) for p in dfl)
-                    elif kw.arg in dfl and not _is_default(kw.value, dfl[kw.arg]):
+                    elif kw.arg in dfl and not is_default(kw.value, kw.arg):
                         passed.add((fn, kw.arg))
     unset = sorted(
         f"{fn.name}({p}=...) line {fn.lineno}"

@@ -249,7 +249,7 @@ def test_simhash64_exact_recall_vs_brute_force(spark):
     }
     got = {
         (r.id_a, r.id_b): r.hamming
-        for r in dedup.simhash_pairs(docs, bits=64).collect()
+        for r in dedup.simhash_pairs(docs).collect()
     }
     assert got == want
     # 64-bit hashes actually use the top word (sign bit reachable)
@@ -262,7 +262,7 @@ def test_simhash_bucket_stats_accounts_for_all_docs(spark, monkeypatch):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     n = docs.count()
     monkeypatch.setattr(dedup, "SIMHASH_MAX_BUCKET", 4)
-    rows = dedup.simhash_bucket_stats(docs, bits=64).collect()
+    rows = dedup.simhash_bucket_stats(docs).collect()
     assert len(rows) == 4
     for r in rows:
         assert r.n_docs == n

@@ -1,8 +1,18 @@
 """Pre-verify the driver's correctness gate: each queries() entry must match
 its oracle_sql() twin on the sf0.01 test tables (row count + schema-ish +
 value multiset).  This is the same comparison the driver runs, done locally
-so regressions never reach CORRECTNESS_r{N}.json."""
+so regressions never reach CORRECTNESS_r{N}.json.
 
+An oracle must also read every value it shares with its query from the
+package constant the query reads, so that a constant changed alone moves
+both sides: ``test_every_constant_moves_an_oracle`` perturbs each numeric
+package constant and requires some ``oracle_sql()`` string to change, and
+``test_parity_under_a_moved_constant`` re-runs three parity checks with a
+constant moved."""
+
+import ast
+import importlib
+import importlib.util
 import math
 import os
 from pathlib import Path
@@ -11,6 +21,10 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from ocr_table_extractor_to_csv_spark.operators import curation, textstats
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = "ocr_table_extractor_to_csv_spark"
 
 # override with SPARK_GRAFT_ORACLE_SF=/root/testdata/sf0.1 for the 10x sweep
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
@@ -88,16 +102,16 @@ def assert_gate_shape(sdf, name):
     )
 
 
-@pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql().keys()))
-def test_query_matches_oracle(spark, ddb, name):
-    q = entry_mod.queries()[name]
+def assert_parity(spark, ddb, name, q, sql):
+    """Query ``q`` and oracle ``sql`` agree on columns, type families, row
+    count and the normalized value multiset."""
     sdf = q(spark, SF_DIR)
     assert_gate_shape(sdf, name)
     s_rows = [tuple(r) for r in sdf.collect()]
     s_cols = sdf.columns
     s_types = {c: _type_kind(t) for c, t in sdf.dtypes}
 
-    rel = ddb.sql(entry_mod.oracle_sql()[name])
+    rel = ddb.sql(sql)
     d_cols = list(rel.columns)
     d_types = {c: _type_kind(str(t)) for c, t in zip(d_cols, rel.types)}
     d_rows = rel.fetchall()
@@ -113,6 +127,11 @@ def test_query_matches_oracle(spark, ddb, name):
     dn = normalize(d_rows, d_cols)
     mismatches = [(a, b) for a, b in zip(sn, dn) if a != b]
     assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
+
+
+@pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql().keys()))
+def test_query_matches_oracle(spark, ddb, name):
+    assert_parity(spark, ddb, name, entry_mod.queries()[name], entry_mod.oracle_sql()[name])
 
 
 def test_queries_and_oracles_key_identical():
@@ -138,3 +157,134 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"doc_id", "n_rows", "n_cols", "csv_md5", "text_md5"}
+
+
+def _rebuilt_entry():
+    """A fresh execution of ``__spark_entry__.py`` (not the imported module,
+    which keeps the oracles it built at import), so its oracles are built
+    from the package constants as they are now."""
+    spec = importlib.util.spec_from_file_location("_entry_rebuilt", ROOT / "__spark_entry__.py")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+# Package constants no query result depends on, each with its reason (a
+# dotted module names all of that module's constants).  Every other numeric
+# constant must move some oracle_sql() string when it changes.
+_GEOMETRY = (
+    "layout geometry: the synthesized pages sit far from every threshold "
+    "(gutters >= 204 px, row gaps 26 px) and the byte goldens pin it"
+)
+ENGINE_ONLY = {
+    "kernel.boilerplate.MAX_LINK_DENSITY": "link-density cut; the boiler pages' paragraphs hold no links",
+    "kernel.extract.MAX_MODEL_COLUMNS": "transformers column target when none is given; the tf pages give one",
+    "kernel.layouts": _GEOMETRY,
+    "kernel.professional": _GEOMETRY,
+    "operators.curation.DECONTAMINATE_MAX_BROADCAST_SHINGLES": "join strategy (broadcast or shuffle); same rows",
+    "operators.dedup.CC_MAX_ITER": "convergence bound: past it the iteration raises, it never changes a label",
+    "operators.sketches.KMV_SALT_MOD": "skew salt of the two-phase min-k; the same k minima for any salt",
+    "plans.lineage.FAILED_SAMPLE": "manifest failed-url sample; no query reads manifests",
+    "sources.fixtures": "the fixture corpus feeds the byte goldens, not the queries",
+    "sources.pages.TOKEN_H": _GEOMETRY,
+    "sources.pages.ROW_PITCH": _GEOMETRY,
+    "sources.pages.Y0": _GEOMETRY,
+    "sources.pages.ANCHORS": _GEOMETRY,
+    "sources.pages.VALUE_X": _GEOMETRY,
+    "sources.pages.DYN_ANCHORS": (
+        "values center on their anchor wherever it sits; DYN_LEADER_TO, derived "
+        "from the first anchor at import, moves the dyn oracle itself"
+    ),
+    "sources.pages.ARGS_CROP_BBOX": "any box that keeps the grid and cuts the noise row crops the same",
+    "sources.pages.ARGS_NOISE_Y": "the crop drops the noise row at any height above the crop box",
+    "sources.warc.N_SEGMENTS": "segment files per synthesized corpus; the reader yields the same records",
+}
+
+
+def _is_number(x) -> bool:
+    return isinstance(x, (int, float)) and not isinstance(x, bool)
+
+
+def _numeric_leaves(value, key=()):
+    """(key path, number) for every leaf of a numeric module constant: a
+    number, a (nested) tuple of numbers, or a dict whose values are numbers."""
+    if _is_number(value):
+        yield key, value
+    elif isinstance(value, tuple):
+        leaves = [list(_numeric_leaves(v, key + (i,))) for i, v in enumerate(value)]
+        if all(leaves):
+            yield from (leaf for item in leaves for leaf in item)
+    elif isinstance(value, dict) and value and all(map(_is_number, value.values())):
+        yield from ((key + (k,), v) for k, v in value.items())
+
+
+def _replace(value, key, new):
+    if not key:
+        return new
+    if isinstance(value, tuple):
+        return tuple(_replace(v, key[1:], new) if i == key[0] else v for i, v in enumerate(value))
+    return {k: _replace(v, key[1:], new) if k == key[0] else v for k, v in value.items()}
+
+
+def _package_constants():
+    """(module, dotted name, constant name) for every module-level constant
+    (an upper-case name, tuple targets included) the package assigns."""
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        dotted = ".".join(path.relative_to(ROOT / PKG).with_suffix("").parts)
+        module = importlib.import_module(f"{PKG}.{dotted}".removesuffix(".__init__"))
+        for node in ast.parse(path.read_text()).body:
+            targets = node.targets if isinstance(node, ast.Assign) else (
+                [node.target] if isinstance(node, ast.AnnAssign) else []
+            )
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and n.id.lstrip("_").isupper():
+                        yield module, dotted, n.id
+
+
+def test_every_constant_moves_an_oracle(monkeypatch):
+    """Changing any numeric package constant (each int/float leaf, also in a
+    tuple or dict constant such as ``SAMPLE_RATES``) changes at least one
+    ``oracle_sql()`` string, unless ``ENGINE_ONLY`` names it with a reason;
+    an ``ENGINE_ONLY`` constant must move none."""
+    base = _rebuilt_entry().oracle_sql()
+    unmoved, exempt_but_moved, seen = [], [], set()
+    for module, dotted, name in _package_constants():
+        value = getattr(module, name)
+        exempt = dotted in ENGINE_ONLY or f"{dotted}.{name}" in ENGINE_ONLY
+        for key, x in _numeric_leaves(value):
+            seen.update({dotted, f"{dotted}.{name}"})
+            new = x + 1 if isinstance(x, int) else x + 0.125
+            with monkeypatch.context() as m:
+                m.setattr(module, name, _replace(value, key, new))
+                moved = _rebuilt_entry().oracle_sql() != base
+            label = f"{dotted}.{name}" + "".join(f"[{k!r}]" for k in key)
+            if moved and exempt:
+                exempt_but_moved.append(label)
+            elif not moved and not exempt:
+                unmoved.append(label)
+    assert sorted(set(ENGINE_ONLY) - seen) == [], "ENGINE_ONLY names no numeric constant"
+    assert exempt_but_moved == [], "ENGINE_ONLY constants that an oracle reads"
+    assert unmoved == [], "constants no oracle reads"
+
+
+@pytest.mark.parametrize(
+    "name, module, const, value",
+    [
+        ("gopher_rules", textstats, "GOPHER_MIN_WORDS", 40),
+        ("pack_sequences", curation, "PACK_BUDGET", 1000),
+        ("decontaminate", curation, "DECONTAMINATE_EVAL_MOD", 89),
+    ],
+)
+def test_parity_under_a_moved_constant(spark, ddb, monkeypatch, name, module, const, value):
+    """A constant the query reads on the driver, moved alone, moves its
+    oracle with it: parity holds at the new value."""
+    monkeypatch.setattr(module, const, value)
+    entry = _rebuilt_entry()
+    try:
+        sql = entry.oracle_sql()[name]
+        assert sql != entry_mod.oracle_sql()[name], f"{name}: the oracle ignores {const}"
+        assert_parity(spark, ddb, name, entry.queries()[name], sql)
+    finally:
+        for scope in entry._SCOPES.values():
+            scope.close()

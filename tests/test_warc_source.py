@@ -125,8 +125,9 @@ def test_warc_through_extract_job_resume_path(spark, tmp_path):
 
 def test_extract_job_warc_landing(spark, tmp_path):
     """The --warc ingest path: one WARC parse lands a parquet staging
-    table, error segments are durably recorded, extraction reads the
-    landing — never the raw bytes twice."""
+    table, error segments are durably recorded once per batch (a re-run
+    of the batch replaces them), extraction reads the landing — never the
+    raw bytes twice."""
     from jobs.extract_job import land_warc, run_extract
 
     docs = _docs()
@@ -136,11 +137,12 @@ def test_extract_job_warc_landing(spark, tmp_path):
     (d / "broken.warc").write_bytes(b"NOT A WARC FILE")
     out = str(tmp_path / "out")
 
-    pages = land_warc(spark, str(d), out)
+    for _ in range(2):
+        pages = land_warc(spark, str(d), out, batch_id=0)
     landing = spark.read.parquet(f"{out}_warc_landing")
     assert landing.count() == len(docs) + 1  # 2 pages + 1 error row
-    errs = spark.read.parquet(f"{out}_warc_errors")
-    assert errs.count() == 1 and "broken" in errs.collect()[0].url
+    errs = spark.read.parquet(f"{out}_warc_errors").collect()
+    assert len(errs) == 1 and "broken" in errs[0].url and errs[0].batch_id == 0
 
     run_extract(
         spark, pages.select("url", "html"), out=out,
