@@ -162,6 +162,10 @@ _TOKS_GRID_SQL = f"""
 _CRLF = "chr(13)||chr(10)"
 
 
+def _eligible(kind: str) -> str:  # SQL over ts: the document has a ``kind`` page
+    return f"len(ts) >= {P.KINDS[kind][1]}"
+
+
 def _rows_oracle(where, k, line, n_rows, csv, n_cols, head="", num=False) -> str:
     """One grid-page oracle over ``toks``: the documents whose tokens pass
     ``where`` get ``k`` lines ``line`` (SQL over the row index r and the
@@ -213,11 +217,15 @@ def _dots_sql(label_len: str) -> str:
 
 
 # the grid oracles: ts[i] is the i-th token, r the row index
-ORACLE_GRID4 = _rows_oracle(
-    "len(ts) >= 4", "len(ts) // 4",
-    "ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4]",
-    "total - 1", f"body || {_CRLF}", 4,
-)
+def _grid4_oracle(kind: str) -> str:
+    return _rows_oracle(
+        _eligible(kind), "len(ts) // 4",
+        "ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4]",
+        "total - 1", f"body || {_CRLF}", 4,
+    )
+
+
+ORACLE_GRID4 = _grid4_oracle("doc")
 
 
 def q_extract_fin_grid(spark, sf_dir):
@@ -225,7 +233,7 @@ def q_extract_fin_grid(spark, sf_dir):
 
 
 ORACLE_FIN_GRID = _rows_oracle(
-    "len(ts) >= 3", "len(ts) // 3", "'l' || ts[3*r+1]" + _values_sql(False),
+    _eligible("fin"), "len(ts) // 3", "'l' || ts[3*r+1]" + _values_sql(False),
     "total", f"'Cuenta,Valor_1,Valor_2' || {_CRLF} || body || {_CRLF}", 3,
 )
 
@@ -234,11 +242,12 @@ def q_extract_dyn_grid(spark, sf_dir):
     return _extract_kinds(_docs(spark, sf_dir), ["dyn"]).select(*_EXTRACT_COLS, "num_md5")
 
 
+_DYN_LABEL, _DYN_YEARS = P.DYN_HEADER[0], ",".join(P.DYN_HEADER[1])
 ORACLE_DYN_GRID = _rows_oracle(
-    "len(ts) // 3 >= 6", f"least(len(ts) // 3, {P.DYN_MAX_ROWS})",
+    _eligible("dyn"), f"least(len(ts) // 3, {P.DYN_MAX_ROWS})",
     "'l' || ts[3*r+1] || " + _dots_sql("(1 + length(ts[3*r+1]))") + _values_sql(False),
-    "total", f"'Cuenta,2021,2022' || {_CRLF} || body || {_CRLF}", 3,
-    head=f"'periodo' || {_dots_sql('7')} || ',2021,2022'", num=True,
+    "total", f"'Cuenta,{_DYN_YEARS}' || {_CRLF} || body || {_CRLF}", 3,
+    head=f"'{_DYN_LABEL}' || {_dots_sql(str(len(_DYN_LABEL)))} || ',{_DYN_YEARS}'", num=True,
 )
 
 
@@ -260,7 +269,7 @@ def q_dataset_grid(spark, sf_dir):
 
 ORACLE_DATASET_GRID = f"""
 WITH toks AS ({_TOKS_GRID_SQL}), ok AS (
-  SELECT doc_id, ts, CAST((len(ts) // 4) * 4 AS INT) AS n FROM toks WHERE len(ts) >= 4
+  SELECT doc_id, ts, CAST((len(ts) // 4) * 4 AS INT) AS n FROM toks WHERE {_eligible("doc")}
 )
 SELECT doc_id,
        n AS n_words,
@@ -282,7 +291,7 @@ def q_extract_fixture_professional(spark, sf_dir):
 
 
 ORACLE_PRO_GRID = _rows_oracle(
-    "len(ts) // 3 >= 2", "len(ts) // 3", "'lbl' || ts[3*r+1]" + _values_sql(True),
+    _eligible("pro"), "len(ts) // 3", "'lbl' || ts[3*r+1]" + _values_sql(True),
     "total - 1", f"body || {_CRLF}", 3,
 )
 
@@ -295,7 +304,7 @@ _PARA = P.BOILER_PARA_TOKENS
 ORACLE_BOILER = f"""
 WITH toks AS ({_TOKS_GRID_SQL}),
 ok AS (
-  SELECT doc_id, ts FROM toks WHERE len(ts) >= {2 * P.BOILER_TABLE_ROWS}
+  SELECT doc_id, ts FROM toks WHERE {_eligible("boiler")}
 ), paras AS (
   SELECT doc_id, i, array_to_string(ts[{_PARA}*i+1 : {_PARA}*i+{_PARA}], ' ') AS para
   FROM ok, UNNEST(generate_series(0, CAST(len(ts) // {_PARA} - 1 AS INT))) AS u(i)
@@ -352,8 +361,9 @@ def _oracle_mixed_dispatch() -> str:
 
 
 def q_extract_transformers(spark, sf_dir):
-    """The transformers layout's heuristic path, value-checked by
-    ORACLE_GRID4; the fallback cascade (spatial grid) stays pytest-pinned."""
+    """The transformers layout's heuristic path, value-checked by the
+    generic grid oracle; the fallback cascade (spatial grid) stays
+    pytest-pinned."""
     return _extract_kinds(_docs(spark, sf_dir), ["tf"]).select(*_EXTRACT_COLS)
 
 
@@ -370,35 +380,34 @@ def q_extract_args_dispatch(spark, sf_dir):
 ORACLE_ARGS_DISPATCH = f"""
 WITH toks AS ({_TOKS_GRID_SQL}),
 ok AS (
-  SELECT doc_id, ts, CAST(len(ts) // 4 AS BIGINT) AS nrows
-  FROM toks WHERE len(ts) >= 4
+  SELECT doc_id, ts, CAST(len(ts) // 4 AS BIGINT) AS nrows FROM toks
 ), tok_lines AS (
-  SELECT doc_id, r,
+  SELECT doc_id, ts, r,
          ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4] AS line,
          ts[4*r+1] || ' ' || ts[4*r+2] || ' ' || ts[4*r+3] || ',' || ts[4*r+4] AS line2
   FROM ok, UNNEST(generate_series(0, CAST(nrows - 1 AS INT))) AS u(r)
 ), agg AS (
-  SELECT doc_id,
+  SELECT doc_id, ts,
          string_agg(line, chr(13)||chr(10) ORDER BY r) || chr(13)||chr(10) AS grid_csv,
          string_agg(line2, chr(13)||chr(10) ORDER BY r) || chr(13)||chr(10) AS cols_csv,
          count(*) AS total
-  FROM tok_lines GROUP BY doc_id
+  FROM tok_lines GROUP BY doc_id, ts
 )
 SELECT doc_id, 'crop' AS variant,
        CAST(total - 1 AS INT) AS n_rows, CAST(4 AS INT) AS n_cols,
        md5(grid_csv) AS csv_md5
-FROM agg
+FROM agg WHERE {_eligible("crop")}
 UNION ALL
 SELECT doc_id, 'hdr' AS variant,
        CAST(total + 1 AS INT) AS n_rows, CAST(4 AS INT) AS n_cols,
        md5('cuenta,v1,v2,v3' || chr(13)||chr(10)
            || 'nota,interna,previa,anexo' || chr(13)||chr(10) || grid_csv) AS csv_md5
-FROM agg
+FROM agg WHERE {_eligible("hdr")}
 UNION ALL
 SELECT doc_id, 'cols' AS variant,
        CAST(total - 1 AS INT) AS n_rows, CAST(2 AS INT) AS n_cols,
        md5(cols_csv) AS csv_md5
-FROM agg
+FROM agg WHERE {_eligible("cols")}
 """
 
 
@@ -507,15 +516,15 @@ def q_giants_resume(spark, sf_dir):
         (anti-join honored);
       * giants are classified by a synthetic ``pad`` size column
         (9 chars iff doc_id % 11 == 0, threshold 5) — ``extract_pages``
-        prunes it before the kernel, and the committed ``pass`` partition
-        column records which branch extracted each page, so the small/giant
+        prunes it before the kernel, and the committed ``pass`` column
+        records which branch extracted each page, so the small/giant
         routing is value-checked, not just plan-checked;
       * extraction itself is the grid4 generic pipeline, so n_rows/csv_md5
         reuse the same oracle algebra as ``extract_grid4``.
 
     Repeated invocations overwrite the same keyed scratch dir (seed reset
-    + dynamic partition overwrite), so a bench warm pass is literally a
-    batch re-run — identical committed bytes, never duplicates.
+    + an overwrite of the whole ``batch_id=2`` directory, whatever layout
+    left it), so a warm pass is a batch re-run: the same bytes, no duplicates.
     """
     from jobs.extract_job import run_extract
 
@@ -562,7 +571,7 @@ toks AS (
   SELECT * FROM toks0 WHERE doc_id % 5 <> 0
 ), ok AS (
   SELECT doc_id, ts, CAST(len(ts) // 4 AS BIGINT) AS nrows
-  FROM toks WHERE len(ts) >= 4
+  FROM toks WHERE {_eligible("doc")}
 ), lines AS (
   SELECT doc_id, r,
          ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4] AS line
@@ -2917,7 +2926,7 @@ _REGISTRY: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str], ...]
     ("extract_fixture_boiler", q_extract_fixture_boiler, ORACLE_BOILER),
     ("extract_mixed_dispatch", q_extract_mixed_dispatch, _oracle_mixed_dispatch()),
     ("extract_args_dispatch", q_extract_args_dispatch, ORACLE_ARGS_DISPATCH),
-    ("extract_transformers", q_extract_transformers, ORACLE_GRID4),
+    ("extract_transformers", q_extract_transformers, _grid4_oracle("tf")),
     ("warc_roundtrip", _roundtrip("warc"), _oracle_roundtrip("warc")),
     ("giants_resume", q_giants_resume, ORACLE_GIANTS_RESUME),
     ("bloom_dedup", q_bloom_dedup, _oracle_bloom_dedup()),

@@ -9,19 +9,22 @@ Usage (sandbox; on a real cluster ship via
       --manifests /data/manifests --batch-id 7 \
       [--layout auto] [--giant-threshold 8388608]
 
-Plan (all declarative; Catalyst prunes the page columns not selected):
-  batch's progress landed -> manifests only      -- batch ids are immutable
-  pages LEFT ANTI JOIN progress(done) ON url     -- resume
-    -> isolate_giants, fan_out(giants)            -- skew tail spread
-    -> mapInArrow extraction kernel               -- the only Python stage
-    -> ONE write partitioned by (batch_id, pass)  -- idempotent overwrite,
-                                                     observed: rows, failed,
-                                                     html_bytes
-    -> ONE read of the committed batch, feeding two concurrent writes:
-         append progress rows derived from it
-         overwrite the batch's per-partition lineage manifests
+Plan (all declarative; extraction prunes the page columns it does not read):
+  unless the batch's progress landed (batch ids are immutable):
+    pages LEFT ANTI JOIN progress(done) ON url   -- resume
+      -> isolate_giants, fan_out(giants)          -- skew tail spread
+      -> mapInArrow extraction kernel             -- the only Python stage
+      -> ONE overwrite of <out>/batch_id=<B>/     -- idempotent; `pass`
+                                                     (small/giant) is a
+                                                     column; observed: rows,
+                                                     failed, html_bytes
+  ONE read of the committed batch, feeding concurrent writes:
+    append progress rows derived from it         -- fresh batch only
+    overwrite the batch's per-partition lineage manifests
 Every read-back is given its schema (plans/resume.py): no Spark job is
-spent inferring the schema of a table this job wrote.
+spent inferring the schema of a table this job wrote.  A root written in
+the older two-level batch_id=<B>/pass=<P>/ layout cannot be mixed with
+this one: start a new extraction root.
 """
 
 from __future__ import annotations
@@ -38,7 +41,11 @@ from pyspark.sql import functions as F
 
 from ocr_table_extractor_to_csv_spark.operators.extract import extract_pages
 from ocr_table_extractor_to_csv_spark.plans.lineage import build_manifests
-from ocr_table_extractor_to_csv_spark.plans.partitioning import fan_out, isolate_giants
+from ocr_table_extractor_to_csv_spark.plans.partitioning import (
+    GIANT_THRESHOLD,
+    fan_out,
+    isolate_giants,
+)
 from ocr_table_extractor_to_csv_spark.plans.resume import (
     batch_committed,
     commit_progress,
@@ -59,7 +66,7 @@ def run_extract(
     batch_id: int,
     layout: str = "auto",
     per_row_dispatch: bool = False,
-    giant_threshold: int = 8 * 1024 * 1024,
+    giant_threshold: int = GIANT_THRESHOLD,
     manifests: str | None = None,
     size_col: str = "html",
 ):
@@ -71,12 +78,13 @@ def run_extract(
     limits in rows and in bytes (``session.DEFAULT_CONF``); no session conf
     is changed.
 
-    Each row's ``pass`` (``small``/``giant``) is a partition of the
-    committed ``(batch_id, pass)`` layout, so a re-run replaces rather
-    than duplicates (see plans/resume.py).  ``size_col`` is the column
-    whose byte/char length classifies giants (default the html payload
-    itself); extraction prunes it away, so a caller may attach a
-    precomputed size column without touching the kernel input.
+    The write overwrites the batch's directory ``<out>/batch_id=<B>/``, so
+    a re-run replaces rather than duplicates (see plans/resume.py); each
+    row's ``pass`` column (``small``/``giant``) records which branch
+    extracted it.  ``size_col`` is the column whose byte/char length
+    classifies giants (default the html payload itself); extraction prunes
+    it away, so a caller may attach a precomputed size column without
+    touching the kernel input.
 
     After the data write commits, the batch is read back once
     (``read_committed``); that frame feeds the progress commit and, with
@@ -92,44 +100,42 @@ def run_extract(
     zero rows.  Failed urls are retried under a new batch id.
     """
     progress = read_progress(spark, progress_path)
-    if batch_committed(spark, out, progress, batch_id):
-        committed = read_committed(spark, out, batch_id)
-        if manifests:
-            write_batch(build_manifests(committed), batch_id, manifests, partition_cols=("batch_id",))
-        return committed, {"rows": 0, "failed": 0, "html_bytes": 0, "batch_id": batch_id}
-    pending = pending_pages(pages, progress)
+    fresh = not batch_committed(spark, out, progress, batch_id)
+    facts = {"rows": 0, "failed": 0, "html_bytes": 0}
+    if fresh:
+        small, giants = isolate_giants(pending_pages(pages, progress), giant_threshold, size_col)
 
-    small, giants = isolate_giants(pending, giant_threshold, size_col=size_col)
+        def extract(df, pass_name):
+            return extract_pages(df, layout=layout, per_row_dispatch=per_row_dispatch).withColumn(
+                "pass", F.lit(pass_name)
+            )
 
-    def extract(df, pass_name):
-        return extract_pages(df, layout=layout, per_row_dispatch=per_row_dispatch).withColumn(
-            "pass", F.lit(pass_name)
+        observed = Observation()
+        write_batch(
+            extract(small, "small")
+            .unionByName(extract(fan_out(giants), "giant"))
+            .observe(
+                observed,
+                F.count("*").alias("rows"),
+                F.count("error").alias("failed"),
+                F.coalesce(F.sum("html_bytes"), F.lit(0)).alias("html_bytes"),
+            ),
+            batch_id,
+            out,
         )
-
-    observed = Observation()
-    write_batch(
-        extract(small, "small")
-        .unionByName(extract(fan_out(giants), "giant"))
-        .observe(
-            observed,
-            F.count("*").alias("rows"),
-            F.count("error").alias("failed"),
-            F.coalesce(F.sum("html_bytes"), F.lit(0)).alias("html_bytes"),
-        ),
-        batch_id,
-        out,
-    )
+        facts = observed.get
 
     committed = read_committed(spark, out, batch_id)
     # the branches look commit_progress and write_batch up in this module's
     # globals when they run, so tests and the perfbench tracer can wrap them
-    branches = {"progress": lambda: commit_progress(committed, progress_path)}
+    branches = {}
+    if fresh:
+        branches["progress"] = lambda: commit_progress(committed, progress_path)
     if manifests:
-        branches["manifests"] = lambda: write_batch(
-            build_manifests(committed), batch_id, manifests, partition_cols=("batch_id",)
-        )
-    run_branches("run_extract", branches)
-    return committed, dict(observed.get, batch_id=batch_id)
+        branches["manifests"] = lambda: write_batch(build_manifests(committed), batch_id, manifests)
+    if branches:
+        run_branches("run_extract", branches)
+    return committed, dict(facts, batch_id=batch_id)
 
 
 def land_warc(spark, warc_dir: str, out: str, batch_id: int):
@@ -142,8 +148,8 @@ def land_warc(spark, warc_dir: str, out: str, batch_id: int):
     partitions; the landing table is also what you WANT at Common-Crawl
     scale (no downstream job should ever re-parse raw WARC bytes).
     Returns the good-pages frame; error segments are durably recorded in
-    ``<out>_warc_errors``, partitioned by ``batch_id`` and overwritten per
-    batch (``write_batch``), so a re-run of the batch records them once."""
+    ``<out>_warc_errors/batch_id=<B>/``, overwritten per batch
+    (``write_batch``), so a re-run of the batch records them once."""
     from ocr_table_extractor_to_csv_spark.sources.warc import read_warc
 
     staging = f"{out.rstrip('/')}_warc_landing"
@@ -155,10 +161,7 @@ def land_warc(spark, warc_dir: str, out: str, batch_id: int):
     if n_bad:
         print(f"warc: {n_bad} unreadable segment(s) skipped")
         # never a silent drop: the skipped segments are durably recorded
-        write_batch(
-            bad.select("url", "error"), batch_id, f"{out.rstrip('/')}_warc_errors",
-            partition_cols=("batch_id",),
-        )
+        write_batch(bad.select("url", "error"), batch_id, f"{out.rstrip('/')}_warc_errors")
     return raw.where(F.col("error").isNull())
 
 
@@ -182,7 +185,7 @@ def main() -> None:
         action="store_true",
         help="use the input's layout/args columns instead of --layout",
     )
-    ap.add_argument("--giant-threshold", type=int, default=8 * 1024 * 1024)
+    ap.add_argument("--giant-threshold", type=int, default=GIANT_THRESHOLD)
     ap.add_argument("--lang", default=None, help="optional lang pushdown filter")
     args = ap.parse_args()
     if args.warc and args.lang:
@@ -199,8 +202,6 @@ def main() -> None:
             raise SystemExit("--lang requires a source with a lang column")
         # pushdown filter reaches the parquet scan (check .explain PushedFilters)
         pages = pages.where(F.col("lang") == args.lang)
-    cols = ["url", "html"] + (["layout", "args"] if args.per_row_dispatch else [])
-    pages = pages.select(*cols)
 
     _, facts = run_extract(
         spark,

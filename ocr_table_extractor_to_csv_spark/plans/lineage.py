@@ -10,12 +10,13 @@ any scale because it is just a groupBy:
             max_task_attempt)
 
 The extract job builds them from its one read of the committed batch and
-writes them with ``plans.resume.write_batch`` partitioned by ``batch_id``
-(``<manifests>/batch_id=<B>/``, dynamic partition overwrite), concurrently
-with the progress commit: a re-run of a batch replaces its manifests, so a
-batch is never counted twice, whichever of the two writes a failed run
-completed.  A flat (unpartitioned) manifests directory from an older
-version of the job cannot be mixed with this layout.
+writes them with ``plans.resume.write_batch``, a plain overwrite of
+``<manifests>/batch_id=<B>/`` (on Iceberg, ``overwritePartitions()`` on a
+table partitioned by ``batch_id``), concurrently with the progress commit:
+a re-run of a batch replaces its manifests, so a batch is never counted
+twice, whichever of the two writes a failed run completed.  A flat
+(unpartitioned) manifests directory from an older version of the job
+cannot be mixed with this layout: start a new root.
 
 Invariant checked by tests: sum(n_urls) over a batch's manifests ==
 count(pages the batch committed).

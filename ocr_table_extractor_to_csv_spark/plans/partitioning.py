@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+GIANT_THRESHOLD = 8 * 1024 * 1024  # bytes of a page's size column
+
 
 def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin ``df`` over the session's default parallelism."""
@@ -29,7 +31,7 @@ def fan_out(df: DataFrame) -> DataFrame:
 
 
 def isolate_giants(
-    pages: DataFrame, giant_threshold_bytes: int = 8 * 1024 * 1024, size_col: str = "html"
+    pages: DataFrame, giant_threshold_bytes: int, size_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Split ``pages`` into (small, giant) by the length of ``size_col``."""
     size = F.length(F.col(size_col))

@@ -6,9 +6,9 @@ Batch protocol (exactly-once at the batch granularity, SURVEY.md §4.2):
   1. ``pending = pages LEFT ANTI JOIN progress(status='done') ON url`` —
      Catalyst broadcasts the progress url set when small, sort-merge joins
      otherwise; AQE picks at runtime.
-  2. extract ``pending`` and write ``extracted`` partitioned by ``batch_id``
-     with dynamic partition overwrite — a re-run of a failed batch REPLACES
-     its partition instead of duplicating rows.
+  2. extract ``pending`` and overwrite ``<root>/batch_id=<B>/``
+     (``write_batch``) — a re-run of a failed batch REPLACES all it wrote
+     before; the extraction pass (``small``/``giant``) is a ``pass`` column.
   3. only after the data write commits, read the batch back ONCE
      (``read_committed``) and, from that one frame and concurrently,
      append ``(url, batch_id, status, n_rows, error, ts)`` to ``progress``
@@ -21,10 +21,10 @@ Every read-back of a table this protocol wrote carries its schema
 (``PROGRESS_SCHEMA``, ``COMMITTED_SCHEMA``): the job knows what it wrote,
 and inferring it would cost one footer-reading Spark job per read.
 
-On Iceberg the same protocol maps to ``overwritePartitions()`` + a snapshot
-commit; here the warehouse is parquet directories (no Iceberg runtime jar in
-this sandbox) with identical semantics via the per-write
-``partitionOverwriteMode=dynamic`` option (the session conf is untouched).
+A root in the older two-level ``batch_id=<B>/pass=<P>/`` layout cannot be
+mixed with this one (Spark reports conflicting directory structures):
+start a new extraction root.  On Iceberg the protocol maps to
+``overwritePartitions()`` on a table partitioned by ``batch_id``.
 """
 
 from __future__ import annotations
@@ -53,11 +53,11 @@ PROGRESS_SCHEMA = StructType(
     ]
 )
 
-# the extraction output as committed: partition columns last, as a
-# partitioned parquet read returns them
+# the extraction output as committed: the ``pass`` column, then the
+# ``batch_id`` partition column last, as a partitioned parquet read returns it
 COMMITTED_SCHEMA = StructType(
     EXTRACTED_SCHEMA.fields
-    + [StructField("batch_id", IntegerType()), StructField("pass", StringType())]
+    + [StructField("pass", StringType()), StructField("batch_id", IntegerType())]
 )
 
 
@@ -82,9 +82,9 @@ def read_progress(spark: SparkSession, progress_path: str) -> DataFrame | None:
 def batch_committed(
     spark: SparkSession, out: str, progress: DataFrame | None, batch_id: int
 ) -> bool:
-    """Whether batch ``batch_id`` has committed: its partition exists under
+    """Whether batch ``batch_id`` has committed: its directory exists under
     the extraction root ``out`` and its progress rows have landed.  The
-    partition probe asks the filesystem, so a batch that has not written
+    directory probe asks the filesystem, so a batch that has not written
     yet costs no Spark job; only a re-run of a written batch reads its
     progress rows."""
     if progress is None or not _exists(spark, _batch_dir(out, batch_id)):
@@ -99,44 +99,20 @@ def pending_pages(pages: DataFrame, progress: DataFrame | None) -> DataFrame:
     return pages.join(done, "url", "left_anti")
 
 
-def write_batch(
-    frame: DataFrame,
-    batch_id: int,
-    path: str,
-    partition_cols: tuple[str, ...] = ("batch_id", "pass"),
-) -> None:
-    """Idempotently (re)write a batch's rows of one table.
-
-    Dynamic partition overwrite on ``partition_cols`` (``batch_id`` first)
-    replaces exactly the partitions this write fills, so a re-run of the
-    batch never duplicates its rows.  The extraction output carries a
-    ``pass`` column (``small``/``giant``, see
-    ``jobs/extract_job.run_extract``) and is partitioned
-    ``(batch_id, pass)``; the manifests are partitioned ``(batch_id,)``.
-
-    Layout note: a directory written with a different partition depth (a
-    pre-``pass`` extraction root, a flat manifests table) cannot be mixed
-    with this layout — write new batches to a fresh root (Spark fails
-    loudly with "conflicting directory structures" otherwise).
-    """
-    (
-        frame.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
+def write_batch(frame: DataFrame, batch_id: int, root: str) -> None:
+    """Idempotently (re)write a batch's rows of one table: a re-run of the
+    batch replaces all an earlier run wrote.  Readers of ``root`` get
+    ``batch_id`` from the directory name; an empty frame still leaves the
+    directory, with one schema-only part file."""
+    frame.write.mode("overwrite").parquet(_batch_dir(root, batch_id))
 
 
 def read_committed(spark: SparkSession, path: str, batch_id: int) -> DataFrame:
     """The committed rows of batch ``batch_id`` under the extraction root
-    ``path``.  Only the batch's own partition directory is listed, so the
-    cost does not grow with the number of batches already committed; a
-    batch that committed no rows has no directory and reads empty."""
-    batch_dir = _batch_dir(path, batch_id)
-    if not _exists(spark, batch_dir):
-        return spark.createDataFrame([], COMMITTED_SCHEMA)
-    return spark.read.schema(COMMITTED_SCHEMA).option("basePath", path).parquet(batch_dir)
+    ``path``.  Only the batch's own directory is listed, so the cost does
+    not grow with the number of batches already committed."""
+    reader = spark.read.schema(COMMITTED_SCHEMA).option("basePath", path)
+    return reader.parquet(_batch_dir(path, batch_id))
 
 
 def commit_progress(committed: DataFrame, progress_path: str) -> None:

@@ -170,8 +170,8 @@ def pro_hocr(tokens: List[str]) -> bytes:
 # exactly derivable.  >= 39 leader dots per line keep the per-line P95 gap
 # at 10 (-> merge threshold 12), so the label+dots form one span and each
 # right-aligned value (center exactly on its anchor) its own span; bucket
-# medians land exactly on the anchors; a 'periodo' year line (2021/2022) in
-# the top band names the columns.  At most DYN_MAX_ROWS value lines (the
+# medians land exactly on the anchors; the DYN_HEADER year line in the top
+# band names the columns.  At most DYN_MAX_ROWS value lines (the
 # cap is mirrored in the SQL oracle): dot-leader docs are ~55 tokens/line,
 # so uncapped synthesis would dominate the correctness query.
 # ---------------------------------------------------------------------------
@@ -181,9 +181,10 @@ DYN_LEADER_TO = DYN_ANCHORS[0] - 350  # 860
 DYN_DOT_W, DYN_DOT_STEP = 4, 14
 DYN_LEADER_GAP = 10  # px between a label and its first leader dot
 DYN_MAX_ROWS = 12
+DYN_HEADER = ("periodo", ("2021", "2022"))  # (label, one year per value column)
 
 
-def _dyn_line(parts: List[str], label: str, values: List[str], y: int) -> None:
+def _dyn_line(parts: List[str], label: str, values: Sequence[str], y: int) -> None:
     # dots from x = LABEL_X + CHAR_W*len(label) + DYN_LEADER_GAP while
     # x + DYN_DOT_W <= DYN_LEADER_TO, step DYN_DOT_STEP
     lx2 = LABEL_X + CHAR_W * len(label)
@@ -199,7 +200,7 @@ def _dyn_line(parts: List[str], label: str, values: List[str], y: int) -> None:
 
 def dyn_hocr(tokens: List[str]) -> bytes:
     parts = _hocr_open()
-    _dyn_line(parts, "periodo", ["2021", "2022"], Y0)
+    _dyn_line(parts, *DYN_HEADER, Y0)
     for r in range(min(len(tokens) // 3, DYN_MAX_ROWS)):
         vals = [str(value_cell(len(tokens[3 * r + 1 + w]), r, w, False)) for w in range(2)]
         _dyn_line(parts, "l" + tokens[3 * r], vals, Y0 + ROW_PITCH * (r + 1))

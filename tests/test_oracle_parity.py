@@ -185,6 +185,10 @@ ENGINE_ONLY = {
     "operators.dedup.CC_MAX_ITER": "convergence bound: past it the iteration raises, it never changes a label",
     "operators.sketches.KMV_SALT_MOD": "skew salt of the two-phase min-k; the same k minima for any salt",
     "plans.lineage.FAILED_SAMPLE": "manifest failed-url sample; no query reads manifests",
+    "plans.partitioning.GIANT_THRESHOLD": (
+        "the extract job's default giant cut; giants_resume passes its own, and "
+        "either pass extracts a page to the same bytes"
+    ),
     "sources.fixtures": "the fixture corpus feeds the byte goldens, not the queries",
     "sources.pages.TOKEN_H": _GEOMETRY,
     "sources.pages.ROW_PITCH": _GEOMETRY,
@@ -206,16 +210,16 @@ def _is_number(x) -> bool:
 
 
 def _numeric_leaves(value, key=()):
-    """(key path, number) for every leaf of a numeric module constant: a
-    number, a (nested) tuple of numbers, or a dict whose values are numbers."""
+    """(key path, number) for every numeric leaf of a module constant: the
+    number itself, or each number inside its (nested) tuples and dict
+    values, also next to non-numeric fields (the min-token field of each
+    ``pages.KINDS`` row)."""
     if _is_number(value):
         yield key, value
-    elif isinstance(value, tuple):
-        leaves = [list(_numeric_leaves(v, key + (i,))) for i, v in enumerate(value)]
-        if all(leaves):
-            yield from (leaf for item in leaves for leaf in item)
-    elif isinstance(value, dict) and value and all(map(_is_number, value.values())):
-        yield from ((key + (k,), v) for k, v in value.items())
+    elif isinstance(value, (tuple, dict)):
+        items = value.items() if isinstance(value, dict) else enumerate(value)
+        for k, v in items:
+            yield from _numeric_leaves(v, key + (k,))
 
 
 def _replace(value, key, new):
@@ -244,7 +248,7 @@ def _package_constants():
 
 def test_every_constant_moves_an_oracle(monkeypatch):
     """Changing any numeric package constant (each int/float leaf, also in a
-    tuple or dict constant such as ``SAMPLE_RATES``) changes at least one
+    tuple or dict constant such as ``SAMPLE_RATES`` or ``KINDS``) changes at least one
     ``oracle_sql()`` string, unless ``ENGINE_ONLY`` names it with a reason;
     an ``ENGINE_ONLY`` constant must move none."""
     base = _rebuilt_entry().oracle_sql()

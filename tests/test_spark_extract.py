@@ -4,6 +4,7 @@ lineage manifests must account for every input row."""
 
 import hashlib
 import json
+import re
 import uuid
 from pathlib import Path
 
@@ -153,6 +154,25 @@ def test_malformed_rows_become_error_rows(spark):
     assert (by_url["u6"].n_rows, by_url["u6"].n_cols) == (1, 2)
 
 
+def _fail_first_commit(monkeypatch, message):
+    """Make the job's first progress commit raise ``message`` (a run killed
+    between its data write and its progress commit); returns the list of
+    commit calls."""
+    import jobs.extract_job as ej
+
+    real_commit = ej.commit_progress
+    calls = []
+
+    def commit_fails_once(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError(message)
+        real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(ej, "commit_progress", commit_fails_once)
+    return calls
+
+
 def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path, monkeypatch):
     """Two batches through the job body: batch 1 skips batch 0's urls, and a
     batch 1 that dies between its data write and its progress commit, then
@@ -181,16 +201,7 @@ def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path, monkeypa
 
     # batch 1 over all pages: the first commit fails, the re-run must
     # replace the written data instead of duplicating it
-    real_commit = ej.commit_progress
-    calls = []
-
-    def commit_fails_once(*args, **kwargs):
-        calls.append(args)
-        if len(calls) == 1:
-            raise RuntimeError("killed before the progress commit")
-        real_commit(*args, **kwargs)
-
-    monkeypatch.setattr(ej, "commit_progress", commit_fails_once)
+    calls = _fail_first_commit(monkeypatch, "killed before the progress commit")
     with pytest.raises(RuntimeError, match="killed"):
         run(base, 1)
     run(base, 1)
@@ -208,8 +219,8 @@ def test_resume_anti_join_and_idempotent_commit(spark, pages, tmp_path, monkeypa
 
 def test_one_write_commits_both_passes(spark, pages_dir, tmp_path, monkeypatch):
     """``run_extract`` commits small pages and fanned-out giants in ONE
-    write action, touches no session conf, and routes every giant to
-    ``pass=giant``."""
+    write action, touches no session conf, and marks every giant's row
+    ``pass = 'giant'``."""
     import jobs.extract_job as ej
 
     pages = spark.read.parquet(pages_dir)
@@ -304,22 +315,11 @@ def test_rerun_after_failed_progress_commit_counts_batch_once(
     succeeds.  The error names its branch, and the re-run replaces the
     batch's manifests instead of adding to them, commits each url's
     progress once, and commits the bytes of a clean run."""
-    import jobs.extract_job as ej
-
     pages = spark.read.parquet(pages_dir)
     n = pages.count()
     clean, _ = _run_batch(spark, pages, tmp_path / "clean", 0)
 
-    real_commit = ej.commit_progress
-    calls = []
-
-    def commit_fails_once(*args, **kwargs):
-        calls.append(args)
-        if len(calls) == 1:
-            raise RuntimeError("progress commit lost")
-        real_commit(*args, **kwargs)
-
-    monkeypatch.setattr(ej, "commit_progress", commit_fails_once)
+    calls = _fail_first_commit(monkeypatch, "progress commit lost")
     root = tmp_path / "rerun"
     with pytest.raises(RuntimeError, match="progress commit lost") as err:
         _run_batch(spark, pages, root, 0)
@@ -335,9 +335,54 @@ def test_rerun_after_failed_progress_commit_counts_batch_once(
     assert _content(committed) == _content(clean)
 
 
+def test_rerun_with_a_larger_giant_threshold_commits_each_page_once(
+    spark, pages_dir, tmp_path, monkeypatch
+):
+    """A batch killed after its data write and re-run with a giant
+    threshold no page reaches commits every page once: the re-run replaces
+    the batch's giant rows along with its small ones."""
+    import jobs.extract_job as ej
+
+    pages = spark.read.parquet(pages_dir)
+    n = pages.count()
+    calls = _fail_first_commit(monkeypatch, "killed before the progress commit")
+    with pytest.raises(RuntimeError, match="killed"):
+        _run_batch(spark, pages, tmp_path, 0)
+    committed, facts = ej.run_extract(
+        spark, pages, out=str(tmp_path / "out"), progress_path=str(tmp_path / "progress"),
+        batch_id=0, per_row_dispatch=True, giant_threshold=1 << 30,
+    )
+    assert len(calls) == 2
+    rows = committed.select("url", "pass").collect()
+    assert {r["pass"] for r in rows} == {"small"}
+    assert len(rows) == len({r.url for r in rows}) == n
+    assert read_progress(spark, str(tmp_path / "progress")).count() == n
+    assert facts["rows"] == n
+
+
+def test_data_write_plans_no_sort(spark, pages_dir, tmp_path):
+    """The batch's data write is a plain overwrite of its directory: the
+    planner puts no Sort in front of the written files (a write partitioned
+    by columns would sort by them first)."""
+    _run_batch(spark, spark.read.parquet(pages_dir), tmp_path, 0)
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    # the write command's arguments start with the path it writes
+    out = re.escape(f"file:{tmp_path / 'out'}")
+    writes_out = re.compile(rf"Arguments: {out}[,/]")
+    plans = [
+        plan
+        for plan in (executions.apply(i).physicalPlanDescription() for i in range(executions.size()))
+        if "InsertIntoHadoopFsRelationCommand" in plan and writes_out.search(plan)
+    ]
+    assert len(plans) == 1, "one data write per batch"
+    assert "WriteFiles" in plans[0]
+    assert re.search(r"\bSort\b", plans[0]) is None, plans[0]
+
+
 def test_fully_resumed_batch_commits_nothing(spark, pages_dir, tmp_path):
-    """A batch whose every page is already done writes no partition: it
-    reads back empty, observes zero rows and adds no manifest rows."""
+    """A batch whose every page is already done leaves an empty batch
+    directory (one schema-only part file): it reads back empty, observes
+    zero rows and adds no manifest rows."""
     pages = spark.read.parquet(pages_dir)
     _run_batch(spark, pages, tmp_path, 0)
     committed, facts = _run_batch(spark, pages, tmp_path, 1)
