@@ -97,7 +97,9 @@ def run_extract(
     A batch id is immutable once its progress has landed
     (``batch_committed``): re-running such a batch extracts and appends
     nothing, rewrites its manifests from the committed rows, and reports
-    zero rows.  Failed urls are retried under a new batch id.
+    zero rows; ``pages`` is not read then, so a caller that checked
+    ``batch_committed`` first may pass None.  Failed urls are retried under
+    a new batch id.
     """
     progress = read_progress(spark, progress_path)
     fresh = not batch_committed(spark, out, progress, batch_id)
@@ -194,7 +196,11 @@ def main() -> None:
 
     spark = get_spark(app_name=f"extract-batch-{args.batch_id}")
     if args.warc:
-        pages = land_warc(spark, args.warc, args.out, args.batch_id)
+        # run_extract reads no page of a committed batch: parse no segment
+        done = batch_committed(
+            spark, args.out, read_progress(spark, args.progress), args.batch_id
+        )
+        pages = None if done else land_warc(spark, args.warc, args.out, args.batch_id)
     else:
         pages = spark.read.parquet(args.pages)
     if args.lang:

@@ -21,9 +21,9 @@ from __future__ import annotations
 
 import re
 from typing import List, Optional, Tuple
+from xml.etree.ElementTree import Element
 
 from .export import csv_bytes
-from .hocr import _Node
 
 BLOCK_TAGS = frozenset(
     "p div li h1 h2 h3 h4 h5 h6 blockquote pre article section td th dd dt figcaption".split()
@@ -40,13 +40,12 @@ def _norm(text: str) -> str:
     return _WS_RE.sub(" ", text).strip()
 
 
-def _tag(node: _Node) -> str:
-    # ElementTree may namespace tags as '{uri}tag'
-    t = node.tag
-    return t.rsplit("}", 1)[-1].lower() if isinstance(t, str) else ""
+def _tag(node: Element) -> str:
+    # html.parser lowercases tag names but keeps a '}' in one ('{uri}tag')
+    return node.tag.rsplit("}", 1)[-1]
 
 
-def _link_chars(node: _Node) -> int:
+def _link_chars(node: Element) -> int:
     """Chars of text under the outermost <a> elements at or below ``node``
     (explicit stack: nesting depth is unbounded in lenient HTML)."""
     total = 0
@@ -56,11 +55,11 @@ def _link_chars(node: _Node) -> int:
         if _tag(n) == "a":
             total += len(_norm("".join(n.itertext())))
         else:
-            stack.extend(c for c in n.content if isinstance(c, _Node))
+            stack.extend(n)
     return total
 
 
-def _emit_block(node: _Node, boiler: bool, out: List[Tuple[str, float]]) -> bool:
+def _emit_block(node: Element, boiler: bool, out: List[Tuple[str, float]]) -> bool:
     if _tag(node) in BLOCK_TAGS and not boiler:
         text = _norm("".join(node.itertext()))
         if text:
@@ -69,19 +68,18 @@ def _emit_block(node: _Node, boiler: bool, out: List[Tuple[str, float]]) -> bool
     return False
 
 
-def _collect_blocks(root: _Node, out: List[Tuple[str, float]]) -> None:
+def _collect_blocks(root: Element, out: List[Tuple[str, float]]) -> None:
     """Post-order walk: a node is emitted as a block unless a descendant
     block was, so ancestors don't double-count nested blocks.  An explicit
     stack, not recursion: the lenient parser never auto-closes <p>/<li>/
     <div>, so a page of unclosed tags nests as deep as it has tags."""
     # frame: [node, under a boilerplate container, child iterator, child emitted]
-    stack = [[root, _tag(root) in BOILER_CONTAINERS, iter(root.content), False]]
+    stack = [[root, _tag(root) in BOILER_CONTAINERS, iter(root), False]]
     while stack:
         frame = stack[-1]
         for c in frame[2]:
-            if isinstance(c, _Node):
-                stack.append([c, frame[1] or _tag(c) in BOILER_CONTAINERS, iter(c.content), False])
-                break
+            stack.append([c, frame[1] or _tag(c) in BOILER_CONTAINERS, iter(c), False])
+            break
         else:
             stack.pop()
             emitted = frame[3] or _emit_block(frame[0], frame[1], out)
@@ -89,14 +87,14 @@ def _collect_blocks(root: _Node, out: List[Tuple[str, float]]) -> None:
                 stack[-1][3] = True
 
 
-def extract_main_text(root: _Node) -> str:
+def extract_main_text(root: Element) -> str:
     blocks: List[Tuple[str, float]] = []
     _collect_blocks(root, blocks)
     keep = [t for (t, d) in blocks if len(t) >= MIN_CHARS and d < MAX_LINK_DENSITY]
     return "\n\n".join(keep)
 
 
-def extract_first_table(root: _Node) -> Optional[Tuple[List[str], List[List[str]]]]:
+def extract_first_table(root: Element) -> Optional[Tuple[List[str], List[List[str]]]]:
     """First <table> with >= 2 rows and >= 2 columns -> (header, body)."""
     for node in root.iter():
         if _tag(node) != "table":
@@ -119,7 +117,7 @@ def extract_first_table(root: _Node) -> Optional[Tuple[List[str], List[List[str]
     return None
 
 
-def extract_html_document(root: _Node) -> Tuple[str, bytes, List[str], List[List[str]]]:
+def extract_html_document(root: Element) -> Tuple[str, bytes, List[str], List[List[str]]]:
     """(main_text, csv_bytes, header, body) for a regular HTML page.
     No qualifying table -> 0-byte csv (same convention as an empty grid)."""
     main_text = extract_main_text(root)

@@ -17,7 +17,7 @@ from typing import List, Optional, Sequence, Tuple
 
 from . import boilerplate
 from .export import csv_bytes, csv_bytes_numeric, empty_csv_bytes
-from .hocr import TokenArrays, _Node, parse_dom, parse_html, scan_tokens_from_dom
+from .hocr import HTML_ROOT, TokenArrays, parse_dom, parse_html, scan_tokens_from_dom
 from .lines import Line, build_lines
 from .layouts import (
     assign_dynamic,
@@ -91,7 +91,7 @@ def extract_document(
 
     if layout == "html" or (layout in HOCR_LAYOUTS and not is_hocr):
         # regular web page: boilerplate strip + first-table reconstruction
-        if not isinstance(root, _Node):  # well-formed hOCR parsed as XML
+        if root.tag != HTML_ROOT:  # well-formed hOCR parsed as XML
             root = parse_html(html.decode("utf-8", errors="replace"))
         main_text, csv, header, body = boilerplate.extract_html_document(root)
         return ExtractResult(

@@ -4,14 +4,17 @@ Behavioral parity with the reference scan (parser.py:7-62, structures.py:8-24):
   * XML-first parse, HTML fallback when no ``ocr_page`` node is found
     (parser.py:7-14).  The reference uses BeautifulSoup(lxml-xml / lxml);
     neither bs4 nor lxml ships in this environment, so we use stdlib
-    ``xml.etree.ElementTree`` with a stdlib ``html.parser`` fallback.  For
-    well-formed hOCR (all fixtures + tesseract output) both take the XML
-    branch and produce identical token streams.
+    ``xml.etree.ElementTree`` with a stdlib ``html.parser`` fallback that
+    builds the same ``ET.Element`` tree through ``ET.TreeBuilder``: every
+    reader walks one tree type.  For well-formed hOCR (all fixtures +
+    tesseract output) both take the XML branch and produce identical token
+    streams.
   * Pages are elements whose ``class`` contains ``ocr_page``, enumerated in
     document order starting at 1 (parser.py:28-31).
   * Words: ``class`` contains ``ocrx_word``; bbox from ``title`` via
-    ``bbox (\\d+)\\s+(\\d+)\\s+(\\d+)\\s+(\\d+)`` (structures.py:6-15); words
-    with no bbox or blank text are dropped (parser.py:43-52).
+    ``bbox (\\d+)\\s+(\\d+)\\s+(\\d+)\\s+(\\d+)`` (structures.py:6-15), parsed
+    for words and lines alike by ``parse_title_bbox``; words with no bbox
+    or blank text are dropped (parser.py:43-52).
   * Optional crop: token kept iff fully inside ``table_bbox``
     (structures.py:22-24, parser.py:47-48).
   * line_id: first ``ocr_line`` on the page (document order) whose bbox
@@ -62,10 +65,7 @@ def parse_title_bbox(title: Optional[str]) -> Optional[Tuple[int, int, int, int]
         ):
             return int(parts[0]), int(parts[1]), int(parts[2]), int(parts[3])
     m = BBOX_RE.search(title)
-    if not m:
-        return None
-    a, b, c, d = m.groups()
-    return int(a), int(b), int(c), int(d)
+    return tuple(map(int, m.groups())) if m else None
 
 
 @dataclass
@@ -90,94 +90,72 @@ class TokenArrays:
         return TokenArrays(o, i.copy(), i.copy(), i.copy(), i.copy(), i.copy(), o.copy())
 
 
-# --------------------------------------------------------------------------
-# Minimal DOM for both parse paths: (tag, class, title, id, children, text)
-# --------------------------------------------------------------------------
-
-
-class _Node:
-    """Element node for the HTML-fallback path; ``content`` interleaves text
-    (str) and child nodes in document order so itertext() matches
-    get_text()/lxml text ordering.  Exposes the same (iter / itertext / get)
-    surface as an ElementTree Element so the scan code is parser-agnostic —
-    well-formed hOCR takes the ET path, whose C-implemented iteration is
-    ~10x faster than recursive Python generators."""
-
-    __slots__ = ("tag", "attrs", "content")
-
-    def __init__(self, tag: str, attrs: dict):
-        self.tag = tag
-        self.attrs = attrs
-        self.content: List[object] = []  # str | _Node, in document order
-
-    @property
-    def children(self) -> List["_Node"]:
-        return [c for c in self.content if isinstance(c, _Node)]
-
-    def get(self, key: str, default=None):
-        return self.attrs.get(key, default)
-
-    def itertext(self):
-        stack = [iter(self.content)]
-        while stack:
-            for c in stack[-1]:
-                if isinstance(c, _Node):
-                    stack.append(iter(c.content))
-                    break
-                yield c
-            else:
-                stack.pop()
-
-    def iter(self):
-        yield self
-        stack = [iter(self.content)]
-        while stack:
-            for c in stack[-1]:
-                if isinstance(c, _Node):
-                    yield c
-                    stack.append(iter(c.content))
-                    break
-            else:
-                stack.pop()
+# Synthetic root of the lenient HTML tree; never an XML element name, so a
+# root with another tag came from the XML path.
+HTML_ROOT = "#root"
 
 
 class _LenientHTML(HTMLParser):
-    """Tiny tree-building HTML parser (fallback path, parser.py:14)."""
+    """Lenient tree-building HTML parser (fallback path, parser.py:14): feeds
+    an ``ET.TreeBuilder`` under a synthetic ``HTML_ROOT`` element.  An end
+    tag closes the nearest matching open tag and every tag opened after it;
+    an end tag with no open match is ignored; a void or self-closed tag
+    opens and closes at once."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.root = _Node("#root", {})
-        self.stack = [self.root]
+        self.tree = ET.TreeBuilder()
+        self.tree.start(HTML_ROOT, {})
+        self.open = [HTML_ROOT]
 
     def handle_starttag(self, tag, attrs):
-        node = _Node(tag, dict(attrs))
-        self.stack[-1].content.append(node)
-        if tag not in _VOID:
-            self.stack.append(node)
+        self.tree.start(tag, dict(attrs))
+        if tag in _VOID:
+            self.tree.end(tag)
+        else:
+            self.open.append(tag)
 
     def handle_startendtag(self, tag, attrs):
-        self.stack[-1].content.append(_Node(tag, dict(attrs)))
+        self.tree.start(tag, dict(attrs))
+        self.tree.end(tag)
 
     def handle_endtag(self, tag):
-        # close the nearest matching open tag (lenient recovery)
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
+        for i in range(len(self.open) - 1, 0, -1):
+            if self.open[i] == tag:
+                self.close_open(i)
                 return
 
     def handle_data(self, data):
-        self.stack[-1].content.append(data)
+        self.tree.data(data)
+
+    def close_open(self, depth: int) -> None:
+        """End the open tags from the innermost down to ``open[depth]``."""
+        while len(self.open) > depth:
+            self.tree.end(self.open.pop())
 
 
-def _has_class(node, name: str) -> bool:
+def _has_class(node: ET.Element, name: str) -> bool:
     c = node.get("class")
     return bool(c) and name in c
 
 
-def _parse_dom(raw: str) -> Tuple[object, bool]:
-    """XML-first with HTML fallback (parser.py:7-14). Returns (root, is_hocr);
-    root is an ET Element (fast C iteration) on the XML path, a _Node on the
-    HTML fallback — both expose iter/itertext/get."""
+def parse_html(raw: str) -> ET.Element:
+    """The lenient HTML tree of ``raw``, whatever its markup: the tree the
+    ``html`` layout walks even when ``raw`` is well-formed hOCR.  Tags still
+    open when the input ends, or when the parser gives up, are closed."""
+    parser = _LenientHTML()
+    try:
+        parser.feed(raw)
+        parser.close()
+    except Exception:
+        pass
+    parser.close_open(0)
+    return parser.tree.close()
+
+
+def parse_dom(html: bytes) -> Tuple[ET.Element, bool]:
+    """XML-first with HTML fallback (parser.py:7-14). Returns (root, is_hocr)."""
+    raw = html.decode("utf-8", errors="replace")
     try:
         # strip any leading BOM/whitespace which ET rejects
         xml_root = ET.fromstring(raw.lstrip("﻿ \t\r\n"))
@@ -187,29 +165,22 @@ def _parse_dom(raw: str) -> Tuple[object, bool]:
     except ET.ParseError:
         pass
     root = parse_html(raw)
-    is_hocr = any(_has_class(n, "ocr_page") for n in root.iter())
-    return root, is_hocr
+    return root, any(_has_class(n, "ocr_page") for n in root.iter())
 
 
-def parse_html(raw: str) -> _Node:
-    """The lenient HTML tree of ``raw``, whatever its markup: the _Node tree
-    the ``html`` layout walks even when ``raw`` is well-formed hOCR."""
-    parser = _LenientHTML()
-    try:
-        parser.feed(raw)
-        parser.close()
-    except Exception:
-        pass
-    return parser.root
-
-
-def parse_dom(html: bytes) -> Tuple[_Node, bool]:
-    raw = html.decode("utf-8", errors="replace")
-    return _parse_dom(raw)
+def _line_of(
+    bb: Tuple[int, int, int, int], line_boxes: List[Tuple[str, Tuple[int, int, int, int]]]
+) -> Optional[str]:
+    """Id of the first line, in document order, whose bbox contains ``bb``."""
+    x1, y1, x2, y2 = bb
+    for lid, (Lx1, Ly1, Lx2, Ly2) in line_boxes:
+        if x1 >= Lx1 and y1 >= Ly1 and x2 <= Lx2 and y2 <= Ly2:
+            return lid
+    return None
 
 
 def scan_tokens_from_dom(
-    root: _Node, table_bbox: Optional[Tuple[int, int, int, int]] = None
+    root: ET.Element, table_bbox: Optional[Tuple[int, int, int, int]] = None
 ) -> TokenArrays:
     """Full token scan of one parsed hOCR document (parser.py:16-62)."""
     texts: List[str] = []
@@ -217,18 +188,14 @@ def scan_tokens_from_dom(
     boxes: List[Tuple[int, int, int, int]] = []
     line_ids: List[Optional[str]] = []
 
-    page_nodes = [n for n in root.iter() if "ocr_page" in (n.get("class") or "")]
+    page_nodes = [n for n in root.iter() if _has_class(n, "ocr_page")]
     for pi, page in enumerate(page_nodes, start=1):
-        # ONE fused pass over descendants dispatching on class.  Word
-        # geometry/text are resolved INLINE; only the word->line
-        # containment is deferred to a post-pass (a word may sit inside a
-        # line that appears later in document order, so line_boxes must be
-        # complete first) — semantics identical to the old two-pass scan
-        # (a node carrying both classes keeps both roles), but the word
-        # nodes are touched once, not collected and re-walked (r5 pass:
-        # drops the intermediate node list + second loop dispatch).
+        # One pass over the page's descendants resolves line boxes and word
+        # geometry/text; a node carrying both classes keeps both roles.  The
+        # word->line containment waits for the pass to end: a word may sit
+        # inside a line that appears later in document order.
         line_boxes: List[Tuple[str, Tuple[int, int, int, int]]] = []
-        page_words: List[Tuple[str, Tuple[int, int, int, int]]] = []
+        first_word = len(boxes)
         li = 0
         it = page.iter()
         next(it)  # page.iter() yields the page node itself first
@@ -239,42 +206,11 @@ def scan_tokens_from_dom(
             if "ocr_line" in cls:
                 lid = n.get("id") or f"page_{pi}_line_{li + 1}"
                 li += 1
-                # inlined parse_title_bbox fast path (call overhead is ~1/3
-                # of its cost at 40k tokens/doc); slow path falls back to
-                # the function, so the accepted language is IDENTICAL
-                title = n.get("title", "")
-                if title and title.startswith("bbox "):
-                    parts = title[5:].split(" ")
-                    if (
-                        len(parts) == 4
-                        and parts[0].isdecimal()
-                        and parts[1].isdecimal()
-                        and parts[2].isdecimal()
-                        and parts[3].isdecimal()
-                    ):
-                        lb = (int(parts[0]), int(parts[1]), int(parts[2]), int(parts[3]))
-                    else:
-                        lb = parse_title_bbox(title)
-                else:
-                    lb = parse_title_bbox(title)
+                lb = parse_title_bbox(n.get("title"))
                 if lb:
                     line_boxes.append((lid, lb))
             if "ocrx_word" in cls:
-                title = n.get("title", "")
-                if title and title.startswith("bbox "):
-                    parts = title[5:].split(" ")
-                    if (
-                        len(parts) == 4
-                        and parts[0].isdecimal()
-                        and parts[1].isdecimal()
-                        and parts[2].isdecimal()
-                        and parts[3].isdecimal()
-                    ):
-                        bb = (int(parts[0]), int(parts[1]), int(parts[2]), int(parts[3]))
-                    else:
-                        bb = parse_title_bbox(title)
-                else:
-                    bb = parse_title_bbox(title)
+                bb = parse_title_bbox(n.get("title"))
                 if not bb:
                     continue
                 if table_bbox is not None:
@@ -285,32 +221,16 @@ def scan_tokens_from_dom(
                         continue
                 # childless fast path (the normal hOCR word shape) avoids
                 # the itertext generator; identical to the join for 0 kids
-                if n.__class__ is not _Node and len(n) == 0:
+                if len(n) == 0:
                     text = (n.text or "").strip()
                 else:
                     text = "".join(n.itertext()).strip()
                 if not text:
                     continue
-                page_words.append((text, bb))
-
-        if line_boxes:
-            for text, bb in page_words:
-                x1, y1, x2, y2 = bb
-                lid_hit: Optional[str] = None
-                for lid, (Lx1, Ly1, Lx2, Ly2) in line_boxes:
-                    if x1 >= Lx1 and y1 >= Ly1 and x2 <= Lx2 and y2 <= Ly2:
-                        lid_hit = lid
-                        break
                 texts.append(text)
                 pages.append(pi)
                 boxes.append(bb)
-                line_ids.append(lid_hit)
-        else:
-            for text, bb in page_words:
-                texts.append(text)
-                pages.append(pi)
-                boxes.append(bb)
-                line_ids.append(None)
+        line_ids.extend(_line_of(bb, line_boxes) for bb in boxes[first_word:])
 
     if not texts:
         return TokenArrays.empty()

@@ -270,3 +270,46 @@ def test_curate_job_url_dedup_prepass(tmp_path, spark):
         [(1, "#a"), (2, "#b"), (3, "http://h.com/x")], "doc_id long, url string"
     )
     assert url_keepers(frag).count() == 3
+
+
+def test_extract_job_warc_rerun_of_committed_batch_parses_no_segment(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """Re-running a committed ``--warc`` batch lands nothing: the job finds
+    the batch committed before it parses a segment, still rewrites the
+    batch's manifests, and reports zero rows."""
+    import shutil
+
+    from jobs import extract_job
+    from ocr_table_extractor_to_csv_spark.sources import warc
+
+    d = tmp_path / "warcs"
+    warc.write_warc_segments(
+        [(i, f"https://rerun.example/{i}", "2025-01-01T00:00:00Z", b"tok a tok b") for i in range(4)],
+        str(d),
+    )
+    out, manifests = tmp_path / "out", tmp_path / "manifests"
+    monkeypatch.setattr(extract_job, "get_spark", lambda app_name: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr(
+        "sys.argv",
+        ["extract_job.py", "--warc", str(d), "--out", str(out), "--progress",
+         str(tmp_path / "progress"), "--manifests", str(manifests), "--batch-id", "3",
+         "--layout", "generic"],
+    )
+
+    def facts():
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    extract_job.main()
+    first = facts()
+    assert (first["rows"], first["failed"], first["batch_id"]) == (4, 0, 3)
+
+    def no_parse(*args, **kwargs):
+        raise AssertionError("a committed batch parsed its WARC segments")
+
+    monkeypatch.setattr(warc, "read_warc", no_parse)
+    shutil.rmtree(manifests)
+    extract_job.main()
+    assert facts() == {"rows": 0, "failed": 0, "html_bytes": 0, "batch_id": 3}
+    assert spark.read.parquet(str(manifests)).count() > 0

@@ -454,7 +454,9 @@ def test_deeply_nested_html_is_not_an_error_row(tag, depth):
     ``depth`` unclosed tags nests ``depth`` levels deep.  The main-text walk
     must not recurse per level (1,000 levels overflowed the interpreter
     stack and made the page an error row).  Only the innermost paragraph is
-    a leaf block, so it alone is the main text."""
+    a leaf block, so it alone is the main text.  The same unclosed tags
+    around hOCR words fail the XML parse, so the token scan walks the
+    lenient tree at that depth and still finds every word."""
     from ocr_table_extractor_to_csv_spark.operators.extract import _extract_one
 
     html = "<html><body>" + "".join(
@@ -464,10 +466,25 @@ def test_deeply_nested_html_is_not_an_error_row(tag, depth):
     assert res.error is None
     assert res.main_text == f"paragraph number {depth - 1} of a long page"
 
+    words = ("Caja", "1.234", "2.345")
+    hocr = (
+        '<html><body><div class="ocr_page" title="bbox 0 0 1000 1000">'
+        + f"<{tag}>" * depth
+        + "".join(
+            f'<span class="ocrx_word" title="bbox {100 * i} 10 {100 * i + 60} 30">{w}</span>'
+            for i, w in enumerate(words)
+        )
+    )
+    res = _extract_one(hocr.encode(), "generic", {})
+    assert res.error is None and res.is_hocr
+    assert res.n_tokens == len(words)
+    assert res.main_text == " ".join(words)
+
 
 def test_html_layout_on_well_formed_hocr():
-    """A forced ``html`` layout on hOCR that parses as XML walks the lenient
-    HTML tree: the boilerplate strip needs it, not the ElementTree root."""
+    """A forced ``html`` layout on hOCR that parses as XML re-parses it into
+    the lenient HTML tree, the tree the boilerplate strip is specified on,
+    instead of walking the XML root."""
     html = (
         b'<?xml version="1.0"?><html><body>'
         b'<div class="ocr_page" title="bbox 0 0 1700 2200">'

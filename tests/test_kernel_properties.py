@@ -1,10 +1,15 @@
 """Property-based kernel tests (SURVEY.md §5.2.3): random token layouts ->
 structural invariants + determinism, across every layout."""
 
+from html.parser import HTMLParser
+from itertools import takewhile
+
 import hypothesis.strategies as st
+import pytest
 from hypothesis import given, settings
 
-from ocr_table_extractor_to_csv_spark.kernel import extract_document
+from ocr_table_extractor_to_csv_spark.kernel import extract as kernel_extract
+from ocr_table_extractor_to_csv_spark.kernel import extract_document, hocr
 
 token_st = st.tuples(
     st.text(
@@ -67,10 +72,9 @@ def test_generic_expected_cols_coercion(tokens, k):
 
 
 def test_scan_bbox_language_equals_parse_title_bbox():
-    """The scan loop INLINES parse_title_bbox's fast path at two call
-    sites for speed; this pins the accepted language to the function so
-    the copies cannot silently drift (adversarial titles: fast-path hits,
-    fast-path misses that the regex accepts, and rejects)."""
+    """The scan keeps a word iff parse_title_bbox accepts its title, with
+    that function's box (adversarial titles: fast-path hits, fast-path
+    misses that the regex accepts, and rejects)."""
     from ocr_table_extractor_to_csv_spark.kernel.hocr import (
         parse_dom,
         parse_title_bbox,
@@ -105,3 +109,180 @@ def test_scan_bbox_language_equals_parse_title_bbox():
     )
     want = sorted(bb for t in titles if (bb := parse_title_bbox(t)) is not None)
     assert got == want
+
+
+# --------------------------------------------------------------------------
+# Reference lenient-HTML tree: the hand-written DOM the fallback parser
+# built before it fed ET.TreeBuilder.  ``content`` interleaves text and
+# child nodes in document order.
+# --------------------------------------------------------------------------
+
+
+class _RefNode:
+    __slots__ = ("tag", "attrs", "content")
+
+    def __init__(self, tag, attrs):
+        self.tag = tag
+        self.attrs = attrs
+        self.content = []  # str | _RefNode, in document order
+
+    @property
+    def children(self):
+        return [c for c in self.content if isinstance(c, _RefNode)]
+
+    def get(self, key, default=None):
+        return self.attrs.get(key, default)
+
+    def itertext(self):
+        stack = [iter(self.content)]
+        while stack:
+            for c in stack[-1]:
+                if isinstance(c, _RefNode):
+                    stack.append(iter(c.content))
+                    break
+                yield c
+            else:
+                stack.pop()
+
+    def iter(self):
+        yield self
+        stack = [iter(self.content)]
+        while stack:
+            for c in stack[-1]:
+                if isinstance(c, _RefNode):
+                    yield c
+                    stack.append(iter(c.content))
+                    break
+            else:
+                stack.pop()
+
+    # the rest of the Element surface the kernel's tree readers use
+    def __len__(self):
+        return len(self.children)
+
+    def __iter__(self):
+        return iter(self.children)
+
+    @property
+    def text(self):
+        return "".join(takewhile(lambda c: isinstance(c, str), self.content)) or None
+
+
+class _RefLenientHTML(HTMLParser):
+    def __init__(self):
+        super().__init__(convert_charrefs=True)
+        self.root = _RefNode(hocr.HTML_ROOT, {})
+        self.stack = [self.root]
+
+    def handle_starttag(self, tag, attrs):
+        node = _RefNode(tag, dict(attrs))
+        self.stack[-1].content.append(node)
+        if tag not in hocr._VOID:
+            self.stack.append(node)
+
+    def handle_startendtag(self, tag, attrs):
+        self.stack[-1].content.append(_RefNode(tag, dict(attrs)))
+
+    def handle_endtag(self, tag):
+        # close the nearest matching open tag (lenient recovery)
+        for i in range(len(self.stack) - 1, 0, -1):
+            if self.stack[i].tag == tag:
+                del self.stack[i:]
+                return
+
+    def handle_data(self, data):
+        self.stack[-1].content.append(data)
+
+
+def _ref_parse_html(raw):
+    parser = _RefLenientHTML()
+    try:
+        parser.feed(raw)
+        parser.close()
+    except Exception:
+        pass
+    return parser.root
+
+
+def _push_text(out, s):
+    if not s:
+        return
+    if out and out[-1][0] == "text":
+        out[-1] = ("text", out[-1][1] + s)
+    else:
+        out.append(("text", s))
+
+
+def _ref_events(node, out):
+    out.append(("start", node.tag, node.attrs))
+    for c in node.content:
+        if isinstance(c, _RefNode):
+            _ref_events(c, out)
+        else:
+            _push_text(out, c)
+    out.append(("end", node.tag))
+    return out
+
+
+def _element_events(el, out):
+    out.append(("start", el.tag, el.attrib))
+    _push_text(out, el.text)
+    for c in el:
+        _element_events(c, out)
+        _push_text(out, c.tail)
+    out.append(("end", el.tag))
+    return out
+
+
+_TAGS = ("p", "div", "a", "span", "li", "nav", "footer", "table", "tr", "td", "h1", "script")
+_PROSE = (
+    "quarterly revenue grew across every branch office",
+    "the board approved the annual budget on time",
+    "Cuenta 2023 2024",
+    "Tom & Jerry",
+)
+_fragment = st.one_of(
+    st.sampled_from(_TAGS).map(lambda t: f"<{t}>"),
+    st.sampled_from(_TAGS).map(lambda t: f"</{t}>"),  # closes an open tag or is stray
+    st.sampled_from(("<br>", "<img src=x>", "<hr/>", "<br/>", "</br>", "<span/>", "<p/>", "<td nowrap>")),
+    st.sampled_from(("<!-- <p>note</p> -->", "&amp;", "&#65;", "&lt;p&gt;", "&nbsp;", "&bogus;", "<!DOCTYPE html>")),
+    st.sampled_from(('<script>var s = "<p>x</p>";</script>', "<style>p { }</style>", "<", "</", "<div class=")),
+    st.sampled_from(_PROSE),
+    st.sampled_from(_PROSE).map(lambda t: f"<p>{t}"),
+    st.sampled_from(_PROSE).map(lambda t: f'<div>{t} <a href="#">{t}</a> {t}</div>'),
+    st.sampled_from((
+        "<table><tr><th>Cuenta</th><th>2023</th></tr><tr><td>Caja</td><td>1.234</td></tr></table>",
+        "<table><tr><td>a<td>b<tr><td>1<td>2</table>",
+    )),
+    st.sampled_from(('<div class="ocr_page" title="bbox 0 0 1000 1000">', '<span class="ocr_line" title="bbox 0 0 1000 40">')),
+    st.builds(
+        lambda x, y, t: f'<span class="ocrx_word" title="bbox {x} {y} {x + 30} {y + 10}">{t}</span>',
+        st.integers(0, 900),
+        st.integers(0, 900),
+        st.sampled_from(("Caja", "1.234", "2023", "<b>x</b>", "")),
+    ),
+)
+
+
+_markup = st.tuples(
+    st.sampled_from(("", "<html><body>", '<html><body><div class="ocr_page" title="bbox 0 0 1000 1000">')),
+    st.lists(_fragment, max_size=40),
+).map(lambda parts: parts[0] + "".join(parts[1]))
+
+
+@settings(max_examples=200, deadline=None)
+@given(_markup)
+def test_lenient_tree_matches_reference_dom(markup):
+    """The TreeBuilder-based lenient parser builds the reference DOM's tree
+    (same tags, attributes and text in document order), and every layout
+    that reads the fallback tree gives the same result on both trees."""
+    assert _element_events(hocr.parse_html(markup), []) == _ref_events(_ref_parse_html(markup), [])
+
+    html = markup.encode()
+    for layout in ("auto", "html", "generic"):
+        new = extract_document(html, layout=layout)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(hocr, "parse_html", _ref_parse_html)
+            mp.setattr(kernel_extract, "parse_html", _ref_parse_html)
+            ref = extract_document(html, layout=layout)
+        assert new == ref  # csv, main_text, header, n_tokens and the rest

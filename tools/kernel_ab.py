@@ -9,9 +9,9 @@ Usage for an adjacent A/B:
     python tools/kernel_ab.py          # side B (current tree)
     git stash && python tools/kernel_ab.py && git stash pop   # side A
 
-The digest covers every document's CSV bytes and header — if it changes
-between A and B, the optimization changed semantics and the rate delta is
-meaningless.  Interleave runs (B A B) when the host is noisy; this box's
+The first digest covers every document's CSV bytes and header, the
+second its main text and numeric CSV — if either changes between A and B,
+the optimization changed semantics and the rate delta is meaningless.  Interleave runs (B A B) when the host is noisy; this box's
 throughput weather is ±40% over minutes (BENCH.md header).
 """
 
@@ -46,11 +46,14 @@ def main(per_family: int = 24, trials: int = 3) -> None:
             ))
 
     h = hashlib.sha256()
+    h_text = hashlib.sha256()
     for html, layout, args in docs:
         r = extract_document(html, layout=layout, **args)
         h.update(r.csv or b"")
         h.update(str(r.header).encode())
+        h_text.update(repr((r.main_text, r.csv_numeric)).encode())
     print(f"digest: {h.hexdigest()[:16]}")
+    print(f"main-text digest: {h_text.hexdigest()[:16]}")
 
     best = 0.0
     for _ in range(trials):
