@@ -217,11 +217,12 @@ def _dots_sql(label_len: str) -> str:
 
 
 # the grid oracles: ts[i] is the i-th token, r the row index
+_GRID4_LINE = "ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4]"
+
+
 def _grid4_oracle(kind: str) -> str:
     return _rows_oracle(
-        _eligible(kind), "len(ts) // 4",
-        "ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4]",
-        "total - 1", f"body || {_CRLF}", 4,
+        _eligible(kind), "len(ts) // 4", _GRID4_LINE, "total - 1", f"body || {_CRLF}", 4
     )
 
 
@@ -341,23 +342,29 @@ def q_extract_mixed_dispatch(spark, sf_dir):
     )
 
 
-def _oracle_mixed_dispatch() -> str:
+def _sampled(sql: str, where: str) -> str:
     # each family oracle reads `FROM documents` exactly once; inject the
-    # same doc_id % 7 sample the Spark query applies
-    def sampled(sql: str) -> str:
-        assert sql.count("FROM documents") == 1
-        return sql.replace("FROM documents", "FROM documents WHERE doc_id % 7 = 0")
+    # sample the Spark query applies
+    assert sql.count("FROM documents") == 1
+    return sql.replace("FROM documents", f"FROM documents WHERE {where}")
 
-    branches = [
-        (sampled(ORACLE_GRID4), "generic"),
-        (sampled(ORACLE_FIN_GRID), "financial"),
-        (sampled(ORACLE_DYN_GRID), "dynamic"),
-        (sampled(ORACLE_PRO_GRID), "professional"),
-    ]
+
+def _tagged(col: str, branches) -> str:
+    """The union of (oracle, tag) ``branches``, each row tagged in ``col``."""
     return " UNION ALL ".join(
-        f"SELECT doc_id, '{layout}' AS layout, n_rows, n_cols, csv_md5 FROM ({sql}) _{layout}"
-        for sql, layout in branches
+        f"SELECT doc_id, '{tag}' AS {col}, n_rows, n_cols, csv_md5 FROM ({sql}) _{tag}"
+        for sql, tag in branches
     )
+
+
+def _oracle_mixed_dispatch() -> str:
+    mod7 = "doc_id % 7 = 0"
+    return _tagged("layout", [
+        (_sampled(ORACLE_GRID4, mod7), "generic"),
+        (_sampled(ORACLE_FIN_GRID, mod7), "financial"),
+        (_sampled(ORACLE_DYN_GRID, mod7), "dynamic"),
+        (_sampled(ORACLE_PRO_GRID, mod7), "professional"),
+    ])
 
 
 def q_extract_transformers(spark, sf_dir):
@@ -375,40 +382,21 @@ def q_extract_args_dispatch(spark, sf_dir):
     )
 
 
-# hdr variant: header_regexes picks row 1 ('cuenta v1 v2 v3'); body order is
+# hdr variant: header_regexes picks row 1 (ARGS_HDR_HEADER); body order is
 # rows[:1] + rows[2:] (kernel/layouts.py detect_header_row) = title row first
-ORACLE_ARGS_DISPATCH = f"""
-WITH toks AS ({_TOKS_GRID_SQL}),
-ok AS (
-  SELECT doc_id, ts, CAST(len(ts) // 4 AS BIGINT) AS nrows FROM toks
-), tok_lines AS (
-  SELECT doc_id, ts, r,
-         ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4] AS line,
-         ts[4*r+1] || ' ' || ts[4*r+2] || ' ' || ts[4*r+3] || ',' || ts[4*r+4] AS line2
-  FROM ok, UNNEST(generate_series(0, CAST(nrows - 1 AS INT))) AS u(r)
-), agg AS (
-  SELECT doc_id, ts,
-         string_agg(line, chr(13)||chr(10) ORDER BY r) || chr(13)||chr(10) AS grid_csv,
-         string_agg(line2, chr(13)||chr(10) ORDER BY r) || chr(13)||chr(10) AS cols_csv,
-         count(*) AS total
-  FROM tok_lines GROUP BY doc_id, ts
-)
-SELECT doc_id, 'crop' AS variant,
-       CAST(total - 1 AS INT) AS n_rows, CAST(4 AS INT) AS n_cols,
-       md5(grid_csv) AS csv_md5
-FROM agg WHERE {_eligible("crop")}
-UNION ALL
-SELECT doc_id, 'hdr' AS variant,
-       CAST(total + 1 AS INT) AS n_rows, CAST(4 AS INT) AS n_cols,
-       md5('cuenta,v1,v2,v3' || chr(13)||chr(10)
-           || 'nota,interna,previa,anexo' || chr(13)||chr(10) || grid_csv) AS csv_md5
-FROM agg WHERE {_eligible("hdr")}
-UNION ALL
-SELECT doc_id, 'cols' AS variant,
-       CAST(total - 1 AS INT) AS n_rows, CAST(2 AS INT) AS n_cols,
-       md5(cols_csv) AS csv_md5
-FROM agg WHERE {_eligible("cols")}
-"""
+ORACLE_ARGS_DISPATCH = _tagged("variant", [
+    (_grid4_oracle("crop"), "crop"),
+    (_rows_oracle(
+        _eligible("hdr"), "len(ts) // 4", _GRID4_LINE, "total + 1",
+        f"'{','.join(P.ARGS_HDR_HEADER)}' || {_CRLF} || '{','.join(P.ARGS_HDR_TITLE)}' || {_CRLF}"
+        f" || body || {_CRLF}", 4,
+    ), "hdr"),
+    (_rows_oracle(
+        _eligible("cols"), "len(ts) // 4",
+        "ts[4*r+1] || ' ' || ts[4*r+2] || ' ' || ts[4*r+3] || ',' || ts[4*r+4]",
+        "total - 1", f"body || {_CRLF}", 2,
+    ), "cols"),
+])
 
 
 # ---------------------------------------------------------------------------
@@ -564,30 +552,11 @@ def q_giants_resume(spark, sf_dir):
     )
 
 
+# the grid4 oracle over the pages the progress seed leaves pending
 ORACLE_GIANTS_RESUME = f"""
-WITH toks0 AS ({_TOKS_GRID_SQL}),
-toks AS (
-  -- progress-seeded pages are resumed, not re-extracted
-  SELECT * FROM toks0 WHERE doc_id % 5 <> 0
-), ok AS (
-  SELECT doc_id, ts, CAST(len(ts) // 4 AS BIGINT) AS nrows
-  FROM toks WHERE {_eligible("doc")}
-), lines AS (
-  SELECT doc_id, r,
-         ts[4*r+1] || ',' || ts[4*r+2] || ',' || ts[4*r+3] || ',' || ts[4*r+4] AS line
-  FROM ok, UNNEST(generate_series(0, CAST(nrows - 1 AS INT))) AS u(r)
-), agg AS (
-  SELECT doc_id,
-         string_agg(line, chr(13)||chr(10) ORDER BY r) || chr(13)||chr(10) AS csv_text,
-         count(*) AS total
-  FROM lines GROUP BY doc_id
-)
-SELECT doc_id,
-       CASE WHEN doc_id % 11 = 0 THEN 'giant' ELSE 'small' END AS "pass",
-       CAST(total - 1 AS INT) AS n_rows,
-       CAST(4 AS INT) AS n_cols,
-       md5(csv_text) AS csv_md5
-FROM agg
+SELECT doc_id, CASE WHEN doc_id % 11 = 0 THEN 'giant' ELSE 'small' END AS "pass",
+       n_rows, n_cols, csv_md5
+FROM ({_sampled(ORACLE_GRID4, "doc_id % 5 <> 0")}) _g
 """
 
 
@@ -1479,18 +1448,40 @@ _SF_EMBED_DIM = 64
 # the int8 code range, derived from QUANT_BITS as in similarity._quantized_codes_frame
 _QMAX = float((1 << (similarity.QUANT_BITS - 1)) - 1)
 
-ORACLE_SIMILARITY_TOPK = f"""
-WITH base AS (
+# DuckDB twins of similarity's shared pieces: the float vectors, the nonzero
+# vectors with their norms (``_vectors``), the exact cosine of two rows of n
+# (``_cos``; list_sum == Spark's left fold), the candidate fetch and re-rank
+# (``_fetch``, ``_rerank``), and the exact integer dot and norm (``_int_dot``)
+_BASE_CTE = """base AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
-), n AS (
+)"""
+_N_CTE = """n AS (
   SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM base
-), sims AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_sum(list_transform(generate_series(1, len(q.e)), i -> q.e[i] * c.e[i]))
-           / (q.nrm * c.nrm) AS cos
-  FROM n q JOIN n c ON c.vec_id <> q.vec_id AND c.nrm > 0
-  WHERE q.vec_id % {_QMOD} = 0
+  WHERE nrm > 0
+)"""
+_CAND_PAIRS = "cand JOIN n q ON q.vec_id = cand.query_id JOIN n c ON c.vec_id = cand.vec_id"
+_INT_DOT = (
+    "CAST(list_reduce(list_transform(generate_series(1, len({q})), "
+    "j -> {q}[j] * {c}[j]), (a, b) -> a + b) AS DOUBLE)"
+)
+_INT_NRM = "sqrt(CAST(list_reduce(list_transform({v}, x -> x * x), (a, b) -> a + b) AS DOUBLE))"
+
+
+def _cos_sql(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(generate_series(1, len({a}.e)), i -> {a}.e[i] * {b}.e[i]))\n"
+        f"           / ({a}.nrm * {b}.nrm)"
+    )
+
+
+def _topk_sql(pairs: str) -> str:
+    """The tail of every top-k oracle: the cosine of each query row ``q`` x
+    candidate row ``c`` of n that the FROM clause ``pairs`` joins, then the
+    first ``TOPK`` per query by cos DESC, neighbor_id ASC, rounded."""
+    return f"""sims AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_cos_sql("q", "c")} AS cos
+  FROM {pairs}
 ), ranked AS (
   SELECT query_id, neighbor_id, cos,
          row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
@@ -1500,6 +1491,11 @@ SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
        round(cos, {_ROUND}) AS cos_sim
 FROM ranked WHERE rank <= {_K}
 """
+
+
+ORACLE_SIMILARITY_TOPK = f"""
+WITH {_BASE_CTE}, {_N_CTE},
+{_topk_sql(f"n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id % {_QMOD} = 0")}"""
 
 
 def q_similarity_lsh(spark, sf_dir):
@@ -1528,10 +1524,7 @@ def _sketch_ctes() -> str:
         f"SELECT vec_id, {t} AS tbl, b{t} AS bucket FROM sk" for t in range(n_tables)
     )
     return f"""
-base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), sk AS (
+{_BASE_CTE}, sk AS (
   SELECT vec_id, {", ".join(bucket_cols)} FROM base
 ), bands AS ({band_union})"""
 
@@ -1541,28 +1534,12 @@ base AS (
 ORACLE_SIMILARITY_LSH = f"""
 WITH {_sketch_ctes()},
 cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+  SELECT DISTINCT q.vec_id AS query_id, c.vec_id
   FROM bands q JOIN bands c
     ON c.tbl = q.tbl AND c.bucket = q.bucket AND c.vec_id <> q.vec_id
   WHERE q.vec_id % {_QMOD} = 0
-), n AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM base
-), sims AS (
-  SELECT cand.query_id, cand.neighbor_id,
-         list_sum(list_transform(generate_series(1, len(q.e)), i -> q.e[i] * c.e[i]))
-           / (q.nrm * c.nrm) AS cos
-  FROM cand
-  JOIN n q ON q.vec_id = cand.query_id AND q.nrm > 0
-  JOIN n c ON c.vec_id = cand.neighbor_id AND c.nrm > 0
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-  FROM sims
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       round(cos, {_ROUND}) AS cos_sim
-FROM ranked WHERE rank <= {_K}
-"""
+), {_N_CTE},
+{_topk_sql(_CAND_PAIRS)}"""
 
 
 def q_similarity_ivf(spark, sf_dir):
@@ -1592,10 +1569,6 @@ def _q8_shortlist_ctes(refine_q8: int | None) -> str:
     vec_id ASC) mirroring similarity._q8_norm_frame + the refine window."""
     if refine_q8 is None:
         return "cand AS (SELECT * FROM cand0)"
-    q8_dot = (
-        "CAST(list_reduce(list_transform(generate_series(1, len(qc.q8)), "
-        "j -> qc.q8[j] * cc.q8[j]), (a, b) -> a + b) AS DOUBLE)"
-    )
     return f"""q8 AS (
   SELECT vec_id,
          list_transform(e, x -> CAST(floor(x / sc + 0.5) AS BIGINT)) AS q8
@@ -1604,15 +1577,13 @@ def _q8_shortlist_ctes(refine_q8: int | None) -> str:
         FROM base) _q
   WHERE sc > 0
 ), q8n AS (
-  SELECT vec_id, q8,
-         sqrt(CAST(list_reduce(list_transform(q8, x -> x * x),
-                               (a, b) -> a + b) AS DOUBLE)) AS n8
-  FROM q8
+  SELECT vec_id, q8, {_INT_NRM.format(v="q8")} AS n8 FROM q8
 ), cand AS (
   SELECT query_id, vec_id FROM (
     SELECT cand0.query_id, cand0.vec_id,
            row_number() OVER (PARTITION BY cand0.query_id ORDER BY
-             {q8_dot} / (qc.n8 * cc.n8) DESC, cand0.vec_id ASC) AS r
+             {_INT_DOT.format(q="qc.q8", c="cc.q8")} / (qc.n8 * cc.n8) DESC,
+             cand0.vec_id ASC) AS r
     FROM cand0
     JOIN q8n qc ON qc.vec_id = cand0.query_id
     JOIN q8n cc ON cc.vec_id = cand0.vec_id
@@ -1630,18 +1601,10 @@ def _ivf_cent_assign_ctes() -> str:
     sqrt-of-exact-int) are all bit-exact in both engines, centroids and
     every assignment decision match the Spark side exactly; ties break
     (score DESC, cid ASC) = Spark's array_position-first-max."""
-    int_dot = (
-        "CAST(list_reduce(list_transform(generate_series(1, len({q})), "
-        "j -> {q}[j] * {c}.s[j]), (a, b) -> a + b) AS DOUBLE)"
-    )
-    c_nrm = (
-        "sqrt(CAST(list_reduce(list_transform({c}.s, x -> x * x), "
-        "(a, b) -> a + b) AS DOUBLE))"
-    )
     n_iter = similarity.IVF_TRAIN_ITERS
     train = ""
     for i in range(1, n_iter + 1):
-        score = int_dot.format(q="s.q", c="c") + " / " + c_nrm.format(c="c")
+        score = _INT_DOT.format(q="s.q", c="c.s") + " / " + _INT_NRM.format(v="c.s")
         train += f""",
 a{i} AS MATERIALIZED (
   SELECT vec_id, cid FROM (
@@ -1665,11 +1628,8 @@ u{i} AS (
 c{i} AS MATERIALIZED (
   SELECT c.cid, coalesce(u.s, c.s) AS s FROM c{i - 1} c LEFT JOIN u{i} u USING (cid)
 )"""
-    assign_score = int_dot.format(q="v.q", c="c") + " / c.s_nrm"
-    return f"""base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), qv AS (
+    assign_score = _INT_DOT.format(q="v.q", c="c.s") + " / c.s_nrm"
+    return f"""{_BASE_CTE}, qv AS (
   SELECT vec_id,
          list_transform(e, x -> CAST(floor(x * {float(similarity.IVF_QUANT_SCALE)} + 0.5) AS BIGINT)) AS q
   FROM base
@@ -1685,7 +1645,7 @@ c{i} AS MATERIALIZED (
 ){train},
 cent AS MATERIALIZED (
   SELECT cid, s,
-         sqrt(CAST(list_reduce(list_transform(s, x -> x * x), (a, b) -> a + b) AS DOUBLE)) AS s_nrm
+         {_INT_NRM.format(v="s")} AS s_nrm
   FROM c{n_iter}
 ), assign AS (
   SELECT vec_id, cid FROM (
@@ -1703,18 +1663,11 @@ def _oracle_similarity_ivf(refine_q8: int | None = None) -> str:
     shortlist (codes = floor(x / (max|x|/_QMAX) + 0.5) — every arithmetic
     step cross-engine exact, so the shortlist cutoff replays identically)
     is inserted between candidates and the float re-rank."""
-    int_dot = (
-        "CAST(list_reduce(list_transform(generate_series(1, len({q})), "
-        "j -> {q}[j] * {c}.s[j]), (a, b) -> a + b) AS DOUBLE)"
-    )
-    probe_score = int_dot.format(q="qq.qq", c="c") + " / c.s_nrm"
+    probe_score = _INT_DOT.format(q="qq.qq", c="c.s") + " / c.s_nrm"
     return f"""
-WITH {_ivf_cent_assign_ctes()}, n AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM base
-), qq AS (
-  SELECT n.vec_id AS query_id, n.e AS qe, n.nrm AS q_nrm, qv.q AS qq
-  FROM n JOIN qv ON qv.vec_id = n.vec_id
-  WHERE n.vec_id % {_QMOD} = 0 AND n.nrm > 0
+WITH {_ivf_cent_assign_ctes()}, {_N_CTE}, qq AS (
+  SELECT vec_id AS query_id, q AS qq FROM n JOIN qv USING (vec_id)
+  WHERE vec_id % {_QMOD} = 0
 ), probes AS (
   SELECT query_id, cid FROM (
     SELECT qq.query_id, c.cid,
@@ -1726,22 +1679,8 @@ WITH {_ivf_cent_assign_ctes()}, n AS (
   SELECT DISTINCT p.query_id, a.vec_id
   FROM probes p JOIN assign a ON a.cid = p.cid
   WHERE a.vec_id <> p.query_id
-), {_q8_shortlist_ctes(refine_q8)}, sims AS (
-  SELECT cand.query_id, cand.vec_id AS neighbor_id,
-         list_sum(list_transform(generate_series(1, len(q.qe)), i -> q.qe[i] * c.e[i]))
-           / (q.q_nrm * c.nrm) AS cos
-  FROM cand
-  JOIN qq q ON q.query_id = cand.query_id
-  JOIN n c ON c.vec_id = cand.vec_id AND c.nrm > 0
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-  FROM sims
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       round(cos, {_ROUND}) AS cos_sim
-FROM ranked WHERE rank <= {_K}
-"""
+), {_q8_shortlist_ctes(refine_q8)},
+{_topk_sql(_CAND_PAIRS)}"""
 
 
 def q_semdedup(spark, sf_dir):
@@ -1782,16 +1721,13 @@ FROM g ORDER BY cid
 # centroids, same assignment, then the NOT-EXISTS keeper rule on exact float
 # cosine (list_sum dot == Spark's left fold, the dedup_embedding-proven parity)
 ORACLE_SEMDEDUP = f"""
-WITH {_ivf_cent_assign_ctes()}, n AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM base
-), m AS MATERIALIZED (
+WITH {_ivf_cent_assign_ctes()}, {_N_CTE}, m AS MATERIALIZED (
   SELECT a.vec_id, a.cid, n.e, n.nrm
-  FROM assign a JOIN n ON n.vec_id = a.vec_id AND n.nrm > 0
+  FROM assign a JOIN n ON n.vec_id = a.vec_id
 ), dups AS (
   SELECT DISTINCT b.vec_id
   FROM m a JOIN m b ON b.cid = a.cid AND a.vec_id < b.vec_id
-  WHERE list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * b.e[i]))
-          / (a.nrm * b.nrm) >= {similarity.COS_DUP_THRESHOLD}
+  WHERE {_cos_sql("a", "b")} >= {similarity.COS_DUP_THRESHOLD}
 )
 SELECT m.vec_id, CAST(m.cid AS INT) AS cid,
        (d.vec_id IS NULL) AS is_keeper
@@ -1913,15 +1849,9 @@ capped AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM capped a JOIN capped b
     ON b.tbl = a.tbl AND b.bucket = a.bucket AND a.vec_id < b.vec_id
-), n AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM base
-), sims AS (
-  SELECT pairs.id_a, pairs.id_b,
-         list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * b.e[i]))
-           / (a.nrm * b.nrm) AS cos
-  FROM pairs
-  JOIN n a ON a.vec_id = pairs.id_a AND a.nrm > 0
-  JOIN n b ON b.vec_id = pairs.id_b AND b.nrm > 0
+), {_N_CTE}, sims AS (
+  SELECT pairs.id_a, pairs.id_b, {_cos_sql("a", "b")} AS cos
+  FROM pairs JOIN n a ON a.vec_id = pairs.id_a JOIN n b ON b.vec_id = pairs.id_b
 )
 SELECT id_a, id_b, round(cos, {_ROUND}) AS cos_sim
 FROM sims WHERE cos >= {similarity.COS_DUP_THRESHOLD}

@@ -136,8 +136,8 @@ def extract_document(
         from .layouts import compute_line_spans
 
         spans_per_line = compute_line_spans(tok, lines)
-        intervals, names = infer_numeric_columns(tok, lines, spans_per_line=spans_per_line)
-        recs = assign_dynamic(tok, lines, intervals, spans_per_line=spans_per_line)
+        intervals, names = infer_numeric_columns(lines, spans_per_line)
+        recs = assign_dynamic(tok, lines, intervals, spans_per_line)
         rows = merge_financial_rows(recs)
         if not rows:
             return ExtractResult(csv=empty_csv_bytes(), **base)

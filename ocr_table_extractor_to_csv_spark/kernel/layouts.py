@@ -371,7 +371,7 @@ PAD_PX = 24
 
 
 def infer_numeric_columns(
-    tok: TokenArrays, lines: List[Line], spans_per_line=None
+    lines: List[Line], spans_per_line
 ) -> Tuple[List[Tuple[int, int]], Optional[List[str]]]:
     """Hybrid column model (column_model.py:84-201): modal numeric-span
     count over the bottom 70% picks K<=4 columns; per-position (rightmost,
@@ -381,8 +381,6 @@ def infer_numeric_columns(
     if not lines:
         return [], None
 
-    if spans_per_line is None:
-        spans_per_line = compute_line_spans(tok, lines)
     per_line: List[List[int]] = []
     for spans in spans_per_line:
         centers = [
@@ -442,7 +440,7 @@ def infer_numeric_columns(
         intervals = [(int(L - PAD_PX), int(R + PAD_PX)) for (L, R) in merged][:4]
 
     names = (
-        _year_names_from_top(tok, lines, intervals, spans_per_line)
+        _year_names_from_top(lines, intervals, spans_per_line)
         if intervals
         else None
     )
@@ -450,16 +448,11 @@ def infer_numeric_columns(
 
 
 def _year_names_from_top(
-    tok: TokenArrays,
     lines: List[Line],
     intervals: List[Tuple[int, int]],
-    spans_per_line=None,
+    spans_per_line,
 ) -> Optional[List[str]]:
     """column_model.py:47-82 (wrapped in a blanket try/except there)."""
-    if not intervals:
-        return None
-    if spans_per_line is None:
-        spans_per_line = compute_line_spans(tok, lines)
     try:
         ys = [ln.y1 for ln in lines]
         if not ys:
@@ -494,7 +487,7 @@ def assign_dynamic(
     tok: TokenArrays,
     lines: List[Line],
     numeric_columns: List[Tuple[int, int]],
-    spans_per_line=None,
+    spans_per_line,
 ) -> List[Rec]:
     """assign_dynamic.py:38-72: label = text spans left of the first numeric
     column only; numeric spans fill nearest column FIRST-WINS."""
@@ -505,8 +498,6 @@ def assign_dynamic(
             recs.append(Rec(ln.page, ln.y1, ln.y2, [label], num_count=0))
         return recs
 
-    if spans_per_line is None:
-        spans_per_line = compute_line_spans(tok, lines)
     cols = sorted(numeric_columns, key=lambda ab: ab[0])
     first_L = cols[0][0]
     for ln, spans in zip(lines, spans_per_line):

@@ -1,18 +1,24 @@
 """Similarity search over the ``embeddings`` table (array<float>).
 
-Two paths, as a training pipeline needs both:
-  * ``brute_force_topk`` — exact cosine top-k for a deterministic query
-    sample.  The dot product runs JVM-side (``F.aggregate`` over zipped
-    arrays in DOUBLE) so there is no Python in the loop; candidate count is
-    |queries| x |corpus|, which is the baseline/oracle, not the scale path.
-  * ``lsh_topk`` — random-hyperplane LSH bucketing: sign-bit sketch per
-    vector (md5-seeded deterministic hyperplanes), candidates share a
-    bucket, exact cosine re-rank within buckets.  At 10^9 vectors this is
-    the linear-cost ANN path; buckets shard naturally across executors.
+Every embedding operator has one shape: candidate ids, then the exact
+cosine on the float vectors, then a cut.  Candidates come from:
+  * ``brute_force_topk`` — every vector, for a deterministic query sample
+    (|queries| x |corpus| pairs: the baseline/oracle, not the scale path);
+  * ``lsh_topk`` — random-hyperplane LSH: a sign-bit sketch per vector
+    (md5-seeded deterministic hyperplanes), candidates share a bucket;
+  * ``ivf_topk`` — the inverted lists of a trained coarse quantizer,
+    optionally shortlisted on int8 codes;
+  * ``cosine_dup_pairs`` — LSH bucket pairs, cut at ``COS_DUP_THRESHOLD``;
+  * ``semdedup`` — same-cluster pairs, cut at ``COS_DUP_THRESHOLD``.
+The three top-k paths end in one re-rank (``_rerank``: exact cosine, then
+the first k per query).  Vectors and norms come from ``_vectors``, the
+query sample from ``_queries``, every per-query cut from ``_first``.
 
-Norms are precomputed once per side; cosine = dot / (norm_q * norm_c),
-computed in double precision with strict left-to-right accumulation so the
-DuckDB oracle (same fold order) matches bit-for-bit before rounding.
+Dot products run JVM-side (``F.aggregate`` over zipped arrays in DOUBLE),
+so there is no Python in the loop; cosine = dot / (norm_q * norm_c) with
+strict left-to-right accumulation, so the DuckDB oracle (same fold order)
+matches bit-for-bit before rounding.  Zero vectors have no cosine and are
+dropped on both sides.
 """
 
 from __future__ import annotations
@@ -32,33 +38,68 @@ COS_DUP_THRESHOLD = 0.35  # cosine at which two embeddings are duplicates
 COS_MAX_BUCKET = 256  # cosine_dup_pairs' hot-bucket cap
 
 
+def _sum(arr, zero):
+    """Left-to-right fold of ``arr`` from ``zero`` (the oracles' order)."""
+    return F.aggregate(arr, zero, lambda acc, v: acc + v)
+
+
 def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return _sum(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")), F.lit(0.0))
+
+
+def _int_dot(a, b):
+    """Exact BIGINT dot of two integer code arrays, as a double."""
+    return _sum(F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long")).cast("double")
+
+
+def _cos(a: str, b: str):
+    """Exact cosine of the ``embedding`` columns of the frames aliased
+    ``a`` and ``b``, over their ``nrm`` columns."""
+    return _dot(F.col(f"{a}.embedding"), F.col(f"{b}.embedding")) / (
+        F.col(f"{a}.nrm") * F.col(f"{b}.nrm")
     )
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+def _vectors(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm) for every nonzero vector: the one vector
+    side of every cosine (a zero vector has none)."""
+    e = F.col("embedding")
+    return embeddings.select("vec_id", "embedding", F.sqrt(_dot(e, e)).alias("nrm")).where(
+        F.col("nrm") > 0
     )
 
 
-def _top_k(sim: DataFrame, k: int) -> DataFrame:
-    """(query_id, rank, neighbor_id, cos_sim) — the ``k`` highest-cosine
-    rows per query of a (query_id, neighbor_id, cos) frame, ties broken by
-    neighbor id: the one re-rank tail of every top-k path."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos", SIM_ROUND).alias("cos_sim"))
+def _queries(frame: DataFrame) -> DataFrame:
+    """The query sample of a per-vector ``frame``: its
+    ``vec_id % QUERY_MOD == 0`` rows with vec_id renamed query_id,
+    broadcast and aliased ``q``."""
+    q = frame.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0)
+    return F.broadcast(q.withColumnRenamed("vec_id", "query_id").alias("q"))
+
+
+def _fetch(cand: DataFrame, frame: DataFrame) -> DataFrame:
+    """Candidate (query_id, vec_id) ids joined with ``frame``'s row of each
+    side: the candidate's aliased ``c``, the query's aliased ``q``."""
+    return cand.join(frame.alias("c"), "vec_id").join(_queries(frame), "query_id")
+
+
+def _first(frame: DataFrame, key: str, n: int, *order) -> DataFrame:
+    """The first ``n`` rows per ``key`` of ``frame`` by ``order``, numbered
+    in a ``rank`` column: the one per-query cut."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return frame.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= n)
+
+
+def _rerank(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id, cos_sim): the exact cosine of each
+    query ``q`` x vector ``c`` row of ``pairs`` (``_vectors`` rows), then
+    the first ``k`` per query by cosine, ties broken by neighbor id — the
+    one re-rank tail of every top-k path."""
+    sim = pairs.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), _cos("q", "c").alias("cos")
+    )
+    return _first(sim, "query_id", k, F.desc("cos"), F.asc("neighbor_id")).select(
+        "query_id", "rank", "neighbor_id", F.round("cos", SIM_ROUND).alias("cos_sim")
     )
 
 
@@ -67,21 +108,9 @@ def brute_force_topk(embeddings: DataFrame, k: int = TOPK) -> DataFrame:
 
     Self-match excluded; rank ties broken by neighbor id (deterministic).
     """
-    base = embeddings.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
-    q = base.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    joined = q.join(base.where(F.col("nrm") > 0), F.col("vec_id") != F.col("query_id"))
-    sim = joined.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
-    )
-    return _top_k(sim, k)
+    vectors = _vectors(embeddings)
+    pairs = _queries(vectors).join(vectors.alias("c"), F.col("c.vec_id") != F.col("query_id"))
+    return _rerank(pairs, k)
 
 
 def plane_weights(plane_id: int, dim: int) -> list:
@@ -229,14 +258,13 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     expressions over the array.
     """
     base = _quantized_codes_frame(embeddings)
-    err_sum = F.aggregate(
+    err_sum = _sum(
         F.zip_with(
             F.col("embedding"),
             F.col("q"),
             lambda x, qi: F.abs(x.cast("double") - qi.cast("double") * F.col("scale")),
         ),
         F.lit(0.0),
-        lambda acc, e: acc + e,
     )
     return (
         base
@@ -266,11 +294,7 @@ def _q8_norm_frame(embeddings: DataFrame) -> DataFrame:
     cross-engine exact, so a DuckDB oracle lands on identical codes.  The
     codes are derived inline from ``embeddings``: value-identical to a
     materialized code table, but read from the float column."""
-    n8 = F.sqrt(
-        F.aggregate(
-            F.col("q8"), F.lit(0).cast("long"), lambda acc, v: acc + v * v
-        ).cast("double")
-    )
+    n8 = F.sqrt(_int_dot(F.col("q8"), F.col("q8")))
     return (
         _quantized_codes_frame(embeddings)
         .where(F.col("scale") > 0)
@@ -423,19 +447,9 @@ def semdedup(embeddings: DataFrame) -> DataFrame:
     """
     cents = train_ivf_centroids(embeddings)
     assign = (
-        embeddings.select(
-            "vec_id",
-            "embedding",
-            _norm(F.col("embedding")).alias("nrm"),
-            F.expr(_QUANT_SQL).alias("qe"),
-        )
-        .where(F.col("nrm") > 0)
-        .select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            F.expr(centroid_cid_expr(cents)).alias("cid"),
-        )
+        _vectors(embeddings)
+        .withColumn("qe", F.expr(_QUANT_SQL))
+        .select("vec_id", "embedding", "nrm", F.expr(centroid_cid_expr(cents)).alias("cid"))
     )
     a = assign.alias("a")
     b = assign.alias("b")
@@ -445,11 +459,7 @@ def semdedup(embeddings: DataFrame) -> DataFrame:
             (F.col("a.cid") == F.col("b.cid"))
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .where(
-            _dot(F.col("a.embedding"), F.col("b.embedding"))
-            / (F.col("a.nrm") * F.col("b.nrm"))
-            >= COS_DUP_THRESHOLD
-        )
+        .where(_cos("a", "b") >= COS_DUP_THRESHOLD)
         .select(F.col("b.vec_id").alias("vec_id"))
         .distinct()
     )
@@ -502,7 +512,7 @@ def ivf_topk(
     are recomputed inline from the float column (``_q8_norm_frame``).
     """
     cents = train_ivf_centroids(embeddings, n_centroids)
-    assign = assign_centroids(embeddings, cents)
+    vectors = _vectors(embeddings)
 
     # query side: rank centroids relationally over the tiny broadcast table
     cent_df = F.broadcast(
@@ -511,33 +521,14 @@ def ivf_topk(
             "cid int, s array<long>, s_nrm double",
         )
     )
-    base = embeddings.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    ).where(F.col("nrm") > 0)
-    q = base.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.expr(_QUANT_SQL).alias("qq"),
+    qc = _queries(vectors.select("vec_id", F.expr(_QUANT_SQL).alias("qe"))).crossJoin(cent_df)
+    c_cos = _int_dot(F.col("qe"), F.col("s")) / F.col("s_nrm")
+    probes = _first(
+        qc.select("query_id", "cid", c_cos.alias("c_cos")), "query_id", n_probe,
+        F.desc("c_cos"), F.asc("cid"),
     )
-    int_dot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("s"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    qc = q.crossJoin(cent_df).select(
-        "query_id",
-        "cid",
-        (int_dot.cast("double") / F.col("s_nrm")).alias("c_cos"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.desc("c_cos"), F.asc("cid"))
-    probes = (
-        qc.withColumn("_r", F.row_number().over(wp)).where(F.col("_r") <= n_probe).select("query_id", "cid")
-    )
-    q = q.drop("qq")
-
     cand = (
-        probes.join(assign, "cid")
+        probes.join(assign_centroids(embeddings, cents), "cid")
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
         .distinct()
@@ -548,49 +539,14 @@ def ivf_topk(
         # the cosine; the dot is exact BIGINT so the cutoff is
         # deterministic and oracle-replayable.  The per-query window is
         # bounded by the probed-list size (not a data-skewed corpus key).
-        q8n = _q8_norm_frame(embeddings)
-        qq8 = F.broadcast(
-            q8n.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("q8").alias("q8_q"),
-                F.col("n8").alias("n8_q"),
-            )
+        q8_cos = _int_dot(F.col("q.q8"), F.col("c.q8")) / (F.col("q.n8") * F.col("c.n8"))
+        approx = _fetch(cand, _q8_norm_frame(embeddings)).select(
+            "query_id", "vec_id", q8_cos.alias("_qcos")
         )
-        int8_dot = F.aggregate(
-            F.zip_with(F.col("q8_q"), F.col("q8"), lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
+        cand = _first(approx, "query_id", k * refine_q8, F.desc("_qcos"), F.asc("vec_id")).select(
+            "query_id", "vec_id"
         )
-        approx = (
-            cand.join(q8n, "vec_id")
-            .join(qq8, "query_id")
-            .select(
-                "query_id",
-                "vec_id",
-                (int8_dot.cast("double") / (F.col("n8_q") * F.col("n8"))).alias(
-                    "_qcos"
-                ),
-            )
-        )
-        ws = Window.partitionBy("query_id").orderBy(
-            F.desc("_qcos"), F.asc("vec_id")
-        )
-        cand = (
-            approx.withColumn("_r", F.row_number().over(ws))
-            .where(F.col("_r") <= k * refine_q8)
-            .select("query_id", "vec_id")
-        )
-    qvec = F.broadcast(q)
-    sim = (
-        cand.join(base, "vec_id")
-        .join(qvec, "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    return _top_k(sim, k)
+    return _rerank(_fetch(cand, vectors), k)
 
 
 def lsh_bands_multi(embeddings: DataFrame, n_tables: int = LSH_TABLES) -> DataFrame:
@@ -619,23 +575,11 @@ def cosine_dup_pairs(embeddings: DataFrame) -> DataFrame:
     once per reference."""
     bands = lsh_bands_multi(embeddings)
     pairs = bucket_join(bands, ["band", "bkey"], COS_MAX_BUCKET, id_col="vec_id").distinct()
-    base = embeddings.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    ).where(F.col("nrm") > 0)
-    ea = base.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"), F.col("nrm").alias("n_a")
-    )
-    eb = base.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"), F.col("nrm").alias("n_b")
-    )
+    vectors = _vectors(embeddings)
     sim = (
-        pairs.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (_dot(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b"))).alias("cos"),
-        )
+        pairs.join(vectors.alias("a"), F.col("id_a") == F.col("a.vec_id"))
+        .join(vectors.alias("b"), F.col("id_b") == F.col("b.vec_id"))
+        .select("id_a", "id_b", _cos("a", "b").alias("cos"))
     )
     return sim.where(F.col("cos") >= COS_DUP_THRESHOLD).select(
         "id_a", "id_b", F.round("cos", SIM_ROUND).alias("cos_sim")
@@ -656,38 +600,18 @@ def lsh_topk(embeddings: DataFrame, k: int = TOPK, n_tables: int = LSH_TABLES) -
     Scale shape (single-pass rewrite of the r01 8-scan union):
       1. one scan sketches all tables' buckets (``multi_table_sketch``);
       2. the (vec_id, band, bkey) band list (band = table, bkey = bucket)
-         — a few longs per vector — self-joins on (band, bkey) for
-         candidate ids;
+         — a few longs per vector — joins the query sample's broadcast
+         band rows on (band, bkey) for candidate ids;
       3. vectors are fetched once for the distinct candidates (co-located
          join on vec_id); the tiny query-sample side broadcasts.
     Everything stays JVM-side column expressions (plan-asserted in tests).
     """
     bands = lsh_bands_multi(embeddings, n_tables)
-
-    qb = bands.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
-        F.col("vec_id").alias("query_id"), "band", "bkey"
-    )
-    cand_ids = (
-        qb.join(bands, ["band", "bkey"])
+    cand = (
+        _queries(bands)
+        .join(bands, ["band", "bkey"])
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
         .distinct()
     )
-
-    base = embeddings.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    ).where(F.col("nrm") > 0)
-    qvec = F.broadcast(
-        base.where(F.pmod(F.col("vec_id"), F.lit(QUERY_MOD)) == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-    )
-    cand = cand_ids.join(base, "vec_id").join(qvec, "query_id")
-    sim = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
-    )
-    return _top_k(sim, k)
+    return _rerank(_fetch(cand, _vectors(embeddings)), k)

@@ -417,6 +417,24 @@ def test_lsh_recall_floor_vs_brute_force(spark):
     assert recall >= 0.35, recall  # measured 0.42 on random data; ~0.9 on clustered
 
 
+def test_topk_paths_share_one_rerank_and_drop_zero_queries(spark):
+    """A zero vector has no cosine: brute force drops it on the query side
+    as on the neighbor side (under ANSI division it used to fail the whole
+    query), and an IVF that probes every list re-ranks exactly the
+    candidates brute force does, so the two agree row for row."""
+    n = 120
+    emb = spark.createDataFrame(
+        [(0, [0.0] * 4)]
+        + [(i, [float((i * j * 7 + j) % 11) - 5.0 for j in range(1, 5)]) for i in range(1, n)],
+        "vec_id long, embedding array<float>",
+    )
+    bf = sorted(similarity.brute_force_topk(emb).collect())
+    assert bf and {r.query_id for r in bf} == {50, 100}
+    assert all(r.neighbor_id != 0 for r in bf)
+    c = similarity.IVF_CENTROIDS
+    assert sorted(similarity.ivf_topk(emb, n_centroids=c, n_probe=c).collect()) == bf
+
+
 def test_numeric_metrics_known_values(spark):
     # y_true = [1,2,3], y_pred = [2,2,2]: mse = 2/3, r2 = 1 - 2/2 = 0
     pairs = spark.createDataFrame(
