@@ -409,6 +409,19 @@ _TOKS_SQL = (
 )
 
 
+def _md5_int_sql(expr: str, start: int, n_hex: int) -> str:
+    """The integer of ``n_hex`` md5 hex chars of ``expr`` from ``start``
+    (1-based): the DuckDB spelling of the engine's one hash spec."""
+    return f"CAST('0x' || substr(md5({expr}), {start}, {n_hex}) AS BIGINT)"
+
+
+def _uniform_sql(prefix: str) -> str:
+    """u = md5_int(prefix || doc_id, 1, 8) / 2^32, one uniform draw per
+    document (the samplers' rule)."""
+    key = f"'{prefix}' || CAST(doc_id AS VARCHAR)"
+    return f"{_md5_int_sql(key, 1, 8)} / 4294967296.0"
+
+
 def _sf_scratch_dir(sf_dir: str, name: str) -> str:
     """``/tmp/ocrx_<name>_<sf basename>_<digest>``, keyed on the FULL path
     plus the documents parquet's identity (mtime/size): two corpora sharing
@@ -668,17 +681,14 @@ ORDER BY tf DESC, token ASC LIMIT {textstats.VOCAB_TOPK}
 """
 
 
-SEARCH_TERMS = ("data", "join", "scan", "vector")
-
-
 def q_search_topk(spark, sf_dir):
     """Keyword search scoring over the corpus (rational-idf variant; see
     textstats.search_topk for why not ln)."""
-    return textstats.search_topk(_docs(spark, sf_dir), SEARCH_TERMS)
+    return textstats.search_topk(_docs(spark, sf_dir))
 
 
 def _oracle_search_topk() -> str:
-    terms = ", ".join(f"'{t}'" for t in sorted(set(SEARCH_TERMS)))
+    terms = ", ".join(f"'{t}'" for t in sorted(set(textstats.SEARCH_TERMS)))
     return f"""
 WITH tok AS (
   SELECT doc_id, unnest(ts) AS term
@@ -805,8 +815,7 @@ FROM q GROUP BY 1
 """
 
 
-MIX_WEIGHTS = {"src0": 0.5, "src1": 0.3, "src2": 0.15, "src_licensed": 0.05}
-MIX_BUDGET = 10_000
+_MIX_WEIGHTS, _MIX_BUDGET = textstats.MIX_WEIGHTS, textstats.MIX_BUDGET
 
 
 def q_mix_plan(spark, sf_dir):
@@ -818,20 +827,18 @@ def q_mix_plan(spark, sf_dir):
     regimes exercised by the same row.  'src_licensed' exists in the
     weights but NOT in the corpus: it must surface with available 0 and
     a visibly unmeetable target (r6, the r5 advice fix), never vanish."""
-    return textstats.mix_plan(
-        _docs(spark, sf_dir), budget_tokens=MIX_BUDGET, weights=MIX_WEIGHTS
-    )
+    return textstats.mix_plan(_docs(spark, sf_dir))
 
 
 def _mix_w_case() -> str:
     return "CASE source " + " ".join(
-        f"WHEN '{s}' THEN {w}" for s, w in sorted(MIX_WEIGHTS.items())
+        f"WHEN '{s}' THEN {w}" for s, w in sorted(_MIX_WEIGHTS.items())
     ) + " ELSE 0.0 END"
 
 
 def _oracle_mix_plan() -> str:
     w_case = _mix_w_case()
-    wk_vals = ", ".join(f"('{s}')" for s in sorted(MIX_WEIGHTS))
+    wk_vals = ", ".join(f"('{s}')" for s in sorted(_MIX_WEIGHTS))
     return f"""
 WITH t AS (
   SELECT source, CAST(len({_TOKS_SQL}) AS INT) AS n FROM documents
@@ -847,13 +854,13 @@ WITH t AS (
 )
 SELECT source, available_tokens,
        round(CAST({w_case} AS DOUBLE), 6) AS weight,
-       round(CAST({MIX_BUDGET} AS DOUBLE) * ({w_case}), 2) AS target_tokens,
+       round(CAST({_MIX_BUDGET} AS DOUBLE) * ({w_case}), 2) AS target_tokens,
        CASE WHEN available_tokens > 0
-            THEN round(least(1.0, CAST({MIX_BUDGET} AS DOUBLE) * ({w_case})
+            THEN round(least(1.0, CAST({_MIX_BUDGET} AS DOUBLE) * ({w_case})
                              / available_tokens), 6)
             ELSE 0.0 END AS sample_rate,
        CASE WHEN available_tokens > 0
-            THEN round(CAST({MIX_BUDGET} AS DOUBLE) * ({w_case})
+            THEN round(CAST({_MIX_BUDGET} AS DOUBLE) * ({w_case})
                        / available_tokens, 6)
             ELSE NULL END AS epochs
 FROM per
@@ -868,9 +875,7 @@ def q_mix_sample(spark, sf_dir):
     partial copy per doc, so the expected token yield equals the plan's
     target per source.  The plan broadcasts; the doc side never
     shuffles."""
-    return textstats.mix_sample(
-        _docs(spark, sf_dir), budget_tokens=MIX_BUDGET, weights=MIX_WEIGHTS
-    )
+    return textstats.mix_sample(_docs(spark, sf_dir))
 
 
 def _oracle_mix_sample() -> str:
@@ -884,14 +889,13 @@ WITH t AS (
 ), plan AS (
   SELECT source,
          CASE WHEN available_tokens > 0
-              THEN round(CAST({MIX_BUDGET} AS DOUBLE) * ({w_case})
+              THEN round(CAST({_MIX_BUDGET} AS DOUBLE) * ({w_case})
                          / available_tokens, 6)
               ELSE NULL END AS epochs
   FROM per
 ), d AS (
   SELECT doc_id, source, n AS n_tokens,
-         CAST('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8)
-              AS BIGINT) / 4294967296.0 AS u
+         {_uniform_sql("mix:")} AS u
   FROM t
 ), c AS (
   SELECT d.doc_id, d.source, d.n_tokens,
@@ -974,8 +978,7 @@ _RATES = " ".join(f"WHEN lang = '{s}' THEN {r}" for s, r in sorted(curation.SAMP
 ORACLE_SAMPLE_STRATIFIED = f"""
 WITH t AS (
   SELECT doc_id, lang AS stratum,
-         CAST('0x' || substr(md5('sample:' || doc_id), 1, 8) AS BIGINT)
-           / 4294967296.0 AS u,
+         {_uniform_sql("sample:")} AS u,
          CASE {_RATES}
               ELSE {curation.SAMPLE_DEFAULT_RATE} END AS r
   FROM documents
@@ -1214,7 +1217,8 @@ def _oracle_bloom_dedup() -> str:
     m, k = dedup.BLOOM_M_BITS, dedup.BLOOM_K
 
     def pos(i: int) -> str:
-        return f"CAST('0x' || substr(md5(fp || ':{i}'), 1, 5) AS BIGINT) % {m}"
+        key = f"fp || ':{i}'"
+        return f"{_md5_int_sql(key, 1, 5)} % {m}"
 
     pcols = ", ".join(f"{pos(i)} AS p{i}" for i in range(k))
     seen_pos_union = " UNION ALL ".join(
@@ -1279,7 +1283,7 @@ def _minhash_bands0_ctes() -> str:
   SELECT * FROM ({_SHINGLES_SQL}) s WHERE shingle <> ''
 ), sig AS (
   SELECT doc_id, {mins}
-  FROM (SELECT doc_id, CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) AS h0 FROM sh) _h
+  FROM (SELECT doc_id, {_md5_int_sql("shingle", 1, 15)} AS h0 FROM sh) _h
   GROUP BY doc_id
 ), bands0 AS ({band_selects})"""
 
@@ -1403,7 +1407,7 @@ def _oracle_simhash_hash(bits: int, alias: str = "simhash") -> str:
         if bits > 32
         else "(lo >> bit)"
     )
-    hi_col = ",\n                 CAST('0x' || substr(md5(tok), 9, 8) AS BIGINT) AS hi" if bits > 32 else ""
+    hi_col = f",\n                 {_md5_int_sql('tok', 9, 8)} AS hi" if bits > 32 else ""
     weight = (
         "(CASE WHEN bit = 63 THEN (-9223372036854775807 - 1)::HUGEINT"
         " ELSE (1::BIGINT << bit)::HUGEINT END)"
@@ -1415,7 +1419,7 @@ WITH toks AS (
   SELECT doc_id, unnest(ts) AS tok
   FROM (SELECT doc_id, {_TOKS_SQL} AS ts FROM documents) _t
 ), h AS (
-  SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) AS lo{hi_col}
+  SELECT doc_id, {_md5_int_sql("tok", 1, 8)} AS lo{hi_col}
   FROM toks
 ), per_bit AS (
   SELECT doc_id, bit,
@@ -1503,29 +1507,35 @@ def q_similarity_lsh(spark, sf_dir):
 
 
 def _sketch_ctes() -> str:
-    """Shared DuckDB CTEs (base, sk, bands) twinning multi_table_sketch:
-    the hyperplane weights are the SAME driver-precomputed literals
-    (similarity.plane_weights), folded left-to-right via list_reduce so the
+    """Shared DuckDB CTEs (base, planes, sk, bands) twinning
+    multi_table_sketch: the hyperplane weights are the SAME
+    driver-precomputed literals (similarity.plane_weights), typed once per
+    plane in the one-row ``planes`` CTE (a cast inside the lambda would be
+    rebuilt per element) and folded left-to-right via list_reduce so the
     sign bits match Spark's sequential double fold exactly."""
-    n_tables, dim = similarity.LSH_TABLES, _SF_EMBED_DIM
-    bucket_cols = []
-    for t in range(n_tables):
-        terms = []
-        for p in range(similarity.LSH_PLANES):
-            w = similarity.plane_weights(t * 1000 + p, dim)
-            wlist = "[" + ",".join(repr(x) for x in w) + "]"
-            terms.append(
-                f"CASE WHEN list_reduce(list_transform(generate_series(1, {dim}), "
-                f"i -> e[i] * ({wlist}::DOUBLE[])[i]), (a, b) -> a + b) > 0 "
-                f"THEN {1 << p} ELSE 0 END"
-            )
-        bucket_cols.append("(" + " + ".join(terms) + f") AS b{t}")
+    n_tables, n_planes, dim = similarity.LSH_TABLES, similarity.LSH_PLANES, _SF_EMBED_DIM
+    planes = ",\n         ".join(
+        "[" + ",".join(repr(x) for x in similarity.plane_weights(t * 1000 + p, dim))
+        + f"]::DOUBLE[] AS w{t}_{p}"
+        for t in range(n_tables)
+        for p in range(n_planes)
+    )
+    bucket_cols = [
+        "(" + " + ".join(
+            f"CASE WHEN list_reduce(list_transform(generate_series(1, {dim}), "
+            f"i -> e[i] * w{t}_{p}[i]), (a, b) -> a + b) > 0 THEN {1 << p} ELSE 0 END"
+            for p in range(n_planes)
+        ) + f") AS b{t}"
+        for t in range(n_tables)
+    ]
     band_union = " UNION ALL ".join(
         f"SELECT vec_id, {t} AS tbl, b{t} AS bucket FROM sk" for t in range(n_tables)
     )
     return f"""
-{_BASE_CTE}, sk AS (
-  SELECT vec_id, {", ".join(bucket_cols)} FROM base
+{_BASE_CTE}, planes AS (
+  SELECT {planes}
+), sk AS (
+  SELECT vec_id, {", ".join(bucket_cols)} FROM base, planes
 ), bands AS ({band_union})"""
 
 
@@ -2283,7 +2293,7 @@ def q_url_dedup(spark, sf_dir):
 # oracle's pass-0 keeper CTEs
 _URL_CANON_CTES = f"""raw AS (
   SELECT doc_id,
-         CAST('0x' || substr(md5('url:' || doc_id), 1, 2) AS INT) AS b,
+         {_md5_int_sql("'url:' || doc_id", 1, 2)} AS b,
          source || '.example.com' AS host,
          CAST(doc_id % {weburl.SYNTH_URL_SLOTS} AS VARCHAR) AS slot,
          CAST(doc_id % {weburl.SYNTH_URL_FRAGS} AS VARCHAR) AS frag
@@ -2380,7 +2390,7 @@ g AS (
 anch0 AS (
   SELECT doc_id, md5(gram) AS anchor
   FROM g
-  WHERE CAST('0x' || substr(md5(gram), 1, 8) AS BIGINT)
+  WHERE {_md5_int_sql("gram", 1, 8)}
         % {dedup.SUBSTR_ANCHOR_MOD} = 0
 ),
 anch AS MATERIALIZED (
@@ -2417,7 +2427,7 @@ lab AS (
 ),
 tok AS MATERIALIZED (
   SELECT doc_id, label,
-         CAST(CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT)
+         CAST({_md5_int_sql("tok", 1, 8)}
               % {textstats.QC_BUCKETS} AS INT) AS bucket
   FROM (SELECT doc_id, label, unnest(ts) AS tok FROM lab) _u
 ),
@@ -2540,11 +2550,7 @@ FROM s2
 """
 
 
-# driver-row url_filter operating point, chosen so every rule discriminates
-# on the synthetic URL bytes: the utm bit trips max_params=1, the two-digit
-# srcNN hosts trip the 0.1 digit ratio, and two hosts are blocklisted
-_URLF_BLOCKLIST = ["src3.example.com", "src7.example.com"]
-_URLF_MAX_PARAMS, _URLF_MAX_DIGIT_RATIO = 1, 0.1
+_URLF_MAX_PARAMS, _URLF_MAX_DIGIT_RATIO = weburl.URL_MAX_PARAMS, weburl.URL_MAX_HOST_DIGIT_RATIO
 _URLF_FLAGS = [
     "host_blocked", "banned_hit", "too_many_params",
     "path_too_deep", "digit_host", "keep",
@@ -2556,19 +2562,14 @@ def q_url_filter(spark, sf_dir):
     substrings, raw-param overload, path-trap depth, digit-heavy hosts —
     the only curation gate costing zero content bytes, so it runs first.
     Synthetic URL column as in url_dedup (oracle reproduces the bytes)."""
-    out = weburl.url_filter(
-        weburl.with_synth_url(_docs_f(spark, sf_dir)),
-        blocklist_hosts=_URLF_BLOCKLIST,
-        max_params=_URLF_MAX_PARAMS,
-        max_host_digit_ratio=_URLF_MAX_DIGIT_RATIO,
-    )
+    out = weburl.url_filter(weburl.with_synth_url(_docs_f(spark, sf_dir)))
     keep = [c for c in out.columns if c not in _URLF_FLAGS]
     return out.select(
         *keep, *[F.col(c).cast("int").alias(c) for c in _URLF_FLAGS]
     )
 
 
-_URLF_BLOCK_SQL = ",".join(f"'{h}'" for h in _URLF_BLOCKLIST)
+_URLF_BLOCK_SQL = ",".join(f"'{h}'" for h in weburl.URL_BLOCKLIST)
 _DEPTH = weburl.URL_MAX_PATH_DEPTH
 
 ORACLE_URL_FILTER = f"""
@@ -2604,16 +2605,13 @@ FROM f
 """
 
 
-_DOMAIN_CAP = 10
-
-
 def q_domain_cap(spark, sf_dir):
-    """Per-domain document cap (anti-SEO-farm): exact min-``_DOMAIN_CAP``
+    """Per-domain document cap (anti-SEO-farm): exact min-``DOMAIN_CAP``
     doc_ids per canonical host via the salted two-phase rank — phase 1
     windows on (host, salt) so no task sorts a whole viral domain, phase 2
     re-ranks the <= salt_mod x cap survivors.  Oracle is the plain
     ROW_NUMBER formulation the two-phase shape provably equals."""
-    return weburl.domain_cap(weburl.with_synth_url(_docs(spark, sf_dir)), cap=_DOMAIN_CAP, salt_mod=4)
+    return weburl.domain_cap(weburl.with_synth_url(_docs(spark, sf_dir)))
 
 
 ORACLE_DOMAIN_CAP = f"""
@@ -2629,7 +2627,7 @@ h AS (
   FROM h
 )
 SELECT host, doc_id, domain_rank
-FROM r WHERE domain_rank <= {_DOMAIN_CAP}
+FROM r WHERE domain_rank <= {weburl.DOMAIN_CAP}
 ORDER BY host, domain_rank
 """
 
@@ -2709,7 +2707,7 @@ WITH sh AS (
   SELECT doc_id, shingle FROM ({_SHINGLES_SQL}) s WHERE shingle <> ''
 ), d AS (
   SELECT DISTINCT doc.source,
-    CAST('0x' || substr(md5(sh.shingle), 1, 15) AS BIGINT) AS h
+    {_md5_int_sql("sh.shingle", 1, 15)} AS h
   FROM sh JOIN documents doc USING (doc_id)
 ), r AS (
   SELECT source, h,

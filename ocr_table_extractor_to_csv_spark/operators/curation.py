@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.scope import RunScope, run_branches
-from .textstats import lang_pred_col, norm_text_col, quality_columns
+from .textstats import lang_pred_col, norm_text_col, quality_columns, uniform_col
 
 DEFAULT_MIN_QUALITY = 0.5
 DEFAULT_LANGS = ("en",)
@@ -212,21 +212,10 @@ SAMPLE_DEFAULT_RATE = 0.1  # keep rate of every other lang
 def sample_stratified(documents: DataFrame) -> DataFrame:
     """Deterministic stratified sampling for mix planning: keep a document
     iff u(doc_id) < rate(lang) (``SAMPLE_RATES``, else
-    ``SAMPLE_DEFAULT_RATE``), where u = first-32-bits of
-    md5('sample:' || doc_id) / 2^32 — a pure column expression, so the
-    sample is reproducible on any cluster, any partitioning, any retry
-    (rand() is none of those).  The division is by a power of two: u is
-    bit-exact in every engine.  Returns (doc_id, stratum, u)."""
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(float(2**32))
-    )
+    ``SAMPLE_DEFAULT_RATE``), where u = ``uniform_col("sample:")`` — a
+    pure column expression, bit-exact and reproducible in every engine.
+    Returns (doc_id, stratum, u)."""
+    u = uniform_col("sample:")
     rate = F.lit(float(SAMPLE_DEFAULT_RATE))
     for stratum, r in sorted(SAMPLE_RATES.items()):
         rate = F.when(F.col("lang") == stratum, F.lit(float(r))).otherwise(rate)

@@ -11,34 +11,37 @@ from typing import Iterable, Iterator, Optional
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..kernel.dataset import build_layoutlm_example
 from ..session import worker_batches
 
-EXAMPLE_SCHEMA = (
-    "url string, words array<string>, bboxes array<array<int>>, "
-    "labels array<string>, row_ids array<int>, col_ids array<int>, "
-    "is_header array<boolean>, table_header array<string>, "
-    "table_rows array<array<string>>, n_columns int, header_index int, "
-    "error string"
-)
-
-_ARROW = pa.schema(
+EXAMPLE_SCHEMA = StructType(
     [
-        ("url", pa.string()),
-        ("words", pa.list_(pa.string())),
-        ("bboxes", pa.list_(pa.list_(pa.int32()))),
-        ("labels", pa.list_(pa.string())),
-        ("row_ids", pa.list_(pa.int32())),
-        ("col_ids", pa.list_(pa.int32())),
-        ("is_header", pa.list_(pa.bool_())),
-        ("table_header", pa.list_(pa.string())),
-        ("table_rows", pa.list_(pa.list_(pa.string()))),
-        ("n_columns", pa.int32()),
-        ("header_index", pa.int32()),
-        ("error", pa.string()),
+        StructField("url", StringType()),
+        StructField("words", ArrayType(StringType())),
+        StructField("bboxes", ArrayType(ArrayType(IntegerType()))),
+        StructField("labels", ArrayType(StringType())),
+        StructField("row_ids", ArrayType(IntegerType())),
+        StructField("col_ids", ArrayType(IntegerType())),
+        StructField("is_header", ArrayType(BooleanType())),
+        StructField("table_header", ArrayType(StringType())),
+        StructField("table_rows", ArrayType(ArrayType(StringType()))),
+        StructField("n_columns", IntegerType()),
+        StructField("header_index", IntegerType()),
+        StructField("error", StringType()),
     ]
 )
+
+_ARROW = to_arrow_schema(EXAMPLE_SCHEMA)
 
 
 def build_examples(

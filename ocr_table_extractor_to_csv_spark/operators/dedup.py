@@ -15,11 +15,7 @@ Every banded candidate path (MinHash, SimHash, and the embedding sketch in
 ``similarity``) is ``band_rows`` -> ``bucket_join``: one band explode, one
 hot-bucket cap, one self-join per shared bucket.
 
-Hashing is md5-based (not xxhash64) so every operator has a bit-identical
-DuckDB twin for the correctness gate.
-
-Shared hash spec: h_seed(s) = int(substr(md5(s || '#' || seed), 1, 15), 16)
-                  (60-bit, positive, fits BIGINT in both engines)
+Every integer hash is ``textstats.md5_int_col`` (the shared hash spec).
 """
 
 from __future__ import annotations
@@ -28,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.scope import RunScope
-from .textstats import tokens_col
+from .textstats import md5_int, md5_int_col, tokens_col
 
 N_MINHASH = 16
 BAND_SIZE = 2  # 8 bands of 2 rows
@@ -125,9 +121,7 @@ def _xor_constants(k: int) -> list:
     """Deterministic 60-bit XOR family constants: X_i = md5('seed:i')[:15].
     One md5 per SHINGLE total (not per shingle x seed): h_i = h0 XOR X_i —
     16x fewer hashes than seeding the digest, same oracle-exactness."""
-    import hashlib
-
-    return [int(hashlib.md5(f"seed:{i}".encode()).hexdigest()[:15], 16) for i in range(k)]
+    return [md5_int(f"seed:{i}", 1, 15) for i in range(k)]
 
 
 def minhash_signatures(documents: DataFrame) -> DataFrame:
@@ -136,8 +130,7 @@ def minhash_signatures(documents: DataFrame) -> DataFrame:
     row-multiplying seed explode; map-side partial min makes this shuffle
     a few long-ints per doc)."""
     sh = shingles(documents)
-    h0 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h0.alias("h0"))
+    hashed = sh.select("doc_id", md5_int_col(F.col("shingle"), 1, 15).alias("h0"))
     xs = _xor_constants(N_MINHASH)
     return hashed.groupBy("doc_id").agg(
         *[F.min(F.expr(f"h0 ^ {x}L")).alias(f"m{i}") for i, x in enumerate(xs)]
@@ -355,10 +348,9 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     if bits not in (32, 64):
         raise ValueError(f"simhash bits must be 32 or 64, got {bits}")
     toks = documents.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("tok"))
-    md5c = F.md5(F.col("tok"))
-    cols = [F.conv(F.substring(md5c, 1, 8), 16, 10).cast("long").alias("lo")]
+    cols = [md5_int_col(F.col("tok"), 1, 8).alias("lo")]
     if bits > 32:
-        cols.append(F.conv(F.substring(md5c, 9, 8), 16, 10).cast("long").alias("hi"))
+        cols.append(md5_int_col(F.col("tok"), 9, 8).alias("hi"))
     hashed = toks.select("doc_id", *cols)
 
     def bit(b: int) -> str:
@@ -585,17 +577,12 @@ BLOOM_M_BITS = 1 << 16  # filter width (bits); false-positive knob
 BLOOM_K = 4             # hash functions
 
 
-def _bloom_pos_sql(i: int) -> str:
-    """The i-th bit position of a fingerprint, as a SQL expression string:
-    pos_i = int(md5(fp || ':' || i)[:5], 16) % BLOOM_M_BITS — 20 hex-derived bits per
-    hash, md5-based so the DuckDB oracle computes identical positions.
-    (Strings, not Column objects: the shift functions' bit-count argument
-    is expression-valued, which the Python shiftleft/shiftright API does
-    not accept.)"""
-    return (
-        f"pmod(cast(conv(substring(md5(concat(fp, ':{i}')), 1, 5), 16, 10) "
-        f"as bigint), {BLOOM_M_BITS})"
-    )
+def _bloom_pos(i: int):
+    """The i-th bit position of a fingerprint:
+    pos_i = md5_int(fp || ':' || i, 1, 5) % BLOOM_M_BITS — 20 hex-derived
+    bits per hash, md5-based so the DuckDB oracle computes identical
+    positions."""
+    return F.pmod(md5_int_col(F.concat(F.col("fp"), F.lit(f":{i}")), 1, 5), F.lit(BLOOM_M_BITS))
 
 
 def bloom_dedup(seen: DataFrame, new: DataFrame) -> DataFrame:
@@ -647,11 +634,8 @@ def bloom_dedup(seen: DataFrame, new: DataFrame) -> DataFrame:
     seen_fp = seen.select(F.md5(norm).alias("fp"))
     new_fp = new.select("doc_id", F.md5(norm).alias("fp"))
 
-    pos_arr = F.expr(
-        "array(" + ",".join(_bloom_pos_sql(i) for i in range(BLOOM_K)) + ")"
-    )
     seen_bits = (
-        seen_fp.select(F.explode(pos_arr).alias("pos"))
+        seen_fp.select(F.explode(F.array(*map(_bloom_pos, range(BLOOM_K)))).alias("pos"))
         .select(
             (F.col("pos") / 64).cast("int").alias("w"),
             F.expr("shiftleft(1L, cast(pmod(pos, 64) as int))").alias("bit"),
@@ -664,15 +648,18 @@ def bloom_dedup(seen: DataFrame, new: DataFrame) -> DataFrame:
         words[r.w] = r.bits
     bitmap = "array(" + ",".join(f"{w}L" for w in words) + ")"
 
+    # the shift functions' bit-count argument is expression-valued, which
+    # the Python shiftleft/shiftright API does not accept: SQL over _p<i>
     maybe = " AND ".join(
-        f"((shiftright(element_at(_bm, cast(({_bloom_pos_sql(i)}) / 64 as int) + 1), "
-        f"cast(pmod({_bloom_pos_sql(i)}, 64) as int)) & 1L) = 1L)"
+        f"((shiftright(element_at(_bm, cast(_p{i} / 64 as int) + 1), "
+        f"cast(pmod(_p{i}, 64) as int)) & 1L) = 1L)"
         for i in range(BLOOM_K)
     )
     probed = (
-        new_fp.withColumn("_bm", F.expr(bitmap))
+        new_fp.select("doc_id", "fp", *[_bloom_pos(i).alias(f"_p{i}") for i in range(BLOOM_K)])
+        .withColumn("_bm", F.expr(bitmap))
         .withColumn("_maybe", F.expr(maybe))
-        .drop("_bm")
+        .select("doc_id", "fp", "_maybe")
     )
 
     maybe_rows = probed.where(F.col("_maybe"))
@@ -804,12 +791,11 @@ def substring_anchors(documents: DataFrame) -> DataFrame:
     grams = F.when(
         F.size(toks) >= k, _gram_chain(toks, k)
     ).otherwise(F.array().cast("array<string>"))
-    h32 = F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
     return (
         documents.select(
             "doc_id", F.explode(F.array_distinct(grams)).alias("gram")
         )
-        .where(F.pmod(h32, F.lit(SUBSTR_ANCHOR_MOD)) == 0)
+        .where(F.pmod(md5_int_col(F.col("gram"), 1, 8), F.lit(SUBSTR_ANCHOR_MOD)) == 0)
         .select("doc_id", F.md5(F.col("gram")).alias("anchor"))
     )
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .dedup import band_rows, bucket_join
+from .textstats import md5_int
 
 SIM_ROUND = 4
 TOPK = 5  # neighbours per query of the top-k paths
@@ -119,14 +120,7 @@ def plane_weights(plane_id: int, dim: int) -> list:
     (r01 verdict #3: the old version re-derived these with per-row md5 folds
     inside the JVM expression, ~dim x planes md5 calls per vector).  Plane id
     ``t*1000 + p`` keeps bit-compatibility with the r01 sketch."""
-    import hashlib
-
-    return [
-        int(hashlib.md5(f"{plane_id}:{i}".encode()).hexdigest()[:8], 16)
-        / 2147483647.5
-        - 1.0
-        for i in range(dim)
-    ]
+    return [md5_int(f"{plane_id}:{i}", 1, 8) / 2147483647.5 - 1.0 for i in range(dim)]
 
 
 def _proj_sql(weights: list) -> str:

@@ -20,13 +20,11 @@ No-overflow proof: the k hashes are distinct non-negative ints, so
 
 Scale shape: shingle explode is map-only; the ONE real shuffle is the
 (source, h) distinct, a groupBy that gets map-side partial dedup (viral
-duplicate shingles collapse before the wire).  Min-k then uses the
-domain_cap two-phase salted rank: phase 1 ranks within (source, h mod
-KMV_SALT_MOD) so no task sorts a whole source's distinct set; phase 2
-re-ranks the <= KMV_SALT_MOD*k survivors per source.  Union of per-salt
-min-k provably contains the global min-k, so the oracle is the plain
-ROW_NUMBER()<=k formulation.  Pick the salt ~ distinct_per_source / 1e6
-in production.
+duplicate shingles collapse before the wire).  Min-k then is the
+two-phase ``plans.partitioning.salted_min_k`` with salt h mod
+``KMV_SALT_MOD``, so no task sorts a whole source's distinct set; the
+oracle is the plain ROW_NUMBER()<=k formulation.  Pick the salt ~
+distinct_per_source / 1e6 in production.
 
 No reference analogue (the reference has no sketch surface); sibling of
 the Bloom filter in ``operators/dedup.py`` — same "constant-size summary
@@ -35,39 +33,16 @@ of an unbounded corpus" class, read side instead of write side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.partitioning import salted_min_k
 from .dedup import shingles
+from .textstats import md5_int_col
 
 KMV_K = 64
 KMV_SALT_MOD = 8
-HASH_SPACE = 1 << 60  # repo-standard conv(substr(md5,1,15),16,10) range
-
-
-def _min_k(d: DataFrame) -> DataFrame:
-    """``KMV_K`` smallest ``h`` per source over a frame of DISTINCT (source,
-    h) rows — the domain_cap two-phase salted rank (rows are distinct, so
-    plain row_number ranks distinct VALUES)."""
-    k = KMV_K
-    p1 = (
-        d.withColumn("_salt", F.pmod(F.col("h"), F.lit(KMV_SALT_MOD)).cast("int"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("source", "_salt").orderBy("h")
-            ),
-        )
-        .where(F.col("rk") <= k)
-    )
-    # bounded window: <= KMV_SALT_MOD * k rows per source by construction
-    return (
-        p1.withColumn(
-            "rk2", F.row_number().over(Window.partitionBy("source").orderBy("h"))
-        )
-        .where(F.col("rk2") <= k)
-        .select("source", "h")
-    )
+HASH_SPACE = 1 << 60  # range of md5_int_col(s, 1, 15)
 
 
 def kmv_state(documents: DataFrame) -> DataFrame:
@@ -75,10 +50,10 @@ def kmv_state(documents: DataFrame) -> DataFrame:
     shingle hashes per source (<= k rows/source); ``kmv_stats`` turns it
     into the summary row."""
     sh = shingles(documents, carry=("source",))
-    h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
     # the one real shuffle: distinct (source, h) — compiles to a
     # HashAggregate pair, so viral duplicates collapse map-side
-    return _min_k(sh.select("source", h.alias("h")).distinct())
+    d = sh.select("source", md5_int_col(F.col("shingle"), 1, 15).alias("h")).distinct()
+    return salted_min_k(d, "source", "h", KMV_K, KMV_SALT_MOD).select("source", "h")
 
 
 def kmv_stats(state: DataFrame) -> DataFrame:

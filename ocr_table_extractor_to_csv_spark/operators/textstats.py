@@ -12,9 +12,13 @@ Specs (shared with the SQL oracles — change together or not at all):
   stopword_ratio = hits(lang stop set) / max(1, n_tokens)
   quality_score  = round(least(1, n_tokens/50) - punct_ratio, 5)
   lang_id        = argmax over per-language stopword hits, 'und' on ties/zero
+  md5_int(s, a, n) = int(substr(md5(s), a, n), 16)  (a 1-based, as SQL)
+  u(prefix)      = md5_int(prefix || doc_id, 1, 8) / 2^32
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +37,32 @@ def tokens_col(text: Column) -> Column:
     return F.when(t == "", F.array().cast("array<string>")).otherwise(
         F.split(t, r"\s+")
     )
+
+
+def md5_int_col(col: Column, start: int, n_hex: int) -> Column:
+    """The integer of the ``n_hex`` md5 hex chars of ``col`` from ``start``
+    (1-based) — the one hash spec of every md5-keyed operator.  Hashing is
+    md5-based (not xxhash64), so each operator has a bit-identical DuckDB
+    twin: ``CAST('0x' || substr(md5(s), start, n_hex) AS BIGINT)``.  At
+    most 15 hex chars (60 bits) keeps the value positive in a BIGINT on
+    both engines; the min-hash and sketch keys take chars 1-15, the 32-bit
+    keys chars 1-8 (and 9-16 for simhash's high word)."""
+    return F.conv(F.substring(F.md5(col), start, n_hex), 16, 10).cast("long")
+
+
+def md5_int(s: str, start: int, n_hex: int) -> int:
+    """``md5_int_col`` on the driver, for constants derived from the same
+    spec (the MinHash XOR family, the LSH hyperplanes)."""
+    return int(hashlib.md5(s.encode()).hexdigest()[start - 1 : start - 1 + n_hex], 16)
+
+
+def uniform_col(prefix: str) -> Column:
+    """u = md5_int(prefix || doc_id, 1, 8) / 2^32, a uniform draw in [0, 1)
+    per document: reproducible on any cluster, partitioning or retry
+    (rand() is none of those), and bit-exact in every engine because the
+    division is by a power of two."""
+    key = F.concat(F.lit(prefix), F.col("doc_id").cast("string"))
+    return md5_int_col(key, 1, 8) / F.lit(float(2**32))
 
 
 def token_count(documents: DataFrame) -> DataFrame:
@@ -235,6 +265,7 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
 
 VOCAB_TOPK = 100  # vocab_topk's k
 SEARCH_TOPK = 20  # search_topk's k
+SEARCH_TERMS = ("data", "join", "scan", "vector")  # search_topk's query bag
 
 
 def vocab_topk(documents: DataFrame) -> DataFrame:
@@ -259,9 +290,9 @@ def vocab_topk(documents: DataFrame) -> DataFrame:
     )
 
 
-def search_topk(documents: DataFrame, query_terms) -> DataFrame:
-    """Keyword search scoring: top-``SEARCH_TOPK`` documents for a bag of query terms
-    — (doc_id, n_hits, score), score = sum over matched terms of
+def search_topk(documents: DataFrame) -> DataFrame:
+    """Keyword search scoring: top-``SEARCH_TOPK`` documents for the query
+    bag ``SEARCH_TERMS`` — (doc_id, n_hits, score), score = sum over matched terms of
     tf(term, doc) * (N + 1) / (df(term) + 1).
 
     The idf is the RATIONAL variant (not ln): every factor is an exact-int
@@ -273,7 +304,7 @@ def search_topk(documents: DataFrame, query_terms) -> DataFrame:
     (the explode emits only matching terms), df is a tiny per-term
     aggregate joined back broadcast-style, and the final top-k is a
     distributed orderBy + limit."""
-    terms = sorted(set(query_terms))
+    terms = sorted(set(SEARCH_TERMS))
     toks = tokens_col(F.col("text"))
     matches = documents.select(
         "doc_id",
@@ -329,25 +360,23 @@ def source_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def mix_plan(
-    documents: DataFrame,
-    budget_tokens: int = 1_000_000,
-    weights: dict | None = None,
-) -> DataFrame:
-    """Training-mix planning: per-source sampling rates that hit a token
-    ``budget_tokens`` under target mix ``weights`` — (source,
-    available_tokens, weight, target_tokens, sample_rate, epochs) ordered
-    by source.
+# mix_plan's target: source -> fraction of a MIX_BUDGET-token budget
+MIX_WEIGHTS = {"src0": 0.5, "src1": 0.3, "src2": 0.15, "src_licensed": 0.05}
+MIX_BUDGET = 10_000
 
-    ``weights`` maps source -> target fraction of the budget; None means
-    uniform over observed sources.  Sources with zero weight stay in the
-    output at rate 0 (excluded visibly, never silently dropped), and a
-    WEIGHTED source with no corpus rows surfaces too (full-outer join of
-    the weight keys against observed sources: available_tokens 0, rate 0,
-    a visibly unmeetable target — r5 advice: its budget slice must never
-    vanish silently).
+
+def mix_plan(documents: DataFrame) -> DataFrame:
+    """Training-mix planning: per-source sampling rates that hit a token
+    budget of ``MIX_BUDGET`` under the target mix ``MIX_WEIGHTS`` —
+    (source, available_tokens, weight, target_tokens, sample_rate, epochs)
+    ordered by source.
+
+    Sources with zero weight stay in the output at rate 0 (excluded
+    visibly, never silently dropped), and a WEIGHTED source with no corpus
+    rows surfaces too (available_tokens 0, rate 0, a visibly unmeetable
+    target — its budget slice must never vanish silently).
     ``sample_rate`` = min(1, target/available) is what you pass to a
-    deterministic sampler (``sample_stratified``'s md5-u rule);
+    deterministic sampler (``uniform_col``);
     ``epochs`` = target/available > 1 flags UPSAMPLING (the source must
     repeat to meet its target — a real mix-planning decision, surfaced
     not clamped).  A source with ZERO available tokens (all-empty docs)
@@ -356,40 +385,24 @@ def mix_plan(
     visibly unmeetable (target > 0, rate 0).
 
     Scale shape: one corpus pass (integer token sums, map-side partials)
-    reduces to one row per source; the planning arithmetic runs on that
-    bounded frame (sources are human-scale — thousands at most) via a
-    broadcast of the single-row totals.  All divisions are IEEE double
-    ops in a fixed order, so the DuckDB oracle is bit-identical.
+    plus one zero-token row per weighted source reduces to one row per
+    source in ONE aggregate — no join; sources are human-scale (thousands
+    at most).  All divisions are IEEE double ops in a fixed order, so the
+    DuckDB oracle is bit-identical.
     """
-    q = quality_columns(F.col("text"))
-    per_source = (
-        documents.select("source", q["n_tokens"].alias("n_tokens"))
+    wkeys = documents.sparkSession.createDataFrame(
+        [(s, 0) for s in sorted(MIX_WEIGHTS)], "source string, n_tokens int"
+    )
+    planned = (
+        documents.select("source", F.size(tokens_col(F.col("text"))).alias("n_tokens"))
+        .unionByName(wkeys)
         .groupBy("source")
         .agg(F.sum("n_tokens").alias("available_tokens"))
     )
-    if weights is None:
-        # the totals join exists only for the uniform default; explicit
-        # weights keep the plan a single aggregate
-        totals = per_source.agg(F.count("*").alias("_n_sources"))
-        planned = per_source.crossJoin(F.broadcast(totals))
-        weight = F.lit(1.0) / F.col("_n_sources")
-    else:
-        # weight keys outer-joined so absent-but-weighted sources surface
-        # with available_tokens 0; both sides are bounded (one row per
-        # source / per weight key), so the full-outer shuffle is trivial
-        wkeys = documents.sparkSession.createDataFrame(
-            [(str(s),) for s in sorted(weights)], "source string"
-        )
-        planned = per_source.join(wkeys, "source", "full_outer").select(
-            "source",
-            F.coalesce(F.col("available_tokens"), F.lit(0).cast("long")).alias(
-                "available_tokens"
-            ),
-        )
-        weight = F.lit(0.0)
-        for src, w in sorted(weights.items()):
-            weight = F.when(F.col("source") == src, F.lit(float(w))).otherwise(weight)
-    target = F.lit(float(budget_tokens)) * weight
+    weight = F.lit(0.0)
+    for src, w in sorted(MIX_WEIGHTS.items()):
+        weight = F.when(F.col("source") == src, F.lit(float(w))).otherwise(weight)
+    target = F.lit(float(MIX_BUDGET)) * weight
     ratio = F.when(
         F.col("available_tokens") > 0, target / F.col("available_tokens")
     )
@@ -493,10 +506,7 @@ def _qc_token_rows(documents: DataFrame) -> DataFrame:
         "doc_id", "label", F.explode_outer("_toks").alias("tok")
     ).where(F.col("tok").isNotNull()).withColumn(
         "bucket",
-        F.pmod(
-            F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long"),
-            F.lit(QC_BUCKETS),
-        ).cast("int"),
+        F.pmod(md5_int_col(F.col("tok"), 1, 8), F.lit(QC_BUCKETS)).cast("int"),
     )
 
 
@@ -556,18 +566,12 @@ def score_quality(documents: DataFrame, stats: DataFrame) -> DataFrame:
     )
 
 
-def mix_sample(
-    documents: DataFrame,
-    budget_tokens: int = 1_000_000,
-    weights: dict | None = None,
-) -> DataFrame:
+def mix_sample(documents: DataFrame) -> DataFrame:
     """Materialize a ``mix_plan``: the actual training-mix sample as
     (doc_id, source, n_tokens, copy) rows, with DETERMINISTIC upsampling —
     closing the plan -> corpus loop (the step a trainer actually reads).
 
-    Per document: u = first-32-bits of md5('mix:' || doc_id) / 2^32
-    (bit-exact uniform in every engine — power-of-two division, the
-    ``sample_stratified`` rule); with e = the plan's rounded ``epochs``
+    Per document: u = ``uniform_col("mix:")``; with e = the plan's rounded ``epochs``
     for its source, the doc is emitted ``floor(e) + (u < e - floor(e))``
     times (``copy`` = 1..n).  e < 1 reduces to plain u < e subsampling;
     e > 1 emits floor(e) guaranteed copies plus one u-gated partial copy
@@ -582,24 +586,12 @@ def mix_sample(
     reproducible on any cluster, partitioning, or retry — rand() is
     none of those.
     """
-    plan = mix_plan(documents, budget_tokens, weights).select("source", "epochs")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(float(2**32))
-    )
+    plan = mix_plan(documents).select("source", "epochs")
     docs = documents.select(
         "doc_id",
         "source",
         F.size(tokens_col(F.col("text"))).alias("n_tokens"),
-        u.alias("_u"),
+        uniform_col("mix:").alias("_u"),
     )
     frac = F.col("epochs") - F.floor(F.col("epochs"))
     n_copies = (

@@ -35,6 +35,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.partitioning import salted_min_k
+from .textstats import md5_int_col
+
 
 def canonicalize_url(url: Column) -> Column:
     """Canonical form of an absolute http(s) URL as a pure column
@@ -96,15 +99,7 @@ def with_synth_url(documents: DataFrame) -> DataFrame:
     ``/index.html``, ``utm_*`` params, a fragment — exactly the variants
     ``canonicalize_url`` must fold.  Pure column expressions (md5 bits),
     so the DuckDB oracle reproduces the same bytes."""
-    b = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("url:"), F.col("doc_id").cast("string"))), 1, 2
-            ),
-            16,
-            10,
-        ).cast("int")
-    )
+    b = md5_int_col(F.concat(F.lit("url:"), F.col("doc_id").cast("string")), 1, 2)
     host = F.concat(F.col("source"), F.lit(".example.com"))
     slot = (F.col("doc_id") % SYNTH_URL_SLOTS).cast("string")
     raw = F.concat(
@@ -182,6 +177,14 @@ BANNED_URL_WORDS = ["casino", "viagra", "porn", "xxx"]
 
 
 URL_MAX_PATH_DEPTH = 8  # url_filter: deeper paths are crawler traps
+# url_filter's operating point, chosen so every other rule discriminates
+# on the with_synth_url bytes: the utm bit trips URL_MAX_PARAMS, the
+# two-digit srcNN hosts trip the digit ratio, two hosts are blocklisted
+URL_MAX_PARAMS = 1
+URL_MAX_HOST_DIGIT_RATIO = 0.1
+URL_BLOCKLIST = ("src3.example.com", "src7.example.com")
+DOMAIN_CAP = 10  # domain_cap: documents kept per canonical host
+DOMAIN_SALT_MOD = 4  # domain_cap: phase-1 salt of salted_min_k
 
 
 def _canon_parts():
@@ -193,33 +196,26 @@ def _canon_parts():
     return host, path
 
 
-def url_filter(
-    documents_with_url: DataFrame,
-    blocklist_hosts: list[str] | None = None,
-    *,
-    max_params: int = 4,
-    max_host_digit_ratio: float = 0.25,
-) -> DataFrame:
+def url_filter(documents_with_url: DataFrame) -> DataFrame:
     """URL-level document filtering — the RefinedWeb-style gate that runs
     before any content is even parsed: per-document URL signals, one
     boolean per rule, and the conjunction verdict ``keep``.
 
     Rules (each also surfaced as its own flag column):
 
-    * ``host_blocked`` — canonical host appears in ``blocklist_hosts``
-      (real pipelines carry ~10^6-row curated blocklists: modeled as a
-      BROADCAST left join, never a literal ``isin`` — the list is data,
-      not code)
+    * ``host_blocked`` — canonical host appears in ``URL_BLOCKLIST``
+      (real pipelines carry ~10^6-row curated blocklists: a BROADCAST
+      left join, never a literal ``isin`` — the list is data, not code)
     * ``banned_hit`` — the RAW url contains a :data:`BANNED_URL_WORDS`
       substring (case-insensitive; raw, because spam keywords often ride
       in the query/fragment that canonicalization strips)
-    * ``too_many_params`` — more than ``max_params`` RAW query params
+    * ``too_many_params`` — more than ``URL_MAX_PARAMS`` RAW query params
       (tracking-parameter overload is itself a spam signal, so the raw
       count is scored even though canonicalization drops ``utm_*``)
     * ``path_too_deep`` — more than ``URL_MAX_PATH_DEPTH`` non-empty path
       segments (calendar/faceted-navigation crawler traps)
     * ``digit_host`` — digit fraction of the host above
-      ``max_host_digit_ratio`` (throwaway spam domains)
+      ``URL_MAX_HOST_DIGIT_RATIO`` (throwaway spam domains)
 
     Scale shape: map-only column expressions + ONE broadcast join for the
     blocklist; no corpus shuffle.  Runs with (before) gopher_rules in the
@@ -247,12 +243,12 @@ def url_filter(
         path_depth.alias("path_depth"),
         F.round(digit_ratio, 5).alias("host_digit_ratio"),
         banned_hit.alias("banned_hit"),
-        (n_params > max_params).alias("too_many_params"),
+        (n_params > URL_MAX_PARAMS).alias("too_many_params"),
         (path_depth > URL_MAX_PATH_DEPTH).alias("path_too_deep"),
-        (digit_ratio > max_host_digit_ratio).alias("digit_host"),
+        (digit_ratio > URL_MAX_HOST_DIGIT_RATIO).alias("digit_host"),
     )
     block = spark.createDataFrame(
-        [(h,) for h in sorted(set(blocklist_hosts or []))], "host string"
+        [(h,) for h in sorted(set(URL_BLOCKLIST))], "host string"
     ).withColumn("_blocked", F.lit(True))
     scored = scored.join(F.broadcast(block), "host", "left").withColumn(
         "host_blocked", F.coalesce(F.col("_blocked"), F.lit(False))
@@ -278,55 +274,29 @@ def url_filter(
     )
 
 
-def domain_cap(
-    documents_with_url: DataFrame,
-    cap: int = 20,
-    *,
-    salt_mod: int = 8,
-) -> DataFrame:
-    """Per-domain document cap: keep the ``cap`` smallest ``doc_id``s of
-    every canonical host (deterministic on any partitioning), returning
+def domain_cap(documents_with_url: DataFrame) -> DataFrame:
+    """Per-domain document cap: keep the ``DOMAIN_CAP`` smallest ``doc_id``s
+    of every canonical host (deterministic on any partitioning), returning
     (host, doc_id, domain_rank).  The web-scale anti-boilerplate /
     anti-SEO-farm measure: one domain contributing 10^8 near-identical
     pages must not dominate the training mix.
 
-    Exact two-phase min-k, skew-safe by construction:
-
-    * phase 1 ranks within (host, doc_id % salt_mod) — the SALT bounds
-      every window partition to ~1/salt_mod of the hottest domain, so no
-      single task sorts a whole viral domain (the repo's window-over-
-      hot-key rule; the window sort itself is spillable)
-    * phase 2 re-ranks the survivors within host — input is pre-capped
-      at salt_mod x cap rows per host, so the host-keyed window is
-      bounded by CONSTRUCTION, not by data (documented exception to the
-      no-data-skewed-window pin)
-
-    The union of per-salt min-k sets contains the global min-k, so the
-    result is exactly ROW_NUMBER() OVER (PARTITION BY host ORDER BY
-    doc_id) <= cap (the oracle's formulation).  At 100 TB: shuffled
-    bytes are (host, salt, doc_id) triples — no payload moves; pick
-    salt_mod ~ max_domain_docs / 10^6 so phase-1 partitions stay
-    executor-sized.
+    Exact and skew-safe by construction: ``salted_min_k`` with salt
+    doc_id mod ``DOMAIN_SALT_MOD`` equals ROW_NUMBER() OVER (PARTITION BY
+    host ORDER BY doc_id) <= cap (the oracle's formulation), and its
+    host-keyed phase-2 window is bounded by construction, not by data
+    (documented exception to the no-data-skewed-window pin).  At 100 TB
+    the shuffled bytes are (host, salt, doc_id) triples — no payload
+    moves.
 
     Documents whose URL has no scheme:// (canonical host = '') group
     under the '' host and are capped together — callers that want them
     exempt should pre-filter.  No reference analogue.
     """
-    from pyspark.sql import Window
-
     host, _ = _canon_parts()
     ids = documents_with_url.select("doc_id", host.alias("host"))
-    w1 = Window.partitionBy("host", "_salt").orderBy("doc_id")
-    local = (
-        ids.withColumn("_salt", (F.col("doc_id") % salt_mod).cast("int"))
-        .withColumn("_r", F.row_number().over(w1))
-        .where(F.col("_r") <= cap)
-    )
-    # bounded window: <= salt_mod * cap rows per host by construction
-    w2 = Window.partitionBy("host").orderBy("doc_id")
     return (
-        local.select("host", "doc_id")
-        .withColumn("domain_rank", F.row_number().over(w2))
-        .where(F.col("domain_rank") <= cap)
+        salted_min_k(ids, "host", "doc_id", DOMAIN_CAP, DOMAIN_SALT_MOD)
+        .withColumnRenamed("rk", "domain_rank")
         .orderBy("host", "domain_rank")
     )

@@ -264,13 +264,11 @@ def wet_to_documents(pages: DataFrame) -> DataFrame:
     downstream).  Map-only, zero shuffle."""
     from pyspark.sql import functions as F
 
-    from ..operators.textstats import lang_pred_col
+    from ..operators.textstats import lang_pred_col, md5_int_col
 
     return pages.where(F.col("error").isNull() if "error" in pages.columns
                        else F.lit(True)).select(
-        F.conv(F.substring(F.md5(F.col("url")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("doc_id"),
+        md5_int_col(F.col("url"), 1, 15).alias("doc_id"),
         "url",
         "warc_ts",
         "text",

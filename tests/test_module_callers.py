@@ -215,13 +215,17 @@ def test_every_entry_name_is_used():
 
 PRODUCT = ["__spark_entry__.py", "bench.py", "jobs/*.py", "tools/*.py", f"{PKG}/**/*.py"]
 
-# Defaulted parameters no product call site sets, each kept on purpose.
+# Defaulted parameters no product call site sets, or that product code
+# sets to one value only, each kept on purpose.
 OPTION_EXCEPTIONS = {
     # perfbench's tracer substitutes this factory and calls it positionally
     # with both arguments, so its signature is the benchmark's interface
     ("make_extract_fn", "default_args"),
     # perfbench's corpus builds its giant pages per benchmark seed
     ("generate_fixture", "seed"),
+    # bench.py, the benchmark's own script, is its one product caller; the
+    # Spark extraction tests build smaller giants
+    ("fixture_pages", "giant_tokens"),
 }
 
 
@@ -293,17 +297,27 @@ def _is_default(value: ast.expr, value_env: dict, default: ast.expr, default_env
     return ast.dump(value) == ast.dump(default)
 
 
-def test_every_option_is_set_by_a_product_caller():
-    """A defaulted parameter of a package or ``__spark_entry__.py`` function
-    that product code calls must be passed a non-default value at some
-    product call site (the package, ``jobs/``, ``tools/``,
-    ``__spark_entry__.py``, ``bench.py``): a value only the default ever
-    takes is a module constant, not an option.  Values are compared, not
-    spellings: a module constant passed where it equals the default sets
-    nothing.  Calls resolve by name, so a same-named call anywhere counts;
-    ``*args``/``**kwargs`` count as setting everything they could reach."""
+_DEFAULT = object()  # a call site that leaves (or restates) the default
+
+
+def _site_value(value: ast.expr, value_env: dict, default: ast.expr, default_env: dict):
+    """What one call site passes: ``_DEFAULT``, the repr (a ``str``) of a
+    value built from constants, or else an object of its own."""
+    if _is_default(value, value_env, default, default_env):
+        return _DEFAULT
+    v, known = _value(value, value_env)
+    return repr(v) if known else object()
+
+
+def _option_sites() -> dict:
+    """(function, defaulted parameter) -> what each product call site
+    (the package, ``jobs/``, ``tools/``, ``__spark_entry__.py``,
+    ``bench.py``) passes it, for every package or ``__spark_entry__.py``
+    function that product code calls.  Calls resolve by name, so a
+    same-named call anywhere counts; ``*args``/``**kwargs`` pass an
+    unknown value to everything they could reach."""
     functions = _option_functions()
-    called, passed = set(), set()
+    sites: dict = {}
     for path, tree in _product_trees():
         env = _globals_of(path)
         for call in ast.walk(tree):
@@ -312,34 +326,56 @@ def test_every_option_is_set_by_a_product_caller():
             f = call.func
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             for fn, is_method, fn_path in functions.get(name, []):
-                called.add(fn)
                 dfl = _defaults(fn)
                 fn_env = _globals_of(fn_path)
-
-                def is_default(arg, param):
-                    return _is_default(arg, env, dfl[param], fn_env)
-
                 pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
                 if is_method and pos and pos[0] in ("self", "cls"):
                     pos = pos[1:]
+                given = {}
                 for i, arg in enumerate(call.args):
                     if isinstance(arg, ast.Starred):
-                        passed.update((fn, p) for p in pos[i:])
+                        given.update((p, object()) for p in pos[i:])
                         break
-                    if i < len(pos) and pos[i] in dfl and not is_default(arg, pos[i]):
-                        passed.add((fn, pos[i]))
+                    if i < len(pos) and pos[i] in dfl:
+                        given[pos[i]] = _site_value(arg, env, dfl[pos[i]], fn_env)
                 for kw in call.keywords:
                     if kw.arg is None:
-                        passed.update((fn, p) for p in dfl)
-                    elif kw.arg in dfl and not is_default(kw.value, kw.arg):
-                        passed.add((fn, kw.arg))
+                        given.update((p, object()) for p in dfl)
+                    elif kw.arg in dfl:
+                        given[kw.arg] = _site_value(kw.value, env, dfl[kw.arg], fn_env)
+                for p in dfl:
+                    sites.setdefault((fn, p), []).append(given.get(p, _DEFAULT))
+    return sites
+
+
+def test_every_option_is_set_by_a_product_caller():
+    """A defaulted parameter of a package or ``__spark_entry__.py`` function
+    that product code calls must be passed a non-default value at some
+    product call site: a value only the default ever takes is a module
+    constant, not an option.  Values are compared, not spellings: a module
+    constant passed where it equals the default sets nothing."""
     unset = sorted(
         f"{fn.name}({p}=...) line {fn.lineno}"
-        for fn in called
-        for p in _defaults(fn)
-        if (fn, p) not in passed and (fn.name, p) not in OPTION_EXCEPTIONS
+        for (fn, p), values in _option_sites().items()
+        if all(v is _DEFAULT for v in values) and (fn.name, p) not in OPTION_EXCEPTIONS
     )
     assert unset == [], "options no product caller sets"
+
+
+def test_no_option_takes_one_product_value():
+    """The converse: a defaulted parameter whose default no product call
+    site uses, and which every product call site sets to the same value,
+    is that value spelled at its callers — a module constant, not an
+    option (tests set other values with monkeypatch).  A value not built
+    from constants could be any, so a site passing one clears the check."""
+    single = sorted(
+        f"{fn.name}({p}=...) line {fn.lineno}"
+        for (fn, p), values in _option_sites().items()
+        if all(isinstance(v, str) for v in values)
+        and len(set(values)) == 1
+        and (fn.name, p) not in OPTION_EXCEPTIONS
+    )
+    assert single == [], "options product code sets to one value only"
 
 
 def test_every_public_package_function_is_named_by_product_code():
@@ -355,3 +391,37 @@ def test_every_public_package_function_is_named_by_product_code():
         if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_") and fn.name not in used
     ]
     assert unnamed == [], "package functions no product code names"
+
+
+# The md5-integer hash spec, each spelling with the one function that may
+# spell it: the engine's column helper, its driver-side twin, and the
+# oracles' SQL builder (the oracles do not import the engine helpers).
+_HASH_SPELLINGS = [
+    (r"conv\(\s*(?:F\.)?substring\(\s*(?:F\.)?md5\(", PKG, "md5_int_col"),
+    (r"int\(\s*hashlib\.md5\(", PKG, "md5_int"),
+    (r"'0x'\s*\|\|\s*substr\(\s*md5\(", "__spark_entry__.py", "_md5_int_sql"),
+]
+
+
+def test_one_spelling_of_the_md5_integer():
+    """No package module spells the md5-prefix integer outside
+    ``textstats.md5_int_col``/``md5_int``, and no oracle outside
+    ``_md5_int_sql``; each helper spells it exactly once."""
+    outside, in_owner = [], {}
+    for pattern, where, owner in _HASH_SPELLINGS:
+        root = ROOT / where
+        for path in sorted(root.rglob("*.py")) if root.is_dir() else [root]:
+            text = path.read_text()
+            spans = [
+                range(f.lineno, f.end_lineno + 1)
+                for f in ast.walk(ast.parse(text))
+                if isinstance(f, ast.FunctionDef) and f.name == owner
+            ]
+            for m in re.finditer(pattern, text, flags=re.I):
+                line = text.count("\n", 0, m.start()) + 1
+                if any(line in s for s in spans):
+                    in_owner[owner] = in_owner.get(owner, 0) + 1
+                else:
+                    outside.append(f"{path.relative_to(ROOT)}:{line}")
+    assert outside == [], "md5-integer spellings outside their helper"
+    assert in_owner == {owner: 1 for _, _, owner in _HASH_SPELLINGS}

@@ -559,14 +559,15 @@ def test_vocab_topk_counts_and_tie_cut(spark, monkeypatch):
     assert rows == [("a", 3, 2), ("z", 2, 2), ("b", 1, 1)]
 
 
-def test_search_topk_score_formula(spark):
+def test_search_topk_score_formula(spark, monkeypatch):
     from ocr_table_extractor_to_csv_spark.operators import textstats
 
     docs = spark.createDataFrame(
         [(1, "data data join"), (2, "data"), (3, "nothing here")],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r for r in textstats.search_topk(docs, ["data", "join"]).collect()}
+    monkeypatch.setattr(textstats, "SEARCH_TERMS", ("data", "join"))
+    rows = {r.doc_id: r for r in textstats.search_topk(docs).collect()}
     # N=3; df(data)=2, df(join)=1 -> idf(data)=4/3, idf(join)=4/2
     assert rows[1].n_hits == 2 and rows[1].score == round(2 * (4 / 3) + 1 * 2.0, 5)
     assert rows[2].n_hits == 1 and rows[2].score == round(1 * (4 / 3), 5)
@@ -936,9 +937,10 @@ def test_embedding_quantize_hand_case(spark):
     assert r2.scale == 0.0 and list(r2.q) == [0, 0, 0, 0] and r2.mean_abs_err == 0.0
 
 
-def test_mix_plan_hand_case(spark):
+def test_mix_plan_hand_case(spark, monkeypatch):
     """Mix planning: rates hit the budget, zero-weight sources stay
     visible at rate 0, and over-budget targets surface epochs > 1."""
+    from ocr_table_extractor_to_csv_spark.operators import textstats
     from ocr_table_extractor_to_csv_spark.operators.textstats import mix_plan
 
     docs = spark.createDataFrame(
@@ -950,9 +952,9 @@ def test_mix_plan_hand_case(spark):
         ],
         "doc_id long, text string, source string",
     )
-    rows = {r.source: r for r in mix_plan(
-        docs, budget_tokens=20, weights={"big": 0.5, "small": 0.4, "ghost": 0.1}
-    ).collect()}
+    monkeypatch.setattr(textstats, "MIX_BUDGET", 20)
+    monkeypatch.setattr(textstats, "MIX_WEIGHTS", {"big": 0.5, "small": 0.4, "ghost": 0.1})
+    rows = {r.source: r for r in mix_plan(docs).collect()}
     assert set(rows) == {"big", "small", "zero", "ghost"}
     assert rows["big"].available_tokens == 20 and rows["big"].sample_rate == 0.5
     assert rows["small"].sample_rate == 1.0 and rows["small"].epochs == 1.6  # upsample
@@ -1098,18 +1100,19 @@ def test_bloom_dedup_null_text_and_m_validation(spark):
     assert rows[12] == "dup"
 
 
-def test_mix_plan_zero_available_source(spark):
+def test_mix_plan_zero_available_source(spark, monkeypatch):
     """A source whose docs are all empty must not divide-by-zero: rate 0,
     NULL epochs — and a nonzero weight on it is visibly unmeetable."""
+    from ocr_table_extractor_to_csv_spark.operators import textstats
     from ocr_table_extractor_to_csv_spark.operators.textstats import mix_plan
 
     docs = spark.createDataFrame(
         [(1, "some real tokens here", "full"), (2, "   ", "empty")],
         "doc_id long, text string, source string",
     )
-    rows = {r.source: r for r in mix_plan(
-        docs, budget_tokens=10, weights={"full": 0.5, "empty": 0.5}
-    ).collect()}
+    monkeypatch.setattr(textstats, "MIX_BUDGET", 10)
+    monkeypatch.setattr(textstats, "MIX_WEIGHTS", {"full": 0.5, "empty": 0.5})
+    rows = {r.source: r for r in mix_plan(docs).collect()}
     assert rows["empty"].sample_rate == 0.0 and rows["empty"].epochs is None
     assert rows["empty"].target_tokens == 5.0  # unmeetable target is visible
     assert rows["full"].sample_rate == 1.0
@@ -1428,27 +1431,31 @@ def test_cluster_stats_accounting_and_invariance(spark):
     assert sorted(map(key, out)) == sorted(map(key, again))
 
 
-def test_mix_sample_integer_and_fractional_epochs(spark):
+def test_mix_sample_integer_and_fractional_epochs(spark, monkeypatch):
     """mix_sample copy semantics: epochs exactly 2.0 -> EVERY doc emitted
     exactly twice (copy 1..2, no u-gate involvement); epochs 0.5 -> each
     doc 0-or-1 copies with a nonempty strict subset kept.  Zero-weight
     sources emit nothing."""
+    from ocr_table_extractor_to_csv_spark.operators import textstats
     from ocr_table_extractor_to_csv_spark.operators.textstats import mix_sample
 
+    monkeypatch.setattr(textstats, "MIX_WEIGHTS", {"src_a": 1.0})
     docs = spark.createDataFrame(
         [(i, "src_a" if i < 40 else "src_b", " ".join(f"t{j}" for j in range(10)))
          for i in range(50)],
         "doc_id long, source string, text string",
     )
     # src_a: 40 docs x 10 tokens = 400 available; budget*1.0 = 800 -> e = 2.0
-    two = mix_sample(docs, budget_tokens=800, weights={"src_a": 1.0}).collect()
+    monkeypatch.setattr(textstats, "MIX_BUDGET", 800)
+    two = mix_sample(docs).collect()
     assert {r.source for r in two} == {"src_a"}  # src_b weight 0: nothing
     per_doc = {}
     for r in two:
         per_doc.setdefault(r.doc_id, []).append(r.copy)
     assert len(per_doc) == 40 and all(sorted(c) == [1, 2] for c in per_doc.values())
     # budget 200 -> e = 0.5: deterministic u-gated subset, 0 < kept < 40
-    half = mix_sample(docs, budget_tokens=200, weights={"src_a": 1.0}).collect()
+    monkeypatch.setattr(textstats, "MIX_BUDGET", 200)
+    half = mix_sample(docs).collect()
     kept = {r.doc_id for r in half}
     assert 0 < len(kept) < 40 and all(r.copy == 1 for r in half)
 
@@ -1501,6 +1508,9 @@ def test_url_filter_hand_cases(spark, monkeypatch):
     from ocr_table_extractor_to_csv_spark.operators.weburl import url_filter
 
     monkeypatch.setattr(weburl, "URL_MAX_PATH_DEPTH", 3)
+    monkeypatch.setattr(weburl, "URL_MAX_PARAMS", 2)
+    monkeypatch.setattr(weburl, "URL_MAX_HOST_DIGIT_RATIO", 0.25)
+    monkeypatch.setattr(weburl, "URL_BLOCKLIST", ("bad.example.com",))
 
     docs = spark.createDataFrame(
         [
@@ -1515,12 +1525,7 @@ def test_url_filter_hand_cases(spark, monkeypatch):
     )
     out = {
         r["doc_id"]: r
-        for r in url_filter(
-            docs,
-            ["bad.example.com"],
-            max_params=2,
-            max_host_digit_ratio=0.25,
-        ).collect()
+        for r in url_filter(docs).collect()
     }
     assert out[0]["keep"] and out[0]["n_params"] == 1 and out[0]["path_depth"] == 2
     assert out[1]["host_blocked"] and not out[1]["keep"]
@@ -1534,12 +1539,13 @@ def test_url_filter_hand_cases(spark, monkeypatch):
         assert not out[i]["keep"]
 
 
-def test_domain_cap_hand_case_and_window_equivalence(spark):
+def test_domain_cap_hand_case_and_window_equivalence(spark, monkeypatch):
     """Two-phase salted min-k == plain ROW_NUMBER()<=cap: a hand case with
     an uneven host, then equivalence against the window reference on the
     synth-URL corpus (the shape the oracle uses)."""
     from pyspark.sql import Window
 
+    from ocr_table_extractor_to_csv_spark.operators import weburl
     from ocr_table_extractor_to_csv_spark.operators.weburl import (
         canonicalize_url,
         domain_cap,
@@ -1550,9 +1556,11 @@ def test_domain_cap_hand_case_and_window_equivalence(spark):
         (100 + i, "https://b.com/q") for i in range(5)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, url string")
+    monkeypatch.setattr(weburl, "DOMAIN_CAP", 3)
+    monkeypatch.setattr(weburl, "DOMAIN_SALT_MOD", 2)
     got = [
         (r["host"], r["doc_id"], r["domain_rank"])
-        for r in domain_cap(docs, cap=3, salt_mod=2).collect()
+        for r in domain_cap(docs).collect()
     ]
     assert got == [
         ("a.com", 0, 1), ("a.com", 1, 2), ("a.com", 2, 3),
@@ -1563,6 +1571,8 @@ def test_domain_cap_hand_case_and_window_equivalence(spark):
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     )
     cap = 4
+    monkeypatch.setattr(weburl, "DOMAIN_CAP", cap)
+    monkeypatch.setattr(weburl, "DOMAIN_SALT_MOD", 3)
     ref = (
         synth.select(
             "doc_id",
@@ -1578,7 +1588,7 @@ def test_domain_cap_hand_case_and_window_equivalence(spark):
     )
     got2 = {
         (r["host"], r["doc_id"], r["domain_rank"])
-        for r in domain_cap(synth, cap=cap, salt_mod=3).collect()
+        for r in domain_cap(synth).collect()
     }
     want = {(r["host"], r["doc_id"], r["domain_rank"]) for r in ref.collect()}
     assert got2 == want

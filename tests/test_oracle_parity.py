@@ -184,6 +184,7 @@ ENGINE_ONLY = {
     "operators.curation.DECONTAMINATE_MAX_BROADCAST_SHINGLES": "join strategy (broadcast or shuffle); same rows",
     "operators.dedup.CC_MAX_ITER": "convergence bound: past it the iteration raises, it never changes a label",
     "operators.sketches.KMV_SALT_MOD": "skew salt of the two-phase min-k; the same k minima for any salt",
+    "operators.weburl.DOMAIN_SALT_MOD": "skew salt of the two-phase min-k; the same k minima for any salt",
     "plans.lineage.FAILED_SAMPLE": "manifest failed-url sample; no query reads manifests",
     "plans.partitioning.GIANT_THRESHOLD": (
         "the extract job's default giant cut; giants_resume passes its own, and "
@@ -209,17 +210,17 @@ def _is_number(x) -> bool:
     return isinstance(x, (int, float)) and not isinstance(x, bool)
 
 
-def _numeric_leaves(value, key=()):
-    """(key path, number) for every numeric leaf of a module constant: the
-    number itself, or each number inside its (nested) tuples and dict
-    values, also next to non-numeric fields (the min-token field of each
+def _leaves(value, is_leaf, key=()):
+    """(key path, leaf) for every leaf of a module constant that ``is_leaf``
+    accepts: the value itself, or each such leaf inside its (nested) tuples
+    and dict values, also next to other fields (the min-token field of each
     ``pages.KINDS`` row)."""
-    if _is_number(value):
+    if is_leaf(value):
         yield key, value
     elif isinstance(value, (tuple, dict)):
         items = value.items() if isinstance(value, dict) else enumerate(value)
         for k, v in items:
-            yield from _numeric_leaves(v, key + (k,))
+            yield from _leaves(v, is_leaf, key + (k,))
 
 
 def _replace(value, key, new):
@@ -256,7 +257,7 @@ def test_every_constant_moves_an_oracle(monkeypatch):
     for module, dotted, name in _package_constants():
         value = getattr(module, name)
         exempt = dotted in ENGINE_ONLY or f"{dotted}.{name}" in ENGINE_ONLY
-        for key, x in _numeric_leaves(value):
+        for key, x in _leaves(value, _is_number):
             seen.update({dotted, f"{dotted}.{name}"})
             new = x + 1 if isinstance(x, int) else x + 0.125
             with monkeypatch.context() as m:
@@ -270,6 +271,27 @@ def test_every_constant_moves_an_oracle(monkeypatch):
     assert sorted(set(ENGINE_ONLY) - seen) == [], "ENGINE_ONLY names no numeric constant"
     assert exempt_but_moved == [], "ENGINE_ONLY constants that an oracle reads"
     assert unmoved == [], "constants no oracle reads"
+
+
+# String constants an oracle spells, each with that oracle: every string
+# in the constant, moved alone, must change it (the guard above moves
+# numbers only).
+STRING_CONSTANTS = {"sources.pages.DYN_HEADER": "extract_dyn_grid"}
+
+
+def test_string_constants_move_their_oracle(monkeypatch):
+    base = _rebuilt_entry().oracle_sql()
+    unmoved = []
+    for dotted, oracle in STRING_CONSTANTS.items():
+        path, name = dotted.rsplit(".", 1)
+        module = importlib.import_module(f"{PKG}.{path}")
+        value = getattr(module, name)
+        for key, x in _leaves(value, lambda v: isinstance(v, str)):
+            with monkeypatch.context() as m:
+                m.setattr(module, name, _replace(value, key, x + "x"))
+                if _rebuilt_entry().oracle_sql()[oracle] == base[oracle]:
+                    unmoved.append(dotted + "".join(f"[{k!r}]" for k in key))
+    assert unmoved == [], "string constants their oracle ignores"
 
 
 @pytest.mark.parametrize(

@@ -458,18 +458,20 @@ def test_quality_classifier_splits_tokens_once_per_use(spark):
     assert plan.count("split(") == 2, plan
 
 
-def test_mix_sample_plan_broadcasts_to_corpus(spark):
+def test_mix_sample_plan_broadcasts_to_corpus(spark, monkeypatch):
     """mix_sample's per-source plan (bounded rows) must reach the corpus
     scan as a BROADCAST join — the doc side never shuffles for the join
     (the only Exchange allowed on it is the final orderBy's range
     partitioning), and the whole plan stays JVM-only."""
+    from ocr_table_extractor_to_csv_spark.operators import textstats
     from ocr_table_extractor_to_csv_spark.operators.textstats import mix_sample
 
     docs = spark.createDataFrame(
         [(i, f"s{i % 3}", "a b c d e") for i in range(30)],
         "doc_id long, source string, text string",
     )
-    plan = _formatted(spark, mix_sample(docs, budget_tokens=100))
+    monkeypatch.setattr(textstats, "MIX_BUDGET", 100)
+    plan = _formatted(spark, mix_sample(docs))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -514,10 +516,11 @@ def test_gopher_rules_map_only(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_url_filter_broadcasts_blocklist_corpus_never_shuffles(spark):
+def test_url_filter_broadcasts_blocklist_corpus_never_shuffles(spark, monkeypatch):
     """The blocklist is DATA (10^6-row curated lists in real pipelines):
     it must arrive as a BroadcastHashJoin build side; the corpus side
     must not hash-shuffle and no Python may appear."""
+    from ocr_table_extractor_to_csv_spark.operators import weburl
     from ocr_table_extractor_to_csv_spark.operators.weburl import (
         url_filter,
         with_synth_url,
@@ -529,18 +532,20 @@ def test_url_filter_broadcasts_blocklist_corpus_never_shuffles(spark):
             "doc_id long, text string, source string",
         )
     )
-    plan = _formatted(spark, url_filter(docs, ["src0.example.com"]))
+    monkeypatch.setattr(weburl, "URL_BLOCKLIST", ("src0.example.com",))
+    plan = _formatted(spark, url_filter(docs))
     assert "BroadcastHashJoin" in plan, "blocklist join must broadcast"
     assert "Exchange hashpartitioning" not in plan, "corpus must not shuffle"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_domain_cap_first_window_is_salted(spark):
+def test_domain_cap_first_window_is_salted(spark, monkeypatch):
     """domain_cap's phase-1 window must include the salt in its partition
     spec (bounding every window partition to ~1/salt_mod of the hottest
     domain); the host-only window is legal ONLY because its input is
     pre-capped at salt_mod x cap rows per host.  Pin: exactly two Window
     nodes and the salt column appears in the plan's partition specs."""
+    from ocr_table_extractor_to_csv_spark.operators import weburl
     from ocr_table_extractor_to_csv_spark.operators.weburl import (
         domain_cap,
         with_synth_url,
@@ -552,7 +557,9 @@ def test_domain_cap_first_window_is_salted(spark):
             "doc_id long, text string, source string",
         )
     )
-    plan = _formatted(spark, domain_cap(docs, cap=3, salt_mod=4))
+    monkeypatch.setattr(weburl, "DOMAIN_CAP", 3)
+    monkeypatch.setattr(weburl, "DOMAIN_SALT_MOD", 4)
+    plan = _formatted(spark, domain_cap(docs))
     assert plan.count("Window") >= 2
     assert "_salt" in plan, "phase-1 window lost its salt"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -1,4 +1,5 @@
-"""Hand-derived and property checks for the KMV cardinality sketch.
+"""Hand-derived and property checks for the shared md5-integer hash spec
+and the KMV cardinality sketch built on it.
 
 Determinism is the operator's whole claim, so checks are ==-level: a
 pure-Python twin over hashlib (same 60-bit md5 prefix, same integer
@@ -14,6 +15,53 @@ from ocr_table_extractor_to_csv_spark.operators.sketches import (
     KMV_K,
     kmv_distinct,
 )
+
+
+def test_md5_int_helpers_equal_hashlib(spark):
+    """``md5_int_col`` (Spark), ``md5_int`` (driver) and the oracles'
+    ``_md5_int_sql`` (DuckDB) all equal int(md5(s).hexdigest()[a:b], 16)
+    on random strings at every slice the operators take, and the uniform
+    draws of both engines equal md5_int(prefix || doc_id, 1, 8) / 2^32."""
+    import random
+    import string
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry_mod
+    from ocr_table_extractor_to_csv_spark.operators.textstats import (
+        md5_int,
+        md5_int_col,
+        uniform_col,
+    )
+
+    rng = random.Random(18)
+    strings = ["", "a", "ñandú 10€"] + [
+        "".join(rng.choice(string.printable) for _ in range(rng.randint(1, 40)))
+        for _ in range(200)
+    ]
+    rows = list(enumerate(strings))
+    slices = [(1, 2), (1, 5), (1, 8), (9, 8), (1, 15)]
+    want = {
+        i: [int(hashlib.md5(s.encode()).hexdigest()[a - 1 : a - 1 + n], 16) for a, n in slices]
+        for i, s in rows
+    }
+    assert {i: [md5_int(s, a, n) for a, n in slices] for i, s in rows} == want
+
+    df = spark.createDataFrame(rows, "doc_id long, s string")
+    cols = [md5_int_col(F.col("s"), a, n).alias(f"h{j}") for j, (a, n) in enumerate(slices)]
+    got = df.select("doc_id", *cols, uniform_col("mix:").alias("u")).collect()
+    assert {r[0]: list(r[1:-1]) for r in got} == want
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (doc_id BIGINT, s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    sql = ", ".join(entry_mod._md5_int_sql("s", a, n) for a, n in slices)
+    ddb = con.sql(f"SELECT doc_id, {sql}, {entry_mod._uniform_sql('mix:')} FROM t").fetchall()
+    assert {r[0]: list(r[1:-1]) for r in ddb} == want
+
+    u = {i: md5_int(f"mix:{i}", 1, 8) / 2**32 for i, _ in rows}
+    assert {r[0]: r[-1] for r in got} == u == {r[0]: r[-1] for r in ddb}
 
 
 def _h60(s: str) -> int:
