@@ -8,6 +8,12 @@ query.  The flagship ``extract_grid4`` runs the REAL extraction pipeline
 SQL — so the oracle checks the full Spark pipeline end to end at the value
 level (byte-level identity is separately pinned by the pytest goldens).
 
+Both come from one ``_REGISTRY`` table of (name, query, oracle) rows.  A
+row's query names its input loader and its operator, ``_over(_docs,
+textstats.token_count)``, or the synthesized page kinds and columns of an
+extraction, ``_extracted(["fin"], _EXTRACT_COLS)``; a ``q_`` function is
+left only where a query builds its input or reshapes its output.
+
 Column aliases match between each Spark query and its oracle (driver hashes
 sort columns by name).
 """
@@ -109,6 +115,19 @@ def _emb_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fan(_emb(spark, sf_dir), sf_dir, "embeddings")
 
 
+Query = Callable[[SparkSession, str], DataFrame]
+
+
+def _over(loader: Query, operator: Callable[..., DataFrame], **kw) -> Query:
+    """The query ``operator(loader(spark, sf_dir), **kw)``."""
+    return lambda spark, sf_dir: operator(loader(spark, sf_dir), **kw)
+
+
+def _scoped(operator: Callable[..., DataFrame], name: str) -> Callable[..., DataFrame]:
+    """``operator`` run in the RunScope of the query ``name``."""
+    return lambda df, **kw: operator(df, **kw, scope=_scope(df.sparkSession, name))
+
+
 # ---------------------------------------------------------------------------
 # Extraction queries: pages synthesized from documents.text (one builder per
 # kind in sources/pages.py KINDS, each with the reason its extraction is
@@ -143,8 +162,9 @@ def _extract_kinds(docs: DataFrame, kinds: list[str]) -> DataFrame:
 _EXTRACT_COLS = ("doc_id", "n_rows", "n_cols", "csv_md5", "text_md5")
 
 
-def q_extract_grid4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _extract_kinds(_docs(spark, sf_dir), ["doc"]).select(*_EXTRACT_COLS)
+def _extracted(kinds: list[str], cols: tuple[str, ...]) -> Query:
+    """The query selecting ``cols`` of ``_extract_kinds`` over ``kinds``."""
+    return lambda spark, sf_dir: _extract_kinds(_docs(spark, sf_dir), kinds).select(*cols)
 
 
 _TOKS_GRID_SQL = f"""
@@ -229,18 +249,10 @@ def _grid4_oracle(kind: str) -> str:
 ORACLE_GRID4 = _grid4_oracle("doc")
 
 
-def q_extract_fin_grid(spark, sf_dir):
-    return _extract_kinds(_docs(spark, sf_dir), ["fin"]).select(*_EXTRACT_COLS)
-
-
 ORACLE_FIN_GRID = _rows_oracle(
     _eligible("fin"), "len(ts) // 3", "'l' || ts[3*r+1]" + _values_sql(False),
     "total", f"'Cuenta,Valor_1,Valor_2' || {_CRLF} || body || {_CRLF}", 3,
 )
-
-
-def q_extract_dyn_grid(spark, sf_dir):
-    return _extract_kinds(_docs(spark, sf_dir), ["dyn"]).select(*_EXTRACT_COLS, "num_md5")
 
 
 _DYN_LABEL, _DYN_YEARS = P.DYN_HEADER[0], ",".join(P.DYN_HEADER[1])
@@ -285,20 +297,10 @@ FROM ok
 """
 
 
-def q_extract_fixture_professional(spark, sf_dir):
-    """The fixture corpus's professional family (indent hierarchy +
-    header-last bug) stays byte-pinned in pytest (golden `pro`)."""
-    return _extract_kinds(_docs(spark, sf_dir), ["pro"]).select(*_EXTRACT_COLS)
-
-
 ORACLE_PRO_GRID = _rows_oracle(
     _eligible("pro"), "len(ts) // 3", "'lbl' || ts[3*r+1]" + _values_sql(True),
     "total - 1", f"body || {_CRLF}", 3,
 )
-
-
-def q_extract_fixture_boiler(spark, sf_dir):
-    return _extract_kinds(_docs(spark, sf_dir), ["boiler"]).select(*_EXTRACT_COLS)
 
 
 _PARA = P.BOILER_PARA_TOKENS
@@ -365,21 +367,6 @@ def _oracle_mixed_dispatch() -> str:
         (_sampled(ORACLE_DYN_GRID, mod7), "dynamic"),
         (_sampled(ORACLE_PRO_GRID, mod7), "professional"),
     ])
-
-
-def q_extract_transformers(spark, sf_dir):
-    """The transformers layout's heuristic path, value-checked by the
-    generic grid oracle; the fallback cascade (spatial grid) stays
-    pytest-pinned."""
-    return _extract_kinds(_docs(spark, sf_dir), ["tf"]).select(*_EXTRACT_COLS)
-
-
-def q_extract_args_dispatch(spark, sf_dir):
-    """Per-row ARGS dispatch: table_bbox crop, header_regexes selection and
-    expected_n_cols coercion, one variant per row, from one documents scan."""
-    return _extract_kinds(_docs(spark, sf_dir), ["crop", "hdr", "cols"]).select(
-        "doc_id", "variant", "n_rows", "n_cols", "csv_md5"
-    )
 
 
 # hdr variant: header_regexes picks row 1 (ARGS_HDR_HEADER); body order is
@@ -573,15 +560,7 @@ FROM ({_sampled(ORACLE_GRID4, "doc_id % 5 <> 0")}) _g
 """
 
 
-def q_token_count(spark, sf_dir):
-    return textstats.token_count(_docs(spark, sf_dir))
-
-
 ORACLE_TOKEN_COUNT = f"SELECT doc_id, CAST(len({_TOKS_SQL}) AS INT) AS n_tokens FROM documents"
-
-
-def q_token_count_bpe(spark, sf_dir):
-    return textstats.token_count_bpe(_docs(spark, sf_dir))
 
 
 _BPE_SQL = textstats.BPE_TOKEN_RE.replace("'", "''")
@@ -589,10 +568,6 @@ ORACLE_TOKEN_COUNT_BPE = (
     "SELECT doc_id, CAST(len(regexp_extract_all(lower(text), "
     f"'{_BPE_SQL}')) AS INT) AS n_bpe_tokens FROM documents"
 )
-
-
-def q_text_quality(spark, sf_dir):
-    return textstats.text_quality(_docs_f(spark, sf_dir))
 
 
 _EN = ",".join(f"'{w}'" for w in textstats.STOPWORDS["en"])
@@ -615,10 +590,6 @@ FROM t
 """
 
 
-def q_lang_id(spark, sf_dir):
-    return textstats.lang_id(_docs_f(spark, sf_dir))
-
-
 def _oracle_lang_id() -> str:
     hit = {
         lang: f"CAST(len(list_filter(ts, x -> x IN ({','.join(repr(w) for w in ws)}))) AS INT)"
@@ -637,10 +608,6 @@ def _oracle_lang_id() -> str:
         f"greatest({', '.join(hit[l] for l in langs)}) AS best_hits, "
         f"{case} AS lang_pred FROM t"
     )
-
-
-def q_fingerprint(spark, sf_dir):
-    return textstats.fingerprint(_docs(spark, sf_dir))
 
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -663,13 +630,6 @@ _PII_SUFFIX_SPARK = lambda: F.concat(  # noqa: E731
 )
 
 
-def q_vocab_topk(spark, sf_dir):
-    """Corpus vocabulary statistics: top-``VOCAB_TOPK`` tokens by term
-    frequency with document frequency alongside (tie rule tf DESC, token ASC makes the
-    k-boundary deterministic)."""
-    return textstats.vocab_topk(_docs(spark, sf_dir))
-
-
 ORACLE_VOCAB_TOPK = f"""
 WITH tok AS (
   SELECT doc_id, unnest(ts) AS token
@@ -679,12 +639,6 @@ SELECT token, count(*) AS tf, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
 FROM tok GROUP BY 1
 ORDER BY tf DESC, token ASC LIMIT {textstats.VOCAB_TOPK}
 """
-
-
-def q_search_topk(spark, sf_dir):
-    """Keyword search scoring over the corpus (rational-idf variant; see
-    textstats.search_topk for why not ln)."""
-    return textstats.search_topk(_docs(spark, sf_dir))
 
 
 def _oracle_search_topk() -> str:
@@ -748,10 +702,6 @@ FROM s2
 """
 
 
-def q_repetition_stats(spark, sf_dir):
-    return textstats.repetition_stats(_docs_f(spark, sf_dir))
-
-
 def _oracle_repetition() -> str:
     return f"""
 WITH t AS (SELECT doc_id, {_TOKS_SQL} AS ts FROM documents),
@@ -790,10 +740,6 @@ LEFT JOIN bg ON bg.doc_id = d.doc_id
 """
 
 
-def q_source_stats(spark, sf_dir):
-    return textstats.source_stats(_docs(spark, sf_dir))
-
-
 ORACLE_SOURCE_STATS = f"""
 WITH t AS (SELECT source, text, {_TOKS_SQL} AS ts FROM documents),
 q AS (
@@ -816,18 +762,6 @@ FROM q GROUP BY 1
 
 
 _MIX_WEIGHTS, _MIX_BUDGET = textstats.MIX_WEIGHTS, textstats.MIX_BUDGET
-
-
-def q_mix_plan(spark, sf_dir):
-    """Training-mix planning: per-source sampling rates hitting a token
-    budget under explicit target weights — zero-weight sources stay
-    visible at rate 0, and over-budget sources surface epochs > 1
-    (upsampling) rather than silently clamping.  At sf0.01 the weighted
-    sources genuinely need upsampling; at sf0.1 they subsample — both
-    regimes exercised by the same row.  'src_licensed' exists in the
-    weights but NOT in the corpus: it must surface with available 0 and
-    a visibly unmeetable target (r6, the r5 advice fix), never vanish."""
-    return textstats.mix_plan(_docs(spark, sf_dir))
 
 
 def _mix_w_case() -> str:
@@ -868,16 +802,6 @@ ORDER BY source
 """
 
 
-def q_mix_sample(spark, sf_dir):
-    """Materialized training mix (``textstats.mix_sample``): the plan's
-    per-source epochs applied to the corpus with deterministic md5-u
-    sampling AND upsampling — floor(e) guaranteed copies + one u-gated
-    partial copy per doc, so the expected token yield equals the plan's
-    target per source.  The plan broadcasts; the doc side never
-    shuffles."""
-    return textstats.mix_sample(_docs(spark, sf_dir))
-
-
 def _oracle_mix_sample() -> str:
     w_case = _mix_w_case()
     return f"""
@@ -912,13 +836,6 @@ ORDER BY doc_id, copy
 """
 
 
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: shingle overlap vs the deterministic
-    doc_id % DECONTAMINATE_EVAL_MOD == 0 stand-in eval set; eval side
-    broadcasts."""
-    return curation.decontaminate(_docs_f(spark, sf_dir), scope=_scope(spark, "decontaminate"))
-
-
 def _oracle_decontaminate() -> str:
     threshold = curation.DECONTAMINATE_THRESHOLD
     return f"""
@@ -941,12 +858,6 @@ FROM sizes LEFT JOIN ov ON ov.doc_id = sizes.doc_id
 """
 
 
-def q_pack_sequences(spark, sf_dir):
-    """Pretraining sequence packing: contiguous-fill token bins per shard
-    (one window cumsum; shards pack independently)."""
-    return curation.pack_sequences(_docs(spark, sf_dir))
-
-
 _BUDGET, _SHARDS = curation.PACK_BUDGET, curation.PACK_SHARDS
 ORACLE_PACK_SEQUENCES = f"""
 WITH t AS (
@@ -967,13 +878,6 @@ FROM c
 """
 
 
-def q_sample_stratified(spark, sf_dir):
-    """Deterministic md5-hash stratified sampling (``SAMPLE_RATES`` per lang,
-    else ``SAMPLE_DEFAULT_RATE``) — reproducible on any
-    cluster/partitioning/retry, unlike rand()."""
-    return curation.sample_stratified(_docs(spark, sf_dir))
-
-
 _RATES = " ".join(f"WHEN lang = '{s}' THEN {r}" for s, r in sorted(curation.SAMPLE_RATES.items()))
 ORACLE_SAMPLE_STRATIFIED = f"""
 WITH t AS (
@@ -990,13 +894,6 @@ SELECT doc_id, stratum, round(u, 6) AS u FROM t WHERE u < r
 # ---------------------------------------------------------------------------
 # Dedup queries
 # ---------------------------------------------------------------------------
-
-
-def q_curate(spark, sf_dir):
-    """Composed keep/drop curation decision: lang filter + quality threshold
-    + exact-dup keeper election + token accounting — one documents scan, one
-    shuffle (the keeper-election window)."""
-    return curation.curate(_docs_f(spark, sf_dir))
 
 
 def _oracle_gated(keepers: str) -> str:
@@ -1033,24 +930,9 @@ def _oracle_curate() -> str:
 )""") + "\nSELECT * FROM gated\n"
 
 
-def q_curate_neardup(spark, sf_dir):
-    """Near-dup-aware curation: lang + quality gates with keeper election by
-    MinHash-LSH CLUSTER (dedup_clusters composition) — near-copies collapse
-    to one survivor, not just byte-identical texts."""
-    return curation.curate_neardup(_docs_f(spark, sf_dir), scope=_scope(spark, "curate_neardup"))
-
-
 def _oracle_curate_neardup() -> str:
     return _oracle_gated(f"""cc AS MATERIALIZED ({_oracle_dedup_clusters()}),
 keepers AS (SELECT doc_id FROM cc WHERE is_keeper)""") + "\nSELECT * FROM gated\n"
-
-
-def q_pipeline_full(spark, sf_dir):
-    """End-to-end composed curation: lang+quality gates AND not-contaminated
-    AND near-dup-cluster keeper, survivors packed into token bins — the
-    full pipeline a pretraining corpus run ships, built from the standalone
-    operators over ONE cached corpus scan (plan-pinned; r3 verdict #8)."""
-    return curation.curate_pipeline(_docs_f(spark, sf_dir), scope=_scope(spark, "pipeline_full"))
 
 
 def _oracle_pipeline_full() -> str:
@@ -1120,31 +1002,12 @@ ukeyed AS (
 )""")
 
 
-def q_pipeline_full_v3(spark, sf_dir):
-    """``pipeline_full`` with the C4 line-dedup CLEANING transform wired
-    in as sequential pass 1 (r5 verdict #6): duplicate ``CHUNK_TOKENS``-token
-    chunks are CUT from every document (global-first occurrence wins) before any
-    downstream stage, so the lang/quality gates, eval-set slice, near-dup
-    signatures, CC keepers, token counts, and packing all see the cleaned
-    text — what a real corpus build ships.  Still one corpus scan: the
-    cleaned projection is materialized and every branch reads IT
-    (plan-pinned in tests)."""
-    return curation.curate_pipeline(
-        _docs_f(spark, sf_dir), clean_chunks=dedup.CHUNK_TOKENS,
-        scope=_scope(spark, "pipeline_full_v3"),
-    )
-
-
 def _oracle_pipeline_v3() -> str:
     """The line_dedup_clean oracle as ``docs_v3(doc_id, text)``, feeding the
     unchanged pipeline algebra over post-clean text."""
     return _oracle_pipeline_over("docs_v3", f"""docs_v3 AS MATERIALIZED (
   SELECT doc_id, text_clean AS text FROM ({ORACLE_LINE_DEDUP_CLEAN}) _clean
 )""")
-
-
-def q_dedup_exact(spark, sf_dir):
-    return dedup.exact_dedup(_docs(spark, sf_dir))
 
 
 ORACLE_DEDUP_EXACT = (
@@ -1161,10 +1024,6 @@ _SHINGLES_SQL = f"""
          ELSE [list_aggregate(ts, 'string_agg', '_')] END)) AS shingle
   FROM (SELECT doc_id, {_TOKS_SQL} AS ts FROM documents) _t
 """
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    return dedup.ngram_jaccard_pairs(_docs(spark, sf_dir))
 
 
 ORACLE_NGRAM_JACCARD = f"""
@@ -1251,10 +1110,6 @@ ORDER BY doc_id
 """
 
 
-def q_minhash_lsh(spark, sf_dir):
-    return dedup.minhash_lsh_pairs(_docs_f(spark, sf_dir))
-
-
 def _capped_sql(cols: str, keys: str, src: str, max_bucket: int) -> str:
     """The dedup.cap_hot_buckets twin: ``cols`` of the ``src`` rows whose
     ``keys`` bucket holds at most ``max_bucket`` rows."""
@@ -1303,12 +1158,6 @@ FROM bands a JOIN bands b
 ORACLE_MINHASH_LSH = _oracle_minhash_lsh()
 
 
-def q_lsh_bucket_stats(spark, sf_dir):
-    """Per-band hot-bucket accounting next to the dedup results, so what the
-    MAX_BUCKET cap drops is driver-visible, never silent (r2 verdict #5)."""
-    return dedup.lsh_bucket_stats(_docs_f(spark, sf_dir))
-
-
 def _bucket_stats_sql(bands_ctes: str, max_bucket: int) -> str:
     """The dedup.bucket_stats twin over the ``bands0`` CTE of ``bands_ctes``."""
     return f"""
@@ -1326,12 +1175,6 @@ FROM per_bucket GROUP BY band
 
 
 ORACLE_LSH_BUCKET_STATS = _bucket_stats_sql(_minhash_bands0_ctes(), dedup.MAX_BUCKET)
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """Connected components over the MinHash-LSH candidate pairs (iterative
-    min-label propagation run to convergence in Spark)."""
-    return dedup.dedup_clusters(_docs_f(spark, sf_dir), scope=_scope(spark, "dedup_clusters"))
 
 
 # Unroll depth of the connected-components oracle: SQL has no loop, so the
@@ -1383,48 +1226,36 @@ FROM l{iters}, chk
 """
 
 
-def q_simhash(spark, sf_dir):
-    """The 32-bit compact twin (EXPLICIT opt-in since r5 — the library
-    default is the 64-bit production width; see ``simhash64``)."""
-    return dedup.simhash(_docs_f(spark, sf_dir), bits=32)
-
-
 def q_simhash64(spark, sf_dir):
-    """64-bit SimHash — the production width (16-bit pigeonhole band keys).
-    Bit 63 lands on the BIGINT sign bit; signed two's complement agrees
-    between Spark LONG and DuckDB BIGINT, so the oracle is still bit-exact."""
+    """64-bit SimHash (16-bit pigeonhole band keys).  Bit 63 lands on the
+    BIGINT sign bit; signed two's complement agrees between Spark LONG and
+    DuckDB BIGINT, so the oracle is still bit-exact."""
     return dedup.simhash(_docs_f(spark, sf_dir)).withColumnRenamed(
         "simhash", "simhash64"
     )
 
 
-def _oracle_simhash_hash(bits: int, alias: str = "simhash") -> str:
-    """DuckDB twin of dedup.simhash at either width.  Token bits: lo = md5
-    hex chars 1-8, hi = chars 9-16; bit 63's weight is the literal -2^63
-    (HUGEINT-summed, cast back to BIGINT — total always in signed-64 range)."""
-    bit_src = (
-        "(CASE WHEN bit < 32 THEN lo >> bit ELSE hi >> (bit - 32) END)"
-        if bits > 32
-        else "(lo >> bit)"
-    )
-    hi_col = f",\n                 {_md5_int_sql('tok', 9, 8)} AS hi" if bits > 32 else ""
+def _oracle_simhash_hash(alias: str = "simhash") -> str:
+    """DuckDB twin of dedup.simhash.  Token bits: lo = md5 hex chars 1-8,
+    hi = chars 9-16; bit 63's weight is the literal -2^63 (HUGEINT-summed,
+    cast back to BIGINT — total always in signed-64 range)."""
+    bit_src = "(CASE WHEN bit < 32 THEN lo >> bit ELSE hi >> (bit - 32) END)"
     weight = (
         "(CASE WHEN bit = 63 THEN (-9223372036854775807 - 1)::HUGEINT"
         " ELSE (1::BIGINT << bit)::HUGEINT END)"
-        if bits > 32
-        else "(1::BIGINT << bit)"
     )
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(ts) AS tok
   FROM (SELECT doc_id, {_TOKS_SQL} AS ts FROM documents) _t
 ), h AS (
-  SELECT doc_id, {_md5_int_sql("tok", 1, 8)} AS lo{hi_col}
+  SELECT doc_id, {_md5_int_sql("tok", 1, 8)} AS lo,
+                 {_md5_int_sql("tok", 9, 8)} AS hi
   FROM toks
 ), per_bit AS (
   SELECT doc_id, bit,
          sum(CASE WHEN {bit_src} & 1 = 1 THEN 1 ELSE -1 END) AS s
-  FROM h, UNNEST(generate_series(0, {bits - 1})) AS u(bit)
+  FROM h, UNNEST(generate_series(0, {dedup.SIMHASH_BITS - 1})) AS u(bit)
   GROUP BY 1, 2
 )
 SELECT doc_id,
@@ -1433,16 +1264,9 @@ FROM per_bit GROUP BY 1
 """
 
 
-ORACLE_SIMHASH = _oracle_simhash_hash(32)
-
-
 # ---------------------------------------------------------------------------
 # Similarity queries (embeddings)
 # ---------------------------------------------------------------------------
-
-
-def q_similarity_topk(spark, sf_dir):
-    return similarity.brute_force_topk(_emb_f(spark, sf_dir))
 
 
 _K, _QMOD, _ROUND = similarity.TOPK, similarity.QUERY_MOD, similarity.SIM_ROUND
@@ -1502,10 +1326,6 @@ WITH {_BASE_CTE}, {_N_CTE},
 {_topk_sql(f"n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id % {_QMOD} = 0")}"""
 
 
-def q_similarity_lsh(spark, sf_dir):
-    return similarity.lsh_topk(_emb_f(spark, sf_dir))
-
-
 def _sketch_ctes() -> str:
     """Shared DuckDB CTEs (base, planes, sk, bands) twinning
     multi_table_sketch: the hyperplane weights are the SAME
@@ -1552,25 +1372,7 @@ cand AS (
 {_topk_sql(_CAND_PAIRS)}"""
 
 
-def q_similarity_ivf(spark, sf_dir):
-    """IVF-flat ANN: integer-Lloyd TRAINED coarse quantizer (driver-side
-    over a deterministic sample), literal-array list assignment in one
-    scan, ``IVF_PROBES`` inverted lists probed, exact re-rank."""
-    return similarity.ivf_topk(_emb_f(spark, sf_dir))
-
-
 IVF_Q8_REFINE = 4
-
-
-def q_similarity_ivf_q(spark, sf_dir):
-    """IVF ANN with the int8-quantized candidate pass (r5 verdict #7 —
-    the ``embedding_quantize`` payoff): probed candidates are scored with
-    the int8 symmetric codes (per-vector scales cancel in the cosine; the
-    int dot is exact BIGINT, so the shortlist is cross-engine exact), and
-    only the top k*IVF_Q8_REFINE per query are re-ranked with float
-    vectors.  At 10^9 vectors the candidate pass reads the 4x-smaller code column and the
-    float column is fetched for ~20 rows per query."""
-    return similarity.ivf_topk(_emb_f(spark, sf_dir), refine_q8=IVF_Q8_REFINE)
 
 
 def _q8_shortlist_ctes(refine_q8: int | None) -> str:
@@ -1693,25 +1495,6 @@ WITH {_ivf_cent_assign_ctes()}, {_N_CTE}, qq AS (
 {_topk_sql(_CAND_PAIRS)}"""
 
 
-def q_semdedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023): cluster embeddings with the trained
-    integer-Lloyd coarse quantizer, keep within each cluster only vectors
-    with no lower-id neighbor at cosine >= ``COS_DUP_THRESHOLD``
-    (``similarity.semdedup``).  The third embedding-dedup path next to
-    LSH-bucketed pairs and brute force; training, assignment, and the
-    keeper verdict all replay exactly in the oracle."""
-    return similarity.semdedup(_emb_f(spark, sf_dir))
-
-
-def q_cluster_stats(spark, sf_dir):
-    """Semantic-cluster balance over the trained coarse quantizer
-    (``similarity.cluster_stats``): per-cluster vector counts + integer
-    ppm share — the observability row a mix planner reads to catch topic
-    collapse.  Assignment is one scan of pure column expressions; stats
-    are one groupBy + a single-row broadcast total."""
-    return similarity.cluster_stats(_emb(spark, sf_dir))
-
-
 # DuckDB twin of cluster_stats over the shared trained-quantizer prefix:
 # identical centroids and assignments, then the same integer share
 # arithmetic (`//` == Spark `div` on non-negative operands)
@@ -1746,13 +1529,6 @@ ORDER BY m.vec_id
 """
 
 
-def q_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs at the production 64-bit width: pigeonhole
-    banding (exact recall at the hamming radius, up to the hot-bucket cap)
-    + bit_count confirm."""
-    return dedup.simhash_pairs(_docs_f(spark, sf_dir))
-
-
 def _simhash_bands_ctes() -> str:
     """CTEs sh + bands0: the simhash and its pigeonhole bands.  bkey =
     (simhash >> band_bits*b) & mask — the post-shift mask makes the key
@@ -1761,7 +1537,7 @@ def _simhash_bands_ctes() -> str:
     n_bands = dedup.SIMHASH_MAX_HAMMING + 1
     band_bits = dedup.SIMHASH_BITS // n_bands
     mask = (1 << band_bits) - 1
-    return f"""sh AS MATERIALIZED ({_oracle_simhash_hash(dedup.SIMHASH_BITS)}),
+    return f"""sh AS MATERIALIZED ({_oracle_simhash_hash()}),
 bands0 AS (
   SELECT doc_id, simhash, b AS band,
          (simhash >> ({band_bits} * b)) & {mask} AS bkey
@@ -1783,12 +1559,6 @@ bands AS (
 SELECT id_a, id_b, CAST(bit_count(xor(h_a, h_b)) AS INT) AS hamming
 FROM cand WHERE bit_count(xor(h_a, h_b)) <= {dedup.SIMHASH_MAX_HAMMING}
 """
-
-
-def q_simhash_bucket_stats(spark, sf_dir):
-    """Band-bucket accounting for simhash_pairs' hot-bucket cap (the
-    lsh_bucket_stats twin) — capped coverage is driver-visible, not silent."""
-    return dedup.simhash_bucket_stats(_docs_f(spark, sf_dir))
 
 
 ORACLE_SIMHASH_BUCKET_STATS = _bucket_stats_sql(_simhash_bands_ctes(), dedup.SIMHASH_MAX_BUCKET)
@@ -1842,13 +1612,6 @@ SELECT vec_id,
 FROM qd
 ORDER BY vec_id
 """
-
-
-def q_dedup_embedding(spark, sf_dir):
-    """Embedding-cosine near-dup pairs: LSH-bucket candidates (never
-    all-pairs), exact cosine >= ``COS_DUP_THRESHOLD`` confirms; hot buckets
-    capped."""
-    return similarity.cosine_dup_pairs(_emb_f(spark, sf_dir))
 
 
 ORACLE_DEDUP_EMBEDDING = f"""
@@ -1963,17 +1726,6 @@ GROUP BY 1, 2, 3
 """
 
 
-def q_line_dedup(spark, sf_dir):
-    """C4-style line-level dedup signal: per document, the fraction of its
-    ``CHUNK_TOKENS``-token chunks that occur verbatim in another document
-    (chunks stand in for lines — the documents table carries no newlines).  The two-pass
-    explode -> global count -> join-back shape is exactly how C4/CCNet
-    remove cross-document boilerplate lines before training.  The shuffle
-    key is md5(chunk) — 16 bytes per row instead of the raw chunk text —
-    and the oracle computes the identical digest (r4 verdict #4)."""
-    return dedup.line_dedup(_docs_f(spark, sf_dir))
-
-
 # ``t``/``c``: each document's CHUNK_TOKENS-token chunks and the sub-chunk
 # tail after them, the chunk spec of the line_dedup operators
 _CHUNK = dedup.CHUNK_TOKENS
@@ -2010,14 +1762,6 @@ ORDER BY doc_id
 """
 
 
-def q_line_dedup_clean(spark, sf_dir):
-    """The C4 cleaning TRANSFORM: rewrite each document with every chunk
-    that occurred earlier in the corpus removed (global-first occurrence
-    wins, ordered by (doc_id, chunk idx)); sub-chunk tails pass through.
-    The value check covers the full rebuilt text, not just counts."""
-    return dedup.line_dedup_clean(_docs_f(spark, sf_dir))
-
-
 ORACLE_LINE_DEDUP_CLEAN = f"""
 WITH {_CHUNK_CTES}, ex AS (
   SELECT doc_id,
@@ -2042,14 +1786,6 @@ SELECT c.doc_id,
 FROM c LEFT JOIN kept k USING (doc_id)
 ORDER BY doc_id
 """
-
-
-def q_line_dedup_within(spark, sf_dir):
-    """Within-page repeated-chunk removal (C4's in-page rule next to the
-    corpus-wide election): keep each chunk's first in-document occurrence,
-    map-only / zero shuffle.  Same output contract and chunk spec as
-    line_dedup_clean, so they compose."""
-    return dedup.line_dedup_within_page(_docs_f(spark, sf_dir))
 
 
 # the oracle keeps first occurrences with an order-EXPLICIT first-index
@@ -2169,15 +1905,6 @@ ORDER BY doc_id
 """
 
 
-def q_bpe_train(spark, sf_dir):
-    """Distributed BPE merge training: one corpus pass builds the bounded
-    word-frequency vocabulary; each of the ``BPE_MERGES`` merges is a
-    pair-count aggregation over the vocab + a one-row argmax collect + a map-only
-    replace — the tokenizer-training artifact of a pretraining pipeline,
-    never touching the corpus again after pass 1."""
-    return bpe.bpe_train(_docs_f(spark, sf_dir))
-
-
 def _oracle_bpe_train() -> str:
     """The same greedy algorithm unrolled: v{i} = vocab after i merges,
     p{i} = the i-th winning pair (count DESC, left ASC, right ASC).
@@ -2222,14 +1949,6 @@ SELECT CAST(rank AS INT) AS rank, left_sym, right_sym, pair_count
 FROM ({ranks}) _m
 ORDER BY rank
 """
-
-
-def q_token_count_trained(spark, sf_dir):
-    """Per-document token counts under the TRAINED BPE tokenizer (merges
-    learned on the same corpus, applied in rank order as a chain of
-    map-only replaces) — the number a pretraining budget actually pays,
-    closing the train -> encode -> budget loop."""
-    return bpe.token_count_trained(_docs_f(spark, sf_dir))
 
 
 def _oracle_token_count_trained() -> str:
@@ -2404,17 +2123,6 @@ ORDER BY id_a, id_b
 """
 
 
-def q_quality_classifier(spark, sf_dir):
-    """Hashed-token quality classifier trained ON the corpus (deterministic
-    doc_id-mod split labeled by the shared heuristic quality_score) and
-    applied to every doc (``textstats.quality_classifier``) — the
-    distill-the-gate step of a real corpus build.  Training counts are
-    exact integers and the cross-multiplied rate votes are identically
-    rounded doubles on both engines, so the oracle replays the full
-    train+score round trip row for row."""
-    return textstats.quality_classifier(_docs_f(spark, sf_dir))
-
-
 ORACLE_QUALITY_CLASSIFIER = f"""
 WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS ts FROM documents),
 lab AS (
@@ -2470,7 +2178,7 @@ ORDER BY t.doc_id
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline over synthesized pages (sf0.001)."""
-    return q_extract_grid4(spark, "/root/testdata/sf0.001")
+    return queries()["extract_grid4"](spark, "/root/testdata/sf0.001")
 
 
 # ---------------------------------------------------------------------------
@@ -2692,14 +2400,6 @@ FROM n
 # --- kmv_distinct --------------------------------------------------------
 
 
-def q_kmv_distinct(spark, sf_dir):
-    """KMV distinct-shingle cardinality sketch per source: k smallest
-    60-bit shingle hashes -> integer estimator, deterministic and
-    mergeable (vs approx_count_distinct's engine-private HLL).  One
-    map-side-partial distinct + the domain_cap salted min-k."""
-    return sketches.kmv_distinct(_docs_f(spark, sf_dir))
-
-
 def _oracle_kmv_distinct() -> str:
     k, space = sketches.KMV_K, sketches.HASH_SPACE
     return f"""
@@ -2820,81 +2520,98 @@ ORDER BY doc_id
 # then the rest oldest external evidence first; each query must keep an
 # external green row in the last two rounds.  tests/test_oracle_parity.py
 # runs every row locally whatever the order.
-_REGISTRY: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str], ...] = (
+_REGISTRY: tuple[tuple[str, Query, str], ...] = (
     ("pagerank", q_pagerank, _oracle_pagerank()),
-    ("kmv_distinct", q_kmv_distinct, _oracle_kmv_distinct()),
-    ("cluster_stats", q_cluster_stats, ORACLE_CLUSTER_STATS),
+    ("kmv_distinct", _over(_docs_f, sketches.kmv_distinct), _oracle_kmv_distinct()),
+    ("cluster_stats", _over(_emb, similarity.cluster_stats), ORACLE_CLUSTER_STATS),
     ("wet_roundtrip", _roundtrip("wet"), _oracle_roundtrip("wet")),
     ("pagerank_weights", q_pagerank_weights, _oracle_pagerank_weights()),
-    ("line_dedup_within", q_line_dedup_within, ORACLE_LINE_DEDUP_WITHIN),
+    ("line_dedup_within", _over(_docs_f, dedup.line_dedup_within_page), ORACLE_LINE_DEDUP_WITHIN),
     ("normalize_text", q_normalize_text, ORACLE_NORMALIZE_TEXT),
     ("gopher_rules", q_gopher_rules, ORACLE_GOPHER_RULES),
     ("url_filter", q_url_filter, ORACLE_URL_FILTER),
     ("domain_cap", q_domain_cap, ORACLE_DOMAIN_CAP),
     ("substring_dedup", q_substring_dedup, ORACLE_SUBSTRING_DEDUP),
-    ("quality_classifier", q_quality_classifier, ORACLE_QUALITY_CLASSIFIER),
-    ("semdedup", q_semdedup, ORACLE_SEMDEDUP),
-    ("mix_sample", q_mix_sample, _oracle_mix_sample()),
-    ("pipeline_full_v3", q_pipeline_full_v3, _oracle_pipeline_v3()),
-    ("similarity_ivf_q", q_similarity_ivf_q, _oracle_similarity_ivf(refine_q8=IVF_Q8_REFINE)),
+    ("quality_classifier", _over(_docs_f, textstats.quality_classifier), ORACLE_QUALITY_CLASSIFIER),
+    ("semdedup", _over(_emb_f, similarity.semdedup), ORACLE_SEMDEDUP),
+    ("mix_sample", _over(_docs, textstats.mix_sample), _oracle_mix_sample()),
+    ("pipeline_full_v3", _over(
+        _docs_f, _scoped(curation.curate_pipeline, "pipeline_full_v3"),
+        clean_chunks=dedup.CHUNK_TOKENS,
+    ), _oracle_pipeline_v3()),
+    ("similarity_ivf_q", _over(_emb_f, similarity.ivf_topk, refine_q8=IVF_Q8_REFINE),
+     _oracle_similarity_ivf(refine_q8=IVF_Q8_REFINE)),
     ("embedding_quantize", q_embedding_quantize, ORACLE_EMBEDDING_QUANTIZE),
-    ("bpe_train", q_bpe_train, _oracle_bpe_train()),
-    ("token_count_trained", q_token_count_trained, _oracle_token_count_trained()),
-    ("mix_plan", q_mix_plan, _oracle_mix_plan()),
-    ("similarity_lsh", q_similarity_lsh, ORACLE_SIMILARITY_LSH),
-    ("similarity_ivf", q_similarity_ivf, _oracle_similarity_ivf()),
+    ("bpe_train", _over(_docs_f, bpe.bpe_train), _oracle_bpe_train()),
+    ("token_count_trained", _over(_docs_f, bpe.token_count_trained), _oracle_token_count_trained()),
+    # at sf0.01 the weighted sources need upsampling, at sf0.1 they
+    # subsample; 'src_licensed' is weighted but absent from the corpus
+    ("mix_plan", _over(_docs, textstats.mix_plan), _oracle_mix_plan()),
+    ("similarity_lsh", _over(_emb_f, similarity.lsh_topk), ORACLE_SIMILARITY_LSH),
+    ("similarity_ivf", _over(_emb_f, similarity.ivf_topk), _oracle_similarity_ivf()),
     ("eval_numeric", q_eval_numeric, ORACLE_EVAL_NUMERIC),
     ("eval_text", q_eval_text, ORACLE_EVAL_TEXT),
     ("windowed_counts", q_windowed_counts, ORACLE_WINDOWED_COUNTS),
-    ("extract_grid4", q_extract_grid4, ORACLE_GRID4),
-    ("extract_fin_grid", q_extract_fin_grid, ORACLE_FIN_GRID),
-    ("extract_dyn_grid", q_extract_dyn_grid, ORACLE_DYN_GRID),
+    ("extract_grid4", _extracted(["doc"], _EXTRACT_COLS), ORACLE_GRID4),
+    ("extract_fin_grid", _extracted(["fin"], _EXTRACT_COLS), ORACLE_FIN_GRID),
+    ("extract_dyn_grid", _extracted(["dyn"], (*_EXTRACT_COLS, "num_md5")), ORACLE_DYN_GRID),
     ("dataset_grid", q_dataset_grid, ORACLE_DATASET_GRID),
-    ("extract_fixture_professional", q_extract_fixture_professional, ORACLE_PRO_GRID),
-    ("extract_fixture_boiler", q_extract_fixture_boiler, ORACLE_BOILER),
+    # the fixture corpus's professional family (indent hierarchy +
+    # header-last bug) stays byte-pinned in pytest (golden `pro`)
+    ("extract_fixture_professional", _extracted(["pro"], _EXTRACT_COLS), ORACLE_PRO_GRID),
+    ("extract_fixture_boiler", _extracted(["boiler"], _EXTRACT_COLS), ORACLE_BOILER),
     ("extract_mixed_dispatch", q_extract_mixed_dispatch, _oracle_mixed_dispatch()),
-    ("extract_args_dispatch", q_extract_args_dispatch, ORACLE_ARGS_DISPATCH),
-    ("extract_transformers", q_extract_transformers, _grid4_oracle("tf")),
+    # per-row ARGS dispatch: table_bbox crop, header_regexes selection and
+    # expected_n_cols coercion, one variant per row, from one documents scan
+    ("extract_args_dispatch", _extracted(
+        ["crop", "hdr", "cols"], ("doc_id", "variant", "n_rows", "n_cols", "csv_md5")
+    ), ORACLE_ARGS_DISPATCH),
+    # the transformers layout's heuristic path; its fallback cascade
+    # (spatial grid) stays pytest-pinned
+    ("extract_transformers", _extracted(["tf"], _EXTRACT_COLS), _grid4_oracle("tf")),
     ("warc_roundtrip", _roundtrip("warc"), _oracle_roundtrip("warc")),
     ("giants_resume", q_giants_resume, ORACLE_GIANTS_RESUME),
     ("bloom_dedup", q_bloom_dedup, _oracle_bloom_dedup()),
     ("curate_incremental", q_curate_incremental, _oracle_curate_incremental()),
-    ("token_count", q_token_count, ORACLE_TOKEN_COUNT),
-    ("token_count_bpe", q_token_count_bpe, ORACLE_TOKEN_COUNT_BPE),
-    ("text_quality", q_text_quality, ORACLE_TEXT_QUALITY),
-    ("lang_id", q_lang_id, _oracle_lang_id()),
-    ("fingerprint", q_fingerprint, ORACLE_FINGERPRINT),
+    ("token_count", _over(_docs, textstats.token_count), ORACLE_TOKEN_COUNT),
+    ("token_count_bpe", _over(_docs, textstats.token_count_bpe), ORACLE_TOKEN_COUNT_BPE),
+    ("text_quality", _over(_docs_f, textstats.text_quality), ORACLE_TEXT_QUALITY),
+    ("lang_id", _over(_docs_f, textstats.lang_id), _oracle_lang_id()),
+    ("fingerprint", _over(_docs, textstats.fingerprint), ORACLE_FINGERPRINT),
     ("pii_scrub", q_pii_scrub, _oracle_pii_scrub()),
-    ("vocab_topk", q_vocab_topk, ORACLE_VOCAB_TOPK),
-    ("search_topk", q_search_topk, _oracle_search_topk()),
-    ("repetition_stats", q_repetition_stats, _oracle_repetition()),
-    ("source_stats", q_source_stats, ORACLE_SOURCE_STATS),
-    ("decontaminate", q_decontaminate, _oracle_decontaminate()),
-    ("sample_stratified", q_sample_stratified, ORACLE_SAMPLE_STRATIFIED),
+    ("vocab_topk", _over(_docs, textstats.vocab_topk), ORACLE_VOCAB_TOPK),
+    ("search_topk", _over(_docs, textstats.search_topk), _oracle_search_topk()),
+    ("repetition_stats", _over(_docs_f, textstats.repetition_stats), _oracle_repetition()),
+    ("source_stats", _over(_docs, textstats.source_stats), ORACLE_SOURCE_STATS),
+    ("decontaminate", _over(_docs_f, _scoped(curation.decontaminate, "decontaminate")),
+     _oracle_decontaminate()),
+    ("sample_stratified", _over(_docs, curation.sample_stratified), ORACLE_SAMPLE_STRATIFIED),
     ("url_dedup", q_url_dedup, ORACLE_URL_DEDUP),
-    ("line_dedup", q_line_dedup, ORACLE_LINE_DEDUP),
-    ("line_dedup_clean", q_line_dedup_clean, ORACLE_LINE_DEDUP_CLEAN),
+    ("line_dedup", _over(_docs_f, dedup.line_dedup), ORACLE_LINE_DEDUP),
+    ("line_dedup_clean", _over(_docs_f, dedup.line_dedup_clean), ORACLE_LINE_DEDUP_CLEAN),
     ("corpus_diff", q_corpus_diff, ORACLE_CORPUS_DIFF),
-    ("pack_sequences", q_pack_sequences, ORACLE_PACK_SEQUENCES),
-    ("curate", q_curate, _oracle_curate()),
-    ("curate_neardup", q_curate_neardup, _oracle_curate_neardup()),
-    ("pipeline_full", q_pipeline_full, _oracle_pipeline_full()),
+    ("pack_sequences", _over(_docs, curation.pack_sequences), ORACLE_PACK_SEQUENCES),
+    ("curate", _over(_docs_f, curation.curate), _oracle_curate()),
+    ("curate_neardup", _over(_docs_f, _scoped(curation.curate_neardup, "curate_neardup")),
+     _oracle_curate_neardup()),
+    ("pipeline_full", _over(_docs_f, _scoped(curation.curate_pipeline, "pipeline_full")),
+     _oracle_pipeline_full()),
     ("pipeline_full_v2", q_pipeline_full_v2, _oracle_pipeline_v2()),
-    ("dedup_exact", q_dedup_exact, ORACLE_DEDUP_EXACT),
-    ("ngram_jaccard", q_ngram_jaccard, ORACLE_NGRAM_JACCARD),
-    ("minhash_lsh", q_minhash_lsh, ORACLE_MINHASH_LSH),
-    ("lsh_bucket_stats", q_lsh_bucket_stats, ORACLE_LSH_BUCKET_STATS),
-    ("dedup_clusters", q_dedup_clusters, _oracle_dedup_clusters()),
-    ("simhash", q_simhash, ORACLE_SIMHASH),
-    ("simhash64", q_simhash64, _oracle_simhash_hash(dedup.SIMHASH_BITS, "simhash64")),
-    ("simhash_pairs", q_simhash_pairs, _oracle_simhash_pairs()),
-    ("simhash_bucket_stats", q_simhash_bucket_stats, ORACLE_SIMHASH_BUCKET_STATS),
-    ("dedup_embedding", q_dedup_embedding, ORACLE_DEDUP_EMBEDDING),
-    ("similarity_topk", q_similarity_topk, ORACLE_SIMILARITY_TOPK),
+    ("dedup_exact", _over(_docs, dedup.exact_dedup), ORACLE_DEDUP_EXACT),
+    ("ngram_jaccard", _over(_docs, dedup.ngram_jaccard_pairs), ORACLE_NGRAM_JACCARD),
+    ("minhash_lsh", _over(_docs_f, dedup.minhash_lsh_pairs), ORACLE_MINHASH_LSH),
+    ("lsh_bucket_stats", _over(_docs_f, dedup.lsh_bucket_stats), ORACLE_LSH_BUCKET_STATS),
+    ("dedup_clusters", _over(_docs_f, _scoped(dedup.dedup_clusters, "dedup_clusters")),
+     _oracle_dedup_clusters()),
+    ("simhash64", q_simhash64, _oracle_simhash_hash("simhash64")),
+    ("simhash_pairs", _over(_docs_f, dedup.simhash_pairs), _oracle_simhash_pairs()),
+    ("simhash_bucket_stats", _over(_docs_f, dedup.simhash_bucket_stats), ORACLE_SIMHASH_BUCKET_STATS),
+    ("dedup_embedding", _over(_emb_f, similarity.cosine_dup_pairs), ORACLE_DEDUP_EMBEDDING),
+    ("similarity_topk", _over(_emb_f, similarity.brute_force_topk), ORACLE_SIMILARITY_TOPK),
 )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def queries() -> dict[str, Query]:
     return {name: q for name, q, _ in _REGISTRY}
 
 

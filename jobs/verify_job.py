@@ -12,7 +12,6 @@ url must match its frozen golden bytes exactly.  The fixtures side is tiny
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import sys
 from pathlib import Path

@@ -217,12 +217,6 @@ def merge_spans(
 # --------------------------------------------------------------------------
 
 
-def nearest_interval_by_edges(xc: float, intervals: Sequence[Tuple[int, int]]) -> int:
-    """argmin of min(|xc-L|, |xc-R|); ties -> lowest index (assign.py:22-24)."""
-    dists = [min(abs(xc - L), abs(xc - R)) for (L, R) in intervals]
-    return int(np.argmin(dists))
-
-
 def nearest_interval_inside_zero(xc: float, intervals: Sequence[Tuple[int, int]]) -> int:
     """Distance 0 when inside else min edge distance; argmin
     (assign_dynamic.py:63-67, column_model.py:66-67)."""

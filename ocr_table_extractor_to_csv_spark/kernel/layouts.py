@@ -11,7 +11,7 @@ but accepts "-").
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from statistics import median
 from typing import List, Optional, Sequence, Tuple
 
@@ -21,7 +21,6 @@ from .geometry import (
     coerce_interval_count,
     line_gap_quantile,
     merge_spans,
-    nearest_interval_by_edges,
     nearest_interval_inside_zero,
     percentile_linear,
     profile_intervals,

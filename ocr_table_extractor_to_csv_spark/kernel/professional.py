@@ -10,7 +10,7 @@ LAST row and the body duplicates rows (``rows[:-1] + rows[0:]``).
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import List, Tuple
 
 import numpy as np
 

@@ -8,8 +8,8 @@ Scale notes (the 100 TB story):
     pairs are candidate-joined — never an all-pairs product;
   * n-gram Jaccard all-pairs is intentionally restricted to a deterministic
     sample (it is the verification oracle for LSH, not the scale path);
-  * SimHash packs a doc into one 64-bit int (32-bit opt-in); near-dups
-    differ in few bits.
+  * SimHash packs a doc into one 64-bit int; near-dups differ in few
+    bits.
 
 Every banded candidate path (MinHash, SimHash, and the embedding sketch in
 ``similarity``) is ``band_rows`` -> ``bucket_join``: one band explode, one
@@ -24,14 +24,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.scope import RunScope
-from .textstats import md5_int, md5_int_col, tokens_col
+from .textstats import gram_chain, md5_int, md5_int_col, norm_text_col, tokens_col
 
 N_MINHASH = 16
 BAND_SIZE = 2  # 8 bands of 2 rows
-# Production width (r4 verdict #3) of the simhash pairs and their band
-# stats: 64-bit simhash => 16-bit pigeonhole band keys (65,536
-# buckets/band).  ``simhash(bits=32)`` survives as an opt-in compact twin —
-# its 8-bit band keys crowd at corpus scale.
+# Width of the simhash, its pairs and their band stats: 64 bits => 16-bit
+# pigeonhole band keys (65,536 buckets/band); 8-bit keys would crowd at
+# corpus scale.
 SIMHASH_BITS = 64
 MAX_BUCKET = 64  # LSH band-bucket membership cap (hot-bucket guard)
 SHINGLE_N = 3  # word n-gram length of every shingle-based operator
@@ -42,37 +41,16 @@ CHUNK_TOKENS = 10  # tokens per line-dedup chunk
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup over the normalized-text fingerprint."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return (
-        documents.select("doc_id", F.md5(norm).alias("fp"))
+        documents.select("doc_id", F.md5(norm_text_col(F.col("text"))).alias("fp"))
         .groupBy("fp")
         .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keeper_id"))
     )
 
 
-def _gram_chain(toks, n: int):
-    """'_'-joined n-grams of a token-array column as a zip_with chain over
-    n SHIFTED slices — O(tokens) with one pass, vs the naive
-    transform(sequence, i -> array_join(slice(toks, i, n))) which
-    re-slices and re-joins per position (O(tokens x n) + an allocation
-    per gram): measured 5.2x faster at sf0.1 with byte-identical output.
-    Returns the raw gram array; docs with < n tokens yield a
-    negative-length slice, so CALLERS must gate on size(toks) >= n and
-    pick their own short-doc fallback (``shingles`` degrades to the
-    whole-doc join, ``substring_anchors`` emits nothing).  The ONE gram
-    builder shared by both (r6 review)."""
-    m = F.size(toks) - (n - 1)  # number of n-grams
-    grams = F.slice(toks, n, m)
-    for j in range(n - 1, 0, -1):
-        grams = F.zip_with(
-            F.slice(toks, j, m), grams, lambda a, b: F.concat(a, F.lit("_"), b)
-        )
-    return grams
-
-
 def shingles(documents: DataFrame, carry: tuple = ()) -> DataFrame:
     """(doc_id, *carry, shingle) — distinct word ``SHINGLE_N``-grams,
-    '_'-joined (the shared ``_gram_chain`` builder).  ``carry`` names extra document
+    '_'-joined (the shared ``gram_chain`` builder).  ``carry`` names extra document
     columns to keep alongside (e.g. ``("source",)`` for per-source
     sketches) — carried through the explode, NOT re-joined later, so no
     extra shuffle.
@@ -83,7 +61,7 @@ def shingles(documents: DataFrame, carry: tuple = ()) -> DataFrame:
     n = SHINGLE_N
     toks = tokens_col(F.col("text"))
     grams = F.when(
-        F.size(toks) >= n, _gram_chain(toks, n)
+        F.size(toks) >= n, gram_chain(toks, n)
     ).otherwise(F.array(F.array_join(toks, "_")))
     return (
         documents.select(
@@ -330,28 +308,27 @@ def dedup_clusters(documents: DataFrame, *, scope: RunScope) -> DataFrame:
     return cc.withColumn("is_keeper", (F.col("doc_id") == F.col("cluster_id")))
 
 
-def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """SimHash over tokens (counted, not distinct), 32- or 64-bit.
+def simhash(documents: DataFrame) -> DataFrame:
+    """SimHash over tokens (counted, not distinct), ``SIMHASH_BITS`` wide.
 
-    One token explode and ONE groupBy(doc_id) computing all ``bits``
-    sign-sums as conditional-sum aggregates — no bits-x row multiplication;
-    map-side partial aggregation ships ``bits`` longs per doc across the
-    shuffle.  Packing the sums into the hash is a plain column expression.
-    Exactly SQL-expressible (same DuckDB oracle).
+    One token explode and ONE groupBy(doc_id) computing all 64 sign-sums
+    as conditional-sum aggregates — no bits-x row multiplication; map-side
+    partial aggregation ships 64 longs per doc across the shuffle.
+    Packing the sums into the hash is a plain column expression.  Exactly
+    SQL-expressible (same DuckDB oracle).
 
     Token bits come from md5: ``lo`` = first 8 hex chars, ``hi`` = chars
-    9-16 — so the 64-bit hash's low 32 bit-sums equal the 32-bit variant's.
-    Bit 63 of the packed hash is the BIGINT sign bit: its weight is the
-    literal ``-2^63`` (signed two's complement, identical in Spark LONG and
-    DuckDB BIGINT), which keeps every intermediate sum in signed-64 range.
+    9-16.  Bit 63 of the packed hash is the BIGINT sign bit: its weight is
+    the literal ``-2^63`` (signed two's complement, identical in Spark LONG
+    and DuckDB BIGINT), which keeps every intermediate sum in signed-64
+    range.
     """
-    if bits not in (32, 64):
-        raise ValueError(f"simhash bits must be 32 or 64, got {bits}")
     toks = documents.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("tok"))
-    cols = [md5_int_col(F.col("tok"), 1, 8).alias("lo")]
-    if bits > 32:
-        cols.append(md5_int_col(F.col("tok"), 9, 8).alias("hi"))
-    hashed = toks.select("doc_id", *cols)
+    hashed = toks.select(
+        "doc_id",
+        md5_int_col(F.col("tok"), 1, 8).alias("lo"),
+        md5_int_col(F.col("tok"), 9, 8).alias("hi"),
+    )
 
     def bit(b: int) -> str:
         return f"(lo >> {b}) & 1" if b < 32 else f"(hi >> {b - 32}) & 1"
@@ -359,14 +336,11 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     sums = hashed.groupBy("doc_id").agg(
         *[
             F.expr(f"sum(CASE WHEN {bit(b)} = 1 THEN 1 ELSE -1 END)").alias(f"s{b}")
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ]
     )
-    terms = [
-        f"(CASE WHEN s{b} > 0 THEN {1 << b}L ELSE 0L END)" for b in range(min(bits, 63))
-    ]
-    if bits == 64:
-        terms.append("(CASE WHEN s63 > 0 THEN (-9223372036854775807L - 1L) ELSE 0L END)")
+    terms = [f"(CASE WHEN s{b} > 0 THEN {1 << b}L ELSE 0L END)" for b in range(SIMHASH_BITS - 1)]
+    terms.append("(CASE WHEN s63 > 0 THEN (-9223372036854775807L - 1L) ELSE 0L END)")
     return sums.select("doc_id", F.expr(" + ".join(terms)).alias("simhash"))
 
 
@@ -390,7 +364,7 @@ def simhash_bands(documents: DataFrame) -> DataFrame:
         F.shiftright(F.col("simhash"), band_bits * b).bitwiseAND(F.lit(mask))
         for b in range(n_bands)
     ]
-    return band_rows(simhash(documents, SIMHASH_BITS), keys, carry=("simhash",))
+    return band_rows(simhash(documents), keys, carry=("simhash",))
 
 
 def simhash_bucket_stats(documents: DataFrame) -> DataFrame:
@@ -413,11 +387,9 @@ def simhash_pairs(documents: DataFrame) -> DataFrame:
     alongside so the drop is visible.
 
     Scale note: band keys carry ``SIMHASH_BITS / (SIMHASH_MAX_HAMMING + 1)`` bits.
-    The production width ``SIMHASH_BITS = 64`` gives 16-bit band keys (65,536
-    buckets per band); the 32-bit variant's 8-bit keys crowd at corpus
-    scale and survive only as the compact twin.  Both widths are bit-exact
-    against the DuckDB oracle (signed-BIGINT xor / bit_count / shift
-    agree across engines).
+    ``SIMHASH_BITS = 64`` gives 16-bit band keys (65,536 buckets per
+    band), bit-exact against the DuckDB oracle (signed-BIGINT xor /
+    bit_count / shift agree across engines).
 
     The cap is the shared skew-safe ``cap_hot_buckets`` (groupBy +
     join-back, never a window over the hot bucket key).  Persist note:
@@ -789,7 +761,7 @@ def substring_anchors(documents: DataFrame) -> DataFrame:
     k = SUBSTR_GRAM
     toks = tokens_col(F.col("text"))
     grams = F.when(
-        F.size(toks) >= k, _gram_chain(toks, k)
+        F.size(toks) >= k, gram_chain(toks, k)
     ).otherwise(F.array().cast("array<string>"))
     return (
         documents.select(

@@ -7,7 +7,6 @@ from ocr_table_extractor_to_csv_spark.kernel.geometry import (
     coverage_profile,
     line_gap_quantile,
     merge_spans,
-    nearest_interval_by_edges,
     nearest_interval_inside_zero,
     profile_intervals,
     zero_run_cuts,
@@ -100,6 +99,5 @@ def test_merge_spans_running_max_edge():
 def test_nearest_tie_goes_first():
     ivs = [(0, 10), (20, 30)]
     # xc=15 equidistant -> np.argmin picks index 0
-    assert nearest_interval_by_edges(15.0, ivs) == 0
     assert nearest_interval_inside_zero(15.0, ivs) == 0
     assert nearest_interval_inside_zero(25.0, ivs) == 1  # inside -> 0 dist

@@ -141,13 +141,18 @@ def test_every_map_stage_goes_through_worker_batches():
     assert bare == [], "map stages without worker_batches"
 
 
-def _body_tokens(fn: ast.FunctionDef) -> list:
-    """The tokens of ``fn``'s body without its docstring, as ``ast.unparse``
-    prints it (so formatting and comments do not count)."""
+def _body(fn: ast.FunctionDef) -> list:
+    """``fn``'s statements without its docstring."""
     body = fn.body
     if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
         body = body[1:]
-    return re.findall(r"\w+|[^\w\s]", "\n".join(ast.unparse(s) for s in body))
+    return body
+
+
+def _body_tokens(fn: ast.FunctionDef) -> list:
+    """The tokens of ``fn``'s body without its docstring, as ``ast.unparse``
+    prints it (so formatting and comments do not count)."""
+    return re.findall(r"\w+|[^\w\s]", "\n".join(ast.unparse(s) for s in _body(fn)))
 
 
 def test_no_twin_functions():
@@ -425,3 +430,62 @@ def test_one_spelling_of_the_md5_integer():
                     outside.append(f"{path.relative_to(ROOT)}:{line}")
     assert outside == [], "md5-integer spellings outside their helper"
     assert in_owner == {owner: 1 for _, _, owner in _HASH_SPELLINGS}
+
+
+def test_no_unused_imports():
+    """Every name a product file imports is used in that file.  An unused
+    import hides dead code from the checks above (an import counts as a
+    use); a deliberate re-export says so with ``# noqa: F401``."""
+    unused = []
+    for path, tree in _product_trees():
+        lines = path.read_text().splitlines()
+        bound = {}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if "noqa: F401" in lines[node.lineno - 1] or getattr(node, "module", "") == "__future__":
+                continue
+            for a in node.names:
+                # ``import a.b`` binds ``a``
+                name = a.asname or (a.name.split(".")[0] if isinstance(node, ast.Import) else a.name)
+                bound[name] = node.lineno
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        unused += [
+            f"{path.relative_to(ROOT)}:{line} {name}"
+            for name, line in bound.items()
+            if name not in used
+        ]
+    assert sorted(unused) == [], "unused imports"
+
+
+_LOADERS = {"_docs", "_docs_f", "_emb", "_emb_f"}
+
+
+def _called(node: ast.AST) -> str | None:
+    """The name a call ``node`` calls, if it is a call of a plain name."""
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+        return node.func.id
+    return None
+
+
+def test_no_query_wrapper_functions():
+    """No ``q_`` function of ``__spark_entry__.py`` only forwards: a body
+    (docstring aside) that is one ``return`` of one call on a loader call
+    (``_docs``, ``_docs_f``, ``_emb``, ``_emb_f``) or on ``_extract_kinds(...)``
+    belongs in its registry row, which names the loader and the operator."""
+    entry = ast.parse((ROOT / "__spark_entry__.py").read_text())
+    wrappers = []
+    for fn in entry.body:
+        if not (isinstance(fn, ast.FunctionDef) and fn.name.startswith("q_")):
+            continue
+        body = _body(fn)
+        if len(body) != 1 or not isinstance(body[0], ast.Return):
+            continue
+        call = body[0].value
+        if not isinstance(call, ast.Call):
+            continue
+        on_loader = any(_called(a) in _LOADERS for a in call.args)
+        on_extract = isinstance(call.func, ast.Attribute) and _called(call.func.value) == "_extract_kinds"
+        if on_loader or on_extract:
+            wrappers.append(fn.name)
+    assert wrappers == [], "query functions that only forward to an operator"

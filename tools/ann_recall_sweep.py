@@ -23,8 +23,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import functions as F
-
 from ocr_table_extractor_to_csv_spark.operators.similarity import (
     brute_force_topk,
     ivf_topk,
