@@ -7,4 +7,4 @@ deterministic result out — which is what makes the Spark wrapper trivially
 retry-safe and distribution-independent.
 """
 
-from .extract import ExtractResult, extract_document  # noqa: F401
+from .extract import extract_document  # noqa: F401

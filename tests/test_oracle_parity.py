@@ -179,6 +179,9 @@ _GEOMETRY = (
 ENGINE_ONLY = {
     "kernel.boilerplate.MAX_LINK_DENSITY": "link-density cut; the boiler pages' paragraphs hold no links",
     "kernel.extract.MAX_MODEL_COLUMNS": "transformers column target when none is given; the tf pages give one",
+    "kernel.hocr._I64_MAX": "int64 bound of the scan's arrays; no page box comes near it",
+    "kernel.hocr._PAIR_CHUNK": "word->line pairs per numpy step; the same first line for any chunk",
+    "kernel.hocr._TALL_BUCKETS": "word->line index layout; the same first line for any cap",
     "kernel.layouts": _GEOMETRY,
     "kernel.professional": _GEOMETRY,
     "operators.curation.DECONTAMINATE_MAX_BROADCAST_SHINGLES": "join strategy (broadcast or shuffle); same rows",

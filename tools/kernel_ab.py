@@ -3,7 +3,9 @@
 docs/s-per-core numbers.
 
 Runs the pure-Python extraction kernel (no Spark) over the deterministic
-fixture mix and prints a byte-identity digest plus the best-of-3 rate.
+fixture mix and prints a byte-identity digest, the best-of-3 rate, and
+each kernel stage's best-of-3 self time (``perfbench.trace_worker.
+KernelTrace``), so an A/B names the layer it moved.
 Usage for an adjacent A/B:
 
     python tools/kernel_ab.py          # side B (current tree)
@@ -25,7 +27,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from ocr_table_extractor_to_csv_spark.kernel.extract import extract_document
 from ocr_table_extractor_to_csv_spark.sources.fixtures import generate_fixture
+from perfbench.trace_worker import KernelTrace
 
+STAGES = ("parse_dom", "scan_tokens", "build_lines", "layout", "export")
 FAMILIES = [
     "generic4", "generic_wrap", "generic_hdr_rx", "fin3", "dyn", "pro",
     "lineid", "bbox_crop", "multipage", "weird_numbers", "boiler",
@@ -62,6 +66,20 @@ def main(per_family: int = 24, trials: int = 3) -> None:
             extract_document(html, layout=layout, **args)
         best = max(best, len(docs) / (time.perf_counter() - t0))
     print(f"{len(docs)} docs, best {best:.0f} docs/s single-core")
+
+    # traced trials apart from the timed ones: the stage wrappers cost time
+    self_s = dict.fromkeys(STAGES, float("inf"))
+    for _ in range(trials):
+        trace = KernelTrace()
+        undo = trace.install()
+        try:
+            for html, layout, args in docs:
+                extract_document(html, layout=layout, **args)
+        finally:
+            undo()
+        for stage in STAGES:
+            self_s[stage] = min(self_s[stage], trace.self_s[stage])
+    print("stage self time, best of 3: " + ", ".join(f"{k} {v:.4f} s" for k, v in self_s.items()))
 
 
 if __name__ == "__main__":
