@@ -115,10 +115,15 @@ def build_lines(tok: TokenArrays) -> List[Line]:
         yc = (tok.y1 + tok.y2) / 2.0
         seq = np.lexsort((tok.x1, yc, tok.page))
         bounds = _band_starts(tok, seq) + [n]
-        label = np.zeros(n, dtype=np.int64)
-        label[bounds[1:-1]] = 1
-        # members by x1 within each band, ties in visiting order
-        idx = seq[np.lexsort((tok.x1[seq], np.cumsum(label)))]
+        # members by x1 within each band, ties in visiting order: already so
+        # when x1 only falls where a band starts
+        x1 = tok.x1[seq]
+        if set((np.flatnonzero(x1[1:] < x1[:-1]) + 1).tolist()).issubset(bounds):
+            idx = seq
+        else:
+            label = np.zeros(n, dtype=np.int64)
+            label[bounds[1:-1]] = 1
+            idx = seq[np.lexsort((x1, np.cumsum(label)))]
         line_ids = None
 
     # one array step builds every line from its run idx[bounds[k]:bounds[k+1]]
