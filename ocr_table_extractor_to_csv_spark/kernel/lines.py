@@ -13,7 +13,8 @@ Two branches, exactly as the reference:
   expands to the union of member y-extents; a page change always flushes.
 
 Both branches only find each token's line; one array step then builds
-every ``Line``: a stable lexsort by (line, x1) orders the members, ``reduceat``
+every ``Line``: a stable lexsort by (line, x1) orders the members (the
+overlap branch skips it when they are already in that order), ``reduceat``
 over each line's run gives its bbox, and a stable lexsort by (page, y1, x1)
 orders the lines.  The overlap branch visits in Python only the tokens whose
 page or y-extent differs from the token before them.  The per-token loops
