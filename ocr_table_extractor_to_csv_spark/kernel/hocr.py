@@ -25,10 +25,14 @@ Behavioral parity with the reference scan (parser.py:7-62, structures.py:8-24):
 The scan is columnar per page rather than a loop per word (the approach of
 *Accelerating Python UDFs in Vectorized Query Execution*, CIDR 2022): one
 preorder list of the document's nodes and their classes, one bulk numpy
-parse of the page's word boxes when every title is exactly
-``bbox x1 y1 x2 y2`` (``parse_title_bbox`` per title otherwise), the crop
-as a mask, and word->line containment through an exact y-bucket index, so
-a lined page costs time linear in its words rather than words x lines.
+parse of the page's word boxes, the crop as a mask, and word->line
+containment through an exact y-bucket index, so a lined page costs time
+linear in its words rather than words x lines.  The bulk parse only runs on
+a page where every word title is exactly ``bbox x1 y1 x2 y2`` (the form of
+the synthetic benchmark and fixture pages); any other title on the page
+sends all its words through ``parse_title_bbox``.  Tesseract writes
+``bbox x1 y1 x2 y2; x_wconf N`` on every word, so its pages take the
+per-title parse; what share of real pages has the exact form is not known.
 The output, errors included, is the per-word loop's (the reference kept in
 ``tests/test_kernel_properties.py``).  Two faults on one page (two titles
 past Python's 4300-digit int limit, or one and a malformed ``table_bbox``)
@@ -53,8 +57,9 @@ BBOX_RE = re.compile(r"bbox (\d+)\s+(\d+)\s+(\d+)\s+(\d+)")
 # A page's word titles, one per row, every one exactly ``bbox x1 y1 x2 y2``
 # with ASCII numbers of at most 18 digits (so each fits int64): the form the
 # bulk parse reads.  Every such title is one BBOX_RE accepts, with the same
-# numbers.
-_EXACT_TITLES = re.compile(r"(?:bbox [0-9]{1,18} [0-9]{1,18} [0-9]{1,18} [0-9]{1,18}\n)*+")
+# numbers.  Each row is fixed by its literals, so a failed fullmatch
+# backtracks in time linear in the rows.
+_EXACT_TITLES = re.compile(r"(?:bbox [0-9]{1,18} [0-9]{1,18} [0-9]{1,18} [0-9]{1,18}\n)*")
 _I64_MAX = np.iinfo(np.int64).max
 # Bound the word->line index's memory: a line touching more buckets than
 # this is tested by every word instead, and a containment test covers at
@@ -293,19 +298,16 @@ def _first_line(boxes: np.ndarray, lines: np.ndarray) -> np.ndarray:
 
 def _scan_page(
     nodes: List[ET.Element],
-    classes: List[Optional[str]],
+    classes: List[str],
     pi: int,
     table_bbox: Optional[Tuple[int, int, int, int]],
 ) -> Optional[Tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """Page ``pi``'s kept words, from its descendants ``nodes`` in
-    document order and their ``classes``, as (text, (k, 4) boxes, line id)
-    columns, or None when it keeps none.  A node carrying both classes
-    keeps both roles."""
-    if classes.count("ocrx_word") == len(classes):  # only plain words
-        lines, words = [], nodes
-    else:
-        lines = [n for n, c in zip(nodes, classes) if c and "ocr_line" in c]
-        words = [n for n, c in zip(nodes, classes) if c and "ocrx_word" in c]
+    document order and their ``classes`` ("" for none), as (text, (k, 4)
+    boxes, line id) columns, or None when it keeps none.  A node carrying
+    both classes keeps both roles."""
+    lines = [n for n, c in zip(nodes, classes) if "ocr_line" in c]
+    words = [n for n, c in zip(nodes, classes) if "ocrx_word" in c]
     line_boxes = [parse_title_bbox(n.get("title")) for n in lines]
     if not words:
         return None
@@ -358,8 +360,8 @@ def scan_tokens_from_dom(
     # one preorder list: a page's descendants follow it, a nested page's
     # nodes belong to every enclosing page too
     nodes = list(root.iter())
-    classes = [n.get("class") for n in nodes]
-    pages = [i for i, c in enumerate(classes) if c and "ocr_page" in c]
+    classes = [n.get("class", "") for n in nodes]
+    pages = [i for i, c in enumerate(classes) if "ocr_page" in c]
     cols = []
     for pi, i in enumerate(pages, start=1):
         end = i + len(list(nodes[i].iter()))

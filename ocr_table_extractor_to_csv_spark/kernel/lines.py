@@ -13,8 +13,7 @@ Two branches, exactly as the reference:
   expands to the union of member y-extents; a page change always flushes.
 
 Both branches only find each token's line; one array step then builds
-every ``Line``: a stable lexsort by (line, x1) orders the members (the
-overlap branch skips it when they are already in that order), ``reduceat``
+every ``Line``: a stable lexsort by (line, x1) orders the members, ``reduceat``
 over each line's run gives its bbox, and a stable lexsort by (page, y1, x1)
 orders the lines.  The overlap branch visits in Python only the tokens whose
 page or y-extent differs from the token before them.  The per-token loops
@@ -73,7 +72,7 @@ def _band_starts(tok: TokenArrays, seq: np.ndarray) -> List[int]:
     page, lo, hi = tok.page[seq], tok.y1[seq], tok.y2[seq]
     visit = np.empty(len(seq), dtype=bool)
     visit[0] = True
-    np.not_equal(np.diff(page) | np.diff(lo) | np.diff(hi), 0, out=visit[1:])
+    visit[1:] = (page[1:] != page[:-1]) | (lo[1:] != lo[:-1]) | (hi[1:] != hi[:-1])
     visit[1:] |= hi[1:] <= lo[1:]
     heads = np.flatnonzero(visit)
     starts = []
@@ -116,15 +115,10 @@ def build_lines(tok: TokenArrays) -> List[Line]:
         yc = (tok.y1 + tok.y2) / 2.0
         seq = np.lexsort((tok.x1, yc, tok.page))
         bounds = _band_starts(tok, seq) + [n]
-        # members by x1 within each band, ties in visiting order: already so
-        # when x1 only falls where a band starts
-        x1 = tok.x1[seq]
-        if set((np.flatnonzero(x1[1:] < x1[:-1]) + 1).tolist()).issubset(bounds):
-            idx = seq
-        else:
-            label = np.zeros(n, dtype=np.int64)
-            label[bounds[1:-1]] = 1
-            idx = seq[np.lexsort((x1, np.cumsum(label)))]
+        label = np.zeros(n, dtype=np.int64)
+        label[bounds[1:-1]] = 1
+        # members by x1 within each band, ties in visiting order
+        idx = seq[np.lexsort((tok.x1[seq], np.cumsum(label)))]
         line_ids = None
 
     # one array step builds every line from its run idx[bounds[k]:bounds[k+1]]

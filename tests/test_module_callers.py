@@ -458,6 +458,28 @@ def test_no_unused_imports():
     assert sorted(unused) == [], "unused imports"
 
 
+# possessive quantifiers and atomic groups: ``re`` rejects them before
+# CPython 3.11, and the deployment targets include 3.10
+_RE_311_ONLY = re.compile(r"[*+?}]\+|\(\?>")
+
+
+def test_no_python_regex_needs_311():
+    found = [
+        f"{path.relative_to(ROOT)}:{node.lineno}"
+        for path, tree in _product_trees()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "re"
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and isinstance(node.args[0].value, str)
+        and _RE_311_ONLY.search(node.args[0].value)
+    ]
+    assert found == [], "regexes CPython 3.10 cannot compile"
+
+
 _LOADERS = {"_docs", "_docs_f", "_emb", "_emb_f"}
 
 
