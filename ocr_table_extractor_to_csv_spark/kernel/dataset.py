@@ -11,6 +11,12 @@ the extraction path (SURVEY.md §2: J4, J5-variant, A2-variant):
     (dataset_builder.py:108-119 — a different metric from assign.py:22-24);
   * labels: HEADER_COL_i / BODY_COL_i, OTHER for col_idx >= max_columns.
 
+Rows and columns are labelled in array steps (one binary search per line
+for its row, one interval test over all tokens for their columns, each
+fallback only for the misses), and ``geometry.grid`` joins every cell at
+once; the per-token loops they replaced are kept in
+``tests/test_kernel_properties.py`` as the reference.
+
 The reference reads bbox-normalization dimensions from the page IMAGE
 (PIL); pages here have no image, so dimensions come from the ``ocr_page``
 title bbox (falling back to the token extent) — documented substitution.
@@ -22,7 +28,13 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
-from .geometry import coverage_profile, zero_run_cuts
+from .geometry import (
+    coverage_profile,
+    first_closed_interval,
+    grid,
+    half_open_interval,
+    zero_run_cuts,
+)
 from .hocr import TokenArrays, parse_dom, parse_title_bbox, scan_tokens_from_dom, _has_class
 from .layouts import detect_header_row, estimate_columns
 from .lines import Line, build_lines
@@ -68,32 +80,32 @@ def _row_intervals(tok: TokenArrays, lines: List[Line]) -> List[Tuple[int, int]]
     return out or [(y_min, y_max)]
 
 
-def _line_rows(lines: List[Line], row_iv: List[Tuple[int, int]]) -> List[int]:
-    if not row_iv:
-        return [0 for _ in lines]
-    centers = [(t + b) / 2.0 for (t, b) in row_iv]
-    out = []
-    for ln in lines:
-        yc = (ln.y1 + ln.y2) / 2.0
-        hit = None
-        for i, (t, b) in enumerate(row_iv):
-            if t <= yc < b:
-                hit = i
-                break
-        if hit is None:
-            hit = int(np.argmin([abs(c - yc) for c in centers])) if centers else 0
-        out.append(hit)
-    return out
+def _line_rows(lines: List[Line], row_iv: List[Tuple[int, int]]) -> np.ndarray:
+    """Each line's row (dataset_builder.py:96-104): the first interval with
+    ``t <= yc < b``, else the nearest centre (np.argmin's first-min tie
+    rule).  The intervals are sorted and disjoint, so the nearest centre is
+    one of the two around ``yc``, the lower one on a tie."""
+    yc = np.array([(ln.y1 + ln.y2) / 2.0 for ln in lines])
+    row = half_open_interval(yc, row_iv)
+    miss = row < 0
+    if miss.any():
+        centres = np.array([(t + b) / 2.0 for t, b in row_iv])
+        y = yc[miss]
+        j = np.searchsorted(centres, y)
+        below, above = np.maximum(j - 1, 0), np.minimum(j, len(centres) - 1)
+        row[miss] = np.where(np.abs(centres[below] - y) <= np.abs(centres[above] - y), below, above)
+    return row
 
 
-def _token_col(xc: float, intervals: List[Tuple[int, int]]) -> Optional[int]:
-    if not intervals:
-        return None
-    for i, (a, b) in enumerate(intervals):
-        if a <= xc <= b:
-            return i
-    centers = [(a + b) / 2.0 for (a, b) in intervals]
-    return int(np.argmin([abs(c - xc) for c in centers]))
+def _token_cols(xc: np.ndarray, columns: List[Tuple[int, int]]) -> np.ndarray:
+    """Each token's column (dataset_builder.py:108-119): the first interval
+    with ``a <= xc <= b``, else the nearest centre (first-min tie rule)."""
+    col = first_closed_interval(xc, columns)
+    miss = col < 0
+    if miss.any():
+        centres = np.array([(a + b) / 2.0 for a, b in columns])
+        col[miss] = np.abs(centres - xc[miss, None]).argmin(axis=1)
+    return col
 
 
 def build_layoutlm_example(
@@ -117,33 +129,20 @@ def build_layoutlm_example(
     if not columns:
         raise ValueError("no columns detected")
 
-    row_iv = _row_intervals(tok, lines)
-    line_rows = _line_rows(lines, row_iv)
-
-    # aggregate grid + per-token records (dataset_builder.py:122-146)
-    n_rows = max(line_rows) + 1 if line_rows else 0
-    cells: List[List[List[str]]] = [
-        [[] for _ in columns] for _ in range(n_rows)
-    ]
-    records: List[Tuple[int, int, Optional[int]]] = []  # (token_idx, row, col)
-    for ln, row_idx in zip(lines, line_rows):
-        xcs = (tok.x1[ln.idx] + tok.x2[ln.idx]) / 2.0
-        for k, ti in enumerate(ln.idx):
-            col_idx = _token_col(float(xcs[k]), columns)
-            records.append((int(ti), row_idx, col_idx))
-            if col_idx is not None and col_idx < len(columns):
-                cells[row_idx][col_idx].append(tok.text[int(ti)])
-    grid = [
-        [" ".join(filter(None, c)).strip() for c in row_cells] for row_cells in cells
-    ]
+    # aggregate grid + per-token (token, row, col) records in line order
+    # (dataset_builder.py:122-146); every row up to the largest is emitted
+    idx = np.concatenate([ln.idx for ln in lines])
+    row = np.repeat(_line_rows(lines, _row_intervals(tok, lines)), [len(ln.idx) for ln in lines])
+    col = _token_cols((tok.x1[idx] + tok.x2[idx]) / 2.0, columns)
+    table = grid(tok.text[idx], row, col, int(row.max()) + 1, len(columns))
 
     header_row, body_rows = detect_header_row(
-        grid, list(header_regexes) if header_regexes else None
+        table, list(header_regexes) if header_regexes else None
     )
     header_idx = None
     if header_row:
-        for i, row in enumerate(grid):
-            if row == header_row:
+        for i, cells in enumerate(table):
+            if cells == header_row:
                 header_idx = i
                 break
 
@@ -151,28 +150,20 @@ def build_layoutlm_example(
     if width <= 0 or height <= 0:
         width, height = int(tok.x2.max()), int(tok.y2.max())
 
-    words, boxes, labels, row_ids, col_ids, is_header = [], [], [], [], [], []
-    for ti, row_idx, col_idx in records:
-        words.append(tok.text[ti])
-        boxes.append(
-            normalize_box(
-                (int(tok.x1[ti]), int(tok.y1[ti]), int(tok.x2[ti]), int(tok.y2[ti])),
-                width,
-                height,
-            )
-        )
-        row_ids.append(row_idx if row_idx is not None else -1)
-        col_ids.append(col_idx if col_idx is not None else -1)
-        hdr = header_idx is not None and row_idx == header_idx
-        is_header.append(hdr)
-        if col_idx is None or col_idx < 0 or col_idx >= max_columns:
-            labels.append("OTHER")
-        else:
-            labels.append(f"{'HEADER' if hdr else 'BODY'}_COL_{col_idx}")
+    row_ids, col_ids = row.tolist(), col.tolist()
+    is_header = [header_idx is not None and r == header_idx for r in row_ids]
+    labels = [
+        "OTHER" if c >= max_columns else f"{'HEADER' if hdr else 'BODY'}_COL_{c}"
+        for c, hdr in zip(col_ids, is_header)
+    ]
+    boxes = [
+        normalize_box(box, width, height)
+        for box in zip(*(a[idx].tolist() for a in (tok.x1, tok.y1, tok.x2, tok.y2)))
+    ]
 
     return {
         "url": url,
-        "words": words,
+        "words": tok.text[idx].tolist(),
         "bboxes": boxes,
         "labels": labels,
         "row_ids": row_ids,

@@ -147,8 +147,8 @@ def extract_document(
 
     if layout == "generic":
         intervals = estimate_columns(tok, lines, expected_n_cols=expected_n_cols)
-        recs = assign_words_to_columns(tok, lines, intervals)
-        grid = merge_lines_into_rows(recs, tok, lines)
+        cols = assign_words_to_columns(tok, lines, intervals)
+        grid = merge_lines_into_rows(tok, lines, cols, len(intervals))
         header_row, body = detect_header_row(
             grid, list(header_regexes) if header_regexes else None
         )
@@ -171,8 +171,8 @@ def extract_document(
         intervals = estimate_columns(
             tok, lines, expected_n_cols=expected_n_cols or max_columns or MAX_MODEL_COLUMNS
         )
-        recs = assign_words_to_columns(tok, lines, intervals)
-        grid = merge_lines_into_rows(recs, tok, lines) if intervals else []
+        cols = assign_words_to_columns(tok, lines, intervals)
+        grid = merge_lines_into_rows(tok, lines, cols, len(intervals))
         if grid:
             header_row, body = detect_header_row(
                 grid, list(header_regexes) if header_regexes else None

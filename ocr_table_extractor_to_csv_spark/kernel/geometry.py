@@ -1,4 +1,5 @@
-"""Projection profiles, zero-run cuts, span merging, interval assignment.
+"""Projection profiles, zero-run cuts, span merging, interval assignment,
+grid assembly.
 
 These are the reference's numpy hot loops, re-expressed as fully vectorized
 array passes.  The reference has FIVE slightly different profile call sites
@@ -213,8 +214,50 @@ def merge_spans(
 
 
 # --------------------------------------------------------------------------
-# Interval assignment (inside-first, nearest-edge fallback)
+# Interval assignment and grid assembly
 # --------------------------------------------------------------------------
+
+
+def first_closed_interval(x: np.ndarray, intervals: Sequence[Tuple[int, int]]) -> np.ndarray:
+    """Per ``x``: the lowest ``i`` with ``L_i <= x <= R_i``, else -1.  Any
+    intervals (column intervals may touch, and coercion of an inverted
+    extent leaves them unsorted), so every (x, interval) pair is tested."""
+    L, R = np.asarray(intervals, dtype=np.float64).T
+    inside = (L <= x[:, None]) & (x[:, None] <= R)
+    return np.where(inside.any(axis=1), inside.argmax(axis=1), -1)
+
+
+def half_open_interval(x: np.ndarray, intervals: Sequence[Tuple[int, int]]) -> np.ndarray:
+    """Per ``x``: the ``i`` with ``L_i <= x < R_i``, else -1, for sorted
+    intervals that do not overlap (profile rows, chained columns), so one
+    binary search finds the only candidate."""
+    if not intervals:
+        return np.full(len(x), -1, dtype=np.int64)
+    L, R = np.asarray(intervals, dtype=np.float64).T
+    pos = np.searchsorted(L, x, side="right") - 1
+    return np.where((pos >= 0) & (x < R[np.maximum(pos, 0)]), pos, -1)
+
+
+def grid(
+    texts: np.ndarray, row: np.ndarray, col: np.ndarray, n_rows: int, n_cols: int
+) -> List[List[str]]:
+    """The ``n_rows x n_cols`` table whose cell (r, c) is the space-join, in
+    input order, of the ``texts`` labelled (r, c), and "" where none is.
+
+    One stable argsort by ``row * n_cols + col`` groups the texts cell by
+    cell, and each cell is one join.  Token texts are stripped and
+    non-empty (the scan drops blank words), so this equals the reference's
+    cell-by-cell unions that strip after every append."""
+    cells = [""] * (n_rows * n_cols)
+    if len(texts):
+        key = row * n_cols + col
+        order = np.argsort(key, kind="stable")
+        key = key[order]
+        starts = np.flatnonzero(np.concatenate(([True], key[1:] != key[:-1]))).tolist()
+        ordered, key = texts[order].tolist(), key.tolist()
+        for a, b in zip(starts, [*starts[1:], len(key)]):
+            cells[key[a]] = " ".join(ordered[a:b])
+    return [cells[r * n_cols:(r + 1) * n_cols] for r in range(n_rows)]
 
 
 def nearest_interval_inside_zero(xc: float, intervals: Sequence[Tuple[int, int]]) -> int:

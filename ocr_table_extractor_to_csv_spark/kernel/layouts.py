@@ -6,6 +6,13 @@ reference deliberately uses FOUR distinct numeric regexes — they are kept
 verbatim and separately because their accept-sets differ (e.g. the dynamic
 NUM_RE accepts "1234" and "$", the financial NUM_TOKEN_RE rejects "1234"
 but accepts "-").
+
+The generic grid (also the transformers layout's first attempt) is built
+in array steps over every token of the lines: each token's column, each
+line's row, then ``geometry.grid`` joins every cell at once.  The
+per-line loops it replaced are kept in ``tests/test_kernel_properties.py``
+as the reference.  The dynamic and financial layouts still merge spans
+and assign cells line by line.
 """
 
 from __future__ import annotations
@@ -19,13 +26,16 @@ import numpy as np
 
 from .geometry import (
     coerce_interval_count,
+    coverage_profile,
+    first_closed_interval,
+    grid,
+    half_open_interval,
     line_gap_quantile,
     merge_spans,
     nearest_interval_inside_zero,
     percentile_linear,
     profile_intervals,
     zero_run_cuts,
-    coverage_profile,
 )
 from .lines import Line
 from .hocr import TokenArrays
@@ -81,15 +91,15 @@ def is_number_like(s: str) -> bool:
 
 @dataclass
 class Rec:
-    """One per source line: cell assignment + merge metadata
-    (assign.py:27, assign_dynamic.py:69-71, assign_financial.py:88-92)."""
+    """One per source line of the financial and dynamic layouts: its cells
+    and the numeric-cell count the row merge reads (assign_dynamic.py:69-71,
+    assign_financial.py:88-92)."""
 
     page: int
     y_top: int
     y_bot: int
     cells: List[str]
     num_count: int = 0
-    has_label: bool = False
 
 
 def _line_spans(tok: TokenArrays, line: Line, max_gap_px: Optional[int] = None):
@@ -124,109 +134,50 @@ def estimate_columns(
 
 def assign_words_to_columns(
     tok: TokenArrays, lines: List[Line], columns: List[Tuple[int, int]]
-) -> List[Rec]:
-    """Per token: first containing interval, else nearest-edge argmin;
-    cell text joined with spaces in x order (assign.py:6-28)."""
+) -> np.ndarray:
+    """Each line token's column, tokens in line order (assign.py:6-28): the
+    first interval with ``L <= xc <= R``, else the nearest edge with
+    np.argmin's first-min tie rule.  No columns -> no labels."""
     if not columns:
-        return []
-    # vectorized first-inside-else-nearest assignment: identical to the
-    # reference's per-token scan (assign.py:18-24) because intervals are
-    # sorted; "first inside" = lowest interval index with L<=xc<=R, and the
-    # fallback argmin keeps np.argmin's first-min tie rule.
-    if not lines:
-        return []
-    L = np.asarray([c[0] for c in columns], dtype=np.float64)
-    R = np.asarray([c[1] for c in columns], dtype=np.float64)
-    # one batched numpy pass over ALL lines' tokens (lines are short — tens
-    # of tokens — so per-line numpy dispatch overhead dominated the math;
-    # same per-token expressions, same order, just concatenated)
-    all_idx = np.concatenate([ln.idx for ln in lines])
-    xcs = (tok.x1[all_idx] + tok.x2[all_idx]) / 2.0
-    inside = (L[None, :] <= xcs[:, None]) & (xcs[:, None] <= R[None, :])
-    any_inside = inside.any(axis=1)
-    first_inside = inside.argmax(axis=1)
-    dists = np.minimum(np.abs(xcs[:, None] - L[None, :]), np.abs(xcs[:, None] - R[None, :]))
-    nearest = dists.argmin(axis=1)
-    target = np.where(any_inside, first_inside, nearest).tolist()
-    texts = tok.text[all_idx].tolist()
-    ncol = len(columns)
-    recs: List[Rec] = []
-    pos = 0
-    for ln in lines:
-        end = pos + len(ln.idx)
-        buckets: List[List[str]] = [[] for _ in range(ncol)]
-        for k in range(pos, end):
-            buckets[target[k]].append(texts[k])
-        pos = end
-        recs.append(
-            Rec(
-                page=ln.page,
-                y_top=ln.y1,
-                y_bot=ln.y2,
-                cells=[" ".join(b).strip() for b in buckets],
-            )
-        )
-    return recs
-
-
-def _combine_cells(acc: List[str], cells: Sequence[str]) -> List[str]:
-    """rows.py:38 / rows.py:76-78 cell union: space-join when both non-empty."""
-    return [
-        (" ".join([a, b]).strip() if a and b else (a or b)) for a, b in zip(acc, cells)
-    ]
+        return np.empty(0, dtype=np.int64)
+    idx = np.concatenate([ln.idx for ln in lines])
+    xc = (tok.x1[idx] + tok.x2[idx]) / 2.0
+    col = first_closed_interval(xc, columns)
+    miss = col < 0
+    if miss.any():
+        L, R = np.asarray(columns, dtype=np.float64).T
+        x = xc[miss, None]
+        col[miss] = np.minimum(np.abs(x - L), np.abs(x - R)).argmin(axis=1)
+    return col
 
 
 def merge_lines_into_rows(
-    recs: List[Rec], tok: TokenArrays, lines: List[Line]
+    tok: TokenArrays, lines: List[Line], col: np.ndarray, n_cols: int
 ) -> List[List[str]]:
-    """Horizontal projection profile -> row intervals -> per-row cell union
-    (rows.py:8-80).  Quirks kept: records whose y-center misses every row
-    interval are DROPPED; a gap-free profile collapses everything into ONE
-    row; rows are padded in place to the widest member."""
-    if not recs:
+    """Horizontal projection profile -> row intervals -> one cell per
+    (row, column) holding its tokens in line order (rows.py:8-80).  A
+    line's row is the interval with ``top <= yc < bot``.  Quirks kept:
+    lines whose y-center misses every row interval are DROPPED; a gap-free
+    profile collapses everything into ONE row; rows without a line are
+    left out."""
+    if not n_cols:
         return []
-    idx = np.concatenate([ln.idx for ln in lines]) if lines else np.empty(0, np.int64)
-    if idx.size == 0:
-        return [r.cells for r in recs]
-
+    idx = np.concatenate([ln.idx for ln in lines])
     lo, hi = tok.y1[idx], tok.y2[idx]
     origin, top = int(lo.min()), int(hi.max())
     extent = top - origin
     profile = coverage_profile(lo, hi, origin, extent) if extent > 0 else np.ones(1)
     if not (profile == 0).any():
-        acc = ["" for _ in recs[0].cells]
-        for r in recs:
-            acc = _combine_cells(acc, r.cells)
-        return [acc]
+        return grid(tok.text[idx], np.zeros(len(idx), dtype=np.int64), col, 1, n_cols)
 
     cuts = sorted(set([origin] + zero_run_cuts(profile, origin, 2) + [top]))
     row_iv = [(t, b) for t, b in zip(cuts, cuts[1:]) if b - t > 5]
-
-    # vectorized interval lookup — exact because intervals are sorted,
-    # disjoint, and half-open (top <= yc < bot, rows.py:55-61); records in
-    # dropped short intervals (or past the last bot) stay unassigned
-    grouped: List[List[List[str]]] = [[] for _ in row_iv]
-    if row_iv:
-        tops = np.asarray([t for t, _ in row_iv], dtype=np.float64)
-        bots = np.asarray([b for _, b in row_iv], dtype=np.float64)
-        ycs = np.asarray([(r.y_top + r.y_bot) / 2 for r in recs], dtype=np.float64)
-        pos = np.searchsorted(tops, ycs, side="right") - 1
-        for k, r in enumerate(recs):
-            i = int(pos[k])
-            if i >= 0 and ycs[k] < bots[i]:
-                grouped[i].append(r.cells)
-
-    out: List[List[str]] = []
-    for members in grouped:
-        if not members:
-            continue
-        width = max(len(c) for c in members)
-        members = [list(c) + [""] * (width - len(c)) for c in members]
-        acc = [""] * width
-        for c in members:
-            acc = _combine_cells(acc, c)
-        out.append(acc)
-    return out
+    line_row = half_open_interval(np.array([(ln.y1 + ln.y2) / 2 for ln in lines]), row_iv)
+    used = np.unique(line_row[line_row >= 0])
+    sizes = [len(ln.idx) for ln in lines]
+    row = np.repeat(np.searchsorted(used, line_row), sizes)
+    keep = np.repeat(line_row >= 0, sizes)
+    return grid(tok.text[idx][keep], row[keep], col[keep], len(used), n_cols)
 
 
 def detect_header_row(
@@ -281,7 +232,6 @@ def assign_financial_three_columns(tok: TokenArrays, lines: List[Line]) -> List[
                 ln.y2,
                 [label, col_a, col_b],
                 num_count=len(numeric),
-                has_label=bool(label),
             )
         )
     return recs

@@ -6,6 +6,12 @@ carries a known header-selection bug which we replicate bit-for-bit:
 ``find_header_row_index`` returns ``-1`` when no candidate exists, the
 caller tests ``is not None`` (always true), so the "header" becomes the
 LAST row and the body duplicates rows (``rows[:-1] + rows[0:]``).
+
+The visual lines and the grid are array steps: two lexsorts and a cumsum
+over the y1 gaps group the words, one binary search per word finds its
+column, and ``geometry.grid`` joins every cell at once.  The per-token
+loops they replaced are kept in ``tests/test_kernel_properties.py`` as the
+reference.
 """
 
 from __future__ import annotations
@@ -14,7 +20,7 @@ from typing import List, Tuple
 
 import numpy as np
 
-from .geometry import profile_intervals
+from .geometry import grid, half_open_interval, profile_intervals
 from .hocr import TokenArrays
 
 # grid_builder.py thresholds
@@ -24,26 +30,15 @@ MIN_GAP_WIDTH = 5
 HEADER_TEXT_THRESHOLD = 0.7
 
 
-def group_words_by_y_tolerance(tok: TokenArrays) -> List[np.ndarray]:
-    """grid_builder.py:15-29: stable sort by (y1, x1); a new visual line
-    starts when |y1 - last appended word's y1| > Y_TOLERANCE (compares to the
-    LAST word, not a band); members re-sorted by x1."""
-    n = len(tok)
-    if n == 0:
-        return []
+def group_words_by_y_tolerance(tok: TokenArrays) -> Tuple[np.ndarray, np.ndarray]:
+    """grid_builder.py:15-29: the tokens in visual-line order, and each
+    one's visual line.  A stable sort by (y1, x1); a new line starts where
+    y1 rises by more than Y_TOLERANCE over the token before it (the LAST
+    word appended, not a band); members re-sorted by x1, stably."""
     order = np.lexsort((tok.x1, tok.y1))
-    groups: List[List[int]] = [[int(order[0])]]
-    for i in order[1:]:
-        i = int(i)
-        if abs(int(tok.y1[i]) - int(tok.y1[groups[-1][-1]])) <= Y_TOLERANCE:
-            groups[-1].append(i)
-        else:
-            groups.append([i])
-    out = []
-    for g in groups:
-        g = np.asarray(g, dtype=np.int64)
-        out.append(g[np.argsort(tok.x1[g], kind="stable")])
-    return out
+    y1 = tok.y1[order]
+    line = np.concatenate(([0], np.cumsum(y1[1:] - y1[:-1] > Y_TOLERANCE)))
+    return order[np.lexsort((tok.x1[order], line))], line
 
 
 def estimate_column_positions(tok: TokenArrays) -> List[Tuple[int, int]]:
@@ -57,40 +52,19 @@ def estimate_column_positions(tok: TokenArrays) -> List[Tuple[int, int]]:
     )
 
 
-def _grid_rows(
-    tok: TokenArrays, line_groups: List[np.ndarray], intervals: List[Tuple[int, int]]
-) -> List[List[str]]:
-    """grid_builder.py:129-147: half-open interval test ``L <= c < R``,
-    NO nearest fallback (unmatched words are dropped)."""
-    rows: List[List[str]] = []
-    for g in line_groups:
-        row = ["" for _ in intervals]
-        centers = (tok.x1[g] + tok.x2[g]) / 2.0
-        for k, i in enumerate(g):
-            c = float(centers[k])
-            for ci, (L, R) in enumerate(intervals):
-                if L <= c < R:
-                    row[ci] = (row[ci] + " " + tok.text[int(i)]).strip()
-                    break
-        rows.append(row)
-    return rows
-
-
 def _hierarchy(
-    tok: TokenArrays, line_groups: List[np.ndarray], grid_rows: List[List[str]]
+    indents: List[int], grid_rows: List[List[str]]
 ) -> Tuple[List[List[str]], int]:
-    """grid_builder.py:83-114: indentation stack machine.  A row is pushed
+    """grid_builder.py:83-114: indentation stack machine over the rows and
+    their indents (each visual line's first word's x1).  A row is pushed
     as a parent when its first cell is non-empty and it is value-sparse
     (<3 cells or all non-first cells empty); parents with indent >= the
     current row's indent pop first; each row is prefixed with the live
     parents' descriptions."""
-    if not line_groups or not grid_rows:
-        return grid_rows, 0
     stack: List[Tuple[int, str]] = []
     out: List[List[str]] = []
     depth = 0
-    for i, row in enumerate(grid_rows):
-        indent = int(tok.x1[int(line_groups[i][0])]) if len(line_groups[i]) else -1
+    for indent, row in zip(indents, grid_rows):
         desc = row[0] if row else ""
         while stack and indent <= stack[-1][0]:
             stack.pop()
@@ -126,10 +100,16 @@ def build_professional_grid(
     """grid_builder.py:116-168 -> (body_rows, header). Empty input -> ([], [])."""
     if len(tok) == 0:
         return [], []
-    line_groups = group_words_by_y_tolerance(tok)
+    order, line = group_words_by_y_tolerance(tok)
     intervals = estimate_column_positions(tok)
-    grid = _grid_rows(tok, line_groups, intervals)
-    hier, depth = _hierarchy(tok, line_groups, grid)
+    # grid_builder.py:129-147: half-open ``L <= c < R``, NO nearest
+    # fallback (a word outside every interval is dropped); every visual
+    # line is a row
+    col = half_open_interval((tok.x1[order] + tok.x2[order]) / 2.0, intervals)
+    keep = col >= 0
+    rows = grid(tok.text[order][keep], line[keep], col[keep], int(line[-1]) + 1, len(intervals))
+    first = np.flatnonzero(np.concatenate(([True], line[1:] != line[:-1])))
+    hier, depth = _hierarchy(tok.x1[order[first]].tolist(), rows)
 
     header_idx = _header_index(hier)
     # reference bug kept: -1 is treated as found -> header = last row and

@@ -36,8 +36,11 @@ def fan_out(df: DataFrame) -> DataFrame:
 def isolate_giants(
     pages: DataFrame, giant_threshold_bytes: int, size_col: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Split ``pages`` into (small, giant) by the length of ``size_col``."""
-    size = F.length(F.col(size_col))
+    """Split ``pages`` into (small, giant) by the length of ``size_col``.
+    A NULL size counts as 0, so its page is small: the kernel reads a NULL
+    html as an empty document, and a comparison with NULL would keep the
+    page out of both branches."""
+    size = F.coalesce(F.length(F.col(size_col)), F.lit(0))
     return (
         pages.where(size < giant_threshold_bytes),
         pages.where(size >= giant_threshold_bytes),

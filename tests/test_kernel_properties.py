@@ -9,10 +9,18 @@ from xml.sax.saxutils import quoteattr
 import hypothesis.strategies as st
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 
 from ocr_table_extractor_to_csv_spark.kernel import extract as kernel_extract
-from ocr_table_extractor_to_csv_spark.kernel import extract_document, hocr, lines
+from ocr_table_extractor_to_csv_spark.kernel import (
+    dataset,
+    extract_document,
+    geometry,
+    hocr,
+    layouts,
+    lines,
+    professional,
+)
 from ocr_table_extractor_to_csv_spark.kernel.hocr import (
     TokenArrays,
     parse_dom,
@@ -584,3 +592,249 @@ def test_lined_64k_token_page_extracts_in_bounded_time():
     res = extract_document(html, layout="generic")
     assert time.perf_counter() - t0 < 5.0
     assert (res.error, res.n_tokens, res.n_lines) == (None, 64000, 8000)
+
+
+# ---- grid assembly: the per-line and per-token loops it replaced ----------
+
+
+def _ref_assign_words_to_columns(tok, lns, columns):
+    """assign.py:6-28 per line: (y_top, y_bot, cells) with each token in
+    the first interval holding its centre, else the nearest edge."""
+    if not columns:
+        return []
+    out = []
+    for ln in lns:
+        buckets = [[] for _ in columns]
+        for i in ln.idx.tolist():
+            xc = (tok.x1[i] + tok.x2[i]) / 2.0
+            dists = [min(abs(xc - L), abs(xc - R)) for L, R in columns]
+            hit = [j for j, (L, R) in enumerate(columns) if L <= xc <= R]
+            buckets[hit[0] if hit else int(np.argmin(dists))].append(tok.text[i])
+        out.append((ln.y1, ln.y2, [" ".join(b).strip() for b in buckets]))
+    return out
+
+
+def _ref_combine_cells(acc, cells):
+    return [(" ".join([a, b]).strip() if a and b else (a or b)) for a, b in zip(acc, cells)]
+
+
+def _ref_merge_lines_into_rows(recs, tok, lns):
+    """rows.py:8-80: each line joins the row interval holding its centre
+    (``top <= yc < bot``) or is dropped; a gap-free profile is one row."""
+    if not recs:
+        return []
+    idx = np.concatenate([ln.idx for ln in lns])
+    lo, hi = tok.y1[idx], tok.y2[idx]
+    origin, top = int(lo.min()), int(hi.max())
+    extent = top - origin
+    profile = geometry.coverage_profile(lo, hi, origin, extent) if extent > 0 else np.ones(1)
+    if not (profile == 0).any():
+        acc = [""] * len(recs[0][2])
+        for _, _, cells in recs:
+            acc = _ref_combine_cells(acc, cells)
+        return [acc]
+    cuts = sorted(set([origin] + geometry.zero_run_cuts(profile, origin, 2) + [top]))
+    row_iv = [(t, b) for t, b in zip(cuts, cuts[1:]) if b - t > 5]
+    grouped = [[] for _ in row_iv]
+    for y_top, y_bot, cells in recs:
+        yc = (y_top + y_bot) / 2
+        hit = [j for j, (t, b) in enumerate(row_iv) if t <= yc < b]
+        if hit:
+            grouped[hit[0]].append(cells)
+    out = []
+    for members in grouped:
+        if members:
+            acc = [""] * len(members[0])
+            for cells in members:
+                acc = _ref_combine_cells(acc, cells)
+            out.append(acc)
+    return out
+
+
+def _ref_build_professional_grid(tok, intervals):
+    """grid_builder.py:15-168 with the visual lines and cells built token
+    by token."""
+    order = np.lexsort((tok.x1, tok.y1)).tolist()
+    groups = [[order[0]]]
+    for i in order[1:]:
+        if abs(int(tok.y1[i]) - int(tok.y1[groups[-1][-1]])) <= professional.Y_TOLERANCE:
+            groups[-1].append(i)
+        else:
+            groups.append([i])
+    groups = [sorted(g, key=tok.x1.tolist().__getitem__) for g in groups]
+    stack, hier, depth = [], [], 0
+    for g in groups:
+        row = [""] * len(intervals)
+        for i in g:
+            c = (tok.x1[i] + tok.x2[i]) / 2.0
+            for ci, (L, R) in enumerate(intervals):
+                if L <= c < R:
+                    row[ci] = (row[ci] + " " + tok.text[i]).strip()
+                    break
+        indent = int(tok.x1[g[0]])
+        while stack and indent <= stack[-1][0]:
+            stack.pop()
+        hier.append([p[1] for p in stack] + row)
+        depth = max(depth, len(stack))
+        if row and row[0] and (len(row) < 3 or all(c == "" for c in row[1:])):
+            stack.append((indent, row[0]))
+    header_idx = professional._header_index(hier)
+    body = hier[:header_idx] + hier[header_idx + 1 :]
+    header = [""] * depth + hier[header_idx][depth:]
+    return [[c.strip() for c in (r + [""] * len(header))[: len(header)]] for r in body], header
+
+
+def _ref_dataset_cells(tok, lns, columns):
+    """dataset_builder.py:96-146: rows by ``t <= yc < b`` else the nearest
+    row centre, columns by ``a <= xc <= b`` else the nearest column centre;
+    every row up to the largest; (token, row, col) records in line order."""
+    row_iv = dataset._row_intervals(tok, lns)
+    line_rows = []
+    for ln in lns:
+        yc = (ln.y1 + ln.y2) / 2.0
+        hit = [j for j, (t, b) in enumerate(row_iv) if t <= yc < b]
+        centres = [(t + b) / 2.0 for t, b in row_iv]
+        line_rows.append(hit[0] if hit else int(np.argmin([abs(c - yc) for c in centres])))
+    cells = [[[] for _ in columns] for _ in range(max(line_rows) + 1)]
+    records = []
+    for ln, r in zip(lns, line_rows):
+        for i in ln.idx.tolist():
+            xc = float((tok.x1[i] + tok.x2[i]) / 2.0)
+            hit = [j for j, (a, b) in enumerate(columns) if a <= xc <= b]
+            c = hit[0] if hit else int(np.argmin([abs((a + b) / 2.0 - xc) for a, b in columns]))
+            records.append((tok.text[i], r, c))
+            cells[r][c].append(tok.text[i])
+    return [[" ".join(filter(None, c)).strip() for c in row] for row in cells], records
+
+
+_grid_box = st.tuples(
+    st.integers(0, 60),   # x1
+    st.integers(0, 40),   # y1 (ties, gaps of exactly Y_TOLERANCE)
+    st.integers(-3, 40),  # width: inverted and zero too
+    st.integers(-3, 12),  # height: inverted and zero too
+)
+# any closed intervals: touching, overlapping, inverted, unsorted or none
+_any_intervals = st.lists(st.tuples(st.integers(0, 100), st.integers(0, 100)), max_size=5)
+# half-open intervals as the chained column profile yields them: sorted,
+# not overlapping, some touching, some with gaps between
+_sorted_intervals = st.lists(st.integers(0, 100), max_size=7, unique=True).map(sorted).flatmap(
+    lambda cuts: st.lists(st.booleans(), min_size=len(cuts), max_size=len(cuts)).map(
+        lambda keep: [(a, b) for a, b, k in zip(cuts, cuts[1:], keep) if k]
+    )
+)
+_expected_cols = st.sampled_from((None, 1, 2, 3, 6))
+
+
+def _grid_tokens(boxes):
+    i64 = lambda vals: np.array(vals, dtype=np.int64)  # noqa: E731
+    return TokenArrays(
+        np.array([f"t{i}" for i in range(len(boxes))], dtype=object),
+        i64([1] * len(boxes)),
+        i64([b[0] for b in boxes]),
+        i64([b[1] for b in boxes]),
+        i64([max(0, b[0] + b[2]) for b in boxes]),
+        i64([max(0, b[1] + b[3]) for b in boxes]),
+        np.array([None] * len(boxes), dtype=object),
+    )
+
+
+def _outcome(fn):
+    """``fn()``, or the type of the exception it raises (a profile over an
+    inverted box can index past its end, in the reference as well)."""
+    try:
+        return fn()
+    except Exception as exc:
+        return type(exc)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_grid_box, min_size=1, max_size=30), st.one_of(_expected_cols, _any_intervals))
+@example([(10, 0, 10, 5), (40, 20, 10, 5)], [(0, 20), (20, 50)])  # a centre on a shared edge
+@example([(10, 0, 10, 5), (10, 3, 10, 5)], [])  # no columns; a gap-free profile
+@example([(70, 0, 10, 5), (0, 20, 1, 5), (5, 9, 1, 0)], [(20, 30), (40, 50)])  # outside all
+def test_generic_grid_matches_reference_loops(boxes, columns):
+    """The generic and transformers grid (first closed interval else the
+    nearest edge; rows by ``top <= yc < bot``, unmatched lines dropped) is
+    the per-line loops' grid, for estimated columns coerced to fewer or
+    more and for arbitrary column intervals."""
+    tok = _grid_tokens(boxes)
+    lns = lines.build_lines(tok)
+
+    def cols():
+        if isinstance(columns, list):
+            return columns
+        return layouts.estimate_columns(tok, lns, expected_n_cols=columns)
+
+    got = _outcome(lambda: layouts.merge_lines_into_rows(
+        tok, lns, layouts.assign_words_to_columns(tok, lns, cols()), len(cols())
+    ))
+    want = _outcome(lambda: _ref_merge_lines_into_rows(
+        _ref_assign_words_to_columns(tok, lns, cols()), tok, lns
+    ))
+    assert got == want
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_grid_box, min_size=1, max_size=30), st.one_of(st.none(), _sorted_intervals))
+@example([(10, 0, 10, 5), (40, 5, 10, 5), (70, 11, 10, 5)], None)  # y1 gaps of 5 and 6
+@example([(10, 0, 10, 5), (40, 0, 10, 5)], [(0, 20), (20, 50)])  # a centre on a shared edge
+@example([(70, 0, 10, 5), (0, 0, 4, 5)], [(20, 30), (40, 50)])  # outside every column
+def test_professional_grid_matches_reference_loops(boxes, intervals):
+    """The professional grid (visual lines by y1 gaps over Y_TOLERANCE,
+    half-open columns, words outside every column dropped, each line's
+    first word's x1 as its indent) is the per-token loops' grid, for the
+    chained column profile and for any sorted column intervals."""
+    tok = _grid_tokens(boxes)
+    with pytest.MonkeyPatch.context() as mp:
+        if intervals is not None:
+            mp.setattr(professional, "estimate_column_positions", lambda _: intervals)
+        got = _outcome(lambda: professional.build_professional_grid(tok))
+        want = _outcome(lambda: _ref_build_professional_grid(
+            tok, professional.estimate_column_positions(tok)
+        ))
+    assert got == want
+
+
+def _hocr_boxes(boxes) -> bytes:
+    words = "".join(
+        f'<span class="ocrx_word" title="bbox {x} {y} {max(0, x + w)} {max(0, y + h)}">t{i}</span>'
+        for i, (x, y, w, h) in enumerate(boxes)
+    )
+    page = f'<div class="ocr_page" title="bbox 0 0 200 100">{words}</div>'
+    return f"<html><body>{page}</body></html>".encode()
+
+
+def _ref_layoutlm(tok, lns, columns):
+    if not columns:
+        raise ValueError("no columns detected")
+    table, records = _ref_dataset_cells(tok, lns, columns)
+    return (*layouts.detect_header_row(table), records)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_grid_box, min_size=1, max_size=30), st.one_of(_expected_cols, _any_intervals))
+@example([(10, 0, 10, 5), (10, 6, 10, 2), (10, 20, 10, 5)], [(0, 15), (15, 40)])  # row gap <= 5
+@example([(70, 0, 10, 5), (0, 9, 1, 5)], [(20, 30), (40, 50)])  # outside every column
+@example([(10, 0, 10, 10), (10, 14, 10, 1), (10, 19, 10, 12)], [(0, 50)])  # a tie: lower row
+@example([(10, 0, 10, 10), (10, 30, 10, -25), (10, 40, 10, 10)], [(0, 50)])  # a row with no line
+def test_dataset_grid_matches_reference_loops(boxes, columns):
+    """The LayoutLM example's grid and (token, row, col) records (rows by
+    ``t <= yc < b`` else the nearest row centre, columns by the first
+    closed interval else the nearest column centre) are the per-token
+    loops', for estimated columns coerced to fewer or more and for
+    arbitrary column intervals."""
+    html = _hocr_boxes(boxes)
+    tok = scan_tokens_from_dom(parse_dom(html)[0])
+    lns = lines.build_lines(tok)
+    k = None if isinstance(columns, list) else columns
+    with pytest.MonkeyPatch.context() as mp:
+        if isinstance(columns, list):
+            mp.setattr(dataset, "estimate_columns", lambda *_, **__: columns)
+        ex = _outcome(lambda: dataset.build_layoutlm_example(html, expected_n_cols=k))
+        want = _outcome(lambda: _ref_layoutlm(
+            tok, lns, dataset.estimate_columns(tok, lns, expected_n_cols=k)
+        ))
+    got = ex if isinstance(ex, type) else (
+        ex["table_header"], ex["table_rows"], list(zip(ex["words"], ex["row_ids"], ex["col_ids"]))
+    )
+    assert got == want

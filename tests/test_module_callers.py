@@ -511,3 +511,25 @@ def test_no_query_wrapper_functions():
         if on_loader or on_extract:
             wrappers.append(fn.name)
     assert wrappers == [], "query functions that only forward to an operator"
+
+
+def test_kernel_tracer_wraps_the_kernel_names():
+    """perfbench's ``KernelTrace`` wraps kernel stages by name; a renamed
+    stage would crash ``perfbench/run.py --trace 1`` and
+    ``tools/kernel_ab.py``.  Installed, it times the layout of a generic
+    and a professional extraction; undone, it restores every name."""
+    from perfbench.trace_worker import LAYOUT_FNS, KernelTrace
+
+    from ocr_table_extractor_to_csv_spark.kernel import extract as kx
+    from ocr_table_extractor_to_csv_spark.sources.fixtures import generate_fixture
+
+    before = {name: getattr(kx, name) for name in LAYOUT_FNS}
+    trace = KernelTrace()
+    undo = trace.install()
+    try:
+        for layout in ("generic", "professional"):
+            kx.extract_document(generate_fixture("generic4", 0)["html"], layout=layout)
+    finally:
+        undo()
+    assert trace.self_s["layout"] > 0
+    assert {name: getattr(kx, name) for name in LAYOUT_FNS} == before

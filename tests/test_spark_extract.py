@@ -360,6 +360,23 @@ def test_rerun_with_a_larger_giant_threshold_commits_each_page_once(
     assert facts["rows"] == n
 
 
+def test_null_html_page_commits_once(spark, tmp_path):
+    """A page whose html is NULL is extracted as an empty document: it
+    commits once, gets a progress row, and the manifests count it, so a
+    later batch has nothing left to extract."""
+    pages = spark.createDataFrame(
+        [("u1", "generic", None, grid_hocr(["a", "b", "c"])), ("u2", "generic", None, None)],
+        "url string, layout string, args string, html binary",
+    )
+    committed, facts = _run_batch(spark, pages, tmp_path, 0)
+    assert facts["rows"] == 2
+    assert sorted(r.url for r in committed.select("url").collect()) == ["u1", "u2"]
+    progress = read_progress(spark, str(tmp_path / "progress"))
+    assert sorted(r.url for r in progress.select("url").collect()) == ["u1", "u2"]
+    assert _manifest_urls(spark, tmp_path, 0) == 2
+    assert _run_batch(spark, pages, tmp_path, 1)[1]["rows"] == 0
+
+
 def test_data_write_plans_no_sort(spark, pages_dir, tmp_path):
     """The batch's data write is a plain overwrite of its directory: the
     planner puts no Sort in front of the written files (a write partitioned
