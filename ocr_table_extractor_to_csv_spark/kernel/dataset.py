@@ -28,13 +28,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
-from .geometry import (
-    coverage_profile,
-    first_closed_interval,
-    grid,
-    half_open_interval,
-    zero_run_cuts,
-)
+from .geometry import first_closed_interval, grid, half_open_interval, profile_intervals
 from .hocr import TokenArrays, parse_dom, parse_title_bbox, scan_tokens_from_dom, _has_class
 from .layouts import detect_header_row, estimate_columns
 from .lines import Line, build_lines
@@ -68,15 +62,13 @@ def _row_intervals(tok: TokenArrays, lines: List[Line]) -> List[Tuple[int, int]]
     y1 = tok.y1[idx]
     y2 = tok.y2[idx]
     y_min, y_max = int(y1.min()), int(y2.max())
-    height = max(1, y_max - y_min)
-    # per-token minimum 1px coverage (dataset_builder.py:58-62)
-    lo = np.maximum(0, y1 - y_min)
-    hi = np.maximum(lo + 1, y2 - y_min)
-    profile = coverage_profile(lo, hi, 0, height)
-    if not (profile == 0).any():
-        return [(y_min, y_max)]
-    cuts = sorted(dict.fromkeys([y_min] + zero_run_cuts(profile, y_min, 2) + [y_max]))
-    out = [(t, b) for t, b in zip(cuts, cuts[1:]) if b - t > 5]
+    # a profile at least 1 px tall, each token covering at least 1 px
+    # (dataset_builder.py:55-62); rows taller than 5 px are kept.  When the
+    # profile has a gap it is y_max - y_min tall, so its last cut is y_max.
+    out = profile_intervals(
+        y1, np.maximum(y1 + 1, y2), y_min, y_min + max(1, y_max - y_min), min_run=2, min_width=6
+    )
+    # a gap-free profile, or one with no row left, is one full-extent row
     return out or [(y_min, y_max)]
 
 

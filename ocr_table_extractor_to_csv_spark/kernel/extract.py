@@ -135,9 +135,12 @@ def extract_document(
     if layout == "dynamic":
         from .layouts import compute_line_spans
 
+        # one span pass serves the column model and the cell assignment
+        # (the reference recomputes it with identical inputs in three
+        # places: column_model.py:62, :104, assign_dynamic.py:55)
         spans_per_line = compute_line_spans(tok, lines)
-        intervals, names = infer_numeric_columns(lines, spans_per_line)
-        recs = assign_dynamic(tok, lines, intervals, spans_per_line)
+        intervals, names, numeric = infer_numeric_columns(lines, spans_per_line)
+        recs = assign_dynamic(tok, lines, intervals, spans_per_line, numeric)
         rows = merge_financial_rows(recs)
         if not rows:
             return ExtractResult(csv=empty_csv_bytes(), **base)

@@ -1,13 +1,17 @@
-"""Projection profiles, zero-run cuts, span merging, interval assignment,
-grid assembly.
+"""Projection profiles, zero-run cuts, linear percentiles, interval
+assignment, grid assembly.
 
 These are the reference's numpy hot loops, re-expressed as fully vectorized
-array passes.  The reference has FIVE slightly different profile call sites
-and several distance metrics; each difference is kept behind explicit
-parameters (see callers in layouts.py / professional.py).
+array passes.  The reference's five projection profiles (generic columns
+and rows, the transformers layout's rows, the dataset builder's rows and
+the professional grid's chained columns) differ only in thresholds, width
+strictness and what a gap-free profile yields.  All of them go through
+``profile_intervals``: each call site passes its thresholds and keeps its
+own gap-free rule (layouts.py, professional.py, dataset.py; the
+transformers layout reuses the generic code).
 
 Citations: columns.py:23-70, rows.py:22-52, grid_builder.py:31-63,
-column_model.py:13-45, assign_financial.py:20-39, assign.py:16-24.
+dataset_builder.py:49-80, column_model.py:13-45, assign.py:16-24.
 """
 
 from __future__ import annotations
@@ -22,16 +26,23 @@ import numpy as np
 # --------------------------------------------------------------------------
 
 
-def coverage_profile(lo: np.ndarray, hi: np.ndarray, origin: int, extent: int) -> np.ndarray:
-    """Histogram of interval coverage: profile[p] = #tokens with lo<=p<hi.
+def _slice_bound(i: np.ndarray, n: int) -> np.ndarray:
+    """Python's rule for a slice bound over a length-``n`` sequence: a
+    negative bound counts from the end, then the bound clips to [0, n]."""
+    return np.minimum(np.maximum(np.where(i < 0, i + n, i), 0), n)
 
-    Equivalent to the reference's ``profile[start:end] += 1`` loop
-    (columns.py:23-27) but built with a difference array + cumsum — one
-    vector pass regardless of token count.
-    """
-    diff = np.zeros(extent + 1, dtype=np.int64)
-    np.add.at(diff, lo - origin, 1)
-    np.add.at(diff, hi - origin, -1)
+
+def coverage_profile(lo: np.ndarray, hi: np.ndarray, origin: int, extent: int) -> np.ndarray:
+    """The reference's ``profile[start:end] += 1`` loop over a zeroed
+    profile of ``extent`` cells (columns.py:23-27), with ``start = lo -
+    origin`` and ``end = hi - origin``, built from two bincounts and a
+    cumsum.  Slice rules hold exactly, so inverted boxes and bounds past
+    either end add what the loop adds: a negative bound counts from the
+    end, bounds clip to the profile, and an empty slice adds nothing."""
+    a = _slice_bound(lo - origin, extent)
+    # an empty slice (end <= start) adds 1 and takes 1 at the same cell
+    b = np.maximum(_slice_bound(hi - origin, extent), a)
+    diff = np.bincount(a, minlength=extent + 1) - np.bincount(b, minlength=extent + 1)
     return np.cumsum(diff)[:-1]
 
 
@@ -43,70 +54,60 @@ def zero_run_cuts(profile: np.ndarray, origin: int, min_run: int) -> List[int]:
     ``len(g) > min_run``.  For a run spanning [s, e) of ints the mean is
     (s + e - 1) / 2; int() truncates (all coordinates are >= 0).
     """
-    zero = profile == 0
-    if not zero.any():
-        return []
     # run starts/ends via edge detection
-    padded = np.concatenate(([False], zero, [False]))
+    padded = np.concatenate(([False], profile == 0, [False]))
     edges = np.diff(padded.astype(np.int8))
     starts = np.flatnonzero(edges == 1)
     ends = np.flatnonzero(edges == -1)  # exclusive
-    cuts: List[int] = []
-    for s, e in zip(starts.tolist(), ends.tolist()):
-        if e - s > min_run:
-            cuts.append(origin + int((s + e - 1) / 2))
-    return cuts
+    return [
+        origin + int((s + e - 1) / 2)
+        for s, e in zip(starts.tolist(), ends.tolist())
+        if e - s > min_run
+    ]
 
 
 def profile_intervals(
     lo: np.ndarray,
     hi: np.ndarray,
+    origin: int,
+    top: int,
     *,
     min_run: int,
     min_width: int,
-    strict_width: bool,
     chained: bool = False,
-) -> List[Tuple[int, int]]:
-    """Full valley-split: coords -> sorted disjoint intervals.
+) -> Optional[List[Tuple[int, int]]]:
+    """The valley split shared by every projection profile: the coverage
+    profile of ``[lo, hi)`` over ``[origin, top)`` is cut at ``origin``, at
+    the centre of each zero run longer than ``min_run`` and at ``top``;
+    the pairs of consecutive cuts become intervals.
 
-    * ``chained=False`` (columns.py:42-48, rows.py:46-52): consecutive cut
-      pairs ``(l, r)`` kept iff width >= / > ``min_width``; dropped pairs
-      vanish entirely.
+    * ``chained=False`` (columns.py:42-48, rows.py:46-52,
+      dataset_builder.py:64-80): a pair is kept iff it is at least
+      ``min_width`` wide; dropped pairs vanish.
     * ``chained=True`` (grid_builder.py:54-63): the left edge only advances
       when an interval is emitted, so short gaps merge into the next
-      interval; comparison is strict ``>``.
+      interval.
 
-    Returns [] for empty input; single full-extent interval when the profile
-    has no zeros (columns.py:31-33).
-    """
-    if len(lo) == 0:
-        return []
-    origin = int(lo.min())
-    top = int(hi.max())
+    Widths are integers, so a site whose reference keeps ``width > w``
+    passes ``min_width=w + 1``.  Returns None when the profile has no zero
+    cell, an empty or negative extent included: each site has its own rule
+    for a gap-free profile (columns.py:31-33, rows.py:28-31)."""
     extent = top - origin
     if extent <= 0:
-        # degenerate zero-width extent: reference builds an empty profile,
-        # finds no zeros, and returns the single full-extent interval
-        # (columns.py:31-33)
-        return [(origin, top)]
+        return None
     profile = coverage_profile(lo, hi, origin, extent)
-    if not (profile == 0).any():
-        return [(origin, top)]
-    cuts = [origin] + zero_run_cuts(profile, origin, min_run) + [top]
-    cuts = sorted(set(cuts))
+    if profile.all():
+        return None
+    cuts = sorted(set([origin] + zero_run_cuts(profile, origin, min_run) + [top]))
     out: List[Tuple[int, int]] = []
     if chained:
         left = cuts[0]
         for right in cuts[1:]:
-            if right - left > min_width:
+            if right - left >= min_width:
                 out.append((left, right))
                 left = right
         return out
-    for left, right in zip(cuts, cuts[1:]):
-        w = right - left
-        if (w > min_width) if strict_width else (w >= min_width):
-            out.append((left, right))
-    return out
+    return [(left, right) for left, right in zip(cuts, cuts[1:]) if right - left >= min_width]
 
 
 # --------------------------------------------------------------------------
@@ -138,79 +139,24 @@ def coerce_interval_count(
 
 
 # --------------------------------------------------------------------------
-# Span merge: 1-D gap sessionization within a line
+# Linear percentile
 # --------------------------------------------------------------------------
 
 
-def percentile_linear(sorted_vals: np.ndarray, q: float) -> float:
-    """np.percentile(..., method='linear') on an ALREADY SORTED 1-D array.
+def percentile_linear(sorted_vals: np.ndarray, first, n, q: float):
+    """np.percentile(..., method='linear') of the group ``sorted_vals[first:
+    first + n]`` (sorted, n >= 1); ``first`` and ``n`` may be arrays, one
+    entry per group, and the result is then one float per group.
 
-    Direct lerp — identical result to np.percentile (same formula:
-    idx = q/100 * (n-1); v = a[floor] + frac * (a[ceil] - a[floor])) without
-    its ~90us generic dispatch; the kernel calls this once per line.
-    """
-    n = sorted_vals.shape[0]
+    A direct lerp with np.percentile's formula (idx = q/100 * (n-1);
+    v = a[floor] + frac * (a[ceil] - a[floor])), without its generic
+    dispatch, so every group is one array step."""
+    n = np.asarray(n)
     idx = (q / 100.0) * (n - 1)
-    lo = int(idx)
-    hi = min(lo + 1, n - 1)
-    frac = idx - lo
-    a = float(sorted_vals[lo])
-    return a + frac * (float(sorted_vals[hi]) - a)
-
-
-def line_gap_quantile(x1: np.ndarray, x2: np.ndarray) -> int:
-    """P95 of positive inter-token gaps; max(12, int(p)); 18 when no gaps.
-
-    column_model.py:18-27 — gaps measured on the x1-sorted token sequence
-    against the *previous token's own x2* (not a running max).
-    """
-    order = np.argsort(x1, kind="stable")
-    xs1, xs2 = x1[order], x2[order]
-    gaps = xs1[1:] - xs2[:-1]
-    gaps = gaps[gaps > 0]
-    if gaps.size == 0:
-        return 18
-    return max(12, int(percentile_linear(np.sort(gaps.astype(np.float64)), 95.0)))
-
-
-def merge_spans(
-    text: np.ndarray, x1: np.ndarray, x2: np.ndarray, max_gap_px: int
-) -> List[Tuple[int, int, str]]:
-    """Merge x1-sorted adjacent tokens into spans (column_model.py:29-45).
-
-    The session's right edge is the running max of member x2 — a session
-    break needs ``t.x1 - running_x2 > max_gap_px``.  Output spans are
-    ``(x1, running_x2, " ".join(texts).strip())``.
-    """
-    n = len(text)
-    if n == 0:
-        return []
-    order = np.argsort(x1, kind="stable")
-    # list-ified once: the loop is over tokens-in-line (tiny), where python
-    # list indexing beats per-element numpy scalar extraction ~3x
-    xs1l = x1[order].tolist()
-    xs2l = x2[order].tolist()
-    textl = text[order].tolist()
-    # running-max right edge per session: sequential by construction, but the
-    # loop is over tokens-in-line (tiny); vectorizing would change semantics
-    # only when sessions reset the running max — keep exact.
-    spans: List[Tuple[int, int, str]] = []
-    s_x1 = int(xs1l[0])
-    s_x2 = int(xs2l[0])
-    buf = [textl[0]]
-    for k in range(1, n):
-        t_x1 = int(xs1l[k])
-        if t_x1 - s_x2 <= max_gap_px:
-            buf.append(textl[k])
-            x2k = int(xs2l[k])
-            if x2k > s_x2:
-                s_x2 = x2k
-        else:
-            spans.append((s_x1, s_x2, " ".join(buf).strip()))
-            s_x1, s_x2 = t_x1, int(xs2l[k])
-            buf = [textl[k]]
-    spans.append((s_x1, s_x2, " ".join(buf).strip()))
-    return spans
+    lo = idx.astype(np.int64)  # idx >= 0: truncation is floor
+    a = sorted_vals[first + lo]
+    b = sorted_vals[first + np.minimum(lo + 1, n - 1)]
+    return a + (idx - lo) * (b - a)
 
 
 # --------------------------------------------------------------------------

@@ -11,8 +11,9 @@ The generic grid (also the transformers layout's first attempt) is built
 in array steps over every token of the lines: each token's column, each
 line's row, then ``geometry.grid`` joins every cell at once.  The
 per-line loops it replaced are kept in ``tests/test_kernel_properties.py``
-as the reference.  The dynamic and financial layouts still merge spans
-and assign cells line by line.
+as the reference.  The dynamic and financial layouts get every line's
+spans from one array pass over the document (``compute_line_spans``) and
+assign cells line by line.
 """
 
 from __future__ import annotations
@@ -26,16 +27,12 @@ import numpy as np
 
 from .geometry import (
     coerce_interval_count,
-    coverage_profile,
     first_closed_interval,
     grid,
     half_open_interval,
-    line_gap_quantile,
-    merge_spans,
     nearest_interval_inside_zero,
     percentile_linear,
     profile_intervals,
-    zero_run_cuts,
 )
 from .lines import Line
 from .hocr import TokenArrays
@@ -95,20 +92,71 @@ class Rec:
     and the numeric-cell count the row merge reads (assign_dynamic.py:69-71,
     assign_financial.py:88-92)."""
 
-    page: int
     y_top: int
     y_bot: int
     cells: List[str]
     num_count: int = 0
 
 
-def _line_spans(tok: TokenArrays, line: Line, max_gap_px: Optional[int] = None):
-    """Span-merge one line; gap defaults to the line's own P95 quantile."""
-    x1 = tok.x1[line.idx]
-    x2 = tok.x2[line.idx]
+Span = Tuple[int, int, str]
+
+
+def compute_line_spans(
+    tok: TokenArrays, lines: List[Line], max_gap_px: Optional[int] = None
+) -> List[List[Span]]:
+    """Every line's spans ``(x1, right edge, text)``, from one array pass
+    over the document (assign_financial.py:20-39, column_model.py:18-45).
+
+    A line's tokens, in x1 order (``Line.idx`` order), merge while
+    ``x1 - right edge <= gap``; the right edge is the running max of the
+    span's x2, and a span's text is its tokens' texts space-joined.  The gap is ``max_gap_px`` (the
+    financial layout's 18) or, when None, the line's own quantile: the P95
+    (linear) of its positive gaps ``x1[k] - x2[k-1]``, at least 12, and
+    18 when it has none.
+
+    The running max is taken over the whole line before each token, not
+    just over its span, and that breaks the line at the same tokens: x1
+    is sorted, so every token of an earlier span ends more than the gap
+    before every later token starts.  So no break depends on another, and
+    one segmented running max decides them all."""
+    n_lines = len(lines)
+    sizes = np.array([len(ln.idx) for ln in lines], dtype=np.int64)
+    idx = np.concatenate([ln.idx for ln in lines]) if lines else np.empty(0, np.int64)
+    if idx.size == 0:
+        return [[] for _ in lines]
+    line = np.repeat(np.arange(n_lines), sizes)
+    x1, x2 = tok.x1[idx], tok.x2[idx]
+    head = np.concatenate(([True], line[1:] != line[:-1]))  # a line's first token
+    limit = np.full(n_lines, 18 if max_gap_px is None else max_gap_px, dtype=np.int64)
     if max_gap_px is None:
-        max_gap_px = line_gap_quantile(x1, x2)
-    return merge_spans(tok.text[line.idx], x1, x2, max_gap_px)
+        gap = x1[1:] - x2[:-1]
+        pos = (gap > 0) & ~head[1:]
+        gap_line = line[1:][pos]
+        order = np.lexsort((gap[pos], gap_line))
+        n = np.bincount(gap_line, minlength=n_lines)
+        has = n > 0
+        p95 = percentile_linear(
+            gap[pos][order].astype(np.float64), (np.cumsum(n) - n)[has], n[has], 95.0
+        )
+        limit[has] = np.maximum(12, p95.astype(np.int64))
+    # the running max of x2 within each line: dense ranks offset by the line
+    # number keep every line's maxima above all earlier lines'
+    u, rank = np.unique(x2, return_inverse=True)
+    key = line * len(u) + rank
+    runmax = u[np.maximum.accumulate(key) - line * len(u)]
+    brk = head.copy()
+    brk[1:] |= x1[1:] - runmax[:-1] > limit[line[1:]]
+    starts = np.flatnonzero(brk)
+    text = tok.text[idx].tolist()
+    bounds = [*starts.tolist(), len(idx)]
+    spans = [
+        (a, b, " ".join(text[s:e]).strip())
+        for a, b, s, e in zip(
+            x1[starts].tolist(), np.maximum.reduceat(x2, starts).tolist(), bounds, bounds[1:]
+        )
+    ]
+    cut = [0, *np.cumsum(np.bincount(line[starts], minlength=n_lines)).tolist()]
+    return [spans[a:b] for a, b in zip(cut, cut[1:])]
 
 
 # ===========================================================================
@@ -126,10 +174,13 @@ def estimate_columns(
     idx = np.concatenate([ln.idx for ln in lines]) if lines else np.empty(0, np.int64)
     if idx.size == 0:
         return []
-    intervals = profile_intervals(
-        tok.x1[idx], tok.x2[idx], min_run=5, min_width=MIN_COL_WIDTH, strict_width=False
+    lo, hi = tok.x1[idx], tok.x2[idx]
+    origin, top = int(lo.min()), int(hi.max())
+    intervals = profile_intervals(lo, hi, origin, top, min_run=5, min_width=MIN_COL_WIDTH)
+    # a gap-free profile is one full-extent column (columns.py:31-33)
+    return coerce_interval_count(
+        [(origin, top)] if intervals is None else intervals, expected_n_cols
     )
-    return coerce_interval_count(intervals, expected_n_cols)
 
 
 def assign_words_to_columns(
@@ -164,14 +215,10 @@ def merge_lines_into_rows(
         return []
     idx = np.concatenate([ln.idx for ln in lines])
     lo, hi = tok.y1[idx], tok.y2[idx]
-    origin, top = int(lo.min()), int(hi.max())
-    extent = top - origin
-    profile = coverage_profile(lo, hi, origin, extent) if extent > 0 else np.ones(1)
-    if not (profile == 0).any():
+    # rows.py:46-52 keeps rows taller than 5 px
+    row_iv = profile_intervals(lo, hi, int(lo.min()), int(hi.max()), min_run=2, min_width=6)
+    if row_iv is None:
         return grid(tok.text[idx], np.zeros(len(idx), dtype=np.int64), col, 1, n_cols)
-
-    cuts = sorted(set([origin] + zero_run_cuts(profile, origin, 2) + [top]))
-    row_iv = [(t, b) for t, b in zip(cuts, cuts[1:]) if b - t > 5]
     line_row = half_open_interval(np.array([(ln.y1 + ln.y2) / 2 for ln in lines]), row_iv)
     used = np.unique(line_row[line_row >= 0])
     sizes = [len(ln.idx) for ln in lines]
@@ -211,29 +258,19 @@ def assign_financial_three_columns(tok: TokenArrays, lines: List[Line]) -> List[
     """Two rightmost numeric spans -> value columns; every text span joins
     the label (assign_financial.py:41-93).  Span gap is FIXED at 18px."""
     recs: List[Rec] = []
-    for ln in lines:
-        spans = _line_spans(tok, ln, max_gap_px=18)
-        if not spans:
-            recs.append(Rec(ln.page, ln.y1, ln.y2, ["", "", ""]))
-            continue
-        numeric = [s for s in spans if is_numeric_span_financial(s[2])]
-        textual = [s for s in spans if not is_numeric_span_financial(s[2])]
-        numeric.sort(key=lambda s: s[0])
+    for ln, spans in zip(lines, compute_line_spans(tok, lines, 18)):
+        # spans come in x1 order, so both lists are x1-sorted
+        numeric: List[str] = []
+        textual: List[str] = []
+        for _x1, _x2, txt in spans:
+            (numeric if is_numeric_span_financial(txt) else textual).append(txt)
         col_a = col_b = ""
         if len(numeric) >= 2:
-            col_a, col_b = numeric[-2][2], numeric[-1][2]  # newest_on_right
+            col_a, col_b = numeric[-2], numeric[-1]  # newest_on_right
         elif len(numeric) == 1:
-            col_a = numeric[0][2]
-        label = " ".join(s[2] for s in sorted(textual, key=lambda s: s[0])).strip()
-        recs.append(
-            Rec(
-                ln.page,
-                ln.y1,
-                ln.y2,
-                [label, col_a, col_b],
-                num_count=len(numeric),
-            )
-        )
+            col_a = numeric[0]
+        label = " ".join(textual).strip()
+        recs.append(Rec(ln.y1, ln.y2, [label, col_a, col_b], num_count=len(numeric)))
     return recs
 
 
@@ -305,13 +342,6 @@ def postprocess_financial(rows: List[List[str]]) -> List[List[str]]:
 # ===========================================================================
 
 
-def compute_line_spans(tok: TokenArrays, lines: List[Line]):
-    """Quantile-gap span merge per line, computed ONCE and shared by the
-    whole dynamic path (the reference recomputes it in three places with
-    identical inputs: column_model.py:104, :62, assign_dynamic.py:55)."""
-    return [_line_spans(tok, ln) for ln in lines]
-
-
 # column_model.py: global-gap fallback cut (at least MIN_SEP_PX, else the
 # CUT_QUANTILE percentile of center gaps) and the +/- PAD_PX interval pad
 MIN_SEP_PX = 35
@@ -320,21 +350,23 @@ PAD_PX = 24
 
 
 def infer_numeric_columns(
-    lines: List[Line], spans_per_line
-) -> Tuple[List[Tuple[int, int]], Optional[List[str]]]:
+    lines: List[Line], spans_per_line: List[List[Span]]
+) -> Tuple[List[Tuple[int, int]], Optional[List[str]], List[List[bool]]]:
     """Hybrid column model (column_model.py:84-201): modal numeric-span
     count over the bottom 70% picks K<=4 columns; per-position (rightmost,
     2nd-rightmost, ...) bucket medians become centers; midpoint edges +/-
     pad form intervals.  Thin buckets (<max(5, 5% of lines)) force the
-    global-gap fallback; year strings in the top 20% band name columns."""
+    global-gap fallback; year strings in the top 20% band name columns.
+
+    Also returns whether each span is numeric (NUM_SPAN_RE), which
+    ``assign_dynamic`` reuses: each span is classified once."""
+    numeric = [[is_numeric_span_dynamic(s[2]) for s in spans] for spans in spans_per_line]
     if not lines:
-        return [], None
+        return [], None, numeric
 
     per_line: List[List[int]] = []
-    for spans in spans_per_line:
-        centers = [
-            int((x1 + x2) // 2) for (x1, x2, txt) in spans if is_numeric_span_dynamic(txt)
-        ]
+    for spans, flags in zip(spans_per_line, numeric):
+        centers = [(x1 + x2) // 2 for (x1, x2, _txt), num in zip(spans, flags) if num]
         centers.sort()
         per_line.append(centers)
     ys = [ln.y1 for ln in lines]
@@ -368,10 +400,12 @@ def infer_numeric_columns(
     if not intervals:
         allc = sorted(c for centers in per_line for c in centers)
         if not allc:
-            return [], None
+            return [], None, numeric
         gaps = [b - a for a, b in zip(allc, allc[1:])]
         p = (
-            percentile_linear(np.sort(np.asarray(gaps, dtype=np.float64)), CUT_QUANTILE)
+            percentile_linear(
+                np.sort(np.asarray(gaps, dtype=np.float64)), 0, len(gaps), CUT_QUANTILE
+            )
             if gaps
             else 0.0
         )
@@ -393,7 +427,7 @@ def infer_numeric_columns(
         if intervals
         else None
     )
-    return intervals, names
+    return intervals, names, numeric
 
 
 def _year_names_from_top(
@@ -436,36 +470,32 @@ def assign_dynamic(
     tok: TokenArrays,
     lines: List[Line],
     numeric_columns: List[Tuple[int, int]],
-    spans_per_line,
+    spans_per_line: List[List[Span]],
+    numeric: List[List[bool]],
 ) -> List[Rec]:
     """assign_dynamic.py:38-72: label = text spans left of the first numeric
-    column only; numeric spans fill nearest column FIRST-WINS."""
+    column only; numeric spans (``numeric``, one flag per span) fill the
+    nearest column FIRST-WINS."""
     recs: List[Rec] = []
     if not numeric_columns:
         for ln in lines:
             label = " ".join(tok.text[i] for i in ln.idx)  # idx already x1-sorted
-            recs.append(Rec(ln.page, ln.y1, ln.y2, [label], num_count=0))
+            recs.append(Rec(ln.y1, ln.y2, [label], num_count=0))
         return recs
 
     cols = sorted(numeric_columns, key=lambda ab: ab[0])
     first_L = cols[0][0]
-    for ln, spans in zip(lines, spans_per_line):
-        nums = [s for s in spans if is_numeric_span_dynamic(s[2])]
-        texts = [s for s in spans if not is_numeric_span_dynamic(s[2])]
-        label = " ".join(txt for (x1, _x2, txt) in texts if x1 < first_L).strip()
+    for ln, spans, flags in zip(lines, spans_per_line, numeric):
+        label_parts: List[str] = []
         values = [""] * len(cols)
-        for (x1, x2, txt) in nums:
-            j = nearest_interval_inside_zero((x1 + x2) / 2.0, cols)
-            values[j] = values[j] or txt.strip()
-        recs.append(
-            Rec(
-                ln.page,
-                ln.y1,
-                ln.y2,
-                [label] + values,
-                num_count=sum(1 for v in values if v),
-            )
-        )
+        for (x1, x2, txt), num in zip(spans, flags):
+            if num:
+                j = nearest_interval_inside_zero((x1 + x2) / 2.0, cols)
+                values[j] = values[j] or txt.strip()
+            elif x1 < first_L:
+                label_parts.append(txt)
+        label = " ".join(label_parts).strip()
+        recs.append(Rec(ln.y1, ln.y2, [label] + values, num_count=sum(1 for v in values if v)))
     return recs
 
 

@@ -43,13 +43,16 @@ def group_words_by_y_tolerance(tok: TokenArrays) -> Tuple[np.ndarray, np.ndarray
 
 def estimate_column_positions(tok: TokenArrays) -> List[Tuple[int, int]]:
     """grid_builder.py:31-63 — chained interval construction: the left edge
-    advances only when an interval is emitted (strict > width)."""
+    advances only when an interval is emitted, wider than MIN_COL_WIDTH; a
+    gap-free profile is one full-extent column."""
     if len(tok) == 0:
         return []
-    return profile_intervals(
-        tok.x1, tok.x2, min_run=MIN_GAP_WIDTH, min_width=MIN_COL_WIDTH,
-        strict_width=True, chained=True,
+    origin, top = int(tok.x1.min()), int(tok.x2.max())
+    intervals = profile_intervals(
+        tok.x1, tok.x2, origin, top,
+        min_run=MIN_GAP_WIDTH, min_width=MIN_COL_WIDTH + 1, chained=True,
     )
+    return [(origin, top)] if intervals is None else intervals
 
 
 def _hierarchy(

@@ -3,9 +3,9 @@
 Batch protocol (exactly-once at the batch granularity, SURVEY.md §4.2):
   0. a batch id is immutable once its progress rows have landed
      (``batch_committed``): re-running it changes no data or progress row.
-  1. ``pending = pages LEFT ANTI JOIN progress(status='done') ON url`` —
-     Catalyst broadcasts the progress url set when small, sort-merge joins
-     otherwise; AQE picks at runtime.
+  1. ``pending = pages LEFT ANTI JOIN progress(status='done') ON url <=> url``
+     (``pending_pages``) — Catalyst broadcasts the progress url set when
+     small, sort-merge joins otherwise; AQE picks at runtime.
   2. extract ``pending`` and overwrite ``<root>/batch_id=<B>/``
      (``write_batch``) — a re-run of a failed batch REPLACES all it wrote
      before; the extraction pass (``small``/``giant``) is a ``pass`` column.
@@ -93,10 +93,15 @@ def batch_committed(
 
 
 def pending_pages(pages: DataFrame, progress: DataFrame | None) -> DataFrame:
+    """The pages without a ``done`` progress row.  The anti-join is
+    null-safe, so a page whose url is NULL is one more url: it commits
+    once, in the first batch that sees it, and a failed one is retried
+    like any failed url.  (A plain equality never matches NULL, so every
+    batch would commit it again.)"""
     if progress is None:
         return pages
-    done = progress.where(F.col("status") == "done").select("url")
-    return pages.join(done, "url", "left_anti")
+    done = progress.where(F.col("status") == "done").select(F.col("url").alias("done_url"))
+    return pages.join(done, pages["url"].eqNullSafe(done["done_url"]), "left_anti")
 
 
 def write_batch(frame: DataFrame, batch_id: int, root: str) -> None:

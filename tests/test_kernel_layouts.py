@@ -481,6 +481,29 @@ def test_deeply_nested_html_is_not_an_error_row(tag, depth):
     assert res.main_text == " ".join(words)
 
 
+@pytest.mark.parametrize("layout", ["generic", "transformers", "professional"])
+@pytest.mark.parametrize("inverted", [(0, 60, 40, 20), (500, 0, 90, 20)])
+def test_inverted_word_is_not_an_error_row(layout, inverted):
+    """A word whose bbox has y1 > y2 (or x1 > x2) adds to a projection
+    profile what the reference's ``profile[a:b] += 1`` adds: nothing where
+    the slice is empty, clipped where it runs past either end.  Its start
+    beyond the profile made the page an error row (IndexError)."""
+    from ocr_table_extractor_to_csv_spark.operators.extract import _extract_one
+
+    html = _doc(
+        [
+            ("Name", 100, 0, 150, 20),
+            ("Val", 400, 0, 440, 20),
+            ("foo", 100, 22, 130, 42),
+            ("9", 400, 22, 410, 42),
+            ("odd", *inverted),
+        ]
+    )
+    res = _extract_one(html, layout, {})
+    assert res.error is None
+    assert res.n_tokens == 5
+
+
 def test_html_layout_on_well_formed_hocr():
     """A forced ``html`` layout on hOCR that parses as XML re-parses it into
     the lenient HTML tree, the tree the boilerplate strip is specified on,

@@ -594,6 +594,77 @@ def test_lined_64k_token_page_extracts_in_bounded_time():
     assert (res.error, res.n_tokens, res.n_lines) == (None, 64000, 8000)
 
 
+# ---- span merge: the per-line loops compute_line_spans replaced ----------
+
+
+def line_gap_quantile(x1, x2):
+    """column_model.py:18-27: P95 of the positive gaps between x1-sorted
+    neighbours (against the previous token's own x2); max(12, int(p)); 18
+    when there is none."""
+    order = np.argsort(x1, kind="stable")
+    gaps = x1[order][1:] - x2[order][:-1]
+    gaps = gaps[gaps > 0]
+    if gaps.size == 0:
+        return 18
+    return max(12, int(np.percentile(gaps.astype(np.float64), 95)))
+
+
+def merge_spans(text, x1, x2, max_gap_px):
+    """column_model.py:29-45: x1-sorted tokens join the current span while
+    ``x1 - running right edge <= max_gap_px``; spans are ``(x1, right
+    edge, " ".join(texts).strip())``."""
+    order = np.argsort(x1, kind="stable").tolist()
+    if not order:
+        return []
+    spans = []
+    s_x1, s_x2, buf = int(x1[order[0]]), int(x2[order[0]]), [text[order[0]]]
+    for k in order[1:]:
+        if int(x1[k]) - s_x2 <= max_gap_px:
+            buf.append(text[k])
+            s_x2 = max(s_x2, int(x2[k]))
+        else:
+            spans.append((s_x1, s_x2, " ".join(buf).strip()))
+            s_x1, s_x2, buf = int(x1[k]), int(x2[k]), [text[k]]
+    spans.append((s_x1, s_x2, " ".join(buf).strip()))
+    return spans
+
+
+_span_token = st.tuples(
+    st.integers(0, 3),  # line id
+    st.one_of(st.integers(0, 60), st.integers(0, 10**12)),  # x1: ties, and far apart
+    st.one_of(st.integers(-30, 40), st.integers(-(10**12), 10**12)),  # width: inverted too
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_span_token, min_size=0, max_size=40), st.sampled_from((None, 18, 0, 5)))
+@example([(0, 0, 50), (0, 10, 10), (0, 60, 20)], 5)  # a nested token keeps the right edge
+@example([(0, 100, -100), (0, 100, 5), (0, 130, 5)], None)  # an inverted box, tied x1
+def test_compute_line_spans_matches_per_line_loop(rows, max_gap_px):
+    """The one-pass span merge is the per-line loop's, in both gap modes
+    (a fixed gap, or each line's P95 of positive gaps), with ties in x1,
+    zero-width and inverted boxes, and coordinates up to 10^12."""
+    i64 = lambda vals: np.array(vals, dtype=np.int64)  # noqa: E731
+    tok = TokenArrays(
+        np.array([f"t{i}" for i in range(len(rows))], dtype=object),
+        i64([1] * len(rows)),
+        i64([r[1] for r in rows]),
+        i64([r[0] * 20 for r in rows]),
+        i64([max(0, r[1] + r[2]) for r in rows]),
+        i64([r[0] * 20 + 10 for r in rows]),
+        np.array([f"l{r[0]}" for r in rows], dtype=object),
+    )
+    lns = lines.build_lines(tok)
+    want = [
+        merge_spans(
+            tok.text[ln.idx], tok.x1[ln.idx], tok.x2[ln.idx],
+            line_gap_quantile(tok.x1[ln.idx], tok.x2[ln.idx]) if max_gap_px is None else max_gap_px,
+        )
+        for ln in lns
+    ]
+    assert layouts.compute_line_spans(tok, lns, max_gap_px) == want
+
+
 # ---- grid assembly: the per-line and per-token loops it replaced ----------
 
 
@@ -624,16 +695,19 @@ def _ref_merge_lines_into_rows(recs, tok, lns):
     if not recs:
         return []
     idx = np.concatenate([ln.idx for ln in lns])
-    lo, hi = tok.y1[idx], tok.y2[idx]
-    origin, top = int(lo.min()), int(hi.max())
-    extent = top - origin
-    profile = geometry.coverage_profile(lo, hi, origin, extent) if extent > 0 else np.ones(1)
-    if not (profile == 0).any():
+    origin, top = int(tok.y1[idx].min()), int(tok.y2[idx].max())
+    profile = np.zeros(max(0, top - origin), dtype=int)
+    for i in idx.tolist():
+        profile[tok.y1[i] - origin:tok.y2[i] - origin] += 1
+    if profile.all():  # an empty profile too
         acc = [""] * len(recs[0][2])
         for _, _, cells in recs:
             acc = _ref_combine_cells(acc, cells)
         return [acc]
-    cuts = sorted(set([origin] + geometry.zero_run_cuts(profile, origin, 2) + [top]))
+    # valleys: runs of consecutive zero indices, split where they jump
+    zeros = np.flatnonzero(profile == 0)
+    runs = np.split(zeros, np.flatnonzero(np.diff(zeros) != 1) + 1)
+    cuts = sorted(set([origin] + [origin + int(g.mean()) for g in runs if len(g) > 2] + [top]))
     row_iv = [(t, b) for t, b in zip(cuts, cuts[1:]) if b - t > 5]
     grouped = [[] for _ in row_iv]
     for y_top, y_bot, cells in recs:
@@ -684,11 +758,29 @@ def _ref_build_professional_grid(tok, intervals):
     return [[c.strip() for c in (r + [""] * len(header))[: len(header)]] for r in body], header
 
 
+def _ref_dataset_rows(tok, lns):
+    """dataset_builder.py:49-80: a profile at least 1 px tall, each token
+    covering at least 1 px; rows taller than 5 px, else one full row."""
+    idx = np.concatenate([ln.idx for ln in lns]).tolist()
+    y_min, y_max = min(int(tok.y1[i]) for i in idx), max(int(tok.y2[i]) for i in idx)
+    profile = np.zeros(max(1, y_max - y_min), dtype=int)
+    for i in idx:
+        start = max(0, int(tok.y1[i]) - y_min)
+        profile[start:max(start + 1, int(tok.y2[i]) - y_min)] += 1
+    zeros = np.flatnonzero(profile == 0)
+    if zeros.size == 0:
+        return [(y_min, y_max)]
+    runs = np.split(zeros, np.flatnonzero(np.diff(zeros) != 1) + 1)
+    cuts = [y_min] + [y_min + int(g.mean()) for g in runs if len(g) > 2] + [y_max]
+    cuts = list(dict.fromkeys(cuts))
+    return [(t, b) for t, b in zip(cuts, cuts[1:]) if b - t > 5] or [(y_min, y_max)]
+
+
 def _ref_dataset_cells(tok, lns, columns):
     """dataset_builder.py:96-146: rows by ``t <= yc < b`` else the nearest
     row centre, columns by ``a <= xc <= b`` else the nearest column centre;
     every row up to the largest; (token, row, col) records in line order."""
-    row_iv = dataset._row_intervals(tok, lns)
+    row_iv = _ref_dataset_rows(tok, lns)
     line_rows = []
     for ln in lns:
         yc = (ln.y1 + ln.y2) / 2.0
@@ -739,8 +831,9 @@ def _grid_tokens(boxes):
 
 
 def _outcome(fn):
-    """``fn()``, or the type of the exception it raises (a profile over an
-    inverted box can index past its end, in the reference as well)."""
+    """``fn()``, or the type of the exception it raises (the LayoutLM
+    example raises ValueError when no column is found, as the reference
+    loops do)."""
     try:
         return fn()
     except Exception as exc:
@@ -765,12 +858,11 @@ def test_generic_grid_matches_reference_loops(boxes, columns):
             return columns
         return layouts.estimate_columns(tok, lns, expected_n_cols=columns)
 
-    got = _outcome(lambda: layouts.merge_lines_into_rows(
+    # neither side raises, inverted boxes included
+    got = layouts.merge_lines_into_rows(
         tok, lns, layouts.assign_words_to_columns(tok, lns, cols()), len(cols())
-    ))
-    want = _outcome(lambda: _ref_merge_lines_into_rows(
-        _ref_assign_words_to_columns(tok, lns, cols()), tok, lns
-    ))
+    )
+    want = _ref_merge_lines_into_rows(_ref_assign_words_to_columns(tok, lns, cols()), tok, lns)
     assert got == want
 
 
@@ -788,10 +880,9 @@ def test_professional_grid_matches_reference_loops(boxes, intervals):
     with pytest.MonkeyPatch.context() as mp:
         if intervals is not None:
             mp.setattr(professional, "estimate_column_positions", lambda _: intervals)
-        got = _outcome(lambda: professional.build_professional_grid(tok))
-        want = _outcome(lambda: _ref_build_professional_grid(
-            tok, professional.estimate_column_positions(tok)
-        ))
+        # neither side raises, inverted boxes included
+        got = professional.build_professional_grid(tok)
+        want = _ref_build_professional_grid(tok, professional.estimate_column_positions(tok))
     assert got == want
 
 
@@ -817,6 +908,7 @@ def _ref_layoutlm(tok, lns, columns):
 @example([(70, 0, 10, 5), (0, 9, 1, 5)], [(20, 30), (40, 50)])  # outside every column
 @example([(10, 0, 10, 10), (10, 14, 10, 1), (10, 19, 10, 12)], [(0, 50)])  # a tie: lower row
 @example([(10, 0, 10, 10), (10, 30, 10, -25), (10, 40, 10, 10)], [(0, 50)])  # a row with no line
+@example([(0, 0, 40, 10), (50, 0, 40, 10), (0, 10, 40, 0)], None)  # zero-height lowest word
 def test_dataset_grid_matches_reference_loops(boxes, columns):
     """The LayoutLM example's grid and (token, row, col) records (rows by
     ``t <= yc < b`` else the nearest row centre, columns by the first

@@ -377,6 +377,25 @@ def test_null_html_page_commits_once(spark, tmp_path):
     assert _run_batch(spark, pages, tmp_path, 1)[1]["rows"] == 0
 
 
+def test_null_url_page_commits_once(spark, tmp_path):
+    """The progress anti-join is null-safe: a page whose url is NULL
+    commits in the first batch that sees it, and a later batch over the
+    same pages has nothing left to extract (a plain equality never matched
+    the NULL url, so every batch committed it again)."""
+    pages = spark.createDataFrame(
+        [
+            ("u1", "generic", None, grid_hocr(["a", "b", "c"])),
+            (None, "generic", None, grid_hocr(["d", "e", "f"])),
+        ],
+        "url string, layout string, args string, html binary",
+    )
+    assert [_run_batch(spark, pages, tmp_path, b)[1]["rows"] for b in (1, 2)] == [2, 0]
+    committed = spark.read.schema(COMMITTED_SCHEMA).parquet(str(tmp_path / "out"))
+    assert sorted(((r.url or ""), r.batch_id) for r in committed.collect()) == [("", 1), ("u1", 1)]
+    progress = read_progress(spark, str(tmp_path / "progress"))
+    assert progress.where(F.col("url").isNull()).count() == 1
+
+
 def test_data_write_plans_no_sort(spark, pages_dir, tmp_path):
     """The batch's data write is a plain overwrite of its directory: the
     planner puts no Sort in front of the written files (a write partitioned
