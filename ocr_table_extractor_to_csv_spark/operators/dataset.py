@@ -22,7 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.dataset import build_layoutlm_example
-from ..session import worker_batches
+from ..session import arrow_batch, worker_batches
 
 EXAMPLE_SCHEMA = StructType(
     [
@@ -44,14 +44,9 @@ EXAMPLE_SCHEMA = StructType(
 _ARROW = to_arrow_schema(EXAMPLE_SCHEMA)
 
 
-def build_examples(
-    pages: DataFrame,
-    expected_n_cols: Optional[int] = None,
-    header_regexes=None,
-    max_columns: int = 6,
-    table_bbox=None,
-) -> DataFrame:
-    bbox = tuple(table_bbox) if table_bbox else None
+def _example_batches(table_bbox, expected_n_cols: Optional[int], header_regexes, max_columns: int):
+    """The mapInArrow kernel over (url, html) batches: one example row per
+    page, or a row with only ``url`` and ``error`` when the page fails."""
 
     def fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -63,7 +58,7 @@ def build_examples(
                     ex = build_layoutlm_example(
                         h or b"",
                         url=u,
-                        table_bbox=bbox,
+                        table_bbox=table_bbox,
                         expected_n_cols=expected_n_cols,
                         header_regexes=header_regexes,
                         max_columns=max_columns,
@@ -74,9 +69,19 @@ def build_examples(
                     ex["url"] = u
                     ex["error"] = f"{type(exc).__name__}: {exc}"
                 rows.append(ex)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[f.name] for r in rows], f.type) for f in _ARROW],
-                schema=_ARROW,
-            )
+            yield arrow_batch([[r[f] for r in rows] for f in _ARROW.names], _ARROW)
 
+    return fn
+
+
+def build_examples(
+    pages: DataFrame,
+    expected_n_cols: Optional[int] = None,
+    header_regexes=None,
+    max_columns: int = 6,
+    table_bbox=None,
+) -> DataFrame:
+    fn = _example_batches(
+        tuple(table_bbox) if table_bbox else None, expected_n_cols, header_regexes, max_columns
+    )
     return pages.select("url", "html").mapInArrow(worker_batches(fn), EXAMPLE_SCHEMA)

@@ -36,7 +36,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..session import worker_batches
+from ..session import arrow_batch, worker_batches
 
 WARC_PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, error string"
 
@@ -120,6 +120,9 @@ def _segment_batches(want: str, payload: pa.Field, decode):
     (multi-member aware: Common Crawl gzips one member per record).  A
     parse failure adds ONE error row for the bad file (url = file path,
     payload NULL) after the rows it did parse, instead of a task failure."""
+    schema = pa.schema(
+        [("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")), payload, ("error", pa.string())]
+    )
 
     def batches_fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -133,16 +136,7 @@ def _segment_batches(want: str, payload: pa.Field, decode):
                         rows.append((url, ts, decode(body), None))
                 except Exception as exc:
                     rows.append((p, None, None, f"{type(exc).__name__}: {exc}"))
-            urls, tss, payloads, errs = zip(*rows) if rows else ((),) * 4
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, pa.string()),
-                    pa.array(tss, pa.timestamp("us", tz="UTC")),
-                    pa.array(payloads, payload.type),
-                    pa.array(errs, pa.string()),
-                ],
-                names=["url", "warc_ts", payload.name, "error"],
-            )
+            yield arrow_batch(list(zip(*rows)) if rows else [()] * 4, schema)
 
     return batches_fn
 

@@ -480,6 +480,39 @@ def test_no_python_regex_needs_311():
     assert found == [], "regexes CPython 3.10 cannot compile"
 
 
+# the modules a map stage's Python worker imports and runs
+_WORKER_SIDE = ["kernel/*.py", "session.py", "operators/extract.py", "operators/dataset.py", "sources/warc.py"]
+
+
+def _loads_pandas(node: ast.AST) -> bool:
+    """``node`` imports pandas, or calls a pyarrow constructor that imports
+    it on its first call (``pa.array``, ``pa.table``, ``*.from_pylist``,
+    ``*.from_pydict``)."""
+    if isinstance(node, ast.Import):
+        return any(a.name.split(".")[0] == "pandas" for a in node.names)
+    if isinstance(node, ast.ImportFrom):
+        return (node.module or "").split(".")[0] == "pandas"
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return False
+    attr = node.func.attr
+    on_pyarrow = isinstance(node.func.value, ast.Name) and node.func.value.id in ("pa", "pyarrow")
+    return attr in ("from_pylist", "from_pydict") or (on_pyarrow and attr in ("array", "table"))
+
+
+def test_worker_side_modules_never_load_pandas():
+    """A worker that loads pandas holds about 37 MB more: the map stages
+    build their output with ``session.arrow_batch``."""
+    paths = sorted({p for pattern in _WORKER_SIDE for p in (ROOT / PKG).glob(pattern)})
+    assert len(paths) > len(_WORKER_SIDE), "no kernel modules found: the scan is broken"
+    found = [
+        f"{path.relative_to(ROOT)}:{node.lineno}"
+        for path in paths
+        for node in ast.walk(ast.parse(path.read_text()))
+        if _loads_pandas(node)
+    ]
+    assert found == [], "worker-side code that imports pandas"
+
+
 _LOADERS = {"_docs", "_docs_f", "_emb", "_emb_f"}
 
 
